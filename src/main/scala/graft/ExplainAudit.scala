@@ -15,9 +15,10 @@ package graft
   * diff. Queries added/removed between snapshots are reported but not
   * failures — the inventory is allowed to grow.
   *
-  * Detached queries (core.Materialize): this main flips
-  * `Materialize.auditPassthrough` so the FULL un-checkpointed plan is
-  * what gets snapshotted/printed — without it, ~27 queries recorded a
+  * Detached queries (core.Materialize): this main sets
+  * `Materialize.PassthroughKey` on its own session so the FULL
+  * un-checkpointed plan is what gets snapshotted/printed — without it,
+  * ~27 queries recorded a
   * bare post-checkpoint `{"Scan":1}` and plancheck could not watch
   * precisely the most intricate plans (VERDICT r13 gap 2). Passthrough
   * is plan-inspection-only: queries are never EXECUTED here, so the
@@ -54,7 +55,7 @@ object ExplainAudit {
     // that bounds per-action plan rendering on the execution hot path
     // (Sessions.builder's spark.sql.maxPlanStringLength)
     spark.conf.set("spark.sql.maxPlanStringLength", Int.MaxValue - 15)
-    graft.core.Materialize.auditPassthrough = true
+    spark.conf.set(graft.core.Materialize.PassthroughKey, "true")
     snapshot match {
       case Some((file, sel)) =>
         val names = if (sel.nonEmpty) sel else SparkEntry.queries.keys.toSeq.sorted

@@ -54,11 +54,15 @@ object JobGapProfile {
     }
     spark.sparkContext.addSparkListener(runListener)
 
-    for (name <- args) {
-      val fn = SparkEntry.queries(name)
-      try materialize(fn(spark, sfDir))
+    // untimed warmup shot; a query whose warmup fails is reported and
+    // gets no timed run, so one failing query does not end the session
+    def warmedUp(name: String): Boolean =
+      try { materialize(SparkEntry.queries(name)(spark, sfDir)); true }
       catch { case e: Throwable =>
-        println(s"[profile] $name warmup FAILED: $e") }
+        println(s"[profile] $name warmup FAILED, skipped: $e"); false }
+
+    for (name <- args if warmedUp(name)) {
+      val fn = SparkEntry.queries(name)
       Bench.sweepBlocks(spark)
       jobs.synchronized(jobs.clear())
       spark.sparkContext.addSparkListener(listener)

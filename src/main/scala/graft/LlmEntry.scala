@@ -2661,23 +2661,21 @@ object LlmEntry {
     // leaf for every later consumer. c0/s1/pair stay persisted: their
     // lineages are one hop deep, and pair's two consumers (tf,
     // docBits) want the cache, not a fence. Plan-shape tooling
-    // (ExplainAudit, PlanAuditSpec) flips Materialize.auditPassthrough
-    // so the audited plan keeps every stage's shape visible — the same
-    // passthrough contract Materialize.detached has.
-    def fence(df: DataFrame): DataFrame =
-      if (core.Materialize.auditPassthrough) df else df.localCheckpoint(true)
+    // (ExplainAudit, PlanAuditSpec) sets the session's
+    // Materialize.PassthroughKey so the audited plan keeps every
+    // stage's shape visible.
     val s2 = s1.join(docBits, Seq("doc_id"), "left")
       .filter(coalesce(
         col("bits") * SurprisalFlagDen <= col("n_toks") * SurprisalFlagNum,
         lit(true)))
       .select(col("doc_id"), col("source"), col("text"), col("n_uniq"))
-      .transform(fence)
+      .transform(core.Materialize.detached(_)(()))
     // stage 3: exact dedup, keep-first on the normalized content hash
     val w3 = Window.partitionBy(col("ch")).orderBy(col("doc_id"))
     val s3 = s2.withColumn("ch", DedupOps.contentHashSpark())
       .withColumn("rk", row_number().over(w3))
       .filter(col("rk") === 1).drop("ch", "rk")
-      .transform(fence)
+      .transform(core.Materialize.detached(_)(()))
     // shingles are needed by two consumers — stage 4 (survivor dedup)
     // and stage 5 (bench universe) — but NOT by the whole corpus: the
     // bench set is the BenchMod-th of the base docs and the survivors
@@ -2695,7 +2693,7 @@ object LlmEntry {
       .shingled(c0.select(col("doc_id"), col("text")).filter(isBench))
       .persist(lvl)
     val survSh = DedupOps.shingled(s3.select(col("doc_id"), col("text")))
-      .transform(fence)
+      .transform(core.Materialize.detached(_)(()))
     // stage 4: near dedup over survivors (banded candidates only)
     val sig = DedupOps.signaturesFromShingles(survSh)
     val cand = DedupOps.candidatePairs(DedupOps.lshBucketsFromSig(sig))
@@ -2703,7 +2701,7 @@ object LlmEntry {
       .jaccardVerifyShingled(survSh, cand, JaccardThreshold)
       .select(col("id_b").as("doc_id")).distinct()
     val s4 = s3.join(nearDrop, Seq("doc_id"), "left_anti")
-      .transform(fence)
+      .transform(core.Materialize.detached(_)(()))
     // stage 5: decontamination against the benchmark shingle universe
     // (fixed eval suite: bench docs of the BASE corpus, q89's set)
     val bench = benchSh.select(explode(col("sh")).as("h"))

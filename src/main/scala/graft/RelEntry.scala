@@ -38,6 +38,36 @@ object RelEntry {
     }
   }
 
+  private object AqePlans extends
+    org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** True when a file scan of `df`'s physical plan (looked up through
+    * AQE) reads from `dir` — the proof that a rewrite targeted it,
+    * taken from the scan nodes' root paths, not from the rendered plan
+    * string that `spark.sql.maxPlanStringLength` truncates.
+    */
+  private def scansDir(df: DataFrame, dir: String): Boolean = {
+    val name = new java.io.File(dir).getName
+    AqePlans.collect(df.queryExecution.executedPlan) {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.relation.location.rootPaths
+    }.flatten.exists(_.getName == name)
+  }
+
+  /** A lakehouse query's scope over catalog `cat`: `build` gets the
+    * warehouse root, the result is fenced, `release` runs, `tables` are
+    * dropped, and the warehouse is deleted ([[core.Materialize.owning]]).
+    */
+  private def lakeScope(s: SparkSession, cat: String, tag: String,
+      tables: String*)(build: String => DataFrame)
+      (release: => Unit = ()): DataFrame = {
+    val wh = catRoot(s, cat, tag)
+    core.Materialize.owning(s, wh)(build(wh)) {
+      release
+      tables.foreach(t => s.sql(s"DROP TABLE IF EXISTS $cat.$t"))
+    }
+  }
+
 
   private val EventTypes = Seq("click", "error", "purchase", "signup", "view")
 
@@ -1639,29 +1669,23 @@ object RelEntry {
       // relationally with EXCEPT ALL. Equality proves the table-level
       // machinery returns exactly the logical row diff.
       import graft.sources.ManifestedTable
-      val dir = java.nio.file.Files.createTempDirectory("graft_cdf").toString
-      val base = Tables.orders(s, d).select(col("o_orderkey"),
-        col("o_custkey"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"))
-      val v1df = base.filter(col("o_orderkey") % 4 < 3)
-      val v2df = base
-        .filter(col("o_orderkey") % 4 < 3 && !(col("o_orderkey") % 7 === 0))
-        .withColumn("price_cents",
-          when(col("o_orderkey") % 5 === 0, col("price_cents") + 100)
-            .otherwise(col("price_cents")))
-        .unionAll(base.filter(col("o_orderkey") % 4 === 3))
-      val v1 = ManifestedTable.write(v1df, dir, overwrite = true)
-      val v2 = ManifestedTable.write(v2df, dir, overwrite = true)
-      val (added, removed) = ManifestedTable.changesBetween(s, dir, v1, v2)
-      val out = added.withColumn("change", lit("add"))
-        .unionAll(removed.withColumn("change", lit("remove")))
-      core.Materialize.detached(out) {
-        // the scratch table is consumed; reclaim it once materialized
-        new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(dir), true)
-        ()
-      }
+      core.Materialize.scratch(s, "graft_cdf") { case Seq(dir) =>
+        val base = Tables.orders(s, d).select(col("o_orderkey"),
+          col("o_custkey"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"))
+        val v1df = base.filter(col("o_orderkey") % 4 < 3)
+        val v2df = base
+          .filter(col("o_orderkey") % 4 < 3 && !(col("o_orderkey") % 7 === 0))
+          .withColumn("price_cents",
+            when(col("o_orderkey") % 5 === 0, col("price_cents") + 100)
+              .otherwise(col("price_cents")))
+          .unionAll(base.filter(col("o_orderkey") % 4 === 3))
+        val v1 = ManifestedTable.write(v1df, dir, overwrite = true)
+        val v2 = ManifestedTable.write(v2df, dir, overwrite = true)
+        val (added, removed) = ManifestedTable.changesBetween(s, dir, v1, v2)
+        added.withColumn("change", lit("add"))
+          .unionAll(removed.withColumn("change", lit("remove")))
+      }()
     }),
 
     // ---- T62: schema-drift union (unionByName + missing columns) --------
@@ -1821,43 +1845,38 @@ object RelEntry {
       // the unchanged data mass, which changesBetween never even
       // reads (its file-granular pruning).
       import graft.sources.ManifestedTable
-      val dir = java.nio.file.Files.createTempDirectory("graft_mv").toString
-      val base = Tables.orders(s, d).select(col("o_orderkey"),
-        col("o_custkey"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"))
-      // deletions: key % 7, PLUS the entire custkey % 211 = 5 stratum
-      // (and those customers get no inserts either) — q171's recipe
-      // alone never empties a customer at sf0.01, which would leave
-      // the drop-to-zero branch oracle-unexercised
-      val v1df = base.filter(col("o_orderkey") % 4 < 3)
-      val v2df = base
-        .filter(col("o_orderkey") % 4 < 3 && !(col("o_orderkey") % 7 === 0)
-          && !(col("o_custkey") % 211 === 5))
-        .withColumn("price_cents",
-          when(col("o_orderkey") % 5 === 0, col("price_cents") + 100)
-            .otherwise(col("price_cents")))
-        .unionAll(base.filter(col("o_orderkey") % 4 === 3
-          && !(col("o_custkey") % 211 === 5)))
-      val v1 = ManifestedTable.write(v1df, dir, overwrite = true)
-      val v2 = ManifestedTable.write(v2df, dir, overwrite = true)
-      val mv1 = ManifestedTable.readAt(s, dir, v1)
-        .groupBy(col("o_custkey"))
-        .agg(count(lit(1)).as("n_orders"), sum(col("price_cents")).as("cents"))
-      val (added, removed) = ManifestedTable.changesBetween(s, dir, v1, v2)
-      val out = mv1.select(col("o_custkey"), col("n_orders"), col("cents"))
-        .unionAll(added.select(col("o_custkey"), lit(1L),
-          col("price_cents")))
-        .unionAll(removed.select(col("o_custkey"), lit(-1L),
-          -col("price_cents")))
-        .groupBy(col("o_custkey"))
-        .agg(sum(col("n_orders")).as("n_orders"), sum(col("cents")).as("cents"))
-        .filter(col("n_orders") > 0)
-      core.Materialize.detached(out) {
-        new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(dir), true)
-        ()
-      }
+      core.Materialize.scratch(s, "graft_mv") { case Seq(dir) =>
+        val base = Tables.orders(s, d).select(col("o_orderkey"),
+          col("o_custkey"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"))
+        // deletions: key % 7, PLUS the entire custkey % 211 = 5 stratum
+        // (and those customers get no inserts either) — q171's recipe
+        // alone never empties a customer at sf0.01, which would leave
+        // the drop-to-zero branch oracle-unexercised
+        val v1df = base.filter(col("o_orderkey") % 4 < 3)
+        val v2df = base
+          .filter(col("o_orderkey") % 4 < 3 && !(col("o_orderkey") % 7 === 0)
+            && !(col("o_custkey") % 211 === 5))
+          .withColumn("price_cents",
+            when(col("o_orderkey") % 5 === 0, col("price_cents") + 100)
+              .otherwise(col("price_cents")))
+          .unionAll(base.filter(col("o_orderkey") % 4 === 3
+            && !(col("o_custkey") % 211 === 5)))
+        val v1 = ManifestedTable.write(v1df, dir, overwrite = true)
+        val v2 = ManifestedTable.write(v2df, dir, overwrite = true)
+        val mv1 = ManifestedTable.readAt(s, dir, v1)
+          .groupBy(col("o_custkey"))
+          .agg(count(lit(1)).as("n_orders"), sum(col("price_cents")).as("cents"))
+        val (added, removed) = ManifestedTable.changesBetween(s, dir, v1, v2)
+        mv1.select(col("o_custkey"), col("n_orders"), col("cents"))
+          .unionAll(added.select(col("o_custkey"), lit(1L),
+            col("price_cents")))
+          .unionAll(removed.select(col("o_custkey"), lit(-1L),
+            -col("price_cents")))
+          .groupBy(col("o_custkey"))
+          .agg(sum(col("n_orders")).as("n_orders"), sum(col("cents")).as("cents"))
+          .filter(col("n_orders") > 0)
+      }()
     }),
 
     // ---- T76: row-level MERGE (copy-on-write upsert) ---------------------
@@ -1880,26 +1899,21 @@ object RelEntry {
       // q131 min-max pruning); the rewrite moves only touched files +
       // the delta; publication is one manifest rename.
       import graft.sources.ManifestedTable
-      val dir = java.nio.file.Files.createTempDirectory("graft_merge").toString
-      val base = Tables.orders(s, d).select(col("o_orderkey"),
-        col("o_custkey"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"))
-      ManifestedTable.write(
-        base.repartitionByRange(8, col("o_orderkey")), dir)
-      val source = base.filter(col("o_orderkey") % 7 === 2)
-        .withColumn("price_cents", col("price_cents") + 5000L)
-        .unionAll(base.filter(col("o_orderkey") % 13 === 1)
-          // +107e6: above any ScaleBench replica stride (q164's rule),
-          // so scaled replicas' inserts never collide with base keys
-          .withColumn("o_orderkey", col("o_orderkey") + 107000000L))
-      ManifestedTable.merge(s, dir, source, Seq("o_orderkey"))
-      val out = ManifestedTable.read(s, dir)
-      core.Materialize.detached(out) {
-        new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(dir), true)
-        ()
-      }
+      core.Materialize.scratch(s, "graft_merge") { case Seq(dir) =>
+        val base = Tables.orders(s, d).select(col("o_orderkey"),
+          col("o_custkey"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"))
+        ManifestedTable.write(
+          base.repartitionByRange(8, col("o_orderkey")), dir)
+        val source = base.filter(col("o_orderkey") % 7 === 2)
+          .withColumn("price_cents", col("price_cents") + 5000L)
+          .unionAll(base.filter(col("o_orderkey") % 13 === 1)
+            // +107e6: above any ScaleBench replica stride (q164's rule),
+            // so scaled replicas' inserts never collide with base keys
+            .withColumn("o_orderkey", col("o_orderkey") + 107000000L))
+        ManifestedTable.merge(s, dir, source, Seq("o_orderkey"))
+        ManifestedTable.read(s, dir)
+      }()
     }),
 
     // ---- T77: row-level DELETE WHERE (three-valued predicate) -----------
@@ -1915,22 +1929,17 @@ object RelEntry {
       // TRUE row rewrite (with the null-safe negation); a no-match
       // delete commits nothing.
       import graft.sources.ManifestedTable
-      val dir = java.nio.file.Files.createTempDirectory("graft_del").toString
-      val base = Tables.orders(s, d).select(col("o_orderkey"),
-        col("o_custkey"),
-        when(col("o_orderkey") % 11 === 0, lit(null))
-          .otherwise(expr("CAST(round(o_totalprice * 100) AS BIGINT)"))
-          .cast("bigint").as("score"))
-      ManifestedTable.write(
-        base.repartitionByRange(8, col("o_orderkey")), dir)
-      ManifestedTable.deleteWhere(s, dir, col("score") > 20000000L)
-      val out = ManifestedTable.read(s, dir)
-      core.Materialize.detached(out) {
-        new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(dir), true)
-        ()
-      }
+      core.Materialize.scratch(s, "graft_del") { case Seq(dir) =>
+        val base = Tables.orders(s, d).select(col("o_orderkey"),
+          col("o_custkey"),
+          when(col("o_orderkey") % 11 === 0, lit(null))
+            .otherwise(expr("CAST(round(o_totalprice * 100) AS BIGINT)"))
+            .cast("bigint").as("score"))
+        ManifestedTable.write(
+          base.repartitionByRange(8, col("o_orderkey")), dir)
+        ManifestedTable.deleteWhere(s, dir, col("score") > 20000000L)
+        ManifestedTable.read(s, dir)
+      }()
     }),
 
     // ---- T79: CDC replication (CDF-apply keeps a follower exact) ---------
@@ -1952,44 +1961,36 @@ object RelEntry {
       // rewrites only the follower files holding changed keys — the
       // unchanged mass moves ZERO bytes on either side.
       import graft.sources.ManifestedTable
-      val ldir = java.nio.file.Files.createTempDirectory("graft_cdcl").toString
-      val fdir = java.nio.file.Files.createTempDirectory("graft_cdcf").toString
-      val base = Tables.orders(s, d).select(col("o_orderkey"),
-        col("o_custkey"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"))
-      val v1df = base.filter(col("o_orderkey") % 4 < 3)
-      val v2df = base
-        .filter(col("o_orderkey") % 4 < 3 && !(col("o_orderkey") % 7 === 0))
-        .withColumn("price_cents",
-          when(col("o_orderkey") % 5 === 0, col("price_cents") + 100)
-            .otherwise(col("price_cents")))
-        .unionAll(base.filter(col("o_orderkey") % 4 === 3))
-      val v1 = ManifestedTable.write(v1df, ldir, overwrite = true)
-      val v2 = ManifestedTable.write(v2df, ldir, overwrite = true)
-      ManifestedTable.write(ManifestedTable.readAt(s, ldir, v1)
-        .repartitionByRange(8, col("o_orderkey")), fdir)
-      // materialize the change feed ONCE before applying it: merge
-      // consumes its source several times (cardinality+bounds agg,
-      // find-touched semi join, the rewrite union) and deleteMatching
-      // adds two more — each consumption of a raw changesBetween frame
-      // re-ran the whole two-sided exceptAll diff (the q197 lesson,
-      // across DML boundaries). A CDC batch is delta-sized, so the
-      // eager checkpoint is O(changes), never O(table).
-      val (added0, removed0) = ManifestedTable.changesBetween(s, ldir, v1, v2)
-      val added = added0.localCheckpoint(true)
-      val removedKeys = removed0.select("o_orderkey")
-        .except(added.select("o_orderkey")).localCheckpoint(true)
-      ManifestedTable.merge(s, fdir, added, Seq("o_orderkey"))
-      ManifestedTable.deleteMatching(s, fdir, removedKeys)
-      val out = ManifestedTable.read(s, fdir)
-      core.Materialize.detached(out) {
-        val conf = s.sessionState.newHadoopConf()
-        Seq(ldir, fdir).foreach { dd =>
-          new org.apache.hadoop.fs.Path(dd).getFileSystem(conf)
-            .delete(new org.apache.hadoop.fs.Path(dd), true)
-        }
-        ()
-      }
+      core.Materialize.scratch(s, "graft_cdcl", "graft_cdcf") { case Seq(ldir, fdir) =>
+        val base = Tables.orders(s, d).select(col("o_orderkey"),
+          col("o_custkey"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"))
+        val v1df = base.filter(col("o_orderkey") % 4 < 3)
+        val v2df = base
+          .filter(col("o_orderkey") % 4 < 3 && !(col("o_orderkey") % 7 === 0))
+          .withColumn("price_cents",
+            when(col("o_orderkey") % 5 === 0, col("price_cents") + 100)
+              .otherwise(col("price_cents")))
+          .unionAll(base.filter(col("o_orderkey") % 4 === 3))
+        val v1 = ManifestedTable.write(v1df, ldir, overwrite = true)
+        val v2 = ManifestedTable.write(v2df, ldir, overwrite = true)
+        ManifestedTable.write(ManifestedTable.readAt(s, ldir, v1)
+          .repartitionByRange(8, col("o_orderkey")), fdir)
+        // materialize the change feed ONCE before applying it: merge
+        // consumes its source several times (cardinality+bounds agg,
+        // find-touched semi join, the rewrite union) and deleteMatching
+        // adds two more — each consumption of a raw changesBetween frame
+        // re-ran the whole two-sided exceptAll diff (the q197 lesson,
+        // across DML boundaries). A CDC batch is delta-sized, so the
+        // eager checkpoint is O(changes), never O(table).
+        val (added0, removed0) = ManifestedTable.changesBetween(s, ldir, v1, v2)
+        val added = added0.localCheckpoint(true)
+        val removedKeys = removed0.select("o_orderkey")
+          .except(added.select("o_orderkey")).localCheckpoint(true)
+        ManifestedTable.merge(s, fdir, added, Seq("o_orderkey"))
+        ManifestedTable.deleteMatching(s, fdir, removedKeys)
+        ManifestedTable.read(s, fdir)
+      }()
     }),
 
     // ---- T11 extension: graft-avro connector end-to-end, oracle-checked --
@@ -2004,23 +2005,18 @@ object RelEntry {
       // computes the same aggregate from the parquet table directly;
       // hash equality proves the round trip value-faithful including
       // the timestamp micros (unix_seconds ≡ date_diff both engines).
-      val dir = java.nio.file.Files.createTempDirectory("graft_avroq").toString
-      val ev = Tables.events(s, d).select(col("event_id"), col("ts"),
-        col("user_id"), col("event_type"), col("value"))
-      ev.write.format("graft-avro").mode("overwrite").save(dir)
-      val out = s.read.format("graft-avro").load(dir)
-        .filter(col("user_id") < 400)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(expr("CAST(round(value * 100) AS BIGINT)")).as("cents"),
-          min(expr("unix_seconds(ts)")).as("lo_s"),
-          max(expr("unix_seconds(ts)")).as("hi_s"))
-      core.Materialize.detached(out) {
-        new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(dir), true)
-        ()
-      }
+      core.Materialize.scratch(s, "graft_avroq") { case Seq(dir) =>
+        val ev = Tables.events(s, d).select(col("event_id"), col("ts"),
+          col("user_id"), col("event_type"), col("value"))
+        ev.write.format("graft-avro").mode("overwrite").save(dir)
+        s.read.format("graft-avro").load(dir)
+          .filter(col("user_id") < 400)
+          .groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n"),
+            sum(expr("CAST(round(value * 100) AS BIGINT)")).as("cents"),
+            min(expr("unix_seconds(ts)")).as("lo_s"),
+            max(expr("unix_seconds(ts)")).as("hi_s"))
+      }()
     }),
 
     // ---- T80: transparent MV rewrite (optimizer rule) --------------------
@@ -2037,25 +2033,18 @@ object RelEntry {
       // returns exactly the recompute's rows, which is the rewrite-
       // soundness theorem (partials re-aggregate exactly: all-BIGINT).
       import graft.plans.MvCatalog
-      val dir = java.nio.file.Files.createTempDirectory("graft_mvq").toString
-      val src = Tables.orders(s, d).select(col("o_orderstatus"),
-        col("o_orderpriority"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-      MvCatalog.register("graft_q180", src,
-        Seq("o_orderstatus", "o_orderpriority"), Seq("cents"), dir)
-      val q = src.groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"),
-          min(col("cents")).as("lo"), max(col("cents")).as("hi"))
-      require(q.queryExecution.executedPlan.toString
-        .contains(new java.io.File(dir).getName),
-        "q180: the MV rewrite did not fire")
-      core.Materialize.detached(q) {
-        MvCatalog.unregister("graft_q180")
-        new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(dir), true)
-        ()
-      }
+      core.Materialize.scratch(s, "graft_mvq") { case Seq(dir) =>
+        val src = Tables.orders(s, d).select(col("o_orderstatus"),
+          col("o_orderpriority"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+        MvCatalog.register("graft_q180", src,
+          Seq("o_orderstatus", "o_orderpriority"), Seq("cents"), dir)
+        val q = src.groupBy(col("o_orderpriority"))
+          .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"),
+            min(col("cents")).as("lo"), max(col("cents")).as("hi"))
+        require(scansDir(q, dir), "q180: the MV rewrite did not fire")
+        q
+      }(MvCatalog.unregister("graft_q180"))
     }),
 
     // ---- T82: MV lifecycle — incremental refresh keeps the rewrite fresh
@@ -2076,44 +2065,35 @@ object RelEntry {
       // min/max facing deletions and vanished groups in the compare.
       import graft.plans.MvCatalog
       import graft.sources.ManifestedTable
-      val tdir = java.nio.file.Files.createTempDirectory("graft_mvt").toString
-      val mdir = java.nio.file.Files.createTempDirectory("graft_mvm").toString
-      val base = Tables.orders(s, d).select(col("o_custkey"),
-        col("o_orderkey"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"))
-      val v1df = base.filter(col("o_orderkey") % 4 < 3)
-      val v2df = base
-        .filter(col("o_orderkey") % 4 < 3 && !(col("o_orderkey") % 7 === 0)
-          && !(col("o_custkey") % 211 === 5))
-        .withColumn("price_cents",
-          when(col("o_orderkey") % 5 === 0, col("price_cents") + 100)
-            .otherwise(col("price_cents")))
-        .unionAll(base.filter(col("o_orderkey") % 4 === 3
-          && !(col("o_custkey") % 211 === 5)))
-      val v1 = ManifestedTable.write(
-        v1df.repartitionByRange(8, col("o_custkey")), tdir)
-      MvCatalog.registerOnTable("graft_q181", s, tdir,
-        Seq("o_custkey"), Seq("price_cents"), mdir)
-      val v2 = ManifestedTable.write(v2df, tdir, overwrite = true)
-      MvCatalog.refreshFromTable("graft_q181", s, tdir, v1, v2)
-      val q = ManifestedTable.read(s, tdir)
-        .groupBy(col("o_custkey"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(col("price_cents")).as("cents"),
-          min(col("price_cents")).as("lo"),
-          max(col("price_cents")).as("hi"))
-      require(q.queryExecution.executedPlan.toString
-        .contains(new java.io.File(mdir).getName),
-        "q181: the rewrite did not serve the refreshed MV")
-      core.Materialize.detached(q) {
-        MvCatalog.unregister("graft_q181")
-        val conf = s.sessionState.newHadoopConf()
-        Seq(tdir, mdir).foreach { dd =>
-          new org.apache.hadoop.fs.Path(dd).getFileSystem(conf)
-            .delete(new org.apache.hadoop.fs.Path(dd), true)
-        }
-        ()
-      }
+      core.Materialize.scratch(s, "graft_mvt", "graft_mvm") { case Seq(tdir, mdir) =>
+        val base = Tables.orders(s, d).select(col("o_custkey"),
+          col("o_orderkey"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"))
+        val v1df = base.filter(col("o_orderkey") % 4 < 3)
+        val v2df = base
+          .filter(col("o_orderkey") % 4 < 3 && !(col("o_orderkey") % 7 === 0)
+            && !(col("o_custkey") % 211 === 5))
+          .withColumn("price_cents",
+            when(col("o_orderkey") % 5 === 0, col("price_cents") + 100)
+              .otherwise(col("price_cents")))
+          .unionAll(base.filter(col("o_orderkey") % 4 === 3
+            && !(col("o_custkey") % 211 === 5)))
+        val v1 = ManifestedTable.write(
+          v1df.repartitionByRange(8, col("o_custkey")), tdir)
+        MvCatalog.registerOnTable("graft_q181", s, tdir,
+          Seq("o_custkey"), Seq("price_cents"), mdir)
+        val v2 = ManifestedTable.write(v2df, tdir, overwrite = true)
+        MvCatalog.refreshFromTable("graft_q181", s, tdir, v1, v2)
+        val q = ManifestedTable.read(s, tdir)
+          .groupBy(col("o_custkey"))
+          .agg(count(lit(1)).as("n_orders"),
+            sum(col("price_cents")).as("cents"),
+            min(col("price_cents")).as("lo"),
+            max(col("price_cents")).as("hi"))
+        require(scansDir(q, mdir),
+          "q181: the rewrite did not serve the refreshed MV")
+        q
+      }(MvCatalog.unregister("graft_q181"))
     }),
 
     // ---- T83: lakehouse lifecycle integration ----------------------------
@@ -2131,41 +2111,36 @@ object RelEntry {
       // crosses (ingest idempotence, DML, maintenance) is inside the
       // hash compare.
       import graft.sources.ManifestedTable
-      val dir = java.nio.file.Files.createTempDirectory("graft_lake").toString
-      val base = Tables.orders(s, d).select(col("o_orderkey"),
-        col("o_custkey"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"))
-      def batch(i: Int) = base.filter(col("o_orderkey") % 3 === i)
-      (0 to 2).foreach(i => ManifestedTable.appendBatch(
-        batch(i).repartitionByRange(4, col("o_orderkey")), dir, i.toLong))
-      // checkpoint replay: batch 1 redelivered — must commit NOTHING
-      val vPre = ManifestedTable.currentVersion(s, dir)
-      require(!ManifestedTable.appendBatch(batch(1), dir, 1L) &&
-        ManifestedTable.currentVersion(s, dir) == vPre,
-        "q182: a redelivered batch was applied twice")
-      // correction delta: +700 cents on the % 11 = 3 stratum
-      ManifestedTable.merge(s, dir,
-        base.filter(col("o_orderkey") % 11 === 3)
-          .withColumn("price_cents", col("price_cents") + 700L),
-        Seq("o_orderkey"))
-      // cancellations: the % 13 = 6 stratum leaves
-      ManifestedTable.deleteWhere(s, dir, col("o_orderkey") % 13 === 6)
-      // maintenance: clustered rewrite must keep rows AND the marker
-      ManifestedTable.compactClustered(s, dir,
-        targetFileBytes = 1L << 22, col("o_orderkey"))
-      require(ManifestedTable.lastBatchId(s, dir).contains(2L),
-        "q182: compaction dropped the txn marker")
-      val out = ManifestedTable.read(s, dir)
-        .groupBy((col("o_custkey") % 97).as("cohort"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("price_cents")).as("cents"),
-          min(col("o_orderkey")).as("first_key"))
-      core.Materialize.detached(out) {
-        new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(dir), true)
-        ()
-      }
+      core.Materialize.scratch(s, "graft_lake") { case Seq(dir) =>
+        val base = Tables.orders(s, d).select(col("o_orderkey"),
+          col("o_custkey"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"))
+        def batch(i: Int) = base.filter(col("o_orderkey") % 3 === i)
+        (0 to 2).foreach(i => ManifestedTable.appendBatch(
+          batch(i).repartitionByRange(4, col("o_orderkey")), dir, i.toLong))
+        // checkpoint replay: batch 1 redelivered — must commit NOTHING
+        val vPre = ManifestedTable.currentVersion(s, dir)
+        require(!ManifestedTable.appendBatch(batch(1), dir, 1L) &&
+          ManifestedTable.currentVersion(s, dir) == vPre,
+          "q182: a redelivered batch was applied twice")
+        // correction delta: +700 cents on the % 11 = 3 stratum
+        ManifestedTable.merge(s, dir,
+          base.filter(col("o_orderkey") % 11 === 3)
+            .withColumn("price_cents", col("price_cents") + 700L),
+          Seq("o_orderkey"))
+        // cancellations: the % 13 = 6 stratum leaves
+        ManifestedTable.deleteWhere(s, dir, col("o_orderkey") % 13 === 6)
+        // maintenance: clustered rewrite must keep rows AND the marker
+        ManifestedTable.compactClustered(s, dir,
+          targetFileBytes = 1L << 22, col("o_orderkey"))
+        require(ManifestedTable.lastBatchId(s, dir).contains(2L),
+          "q182: compaction dropped the txn marker")
+        ManifestedTable.read(s, dir)
+          .groupBy((col("o_custkey") % 97).as("cohort"))
+          .agg(count(lit(1)).as("n"),
+            sum(col("price_cents")).as("cents"),
+            min(col("o_orderkey")).as("first_key"))
+      }()
     }),
 
     // ---- T85: null-safe equality join (<=> vs =) -------------------------
@@ -2231,26 +2206,21 @@ object RelEntry {
       // every later column) errors rather than misparses.
       import graft.sources.FixedWidth
       import org.apache.spark.sql.types.{LongType, StringType}
-      val dir = java.nio.file.Files.createTempDirectory("graft_fw").toString
-      val spec = Seq(
-        FixedWidth.Col("event_type", 1, 10, StringType),
-        FixedWidth.Col("event_id", 11, 12, LongType),
-        FixedWidth.Col("cents", 23, 12, LongType))
-      val ev = Tables.events(s, d).select(col("event_type"),
-        col("event_id"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-      FixedWidth.write(ev, dir, spec)
-      val out = FixedWidth.read(s, dir, spec)
-        .filter(col("event_id") % 2 === 0)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"),
-          max(col("event_id")).as("hi_id"))
-      core.Materialize.detached(out) {
-        new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(dir), true)
-        ()
-      }
+      core.Materialize.scratch(s, "graft_fw") { case Seq(dir) =>
+        val spec = Seq(
+          FixedWidth.Col("event_type", 1, 10, StringType),
+          FixedWidth.Col("event_id", 11, 12, LongType),
+          FixedWidth.Col("cents", 23, 12, LongType))
+        val ev = Tables.events(s, d).select(col("event_type"),
+          col("event_id"),
+          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
+        FixedWidth.write(ev, dir, spec)
+        FixedWidth.read(s, dir, spec)
+          .filter(col("event_id") % 2 === 0)
+          .groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"),
+            max(col("event_id")).as("hi_id"))
+      }()
     }),
 
     // ---- T88: DSv2 SQL face of the manifested table ----------------------
@@ -2271,33 +2241,28 @@ object RelEntry {
       // ManifestedTable.read stays the vectorized bulk path — both
       // resolve the identical snapshot.
       import graft.sources.ManifestedTable
-      val dir = java.nio.file.Files.createTempDirectory("graft_face").toString
-      val base = Tables.orders(s, d).select(col("o_orderkey"),
-        col("o_custkey"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"))
-      val v1 = ManifestedTable.write(
-        base.repartitionByRange(8, col("o_orderkey")), dir)
-      val src = base.filter(col("o_orderkey") % 7 === 2)
-        .withColumn("price_cents", col("price_cents") + 5000L)
-      ManifestedTable.merge(s, dir, src, Seq("o_orderkey"))
-      s.sql(s"CREATE OR REPLACE TEMPORARY VIEW g187_v1 " +
-        s"USING `graft-manifest` OPTIONS (path '$dir', versionAsOf '$v1')")
-      s.sql(s"CREATE OR REPLACE TEMPORARY VIEW g187_cur " +
-        s"USING `graft-manifest` OPTIONS (path '$dir')")
-      val out = s.sql(
-        """SELECT c.o_custkey AS custkey,
-          |  CAST(count(*) AS BIGINT) AS n,
-          |  sum(c.price_cents) AS cents_now,
-          |  sum(c.price_cents - p.price_cents) AS correction
-          |FROM g187_cur c JOIN g187_v1 p ON c.o_orderkey = p.o_orderkey
-          |WHERE c.o_custkey % 10 = 3
-          |GROUP BY c.o_custkey""".stripMargin)
-      core.Materialize.detached(out) {
-        new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(dir), true)
-        ()
-      }
+      core.Materialize.scratch(s, "graft_face") { case Seq(dir) =>
+        val base = Tables.orders(s, d).select(col("o_orderkey"),
+          col("o_custkey"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"))
+        val v1 = ManifestedTable.write(
+          base.repartitionByRange(8, col("o_orderkey")), dir)
+        val src = base.filter(col("o_orderkey") % 7 === 2)
+          .withColumn("price_cents", col("price_cents") + 5000L)
+        ManifestedTable.merge(s, dir, src, Seq("o_orderkey"))
+        s.sql(s"CREATE OR REPLACE TEMPORARY VIEW g187_v1 " +
+          s"USING `graft-manifest` OPTIONS (path '$dir', versionAsOf '$v1')")
+        s.sql(s"CREATE OR REPLACE TEMPORARY VIEW g187_cur " +
+          s"USING `graft-manifest` OPTIONS (path '$dir')")
+        s.sql(
+          """SELECT c.o_custkey AS custkey,
+            |  CAST(count(*) AS BIGINT) AS n,
+            |  sum(c.price_cents) AS cents_now,
+            |  sum(c.price_cents - p.price_cents) AS correction
+            |FROM g187_cur c JOIN g187_v1 p ON c.o_orderkey = p.o_orderkey
+            |WHERE c.o_custkey % 10 = 3
+            |GROUP BY c.o_custkey""".stripMargin)
+      }()
     }),
 
     // ---- T89: MERGE matrix (full-sync reconciliation) --------------------
@@ -2317,30 +2282,25 @@ object RelEntry {
       // by-source find-touched pass over the unmatched mass.
       import graft.sources.ManifestedTable
       import graft.sources.ManifestedTable.BySourceDelete
-      val dir = java.nio.file.Files.createTempDirectory("graft_sync").toString
-      val base = Tables.orders(s, d).select(col("o_orderkey"),
-        col("o_custkey"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"),
-        (col("o_orderkey") % 3).as("ver"))
-      ManifestedTable.write(
-        base.repartitionByRange(8, col("o_orderkey")), dir)
-      val src = base.filter(col("o_orderkey") % 2 === 0)
-        .withColumn("cents", col("cents") + 7777L)
-        .withColumn("ver", lit(2L))
-        .unionByName(base.filter(col("o_orderkey") % 5 === 1)
-          .withColumn("o_orderkey", col("o_orderkey") + 207000000L)
-          .withColumn("ver", lit(2L)))
-      ManifestedTable.merge(s, dir, src, Seq("o_orderkey"),
-        updateWhen = Some(col("ver") > col("__base_ver")),
-        insertWhen = Some(col("o_custkey") % 2 === 0),
-        bySource = Some(BySourceDelete(Some(col("ver") === 0L))))
-      val out = ManifestedTable.read(s, dir)
-      core.Materialize.detached(out) {
-        new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(dir), true)
-        ()
-      }
+      core.Materialize.scratch(s, "graft_sync") { case Seq(dir) =>
+        val base = Tables.orders(s, d).select(col("o_orderkey"),
+          col("o_custkey"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"),
+          (col("o_orderkey") % 3).as("ver"))
+        ManifestedTable.write(
+          base.repartitionByRange(8, col("o_orderkey")), dir)
+        val src = base.filter(col("o_orderkey") % 2 === 0)
+          .withColumn("cents", col("cents") + 7777L)
+          .withColumn("ver", lit(2L))
+          .unionByName(base.filter(col("o_orderkey") % 5 === 1)
+            .withColumn("o_orderkey", col("o_orderkey") + 207000000L)
+            .withColumn("ver", lit(2L)))
+        ManifestedTable.merge(s, dir, src, Seq("o_orderkey"),
+          updateWhen = Some(col("ver") > col("__base_ver")),
+          insertWhen = Some(col("o_custkey") % 2 === 0),
+          bySource = Some(BySourceDelete(Some(col("ver") === 0L))))
+        ManifestedTable.read(s, dir)
+      }()
     }),
 
     // ---- T90: merge-on-read deletion vectors ------------------------------
@@ -2360,29 +2320,24 @@ object RelEntry {
       // the same key) present exactly once.
       import graft.sources.ManifestedTable
       import s.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft_dvq").toString
-      val base = Tables.orders(s, d).select(col("o_orderkey"),
-        col("o_custkey"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-      ManifestedTable.write(
-        base.repartitionByRange(8, col("o_orderkey")), dir)
-      ManifestedTable.deleteMatching(s, dir,
-        base.filter(col("o_orderkey") % 9 === 4).select("o_orderkey"),
-        dvMaxFraction = 1.0)
-      ManifestedTable.deleteWhere(s, dir,
-        col("cents") > 30000000L && col("o_orderkey") % 5 === 3,
-        dvMaxFraction = 1.0)
-      val src = base.filter(col("o_orderkey") % 11 === 7)
-        .withColumn("cents", col("cents") + 11L)
-      ManifestedTable.merge(s, dir, src, Seq("o_orderkey"),
-        dvMaxFraction = 1.0)
-      val out = ManifestedTable.read(s, dir)
-      core.Materialize.detached(out) {
-        new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(dir), true)
-        ()
-      }
+      core.Materialize.scratch(s, "graft_dvq") { case Seq(dir) =>
+        val base = Tables.orders(s, d).select(col("o_orderkey"),
+          col("o_custkey"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+        ManifestedTable.write(
+          base.repartitionByRange(8, col("o_orderkey")), dir)
+        ManifestedTable.deleteMatching(s, dir,
+          base.filter(col("o_orderkey") % 9 === 4).select("o_orderkey"),
+          dvMaxFraction = 1.0)
+        ManifestedTable.deleteWhere(s, dir,
+          col("cents") > 30000000L && col("o_orderkey") % 5 === 3,
+          dvMaxFraction = 1.0)
+        val src = base.filter(col("o_orderkey") % 11 === 7)
+          .withColumn("cents", col("cents") + 11L)
+        ManifestedTable.merge(s, dir, src, Seq("o_orderkey"),
+          dvMaxFraction = 1.0)
+        ManifestedTable.read(s, dir)
+      }()
     }),
 
     // ---- T92: session-catalog SQL lifecycle (graft-manifest catalog) -----
@@ -2398,49 +2353,43 @@ object RelEntry {
       // relationally. Catalog state is the filesystem (one
       // ManifestedTable dir per table), so this composes with every
       // object-API operation on the same directory.
-      val wh = catRoot(s, "g190", "graft_cat_q")
-      Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-        .createOrReplaceTempView("g190_src")
-      s.sql("DROP TABLE IF EXISTS g190.book")
-      s.sql("""CREATE TABLE g190.book AS
-              |SELECT * FROM g190_src WHERE o_orderkey % 4 < 3""".stripMargin)
-      // the post-CTAS version, resolved from the table itself rather
-      // than hardcoded: CTAS commits create(v1)+insert(v2) TODAY, but
-      // any engine-supplied table property outside createTable's strip
-      // list would add a set-properties commit and silently shift the
-      // numbering — the snapshot the reconciliation reads must be
-      // anchored to the OPERATION, not to a version constant. Resolved
-      // THROUGH the catalog (history procedure), because Spark caches
-      // the catalog instance by name with its FIRST root — on a
-      // repeated run (bench) the run-local temp dir and the catalog's
-      // actual root diverge, and only the catalog's view is the truth
-      // the VERSION AS OF below will read.
-      val postCtasV = s.sql("CALL g190.system.history('book')")
-        .agg(org.apache.spark.sql.functions.max("version"))
-        .head.getLong(0)
-      s.sql("""INSERT INTO g190.book
-              |SELECT o_orderkey + 307000000, o_custkey, cents
-              |FROM g190_src WHERE o_orderkey % 10 = 9""".stripMargin)
-      s.sql("DELETE FROM g190.book " +
-        "WHERE cents > 25000000 AND o_custkey % 7 = 3")
-      val out = s.sql(
-        s"""SELECT c.o_custkey AS custkey,
-          |  CAST(count(*) AS BIGINT) AS n,
-          |  sum(c.cents) AS cents_now,
-          |  sum(p.cents) AS cents_at_v2
-          |FROM g190.book c
-          |LEFT JOIN (SELECT * FROM g190.book VERSION AS OF $postCtasV) p
-          |  ON c.o_orderkey = p.o_orderkey
-          |WHERE c.o_custkey % 10 = 3
-          |GROUP BY c.o_custkey""".stripMargin)
-      core.Materialize.detached(out) {
+      lakeScope(s, "g190", "graft_cat_q", "book") { _ =>
+        Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+          .createOrReplaceTempView("g190_src")
         s.sql("DROP TABLE IF EXISTS g190.book")
-        new org.apache.hadoop.fs.Path(wh)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(wh), true)
-        ()
-      }
+        s.sql("""CREATE TABLE g190.book AS
+                |SELECT * FROM g190_src WHERE o_orderkey % 4 < 3""".stripMargin)
+        // the post-CTAS version, resolved from the table itself rather
+        // than hardcoded: CTAS commits create(v1)+insert(v2) TODAY, but
+        // any engine-supplied table property outside createTable's strip
+        // list would add a set-properties commit and silently shift the
+        // numbering — the snapshot the reconciliation reads must be
+        // anchored to the OPERATION, not to a version constant. Resolved
+        // THROUGH the catalog (history procedure), because Spark caches
+        // the catalog instance by name with its FIRST root — on a
+        // repeated run (bench) the run-local temp dir and the catalog's
+        // actual root diverge, and only the catalog's view is the truth
+        // the VERSION AS OF below will read.
+        val postCtasV = s.sql("CALL g190.system.history('book')")
+          .agg(org.apache.spark.sql.functions.max("version"))
+          .head.getLong(0)
+        s.sql("""INSERT INTO g190.book
+                |SELECT o_orderkey + 307000000, o_custkey, cents
+                |FROM g190_src WHERE o_orderkey % 10 = 9""".stripMargin)
+        s.sql("DELETE FROM g190.book " +
+          "WHERE cents > 25000000 AND o_custkey % 7 = 3")
+        s.sql(
+          s"""SELECT c.o_custkey AS custkey,
+            |  CAST(count(*) AS BIGINT) AS n,
+            |  sum(c.cents) AS cents_now,
+            |  sum(p.cents) AS cents_at_v2
+            |FROM g190.book c
+            |LEFT JOIN (SELECT * FROM g190.book VERSION AS OF $postCtasV) p
+            |  ON c.o_orderkey = p.o_orderkey
+            |WHERE c.o_custkey % 10 = 3
+            |GROUP BY c.o_custkey""".stripMargin)
+      }()
     }),
 
     // ---- T93: manifest-served aggregate pushdown --------------------------
@@ -2456,26 +2405,21 @@ object RelEntry {
       // discipline end to end — decimal text for integers, base64
       // UTF-8 for strings, unsigned-byte string ordering.
       import graft.sources.ManifestedTable
-      val dir = java.nio.file.Files.createTempDirectory("graft_magg_q").toString
-      val base = Tables.orders(s, d).select(col("o_orderkey"),
-        col("o_orderpriority"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-      ManifestedTable.write(
-        base.repartitionByRange(8, col("o_orderkey")), dir)
-      val out = s.read.format("graft-manifest").load(dir)
-        .agg(count(lit(1)).as("n"),
-          min(col("o_orderkey")).as("k_lo"),
-          max(col("o_orderkey")).as("k_hi"),
-          min(col("cents")).as("c_lo"),
-          max(col("cents")).as("c_hi"),
-          min(col("o_orderpriority")).as("p_lo"),
-          max(col("o_orderpriority")).as("p_hi"))
-      core.Materialize.detached(out) {
-        new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(dir), true)
-        ()
-      }
+      core.Materialize.scratch(s, "graft_magg_q") { case Seq(dir) =>
+        val base = Tables.orders(s, d).select(col("o_orderkey"),
+          col("o_orderpriority"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+        ManifestedTable.write(
+          base.repartitionByRange(8, col("o_orderkey")), dir)
+        s.read.format("graft-manifest").load(dir)
+          .agg(count(lit(1)).as("n"),
+            min(col("o_orderkey")).as("k_lo"),
+            max(col("o_orderkey")).as("k_hi"),
+            min(col("cents")).as("c_lo"),
+            max(col("cents")).as("c_hi"),
+            min(col("o_orderpriority")).as("p_lo"),
+            max(col("o_orderpriority")).as("p_hi"))
+      }()
     }),
 
     // ---- T94: SQL UPDATE + MERGE INTO (row-level operations) -------------
@@ -2490,40 +2434,34 @@ object RelEntry {
       // pins the strict-minority rewrite claim). The oracle replays
       // both statements relationally; hash equality pins the clause
       // semantics end to end, inserted keys exactly once.
-      val wh = catRoot(s, "g192", "graft_rl_q")
-      Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
-        col("o_orderpriority"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-        .createOrReplaceTempView("g192_src")
-      s.sql("DROP TABLE IF EXISTS g192.book")
-      s.sql("CREATE TABLE g192.book AS SELECT * FROM g192_src")
-      s.sql("""UPDATE g192.book SET cents = cents + 99
-              |WHERE o_orderkey % 6 = 1
-              |  AND o_orderpriority = '1-URGENT'""".stripMargin)
-      s.sql("""MERGE INTO g192.book t
-              |USING (SELECT o_orderkey, o_custkey, o_orderpriority,
-              |              cents - 77 AS cents
-              |       FROM g192_src WHERE o_orderkey % 9 = 2
-              |       UNION ALL
-              |       SELECT o_orderkey + 407000000, o_custkey,
-              |              '9-FEED' AS o_orderpriority, cents
-              |       FROM g192_src WHERE o_orderkey % 9 = 5) s
-              |ON t.o_orderkey = s.o_orderkey
-              |WHEN MATCHED THEN UPDATE SET cents = s.cents,
-              |  o_orderpriority = s.o_orderpriority
-              |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-      val out = s.sql(
-        """SELECT o_custkey AS custkey, o_orderpriority AS prio,
-          |  CAST(count(*) AS BIGINT) AS n, sum(cents) AS cents
-          |FROM g192.book WHERE o_custkey % 10 = 3
-          |GROUP BY o_custkey, o_orderpriority""".stripMargin)
-      core.Materialize.detached(out) {
+      lakeScope(s, "g192", "graft_rl_q", "book") { _ =>
+        Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
+          col("o_orderpriority"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+          .createOrReplaceTempView("g192_src")
         s.sql("DROP TABLE IF EXISTS g192.book")
-        new org.apache.hadoop.fs.Path(wh)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(wh), true)
-        ()
-      }
+        s.sql("CREATE TABLE g192.book AS SELECT * FROM g192_src")
+        s.sql("""UPDATE g192.book SET cents = cents + 99
+                |WHERE o_orderkey % 6 = 1
+                |  AND o_orderpriority = '1-URGENT'""".stripMargin)
+        s.sql("""MERGE INTO g192.book t
+                |USING (SELECT o_orderkey, o_custkey, o_orderpriority,
+                |              cents - 77 AS cents
+                |       FROM g192_src WHERE o_orderkey % 9 = 2
+                |       UNION ALL
+                |       SELECT o_orderkey + 407000000, o_custkey,
+                |              '9-FEED' AS o_orderpriority, cents
+                |       FROM g192_src WHERE o_orderkey % 9 = 5) s
+                |ON t.o_orderkey = s.o_orderkey
+                |WHEN MATCHED THEN UPDATE SET cents = s.cents,
+                |  o_orderpriority = s.o_orderpriority
+                |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+        s.sql(
+          """SELECT o_custkey AS custkey, o_orderpriority AS prio,
+            |  CAST(count(*) AS BIGINT) AS n, sum(cents) AS cents
+            |FROM g192.book WHERE o_custkey % 10 = 3
+            |GROUP BY o_custkey, o_orderpriority""".stripMargin)
+      }()
     }),
 
     // ---- T97: field-id schema evolution (rename/drop/re-add) ------------
@@ -2538,39 +2476,33 @@ object RelEntry {
       // UPDATE whose predicate spans all three file generations. The
       // oracle replays the lifecycle relationally; hash equality pins
       // id-resolution end to end.
-      val wh = catRoot(s, "g193", "graft_fid_q")
-      Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-        .createOrReplaceTempView("g193_src")
-      s.sql("DROP TABLE IF EXISTS g193.t")
-      s.sql("""CREATE TABLE g193.t AS
-              |SELECT o_orderkey AS k, o_custkey AS c, cents,
-              |       o_orderkey % 7 AS flag
-              |FROM g193_src WHERE o_orderkey % 3 < 2""".stripMargin)
-      s.sql("ALTER TABLE g193.t RENAME COLUMN cents TO amount")
-      s.sql("""INSERT INTO g193.t
-              |SELECT o_orderkey + 507000000, o_custkey, cents,
-              |       o_orderkey % 7
-              |FROM g193_src WHERE o_orderkey % 10 = 4""".stripMargin)
-      s.sql("ALTER TABLE g193.t DROP COLUMN flag")
-      s.sql("ALTER TABLE g193.t ADD COLUMNS (flag BIGINT)")
-      s.sql("""INSERT INTO g193.t
-              |SELECT o_orderkey + 607000000, o_custkey, cents + 5,
-              |       CAST(1 AS BIGINT)
-              |FROM g193_src WHERE o_orderkey % 10 = 6""".stripMargin)
-      s.sql("UPDATE g193.t SET amount = amount + 7 WHERE k % 11 = 3")
-      val out = s.sql(
-        """SELECT c AS custkey, CAST(count(*) AS BIGINT) AS n,
-          |  sum(amount) AS amt, CAST(count(flag) AS BIGINT) AS n_flag
-          |FROM g193.t WHERE c % 10 = 3
-          |GROUP BY c""".stripMargin)
-      core.Materialize.detached(out) {
+      lakeScope(s, "g193", "graft_fid_q", "t") { _ =>
+        Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+          .createOrReplaceTempView("g193_src")
         s.sql("DROP TABLE IF EXISTS g193.t")
-        new org.apache.hadoop.fs.Path(wh)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(wh), true)
-        ()
-      }
+        s.sql("""CREATE TABLE g193.t AS
+                |SELECT o_orderkey AS k, o_custkey AS c, cents,
+                |       o_orderkey % 7 AS flag
+                |FROM g193_src WHERE o_orderkey % 3 < 2""".stripMargin)
+        s.sql("ALTER TABLE g193.t RENAME COLUMN cents TO amount")
+        s.sql("""INSERT INTO g193.t
+                |SELECT o_orderkey + 507000000, o_custkey, cents,
+                |       o_orderkey % 7
+                |FROM g193_src WHERE o_orderkey % 10 = 4""".stripMargin)
+        s.sql("ALTER TABLE g193.t DROP COLUMN flag")
+        s.sql("ALTER TABLE g193.t ADD COLUMNS (flag BIGINT)")
+        s.sql("""INSERT INTO g193.t
+                |SELECT o_orderkey + 607000000, o_custkey, cents + 5,
+                |       CAST(1 AS BIGINT)
+                |FROM g193_src WHERE o_orderkey % 10 = 6""".stripMargin)
+        s.sql("UPDATE g193.t SET amount = amount + 7 WHERE k % 11 = 3")
+        s.sql(
+          """SELECT c AS custkey, CAST(count(*) AS BIGINT) AS n,
+            |  sum(amount) AS amt, CAST(count(flag) AS BIGINT) AS n_flag
+            |FROM g193.t WHERE c % 10 = 3
+            |GROUP BY c""".stripMargin)
+      }()
     }),
 
     // ---- T98: branch refs / write-audit-publish --------------------------
@@ -2584,45 +2516,40 @@ object RelEntry {
       // absence and the staged feed's presence are both part of the
       // oracle-checked result, not just spec assertions.
       import graft.sources.ManifestedTable
-      val dir = java.nio.file.Files.createTempDirectory("graft_wap_q").toString
-      val book = Tables.orders(s, d).select(
-        col("o_orderkey").as("k"), col("o_custkey").as("c"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-      ManifestedTable.write(
-        book.filter(col("k") % 3 < 2).repartitionByRange(8, col("k")), dir)
-      val mainV = ManifestedTable.currentVersion(s, dir)
-      // WRITE: stage the audited feed on a branch — main stays dark
-      val feedA = book.filter(col("k") % 10 === 1)
-        .select((col("k") + 707000000L).as("k"), col("c"),
-          (col("cents") + 3L).as("cents"))
-      ManifestedTable.writeBranch(feedA, dir, "incoming")
-      require(ManifestedTable.currentVersion(s, dir) == mainV,
-        "a staged branch commit moved the main version")
-      // AUDIT: quality gate over the branch head
-      require(ManifestedTable.readBranch(s, dir, "incoming")
-        .filter(col("cents") <= 0L).isEmpty, "feed A failed its audit")
-      // a SUSPECT feed fails the same gate and is dropped, not merged
-      val feedB = book.filter(col("k") % 10 === 2)
-        .select((col("k") + 807000000L).as("k"), col("c"),
-          lit(-1L).as("cents"))
-      ManifestedTable.writeBranch(feedB, dir, "suspect")
-      require(!ManifestedTable.readBranch(s, dir, "suspect")
-        .filter(col("cents") <= 0L).isEmpty,
-        "the suspect feed should fail the audit")
-      ManifestedTable.dropBranch(s, dir, "suspect")
-      // PUBLISH: one atomic fast-forward promote
-      ManifestedTable.promoteBranch(s, dir, "incoming")
-      val out = ManifestedTable.read(s, dir)
-        .filter(col("c") % 10 === 3)
-        .groupBy(col("c").as("custkey"))
-        .agg(count(lit(1)).cast("long").as("n"),
-          sum(col("cents")).as("cents_sum"))
-      core.Materialize.detached(out) {
-        new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(dir), true)
-        ()
-      }
+      core.Materialize.scratch(s, "graft_wap_q") { case Seq(dir) =>
+        val book = Tables.orders(s, d).select(
+          col("o_orderkey").as("k"), col("o_custkey").as("c"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+        ManifestedTable.write(
+          book.filter(col("k") % 3 < 2).repartitionByRange(8, col("k")), dir)
+        val mainV = ManifestedTable.currentVersion(s, dir)
+        // WRITE: stage the audited feed on a branch — main stays dark
+        val feedA = book.filter(col("k") % 10 === 1)
+          .select((col("k") + 707000000L).as("k"), col("c"),
+            (col("cents") + 3L).as("cents"))
+        ManifestedTable.writeBranch(feedA, dir, "incoming")
+        require(ManifestedTable.currentVersion(s, dir) == mainV,
+          "a staged branch commit moved the main version")
+        // AUDIT: quality gate over the branch head
+        require(ManifestedTable.readBranch(s, dir, "incoming")
+          .filter(col("cents") <= 0L).isEmpty, "feed A failed its audit")
+        // a SUSPECT feed fails the same gate and is dropped, not merged
+        val feedB = book.filter(col("k") % 10 === 2)
+          .select((col("k") + 807000000L).as("k"), col("c"),
+            lit(-1L).as("cents"))
+        ManifestedTable.writeBranch(feedB, dir, "suspect")
+        require(!ManifestedTable.readBranch(s, dir, "suspect")
+          .filter(col("cents") <= 0L).isEmpty,
+          "the suspect feed should fail the audit")
+        ManifestedTable.dropBranch(s, dir, "suspect")
+        // PUBLISH: one atomic fast-forward promote
+        ManifestedTable.promoteBranch(s, dir, "incoming")
+        ManifestedTable.read(s, dir)
+          .filter(col("c") % 10 === 3)
+          .groupBy(col("c").as("custkey"))
+          .agg(count(lit(1)).cast("long").as("n"),
+            sum(col("cents")).as("cents_sum"))
+      }()
     }),
 
     // ---- T115: cherry-pick -------------------------------------------------
@@ -2639,53 +2566,50 @@ object RelEntry {
       // restart) is pinned in EqualityDeleteSpec; absorb-by-compact
       // equivalence is asserted inline here.
       import graft.sources.ManifestedTable
-      val wh = catRoot(s, "g207", "graft_eq_q")
-      Tables.orders(s, d).select(col("o_orderkey").as("k"),
-        col("o_custkey").as("c"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-        .createOrReplaceTempView("g207_src")
-      s.sql("DROP TABLE IF EXISTS g207.t")
-      s.sql("CREATE TABLE g207.t (k BIGINT, c BIGINT, cents BIGINT)")
-      val dir = s"$wh/t"
-      s.sql("""INSERT INTO g207.t
-              |SELECT k, c, cents FROM g207_src WHERE k % 3 < 2""".stripMargin)
-      // CDC batch 1 through the WRITER face (upsertKeys +
-      // cdcTypeColumn): upserts for k%10=4, deletes for k%13=5 —
-      // an upsert and a delete of the SAME key in one batch resolves
-      // to the upsert (the batch's own rows are never masked)
-      val src = s.table("g207_src")
-      val cdc = src.filter(col("k") % 10 === 4)
-        .select(col("k"), col("c"), (col("cents") + 9).as("cents"))
-        .withColumn("op", lit("U"))
-        .unionByName(src.filter(col("k") % 13 === 5)
-          .select(col("k"), lit(null).cast("bigint").as("c"),
-            lit(null).cast("bigint").as("cents"),
-            lit("D").as("op")))
-      cdc.write.format("graft-manifest")
-        .option("upsertKeys", "k").option("cdcTypeColumn", "op")
-        .mode("append").save(dir)
-      // CDC batch 2 through the OBJECT face: re-insert half the
-      // deleted keys with a sentinel payload
-      ManifestedTable.eqUpsert(s, dir,
-        src.filter(col("k") % 13 === 5 && col("k") % 2 === 0)
-          .select(col("k"), col("c"), lit(77777L).as("cents")),
-        Seq("k"))
-      val out = s.sql(
-        """SELECT c % 25 AS grp, CAST(count(*) AS BIGINT) AS n,
-          |  CAST(sum(cents) AS BIGINT) AS cents_sum
-          |FROM g207.t
-          |GROUP BY c % 25""".stripMargin)
-      core.Materialize.detached(out) {
+      // the table path, for the compact in the release below (catRoot
+      // is stable per session, so lakeScope owns this same root)
+      val dir = s"${catRoot(s, "g207", "graft_eq_q")}/t"
+      lakeScope(s, "g207", "graft_eq_q", "t") { _ =>
+        Tables.orders(s, d).select(col("o_orderkey").as("k"),
+          col("o_custkey").as("c"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+          .createOrReplaceTempView("g207_src")
+        s.sql("DROP TABLE IF EXISTS g207.t")
+        s.sql("CREATE TABLE g207.t (k BIGINT, c BIGINT, cents BIGINT)")
+        s.sql("""INSERT INTO g207.t
+                |SELECT k, c, cents FROM g207_src WHERE k % 3 < 2""".stripMargin)
+        // CDC batch 1 through the WRITER face (upsertKeys +
+        // cdcTypeColumn): upserts for k%10=4, deletes for k%13=5 —
+        // an upsert and a delete of the SAME key in one batch resolves
+        // to the upsert (the batch's own rows are never masked)
+        val src = s.table("g207_src")
+        val cdc = src.filter(col("k") % 10 === 4)
+          .select(col("k"), col("c"), (col("cents") + 9).as("cents"))
+          .withColumn("op", lit("U"))
+          .unionByName(src.filter(col("k") % 13 === 5)
+            .select(col("k"), lit(null).cast("bigint").as("c"),
+              lit(null).cast("bigint").as("cents"),
+              lit("D").as("op")))
+        cdc.write.format("graft-manifest")
+          .option("upsertKeys", "k").option("cdcTypeColumn", "op")
+          .mode("append").save(dir)
+        // CDC batch 2 through the OBJECT face: re-insert half the
+        // deleted keys with a sentinel payload
+        ManifestedTable.eqUpsert(s, dir,
+          src.filter(col("k") % 13 === 5 && col("k") % 2 === 0)
+            .select(col("k"), col("c"), lit(77777L).as("cents")),
+          Seq("k"))
+        s.sql(
+          """SELECT c % 25 AS grp, CAST(count(*) AS BIGINT) AS n,
+            |  CAST(sum(cents) AS BIGINT) AS cents_sum
+            |FROM g207.t
+            |GROUP BY c % 25""".stripMargin)
+      } {
         // absorb-by-compact must preserve the masked content exactly
         val masked = s.table("g207.t").count()
         ManifestedTable.compact(s, dir, 1L << 30)
         require(s.table("g207.t").count() == masked,
           "compact absorb changed the eq-masked row count")
-        s.sql("DROP TABLE IF EXISTS g207.t")
-        new org.apache.hadoop.fs.Path(wh)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(wh), true)
-        ()
       }
     }),
 
@@ -2699,34 +2623,28 @@ object RelEntry {
       // only the deterministic facts: row counts, distinct-id counts
       // (= row counts iff no collision), and the generated column's
       // arithmetic.
-      val wh = catRoot(s, "g206", "graft_idc_q")
-      Tables.orders(s, d).select(col("o_orderkey").as("k"),
-        col("o_custkey").as("c"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-        .createOrReplaceTempView("g206_src")
-      s.sql("DROP TABLE IF EXISTS g206.t")
-      s.sql("""CREATE TABLE g206.t (
-              |  id BIGINT GENERATED ALWAYS AS IDENTITY,
-              |  k BIGINT, c BIGINT, cents BIGINT,
-              |  mag BIGINT GENERATED ALWAYS AS (cents % 97))""".stripMargin)
-      s.sql("""INSERT INTO g206.t (k, c, cents)
-              |SELECT k, c, cents FROM g206_src WHERE k % 3 < 2""".stripMargin)
-      s.sql("""INSERT INTO g206.t (k, c, cents)
-              |SELECT k + 507000000, c, cents + 9 FROM g206_src
-              |WHERE k % 10 = 4""".stripMargin)
-      val out = s.sql(
-        """SELECT c % 25 AS grp, CAST(count(*) AS BIGINT) AS n,
-          |  CAST(count(DISTINCT id) AS BIGINT) AS n_ids,
-          |  CAST(sum(mag) AS BIGINT) AS mag_sum
-          |FROM g206.t
-          |GROUP BY c % 25""".stripMargin)
-      core.Materialize.detached(out) {
+      lakeScope(s, "g206", "graft_idc_q", "t") { _ =>
+        Tables.orders(s, d).select(col("o_orderkey").as("k"),
+          col("o_custkey").as("c"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+          .createOrReplaceTempView("g206_src")
         s.sql("DROP TABLE IF EXISTS g206.t")
-        new org.apache.hadoop.fs.Path(wh)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(wh), true)
-        ()
-      }
+        s.sql("""CREATE TABLE g206.t (
+                |  id BIGINT GENERATED ALWAYS AS IDENTITY,
+                |  k BIGINT, c BIGINT, cents BIGINT,
+                |  mag BIGINT GENERATED ALWAYS AS (cents % 97))""".stripMargin)
+        s.sql("""INSERT INTO g206.t (k, c, cents)
+                |SELECT k, c, cents FROM g206_src WHERE k % 3 < 2""".stripMargin)
+        s.sql("""INSERT INTO g206.t (k, c, cents)
+                |SELECT k + 507000000, c, cents + 9 FROM g206_src
+                |WHERE k % 10 = 4""".stripMargin)
+        s.sql(
+          """SELECT c % 25 AS grp, CAST(count(*) AS BIGINT) AS n,
+            |  CAST(count(DISTINCT id) AS BIGINT) AS n_ids,
+            |  CAST(sum(mag) AS BIGINT) AS mag_sum
+            |FROM g206.t
+            |GROUP BY c % 25""".stripMargin)
+      }()
     }),
 
     // ---- T116: storage-partitioned join ----------------------------------
@@ -2741,36 +2659,36 @@ object RelEntry {
       // the scale-representative path (StoragePartitionedJoinSpec pins
       // the no-Exchange plan; this entry pins the RESULT against a
       // relational replay — co-location must be semantically invisible).
-      val wh = catRoot(s, "g205", "graft_spj_q")
-      Tables.orders(s, d).select(col("o_orderkey").as("k"),
-        col("o_custkey").as("c"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-        .createOrReplaceTempView("g205_ord")
-      Tables.lineitem(s, d).select(col("l_orderkey").as("k"),
-        expr("CAST(l_quantity AS BIGINT)").as("qty"))
-        .createOrReplaceTempView("g205_li")
-      s.sql("DROP TABLE IF EXISTS g205.fo")
-      s.sql("DROP TABLE IF EXISTS g205.fl")
-      s.sql("""CREATE TABLE g205.fo (k BIGINT, c BIGINT, cents BIGINT)
-              |PARTITIONED BY (bucket(8, k))""".stripMargin)
-      s.sql("""CREATE TABLE g205.fl (k BIGINT, qty BIGINT)
-              |PARTITIONED BY (bucket(8, k))""".stripMargin)
-      // two commits per side → several files per bucket: the exec
-      // must fuse same-key FILES, not assume one file per key
-      s.sql("INSERT INTO g205.fo SELECT * FROM g205_ord WHERE k % 2 = 0")
-      s.sql("INSERT INTO g205.fo SELECT * FROM g205_ord WHERE k % 2 = 1")
-      s.sql("INSERT INTO g205.fl SELECT * FROM g205_li WHERE k % 2 = 0")
-      s.sql("INSERT INTO g205.fl SELECT * FROM g205_li WHERE k % 2 = 1")
       val savedB = s.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      val out = s.sql(
-        """SELECT fo.c AS custkey, CAST(count(*) AS BIGINT) AS n,
-          |  CAST(sum(fo.cents + fl.qty) AS BIGINT) AS v
-          |FROM g205.fo fo JOIN g205.fl fl ON fo.k = fl.k
-          |WHERE fo.c % 7 = 2
-          |GROUP BY fo.c""".stripMargin)
-      core.Materialize.detached(out) {
+      lakeScope(s, "g205", "graft_spj_q", "fo", "fl") { _ =>
+        Tables.orders(s, d).select(col("o_orderkey").as("k"),
+          col("o_custkey").as("c"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+          .createOrReplaceTempView("g205_ord")
+        Tables.lineitem(s, d).select(col("l_orderkey").as("k"),
+          expr("CAST(l_quantity AS BIGINT)").as("qty"))
+          .createOrReplaceTempView("g205_li")
+        s.sql("DROP TABLE IF EXISTS g205.fo")
+        s.sql("DROP TABLE IF EXISTS g205.fl")
+        s.sql("""CREATE TABLE g205.fo (k BIGINT, c BIGINT, cents BIGINT)
+                |PARTITIONED BY (bucket(8, k))""".stripMargin)
+        s.sql("""CREATE TABLE g205.fl (k BIGINT, qty BIGINT)
+                |PARTITIONED BY (bucket(8, k))""".stripMargin)
+        // two commits per side → several files per bucket: the exec
+        // must fuse same-key FILES, not assume one file per key
+        s.sql("INSERT INTO g205.fo SELECT * FROM g205_ord WHERE k % 2 = 0")
+        s.sql("INSERT INTO g205.fo SELECT * FROM g205_ord WHERE k % 2 = 1")
+        s.sql("INSERT INTO g205.fl SELECT * FROM g205_li WHERE k % 2 = 0")
+        s.sql("INSERT INTO g205.fl SELECT * FROM g205_li WHERE k % 2 = 1")
+        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+        s.sql(
+          """SELECT fo.c AS custkey, CAST(count(*) AS BIGINT) AS n,
+            |  CAST(sum(fo.cents + fl.qty) AS BIGINT) AS v
+            |FROM g205.fo fo JOIN g205.fl fl ON fo.k = fl.k
+            |WHERE fo.c % 7 = 2
+            |GROUP BY fo.c""".stripMargin)
+      } {
         savedB match {
           case Some(v) =>
             s.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
@@ -2778,12 +2696,6 @@ object RelEntry {
             s.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         }
         s.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        s.sql("DROP TABLE IF EXISTS g205.fo")
-        s.sql("DROP TABLE IF EXISTS g205.fl")
-        new org.apache.hadoop.fs.Path(wh)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(wh), true)
-        ()
       }
     }),
 
@@ -2795,39 +2707,33 @@ object RelEntry {
       // by reference. The oracle contains feed A and not feed B: a
       // leak either way hash-mismatches.
       import graft.sources.ManifestedTable
-      val wh = catRoot(s, "g204", "graft_cp_q")
-      val book = Tables.orders(s, d).select(col("o_orderkey").as("k"),
-        col("o_custkey").as("c"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-      book.createOrReplaceTempView("g204_src")
-      s.sql("DROP TABLE IF EXISTS g204.t")
-      s.sql("""CREATE TABLE g204.t AS
-              |SELECT k, c, cents FROM g204_src WHERE k % 3 < 2""".stripMargin)
-      val dir = s"$wh/t"
-      ManifestedTable.writeBranch(
-        book.filter(col("k") % 10 === 4)
-          .select((col("k") + 507000000L).as("k"), col("c"),
-            (col("cents") + 1L).as("cents")), dir, "stage")
-      val vA = ManifestedTable.branches(s, dir)
-        .find(_._1 == "stage").get._2
-      ManifestedTable.writeBranch(
-        book.filter(col("k") % 10 === 6)
-          .select((col("k") + 607000000L).as("k"), col("c"),
-            lit(-1L).as("cents")), dir, "stage")
-      ManifestedTable.dropBranch(s, dir, "stage")
-      s.sql(s"CALL g204.system.cherrypick('t', $vA)")
-      val out = s.sql(
-        """SELECT c AS custkey, CAST(count(*) AS BIGINT) AS n,
-          |  CAST(sum(cents) AS BIGINT) AS cents_sum
-          |FROM g204.t WHERE c % 10 = 3
-          |GROUP BY c""".stripMargin)
-      core.Materialize.detached(out) {
+      lakeScope(s, "g204", "graft_cp_q", "t") { wh =>
+        val book = Tables.orders(s, d).select(col("o_orderkey").as("k"),
+          col("o_custkey").as("c"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+        book.createOrReplaceTempView("g204_src")
         s.sql("DROP TABLE IF EXISTS g204.t")
-        new org.apache.hadoop.fs.Path(wh)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(wh), true)
-        ()
-      }
+        s.sql("""CREATE TABLE g204.t AS
+                |SELECT k, c, cents FROM g204_src WHERE k % 3 < 2""".stripMargin)
+        val dir = s"$wh/t"
+        ManifestedTable.writeBranch(
+          book.filter(col("k") % 10 === 4)
+            .select((col("k") + 507000000L).as("k"), col("c"),
+              (col("cents") + 1L).as("cents")), dir, "stage")
+        val vA = ManifestedTable.branches(s, dir)
+          .find(_._1 == "stage").get._2
+        ManifestedTable.writeBranch(
+          book.filter(col("k") % 10 === 6)
+            .select((col("k") + 607000000L).as("k"), col("c"),
+              lit(-1L).as("cents")), dir, "stage")
+        ManifestedTable.dropBranch(s, dir, "stage")
+        s.sql(s"CALL g204.system.cherrypick('t', $vA)")
+        s.sql(
+          """SELECT c AS custkey, CAST(count(*) AS BIGINT) AS n,
+            |  CAST(sum(cents) AS BIGINT) AS cents_sum
+            |FROM g204.t WHERE c % 10 = 3
+            |GROUP BY c""".stripMargin)
+      }()
     }),
 
     // ---- T114: catalog SQL views -------------------------------------------
@@ -2838,34 +2744,29 @@ object RelEntry {
       // resolution rule); a later INSERT shows through (text binding,
       // not snapshot), and a view composes over another view. The
       // oracle replays the final text against the final data.
-      val wh = catRoot(s, "g203", "graft_vw_q")
-      Tables.orders(s, d).select(col("o_orderkey").as("k"),
-        col("o_custkey").as("c"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-        .createOrReplaceTempView("g203_src")
-      s.sql("DROP TABLE IF EXISTS g203.t")
-      s.sql("""CREATE TABLE g203.t AS
-              |SELECT k, c, cents FROM g203_src WHERE k % 3 < 2""".stripMargin)
-      s.sql("""CALL g203.system.create_view('by_cust',
-              |  'SELECT c, count(*) AS n, sum(cents) AS cents_sum
-              |   FROM g203.t GROUP BY c', false)""".stripMargin)
-      s.sql("""INSERT INTO g203.t
-              |SELECT k + 507000000, c, cents + 1 FROM g203_src
-              |WHERE k % 10 = 4""".stripMargin)
-      s.sql("""CALL g203.system.create_view('big',
-              |  'SELECT * FROM g203.by_cust WHERE n >= 5', false)""".stripMargin)
-      val out = s.sql(
-        """SELECT c AS custkey, CAST(n AS BIGINT) AS n,
-          |  CAST(cents_sum AS BIGINT) AS cents_sum
-          |FROM g203.big WHERE c % 10 = 3""".stripMargin)
-      core.Materialize.detached(out) {
+      lakeScope(s, "g203", "graft_vw_q", "t") { _ =>
+        Tables.orders(s, d).select(col("o_orderkey").as("k"),
+          col("o_custkey").as("c"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+          .createOrReplaceTempView("g203_src")
+        s.sql("DROP TABLE IF EXISTS g203.t")
+        s.sql("""CREATE TABLE g203.t AS
+                |SELECT k, c, cents FROM g203_src WHERE k % 3 < 2""".stripMargin)
+        s.sql("""CALL g203.system.create_view('by_cust',
+                |  'SELECT c, count(*) AS n, sum(cents) AS cents_sum
+                |   FROM g203.t GROUP BY c', false)""".stripMargin)
+        s.sql("""INSERT INTO g203.t
+                |SELECT k + 507000000, c, cents + 1 FROM g203_src
+                |WHERE k % 10 = 4""".stripMargin)
+        s.sql("""CALL g203.system.create_view('big',
+                |  'SELECT * FROM g203.by_cust WHERE n >= 5', false)""".stripMargin)
+        s.sql(
+          """SELECT c AS custkey, CAST(n AS BIGINT) AS n,
+            |  CAST(cents_sum AS BIGINT) AS cents_sum
+            |FROM g203.big WHERE c % 10 = 3""".stripMargin)
+      } {
         s.sql("CALL g203.system.drop_view('big')")
         s.sql("CALL g203.system.drop_view('by_cust')")
-        s.sql("DROP TABLE IF EXISTS g203.t")
-        new org.apache.hadoop.fs.Path(wh)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(wh), true)
-        ()
       }
     }),
 
@@ -2878,40 +2779,34 @@ object RelEntry {
       // IN the result and hash-mismatch; if the rejection were
       // non-atomic, a partial batch would. The oracle replays only
       // what must have landed.
-      val wh = catRoot(s, "g202", "graft_ck_q")
-      Tables.orders(s, d).select(col("o_orderkey").as("k"),
-        col("o_custkey").as("c"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-        .createOrReplaceTempView("g202_src")
-      s.sql("DROP TABLE IF EXISTS g202.t")
-      s.sql("""CREATE TABLE g202.t (k BIGINT, c BIGINT, cents BIGINT,
-              |  CONSTRAINT cents_pos CHECK (cents >= 0))""".stripMargin)
-      s.sql("""INSERT INTO g202.t
-              |SELECT k, c, cents FROM g202_src WHERE k % 3 < 2""".stripMargin)
-      // the violating feed throws — and must land NOTHING
-      val rejected = scala.util.Try(s.sql(
-        """INSERT INTO g202.t
-          |SELECT k + 507000000, c, -cents - 1 FROM g202_src
-          |WHERE k % 10 = 4""".stripMargin)).isFailure
-      require(rejected, "a CHECK-violating INSERT was accepted")
-      s.sql("ALTER TABLE g202.t DROP CONSTRAINT cents_pos")
-      s.sql("""INSERT INTO g202.t
-              |SELECT k + 607000000, c, -cents - 1 FROM g202_src
-              |WHERE k % 10 = 6""".stripMargin)
-      val out = s.sql(
-        """SELECT c AS custkey, CAST(count(*) AS BIGINT) AS n,
-          |  CAST(sum(cents) AS BIGINT) AS cents_sum,
-          |  CAST(count(CASE WHEN cents < 0 THEN 1 END) AS BIGINT)
-          |    AS n_neg
-          |FROM g202.t WHERE c % 10 = 3
-          |GROUP BY c""".stripMargin)
-      core.Materialize.detached(out) {
+      lakeScope(s, "g202", "graft_ck_q", "t") { _ =>
+        Tables.orders(s, d).select(col("o_orderkey").as("k"),
+          col("o_custkey").as("c"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+          .createOrReplaceTempView("g202_src")
         s.sql("DROP TABLE IF EXISTS g202.t")
-        new org.apache.hadoop.fs.Path(wh)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(wh), true)
-        ()
-      }
+        s.sql("""CREATE TABLE g202.t (k BIGINT, c BIGINT, cents BIGINT,
+                |  CONSTRAINT cents_pos CHECK (cents >= 0))""".stripMargin)
+        s.sql("""INSERT INTO g202.t
+                |SELECT k, c, cents FROM g202_src WHERE k % 3 < 2""".stripMargin)
+        // the violating feed throws — and must land NOTHING
+        val rejected = scala.util.Try(s.sql(
+          """INSERT INTO g202.t
+            |SELECT k + 507000000, c, -cents - 1 FROM g202_src
+            |WHERE k % 10 = 4""".stripMargin)).isFailure
+        require(rejected, "a CHECK-violating INSERT was accepted")
+        s.sql("ALTER TABLE g202.t DROP CONSTRAINT cents_pos")
+        s.sql("""INSERT INTO g202.t
+                |SELECT k + 607000000, c, -cents - 1 FROM g202_src
+                |WHERE k % 10 = 6""".stripMargin)
+        s.sql(
+          """SELECT c AS custkey, CAST(count(*) AS BIGINT) AS n,
+            |  CAST(sum(cents) AS BIGINT) AS cents_sum,
+            |  CAST(count(CASE WHEN cents < 0 THEN 1 END) AS BIGINT)
+            |    AS n_neg
+            |FROM g202.t WHERE c % 10 = 3
+            |GROUP BY c""".stripMargin)
+      }()
     }),
 
     // ---- T112: column default values ---------------------------------------
@@ -2924,36 +2819,30 @@ object RelEntry {
       // rewrite; a CoW UPDATE rewrites files across all generations
       // and the defaulted values must survive it. The oracle replays
       // the lifecycle with the defaults spelled explicitly.
-      val wh = catRoot(s, "g201", "graft_df_q")
-      Tables.orders(s, d).select(col("o_orderkey").as("k"),
-        col("o_custkey").as("c"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-        .createOrReplaceTempView("g201_src")
-      s.sql("DROP TABLE IF EXISTS g201.t")
-      s.sql("""CREATE TABLE g201.t (k BIGINT, c BIGINT, cents BIGINT,
-              |  v STRING DEFAULT 'seed')""".stripMargin)
-      s.sql("""INSERT INTO g201.t (k, c, cents)
-              |SELECT k, c, cents FROM g201_src WHERE k % 3 < 2""".stripMargin)
-      s.sql("ALTER TABLE g201.t ADD COLUMN tag STRING DEFAULT 'legacy'")
-      s.sql("""INSERT INTO g201.t
-              |SELECT k + 507000000, c, cents + 1, 'new', 'fresh'
-              |FROM g201_src WHERE k % 10 = 4""".stripMargin)
-      s.sql("ALTER TABLE g201.t ALTER COLUMN tag SET DEFAULT 'cur'")
-      s.sql("""INSERT INTO g201.t (k, c, cents, v)
-              |SELECT k + 607000000, c, cents, 'x'
-              |FROM g201_src WHERE k % 10 = 6""".stripMargin)
-      s.sql("UPDATE g201.t SET cents = cents + 5 WHERE c % 11 = 3")
-      val out = s.sql(
-        """SELECT tag, v, CAST(count(*) AS BIGINT) AS n,
-          |  CAST(sum(cents) AS BIGINT) AS cents_sum
-          |FROM g201.t GROUP BY tag, v""".stripMargin)
-      core.Materialize.detached(out) {
+      lakeScope(s, "g201", "graft_df_q", "t") { _ =>
+        Tables.orders(s, d).select(col("o_orderkey").as("k"),
+          col("o_custkey").as("c"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+          .createOrReplaceTempView("g201_src")
         s.sql("DROP TABLE IF EXISTS g201.t")
-        new org.apache.hadoop.fs.Path(wh)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(wh), true)
-        ()
-      }
+        s.sql("""CREATE TABLE g201.t (k BIGINT, c BIGINT, cents BIGINT,
+                |  v STRING DEFAULT 'seed')""".stripMargin)
+        s.sql("""INSERT INTO g201.t (k, c, cents)
+                |SELECT k, c, cents FROM g201_src WHERE k % 3 < 2""".stripMargin)
+        s.sql("ALTER TABLE g201.t ADD COLUMN tag STRING DEFAULT 'legacy'")
+        s.sql("""INSERT INTO g201.t
+                |SELECT k + 507000000, c, cents + 1, 'new', 'fresh'
+                |FROM g201_src WHERE k % 10 = 4""".stripMargin)
+        s.sql("ALTER TABLE g201.t ALTER COLUMN tag SET DEFAULT 'cur'")
+        s.sql("""INSERT INTO g201.t (k, c, cents, v)
+                |SELECT k + 607000000, c, cents, 'x'
+                |FROM g201_src WHERE k % 10 = 6""".stripMargin)
+        s.sql("UPDATE g201.t SET cents = cents + 5 WHERE c % 11 = 3")
+        s.sql(
+          """SELECT tag, v, CAST(count(*) AS BIGINT) AS n,
+            |  CAST(sum(cents) AS BIGINT) AS cents_sum
+            |FROM g201.t GROUP BY tag, v""".stripMargin)
+      }()
     }),
 
     // ---- T109: change data feed (readChangeFeed) ---------------------------
@@ -2966,34 +2855,28 @@ object RelEntry {
       // include-mask (new DV minus old) surfaces exactly each commit's
       // victims, never re-delivering the file. The oracle replays
       // every commit relationally with literal versions.
-      val wh = catRoot(s, "g199", "graft_cf_q")
-      Tables.orders(s, d).select(col("o_orderkey").as("k"),
-        col("o_custkey").as("c"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-        .createOrReplaceTempView("g199_src")
-      s.sql("DROP TABLE IF EXISTS g199.t")
-      s.sql("""CREATE TABLE g199.t
-              |TBLPROPERTIES ('graft.dv-max-fraction' = '1.0') AS
-              |SELECT k, c, cents FROM g199_src WHERE k % 3 < 2""".stripMargin)
-      s.sql("""INSERT INTO g199.t
-              |SELECT k + 507000000, c, cents + 1 FROM g199_src
-              |WHERE k % 10 = 4""".stripMargin)
-      s.sql("DELETE FROM g199.t WHERE c % 13 = 5")
-      s.sql("DELETE FROM g199.t WHERE c % 13 = 6")
-      val out = s.read.format("graft-manifest")
-        .option("readChangeFeed", "true").option("startingVersion", "0")
-        .load(s"$wh/t")
-        .groupBy(col("_change_type").as("ctype"),
-          col("_commit_version").cast("long").as("v"))
-        .agg(count(lit(1)).cast("long").as("n"),
-          sum(col("cents")).cast("long").as("cents_sum"))
-      core.Materialize.detached(out) {
+      lakeScope(s, "g199", "graft_cf_q", "t") { wh =>
+        Tables.orders(s, d).select(col("o_orderkey").as("k"),
+          col("o_custkey").as("c"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+          .createOrReplaceTempView("g199_src")
         s.sql("DROP TABLE IF EXISTS g199.t")
-        new org.apache.hadoop.fs.Path(wh)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(wh), true)
-        ()
-      }
+        s.sql("""CREATE TABLE g199.t
+                |TBLPROPERTIES ('graft.dv-max-fraction' = '1.0') AS
+                |SELECT k, c, cents FROM g199_src WHERE k % 3 < 2""".stripMargin)
+        s.sql("""INSERT INTO g199.t
+                |SELECT k + 507000000, c, cents + 1 FROM g199_src
+                |WHERE k % 10 = 4""".stripMargin)
+        s.sql("DELETE FROM g199.t WHERE c % 13 = 5")
+        s.sql("DELETE FROM g199.t WHERE c % 13 = 6")
+        s.read.format("graft-manifest")
+          .option("readChangeFeed", "true").option("startingVersion", "0")
+          .load(s"$wh/t")
+          .groupBy(col("_change_type").as("ctype"),
+            col("_commit_version").cast("long").as("v"))
+          .agg(count(lit(1)).cast("long").as("n"),
+            sum(col("cents")).cast("long").as("cents_sum"))
+      }()
     }),
 
     // ---- T110: metadata tables --------------------------------------------
@@ -3005,38 +2888,32 @@ object RelEntry {
       // local scan, zero data IO). The oracle recomputes every tuple
       // relationally from the raw rows — the metadata must agree with
       // the data it indexes, bit-exactly, tuple names included.
-      val wh = catRoot(s, "g200", "graft_mt_q")
-      Tables.orders(s, d).select(col("o_orderkey").as("k"),
-        col("o_custkey").as("c"), col("o_orderdate").as("dt"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-        .createOrReplaceTempView("g200_src")
-      s.sql("DROP TABLE IF EXISTS g200.t")
-      // the truncate source is BOUNDED (c % 5000 → ≤ 2 bins of 2500)
-      // so the tuple count — and with it the files-per-commit — stays
-      // scale-free: partition cardinality is a LAYOUT design choice,
-      // and an unbounded-domain transform would explode small files at
-      // 100 TB exactly like over-partitioning does on any lakehouse
-      s.sql("""CREATE TABLE g200.t (k BIGINT, c BIGINT, cm BIGINT,
-              |  dt DATE, cents BIGINT)
-              |PARTITIONED BY (months(dt), truncate(2500, cm))""".stripMargin)
-      s.sql("""INSERT INTO g200.t
-              |SELECT k, c, c % 5000, dt, cents FROM g200_src
-              |WHERE k % 3 < 2""".stripMargin)
-      s.sql("""INSERT INTO g200.t
-              |SELECT k + 507000000, c, c % 5000, date_add(dt, 40),
-              |  cents + 9
-              |FROM g200_src WHERE k % 10 = 4""".stripMargin)
-      val out = s.sql(
-        """SELECT partition AS part,
-          |  CAST(record_count AS BIGINT) AS n_rows
-          |FROM g200.t.partitions""".stripMargin)
-      core.Materialize.detached(out) {
+      lakeScope(s, "g200", "graft_mt_q", "t") { _ =>
+        Tables.orders(s, d).select(col("o_orderkey").as("k"),
+          col("o_custkey").as("c"), col("o_orderdate").as("dt"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+          .createOrReplaceTempView("g200_src")
         s.sql("DROP TABLE IF EXISTS g200.t")
-        new org.apache.hadoop.fs.Path(wh)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(wh), true)
-        ()
-      }
+        // the truncate source is BOUNDED (c % 5000 → ≤ 2 bins of 2500)
+        // so the tuple count — and with it the files-per-commit — stays
+        // scale-free: partition cardinality is a LAYOUT design choice,
+        // and an unbounded-domain transform would explode small files at
+        // 100 TB exactly like over-partitioning does on any lakehouse
+        s.sql("""CREATE TABLE g200.t (k BIGINT, c BIGINT, cm BIGINT,
+                |  dt DATE, cents BIGINT)
+                |PARTITIONED BY (months(dt), truncate(2500, cm))""".stripMargin)
+        s.sql("""INSERT INTO g200.t
+                |SELECT k, c, c % 5000, dt, cents FROM g200_src
+                |WHERE k % 3 < 2""".stripMargin)
+        s.sql("""INSERT INTO g200.t
+                |SELECT k + 507000000, c, c % 5000, date_add(dt, 40),
+                |  cents + 9
+                |FROM g200_src WHERE k % 10 = 4""".stripMargin)
+        s.sql(
+          """SELECT partition AS part,
+            |  CAST(record_count AS BIGINT) AS n_rows
+            |FROM g200.t.partitions""".stripMargin)
+      }()
     }),
 
     // ---- T108: row lineage — stable row ids -------------------------------
@@ -3051,42 +2928,36 @@ object RelEntry {
       // would change sides and the oracle — which replays the
       // lifecycle relationally and derives the flag from provenance —
       // would hash-mismatch.
-      val wh = catRoot(s, "g198", "graft_rid_q")
-      Tables.orders(s, d).select(col("o_orderkey").as("k"),
-        col("o_custkey").as("c"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-        .createOrReplaceTempView("g198_src")
-      s.sql("DROP TABLE IF EXISTS g198.t")
-      s.sql("""CREATE TABLE g198.t
-              |TBLPROPERTIES ('graft.row-lineage' = 'true') AS
-              |SELECT k, c, cents FROM g198_src WHERE k % 3 < 2""".stripMargin)
-      val v2 = graft.sources.ManifestedTable.currentVersion(s, s"$wh/t")
-      s.sql("""INSERT INTO g198.t
-              |SELECT k + 507000000, c, cents + 9 FROM g198_src
-              |WHERE k % 10 = 4""".stripMargin)
-      s.sql("UPDATE g198.t SET cents = cents + 11 WHERE k % 7 = 2")
-      s.sql("DELETE FROM g198.t WHERE c % 11 = 4")
-      graft.sources.ManifestedTable.compact(s, s"$wh/t", 1L << 30)
-      val out = s.sql(
-        s"""SELECT x.c AS custkey, CAST(count(*) AS BIGINT) AS n,
-           |  CAST(sum(CASE WHEN x.old THEN x.cents END) AS BIGINT)
-           |    AS cents_old,
-           |  CAST(count(CASE WHEN NOT x.old THEN 1 END) AS BIGINT)
-           |    AS n_new
-           |FROM (
-           |  SELECT cur.c, cur.cents, v2._row_id IS NOT NULL AS old
-           |  FROM g198.t cur
-           |  LEFT JOIN (SELECT _row_id FROM g198.t VERSION AS OF $v2) v2
-           |    ON cur._row_id = v2._row_id) x
-           |WHERE x.c % 10 = 3
-           |GROUP BY x.c""".stripMargin)
-      core.Materialize.detached(out) {
+      lakeScope(s, "g198", "graft_rid_q", "t") { wh =>
+        Tables.orders(s, d).select(col("o_orderkey").as("k"),
+          col("o_custkey").as("c"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+          .createOrReplaceTempView("g198_src")
         s.sql("DROP TABLE IF EXISTS g198.t")
-        new org.apache.hadoop.fs.Path(wh)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(wh), true)
-        ()
-      }
+        s.sql("""CREATE TABLE g198.t
+                |TBLPROPERTIES ('graft.row-lineage' = 'true') AS
+                |SELECT k, c, cents FROM g198_src WHERE k % 3 < 2""".stripMargin)
+        val v2 = graft.sources.ManifestedTable.currentVersion(s, s"$wh/t")
+        s.sql("""INSERT INTO g198.t
+                |SELECT k + 507000000, c, cents + 9 FROM g198_src
+                |WHERE k % 10 = 4""".stripMargin)
+        s.sql("UPDATE g198.t SET cents = cents + 11 WHERE k % 7 = 2")
+        s.sql("DELETE FROM g198.t WHERE c % 11 = 4")
+        graft.sources.ManifestedTable.compact(s, s"$wh/t", 1L << 30)
+        s.sql(
+          s"""SELECT x.c AS custkey, CAST(count(*) AS BIGINT) AS n,
+             |  CAST(sum(CASE WHEN x.old THEN x.cents END) AS BIGINT)
+             |    AS cents_old,
+             |  CAST(count(CASE WHEN NOT x.old THEN 1 END) AS BIGINT)
+             |    AS n_new
+             |FROM (
+             |  SELECT cur.c, cur.cents, v2._row_id IS NOT NULL AS old
+             |  FROM g198.t cur
+             |  LEFT JOIN (SELECT _row_id FROM g198.t VERSION AS OF $v2) v2
+             |    ON cur._row_id = v2._row_id) x
+             |WHERE x.c % 10 = 3
+             |GROUP BY x.c""".stripMargin)
+      }()
     }),
 
     // ---- T105: per-commit CDF with change-type columns --------------------
@@ -3101,43 +2972,37 @@ object RelEntry {
       // open, identical rows of rewritten files cancel, so each commit
       // contributes exactly its own row-level delta. The oracle
       // replays every commit relationally with literal versions.
-      val wh = catRoot(s, "g197", "graft_cl_q")
-      Tables.orders(s, d).select(col("o_orderkey").as("k"),
-        col("o_custkey").as("c"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-        .createOrReplaceTempView("g197_src")
-      s.sql("DROP TABLE IF EXISTS g197.t")
-      s.sql("""CREATE TABLE g197.t AS
-              |SELECT k, c, cents FROM g197_src WHERE k % 3 < 2""".stripMargin)
-      s.sql("""INSERT INTO g197.t
-              |SELECT k + 507000000, c, cents + 1 FROM g197_src
-              |WHERE k % 10 = 4""".stripMargin)
-      s.sql("""MERGE INTO g197.t t
-              |USING (SELECT k, c, cents - 7 AS cents FROM g197_src
-              |       WHERE k % 9 = 1
-              |       UNION ALL
-              |       SELECT k + 607000000, c, cents FROM g197_src
-              |       WHERE k % 9 = 5) s
-              |ON t.k = s.k
-              |WHEN MATCHED THEN UPDATE SET cents = s.cents
-              |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-      s.sql("DELETE FROM g197.t WHERE c % 13 = 5")
-      s.sql("""CALL g197.system.create_changelog_view(
-              |  't', 0, 5, 'g197_changes', 'k')""".stripMargin)
-      val out = s.sql(
-        """SELECT _change_type AS ctype,
-          |  CAST(_commit_version AS BIGINT) AS v,
-          |  CAST(count(*) AS BIGINT) AS n,
-          |  CAST(sum(cents) AS BIGINT) AS cents_sum
-          |FROM g197_changes
-          |GROUP BY _change_type, _commit_version""".stripMargin)
-      core.Materialize.detached(out) {
+      lakeScope(s, "g197", "graft_cl_q", "t") { _ =>
+        Tables.orders(s, d).select(col("o_orderkey").as("k"),
+          col("o_custkey").as("c"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+          .createOrReplaceTempView("g197_src")
         s.sql("DROP TABLE IF EXISTS g197.t")
-        new org.apache.hadoop.fs.Path(wh)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(wh), true)
-        ()
-      }
+        s.sql("""CREATE TABLE g197.t AS
+                |SELECT k, c, cents FROM g197_src WHERE k % 3 < 2""".stripMargin)
+        s.sql("""INSERT INTO g197.t
+                |SELECT k + 507000000, c, cents + 1 FROM g197_src
+                |WHERE k % 10 = 4""".stripMargin)
+        s.sql("""MERGE INTO g197.t t
+                |USING (SELECT k, c, cents - 7 AS cents FROM g197_src
+                |       WHERE k % 9 = 1
+                |       UNION ALL
+                |       SELECT k + 607000000, c, cents FROM g197_src
+                |       WHERE k % 9 = 5) s
+                |ON t.k = s.k
+                |WHEN MATCHED THEN UPDATE SET cents = s.cents
+                |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+        s.sql("DELETE FROM g197.t WHERE c % 13 = 5")
+        s.sql("""CALL g197.system.create_changelog_view(
+                |  't', 0, 5, 'g197_changes', 'k')""".stripMargin)
+        s.sql(
+          """SELECT _change_type AS ctype,
+            |  CAST(_commit_version AS BIGINT) AS v,
+            |  CAST(count(*) AS BIGINT) AS n,
+            |  CAST(sum(cents) AS BIGINT) AS cents_sum
+            |FROM g197_changes
+            |GROUP BY _change_type, _commit_version""".stripMargin)
+      }()
     }),
 
     // ---- T104: nested types + nested field-id evolution -------------------
@@ -3151,45 +3016,39 @@ object RelEntry {
       // UPDATE rewriting structs across all three file generations
       // (catalyst parquet writers). The oracle replays the lifecycle
       // with FLAT columns — nesting must be a pure shape.
-      val wh = catRoot(s, "g196", "graft_ns_q")
-      Tables.orders(s, d).select(col("o_orderkey").as("k"),
-        col("o_custkey").as("c"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-        .createOrReplaceTempView("g196_src")
-      s.sql("DROP TABLE IF EXISTS g196.t")
-      s.sql("""CREATE TABLE g196.t AS
-              |SELECT k,
-              |  named_struct('cents', cents,
-              |    'tag', concat('g', CAST(k % 3 AS STRING))) AS info,
-              |  c
-              |FROM g196_src WHERE k % 3 < 2""".stripMargin)
-      s.sql("ALTER TABLE g196.t RENAME COLUMN info.cents TO amount")
-      s.sql("""INSERT INTO g196.t
-              |SELECT k + 507000000,
-              |  named_struct('amount', cents, 'tag', 'new'), c
-              |FROM g196_src WHERE k % 10 = 4""".stripMargin)
-      s.sql("ALTER TABLE g196.t DROP COLUMN info.tag")
-      s.sql("ALTER TABLE g196.t ADD COLUMNS (info.tag STRING)")
-      s.sql("""INSERT INTO g196.t
-              |SELECT k + 607000000,
-              |  named_struct('amount', cents + 5, 'tag', 'fresh'), c
-              |FROM g196_src WHERE k % 10 = 6""".stripMargin)
-      s.sql("""UPDATE g196.t SET info = named_struct(
-              |  'amount', info.amount + 7, 'tag', info.tag)
-              |WHERE k % 11 = 3""".stripMargin)
-      val out = s.sql(
-        """SELECT c AS custkey, CAST(count(*) AS BIGINT) AS n,
-          |  CAST(sum(info.amount) AS BIGINT) AS amt,
-          |  CAST(count(info.tag) AS BIGINT) AS n_tag
-          |FROM g196.t WHERE c % 10 = 3
-          |GROUP BY c""".stripMargin)
-      core.Materialize.detached(out) {
+      lakeScope(s, "g196", "graft_ns_q", "t") { _ =>
+        Tables.orders(s, d).select(col("o_orderkey").as("k"),
+          col("o_custkey").as("c"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+          .createOrReplaceTempView("g196_src")
         s.sql("DROP TABLE IF EXISTS g196.t")
-        new org.apache.hadoop.fs.Path(wh)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(wh), true)
-        ()
-      }
+        s.sql("""CREATE TABLE g196.t AS
+                |SELECT k,
+                |  named_struct('cents', cents,
+                |    'tag', concat('g', CAST(k % 3 AS STRING))) AS info,
+                |  c
+                |FROM g196_src WHERE k % 3 < 2""".stripMargin)
+        s.sql("ALTER TABLE g196.t RENAME COLUMN info.cents TO amount")
+        s.sql("""INSERT INTO g196.t
+                |SELECT k + 507000000,
+                |  named_struct('amount', cents, 'tag', 'new'), c
+                |FROM g196_src WHERE k % 10 = 4""".stripMargin)
+        s.sql("ALTER TABLE g196.t DROP COLUMN info.tag")
+        s.sql("ALTER TABLE g196.t ADD COLUMNS (info.tag STRING)")
+        s.sql("""INSERT INTO g196.t
+                |SELECT k + 607000000,
+                |  named_struct('amount', cents + 5, 'tag', 'fresh'), c
+                |FROM g196_src WHERE k % 10 = 6""".stripMargin)
+        s.sql("""UPDATE g196.t SET info = named_struct(
+                |  'amount', info.amount + 7, 'tag', info.tag)
+                |WHERE k % 11 = 3""".stripMargin)
+        s.sql(
+          """SELECT c AS custkey, CAST(count(*) AS BIGINT) AS n,
+            |  CAST(sum(info.amount) AS BIGINT) AS amt,
+            |  CAST(count(info.tag) AS BIGINT) AS n_tag
+            |FROM g196.t WHERE c % 10 = 3
+            |GROUP BY c""".stripMargin)
+      }()
     }),
 
     // ---- T103: hidden partitioning + partition evolution ------------------
@@ -3204,41 +3063,35 @@ object RelEntry {
       // keep pruning under their write-time spec. The oracle replays
       // the lifecycle relationally — partitioning must be semantically
       // invisible; SourceFormatsSpec pins the pruning counts.
-      val wh = catRoot(s, "g195", "graft_hp_q")
-      Tables.orders(s, d).select(col("o_orderkey").as("k"),
-        col("o_custkey").as("c"), col("o_orderdate").as("dt"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-        .createOrReplaceTempView("g195_src")
-      s.sql("DROP TABLE IF EXISTS g195.t")
-      s.sql("""CREATE TABLE g195.t (k BIGINT, c BIGINT, dt DATE,
-              |  cents BIGINT)
-              |PARTITIONED BY (months(dt))""".stripMargin)
-      s.sql("""INSERT INTO g195.t
-              |SELECT k, c, dt, cents FROM g195_src
-              |WHERE k % 3 < 2""".stripMargin)
-      // partition EVOLUTION: one metadata commit — the next feed (and
-      // the DELETE's rewrite) land bucket-local; the month files keep
-      // their layout and keep pruning under it
-      s.sql("CALL g195.system.set_partition_spec('t', 'bucket(8, k)')")
-      s.sql("""INSERT INTO g195.t
-              |SELECT k + 507000000, c, date_add(dt, 3), cents + 9
-              |FROM g195_src WHERE k % 10 = 4""".stripMargin)
-      s.sql("""DELETE FROM g195.t
-              |WHERE c % 13 = 5 AND dt >= DATE'1996-01-01'""".stripMargin)
-      val out = s.sql(
-        """SELECT c AS custkey, CAST(count(*) AS BIGINT) AS n,
-          |  CAST(sum(cents) AS BIGINT) AS cents_sum
-          |FROM g195.t
-          |WHERE dt >= DATE'1995-01-01' AND dt < DATE'1996-07-01'
-          |  AND c % 10 = 3
-          |GROUP BY c""".stripMargin)
-      core.Materialize.detached(out) {
+      lakeScope(s, "g195", "graft_hp_q", "t") { _ =>
+        Tables.orders(s, d).select(col("o_orderkey").as("k"),
+          col("o_custkey").as("c"), col("o_orderdate").as("dt"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+          .createOrReplaceTempView("g195_src")
         s.sql("DROP TABLE IF EXISTS g195.t")
-        new org.apache.hadoop.fs.Path(wh)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(wh), true)
-        ()
-      }
+        s.sql("""CREATE TABLE g195.t (k BIGINT, c BIGINT, dt DATE,
+                |  cents BIGINT)
+                |PARTITIONED BY (months(dt))""".stripMargin)
+        s.sql("""INSERT INTO g195.t
+                |SELECT k, c, dt, cents FROM g195_src
+                |WHERE k % 3 < 2""".stripMargin)
+        // partition EVOLUTION: one metadata commit — the next feed (and
+        // the DELETE's rewrite) land bucket-local; the month files keep
+        // their layout and keep pruning under it
+        s.sql("CALL g195.system.set_partition_spec('t', 'bucket(8, k)')")
+        s.sql("""INSERT INTO g195.t
+                |SELECT k + 507000000, c, date_add(dt, 3), cents + 9
+                |FROM g195_src WHERE k % 10 = 4""".stripMargin)
+        s.sql("""DELETE FROM g195.t
+                |WHERE c % 13 = 5 AND dt >= DATE'1996-01-01'""".stripMargin)
+        s.sql(
+          """SELECT c AS custkey, CAST(count(*) AS BIGINT) AS n,
+            |  CAST(sum(cents) AS BIGINT) AS cents_sum
+            |FROM g195.t
+            |WHERE dt >= DATE'1995-01-01' AND dt < DATE'1996-07-01'
+            |  AND c % 10 = 3
+            |GROUP BY c""".stripMargin)
+      }()
     }),
 
     // ---- T74: data-quality expectation suite ----------------------------

@@ -1,10 +1,11 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Materializes a result off its lineage so upstream caches can be
-  * released before the result is returned.
+  * released before the result is returned — the one fence primitive of
+  * the engine, and the one owner of per-query scratch tables.
   *
   * `localCheckpoint(eager = true)` computes the plan once and stores the
   * partitions as executor-local blocks — the result never passes through
@@ -15,43 +16,68 @@ import org.apache.spark.storage.StorageLevel
   * `collect()` remains appropriate ONLY for provably tiny aggregates
   * (fixed-cardinality group-bys).
   *
-  * Durability caveat: the default storage level is MEMORY_AND_DISK with
-  * a SINGLE replica — after `release` runs, the upstream caches needed
-  * to recompute are gone, so losing an executor loses the detached
-  * result unrecoverably. Fine for local[n] (one JVM); a cluster
-  * deployment should pass `StorageLevel.MEMORY_AND_DISK_2` (or use
-  * reliable `checkpoint()` to a replicated filesystem) so a single
-  * executor loss survives.
+  * Durability caveat: the blocks are stored MEMORY_AND_DISK with a
+  * SINGLE replica, and the checkpoint cuts the lineage — after `release`
+  * runs, the upstream caches (or scratch tables) needed to recompute are
+  * gone, so losing the executor that holds a block loses the detached
+  * result unrecoverably and the query must be rerun. Fine for local[n]
+  * (one JVM, where executor loss is process loss); a cluster deployment
+  * would need a replicated level or a reliable `checkpoint()` to a
+  * replicated filesystem to survive a single executor loss.
   */
 object Materialize {
-  /** When true (set ONLY by ExplainAudit), [[detached]] returns the
-    * un-checkpointed frame so the FULL plan stays visible to plan-shape
-    * tooling — r13's snapshot recorded ~27 detached queries as a bare
-    * post-checkpoint `{"Scan":1}`, blinding `tools/plancheck.py` to
-    * precisely the most intricate plans. The release closure still runs
-    * in this mode: the audit never EXECUTES the returned frame, so
-    * unpersisting is always safe, and some builders (q71's
-    * dupComponents convergence loop) run count() actions while the
-    * frame is being BUILT — their persisted intermediates are real and
-    * would otherwise accumulate across the ~150-query audit JVM.
-    * Unpersisting also yields a fuller lineage snapshot (no
-    * InMemoryRelation stubs). Never enable outside plan inspection —
-    * execution paths rely on the checkpoint both for the re-planning
-    * fence (q121's bloom literal) and for cache release.
+  /** Session conf key, set ONLY by plan inspection (ExplainAudit, and
+    * PlanAuditSpec on a session of its own): when "true" on a frame's
+    * session, [[detached]] returns the un-checkpointed frame so the FULL
+    * plan stays visible to plan-shape tooling — r13's snapshot recorded
+    * ~27 detached queries as a bare post-checkpoint `{"Scan":1}`,
+    * blinding `tools/plancheck.py` to precisely the most intricate
+    * plans. The release closure still runs in this mode: the audit
+    * never EXECUTES the returned frame, so unpersisting is always safe,
+    * and some builders (q71's dupComponents convergence loop) run
+    * count() actions while the frame is being BUILT — their persisted
+    * intermediates are real and would otherwise accumulate across the
+    * ~150-query audit JVM. Unpersisting also yields a fuller lineage
+    * snapshot (no InMemoryRelation stubs). Never enable outside plan
+    * inspection — execution paths rely on the checkpoint both for the
+    * re-planning fence (q121's bloom literal) and for cache release.
+    * Read from the frame's own session, so a session that audits cannot
+    * change what a concurrently executing session materializes.
     */
-  @volatile var auditPassthrough: Boolean = false
+  val PassthroughKey = "graft.audit.passthrough"
 
-  /** Checkpoint `df` off-lineage at `level`, then run `release`
-    * (unpersist the upstream caches the plan depended on), and return
-    * the detached result.
+  /** Checkpoint `df` off-lineage, then run `release` (unpersist the
+    * upstream caches the plan depended on), and return the detached
+    * result.
     */
-  def detached(df: DataFrame,
-               level: StorageLevel = StorageLevel.MEMORY_AND_DISK)
-              (release: => Unit): DataFrame =
-    if (auditPassthrough) { release; df }
-    else {
-      val out = df.localCheckpoint(true, level)
+  def detached(df: DataFrame)(release: => Unit): DataFrame =
+    if (df.sparkSession.conf.getOption(PassthroughKey).contains("true")) {
+      release; df
+    } else {
+      val out = df.localCheckpoint(true)
       release
       out
+    }
+
+  /** [[owning]] over fresh local temp dirs, one per tag, handed to
+    * `build` in tag order.
+    */
+  def scratch(s: SparkSession, tags: String*)(build: Seq[String] => DataFrame)
+             (release: => Unit = ()): DataFrame = {
+    val dirs = tags.map(java.nio.file.Files.createTempDirectory(_).toString)
+    owning(s, dirs: _*)(build(dirs))(release)
+  }
+
+  /** Builds a result over scratch tables stored under `dirs`, fences it
+    * ([[detached]], running `release` after the checkpoint), then deletes
+    * `dirs` — also when `build` or `release` throws, so a failing
+    * builder leaves no scratch table behind.
+    */
+  def owning(s: SparkSession, dirs: String*)(build: => DataFrame)
+            (release: => Unit): DataFrame =
+    try detached(build)(release)
+    finally {
+      val conf = s.sessionState.newHadoopConf()
+      dirs.foreach { d => val p = new Path(d); p.getFileSystem(conf).delete(p, true) }
     }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Materialize
 
 /** Iterative graph analytics beyond connected components (q71): link
   * centrality as a data-quality prior. Web-scale pretraining curation
@@ -126,32 +127,33 @@ object GraphOps {
     // them, which the capture refutes). Eager localCheckpoint fences
     // materialize each shared frame exactly once and hand every
     // consumer a leaf (guide §2.4): measured 4.0 -> 2.4-2.8 s per run
-    // at sf0.1, identical rows. Plan-shape tooling flips
-    // Materialize.auditPassthrough to keep the full shape visible —
-    // the Materialize.detached contract.
-    def fence(df: DataFrame): DataFrame =
-      if (graft.core.Materialize.auditPassthrough) df
-      else df.localCheckpoint(true)
+    // at sf0.1, identical rows. Plan-shape tooling sets the session's
+    // Materialize.PassthroughKey to keep the full shape visible.
+    // Trade-off: e and o are CORPUS-sized (every edge), held as single-
+    // replica local blocks with no lineage behind them — losing an
+    // executor mid-query loses them and the query must be rerun
+    // (Materialize's durability caveat); in exchange each is computed
+    // once instead of once per consumer.
     // canonical undirected form: a < b, self-loops dropped, multi-edges
     // collapsed (a triangle is a property of the simple graph)
-    val e = fence(edges0.select(
+    val e = Materialize.detached(edges0.select(
         least(col("src"), col("dst")).cast("long").as("a"),
         greatest(col("src"), col("dst")).cast("long").as("b"))
       .filter(col("a") < col("b"))
-      .distinct())
-    val deg = fence(
+      .distinct())(())
+    val deg = Materialize.detached(
       e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
-        .groupBy(col("v")).agg(count(lit(1)).as("deg")))
+        .groupBy(col("v")).agg(count(lit(1)).as("deg")))(())
     // orient by rank = (deg, id): src = lower rank, dst = higher
     val da = deg.select(col("v").as("a"), col("deg").as("dega"))
     val db = deg.select(col("v").as("b"), col("deg").as("degb"))
     val aLower = col("dega") < col("degb") ||
       (col("dega") === col("degb") && col("a") < col("b"))
-    val o = fence(e.join(da, "a").join(db, "b")
+    val o = Materialize.detached(e.join(da, "a").join(db, "b")
       .select(
         when(aLower, col("a")).otherwise(col("b")).as("u"),
         when(aLower, col("b")).otherwise(col("a")).as("w"),
-        when(aLower, col("degb")).otherwise(col("dega")).as("degw")))
+        when(aLower, col("degb")).otherwise(col("dega")).as("degw")))(())
     // wedges from out-neighborhoods, ordered by the same rank so the
     // closing edge (w1 → w2) is oriented exactly when the pair is
     val w1 = o.select(col("u"), col("w").as("w1"), col("degw").as("d1"))
@@ -204,9 +206,11 @@ object GraphOps {
     * edge set.
     *
     * Scale (100 TB): per round one map-side-combined degree aggregate
-    * plus two semi-joins keyed on node ids — everything
-    * shuffle-partitioned and GROWING WITH THE DATA, nothing collected
-    * or broadcast; the edge set only shrinks. The q71/q109 iteration
+    * plus two anti-joins keyed on node ids against the round's DROPPED
+    * node set — nothing collected; the dropped set is usually small, so
+    * AQE broadcasts it and the shrinking edge set is not exchanged,
+    * while a round that drops a huge node mass keeps the shuffled
+    * join. The q71/q109 iteration
     * discipline applies verbatim: persist per round, unpersist the
     * previous, localCheckpoint the result so downstream plans don't
     * replay `rounds` join rounds of lineage.

@@ -38,10 +38,15 @@ class TrafficAnalytics(spark: SparkSession, dataPath: String) {
     Iterator.iterate(s)(_.plusMonths(1)).takeWhile(!_.isAfter(endIncl))
       .map(d => f"${d.getYear}%04d${d.getMonthValue}%02d").toSeq
   }
-  private def speedPaths(ms: Seq[String]) =
-    ms.map(m => s"$dataPath/$m/${m}CSYDATA.csv")
-  private def feePaths(ms: Seq[String]) =
-    ms.map(m => s"$dataPath/$m/${m}SFZDATA.csv")
+  // only the month files that exist: a window reaching past the data
+  // reads what is there, and a window with no files reads zero rows
+  private lazy val fs = new org.apache.hadoop.fs.Path(dataPath)
+    .getFileSystem(spark.sessionState.newHadoopConf())
+  private def monthFiles(ms: Seq[String], suffix: String) =
+    ms.map(m => s"$dataPath/$m/$m$suffix")
+      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
+  private def speedPaths(ms: Seq[String]) = monthFiles(ms, "CSYDATA.csv")
+  private def feePaths(ms: Seq[String]) = monthFiles(ms, "SFZDATA.csv")
 
   /** Shared core of OverSpeed/AverageSpeed (SURVEY §3.2–3.3): bbox sites
     * (broadcast) ⋈ speed obs ⋈ toll trips (equi plate + time-in-interval),

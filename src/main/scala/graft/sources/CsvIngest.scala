@@ -12,6 +12,10 @@ import org.apache.spark.sql.types._
   * Design decisions vs the reference, each documented + unit-tested:
   *  - Malformed rows (wrong arity) are dropped by the CSV reader's
   *    DROPMALFORMED mode, not a hand-written `split.length == n` filter.
+  *    Column pruning is off for these reads: with it, the reader
+  *    tokenizes only the projected fields and checks the arity of those
+  *    alone, so a row with too many or too few fields would survive any
+  *    query that does not read every column.
   *  - Numeric parse failures become NULL (`try_cast`) then a documented
   *    default via `coalesce` where the reference used sentinel 0
   *    (`src/AccidentStatistics.scala:37-51`).
@@ -68,6 +72,7 @@ object CsvIngest {
       .schema(schema)
       .option("header", "false")
       .option("mode", "DROPMALFORMED") // P2: arity filter
+      .option("columnPruning", "false") // ...over every field, not the projected ones
       .option("quote", "\"")           // P4: quote strip
       .csv(paths: _*)
 

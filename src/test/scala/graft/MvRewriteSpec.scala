@@ -166,4 +166,15 @@ class MvRewriteSpec extends SparkTestBase {
       assert(refreshed.count() > 0)
     } finally MvCatalog.unregister("spec_refresh_mv")
   }
+
+  test("q180's rewrite proof holds under a small plan-string cap") {
+    // the proof reads the scan nodes, not the rendered plan string,
+    // which spark.sql.maxPlanStringLength truncates well before the
+    // MV scan at the bottom of the plan
+    val capped = spark.newSession()
+    capped.conf.set("spark.sql.maxPlanStringLength", "512")
+    org.apache.spark.sql.SparkSession.setActiveSession(capped)
+    try assert(SparkEntry.queries("q180_mv_rewrite")(capped, sf).count() > 0)
+    finally org.apache.spark.sql.SparkSession.setActiveSession(spark)
+  }
 }

@@ -525,16 +525,15 @@ class PlanAuditSpec extends SparkTestBase {
     // plan — the cap still compiles to WindowGroupLimit, the near-dedup
     // candidate join stays banded (equi keys incl. band_key, no nested
     // loop on the corpus side), and the bench screen joins by broadcast.
-    // auditPassthrough keeps the stage shapes visible through the
-    // execution-path localCheckpoint fences (the Materialize contract)
-    val plan =
-      try {
-        graft.core.Materialize.auditPassthrough = true
-        val (df, release) = LlmEntry.curationPlan(spark, sf)
-        val p = df.queryExecution.executedPlan.toString
-        release()
-        p
-      } finally graft.core.Materialize.auditPassthrough = false
+    // passthrough, set on a session of its own, keeps the stage shapes
+    // visible through the execution-path localCheckpoint fences (the
+    // Materialize contract) without touching the shared test session
+    val audit = spark.newSession()
+    audit.conf.set(graft.core.Materialize.PassthroughKey, "true")
+    audit.conf.set("spark.sql.maxPlanStringLength", Int.MaxValue - 15)
+    val (df, release) = LlmEntry.curationPlan(audit, sf)
+    val plan = df.queryExecution.executedPlan.toString
+    release()
     assert(plan.contains("WindowGroupLimit"),
       s"q121 lost the cap's group-limit pushdown:\n${plan.take(800)}")
     assert(!plan.contains("CartesianProduct"),

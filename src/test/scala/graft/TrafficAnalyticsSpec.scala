@@ -108,4 +108,58 @@ class TrafficAnalyticsSpec extends SparkTestBase {
     assert(l.size() === 2)
     assert(l.asInstanceOf[java.util.List[String]].get(0).startsWith("{"))
   }
+
+  // the §1 rows plus rows with too many / too few fields, which the
+  // reference's exact field-count check drops from every read — also
+  // from reads whose query needs only some of the columns
+  private lazy val dirtyDir: Path = {
+    val d = Files.createTempDirectory("graft-fixtures-dirty")
+    def copyWith(rel: String, extra: String): Unit =
+      write(d, rel, Files.readString(dataDir.resolve(rel)) + extra)
+    copyWith("speed_base.csv",
+      "G1,001,SITE_A,N,StationA,1,116.30,39.90,EXTRA\n")
+    write(d, "201606/201606CSYDATA.csv",
+      """SITE_A,JA12345,2016-06-15 08:12:00,130,1
+        |SITE_A,JA12345,2016-06-15 08:20:00,135,1,EXTRA
+        |SITE_A,JA12345,2016-06-15 08:30:00,140
+        |""".stripMargin)
+    copyWith("201606/201606SFZDATA.csv",
+      "ST9,2016-06-15 09:00:00,ST1,2016-06-15 08:00:00,1,JA12345,JA12345,0,EXTRA\n")
+    copyWith("TF_ZFZD_CASESPECIFICATION.csv",
+      """"1","5000","C004","2016-06-15 08:40:00","2","101","G1","K12","N","12","300","116.40","39.85","rear-end","0","1","2","2","plain","sunny","EXTRA"
+        |"1","5000","C005","2016-06-15 08:50:00","2","101","G1","K12","N","12","300","116.40","39.85","rear-end","0","1","2","2","plain"
+        |""".stripMargin)
+    d
+  }
+
+  test("accidentCount: rows with the wrong field count are dropped") {
+    val rows = new TrafficAnalytics(spark, dirtyDir.toString)
+      .accidentCount(box, "2016-06-01", "2016-06-30")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(rows === Map(8L -> 1L, 22L -> 1L))
+  }
+
+  test("overSpeedCount: speed, site and toll rows with the wrong field count are dropped") {
+    val rows = new TrafficAnalytics(spark, dirtyDir.toString)
+      .overSpeedCount(box, "2016-06-01", "2016-06-30")
+      .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
+    assert(rows === Map((8L, "01") -> 1L))
+  }
+
+  test("averageSpeed: a window reaching a month with no files reads what exists") {
+    // the 30-day window of 6/15 starts in May, which has no files
+    val rows = ta.averageSpeed(box, "2016-06-15")
+      .collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(3)) -> r.getDouble(2))
+      .toMap
+    assert(rows === Map(
+      (8L, "01", 1L) -> 130.0,
+      (14L, "04", 1L) -> 110.0,
+      (8L, "01", 0L) -> 130.0,
+      (14L, "04", 0L) -> 110.0))
+  }
+
+  test("overSpeedCount: a window with no month files returns zero rows") {
+    assert(ta.overSpeedCount(box, "2015-01-01", "2015-02-28").collect().isEmpty)
+  }
 }
