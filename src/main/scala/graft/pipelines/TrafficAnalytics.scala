@@ -7,6 +7,11 @@ import graft.operators.TrafficOps
 import graft.sources.CsvIngest
 import java.time.LocalDate
 import java.time.format.DateTimeFormatter
+import java.io.FileNotFoundException
+import java.util.UUID
+import org.apache.hadoop.fs.Path
+import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** The reference's public API (SURVEY §2.11 X1–X5,
@@ -20,15 +25,31 @@ import scala.jdk.CollectionConverters._
   *    pruning happens at path-selection time (the scalable analog of
   *    partition pruning for this layout); everything after is one job.
   *  - The 4-per-class query fan-out collapses into a single grouped pass
-  *    with a CASE classification column (4× fewer scans).
+  *    with a CASE classification column (4× fewer scans); `averageSpeed`
+  *    computes its today and trailing-window averages in that same pass.
   *  - The bbox-filtered site dimension is broadcast, so the fact side
-  *    never shuffles for JN1; the interval join JN2 hashes on the plate
-  *    equi key with the time-band as residual.
+  *    never shuffles for JN1. The interval join JN2 is banded on
+  *    (plate, day) ([[TrafficOps.intervalJoinBanded]]): a fleet plate's
+  *    observations meet only the trips of their own day, not every trip
+  *    of the plate. A trip is replicated once per day it touches (trips
+  *    last hours), and one crossing midnight still matches on both days.
   *  - typed parameters, no string-concatenated SQL.
   *
-  * Cached exactly at the reference's two reuse points: the bbox site ids
-  * and the joined slice read by multiple aggregates
-  * (`src/OverSpeedCount.scala:38,125`).
+  * Parse cache: each instance parses `speed_base.csv` and each month's
+  * `CSYDATA`/`SFZDATA` file once, into a persisted copy
+  * (`MEMORY_AND_DISK`) keyed on the file's path, length and modification
+  * time; a call unions the copies of the months it reads, and a file
+  * whose length or mtime changed is re-parsed. The accident file is read
+  * afresh by every `accidentCount`: it grows between calls and is read
+  * once per call, so a copy would never be reused. The copies are this
+  * instance's own: each carries an id in its plan, so the session's
+  * cache never serves one to another reader of the same file. Limits:
+  *  - the copies of every file touched are retained until [[destroy]];
+  *  - their memory is bounded by Spark's storage memory, and blocks that
+  *    do not fit spill to local disk;
+  *  - a rewrite that keeps both length and mtime goes undetected;
+  *  - a lost block is recomputed from the file as it is then, which may
+  *    differ from the parse it replaces.
   */
 class TrafficAnalytics(spark: SparkSession, dataPath: String) {
 
@@ -38,38 +59,72 @@ class TrafficAnalytics(spark: SparkSession, dataPath: String) {
     Iterator.iterate(s)(_.plusMonths(1)).takeWhile(!_.isAfter(endIncl))
       .map(d => f"${d.getYear}%04d${d.getMonthValue}%02d").toSeq
   }
-  // only the month files that exist: a window reaching past the data
-  // reads what is there, and a window with no files reads zero rows
-  private lazy val fs = new org.apache.hadoop.fs.Path(dataPath)
+
+  /** JN2's band: one day. A trip lasts hours, so it is replicated into
+    * one band, or two when it crosses midnight.
+    */
+  private val JoinBandSec = 86400L
+
+  private lazy val fs = new Path(dataPath)
     .getFileSystem(spark.sessionState.newHadoopConf())
-  private def monthFiles(ms: Seq[String], suffix: String) =
-    ms.map(m => s"$dataPath/$m/$m$suffix")
-      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
-  private def speedPaths(ms: Seq[String]) = monthFiles(ms, "CSYDATA.csv")
-  private def feePaths(ms: Seq[String]) = monthFiles(ms, "SFZDATA.csv")
+
+  private val parsed = mutable.HashMap.empty[String, TrafficAnalytics.Parsed]
+  private val CopyId = "_copy_id"
+
+  /** The parsed copy of the file at `path`, or None if there is no such
+    * file: the cached copy while the file's length and mtime are those
+    * it was parsed at, else a fresh parse that replaces it.
+    */
+  private def parsedFile(path: String)(parse: String => DataFrame)
+      : Option[DataFrame] = parsed.synchronized {
+    val status = try Some(fs.getFileStatus(new Path(path)))
+                 catch { case _: FileNotFoundException => None }
+    val current = parsed.get(path).filter(c => status.exists(s =>
+      s.getLen == c.length && s.getModificationTime == c.mtime))
+    if (current.isEmpty) {
+      parsed.remove(path).foreach(_.df.unpersist(blocking = false))
+      // the session's cache matches copies by plan: a column holding the
+      // copy's own id keeps any other read of the file from being served
+      // this copy, and unpersisting it from dropping another reader's
+      status.foreach { s =>
+        parsed(path) = TrafficAnalytics.Parsed(s.getLen, s.getModificationTime,
+          parse(path).withColumn(CopyId, lit(UUID.randomUUID().toString))
+            .persist(StorageLevel.MEMORY_AND_DISK))
+      }
+    }
+    parsed.get(path).map(_.df.drop(CopyId))
+  }
+
+  /** The parsed copies of the months' files that exist, as one frame; a
+    * window reaching past the data reads what is there, and a window
+    * with no files reads zero rows.
+    */
+  private def monthFrames(ms: Seq[String], suffix: String)
+                         (parse: Seq[String] => DataFrame): DataFrame =
+    ms.flatMap(m => parsedFile(s"$dataPath/$m/$m$suffix")(p => parse(Seq(p))))
+      .reduceOption(_ union _).getOrElse(parse(Nil))
 
   /** Shared core of OverSpeed/AverageSpeed (SURVEY §3.2–3.3): bbox sites
-    * (broadcast) ⋈ speed obs ⋈ toll trips (equi plate + time-in-interval),
-    * classified in one pass. Returns
-    * (hour, CLSD, EXVEHCLASS, EXTRUCKFLAG).
+    * (broadcast) ⋈ speed obs ⋈ toll trips (plate + time-in-interval,
+    * banded by day), classified in one pass. Returns
+    * (hour, obs_date, CLSD, EXVEHCLASS, EXTRUCKFLAG).
     */
   private def classifiedObservations(box: BBox, startIncl: LocalDate,
                                      endExcl: LocalDate): DataFrame = {
     val ms = months(startIncl, endExcl.minusDays(1))
-    val sites = TrafficOps.bboxFilter(
-        CsvIngest.readSpeedBase(spark, s"$dataPath/speed_base.csv"),
-        "LON", "LAT", box)
+    val basePath = s"$dataPath/speed_base.csv"
+    val base = parsedFile(basePath)(CsvIngest.readSpeedBase(spark, _))
+      .getOrElse(throw new FileNotFoundException(basePath))
+    val sites = TrafficOps.bboxFilter(base, "LON", "LAT", box)
       .select(col("GDCSYBM"))
     val lo = lit(startIncl.format(fmt)).cast("timestamp")
     val hi = lit(endExcl.format(fmt)).cast("timestamp")
-    val speed = CsvIngest.readSpeedData(spark, speedPaths(ms))
+    val speed = monthFrames(ms, "CSYDATA.csv")(CsvIngest.readSpeedData(spark, _))
       .filter(col("WZSJ_TS") >= lo && col("WZSJ_TS") < hi)
-    val fee = CsvIngest.readFeeData(spark, feePaths(ms))
+    val fee = monthFrames(ms, "SFZDATA.csv")(CsvIngest.readFeeData(spark, _))
     val sited = TrafficOps.broadcastDimJoin(speed, sites, "SITE_GUID", "GDCSYBM")
-    sited.join(fee,
-        sited("HPHM") === fee("ENVEHPLATE") &&
-          sited("WZSJ_TS").between(fee("ENTIME_TS"), fee("EXTIME_TS")),
-        "inner")
+    TrafficOps.intervalJoinBanded(sited, fee, "HPHM", "ENVEHPLATE",
+        col("WZSJ_TS"), col("ENTIME_TS"), col("EXTIME_TS"), JoinBandSec)
       .select(hour(col("WZSJ_TS")).cast("long").as("hour"),
               to_date(col("WZSJ_TS")).as("obs_date"),
               col("CLSD"), col("EXVEHCLASS"), col("EXTRUCKFLAG"))
@@ -122,30 +177,23 @@ class TrafficAnalytics(spark: SparkSession, dataPath: String) {
     */
   def averageSpeed(box: BBox, date: String): DataFrame = {
     val d = LocalDate.parse(date, fmt)
-    val obs = classifiedObservations(box, d.minusDays(30), d.plusDays(1))
+    classifiedObservations(box, d.minusDays(30), d.plusDays(1))
       .withColumn("car_type",
         when(col("EXVEHCLASS") === 1 && col("EXTRUCKFLAG") === 0, "01")
           .when(col("EXVEHCLASS") > 1 && col("EXTRUCKFLAG") === 0, "02")
           .when(col("EXVEHCLASS") === 1 && col("EXTRUCKFLAG") === 1, "03")
           .when(col("EXVEHCLASS") > 1 && col("EXTRUCKFLAG") === 1, "04"))
       .filter(col("car_type").isNotNull)
-      .cache() // the reference's second reuse point: read twice below
-
-    // today = query date only; history = full trailing window (incl. today,
-    // matching the reference's [start, end+1d) scan, SURVEY §3.3).
-    val today = obs.filter(col("obs_date") === lit(date).cast("date"))
-    def agg(df: DataFrame, tp: Long): DataFrame =
-      df.groupBy(col("hour").as("time_period"), col("car_type"))
-        .agg(avg(col("CLSD")).as("avg_speed"))
-        .withColumn("time_point", lit(tp))
-    val out = agg(today, 1L).unionAll(agg(obs, 0L))
-    // S6 scoped uncache (ref releases its slice mid-query,
-    // `/root/reference/src/AverageSpeed.scala:117`): pin the ≤24×4×2-row
-    // result, release the cache before returning — a long-lived host-app
-    // session must not accumulate per-query cached slices.
-    val rows = out.collect()
-    obs.unpersist(blocking = true)
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      // today = query date only; history = full trailing window (incl.
+      // today, matching the reference's [start, end+1d) scan, SURVEY
+      // §3.3) — both in one grouped pass, one row per time_point
+      .groupBy(col("hour").as("time_period"), col("car_type"))
+      .agg(avg(when(col("obs_date") === lit(date).cast("date"), col("CLSD")))
+             .as("today"),
+           avg(col("CLSD")).as("history"))
+      .select(col("time_period"), col("car_type"),
+              expr("stack(2, today, 1L, history, 0L) AS (avg_speed, time_point)"))
+      .filter(col("avg_speed").isNotNull)
   }
 
   /** S4: the reference's host-app sink — JSON strings collected to the
@@ -168,6 +216,16 @@ class TrafficAnalytics(spark: SparkSession, dataPath: String) {
   def dropView(name: String): Unit =
     spark.catalog.dropTempView(name): Unit
 
-  /** X5. */
-  def destroy(): Unit = { spark.catalog.clearCache() }
+  /** X5: releases this instance's parsed copies, and nothing else the
+    * session has cached.
+    */
+  def destroy(): Unit = parsed.synchronized {
+    parsed.values.foreach(_.df.unpersist(blocking = false))
+    parsed.clear()
+  }
+}
+
+private object TrafficAnalytics {
+  /** One parsed copy: the file's length and mtime when it was parsed. */
+  final case class Parsed(length: Long, mtime: Long, df: DataFrame)
 }

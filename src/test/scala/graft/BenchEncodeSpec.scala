@@ -171,6 +171,20 @@ class BenchEncodeSpec extends SparkTestBase {
     assert(!Bench.gated(Seq(1.6, 1.9, 2.3)))
   }
 
+  test("contended: a discarded shot far below the kept window flags it") {
+    // q17's shape: the tightest 3-window is 0.88-1.02 s (ungated), while
+    // the two discarded shots measured 0.16 s
+    val shots = Seq(0.16, 0.16, 0.88, 0.94, 1.02)
+    val window = Bench.tightestWindow(shots, 3)
+    assert(window === Seq(0.88, 0.94, 1.02) && !Bench.gated(window))
+    assert(Bench.contended(window, shots.diff(window)))
+    // slower discarded shots, or faster ones within the gate, do not
+    assert(!Bench.contended(window, Seq(2.5, 3.0)))
+    assert(!Bench.contended(window, Seq(0.8)))
+    // a gated window stays contended with nothing discarded
+    assert(Bench.contended(Seq(1.0, 1.1, 1.7), Nil))
+  }
+
   test("retry record rides bench_result.json; quiet lines are unchanged") {
     val retries = Map("q01_agg" ->
       Bench.Retry(extra = 1, discarded = Seq(6.3), contended = false))

@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
   */
 class CboStatsSpec extends SparkTestBase {
 
-  private val wh =
-    java.nio.file.Files.createTempDirectory("graft_cbo").toString
+  private val wh = tempDir("graft_cbo").toString
 
   test("HLL NDV and exact null counts reach the optimizer's column stats") {
     spark.conf.set("spark.sql.catalog.gm_cbo",

@@ -21,7 +21,7 @@ class CompactionSpec extends SparkTestBase {
   }
 
   test("compaction bin-packs to target counts, preserves rows and pruning") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val dir = tempDir("graft_compact").toString
     // fragment deliberately: 8 hash partitions × partitionBy(day) means
     // every task writes into every day directory — the exact
     // small-files explosion writePartitioned's repartition exists to
@@ -73,7 +73,7 @@ class CompactionSpec extends SparkTestBase {
 
   test("upsert rewrites only touched partitions; untouched files stay byte-identical") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert").toString
+    val dir = tempDir("graft_upsert").toString
     Seq(
       (1L, "d1", 10.0), (2L, "d1", 20.0),
       (3L, "d2", 30.0), (4L, "d2", 40.0),
@@ -128,7 +128,7 @@ class CompactionSpec extends SparkTestBase {
 
   test("upsert handles moved keys: old partition rewritten or deleted, no stale dup") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert_mv").toString
+    val dir = tempDir("graft_upsert_mv").toString
     Seq(
       (1L, "d1", 10.0), (2L, "d1", 20.0),
       (3L, "d2", 30.0),
@@ -168,7 +168,7 @@ class CompactionSpec extends SparkTestBase {
   }
 
   test("target size is honored: small targets produce multiple files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact2").toString
+    val dir = tempDir("graft_compact2").toString
     graft.core.Tables.events(spark, sf)
       .withColumn("m", date_format(col("ts"), "yyyyMM"))
       .repartition(16)
@@ -198,7 +198,7 @@ class CompactionSpec extends SparkTestBase {
     // manifest, never by listing — so a multi-file overwrite,
     // compaction, or aborted job can never show a mixed table
     import graft.sources.ManifestedTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_mani").toString
+    val dir = tempDir("graft_mani").toString
     val ev = graft.core.Tables.events(spark, sf)
       .select("event_id", "user_id", "event_type", "value")
     val v1 = ev.filter(col("event_id") < 300)
@@ -272,7 +272,7 @@ class CompactionSpec extends SparkTestBase {
 
   test("manifested table: time travel + file-granular CDF reads only changed files") {
     import graft.sources.ManifestedTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdf_spec").toString
+    val dir = tempDir("graft_cdf_spec").toString
     val ev = graft.core.Tables.events(spark, sf)
       .select("event_id", "user_id", "event_type", "value")
     val a = ev.filter(col("event_id") < 300)
@@ -342,7 +342,7 @@ class CompactionSpec extends SparkTestBase {
 
   test("manifested table: schema evolution — widened appends unify, CDF crosses the seam") {
     import graft.sources.ManifestedTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_evo").toString
+    val dir = tempDir("graft_evo").toString
     val ev = graft.core.Tables.events(spark, sf)
       .select("event_id", "user_id")
     val narrow = ev.filter(col("event_id") < 300)
@@ -380,7 +380,7 @@ class CompactionSpec extends SparkTestBase {
 
   test("manifested table: describeLayout flags small-file creep; compact clears it") {
     import graft.sources.ManifestedTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_health").toString
+    val dir = tempDir("graft_health").toString
     val ev = graft.core.Tables.events(spark, sf)
       .select("event_id", "user_id", "event_type", "value")
     // simulate streaming small-file creep: five tiny appends
@@ -405,7 +405,7 @@ class CompactionSpec extends SparkTestBase {
 
   test("manifested table: clustered compaction turns file stats selective") {
     import graft.sources.ManifestedTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_clus").toString
+    val dir = tempDir("graft_clus").toString
     val ev = graft.core.Tables.events(spark, sf)
       .select("event_id", "user_id", "event_type", "value")
       .filter(col("event_id") < 800)
@@ -441,7 +441,7 @@ class CompactionSpec extends SparkTestBase {
 
   test("manifested table: copy-on-write MERGE/DELETE rewrite only touched files") {
     import graft.sources.ManifestedTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_dml").toString
+    val dir = tempDir("graft_dml").toString
     val ev = graft.core.Tables.events(spark, sf)
       .select("event_id", "user_id", "event_type", "value")
       .filter(col("event_id") < 800)
@@ -584,7 +584,7 @@ class CompactionSpec extends SparkTestBase {
       .select("event_id", "user_id", "event_type", "value")
       .filter(col("event_id") < 600)
     def fresh(): String = {
-      val d = java.nio.file.Files.createTempDirectory("graft_mm").toString
+      val d = tempDir("graft_mm").toString
       ManifestedTable.write(ev.repartitionByRange(6, col("event_id")), d)
       d
     }
@@ -683,7 +683,7 @@ class CompactionSpec extends SparkTestBase {
     // range read plan only intersecting files — with rows identical to
     // the unpruned paths in both cases.
     import graft.sources.ManifestedTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_mstats").toString
+    val dir = tempDir("graft_mstats").toString
     val ev = graft.core.Tables.events(spark, sf)
       .select("event_id", "user_id", "event_type", "value")
       .filter(col("event_id") < 800)
@@ -752,7 +752,7 @@ class CompactionSpec extends SparkTestBase {
     // same-process; cross-process local FS stays single-writer.)
     import graft.sources.{ConcurrentWriteException, ManifestedTable}
     import java.util.concurrent.{Callable, Executors, TimeUnit}
-    val dir = java.nio.file.Files.createTempDirectory("graft_thr").toString
+    val dir = tempDir("graft_thr").toString
     val ev = graft.core.Tables.events(spark, sf)
       .select("event_id", "user_id", "event_type", "value")
       .filter(col("event_id") < 800)
@@ -830,7 +830,7 @@ class CompactionSpec extends SparkTestBase {
     // pointers.
     import graft.sources.{ConcurrentWriteException, ManifestedTable}
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_wap").toString
+    val d = tempDir("graft_wap").toString
     ManifestedTable.write(
       (0L until 100L).map(k => (k, s"v$k")).toDF("k", "s"), d)
     val mainV = ManifestedTable.currentVersion(spark, d)
@@ -898,7 +898,7 @@ class CompactionSpec extends SparkTestBase {
     // O(epoch), the Delta-log/Iceberg-manifest-list construction.
     import graft.sources.ManifestedTable
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val d = tempDir("graft_ckpt").toString
     val mdir = new java.io.File(d, "_manifests")
     def msize(v: Int): Long =
       new java.io.File(mdir, f"manifest-$v%06d").length()
@@ -951,7 +951,7 @@ class CompactionSpec extends SparkTestBase {
     // vacuum fences the oldest retained version with a checkpoint
     // BEFORE dropping the manifests below it — every retained version
     // stays fully resolvable with no full manifest left in the chain
-    val d2 = java.nio.file.Files.createTempDirectory("graft_ckpt2").toString
+    val d2 = tempDir("graft_ckpt2").toString
     ManifestedTable.write(
       (0L until 50L).map(k => (k, k * 2.0)).toDF("k", "v").repartition(8), d2)
     for (i <- 2 to 5)
@@ -986,7 +986,7 @@ class CompactionSpec extends SparkTestBase {
     // compaction materializes it away, vacuum reclaims it
     import graft.sources.ManifestedTable
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dv").toString
+    val dir = tempDir("graft_dv").toString
     val ev = graft.core.Tables.events(spark, sf)
       .select("event_id", "user_id", "event_type", "value")
       .filter(col("event_id") < 800)
@@ -1095,7 +1095,7 @@ class CompactionSpec extends SparkTestBase {
       .select("event_id", "user_id", "event_type", "value")
       .filter(col("event_id") < 800)
     def fresh(): String = {
-      val d = java.nio.file.Files.createTempDirectory("graft_occ").toString
+      val d = tempDir("graft_occ").toString
       ManifestedTable.write(ev.repartitionByRange(8, col("event_id")), d)
       d
     }

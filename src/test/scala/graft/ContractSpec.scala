@@ -72,7 +72,7 @@ class ContractSpec extends SparkTestBase {
     // slot, not an absent directory the driver's compare silently skips
     // (round 11 read all-green with 7 broken queries). The marker's
     // single `_graft_error` column can never match an oracle schema.
-    val out = java.nio.file.Files.createTempDirectory("graft_vfail").toString
+    val out = tempDir("graft_vfail").toString
     Verify.writeErrorMarker(spark, out, "q00_boom",
       new RuntimeException("DATATYPE_MISMATCH: something broke"))
     val marker = spark.read.parquet(s"$out/q00_boom")

@@ -348,7 +348,7 @@ class EdgeCaseSpec extends SparkTestBase {
     // must produce zero codes → zero retrievals — never a null/div
     // failure. Exercised through the REAL query entry on a scratch dir.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq").toString
+    val dir = tempDir("graft_pq").toString
     val vecs = (0L until 5L).map(i =>
       (i, Array.fill(64)(((i * 7 + 3) % 10).toFloat / 10f), 0))
     vecs.toDF("vec_id", "embedding", "label")

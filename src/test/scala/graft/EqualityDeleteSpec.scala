@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
 class EqualityDeleteSpec extends SparkTestBase {
   import graft.sources.ManifestedTable
 
-  private val wh =
-    java.nio.file.Files.createTempDirectory("graft_eq").toString
+  private val wh = tempDir("graft_eq").toString
 
   test("eq-delete lifecycle: masked reads on every face, scoping, absorb, guards") {
     spark.conf.set("spark.sql.catalog.gm_eq",
@@ -139,8 +138,7 @@ class EqualityDeleteSpec extends SparkTestBase {
     try {
       spark.sql("CREATE TABLE gm_eqs.s (k BIGINT, v BIGINT)")
       val dir = s"$wh/s"
-      val chk = java.nio.file.Files
-        .createTempDirectory("graft_eqs_chk").toString
+      val chk = tempDir("graft_eqs_chk").toString
       val in = MemoryStream[(Long, Long, String)]
       def start() = in.toDF().toDF("k", "v", "op").writeStream
         .format("graft-manifest")

@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
   */
 class IdentityColumnsSpec extends SparkTestBase {
 
-  private val wh =
-    java.nio.file.Files.createTempDirectory("graft_idc").toString
+  private val wh = tempDir("graft_idc").toString
 
   test("identity + generated columns mint/compute on insert; explicit values follow ALWAYS/BY DEFAULT") {
     spark.conf.set("spark.sql.catalog.gm_idc",

@@ -277,7 +277,7 @@ class LlmOpsSpec extends SparkTestBase {
 
   test("partitioned sink: layout round-trips and reads prune partitions") {
     import graft.sources.PartitionedSink
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val dir = tempDir("graft-part").toString
     val docs2 = docs.withColumn("lang_part", col("lang"))
     PartitionedSink.writePartitioned(docs2, dir, Seq("lang_part"))
     val back = PartitionedSink.readPartitioned(spark, dir)
@@ -301,7 +301,7 @@ class LlmOpsSpec extends SparkTestBase {
     // is what keeps a fact×dim join from scanning every date/lang
     // partition when the dim filter is not a literal on the fact.
     import graft.sources.PartitionedSink
-    val dir = java.nio.file.Files.createTempDirectory("graft-dpp").toString
+    val dir = tempDir("graft-dpp").toString
     PartitionedSink.writePartitioned(
       docs.withColumn("lang_part", col("lang")), dir, Seq("lang_part"))
     val fact = PartitionedSink.readPartitioned(spark, dir)

@@ -19,7 +19,7 @@ class MvRewriteSpec extends SparkTestBase {
     expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
 
   test("aggregates over the base table transparently re-target the MV") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mv_rw").toString
+    val dir = tempDir("graft_mv_rw").toString
     MvCatalog.register("spec_orders_mv", src,
       Seq("o_orderstatus", "o_orderpriority"), Seq("cents"), dir)
     try {
@@ -95,7 +95,7 @@ class MvRewriteSpec extends SparkTestBase {
     // that excludes AVG — so a double measure must fall through to the
     // direct aggregate (bit-exact), while its MIN/MAX (order-free)
     // still rewrite
-    val dir = java.nio.file.Files.createTempDirectory("graft_mv_fp").toString
+    val dir = tempDir("graft_mv_fp").toString
     val fsrc = core.Tables.orders(spark, sf).select(
       col("o_orderstatus"), col("o_totalprice"))
     MvCatalog.register("spec_fp_mv", fsrc,
@@ -128,9 +128,9 @@ class MvRewriteSpec extends SparkTestBase {
     // included (the partials q175-style add/subtract arithmetic cannot
     // maintain), vanished groups absent.
     import graft.sources.ManifestedTable
-    val tdir = java.nio.file.Files.createTempDirectory("graft_mv_t").toString
-    val mdir = java.nio.file.Files.createTempDirectory("graft_mv_m").toString
-    val rdir = java.nio.file.Files.createTempDirectory("graft_mv_r").toString
+    val tdir = tempDir("graft_mv_t").toString
+    val mdir = tempDir("graft_mv_m").toString
+    val rdir = tempDir("graft_mv_r").toString
     val ev = core.Tables.events(spark, sf)
       .select(col("user_id").as("k"), col("event_id"),
         (col("event_id") % 97).as("m"))

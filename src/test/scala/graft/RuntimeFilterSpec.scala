@@ -150,7 +150,7 @@ class RuntimeFilterSpec extends SparkTestBase {
     // after the dim's filter runs); DPP reuses the broadcast exchange to
     // learn them at runtime.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpp").toString
+    val dir = tempDir("graft_dpp").toString
     val ev = core.Tables.events(spark, sf)
       .select(col("event_id"), col("event_type"), col("user_id"))
     graft.sources.PartitionedSink.writePartitioned(ev, dir, Seq("event_type"))
@@ -160,7 +160,7 @@ class RuntimeFilterSpec extends SparkTestBase {
     // be a REAL source: over a LocalRelation the filter constant-folds
     // into the local scan at optimization time and the heuristic never
     // sees a selective Filter node (measured here — no DPP injects)
-    val dimDir = java.nio.file.Files.createTempDirectory("graft_dppd").toString
+    val dimDir = tempDir("graft_dppd").toString
     Seq("click", "purchase", "view", "error", "signup").toDF("t")
       .write.mode("overwrite").parquet(dimDir)
     val dim = spark.read.parquet(dimDir)

@@ -81,7 +81,7 @@ class ScaleBenchSpec extends SparkTestBase {
 
   test("buildDir cache is keyed by base dir + generator version") {
     import java.nio.file.{Files, Paths}
-    val out = Files.createTempDirectory("scalebench-cache").toString
+    val out = tempDir("scalebench-cache").toString
     val marker = Paths.get(out, "x1", "_DONE")
     ScaleBench.buildDir(spark, sf, 1, s"$out/x1")
     assert(Files.readString(marker) ==
@@ -97,7 +97,7 @@ class ScaleBenchSpec extends SparkTestBase {
       s"base=$sf gen=${ScaleBench.GenVersion}\n")
     assert(Files.exists(Paths.get(out, "x1", "documents.parquet")))
     // a marker-less non-empty directory is NOT ours: refuse to wipe it
-    val foreign = Files.createTempDirectory("scalebench-foreign")
+    val foreign = tempDir("scalebench-foreign")
     Files.writeString(foreign.resolve("precious.txt"), "user data\n")
     val err = intercept[IllegalArgumentException] {
       ScaleBench.buildDir(spark, sf, 1, foreign.toString)

@@ -25,7 +25,7 @@ class SourceFormatsSpec extends SparkTestBase {
     .sortBy(t => t._1).toSeq
 
   test("JSON-lines round-trip with explicit schema keeps micros + types") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_json").toString
+    val dir = tempDir("graft_json").toString
     val src = sample
     src.write.mode("overwrite").option("timestampFormat", TsFmt).json(dir)
     val back = spark.read.schema(src.schema)
@@ -35,7 +35,7 @@ class SourceFormatsSpec extends SparkTestBase {
   }
 
   test("ORC round-trip preserves rows and schema") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val dir = tempDir("graft_orc").toString
     val src = sample
     src.write.mode("overwrite").orc(dir)
     val back = spark.read.schema(src.schema).orc(dir)
@@ -47,7 +47,7 @@ class SourceFormatsSpec extends SparkTestBase {
     // feed format (sitemaps, legacy enterprise exports) with no extra
     // dependency; same discipline as the other formats: explicit
     // schema, never inference
-    val dir = java.nio.file.Files.createTempDirectory("graft_xml").toString
+    val dir = tempDir("graft_xml").toString
     val src = sample
     src.write.mode("overwrite").option("rowTag", "event")
       .option("timestampFormat", TsFmt).xml(dir)
@@ -61,7 +61,7 @@ class SourceFormatsSpec extends SparkTestBase {
     // spark-avro (the external module) isn't deployed here, so the
     // container format runs through AvroFiles — avro CORE + the Hadoop
     // FileSystem API; explicit schema both ways like every other format
-    val dir = java.nio.file.Files.createTempDirectory("graft_avro").toString
+    val dir = tempDir("graft_avro").toString
     val src = sample
     graft.sources.AvroFiles.write(src, dir)
     val back = graft.sources.AvroFiles.read(spark, dir, src.schema)
@@ -96,7 +96,7 @@ class SourceFormatsSpec extends SparkTestBase {
     // through DataSourceRegister, infers the schema from ONE container
     // header (no row read — unlike JSON/CSV inference's full pass), and
     // its ScanBuilder receives Catalyst's column pruning
-    val dir = java.nio.file.Files.createTempDirectory("graft_avro2").toString
+    val dir = tempDir("graft_avro2").toString
     val src = sample
     graft.sources.AvroFiles.write(src, dir)
     val v2 = spark.read.format("graft-avro").load(dir)
@@ -130,7 +130,7 @@ class SourceFormatsSpec extends SparkTestBase {
     // them — the reader drops rows against the raw record before any
     // conversion. Exactness is therefore load-bearing (nothing
     // re-checks), which is exactly what this test holds it to.
-    val dir = java.nio.file.Files.createTempDirectory("graft_avro_f").toString
+    val dir = tempDir("graft_avro_f").toString
     val src = sample
     graft.sources.AvroFiles.write(src, dir)
     val v2 = spark.read.format("graft-avro").load(dir)
@@ -150,7 +150,7 @@ class SourceFormatsSpec extends SparkTestBase {
     // boundary semantics: a comparison against NULL drops the row (SQL
     // not-true), IsNull keeps exactly the null rows
     import spark.implicits._
-    val ndir = java.nio.file.Files.createTempDirectory("graft_avro_n").toString
+    val ndir = tempDir("graft_avro_n").toString
     graft.sources.AvroFiles.write(
       Seq((1L, Some("a")), (2L, None), (3L, Some("b")))
         .toDF("id", "s"), ndir)
@@ -166,7 +166,7 @@ class SourceFormatsSpec extends SparkTestBase {
     // .inprogress temps, the DRIVER renames on job commit (and under
     // truncate deletes the files it replaces) — so a reader never sees
     // a half-written table and SaveMode semantics hold exactly
-    val dir = java.nio.file.Files.createTempDirectory("graft_avro_w").toString
+    val dir = tempDir("graft_avro_w").toString
     val src = sample
     src.write.format("graft-avro").mode("overwrite").save(dir)
     val back1 = spark.read.format("graft-avro").load(dir)
@@ -197,7 +197,7 @@ class SourceFormatsSpec extends SparkTestBase {
     // must rename NOTHING — the pre-existing table stays byte-intact
     // and no .inprogress temp survives (task abort deletes its own)
     import org.apache.spark.sql.functions.{expr => sexpr}
-    val dir = java.nio.file.Files.createTempDirectory("graft_avro_a").toString
+    val dir = tempDir("graft_avro_a").toString
     val src = sample
     src.write.format("graft-avro").mode("overwrite").save(dir)
     val before = spark.read.format("graft-avro").load(dir).count()
@@ -217,7 +217,7 @@ class SourceFormatsSpec extends SparkTestBase {
     // empty-input behavior: zero rows commit cleanly (lazy writers leave
     // no files), and the RDD reader returns an empty frame while DSv2
     // inference — which needs one header — refuses loudly
-    val edir = java.nio.file.Files.createTempDirectory("graft_avro_e").toString
+    val edir = tempDir("graft_avro_e").toString
     graft.sources.AvroFiles.write(src.limit(0), edir)
     assert(graft.sources.AvroFiles.read(spark, edir, src.schema).count() == 0L)
     intercept[Exception] {
@@ -235,7 +235,7 @@ class SourceFormatsSpec extends SparkTestBase {
     // must plan strictly fewer partitions than there are containers,
     // with the answer unchanged (T38's selectivity assert, now inside
     // the connector).
-    val dir = java.nio.file.Files.createTempDirectory("graft_avro_s").toString
+    val dir = tempDir("graft_avro_s").toString
     val src = sample
     src.repartitionByRange(8, col("user_id"))
       .write.format("graft-avro").mode("overwrite").save(dir)
@@ -257,7 +257,7 @@ class SourceFormatsSpec extends SparkTestBase {
     // skipping is an optimization, never a dependency: a directory
     // with NO manifest (utility-written containers) plans every file
     // and still answers exactly
-    val udir = java.nio.file.Files.createTempDirectory("graft_avro_u").toString
+    val udir = tempDir("graft_avro_u").toString
     graft.sources.AvroFiles.write(
       src.repartitionByRange(4, col("user_id")), udir)
     val uf = spark.read.format("graft-avro").load(udir)
@@ -283,7 +283,7 @@ class SourceFormatsSpec extends SparkTestBase {
     // predicates into file skips. A bloom false positive only keeps a
     // file, so pruning is never a correctness dependency.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_avro_b").toString
+    val dir = tempDir("graft_avro_b").toString
     val evens = (0L until 200L by 2).map(i => (i, s"alpha_$i")).toDF("k", "s")
     val odds = (1L until 200L by 2).map(i => (i, s"beta_$i")).toDF("k", "s")
     evens.coalesce(1).write.format("graft-avro").mode("overwrite").save(dir)
@@ -323,7 +323,7 @@ class SourceFormatsSpec extends SparkTestBase {
       // classic (non-AQE) DPP path so the executed plan is directly
       // traversable; the pruning itself is planner-level either way
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val dir = java.nio.file.Files.createTempDirectory("graft_avro_rf").toString
+      val dir = tempDir("graft_avro_rf").toString
       val src = sample
       src.repartitionByRange(8, col("user_id"))
         .write.format("graft-avro").mode("overwrite").save(dir)
@@ -331,7 +331,7 @@ class SourceFormatsSpec extends SparkTestBase {
       assert(files >= 4, s"layout too coarse: $files files")
       // dim over a REAL source (a LocalRelation's filter constant-folds
       // away and the DPP heuristic never sees it — the q-T57 gotcha)
-      val dimDir = java.nio.file.Files.createTempDirectory("graft_avro_rfd").toString
+      val dimDir = tempDir("graft_avro_rfd").toString
       src.select(col("user_id").as("u")).distinct()
         .write.mode("overwrite").parquet(dimDir)
       val probes = src.select("user_id").distinct().orderBy("user_id")
@@ -369,7 +369,7 @@ class SourceFormatsSpec extends SparkTestBase {
     // container. Partial pushdown: Spark still merges min-of-mins /
     // sum-of-counts, so a missing manifest degrades to a real scan,
     // never a wrong answer — the fallback legs are pinned below.
-    val dir = java.nio.file.Files.createTempDirectory("graft_avro_g").toString
+    val dir = tempDir("graft_avro_g").toString
     val src = sample
     src.repartitionByRange(4, col("user_id"))
       .write.format("graft-avro").mode("overwrite").save(dir)
@@ -402,7 +402,7 @@ class SourceFormatsSpec extends SparkTestBase {
       src.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
         .collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq)
     // a manifest-less dir (utility-written containers): declines, exact
-    val udir = java.nio.file.Files.createTempDirectory("graft_avro_gu").toString
+    val udir = tempDir("graft_avro_gu").toString
     graft.sources.AvroFiles.write(src, udir)
     val u = spark.read.format("graft-avro").load(udir)
       .agg(count(lit(1)).as("n"))
@@ -418,8 +418,8 @@ class SourceFormatsSpec extends SparkTestBase {
     // resolves batches FROM THE LOG (deterministic replay), and a
     // restarted query resumes from its committed offset instead of
     // re-reading history.
-    val dir = java.nio.file.Files.createTempDirectory("graft_avro_t").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft_avro_tc").toString
+    val dir = tempDir("graft_avro_t").toString
+    val chk = tempDir("graft_avro_tc").toString
     val src = sample
     graft.sources.AvroFiles.write(src.filter(col("event_id") < 100), dir)
 
@@ -469,7 +469,7 @@ class SourceFormatsSpec extends SparkTestBase {
     // row-major container costs n records per file, not the container
     // — while staying PARTIAL (Spark's GlobalLimit still trims across
     // partitions, so correctness never depends on the source).
-    val dir = java.nio.file.Files.createTempDirectory("graft_avro_l").toString
+    val dir = tempDir("graft_avro_l").toString
     val src = sample
     src.repartitionByRange(4, col("user_id"))
       .write.format("graft-avro").mode("overwrite").save(dir)
@@ -497,9 +497,9 @@ class SourceFormatsSpec extends SparkTestBase {
     // add data, restart from the checkpoint, and the table holds every
     // row exactly once.
     import graft.sources.ManifestedTable
-    val src = java.nio.file.Files.createTempDirectory("graft_e2e_s").toString
-    val tbl = java.nio.file.Files.createTempDirectory("graft_e2e_t").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft_e2e_c").toString
+    val src = tempDir("graft_e2e_s").toString
+    val tbl = tempDir("graft_e2e_t").toString
+    val chk = tempDir("graft_e2e_c").toString
     val data = sample
     def land(p: org.apache.spark.sql.Column): Unit =
       data.filter(p).write.format("graft-avro").mode("append").save(src)
@@ -542,7 +542,7 @@ class SourceFormatsSpec extends SparkTestBase {
     // String.compareTo compares UTF-16 code units, which ranks
     // supplementary chars BELOW high-BMP ones)
     import spark.implicits._
-    val zdir = java.nio.file.Files.createTempDirectory("graft_avro_z").toString
+    val zdir = tempDir("graft_avro_z").toString
     Seq((1L, -0.0), (2L, 0.0), (3L, 1.5)).toDF("id", "v")
       .coalesce(1).write.format("graft-avro").mode("overwrite").save(zdir)
     val zv = spark.read.format("graft-avro").load(zdir)
@@ -553,7 +553,7 @@ class SourceFormatsSpec extends SparkTestBase {
     // U+1F600 (supplementary, UTF-8 F0 9F 98 80) vs U+FFFD (high BMP,
     // EF BF BD): codepoint order says emoji > U+FFFD; UTF-16 code-unit
     // order says the opposite (D83D < FFFD)
-    val sdir = java.nio.file.Files.createTempDirectory("graft_avro_cp").toString
+    val sdir = tempDir("graft_avro_cp").toString
     Seq((1L, "�"), (2L, "😀")).toDF("id", "s")
       .coalesce(1).write.format("graft-avro").mode("overwrite").save(sdir)
     val sv = spark.read.format("graft-avro").load(sdir)
@@ -565,7 +565,7 @@ class SourceFormatsSpec extends SparkTestBase {
   }
 
   test("ORC scan pushes predicates like parquet") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc2").toString
+    val dir = tempDir("graft_orc2").toString
     sample.write.mode("overwrite").orc(dir)
     val plan = spark.read.schema(sample.schema).orc(dir)
       .filter(col("event_id") < 50)
@@ -588,7 +588,7 @@ class SourceFormatsSpec extends SparkTestBase {
       (2L, 1717203600000000L, 10L, "click", 2.0),
       (3L, 1717210800000000L, 11L, "view", 3.0))
     def dump(shapeNtz: Boolean): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_ts").toString
+      val dir = tempDir("graft_ts").toString
       val base = micros.toDF("event_id", "us", "user_id", "event_type", "value")
       val shaped =
         if (shapeNtz) base.withColumn("ts",
@@ -622,7 +622,7 @@ class SourceFormatsSpec extends SparkTestBase {
 
   test("eventsRange pushes the time predicate on the NTZ shape") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_tsp").toString
+    val dir = tempDir("graft_tsp").toString
     Seq((1L, 1717200000000000L), (2L, 1717286400000000L))
       .toDF("event_id", "us")
       .withColumn("ts", timestamp_micros(col("us")).cast("timestamp_ntz"))
@@ -645,7 +645,7 @@ class SourceFormatsSpec extends SparkTestBase {
     // schemas, pre-evolution files surface the new column as NULL, and
     // projection pruning still reaches the scan on the merged schema.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_evo").toString
+    val dir = tempDir("graft_evo").toString
     Seq((1L, "a"), (2L, "b")).toDF("id", "v")
       .write.mode("append").parquet(dir)
     Seq((3L, "c", 30L), (4L, "d", 40L)).toDF("id", "v", "score")
@@ -663,7 +663,7 @@ class SourceFormatsSpec extends SparkTestBase {
 
   test("graft-manifest DSv2: SQL face — snapshot reads, versionAsOf, pruning, skipping") {
     import graft.sources.ManifestedTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_mface").toString
+    val dir = tempDir("graft_mface").toString
     val ev = Tables.events(spark, sf)
       .select("event_id", "user_id", "event_type", "value")
       .filter(col("event_id") < 800)
@@ -735,7 +735,7 @@ class SourceFormatsSpec extends SparkTestBase {
 
   test("graft-manifest aggregate pushdown + statistics: the manifest answers, data stays closed") {
     import graft.sources.ManifestedTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_magg").toString
+    val dir = tempDir("graft_magg").toString
     val ev = Tables.events(spark, sf)
       .select("event_id", "user_id", "event_type", "value")
       .filter(col("event_id") < 800)
@@ -798,7 +798,7 @@ class SourceFormatsSpec extends SparkTestBase {
 
   test("graft-manifest catalog: SQL-only lifecycle — CREATE/INSERT/DELETE/time travel/interop") {
     import graft.sources.ManifestedTable
-    val wh = java.nio.file.Files.createTempDirectory("graft_cat").toString
+    val wh = tempDir("graft_cat").toString
     spark.conf.set("spark.sql.catalog.gm_spec",
       "graft.sources.ManifestCatalog")
     spark.conf.set("spark.sql.catalog.gm_spec.root", wh)
@@ -953,7 +953,7 @@ class SourceFormatsSpec extends SparkTestBase {
     // DataFrame write option, audit via VERSION AS OF '<branch>' (a
     // non-numeric version is a branch name — the Iceberg convention),
     // publish/drop via CALL procedures
-    val wh = java.nio.file.Files.createTempDirectory("graft_wapsql").toString
+    val wh = tempDir("graft_wapsql").toString
     spark.conf.set("spark.sql.catalog.gm_wap",
       "graft.sources.ManifestCatalog")
     spark.conf.set("spark.sql.catalog.gm_wap.root", wh)
@@ -1015,7 +1015,7 @@ class SourceFormatsSpec extends SparkTestBase {
     // main; audit via VERSION AS OF '<branch>', then CALL
     // promote_branch publishes the whole audited run atomically
     import graft.sources.ManifestedTable
-    val wh = java.nio.file.Files.createTempDirectory("graft_swap").toString
+    val wh = tempDir("graft_swap").toString
     spark.conf.set("spark.sql.catalog.gm_sw",
       "graft.sources.ManifestCatalog")
     spark.conf.set("spark.sql.catalog.gm_sw.root", wh)
@@ -1065,7 +1065,7 @@ class SourceFormatsSpec extends SparkTestBase {
     // readers. Rows must be byte-identical either way.
     import graft.sources.ManifestedTable
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_vec").toString
+    val dir = tempDir("graft_vec").toString
     val src = (0L until 5000L)
       .map(k => (k, k * 0.5, s"tag${k % 7}", k % 2 == 0))
       .toDF("k", "v", "tag", "flag")
@@ -1106,7 +1106,7 @@ class SourceFormatsSpec extends SparkTestBase {
     // be a small fraction of the file while the answer stays exact
     import graft.sources.ManifestedTable
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_rg").toString
+    val dir = tempDir("graft_rg").toString
     // ~200k sorted rows in ONE file with tiny row groups (the block
     // size rides the hadoop conf into the staging write)
     val hconf = spark.sparkContext.hadoopConfiguration
@@ -1144,7 +1144,7 @@ class SourceFormatsSpec extends SparkTestBase {
     // from the first commit, no CALL optimize needed
     import graft.sources.ManifestedTable
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft_dw").toString
+    val wh = tempDir("graft_dw").toString
     spark.conf.set("spark.sql.catalog.gm_dw",
       "graft.sources.ManifestCatalog")
     spark.conf.set("spark.sql.catalog.gm_dw.root", wh)
@@ -1220,7 +1220,7 @@ class SourceFormatsSpec extends SparkTestBase {
     // the declared type, post-ALTER inserts land wide, and narrowing
     // or lossy changes refuse loudly
     import graft.sources.ManifestedTable
-    val wh = java.nio.file.Files.createTempDirectory("graft_wide").toString
+    val wh = tempDir("graft_wide").toString
     spark.conf.set("spark.sql.catalog.gm_wide",
       "graft.sources.ManifestCatalog")
     spark.conf.set("spark.sql.catalog.gm_wide.root", wh)
@@ -1278,7 +1278,7 @@ class SourceFormatsSpec extends SparkTestBase {
     // NAME gets a fresh id whose pre-drop bytes read NULL (never the
     // dead id's values)
     import graft.sources.ManifestedTable
-    val wh = java.nio.file.Files.createTempDirectory("graft_fid").toString
+    val wh = tempDir("graft_fid").toString
     spark.conf.set("spark.sql.catalog.gm_fid",
       "graft.sources.ManifestCatalog")
     spark.conf.set("spark.sql.catalog.gm_fid.root", wh)
@@ -1368,7 +1368,7 @@ class SourceFormatsSpec extends SparkTestBase {
     // by the planner); the job commit is one OCC-validated manifest
     // rename anchored at the operation's base snapshot
     import graft.sources.ManifestedTable
-    val wh = java.nio.file.Files.createTempDirectory("graft_rl").toString
+    val wh = tempDir("graft_rl").toString
     spark.conf.set("spark.sql.catalog.gm_rl",
       "graft.sources.ManifestCatalog")
     spark.conf.set("spark.sql.catalog.gm_rl.root", wh)
@@ -1432,7 +1432,7 @@ class SourceFormatsSpec extends SparkTestBase {
 
   test("graft-manifest catalog: CALL procedures — compact/optimize/vacuum/restore from SQL") {
     import graft.sources.ManifestedTable
-    val wh = java.nio.file.Files.createTempDirectory("graft_proc").toString
+    val wh = tempDir("graft_proc").toString
     spark.conf.set("spark.sql.catalog.gm_proc",
       "graft.sources.ManifestCatalog")
     spark.conf.set("spark.sql.catalog.gm_proc.root", wh)
@@ -1536,14 +1536,14 @@ class SourceFormatsSpec extends SparkTestBase {
     val saved = spark.conf.get("spark.sql.adaptive.enabled")
     try {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val dir = java.nio.file.Files.createTempDirectory("graft_mrf").toString
+      val dir = tempDir("graft_mrf").toString
       val ev = Tables.events(spark, sf)
         .select("event_id", "user_id", "event_type", "value")
         .filter(col("event_id") < 800)
       ManifestedTable.write(ev.repartitionByRange(8, col("event_id")), dir)
       val files = ManifestedTable.currentFiles(spark, dir).size
       assert(files >= 4)
-      val dimDir = java.nio.file.Files.createTempDirectory("graft_mrfd").toString
+      val dimDir = tempDir("graft_mrfd").toString
       ev.select(col("event_id").as("e")).distinct()
         .write.mode("overwrite").parquet(dimDir)
       val probes = ev.select("event_id").orderBy("event_id")
@@ -1577,7 +1577,7 @@ class SourceFormatsSpec extends SparkTestBase {
     import spark.implicits._
     import graft.sources.FixedWidth
     import org.apache.spark.sql.types.{LongType, StringType}
-    val dir = java.nio.file.Files.createTempDirectory("graft_fw_ls").toString
+    val dir = tempDir("graft_fw_ls").toString
     val spec = Seq(
       FixedWidth.Col("id", 1, 6, LongType),
       FixedWidth.Col("tag", 7, 8, StringType))
@@ -1597,7 +1597,7 @@ class SourceFormatsSpec extends SparkTestBase {
 
   test("ADVICE r18: restore carries schema meta; concurrent ALTER aborts; reversed CDF window translates") {
     import graft.sources.{ConcurrentWriteException, ManifestedTable}
-    val wh = java.nio.file.Files.createTempDirectory("graft_adv").toString
+    val wh = tempDir("graft_adv").toString
     spark.conf.set("spark.sql.catalog.gm_adv",
       "graft.sources.ManifestCatalog")
     spark.conf.set("spark.sql.catalog.gm_adv.root", wh)
@@ -1683,7 +1683,7 @@ class SourceFormatsSpec extends SparkTestBase {
 
   test("graft-manifest hidden partitioning: transforms, tuple pruning, evolution, rename interplay") {
     import graft.sources.ManifestedTable
-    val wh = java.nio.file.Files.createTempDirectory("graft_hp").toString
+    val wh = tempDir("graft_hp").toString
     spark.conf.set("spark.sql.catalog.gm_hp",
       "graft.sources.ManifestCatalog")
     spark.conf.set("spark.sql.catalog.gm_hp.root", wh)
@@ -1800,7 +1800,7 @@ class SourceFormatsSpec extends SparkTestBase {
 
   test("graft-manifest nested types: struct columns through write/read/DML + nested field-id evolution") {
     import graft.sources.ManifestedTable
-    val wh = java.nio.file.Files.createTempDirectory("graft_nest").toString
+    val wh = tempDir("graft_nest").toString
     spark.conf.set("spark.sql.catalog.gm_ns",
       "graft.sources.ManifestCatalog")
     spark.conf.set("spark.sql.catalog.gm_ns.root", wh)
@@ -1893,7 +1893,7 @@ class SourceFormatsSpec extends SparkTestBase {
   test("graft-manifest per-commit CDF: change types, identifier pairing, branch invisibility") {
     import graft.sources.ManifestedTable
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_tc").toString
+    val dir = tempDir("graft_tc").toString
     // v1 base, v2 append, v3 merge (update k=1, insert k=10), branch
     // staging commit (invisible), v5 delete k=2
     ManifestedTable.write(Seq((1L, 10.0), (2L, 20.0), (3L, 30.0))
@@ -1941,7 +1941,7 @@ class SourceFormatsSpec extends SparkTestBase {
 
   test("graft-manifest hidden partitioning: hours and truncate transforms") {
     import graft.sources.ManifestedTable
-    val wh = java.nio.file.Files.createTempDirectory("graft_ht").toString
+    val wh = tempDir("graft_ht").toString
     spark.conf.set("spark.sql.catalog.gm_ht",
       "graft.sources.ManifestCatalog")
     spark.conf.set("spark.sql.catalog.gm_ht.root", wh)
@@ -2053,7 +2053,7 @@ class SourceFormatsSpec extends SparkTestBase {
 
   test("graft-manifest metadata tables: files/partitions/history/snapshots/refs") {
     import graft.sources.ManifestedTable
-    val wh = java.nio.file.Files.createTempDirectory("graft_mt").toString
+    val wh = tempDir("graft_mt").toString
     spark.conf.set("spark.sql.catalog.gm_mt",
       "graft.sources.ManifestCatalog")
     spark.conf.set("spark.sql.catalog.gm_mt.root", wh)
@@ -2154,8 +2154,8 @@ class SourceFormatsSpec extends SparkTestBase {
 
   test("graft-manifest change data feed: readChangeFeed batch + streaming, DV-exact deletes, compaction skipped") {
     import graft.sources.ManifestedTable
-    val wh = java.nio.file.Files.createTempDirectory("graft_cdf").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft_cdfc").toString
+    val wh = tempDir("graft_cdf").toString
+    val chk = tempDir("graft_cdfc").toString
     spark.conf.set("spark.sql.catalog.gm_cdf",
       "graft.sources.ManifestCatalog")
     spark.conf.set("spark.sql.catalog.gm_cdf.root", wh)
@@ -2265,7 +2265,7 @@ class SourceFormatsSpec extends SparkTestBase {
   }
 
   test("graft-manifest column defaults: CREATE/ADD COLUMN DEFAULT, exists-vs-current split") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_dflt").toString
+    val wh = tempDir("graft_dflt").toString
     spark.conf.set("spark.sql.catalog.gm_df",
       "graft.sources.ManifestCatalog")
     spark.conf.set("spark.sql.catalog.gm_df.root", wh)
@@ -2335,7 +2335,7 @@ class SourceFormatsSpec extends SparkTestBase {
   }
 
   test("graft-manifest CHECK constraints: engine-enforced writes, validated ADD, DROP") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_ck").toString
+    val wh = tempDir("graft_ck").toString
     spark.conf.set("spark.sql.catalog.gm_ck",
       "graft.sources.ManifestCatalog")
     spark.conf.set("spark.sql.catalog.gm_ck.root", wh)
@@ -2404,7 +2404,7 @@ class SourceFormatsSpec extends SparkTestBase {
   }
 
   test("graft-manifest catalog views: create_view/select/replace/drop via procedures + resolution rule") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_vw").toString
+    val wh = tempDir("graft_vw").toString
     spark.conf.set("spark.sql.catalog.gm_vw",
       "graft.sources.ManifestCatalog")
     spark.conf.set("spark.sql.catalog.gm_vw.root", wh)
@@ -2490,7 +2490,7 @@ class SourceFormatsSpec extends SparkTestBase {
 
   test("graft-manifest cherrypick: lift one append commit onto the head; guards refuse the rest") {
     import graft.sources.ManifestedTable
-    val wh = java.nio.file.Files.createTempDirectory("graft_cp").toString
+    val wh = tempDir("graft_cp").toString
     spark.conf.set("spark.sql.catalog.gm_cp",
       "graft.sources.ManifestCatalog")
     spark.conf.set("spark.sql.catalog.gm_cp.root", wh)
@@ -2551,7 +2551,7 @@ class SourceFormatsSpec extends SparkTestBase {
   test("graft-manifest tags: immutable refs, VERSION AS OF tag, ref-scoped vacuum retention") {
     import graft.sources.ManifestedTable
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft_tag").toString
+    val wh = tempDir("graft_tag").toString
     spark.conf.set("spark.sql.catalog.gm_tag",
       "graft.sources.ManifestCatalog")
     spark.conf.set("spark.sql.catalog.gm_tag.root", wh)
@@ -2619,7 +2619,7 @@ class SourceFormatsSpec extends SparkTestBase {
   test("graft-manifest bloom tokens: point probes on a non-clustered column skip files") {
     import graft.sources.ManifestedTable
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_blm").toString
+    val dir = tempDir("graft_blm").toString
     val conf = spark.sessionState.newHadoopConf()
     // the property FIRST (v1, no files), so every later stage reads it
     ManifestedTable.setTableProperties(conf, dir,
@@ -2680,7 +2680,7 @@ class SourceFormatsSpec extends SparkTestBase {
   test("graft-manifest row lineage: stable row ids through compaction, CoW/MoR DML, merge, restore") {
     import graft.sources.ManifestedTable
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_rid").toString
+    val dir = tempDir("graft_rid").toString
     val conf = spark.sessionState.newHadoopConf()
     ManifestedTable.setTableProperties(conf, dir,
       Map("graft.row-lineage" -> "true"))
@@ -2739,7 +2739,7 @@ class SourceFormatsSpec extends SparkTestBase {
   }
 
   test("graft-manifest row lineage: SQL face _row_id + engine DML preserves ids per row") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_rid_sql").toString
+    val wh = tempDir("graft_rid_sql").toString
     spark.conf.set("spark.sql.catalog.gm_rlin",
       "graft.sources.ManifestCatalog")
     spark.conf.set("spark.sql.catalog.gm_rlin.root", wh)
@@ -2798,7 +2798,7 @@ class SourceFormatsSpec extends SparkTestBase {
 
   test("graft-manifest deleteWhere: pruned find-touched + metadata-only covered drops") {
     import graft.sources.ManifestedTable
-    val wh = java.nio.file.Files.createTempDirectory("graft_mdel").toString
+    val wh = tempDir("graft_mdel").toString
     spark.conf.set("spark.sql.catalog.gm_mdel",
       "graft.sources.ManifestCatalog")
     spark.conf.set("spark.sql.catalog.gm_mdel.root", wh)
@@ -2874,7 +2874,7 @@ class SourceFormatsSpec extends SparkTestBase {
   }
 
   test("graft-manifest views: stored creation context binds later sessions; temp-view refs refuse at create") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_vctx").toString
+    val wh = tempDir("graft_vctx").toString
     spark.conf.set("spark.sql.catalog.gm_vctx",
       "graft.sources.ManifestCatalog")
     spark.conf.set("spark.sql.catalog.gm_vctx.root", wh)
@@ -2916,7 +2916,7 @@ class SourceFormatsSpec extends SparkTestBase {
   }
 
   test("graft-manifest view DDL: standard CREATE/DROP VIEW text via the parser extension") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_vddl").toString
+    val wh = tempDir("graft_vddl").toString
     spark.conf.set("spark.sql.catalog.gm_vddl",
       "graft.sources.ManifestCatalog")
     spark.conf.set("spark.sql.catalog.gm_vddl.root", wh)
@@ -2978,7 +2978,7 @@ class SourceFormatsSpec extends SparkTestBase {
   test("graft-manifest constraints: RENAME/DROP of a referenced column refuses; ADD pins the validated head") {
     import graft.sources.ManifestedTable
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft_cns").toString
+    val wh = tempDir("graft_cns").toString
     spark.conf.set("spark.sql.catalog.gm_cns",
       "graft.sources.ManifestCatalog")
     spark.conf.set("spark.sql.catalog.gm_cns.root", wh)
@@ -3037,7 +3037,7 @@ class SourceFormatsSpec extends SparkTestBase {
   test("graft-manifest CDF: startingVersionInclusive is the Delta-compatible alias") {
     import graft.sources.ManifestedTable
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdfi").toString
+    val dir = tempDir("graft_cdfi").toString
     ManifestedTable.write(Seq(1L).toDF("k"), dir) // v1
     ManifestedTable.write(Seq(2L).toDF("k"), dir, overwrite = false) // v2
     ManifestedTable.write(Seq(3L).toDF("k"), dir, overwrite = false) // v3
@@ -3061,7 +3061,7 @@ class SourceFormatsSpec extends SparkTestBase {
   test("graft-manifest vectorized reads serve EXISTS defaults (no row-path downgrade)") {
     import graft.sources.ManifestedTable
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft_vdf").toString
+    val wh = tempDir("graft_vdf").toString
     spark.conf.set("spark.sql.catalog.gm_vdf",
       "graft.sources.ManifestCatalog")
     spark.conf.set("spark.sql.catalog.gm_vdf.root", wh)

@@ -14,8 +14,7 @@ import org.apache.spark.sql.functions._
   */
 class StoragePartitionedJoinSpec extends SparkTestBase {
 
-  private val wh =
-    java.nio.file.Files.createTempDirectory("graft_spj").toString
+  private val wh = tempDir("graft_spj").toString
 
   private def withCat[A](body: => A): A = {
     spark.conf.set("spark.sql.catalog.gm_spj",
@@ -190,8 +189,7 @@ class StoragePartitionedJoinSpec extends SparkTestBase {
         // split by tuple, so a continuously-fed table keeps pruning
         spark.sql("""CREATE TABLE gm_spj.ws (k BIGINT, g INT)
           PARTITIONED BY (identity(g))""")
-        val chk = java.nio.file.Files
-          .createTempDirectory("graft_spj_chk").toString
+        val chk = tempDir("graft_spj_chk").toString
         val in = MemoryStream[Long]
         val q = in.toDF().select(col("value").as("k"),
           (col("value") % 3).cast("int").as("g")).writeStream

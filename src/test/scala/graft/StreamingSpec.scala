@@ -26,8 +26,8 @@ class StreamingSpec extends SparkTestBase {
   test("streaming parquet sink + checkpoint lands exactly the source rows") {
     // the fault-tolerant file sink: checkpointed offsets + transactional
     // file commit protocol — the production landing path for streams
-    val out = java.nio.file.Files.createTempDirectory("graft_ssink").toString
-    val ck = java.nio.file.Files.createTempDirectory("graft_sck").toString
+    val out = tempDir("graft_ssink").toString
+    val ck = tempDir("graft_sck").toString
     val q = EventStreams.eventStream(spark, sf)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
       .writeStream.format("parquet")
@@ -123,7 +123,7 @@ class StreamingSpec extends SparkTestBase {
     // admits one time-ordered file per batch.
     import java.nio.file.{Files => JFiles}
     import scala.jdk.CollectionConverters._
-    val root = JFiles.createTempDirectory("graft_upd")
+    val root = tempDir("graft_upd")
     val tbl = root.resolve("events.parquet")
     spark.read.parquet(s"$sf/events.parquet")
       .repartitionByRange(3, col("ts"))
@@ -467,8 +467,8 @@ class StreamingSpec extends SparkTestBase {
     // TOUCHED since the restart — user 2 (pre-restart only) must be
     // absent, which is itself the Update-contract worth pinning.
     import spark.implicits._
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_ckpt_src")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_loc")
+    val srcDir = tempDir("graft_ckpt_src")
+    val ckpt = tempDir("graft_ckpt_loc")
     def addFile(name: String, lines: String*): Unit =
       java.nio.file.Files.write(srcDir.resolve(name),
         lines.mkString("\n").getBytes("UTF-8"))
@@ -512,7 +512,7 @@ class StreamingSpec extends SparkTestBase {
     // post-failure replay does: write the same batchId twice.
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_eo").toString
+    val dir = tempDir("graft_eo").toString
     val in = MemoryStream[SessionEvent]
     val q = in.toDF().writeStream
       .outputMode(OutputMode.Append())
@@ -554,7 +554,7 @@ class StreamingSpec extends SparkTestBase {
     import graft.sources.ManifestedTable
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_mtx").toString
+    val dir = tempDir("graft_mtx").toString
     val in = MemoryStream[SessionEvent]
     val q = in.toDF().writeStream
       .outputMode(OutputMode.Append())
@@ -603,8 +603,8 @@ class StreamingSpec extends SparkTestBase {
     // commit fails the query with a pointer at ignoreChanges (removed
     // rows cannot stream) — Delta's streaming-source contract.
     import graft.sources.ManifestedTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_mstream").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft_mschk").toString
+    val dir = tempDir("graft_mstream").toString
+    val chk = tempDir("graft_mschk").toString
     val ev = graft.core.Tables.events(spark, sf)
       .select("event_id", "user_id", "event_type", "value")
       .filter(col("event_id") < 500)
@@ -697,8 +697,8 @@ class StreamingSpec extends SparkTestBase {
     import graft.sources.ManifestedTable
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_nsink").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft_nsinkc").toString
+    val dir = tempDir("graft_nsink").toString
+    val chk = tempDir("graft_nsinkc").toString
     val in = MemoryStream[SessionEvent]
     def start() = in.toDF().writeStream
       .format("graft-manifest")
@@ -747,9 +747,9 @@ class StreamingSpec extends SparkTestBase {
     // append-shaped leader the follower equals the leader exactly
     // after a bounded drain, across a restart.
     import graft.sources.ManifestedTable
-    val leader = java.nio.file.Files.createTempDirectory("graft_cdcl").toString
-    val follower = java.nio.file.Files.createTempDirectory("graft_cdcf").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft_cdck").toString
+    val leader = tempDir("graft_cdcl").toString
+    val follower = tempDir("graft_cdcf").toString
+    val chk = tempDir("graft_cdck").toString
     val ev = graft.core.Tables.events(spark, sf)
       .select("event_id", "user_id", "event_type", "value")
       .filter(col("event_id") < 400)

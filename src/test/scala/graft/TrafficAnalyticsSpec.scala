@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.attribute.FileTime
+import java.util.concurrent.{Callable, Executors}
 import graft.core.BBox
 import graft.pipelines.TrafficAnalytics
 
@@ -16,7 +18,7 @@ class TrafficAnalyticsSpec extends SparkTestBase {
   }
 
   private lazy val dataDir: Path = {
-    val d = Files.createTempDirectory("graft-fixtures")
+    val d = tempDir("graft-fixtures")
     write(d, "speed_base.csv",
       """G1,001,SITE_A,N,StationA,1,116.30,39.90
         |G1,002,SITE_B,S,StationB,1,116.50,39.50
@@ -113,7 +115,7 @@ class TrafficAnalyticsSpec extends SparkTestBase {
   // reference's exact field-count check drops from every read — also
   // from reads whose query needs only some of the columns
   private lazy val dirtyDir: Path = {
-    val d = Files.createTempDirectory("graft-fixtures-dirty")
+    val d = tempDir("graft-fixtures-dirty")
     def copyWith(rel: String, extra: String): Unit =
       write(d, rel, Files.readString(dataDir.resolve(rel)) + extra)
     copyWith("speed_base.csv",
@@ -161,5 +163,137 @@ class TrafficAnalyticsSpec extends SparkTestBase {
 
   test("overSpeedCount: a window with no month files returns zero rows") {
     assert(ta.overSpeedCount(box, "2015-01-01", "2015-02-28").collect().isEmpty)
+  }
+
+  // ---- the parse cache: each on a fresh copy of the §1 files ------------
+
+  private def freshCopy(prefix: String): Path = {
+    val d = tempDir(prefix)
+    scala.util.Using.resource(Files.walk(dataDir)) {
+      _.filter(Files.isRegularFile(_)).forEach { f =>
+        write(d, dataDir.relativize(f).toString, Files.readString(f))
+      }
+    }
+    d
+  }
+
+  private def overMap(df: org.apache.spark.sql.DataFrame): Map[(Long, String), Long] =
+    df.collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
+
+  private def avgMap(df: org.apache.spark.sql.DataFrame): Map[(Long, String, Long), Double] =
+    df.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(3)) -> r.getDouble(2)).toMap
+
+  private val juneOver = Map((8L, "01") -> 1L, (14L, "04") -> 1L)
+  // JA again at 08:40, CLSD 150, inside its 08:00-09:00 trip
+  private val jaRow = "SITE_A,JA12345,2016-06-15 08:40:00,150,1\n"
+
+  test("parse cache: a rewritten month file changes the next answer") {
+    val d = freshCopy("graft-rewrite")
+    val t = new TrafficAnalytics(spark, d.toString)
+    def june() = overMap(t.overSpeedCount(box, "2016-06-01", "2016-06-30"))
+    assert(june() === juneOver)
+    // a new row
+    val csy = d.resolve("201606/201606CSYDATA.csv")
+    Files.writeString(csy, Files.readString(csy) + jaRow)
+    // another instance parses the file as it is now, not this one's copy
+    assert(overMap(new TrafficAnalytics(spark, d.toString)
+      .overSpeedCount(box, "2016-06-01", "2016-06-30")) ===
+      Map((8L, "01") -> 2L, (14L, "04") -> 1L))
+    assert(june() === Map((8L, "01") -> 2L, (14L, "04") -> 1L))
+    // the same length with a new mtime: JA's 130 becomes 090
+    val mtime = Files.getLastModifiedTime(csy).toMillis
+    Files.writeString(csy, Files.readString(csy)
+      .replace("08:12:00,130,", "08:12:00,090,"))
+    Files.setLastModifiedTime(csy, FileTime.fromMillis(mtime + 5000))
+    assert(june() === juneOver)
+  }
+
+  test("parse cache: a month file created after a call is read by the next one") {
+    val d = freshCopy("graft-arrival")
+    val july = Seq("201607/201607CSYDATA.csv", "201607/201607SFZDATA.csv")
+      .map(r => r -> Files.readString(d.resolve(r)))
+    july.foreach { case (r, _) => Files.delete(d.resolve(r)) }
+    val t = new TrafficAnalytics(spark, d.toString)
+    def summer() = overMap(t.overSpeedCount(box, "2016-06-01", "2016-07-31"))
+    assert(summer() === juneOver)
+    july.foreach { case (r, c) => write(d, r, c) }
+    assert(summer() === juneOver + ((9L, "01") -> 1L))
+    // a new file moved over it, as an atomic arrival does: two rows
+    // inside JB's 09:00-10:00 trip
+    val next = d.resolve("201607CSYDATA.csv.next")
+    Files.writeString(next,
+      """SITE_B,JB99999,2016-07-02 09:15:00,125,1
+        |SITE_B,JB99999,2016-07-02 09:45:00,130,1
+        |""".stripMargin)
+    Files.move(next, d.resolve(july.head._1), StandardCopyOption.REPLACE_EXISTING,
+      StandardCopyOption.ATOMIC_MOVE)
+    assert(summer() === juneOver + ((9L, "01") -> 2L))
+    // and a deleted one is no longer read
+    Files.delete(d.resolve(july.head._1))
+    assert(summer() === juneOver)
+  }
+
+  test("banded JN2: a trip across midnight matches observations on both days") {
+    val d = tempDir("graft-midnight")
+    write(d, "speed_base.csv", "G1,001,SITE_A,N,StationA,1,116.30,39.90\n")
+    write(d, "201606/201606CSYDATA.csv",
+      """SITE_A,JM00001,2016-06-15 23:50:00,125,1
+        |SITE_A,JM00001,2016-06-16 00:10:00,130,1
+        |SITE_A,JM00001,2016-06-16 00:40:00,135,1
+        |""".stripMargin)
+    write(d, "201606/201606SFZDATA.csv",
+      "ST9,2016-06-16 00:30:00,ST1,2016-06-15 23:30:00,1,JM00001,JM00001,0\n")
+    val t = new TrafficAnalytics(spark, d.toString)
+    // 00:40 is after the trip's exit: no match
+    assert(overMap(t.overSpeedCount(box, "2016-06-01", "2016-06-30")) ===
+      Map((23L, "01") -> 1L, (0L, "01") -> 1L))
+    assert(avgMap(t.averageSpeed(box, "2016-06-16")) === Map(
+      (0L, "01", 1L) -> 130.0,
+      (0L, "01", 0L) -> 130.0,
+      (23L, "01", 0L) -> 125.0))
+  }
+
+  test("parse cache: concurrent calls on one instance get the golden answers") {
+    val d = freshCopy("graft-concurrent")
+    val t = new TrafficAnalytics(spark, d.toString)
+    val pool = Executors.newFixedThreadPool(2)
+    def both(): (Map[(Long, String), Long], Map[(Long, String, Long), Double]) = {
+      val o = pool.submit(new Callable[Map[(Long, String), Long]] {
+        def call() = overMap(t.overSpeedCount(box, "2016-06-01", "2016-06-30"))
+      })
+      val a = pool.submit(new Callable[Map[(Long, String, Long), Double]] {
+        def call() = avgMap(t.averageSpeed(box, "2016-06-15"))
+      })
+      (o.get(), a.get())
+    }
+    try {
+      val golden = (juneOver, Map(
+        (8L, "01", 1L) -> 130.0, (14L, "04", 1L) -> 110.0,
+        (8L, "01", 0L) -> 130.0, (14L, "04", 0L) -> 110.0))
+      assert(both() === golden)
+      assert(both() === golden)
+      val csy = d.resolve("201606/201606CSYDATA.csv")
+      Files.writeString(csy, Files.readString(csy) + jaRow)
+      assert(both() === ((Map((8L, "01") -> 2L, (14L, "04") -> 1L), Map(
+        (8L, "01", 1L) -> 140.0, (14L, "04", 1L) -> 110.0,
+        (8L, "01", 0L) -> 140.0, (14L, "04", 0L) -> 110.0))))
+    } finally pool.shutdown()
+  }
+
+  test("destroy releases this instance's copies and nothing else") {
+    val other = spark.range(5).toDF("x").persist()
+    other.count()
+    val t = new TrafficAnalytics(spark, freshCopy("graft-destroy").toString)
+    def persisted() = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted()
+    assert(overMap(t.overSpeedCount(box, "2016-06-01", "2016-06-30")) === juneOver)
+    val copies = persisted() -- before
+    assert(copies.nonEmpty)
+    t.destroy()
+    assert(persisted().intersect(copies).isEmpty)
+    assert(other.storageLevel === org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the instance still answers, from a fresh parse
+    assert(overMap(t.overSpeedCount(box, "2016-06-01", "2016-06-30")) === juneOver)
+    other.unpersist()
   }
 }
