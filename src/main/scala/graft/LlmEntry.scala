@@ -379,50 +379,73 @@ object LlmEntry {
        |  SELECT vec_id, v, nrm, ${SimilarityOps.bucketDuckExpr("v", "nb.bits")} AS bucket
        |  FROM corpus0, nb)""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private[graft] def records: Seq[Q] = Seq(
     // ---- text analysis --------------------------------------------------
-    "q27_text_tokens" -> ((s, d) =>
+    Q("q27_text_tokens", (s, d) =>
       Tables.documents(s, d).select(
         col("doc_id"),
         expr(s"CAST(size(${tokensSpark("text")}) AS BIGINT)").as("n_tokens"),
         expr(subwordCountSpark("text")).as("n_subwords"),
-        col("n_chars"))),
+        col("n_chars")),
+      s"""SELECT doc_id, CAST(len(${tokensDuck("text")}) AS BIGINT) AS n_tokens,
+         |  ${subwordCountDuck("text")} AS n_subwords, n_chars FROM documents""".stripMargin),
 
-    "q28_text_stats" -> ((s, d) =>
+    Q("q28_text_stats", (s, d) =>
       Tables.documents(s, d)
         .withColumn("n_tokens", expr(s"CAST(size(${tokensSpark("text")}) AS BIGINT)"))
         .groupBy(col("lang"), col("source"))
         .agg(count(lit(1)).as("n_docs"),
           avg(col("n_chars")).as("avg_chars"),
-          avg(col("n_tokens")).as("avg_tokens"))),
+          avg(col("n_tokens")).as("avg_tokens")),
+      s"""SELECT lang, source, count(*) AS n_docs, avg(n_chars) AS avg_chars,
+         |  avg(n_tokens) AS avg_tokens FROM (
+         |  SELECT lang, source, n_chars,
+         |    CAST(len(${tokensDuck("text")}) AS BIGINT) AS n_tokens FROM documents)
+         |GROUP BY lang, source""".stripMargin),
 
-    "q29_top_tokens" -> ((s, d) =>
+    Q("q29_top_tokens", (s, d) =>
       // explode → map-side partial agg → 20-row result; the exploded
       // token stream never materializes.
       Tables.documents(s, d)
         .select(explode(expr(tokensSpark("text"))).as("tok"))
         .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("tok"))
-        .limit(20)),
+        .limit(20),
+      s"""SELECT tok, count(*) AS cnt FROM (
+         |  SELECT unnest(${tokensDuck("text")}) AS tok FROM documents)
+         |GROUP BY tok ORDER BY cnt DESC, tok LIMIT 20""".stripMargin),
 
-    "q30_text_quality" -> ((s, d) => {
+    Q("q30_text_quality", (s, d) => {
       val base = qualitySpark("text").foldLeft(Tables.documents(s, d)) {
         case (df, (n, e)) => df.withColumn(n, expr(e))
       }
       base.select(col("doc_id") +: qualitySpark("text").map(p => col(p._1)) :+
         expr(qualityScoreExpr).as("quality_score"): _*)
-    }),
+    },
+      {
+        val cols = qualityDuck("text").map { case (n, e) => s"$e AS $n" }.mkString(",\n  ")
+        s"""SELECT doc_id, n_tokens, stop_ratio, uniq_ratio, mean_tok_len,
+           |  $qualityScoreExpr AS quality_score FROM (
+           |  SELECT doc_id, $cols FROM documents)""".stripMargin
+      }),
 
-    "q31_langid" -> ((s, d) => {
+    Q("q31_langid", (s, d) => {
       val scored = langScoresSpark("text").foldLeft(Tables.documents(s, d)) {
         case (df, (n, e)) => df.withColumn(n, expr(e))
       }
       scored.withColumn("predicted", expr(langArgmaxExpr))
         .groupBy(col("lang"), col("predicted"))
         .agg(count(lit(1)).as("n"))
-    }),
+    },
+      {
+        val cols = langScoresDuck("text").map { case (n, e) => s"$e AS $n" }.mkString(",\n  ")
+        s"""SELECT lang, predicted, count(*) AS n FROM (
+           |  SELECT lang, $langArgmaxExpr AS predicted FROM (
+           |    SELECT lang, $cols FROM documents))
+           |GROUP BY lang, predicted""".stripMargin
+      }),
 
-    "q32_fingerprint" -> ((s, d) =>
+    Q("q32_fingerprint", (s, d) =>
       // Winnowing-style fingerprint: char-level rolling hash, md5, and the
       // minimum hashed k-shingle (= minhash with the identity map).
       Tables.documents(s, d)
@@ -432,12 +455,19 @@ object LlmEntry {
           expr(rollingHashSpark("text")).as("rolling_hash"),
           md5(col("text")).as("md5_hex"),
           expr(s"array_min(${DedupOps.shingleHashesSpark("hs")})")
-            .as("min_shingle_hash"))),
+            .as("min_shingle_hash")),
+      s"""SELECT doc_id, ${rollingHashDuck("text")} AS rolling_hash,
+         |  md5(text) AS md5_hex,
+         |  list_min(${DedupOps.shingleHashesDuck("hs")}) AS min_shingle_hash
+         |FROM (SELECT doc_id, text, ${DedupOps.tokenHashesDuck("text")} AS hs
+         |      FROM documents)""".stripMargin),
 
-    "q33_dedup_exact" -> ((s, d) =>
-      DedupOps.exactDups(DedupOps.corpus(Tables.documents(s, d)))),
+    Q("q33_dedup_exact", (s, d) =>
+      DedupOps.exactDups(DedupOps.corpus(Tables.documents(s, d))),
+      s"""WITH corpus AS (${DedupOps.corpusDuck})
+         |${DedupOps.exactDupsDuckBody}""".stripMargin),
 
-    "q34_minhash_buckets" -> ((s, d) => {
+    Q("q34_minhash_buckets", (s, d) => {
       // LSH bucket-size histogram: the shape check that candidate
       // generation is per-bucket, never all-pairs. Signatures persist
       // before the posexplode (same generate-re-evaluation pitfall as
@@ -450,9 +480,16 @@ object LlmEntry {
         .groupBy(col("band_id"), col("bucket_size"))
         .agg(count(lit(1)).as("n_buckets"))
       core.Materialize.detached(out) { sig.unpersist(blocking = false) }
-    }),
+    },
+      s"""WITH corpus AS (${DedupOps.corpusDuck}),
+         |sigs AS (${DedupOps.signaturesDuckBody}),
+         |buckets AS (${DedupOps.lshBucketsDuckBody})
+         |SELECT band_id, bucket_size, count(*) AS n_buckets FROM (
+         |  SELECT band_id, band_key, count(*) AS bucket_size FROM buckets
+         |  GROUP BY band_id, band_key)
+         |GROUP BY band_id, bucket_size""".stripMargin),
 
-    "q35_minhash_pairs" -> ((s, d) => {
+    Q("q35_minhash_pairs", (s, d) => {
       // The signature table feeds the bucket self-join AND both sides of
       // the pair-estimate join — persist it once (MEMORY_AND_DISK, the
       // 100 TB-safe level for a slim doc_id+sig[12] table) instead of
@@ -470,9 +507,19 @@ object LlmEntry {
             "i -> CASE WHEN element_at(sig_a, i) = element_at(sig_b, i) THEN 1 ELSE 0 END), " +
             s"x -> x = 1)) AS DOUBLE) / ${DedupOps.NumHashes}.0").as("est_jaccard"))
       core.Materialize.detached(out) { sig.unpersist(blocking = false) }
-    }),
+    },
+      s"""WITH corpus AS (${DedupOps.corpusDuck}),
+         |sigs AS (${DedupOps.signaturesDuckBody}),
+         |buckets AS (${DedupOps.lshBucketsDuckBody}),
+         |pairs AS (${DedupOps.candidatePairsDuckBody})
+         |SELECT id_a, id_b,
+         |  CAST(len(list_filter(list_transform(range(1, ${DedupOps.NumHashes + 1}),
+         |    i -> CASE WHEN sa.sig[i] = sb.sig[i] THEN 1 ELSE 0 END),
+         |    x -> x = 1)) AS DOUBLE) / ${DedupOps.NumHashes}.0 AS est_jaccard
+         |FROM pairs JOIN sigs sa ON sa.doc_id = id_a
+         |           JOIN sigs sb ON sb.doc_id = id_b""".stripMargin),
 
-    "q36_jaccard_verify" -> ((s, d) => {
+    Q("q36_jaccard_verify", (s, d) => {
       // Same persistence discipline: shingle sets are reused by the bucket
       // join and both sides of the verify join.
       val c = DedupOps.corpus(Tables.documents(s, d))
@@ -482,13 +529,21 @@ object LlmEntry {
       val pairs = DedupOps.candidatePairs(DedupOps.lshBucketsFromSig(sig))
       val out = DedupOps.jaccardVerifyShingled(shingled, pairs, JaccardThreshold)
       core.Materialize.detached(out) { shingled.unpersist(blocking = false) }
-    }),
+    },
+      s"""WITH corpus AS (${DedupOps.corpusDuck}),
+         |shingled AS (${DedupOps.shingledDuckBody}),
+         |sigs AS (SELECT doc_id, ${DedupOps.signatureDuck("sh")} AS sig FROM shingled),
+         |buckets AS (${DedupOps.lshBucketsDuckBody}),
+         |pairs AS (${DedupOps.candidatePairsDuckBody})
+         |${DedupOps.jaccardVerifyDuckBody(JaccardThreshold)}""".stripMargin),
 
-    "q37_simhash" -> ((s, d) =>
-      TextOps.simhashSpark(DedupOps.corpus(Tables.documents(s, d)), "doc_id", "text")),
+    Q("q37_simhash", (s, d) =>
+      TextOps.simhashSpark(DedupOps.corpus(Tables.documents(s, d)), "doc_id", "text"),
+      s"""WITH corpus AS (${DedupOps.corpusDuck})
+         |${TextOps.simhashDuck("corpus", "doc_id", "text")}""".stripMargin),
 
     // ---- exact set-similarity join (prefix filter) ----------------------
-    "q170_setsim_join" -> ((s, d) => {
+    Q("q170_setsim_join", (s, d) => {
       // The EXACT counterpart of q34–q36's MinHash-LSH: same shingle
       // sets, but candidates come from the prefix-filter theorem
       // (recall 1 by construction) instead of probabilistic banding —
@@ -501,16 +556,35 @@ object LlmEntry {
       SetJoinOps.similarPairs(elems, SetSimTNum, SetSimTDen)
         .select(col("id_a"), col("id_b"), col("ov"), col("un"),
           expr("(1000 * ov) DIV un").as("jac_pm"))
-    }),
+    },
+      // q170 mirror: the NAIVE shared-element join — every pair sharing
+      // ANY shingle, overlap counted by the element join, then the same
+      // integer threshold test. Deliberately oblivious to the prefix
+      // filter: equality proves the filter lossless (recall 1), which is
+      // the theorem q170 exists to pin.
+      s"""WITH corpus AS (${DedupOps.corpusDuck}),
+         |shingled AS (${DedupOps.shingledDuckBody}),
+         |sh AS (SELECT doc_id, unnest(sh) AS sg FROM shingled),
+         |n AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+         |ov AS (
+         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS ov
+         |  FROM sh a JOIN sh b USING (sg) WHERE a.doc_id < b.doc_id
+         |  GROUP BY 1, 2)
+         |SELECT id_a, id_b, ov, na.n + nb.n - ov AS un,
+         |       (1000 * ov) // (na.n + nb.n - ov) AS jac_pm
+         |FROM ov JOIN n na ON na.doc_id = id_a
+         |        JOIN n nb ON nb.doc_id = id_b
+         |WHERE $SetSimTDen * ov >= $SetSimTNum * (na.n + nb.n - ov)""".stripMargin),
 
     // ---- similarity search ----------------------------------------------
-    "q38_cosine_topk" -> ((s, d) => {
+    Q("q38_cosine_topk", (s, d) => {
       val p = SimilarityOps.prepped(Tables.embeddings(s, d))
       SimilarityOps.bruteForceTopK(p, p.filter(col("vec_id") < ProbeN), TopK)
         .select(col("probe_id"), col("vec_id"), col("cosine"), col("rk"))
-    }),
+    },
+      CosineTopkDuckSql),
 
-    "q39_cosine_lsh_topk" -> ((s, d) => {
+    Q("q39_cosine_lsh_topk", (s, d) => {
       // Scale path: multi-table LSH (NumTables tables × TableBits sign
       // bits over disjoint dim slices), one bucket probed per table.
       // Corpus index streams on the left; the probe set is broadcast.
@@ -518,16 +592,39 @@ object LlmEntry {
       SimilarityOps.lshTableTopK(p, p.filter(col("vec_id") < ProbeN),
           LshK, multiProbe = false)
         .select(col("probe_id"), col("vec_id"), col("cosine"), col("rk"))
-    }),
+    },
+      s"""WITH prepped AS (
+         |  SELECT vec_id, v, ${SimilarityOps.normDuck("v")} AS nrm,
+         |         ${SimilarityOps.tableBucketsDuck("v")} AS buckets FROM (
+         |    SELECT vec_id, ${SimilarityOps.toDoubleDuck("embedding")} AS v FROM embeddings)),
+         |idx AS (
+         |  SELECT vec_id, v, nrm, t.tbl, buckets[t.tbl + 1] AS bucket
+         |  FROM prepped,
+         |       (SELECT unnest(range(0, ${SimilarityOps.NumTables})) AS tbl) t),
+         |cand AS (
+         |  SELECT DISTINCT p.vec_id AS probe_id, c.vec_id,
+         |    ${SimilarityOps.dotDuck("p.v", "c.v")} / (p.nrm * c.nrm) AS cosine
+         |  FROM idx p JOIN idx c ON p.tbl = c.tbl AND p.bucket = c.bucket
+         |  WHERE p.vec_id < $ProbeN AND p.vec_id <> c.vec_id)
+         |SELECT probe_id, vec_id, cosine, rk FROM (
+         |  SELECT probe_id, vec_id, cosine,
+         |    CAST(row_number() OVER (PARTITION BY probe_id
+         |      ORDER BY cosine DESC, vec_id) AS BIGINT) AS rk FROM cand)
+         |WHERE rk <= $LshK""".stripMargin),
 
-    "q40_embed_neardup" -> ((s, d) => {
+    Q("q40_embed_neardup", (s, d) => {
       val e = Tables.embeddings(s, d)
       SimilarityOps.bucketedNearDup(vecCorpus(e, nearDupBits(e)),
           CosineDupThreshold)
         .select(col("id_a"), col("id_b"), col("cosine"))
-    }),
+    },
+      s"""WITH $vecCorpusDuckCtes
+         |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+         |  ${SimilarityOps.dotDuck("a.v", "b.v")} / (a.nrm * b.nrm) AS cosine
+         |FROM corpus a JOIN corpus b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
+         |WHERE ${SimilarityOps.dotDuck("a.v", "b.v")} / (a.nrm * b.nrm) >= $CosineDupThreshold""".stripMargin),
 
-    "q51_media_resize" -> ((s, d) =>
+    Q("q51_media_resize", (s, d) =>
       // Deterministic byte-downsample "resize" (every 4th byte) with
       // before/after sizes and a content hash of the downsampled payload.
       Tables.documents(s, d).select(
@@ -535,9 +632,13 @@ object LlmEntry {
         length(col("text")).cast("long").as("n_bytes"),
         expr(s"CAST(length(${MultimodalOps.resizeSpark("text", 4)}) AS BIGINT)")
           .as("resized_bytes"),
-        expr(s"md5(${MultimodalOps.resizeSpark("text", 4)})").as("resized_md5"))),
+        expr(s"md5(${MultimodalOps.resizeSpark("text", 4)})").as("resized_md5")),
+      s"""SELECT doc_id, CAST(length(text) AS BIGINT) AS n_bytes,
+         |  CAST(length(${MultimodalOps.resizeDuck("text", 4)}) AS BIGINT) AS resized_bytes,
+         |  md5(${MultimodalOps.resizeDuck("text", 4)}) AS resized_md5
+         |FROM documents""".stripMargin),
 
-    "q50_salted_join" -> ((s, d) => {
+    Q("q50_salted_join", (s, d) => {
       // Skew-safe salted join (TrafficOps.saltedEquiJoin): result must
       // equal the plain equi join — the oracle is the unsalted SQL.
       import graft.operators.TrafficOps
@@ -549,9 +650,13 @@ object LlmEntry {
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("cnt"),
           sum(col("event_id")).as("sum_event_id"))
-    }),
+    },
+      """SELECT c.c_mktsegment, count(*) AS cnt,
+        |  CAST(sum(e.event_id) AS BIGINT) AS sum_event_id
+        |FROM events e JOIN customer c ON e.user_id = c.c_custkey
+        |GROUP BY c.c_mktsegment""".stripMargin),
 
-    "q49_json_extract" -> ((s, d) =>
+    Q("q49_json_extract", (s, d) =>
       // JSON scalar functions (SURVEY §2.8 family): typed from_json
       // extraction — schema projection happens inside the JSON parser,
       // histogram over the extracted value.
@@ -562,10 +667,13 @@ object LlmEntry {
               org.apache.spark.sql.types.LongType)))).getField("k").as("k"))
         .groupBy((col("k") % 10).as("k_mod"))
         .agg(count(lit(1)).as("cnt"), min(col("k")).as("min_k"),
-          max(col("k")).as("max_k"))),
+          max(col("k")).as("max_k")),
+      """SELECT k % 10 AS k_mod, count(*) AS cnt, min(k) AS min_k, max(k) AS max_k
+        |FROM (SELECT CAST(json_extract(props, '$.k') AS BIGINT) AS k FROM events)
+        |GROUP BY k % 10""".stripMargin),
 
     // ---- L67: VARIANT semi-structured tier (q49's schema-less sibling) --
-    "q150_variant_extract" -> ((s, d) => {
+    Q("q150_variant_extract", (s, d) => {
       // Spark 4's VARIANT type — the tier an LLM-data pipeline actually
       // meets in crawl metadata, where no static from_json schema exists
       // because the JSON SHAPE varies row to row. The fixture derives
@@ -609,9 +717,37 @@ object LlmEntry {
           |    AS BIGINT) AS n_tag0,
           |  CAST(min(variant_get(var, '$.n', 'bigint')) AS BIGINT) AS min_n
           |FROM v GROUP BY src""".stripMargin)
-    }),
+    },
+      // q150 mirror: the same three JSON shapes, extracted with DuckDB's
+      // JSON functions; try_variant_get's NULL-on-type-mismatch becomes a
+      // json_type guard (integer-typed score cells only), absent paths
+      // are NULL in both engines
+      """WITH j AS (
+        |  SELECT event_id,
+        |    CASE event_id % 3
+        |      WHEN 0 THEN '{"meta": {"src": "web", "score": ' ||
+        |        json_extract_string(props, '$.k') ||
+        |        '}, "tags": ["alpha", "beta"]}'
+        |      WHEN 1 THEN '{"meta": {"src": "api", "score": "s' ||
+        |        json_extract_string(props, '$.k') || '"}, "n": ' ||
+        |        CAST(event_id AS VARCHAR) || '}'
+        |      ELSE '{"meta": {"src": "crawl"}}'
+        |    END AS jstr
+        |  FROM events)
+        |SELECT json_extract_string(jstr, '$.meta.src') AS src,
+        |  count(*) AS n,
+        |  count(CASE WHEN json_type(jstr, '$.meta.score')
+        |               IN ('BIGINT', 'UBIGINT') THEN 1 END) AS n_int_score,
+        |  CAST(sum(CASE WHEN json_type(jstr, '$.meta.score')
+        |                  IN ('BIGINT', 'UBIGINT')
+        |                THEN CAST(json_extract(jstr, '$.meta.score') AS BIGINT)
+        |           END) AS BIGINT) AS sum_score,
+        |  count(json_extract_string(jstr, '$.tags[0]')) AS n_tag0,
+        |  CAST(min(CAST(json_extract(jstr, '$.n') AS BIGINT)) AS BIGINT)
+        |    AS min_n
+        |FROM j GROUP BY src""".stripMargin),
 
-    "q48_llm_pipeline" -> ((s, d) => {
+    Q("q48_llm_pipeline", (s, d) => {
       // The composed LLM preprocessing chain: exact-dedup keep-first
       // (semi-join against min-id per content hash) → quality scoring →
       // threshold filter → per-lang corpus stats. Everything narrow until
@@ -633,18 +769,61 @@ object LlmEntry {
           sum(col("n_tokens")).as("total_tokens"),
           min(col("quality_score")).as("min_quality"),
           max(col("quality_score")).as("max_quality"))
-    }),
+    },
+      {
+        val cols = qualityDuck("text").map { case (n, e) => s"$e AS $n" }.mkString(",\n  ")
+        s"""WITH kept AS (
+           |  SELECT d.* FROM documents d
+           |  WHERE d.doc_id IN (
+           |    SELECT min(doc_id) FROM (
+           |      SELECT doc_id, md5(text) AS content_hash FROM documents)
+           |    GROUP BY content_hash)),
+           |scored AS (
+           |  SELECT lang, n_tokens, $qualityScoreExpr AS quality_score FROM (
+           |    SELECT lang, $cols FROM kept))
+           |SELECT lang, count(*) AS n_docs,
+           |  CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
+           |  min(quality_score) AS min_quality,
+           |  max(quality_score) AS max_quality
+           |FROM scored WHERE quality_score >= 0.5 GROUP BY lang""".stripMargin
+      }),
 
-    "q47_lsh_multiprobe" -> ((s, d) => {
+    Q("q47_lsh_multiprobe", (s, d) => {
       // Multi-probe on top of the multi-table index: own bucket + all
       // 1-bit flips, in every table.
       val p = SimilarityOps.prepped(Tables.embeddings(s, d))
       SimilarityOps.lshTableTopK(p, p.filter(col("vec_id") < ProbeN),
           LshK, multiProbe = true)
         .select(col("probe_id"), col("vec_id"), col("cosine"), col("rk"))
-    }),
+    },
+      {
+        val flips = ("bucket" +: (0 until SimilarityOps.TableBits)
+          .map(i => s"xor(bucket, ${1L << i})")).mkString("[", ", ", "]")
+        s"""WITH prepped AS (
+           |  SELECT vec_id, v, ${SimilarityOps.normDuck("v")} AS nrm,
+           |         ${SimilarityOps.tableBucketsDuck("v")} AS buckets FROM (
+           |    SELECT vec_id, ${SimilarityOps.toDoubleDuck("embedding")} AS v FROM embeddings)),
+           |idx AS (
+           |  SELECT vec_id, v, nrm, t.tbl, buckets[t.tbl + 1] AS bucket
+           |  FROM prepped,
+           |       (SELECT unnest(range(0, ${SimilarityOps.NumTables})) AS tbl) t),
+           |probes AS (
+           |  SELECT probe_id, pv, pn, tbl, unnest($flips) AS bucket FROM (
+           |    SELECT vec_id AS probe_id, v AS pv, nrm AS pn, tbl, bucket
+           |    FROM idx WHERE vec_id < $ProbeN)),
+           |cand AS (
+           |  SELECT DISTINCT p.probe_id, c.vec_id,
+           |    ${SimilarityOps.dotDuck("p.pv", "c.v")} / (p.pn * c.nrm) AS cosine
+           |  FROM idx c JOIN probes p ON p.tbl = c.tbl AND p.bucket = c.bucket
+           |  WHERE p.probe_id <> c.vec_id)
+           |SELECT probe_id, vec_id, cosine, rk FROM (
+           |  SELECT probe_id, vec_id, cosine,
+           |    CAST(row_number() OVER (PARTITION BY probe_id
+           |      ORDER BY cosine DESC, vec_id) AS BIGINT) AS rk FROM cand)
+           |WHERE rk <= $LshK""".stripMargin
+      }),
 
-    "q46_ivf_topk" -> ((s, d) => {
+    Q("q46_ivf_topk", (s, d) => {
       // IVF scale path: deterministic coarse centroids (vec_id 100..107),
       // nearest-centroid assignment, probe searches its IvfNprobe
       // nearest inverted lists.
@@ -653,19 +832,62 @@ object LlmEntry {
         p.filter(col("vec_id") < ProbeN),
         p.filter(col("vec_id").between(IvfCentroidLo, IvfCentroidHi)),
         LshK, nprobe = IvfNprobe)
-    }),
+    },
+      s"""WITH prepped AS (
+         |  SELECT vec_id, v, ${SimilarityOps.normDuck("v")} AS nrm FROM (
+         |    SELECT vec_id, ${SimilarityOps.toDoubleDuck("embedding")} AS v FROM embeddings)),
+         |centroids AS (
+         |  SELECT vec_id AS cid, v AS cv, nrm AS cn FROM prepped
+         |  WHERE vec_id BETWEEN $IvfCentroidLo AND $IvfCentroidHi),
+         |assign AS (
+         |  SELECT vec_id, v, nrm, cid FROM (
+         |    SELECT p.vec_id, p.v, p.nrm, c.cid,
+         |      row_number() OVER (PARTITION BY p.vec_id
+         |        ORDER BY ${SimilarityOps.dotDuck("p.v", "c.cv")} / (p.nrm * c.cn) DESC,
+         |                 c.cid) AS arn
+         |    FROM prepped p, centroids c)
+         |  WHERE arn = 1),
+         |passign AS (
+         |  SELECT vec_id, v, nrm, cid FROM (
+         |    SELECT p.vec_id, p.v, p.nrm, c.cid,
+         |      row_number() OVER (PARTITION BY p.vec_id
+         |        ORDER BY ${SimilarityOps.dotDuck("p.v", "c.cv")} / (p.nrm * c.cn) DESC,
+         |                 c.cid) AS arn
+         |    FROM prepped p, centroids c WHERE p.vec_id < $ProbeN)
+         |  WHERE arn <= $IvfNprobe)
+         |SELECT probe_id, vec_id, cid, cosine, rk FROM (
+         |  SELECT probe_id, vec_id, cid, cosine,
+         |    CAST(row_number() OVER (PARTITION BY probe_id
+         |      ORDER BY cosine DESC, vec_id) AS BIGINT) AS rk FROM (
+         |    SELECT p.vec_id AS probe_id, c.vec_id, c.cid,
+         |      ${SimilarityOps.dotDuck("p.v", "c.v")} / (p.nrm * c.nrm) AS cosine
+         |    FROM passign p JOIN assign c ON p.cid = c.cid
+         |    WHERE p.vec_id <> c.vec_id))
+         |WHERE rk <= $LshK""".stripMargin),
 
-    "q43_cosine_native" -> ((s, d) => {
+    Q("q43_cosine_native", (s, d) => {
       // Same result as q38 via the native codegen'd CosineSim expression
       // (injected by GraftExtensions) — one fused loop in whole-stage
       // codegen instead of the interpreted HOF fold.
       val p = SimilarityOps.prepped(Tables.embeddings(s, d))
       SimilarityOps.bruteForceTopKNative(p, p.filter(col("vec_id") < ProbeN), TopK)
         .select(col("probe_id"), col("vec_id"), col("cosine"), col("rk"))
-    }),
+    },
+      s"""WITH prepped AS (
+         |  SELECT vec_id, v, ${SimilarityOps.normDuck("v")} AS nrm FROM (
+         |    SELECT vec_id, ${SimilarityOps.toDoubleDuck("embedding")} AS v FROM embeddings))
+         |SELECT probe_id, vec_id, cosine, rk FROM (
+         |  SELECT probe_id, vec_id, cosine,
+         |    CAST(row_number() OVER (PARTITION BY probe_id
+         |      ORDER BY cosine DESC, vec_id) AS BIGINT) AS rk FROM (
+         |    SELECT p.vec_id AS probe_id, c.vec_id,
+         |      ${SimilarityOps.dotDuck("p.v", "c.v")} / (p.nrm * c.nrm) AS cosine
+         |    FROM prepped p, prepped c
+         |    WHERE p.vec_id < $ProbeN AND p.vec_id <> c.vec_id))
+         |WHERE rk <= $TopK""".stripMargin),
 
     // ---- multimodal columns ---------------------------------------------
-    "q41_media_meta" -> ((s, d) => {
+    Q("q41_media_meta", (s, d) => {
       val m = MultimodalOps.mediaTable(Tables.documents(s, d))
       m.select(
         col("doc_id"),
@@ -677,9 +899,16 @@ object LlmEntry {
         col("meta.duration_ms").as("duration_ms"),
         expr(s"CAST(ceil(length(payload) / ${MultimodalOps.FrameSize}.0) AS BIGINT)")
           .as("n_frames"))
-    }),
+    },
+      s"""SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+         |  md5(text) AS payload_md5, source AS format,
+         |  CAST(n_chars % 640 AS BIGINT) AS width,
+         |  CAST(n_chars % 480 AS BIGINT) AS height,
+         |  n_chars * 25 AS duration_ms,
+         |  CAST(ceil(octet_length(encode(text)) / ${MultimodalOps.FrameSize}.0) AS BIGINT) AS n_frames
+         |FROM documents""".stripMargin),
 
-    "q42_media_frames" -> ((s, d) =>
+    Q("q42_media_frames", (s, d) =>
       // ArrayType[StructType] end-to-end: build the frame index as an
       // array of structs, explode with inline, hash each frame slice.
       Tables.documents(s, d)
@@ -688,10 +917,15 @@ object LlmEntry {
         .select(col("doc_id"), expr("inline(frames)"), col("text"))
         .select(col("doc_id"), col("frame_id"), col("off"), col("len"),
           expr("md5(substr(text, CAST(off AS INT), CAST(len AS INT)))")
-            .as("frame_md5"))),
+            .as("frame_md5")),
+      s"""SELECT doc_id, u.f.frame_id AS frame_id, u.f.off AS off, u.f.len AS len,
+         |  md5(substr(text, CAST(u.f.off AS INT), CAST(u.f.len AS INT))) AS frame_md5
+         |FROM (SELECT doc_id, text,
+         |        unnest(${MultimodalOps.frameIndexDuck("length(text)")}) AS f
+         |      FROM documents) u""".stripMargin),
 
     // ---- context-window chunking ----------------------------------------
-    "q60_chunking" -> ((s, d) =>
+    Q("q60_chunking", (s, d) =>
       // Overlapping token-window chunks (W=ChunkTokens, stride=
       // ChunkStride): one chunk per stride start ≤ n_tokens, the last
       // chunk may be short. Narrow map + explode straight into the
@@ -708,10 +942,23 @@ object LlmEntry {
           expr(s"CAST(size(slice(toks, start, $ChunkTokens)) AS BIGINT)")
             .as("n_chunk_tokens"),
           expr(s"md5(array_join(slice(toks, start, $ChunkTokens), ' '))")
-            .as("chunk_md5"))),
+            .as("chunk_md5")),
+      s"""SELECT doc_id,
+         |  CAST((start - 1) // $ChunkStride AS BIGINT) AS chunk_id,
+         |  CAST(start AS BIGINT) AS start,
+         |  CAST(len(list_slice(toks, start,
+         |    least(start + ${ChunkTokens - 1}, n))) AS BIGINT) AS n_chunk_tokens,
+         |  md5(array_to_string(list_slice(toks, start,
+         |    least(start + ${ChunkTokens - 1}, n)), ' ')) AS chunk_md5
+         |FROM (
+         |  SELECT doc_id, toks, n,
+         |         unnest(generate_series(1, n, $ChunkStride)) AS start
+         |  FROM (SELECT doc_id, ${TextOps.tokensDuck("text")} AS toks,
+         |               len(${TextOps.tokensDuck("text")}) AS n
+         |        FROM documents))""".stripMargin),
 
     // ---- benchmark decontamination --------------------------------------
-    "q61_decontam" -> ((s, d) => {
+    Q("q61_decontam", (s, d) => {
       // Cross-corpus n-gram containment: train docs sharing ≥
       // ContainThreshold of a benchmark doc's RARE shingles are
       // contaminated. Two scale decisions:
@@ -754,14 +1001,35 @@ object LlmEntry {
         .select(col("train_id"), col("bench_id"), col("n_common"),
           col("containment"))
       core.Materialize.detached(out) { sh.unpersist(blocking = false) }
-    }),
+    },
+      s"""WITH corpus AS (${DedupOps.corpusDuck}),
+         |shingled AS (${DedupOps.shingledDuckBody}),
+         |ex AS (SELECT doc_id, unnest(sh) AS h FROM shingled),
+         |rare AS (SELECT h FROM (SELECT h, count(*) AS df FROM ex GROUP BY 1)
+         |         WHERE df <= $MaxShingleDf),
+         |exr AS (SELECT doc_id, h FROM ex JOIN rare USING (h)),
+         |be AS (SELECT doc_id AS bench_id, h FROM exr
+         |       WHERE doc_id % $BenchMod = 0
+         |         AND doc_id < ${DedupOps.NearCopyOffset}),
+         |nb AS (SELECT bench_id, count(*) AS n_bench FROM be GROUP BY 1),
+         |te AS (SELECT doc_id AS train_id, h FROM exr
+         |       WHERE NOT (doc_id % $BenchMod = 0
+         |              AND doc_id < ${DedupOps.NearCopyOffset})),
+         |c AS (SELECT train_id, bench_id, count(*) AS n_common
+         |        FROM te JOIN be USING (h) GROUP BY 1, 2)
+         |SELECT c.train_id, c.bench_id, c.n_common,
+         |       CAST(c.n_common AS DOUBLE) / CAST(nb.n_bench AS DOUBLE)
+         |         AS containment
+         |  FROM c JOIN nb ON nb.bench_id = c.bench_id
+         | WHERE CAST(c.n_common AS DOUBLE) / CAST(nb.n_bench AS DOUBLE)
+         |       >= $ContainThreshold""".stripMargin),
 
     // ---- PII scrubbing ---------------------------------------------------
     // Regex redaction of emails and long digit runs, with PLANTED PII on
     // doc_id < PiiPlantN (mirrored in the oracle) so the redaction
     // counts prove recall. Patterns stay in the regex subset Java and
     // RE2 agree on (no backrefs, no lookaround). Narrow map, no shuffle.
-    "q76_pii_scrub" -> ((s, d) => {
+    Q("q76_pii_scrub", (s, d) => {
       val planted = Tables.documents(s, d)
         .withColumn("text",
           when(col("doc_id") < PiiPlantN,
@@ -776,14 +1044,30 @@ object LlmEntry {
           "AS BIGINT)").as("n_digit_runs"),
         md5(expr(s"regexp_replace(regexp_replace(text, '$EmailRegex', " +
           s"'[EMAIL]'), '$LongDigitRegex', '[NUM]')")).as("clean_md5"))
-    }),
+    },
+      s"""WITH planted AS (
+         |  SELECT doc_id,
+         |    CASE WHEN doc_id < $PiiPlantN
+         |         THEN text || ' contact bob.smith@example.com or ' ||
+         |              CAST(doc_id AS VARCHAR) || '5550123456'
+         |         ELSE text END AS text
+         |  FROM documents)
+         |SELECT doc_id,
+         |  CAST(len(regexp_extract_all(text, '$EmailRegexDuck', 0))
+         |       AS BIGINT) AS n_emails,
+         |  CAST(len(regexp_extract_all(text, '$LongDigitRegex', 0))
+         |       AS BIGINT) AS n_digit_runs,
+         |  md5(regexp_replace(regexp_replace(text, '$EmailRegexDuck',
+         |      '[EMAIL]', 'g'), '$LongDigitRegex', '[NUM]', 'g'))
+         |    AS clean_md5
+         |FROM planted""".stripMargin),
 
     // ---- repetition detection (quality filter) ---------------------------
     // Per-doc max term frequency / n_tokens — the repetition ratio LLM
     // pipelines threshold on. Explode feeds straight into two hash
     // aggregates (token counts, then per-doc max); raw tokens shuffle
     // only as (doc_id, tok) partial counts.
-    "q77_repetition" -> ((s, d) => {
+    Q("q77_repetition", (s, d) => {
       val docs = Tables.documents(s, d)
       val tokCounts = docs
         .select(col("doc_id"), explode(expr(tokensSpark("text"))).as("tok"))
@@ -795,10 +1079,24 @@ object LlmEntry {
           (col("max_tf").cast("double") / col("n_tokens").cast("double"))
             .as("rep_ratio"))
         .filter(col("rep_ratio") >= RepRatioMin)
-    }),
+    },
+      s"""WITH tc AS (
+         |  SELECT doc_id, tok, count(*) AS c FROM (
+         |    SELECT doc_id, unnest(${tokensDuck("text")}) AS tok
+         |    FROM documents)
+         |  GROUP BY 1, 2),
+         |pd AS (SELECT doc_id, max(c) AS max_tf,
+         |              CAST(sum(c) AS BIGINT) AS n_tokens
+         |         FROM tc GROUP BY 1)
+         |SELECT doc_id, max_tf, n_tokens,
+         |       CAST(max_tf AS DOUBLE) / CAST(n_tokens AS DOUBLE)
+         |         AS rep_ratio
+         |  FROM pd
+         | WHERE CAST(max_tf AS DOUBLE) / CAST(n_tokens AS DOUBLE)
+         |       >= $RepRatioMin""".stripMargin),
 
     // ---- duplicate clustering (transitive closure of near-dup pairs) ----
-    "q71_dup_clusters" -> ((s, d) => {
+    Q("q71_dup_clusters", (s, d) => {
       // Dedup keep-one needs COMPONENTS, not pairs: (a,b) and (b,c)
       // verified near-dups must collapse to one cluster with one
       // canonical survivor. Pregel-style min-label propagation over the
@@ -815,10 +1113,24 @@ object LlmEntry {
       val out = DedupOps.dupComponents(verified)
       shingled.unpersist(blocking = false)
       out
-    }),
+    },
+      s"""WITH RECURSIVE corpus AS (${DedupOps.corpusDuck}),
+         |shingled AS (${DedupOps.shingledDuckBody}),
+         |sigs AS (SELECT doc_id, ${DedupOps.signatureDuck("sh")} AS sig FROM shingled),
+         |buckets AS (${DedupOps.lshBucketsDuckBody}),
+         |pairs AS (${DedupOps.candidatePairsDuckBody}),
+         |verified AS (${DedupOps.jaccardVerifyDuckBody(JaccardThreshold)}),
+         |edges AS (SELECT id_a AS src, id_b AS dst FROM verified
+         |          UNION ALL SELECT id_b AS src, id_a AS dst FROM verified),
+         |nodes AS (SELECT DISTINCT src AS id FROM edges),
+         |reach(a, b) AS (
+         |  SELECT id, id FROM nodes
+         |  UNION
+         |  SELECT r.a, e.dst FROM reach r JOIN edges e ON e.src = r.b)
+         |SELECT a AS doc_id, min(b) AS component FROM reach GROUP BY 1""".stripMargin),
 
     // ---- IVF centroid training: one Lloyd iteration ---------------------
-    "q81_kmeans_step" -> ((s, d) => {
+    Q("q81_kmeans_step", (s, d) => {
       // Assign every vector to its nearest (cosine) seed centroid, then
       // re-estimate each centroid as the member mean, emitted long-form
       // (cid, dim, ...). Coordinates aggregate as 1e6-quantized BIGINTs:
@@ -838,10 +1150,35 @@ object LlmEntry {
         .agg(count(lit(1)).as("n_members"), sum(col("q")).as("sum_q"))
         .withColumn("mean_val", col("sum_q").cast("double") /
           (col("n_members").cast("double") * lit(QuantScale.toDouble)))
-    }),
+    },
+      s"""WITH prepped AS (
+         |  SELECT vec_id, v, ${SimilarityOps.normDuck("v")} AS nrm FROM (
+         |    SELECT vec_id, ${SimilarityOps.toDoubleDuck("embedding")} AS v FROM embeddings)),
+         |centroids AS (
+         |  SELECT vec_id AS cid, v AS cv, nrm AS cn FROM prepped
+         |  WHERE vec_id BETWEEN $IvfCentroidLo AND $IvfCentroidHi),
+         |assign AS (
+         |  SELECT vec_id, v, cid FROM (
+         |    SELECT p.vec_id, p.v, c.cid,
+         |      row_number() OVER (PARTITION BY p.vec_id
+         |        ORDER BY ${SimilarityOps.dotDuck("p.v", "c.cv")} / (p.nrm * c.cn) DESC,
+         |                 c.cid) AS arn
+         |    FROM prepped p, centroids c)
+         |  WHERE arn = 1),
+         |exploded AS (
+         |  SELECT cid, unnest(range(1, len(v) + 1)) AS dim, v FROM assign),
+         |vals AS (
+         |  SELECT cid, CAST(dim AS BIGINT) AS dim,
+         |         CAST(round(v[dim] * $QuantScale) AS BIGINT) AS q
+         |  FROM exploded)
+         |SELECT cid, dim, count(*) AS n_members,
+         |  CAST(sum(q) AS BIGINT) AS sum_q,
+         |  CAST(CAST(sum(q) AS BIGINT) AS DOUBLE) /
+         |    (CAST(count(*) AS DOUBLE) * ${QuantScale}.0) AS mean_val
+         |FROM vals GROUP BY cid, dim""".stripMargin),
 
     // ---- data mixing: per-source weighted sampling ----------------------
-    "q82_mixture_sample" -> ((s, d) => {
+    Q("q82_mixture_sample", (s, d) => {
       // Deterministic mixture sampling: each source gets a keep-rate,
       // applied via an md5-prefix threshold (the q57 split mechanism
       // generalized to weighted mixing) — RNG-free, engine-independent,
@@ -859,10 +1196,24 @@ object LlmEntry {
           sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"),
           min(when(col("keep"), col("doc_id"))).as("min_kept_id"),
           max(when(col("keep"), col("doc_id"))).as("max_kept_id"))
-    }),
+    },
+      {
+        val arms = MixRates.map { case (src, hi) =>
+          s"WHEN source = '$src' THEN '$hi'" }.mkString(" ")
+        s"""SELECT source, count(*) AS n_total,
+           |  CAST(sum(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+           |  min(CASE WHEN kept THEN doc_id END) AS min_kept_id,
+           |  max(CASE WHEN kept THEN doc_id END) AS max_kept_id
+           |FROM (
+           |  SELECT source, doc_id,
+           |    substr(md5(CAST(doc_id AS VARCHAR)), 1, 3) <
+           |      (CASE $arms ELSE '$MixDefaultHexHi' END) AS kept
+           |  FROM documents)
+           |GROUP BY source""".stripMargin
+      }),
 
     // ---- sequence packing (sample packing) ------------------------------
-    "q83_seq_packing" -> ((s, d) => {
+    Q("q83_seq_packing", (s, d) => {
       // Greedy contiguous packing of docs into capacity-C token bins per
       // language: docs are laid out in deterministic doc_id order, the
       // running token total is cut at capacity boundaries, and a doc
@@ -904,10 +1255,23 @@ object LlmEntry {
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("bin_tokens"),
           min(col("doc_id")).as("first_doc"))
       core.Materialize.detached(out) { toks.unpersist(blocking = false) }
-    }),
+    },
+      s"""WITH t AS (
+         |  SELECT lang, doc_id,
+         |    CAST(len(${tokensDuck("text")}) AS BIGINT) AS n_tokens
+         |  FROM documents),
+         |c AS (
+         |  SELECT lang, doc_id, n_tokens,
+         |    CAST(sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
+         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
+         |  FROM t)
+         |SELECT lang, (cum - n_tokens) // $PackCapacity AS bin_id,
+         |  count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS bin_tokens,
+         |  min(doc_id) AS first_doc
+         |FROM c GROUP BY 1, 2""".stripMargin),
 
     // ---- TF-IDF top terms ----------------------------------------------
-    "q84_tfidf" -> ((s, d) => {
+    Q("q84_tfidf", (s, d) => {
       // Per-doc top-TfidfK terms by df-normalized relevance. idf = N/df
       // instead of ln(N/df): ln's last ulp differs across libm
       // implementations, N/df is rank-equivalent (ln is monotone) and
@@ -943,10 +1307,28 @@ object LlmEntry {
         .select(col("doc_id"), col("term"), col("tf"), col("df"),
           col("score"), col("rk"))
       core.Materialize.detached(out) { tf.unpersist(blocking = false) }
-    }),
+    },
+      s"""WITH toks AS (
+         |  SELECT doc_id, unnest(${tokensDuck("text")}) AS term
+         |  FROM documents),
+         |tf AS (
+         |  SELECT doc_id, term, count(*) AS tf FROM toks
+         |  WHERE term <> '' GROUP BY 1, 2),
+         |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
+         |n AS (SELECT count(*) AS n_docs FROM documents)
+         |SELECT doc_id, term, tf, df, score, rk FROM (
+         |  SELECT tf.doc_id, tf.term, tf.tf, dfreq.df,
+         |    CAST(tf.tf AS DOUBLE) * CAST(n.n_docs AS DOUBLE)
+         |      / CAST(dfreq.df AS DOUBLE) AS score,
+         |    CAST(row_number() OVER (PARTITION BY tf.doc_id
+         |      ORDER BY CAST(tf.tf AS DOUBLE) * CAST(n.n_docs AS DOUBLE)
+         |                 / CAST(dfreq.df AS DOUBLE) DESC,
+         |               tf.term) AS BIGINT) AS rk
+         |  FROM tf JOIN dfreq USING (term), n)
+         |WHERE rk <= $TfidfK""".stripMargin),
 
     // ---- int8 embedding quantization ------------------------------------
-    "q88_embed_quantize" -> ((s, d) => {
+    Q("q88_embed_quantize", (s, d) => {
       // Symmetric int8 quantization (q = round(127·x / max_abs), the
       // storage/bandwidth lever for embedding corpora: 4×(+) smaller
       // vectors, cosine error bounded by the scale). Emits per-vector
@@ -971,11 +1353,31 @@ object LlmEntry {
           "(x - qq * max_abs / 127.0) * (x - qq * max_abs / 127.0)), " +
           "CAST(0 AS DOUBLE), (acc, e) -> acc + e) / CAST(size(v) AS DOUBLE)")
           .as("mse"))
-    }),
+    },
+      """WITH p AS (
+        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |m AS (
+        |  SELECT vec_id, v,
+        |    list_reduce(list_prepend(0.0, list_transform(v, x -> abs(x))),
+        |      (a, b) -> greatest(a, b)) AS max_abs
+        |  FROM p),
+        |q AS (
+        |  SELECT vec_id, v, max_abs,
+        |    list_transform(v, x -> CASE WHEN max_abs = 0.0 THEN CAST(0 AS BIGINT)
+        |      ELSE CAST(round(127.0 * x / max_abs) AS BIGINT) END) AS qv
+        |  FROM m)
+        |SELECT vec_id, max_abs,
+        |  CAST(list_reduce(list_prepend(0::BIGINT, qv),
+        |    (acc, x) -> (acc * 31 + x) % 2147483647) AS BIGINT) AS q_checksum,
+        |  list_reduce(list_prepend(0.0, list_transform(range(1, len(v) + 1),
+        |    i -> (v[i] - qv[i] * max_abs / 127.0)
+        |       * (v[i] - qv[i] * max_abs / 127.0))),
+        |    (acc, e) -> acc + e) / CAST(len(v) AS DOUBLE) AS mse
+        |FROM q""".stripMargin),
 
     // ---- exact-k uniform sample per group -------------------------------
     // ---- L71: training-data ordering (seeded epoch shuffle + shards) ----
-    "q183_epoch_order" -> ((s, d) => {
+    Q("q183_epoch_order", (s, d) => {
       // the data-ORDERING operator a training run needs after curation
       // picks WHAT to train on (L36 samples, L34 packs, THIS orders):
       // a deterministic, seeded global shuffle with fixed shard
@@ -1003,9 +1405,22 @@ object LlmEntry {
         .withColumn("shard", substring(col("h"), 1, 2))
         .withColumn("pos", row_number().over(w).cast("long"))
         .select(col("epoch"), col("shard"), col("doc_id"), col("pos"))
-    }),
+    },
+      // q183 mirror: identical permutation arithmetic — md5 of the same
+      // seeded preimage, the same first-hex-byte shard, the same
+      // shard-local rank; hex text order is portable (q85's idiom)
+      """WITH e AS (
+        |  SELECT 'ep1' AS epoch, doc_id,
+        |         md5('ep1:' || CAST(doc_id AS VARCHAR)) AS h FROM documents
+        |  UNION ALL
+        |  SELECT 'ep2' AS epoch, doc_id,
+        |         md5('ep2:' || CAST(doc_id AS VARCHAR)) AS h FROM documents)
+        |SELECT epoch, substr(h, 1, 2) AS shard, doc_id,
+        |  CAST(row_number() OVER (PARTITION BY epoch, substr(h, 1, 2)
+        |    ORDER BY h, doc_id) AS BIGINT) AS pos
+        |FROM e""".stripMargin),
 
-    "q85_group_sample" -> ((s, d) => {
+    Q("q85_group_sample", (s, d) => {
       // Deterministic exact-k uniform sample per language: rank rows by
       // the md5 of their id (a fixed pseudo-random permutation — no RNG,
       // same sample on every engine and every rerun) and keep the first
@@ -1021,10 +1436,17 @@ object LlmEntry {
           md5(col("doc_id").cast("string").cast("binary")).as("h"))
         .withColumn("rk", row_number().over(w).cast("long"))
         .filter(col("rk") <= SampleK)
-    }),
+    },
+      s"""SELECT lang, doc_id, h, rk FROM (
+         |  SELECT lang, doc_id, h,
+         |    CAST(row_number() OVER (PARTITION BY lang ORDER BY h, doc_id)
+         |      AS BIGINT) AS rk
+         |  FROM (SELECT lang, doc_id, md5(CAST(doc_id AS VARCHAR)) AS h
+         |        FROM documents))
+         |WHERE rk <= $SampleK""".stripMargin),
 
     // ---- bloom-screened contamination check -----------------------------
-    "q89_bloom_screen" -> ((s, d) => {
+    Q("q89_bloom_screen", (s, d) => {
       // Contamination SCREEN: train docs sharing ≥ ScreenMinHits
       // shingles with the benchmark set. q61 computes rare-shingle
       // containment (inherently needs corpus-wide df counts); this is
@@ -1077,10 +1499,24 @@ object LlmEntry {
         sh.unpersist(blocking = false)
         bench.unpersist(blocking = false)
       }
-    }),
+    },
+      // The oracle is ALL-EXACT (no bloom): the screen must not change the
+      // result, only the plan — any bloom false negative would show here.
+      s"""WITH corpus AS (${DedupOps.corpusDuck}),
+         |shingled AS (${DedupOps.shingledDuckBody}),
+         |ex AS (SELECT doc_id, unnest(sh) AS h FROM shingled),
+         |bench AS (SELECT DISTINCT h FROM ex
+         |          WHERE doc_id % $BenchMod = 0
+         |            AND doc_id < ${DedupOps.NearCopyOffset}),
+         |tr AS (SELECT doc_id AS train_id, h FROM ex
+         |       WHERE NOT (doc_id % $BenchMod = 0
+         |              AND doc_id < ${DedupOps.NearCopyOffset}))
+         |SELECT train_id, count(*) AS n_hits
+         |  FROM tr JOIN bench USING (h) GROUP BY 1
+         |HAVING count(*) >= $ScreenMinHits""".stripMargin),
 
     // ---- incremental dedup vs a reference corpus ------------------------
-    "q90_incremental_dedup" -> ((s, d) => {
+    Q("q90_incremental_dedup", (s, d) => {
       // The nightly-crawl shape: dedup ONLY the new snapshot against the
       // accumulated reference corpus, and classify each new doc as
       // exact-dup / near-dup / unique (exact ≻ near). Scale contract:
@@ -1143,10 +1579,55 @@ object LlmEntry {
           when(col("is_exact"), "exact").when(col("is_near"), "near")
             .otherwise("unique").as("verdict"))
       core.Materialize.detached(out) { prep.unpersist(blocking = false) }
-    }),
+    },
+      s"""WITH corpus AS (${DedupOps.corpusDuck}),
+         |prep AS (
+         |  SELECT s.doc_id, h.content_hash, s.sh
+         |  FROM (${DedupOps.shingledDuckBody}) s
+         |  JOIN (SELECT doc_id, ${DedupOps.contentHashDuck("text")}
+         |            AS content_hash
+         |        FROM corpus) h ON h.doc_id = s.doc_id),
+         |newdocs AS (SELECT * FROM prep
+         |            WHERE doc_id % $NewMod = $NewResidue
+         |               OR (doc_id >= ${DedupOps.NearCopyOffset}
+         |                   AND doc_id < ${DedupOps.NearCopyOffset + DedupOps.NearCopyN})
+         |               OR (doc_id >= ${DedupOps.ExactCopyOffset}
+         |                   AND doc_id < ${DedupOps.PlantCeil})),
+         |refdocs AS (SELECT * FROM prep
+         |            WHERE NOT (doc_id % $NewMod = $NewResidue
+         |                    OR (doc_id >= ${DedupOps.NearCopyOffset}
+         |                        AND doc_id < ${DedupOps.NearCopyOffset + DedupOps.NearCopyN})
+         |                    OR (doc_id >= ${DedupOps.ExactCopyOffset}
+         |                        AND doc_id < ${DedupOps.PlantCeil}))),
+         |exact AS (SELECT DISTINCT n.doc_id
+         |          FROM newdocs n JOIN refdocs r USING (content_hash)),
+         |sigs AS (SELECT doc_id, ${DedupOps.signatureDuck("sh")} AS sig
+         |         FROM prep),
+         |buckets AS (${DedupOps.lshBucketsDuckBody}),
+         |cand AS (
+         |  SELECT DISTINCT nb.doc_id AS new_id, rb.doc_id AS ref_id
+         |  FROM buckets nb JOIN buckets rb
+         |    ON nb.band_id = rb.band_id AND nb.band_key = rb.band_key
+         |  WHERE nb.doc_id IN (SELECT doc_id FROM newdocs)
+         |    AND rb.doc_id IN (SELECT doc_id FROM refdocs)),
+         |near AS (
+         |  SELECT DISTINCT c.new_id AS doc_id
+         |  FROM cand c
+         |  JOIN newdocs a ON a.doc_id = c.new_id
+         |  JOIN refdocs b ON b.doc_id = c.ref_id
+         |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
+         |        CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE)
+         |        >= $JaccardThreshold)
+         |SELECT n.doc_id,
+         |  CASE WHEN e.doc_id IS NOT NULL THEN 'exact'
+         |       WHEN nr.doc_id IS NOT NULL THEN 'near'
+         |       ELSE 'unique' END AS verdict
+         |FROM newdocs n
+         |LEFT JOIN exact e ON e.doc_id = n.doc_id
+         |LEFT JOIN near nr ON nr.doc_id = n.doc_id""".stripMargin),
 
     // ---- cross-document repeated-paragraph fraction ---------------------
-    "q92_par_dedup" -> ((s, d) => {
+    Q("q92_par_dedup", (s, d) => {
       // The Gopher/MassiveText paragraph-level quality signal: what
       // fraction of a doc's paragraphs also appear verbatim in OTHER
       // docs. Boilerplate-heavy pages score high and get dropped; q77
@@ -1180,10 +1661,31 @@ object LlmEntry {
         .withColumn("dup_frac",
           col("n_dup_pars").cast("double") / col("n_pars").cast("double"))
       core.Materialize.detached(out) { pars.unpersist(blocking = false) }
-    }),
+    },
+      s"""WITH corpus AS (${DedupOps.corpusDuck}),
+         |toked AS (
+         |  SELECT doc_id, ${TextOps.tokensDuck("text")} AS toks,
+         |         len(toks) AS n
+         |  FROM corpus),
+         |pars AS (
+         |  SELECT doc_id,
+         |    unnest(list_transform(
+         |      range(1, CAST(ceil(n / $ParTokens.0) AS BIGINT) + 1),
+         |      i -> md5(array_to_string(list_slice(toks,
+         |             (i - 1) * $ParTokens + 1,
+         |             least((i - 1) * $ParTokens + $ParTokens, n)), ' '))))
+         |      AS ph
+         |  FROM toked WHERE n > 0),
+         |dfq AS (SELECT ph, count(DISTINCT doc_id) AS ndocs
+         |        FROM pars GROUP BY 1)
+         |SELECT doc_id, count(*) AS n_pars,
+         |  count(*) FILTER (ndocs > 1) AS n_dup_pars,
+         |  CAST(count(*) FILTER (ndocs > 1) AS DOUBLE) /
+         |    CAST(count(*) AS DOUBLE) AS dup_frac
+         |FROM pars JOIN dfq USING (ph) GROUP BY 1""".stripMargin),
 
     // ---- cross-doc block dedup with document REWRITE --------------------
-    "q126_block_dedup_rewrite" -> ((s, d) => {
+    Q("q126_block_dedup_rewrite", (s, d) => {
       // q92 reports the repeated-paragraph fraction; this PERFORMS the
       // RefinedWeb/C4-style repair: every block that appears verbatim
       // in more than one document is removed from ALL of them and the
@@ -1232,10 +1734,43 @@ object LlmEntry {
           md5(col("clean").cast("binary")).as("clean_md5"),
           length(col("clean")).cast("long").as("clean_chars"))
       core.Materialize.detached(out) { blocks.unpersist(blocking = false) }
-    }),
+    },
+      // q126 mirror: same blocks (struct keeps (i, btext) paired through
+      // the unnest), same ndocs=1 keep rule, same order-pinned rebuild
+      s"""WITH corpus AS (${DedupOps.corpusDuck}),
+         |toked AS (
+         |  SELECT doc_id, ${tokensDuck("text")} AS toks,
+         |         len(toks) AS n
+         |  FROM corpus),
+         |blocks AS (
+         |  SELECT doc_id, u.i, u.btext FROM (
+         |    SELECT doc_id, unnest(list_transform(
+         |      range(1, CAST(ceil(n / $ParTokens.0) AS BIGINT) + 1),
+         |      i -> struct_pack(i := i - 1,
+         |        btext := array_to_string(list_slice(toks,
+         |          (i - 1) * $ParTokens + 1,
+         |          least((i - 1) * $ParTokens + $ParTokens, n)), ' '))))
+         |      AS u
+         |    FROM toked WHERE n > 0)),
+         |dfq AS (
+         |  SELECT md5(btext) AS bh, count(DISTINCT doc_id) AS ndocs
+         |  FROM blocks GROUP BY 1),
+         |kept AS (
+         |  SELECT b.doc_id, b.i, b.btext
+         |  FROM blocks b JOIN dfq ON md5(b.btext) = dfq.bh
+         |  WHERE ndocs = 1),
+         |rebuilt AS (
+         |  SELECT doc_id, count(*) AS n_kept,
+         |    array_to_string(list(btext ORDER BY i), ' ') AS clean
+         |  FROM kept GROUP BY 1),
+         |tot AS (SELECT doc_id, count(*) AS n_blocks FROM blocks GROUP BY 1)
+         |SELECT t.doc_id, t.n_blocks, coalesce(r.n_kept, 0) AS n_kept,
+         |  md5(r.clean) AS clean_md5,
+         |  CAST(length(r.clean) AS BIGINT) AS clean_chars
+         |FROM tot t LEFT JOIN rebuilt r USING (doc_id)""".stripMargin),
 
     // ---- shingle document frequency via the native generator ------------
-    "q93_shingle_df" -> ((s, d) =>
+    Q("q93_shingle_df", (s, d) =>
       // The shared-shingle DF table (whose complement is q61's rare
       // set), produced by the UDTF-tier `shingle_rows` generator:
       // Generate streams straight into the partial aggregate — no
@@ -1245,10 +1780,15 @@ object LlmEntry {
       DedupOps.corpus(Tables.documents(s, d))
         .selectExpr("doc_id", s"shingle_rows(text, ${DedupOps.ShingleK})")
         .groupBy(col("h")).agg(count(lit(1)).as("df"))
-        .filter(col("df") >= 2)),
+        .filter(col("df") >= 2),
+      s"""WITH corpus AS (${DedupOps.corpusDuck}),
+         |shingled AS (${DedupOps.shingledDuckBody})
+         |SELECT h, count(*) AS df
+         |FROM (SELECT doc_id, unnest(sh) AS h FROM shingled)
+         |GROUP BY 1 HAVING count(*) >= 2""".stripMargin),
 
     // ---- length-quartile stratification ---------------------------------
-    "q94_length_strata" -> ((s, d) => {
+    Q("q94_length_strata", (s, d) => {
       // Curation report: bucket the corpus by exact token-count
       // quartiles and count per (lang, stratum) — the length histogram
       // behind "drop the shortest quartile / cap the longest" curation
@@ -1275,10 +1815,27 @@ object LlmEntry {
         .agg(count(lit(1)).as("n_docs"),
           (sum(col("n_tokens")).cast("double") /
             count(lit(1)).cast("double")).as("avg_tokens"))
-    }),
+    },
+      s"""WITH toks AS (
+         |  SELECT doc_id, lang,
+         |         CAST(len(${tokensDuck("text")}) AS BIGINT) AS n_tokens
+         |  FROM documents),
+         |th AS (SELECT quantile_cont(n_tokens, 0.25) AS q1,
+         |              quantile_cont(n_tokens, 0.5) AS q2,
+         |              quantile_cont(n_tokens, 0.75) AS q3
+         |       FROM toks)
+         |SELECT lang,
+         |  CASE WHEN n_tokens <= q1 THEN 0
+         |       WHEN n_tokens <= q2 THEN 1
+         |       WHEN n_tokens <= q3 THEN 2
+         |       ELSE 3 END AS stratum,
+         |  count(*) AS n_docs,
+         |  CAST(sum(n_tokens) AS DOUBLE) / CAST(count(*) AS DOUBLE)
+         |    AS avg_tokens
+         |FROM toks, th GROUP BY 1, 2""".stripMargin),
 
     // ---- semantic dedup (SemDeDup: cluster, then prune near-copies) ------
-    "q95_semantic_dedup" -> ((s, d) => {
+    Q("q95_semantic_dedup", (s, d) => {
       // The SemDeDup curation pass: assign every embedding to its
       // nearest coarse centroid, then drop any vector with a lower-id
       // cosine-near-copy in the same cluster — keep-one verdicts, which
@@ -1304,10 +1861,43 @@ object LlmEntry {
       val out = SimilarityOps.semanticDedup(assigned, bits,
         CosineDupThreshold)
       core.Materialize.detached(out) { assigned.unpersist(blocking = false) }
-    }),
+    },
+      // q95 mirror: same planted corpus (vecCorpusDuckCtes), same arn=1
+      // nearest-centroid assignment as q46, same adaptive-width sign-bucket
+      // candidate join as q40 (bits from the nb CTE — the integer-exact
+      // mirror of the Spark side's count-derived width) — cosines are the
+      // identical left-to-right fold, so the threshold cut and min/count
+      // aggregates are bit-stable. The oracle stays MEMBER-LEVEL on
+      // purpose: the Spark side's exact-duplicate collapse is an internal
+      // optimization whose output must be indistinguishable from this
+      // reference pair join.
+      s"""WITH $vecCorpusDuckCtes,
+         |c AS (SELECT vec_id, v, nrm FROM corpus),
+         |centroids AS (
+         |  SELECT vec_id AS cid, v AS cv, nrm AS cn FROM c
+         |  WHERE vec_id BETWEEN $IvfCentroidLo AND $IvfCentroidHi),
+         |assign AS (
+         |  SELECT vec_id, v, nrm, cid FROM (
+         |    SELECT p.vec_id, p.v, p.nrm, ct.cid,
+         |      row_number() OVER (PARTITION BY p.vec_id
+         |        ORDER BY ${SimilarityOps.dotDuck("p.v", "ct.cv")} / (p.nrm * ct.cn) DESC,
+         |                 ct.cid) AS arn
+         |    FROM c p, centroids ct)
+         |  WHERE arn = 1),
+         |wb AS (
+         |  SELECT vec_id, v, nrm, cid,
+         |         ${SimilarityOps.bucketDuckExpr("v", "nb.bits")} AS bucket
+         |  FROM assign, nb)
+         |SELECT b.vec_id AS vec_id, b.cid, min(a.vec_id) AS dup_of,
+         |  count(*) AS n_dups
+         |FROM wb a JOIN wb b ON a.cid = b.cid AND a.bucket = b.bucket
+         |  AND a.vec_id < b.vec_id
+         |WHERE ${SimilarityOps.dotDuck("a.v", "b.v")} / (a.nrm * b.nrm)
+         |  >= $CosineDupThreshold
+         |GROUP BY b.vec_id, b.cid""".stripMargin),
 
     // ---- exact-substring span dedup --------------------------------------
-    "q96_span_dedup" -> ((s, d) =>
+    Q("q96_span_dedup", (s, d) =>
       // Passage-level duplication report (the exact-substring dedup pass):
       // maximal runs of consecutive SpanN-gram positions that occur more
       // than once in the corpus — catches a copied paragraph inside an
@@ -1319,10 +1909,42 @@ object LlmEntry {
       // grams shuffle as a dual-modulus BIGINT pair (16 bytes, integer
       // folds only — r10; was md5 of the joined token slice), islands
       // merge via one window per doc.
-      DedupOps.spanDedup(DedupOps.corpus(Tables.documents(s, d)))),
+      DedupOps.spanDedup(DedupOps.corpus(Tables.documents(s, d))),
+      // q96 mirror: 1-based gram positions (Spark sequence(1, n-k+1) ≡
+      // DuckDB range(1, n-k+2)), dual-modulus polynomial gram key over
+      // wide per-token char hashes (bit-identical integer folds on both
+      // sides; statistical collision bound in DedupOps.spanDedup),
+      // islands via pos − row_number — integer arithmetic end to end.
+      s"""WITH corpus AS (${DedupOps.corpusDuck}),
+         |toks AS (SELECT doc_id, ${tokensDuck("text")} AS tk FROM corpus),
+         |hs AS (
+         |  SELECT doc_id,
+         |    list_transform(tk, t -> ${DedupOps.wideHashDuck("t", DedupOps.SpanP1)}) AS h1,
+         |    list_transform(tk, t -> ${DedupOps.wideHashDuck("t", DedupOps.SpanP2)}) AS h2,
+         |    len(tk) AS n
+         |  FROM toks WHERE len(tk) >= ${DedupOps.SpanN}),
+         |grams AS (
+         |  SELECT doc_id, CAST(i AS BIGINT) AS pos,
+         |    ${DedupOps.spanGramDuck("h1", "i", DedupOps.SpanP1)} AS g1,
+         |    ${DedupOps.spanGramDuck("h2", "i", DedupOps.SpanP2)} AS g2
+         |  FROM (SELECT doc_id, h1, h2,
+         |          unnest(range(1, n - ${DedupOps.SpanN - 2})) AS i
+         |        FROM hs)),
+         |dup AS (SELECT g1, g2 FROM grams GROUP BY g1, g2 HAVING count(*) > 1),
+         |marked AS (
+         |  SELECT doc_id, pos,
+         |    pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
+         |  FROM grams JOIN dup USING (g1, g2)),
+         |spans AS (
+         |  SELECT doc_id, grp, count(*) AS span_len, min(pos) AS strt
+         |  FROM marked GROUP BY doc_id, grp)
+         |SELECT doc_id, CAST(sum(span_len) AS BIGINT) AS n_dup_grams,
+         |  count(*) AS n_spans, max(span_len) AS max_span_grams,
+         |  min(strt) AS first_dup_pos
+         |FROM spans GROUP BY doc_id""".stripMargin),
 
     // ---- ANN recall report -------------------------------------------------
-    "q97_ann_recall" -> ((s, d) => {
+    Q("q97_ann_recall", (s, d) => {
       // The number an ANN user actually needs (VERDICT r2 §missing-2,
       // measured in AnnRecallSpec, now a first-class query): recall@k of
       // each approximate index against the exact brute-force top-k, per
@@ -1360,10 +1982,99 @@ object LlmEntry {
       core.Materialize.detached(out) {
         truth.unpersist(blocking = false); p.unpersist(blocking = false)
       }
-    }),
+    },
+      // q97 mirror: truth = q38's brute force at k=$LshK; the three
+      // approximate arms are q46/q39/q47's CTEs verbatim; hit counts are
+      // integers and recall is one exact IEEE division.
+      {
+        val flips = ("bucket" +: (0 until SimilarityOps.TableBits)
+          .map(i => s"xor(bucket, ${1L << i})")).mkString("[", ", ", "]")
+        s"""WITH prepped AS (
+           |  SELECT vec_id, v, ${SimilarityOps.normDuck("v")} AS nrm,
+           |         ${SimilarityOps.tableBucketsDuck("v")} AS buckets FROM (
+           |    SELECT vec_id, ${SimilarityOps.toDoubleDuck("embedding")} AS v FROM embeddings)),
+           |truth AS (
+           |  SELECT probe_id, vec_id FROM (
+           |    SELECT probe_id, vec_id,
+           |      row_number() OVER (PARTITION BY probe_id
+           |        ORDER BY cosine DESC, vec_id) AS rk FROM (
+           |      SELECT p.vec_id AS probe_id, c.vec_id,
+           |        ${SimilarityOps.dotDuck("p.v", "c.v")} / (p.nrm * c.nrm) AS cosine
+           |      FROM prepped p, prepped c
+           |      WHERE p.vec_id < $ProbeN AND p.vec_id <> c.vec_id))
+           |  WHERE rk <= $LshK),
+           |idx AS (
+           |  SELECT vec_id, v, nrm, t.tbl, buckets[t.tbl + 1] AS bucket
+           |  FROM prepped,
+           |       (SELECT unnest(range(0, ${SimilarityOps.NumTables})) AS tbl) t),
+           |sing AS (
+           |  SELECT probe_id, vec_id FROM (
+           |    SELECT probe_id, vec_id,
+           |      row_number() OVER (PARTITION BY probe_id
+           |        ORDER BY cosine DESC, vec_id) AS rk FROM (
+           |      SELECT DISTINCT p.vec_id AS probe_id, c.vec_id,
+           |        ${SimilarityOps.dotDuck("p.v", "c.v")} / (p.nrm * c.nrm) AS cosine
+           |      FROM idx p JOIN idx c ON p.tbl = c.tbl AND p.bucket = c.bucket
+           |      WHERE p.vec_id < $ProbeN AND p.vec_id <> c.vec_id))
+           |  WHERE rk <= $LshK),
+           |mprobes AS (
+           |  SELECT probe_id, pv, pn, tbl, unnest($flips) AS bucket FROM (
+           |    SELECT vec_id AS probe_id, v AS pv, nrm AS pn, tbl, bucket
+           |    FROM idx WHERE vec_id < $ProbeN)),
+           |multi AS (
+           |  SELECT probe_id, vec_id FROM (
+           |    SELECT probe_id, vec_id,
+           |      row_number() OVER (PARTITION BY probe_id
+           |        ORDER BY cosine DESC, vec_id) AS rk FROM (
+           |      SELECT DISTINCT p.probe_id, c.vec_id,
+           |        ${SimilarityOps.dotDuck("p.pv", "c.v")} / (p.pn * c.nrm) AS cosine
+           |      FROM idx c JOIN mprobes p ON p.tbl = c.tbl AND p.bucket = c.bucket
+           |      WHERE p.probe_id <> c.vec_id))
+           |  WHERE rk <= $LshK),
+           |centroids AS (
+           |  SELECT vec_id AS cid, v AS cv, nrm AS cn FROM prepped
+           |  WHERE vec_id BETWEEN $IvfCentroidLo AND $IvfCentroidHi),
+           |assign AS (
+           |  SELECT vec_id, v, nrm, cid FROM (
+           |    SELECT p.vec_id, p.v, p.nrm, ct.cid,
+           |      row_number() OVER (PARTITION BY p.vec_id
+           |        ORDER BY ${SimilarityOps.dotDuck("p.v", "ct.cv")} / (p.nrm * ct.cn) DESC,
+           |                 ct.cid) AS arn
+           |    FROM prepped p, centroids ct)
+           |  WHERE arn = 1),
+           |passign AS (
+           |  SELECT vec_id, v, nrm, cid FROM (
+           |    SELECT p.vec_id, p.v, p.nrm, ct.cid,
+           |      row_number() OVER (PARTITION BY p.vec_id
+           |        ORDER BY ${SimilarityOps.dotDuck("p.v", "ct.cv")} / (p.nrm * ct.cn) DESC,
+           |                 ct.cid) AS arn
+           |    FROM prepped p, centroids ct WHERE p.vec_id < $ProbeN)
+           |  WHERE arn <= $IvfNprobe),
+           |ivf AS (
+           |  SELECT probe_id, vec_id FROM (
+           |    SELECT probe_id, vec_id,
+           |      row_number() OVER (PARTITION BY probe_id
+           |        ORDER BY cosine DESC, vec_id) AS rk FROM (
+           |      SELECT p.vec_id AS probe_id, c.vec_id,
+           |        ${SimilarityOps.dotDuck("p.v", "c.v")} / (p.nrm * c.nrm) AS cosine
+           |      FROM passign p JOIN assign c ON p.cid = c.cid
+           |      WHERE p.vec_id <> c.vec_id))
+           |  WHERE rk <= $LshK),
+           |approx AS (
+           |  SELECT 'ivf_nprobe3' AS method, probe_id, vec_id FROM ivf
+           |  UNION ALL SELECT 'lsh_single', probe_id, vec_id FROM sing
+           |  UNION ALL SELECT 'lsh_multiprobe', probe_id, vec_id FROM multi),
+           |hits AS (
+           |  SELECT method, count(*) AS n_hits
+           |  FROM approx JOIN truth USING (probe_id, vec_id) GROUP BY method),
+           |nt AS (SELECT count(*) AS n_truth FROM truth)
+           |SELECT method, n_hits, n_truth,
+           |  CAST(n_hits AS DOUBLE) / CAST(n_truth AS DOUBLE) AS recall
+           |FROM hits, nt""".stripMargin
+      }),
 
     // ---- token-budget corpus selection ------------------------------------
-    "q98_budget_select" -> ((s, d) => {
+    Q("q98_budget_select", (s, d) => {
       // Quality-ordered token-budget curation: per language, admit
       // documents best-quality-first until the token budget; a doc is
       // admitted if its span STARTS under budget (the q83 rule).
@@ -1396,9 +2107,29 @@ object LlmEntry {
           sum(col("n_tokens")).as("tokens_kept"),
           min(col("quality_score")).as("min_quality_kept"))
       core.Materialize.detached(out) { scored.unpersist(blocking = false) }
-    }),
+    },
+      // q98 mirror: quality_score is the q30-parity expression; the
+      // running sum is over BIGINT token counts (integer window sums are
+      // cross-engine safe; double ones are not), one division never
+      // happens — min(quality_score) carries the double through unchanged.
+      {
+        val cols = qualityDuck("text").map { case (n, e) => s"$e AS $n" }.mkString(",\n  ")
+        s"""WITH scored AS (
+           |  SELECT lang, doc_id, n_tokens, $qualityScoreExpr AS quality_score FROM (
+           |    SELECT lang, doc_id, $cols FROM documents)),
+           |c AS (
+           |  SELECT lang, n_tokens, quality_score,
+           |    CAST(sum(n_tokens) OVER (PARTITION BY lang
+           |      ORDER BY quality_score DESC, doc_id
+           |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
+           |  FROM scored)
+           |SELECT lang, count(*) AS n_docs_kept,
+           |  CAST(sum(n_tokens) AS BIGINT) AS tokens_kept,
+           |  min(quality_score) AS min_quality_kept
+           |FROM c WHERE cum - n_tokens < $TokenBudget GROUP BY lang""".stripMargin
+      }),
 
-    "q100_heavy_hitters" -> ((s, d) => {
+    Q("q100_heavy_hitters", (s, d) => {
       // Exact top-k tokens with a vocabulary-independent shuffle — the
       // scale form of q29. q29's exact aggregate shuffles one partial
       // count per DISTINCT token per map partition; on web text the
@@ -1435,9 +2166,14 @@ object LlmEntry {
           "assert_true(cnt > err, 'mg_sketch screen cannot certify " +
             "exactness at this capacity: raise HhSketchCap')")))
         .select(col("tok"), col("cnt"))
-    }),
+    },
+      // q100 is exact (the sketch only screens candidates; the counts are
+      // a rescan), so the oracle is the plain exact top-k
+      s"""SELECT tok, count(*) AS cnt FROM (
+         |  SELECT unnest(${tokensDuck("text")}) AS tok FROM documents)
+         |GROUP BY tok ORDER BY cnt DESC, tok LIMIT $TopK""".stripMargin),
 
-    "q101_surprisal" -> ((s, d) => {
+    Q("q101_surprisal", (s, d) => {
       // Unigram-LM quality filter (the CCNet/RedPajama "perplexity
       // filter" family member), made bit-exact: token surprisal is
       // computed in WHOLE BITS as floor(log2(N/cnt)) =
@@ -1479,9 +2215,35 @@ object LlmEntry {
           col("total_bits").cast("double") /
             col("total_tokens").cast("double"))
       core.Materialize.detached(out) { pair.unpersist(blocking = false) }
-    }),
+    },
+      // q101 mirror: Spark length(bin(x)) ≡ DuckDB length(format('{:b}', x))
+      // (binary digits of a positive BIGINT, no leading zeros); everything
+      // up to the final division is BIGINT
+      s"""WITH toks AS (
+         |  SELECT doc_id, lang, unnest(${tokensDuck("text")}) AS tok
+         |  FROM documents),
+         |pair AS (
+         |  SELECT doc_id, lang, tok, count(*) AS k
+         |  FROM toks GROUP BY doc_id, lang, tok),
+         |tf AS (SELECT tok, CAST(sum(k) AS BIGINT) AS cnt FROM pair GROUP BY tok),
+         |n AS (SELECT CAST(sum(cnt) AS BIGINT) AS n FROM tf),
+         |tb AS (
+         |  SELECT tok, CAST(length(format('{:b}', n // cnt)) - 1 AS BIGINT) AS bits
+         |  FROM tf CROSS JOIN n),
+         |db AS (
+         |  SELECT doc_id, lang, CAST(sum(k * bits) AS BIGINT) AS bits,
+         |    CAST(sum(k) AS BIGINT) AS n_toks
+         |  FROM pair JOIN tb USING (tok) GROUP BY doc_id, lang)
+         |SELECT lang, count(*) AS n_docs,
+         |  CAST(count(*) FILTER (bits * $SurprisalFlagDen
+         |    > n_toks * $SurprisalFlagNum) AS BIGINT) AS flagged,
+         |  CAST(sum(bits) AS BIGINT) AS total_bits,
+         |  CAST(sum(n_toks) AS BIGINT) AS total_tokens,
+         |  CAST(sum(bits) AS DOUBLE) / CAST(sum(n_toks) AS DOUBLE)
+         |    AS bits_per_token
+         |FROM db GROUP BY lang""".stripMargin),
 
-    "q102_temperature_mix" -> ((s, d) => {
+    Q("q102_temperature_mix", (s, d) => {
       // Temperature-based mixing weights (α = 0.5): the multilingual /
       // multi-source rebalancing rule w_s ∝ n_s^α that upsamples tails
       // relative to proportional mixing. α = 1/2 is the one temperature
@@ -1504,9 +2266,24 @@ object LlmEntry {
           (sqrt(col("n_docs").cast("double")) / col("z")).as("weight"),
           expr(s"CAST(floor($MixTargetDocs * sqrt(CAST(n_docs AS DOUBLE)) / z) AS BIGINT)")
             .as("target_docs"))
-    }),
+    },
+      // q102 mirror: list_prepend(0.0) ≡ Spark's 0.0-initialized fold
+      // (0.0 + x0 = x0 exactly); list_sort ≡ array_sort on doubles
+      s"""WITH counts AS (
+         |  SELECT source, count(*) AS n_docs FROM documents GROUP BY source),
+         |z AS (
+         |  SELECT list_reduce(
+         |    list_prepend(0.0::DOUBLE,
+         |      list_sort(list(sqrt(CAST(n_docs AS DOUBLE))))),
+         |    (a, x) -> a + x) AS z
+         |  FROM counts)
+         |SELECT source, n_docs,
+         |  sqrt(CAST(n_docs AS DOUBLE)) / z AS weight,
+         |  CAST(floor($MixTargetDocs * sqrt(CAST(n_docs AS DOUBLE)) / z)
+         |    AS BIGINT) AS target_docs
+         |FROM counts CROSS JOIN z""".stripMargin),
 
-    "q103_hash_embed" -> ((s, d) => {
+    Q("q103_hash_embed", (s, d) => {
       // Feature-hash text embeddings (the hashing trick) + exact
       // retrieval — text becomes a vector with NO model: bucket
       // j = h(tok) mod D, sign from the next hash bit, weight = token
@@ -1552,20 +2329,104 @@ object LlmEntry {
         .withColumn("rk", row_number().over(w)).filter(col("rk") <= LshK)
         .select(col("probe_id"), col("doc_id"), col("cosine"))
       core.Materialize.detached(out) { buckets.unpersist(blocking = false) }
-    }),
+    },
+      // q103 mirror: the relational cosine — integer product-sums joined
+      // on the hash bucket; sqrt·sqrt then one division, same op sequence
+      s"""WITH pair AS (
+         |  SELECT doc_id, tok, count(*) AS k FROM (
+         |    SELECT doc_id, unnest(${tokensDuck("text")}) AS tok FROM documents)
+         |  GROUP BY doc_id, tok),
+         |hashed AS (
+         |  SELECT doc_id, h % $HashDim AS j,
+         |    k * (CASE WHEN (h // $HashDim) % 2 = 0 THEN 1 ELSE -1 END) AS w
+         |  FROM (SELECT doc_id, k, ${TextOps.rollingHashDuck("tok")} AS h
+         |        FROM pair)),
+         |buckets AS (
+         |  SELECT doc_id, j, CAST(sum(w) AS BIGINT) AS w
+         |  FROM hashed GROUP BY doc_id, j),
+         |norms AS (
+         |  SELECT doc_id, CAST(sum(w * w) AS BIGINT) AS n2
+         |  FROM buckets GROUP BY doc_id HAVING sum(w * w) > 0),
+         |dots AS (
+         |  SELECT p.doc_id AS probe_id, c.doc_id,
+         |    CAST(sum(c.w * p.w) AS BIGINT) AS dot
+         |  FROM buckets c JOIN buckets p USING (j)
+         |  WHERE p.doc_id < $ProbeN AND c.doc_id <> p.doc_id
+         |  GROUP BY p.doc_id, c.doc_id)
+         |SELECT probe_id, doc_id, cosine FROM (
+         |  SELECT probe_id, d.doc_id,
+         |    CAST(dot AS DOUBLE) /
+         |      (sqrt(CAST(pn.n2 AS DOUBLE)) * sqrt(CAST(cn.n2 AS DOUBLE)))
+         |      AS cosine,
+         |    row_number() OVER (PARTITION BY probe_id
+         |      ORDER BY CAST(dot AS DOUBLE) /
+         |        (sqrt(CAST(pn.n2 AS DOUBLE)) * sqrt(CAST(cn.n2 AS DOUBLE)))
+         |        DESC, d.doc_id) AS rk
+         |  FROM dots d
+         |  JOIN norms cn ON d.doc_id = cn.doc_id
+         |  JOIN norms pn ON d.probe_id = pn.doc_id)
+         |WHERE rk <= $LshK""".stripMargin),
 
-    "q106_bm25" -> ((s, d) => {
+    Q("q106_bm25", (s, d) => {
       val (out, release) = bm25Plan(s, d)
       core.Materialize.detached(out)(release())
-    }),
+    },
+      // q106 mirror: the same whole-bit idf (format('{:b}', …) ≡ bin),
+      // the same IEEE op sequence per term score, and the q102
+      // order-pinned fold (list_prepend(0.0) ≡ the 0.0-initialized
+      // aggregate; 0.0 + x0 = x0 exactly)
+      Bm25DuckSql),
 
-    "q107_dsir_weights" -> ((s, d) => {
+    Q("q107_dsir_weights", (s, d) => {
       val (out, release) = dsirPlan(s, d)
       core.Materialize.detached(out)(release())
-    }),
+    },
+      // q107 mirror: identical hashed-feature construction (1-based list
+      // indexing ≡ element_at; range(1, len) is end-exclusive ≡
+      // sequence(1, len−1) inclusive), identical whole-bit llr via
+      // format('{:b}', …) ≡ bin, BIGINT arithmetic throughout
+      s"""WITH toks AS (
+         |  SELECT doc_id, source, ${tokensDuck("text")} AS tk
+         |  FROM documents),
+         |uni AS (SELECT doc_id, source, unnest(tk) AS g FROM toks),
+         |big AS (
+         |  SELECT doc_id, source, tk[i] || ' ' || tk[i + 1] AS g
+         |  FROM (SELECT doc_id, source, tk, unnest(range(1, len(tk))) AS i
+         |        FROM toks WHERE len(tk) >= 2)),
+         |feats AS (
+         |  SELECT doc_id, source,
+         |    ${TextOps.rollingHashDuck("g")} % $DsirBuckets AS b,
+         |    count(*) AS cnt
+         |  FROM (SELECT * FROM uni UNION ALL SELECT * FROM big)
+         |  GROUP BY doc_id, source, b),
+         |raw AS (
+         |  SELECT b, CAST(sum(cnt) + 1 AS BIGINT) AS c_r FROM feats
+         |  GROUP BY b),
+         |tgt AS (
+         |  SELECT b, CAST(sum(cnt) AS BIGINT) AS t0 FROM feats
+         |  WHERE source = '$DsirTarget' GROUP BY b),
+         |dist AS (
+         |  SELECT b, c_r, coalesce(t0, 0) + 1 AS c_t
+         |  FROM raw LEFT JOIN tgt USING (b)),
+         |totals AS (
+         |  SELECT CAST(sum(c_t) AS BIGINT) AS n_t,
+         |    CAST(sum(c_r) AS BIGINT) AS n_r FROM dist),
+         |llr AS (
+         |  SELECT b,
+         |    (CAST(length(format('{:b}', c_t)) AS BIGINT)
+         |      - CAST(length(format('{:b}', c_r)) AS BIGINT))
+         |    + (CAST(length(format('{:b}', n_r)) AS BIGINT)
+         |      - CAST(length(format('{:b}', n_t)) AS BIGINT)) AS llr
+         |  FROM dist CROSS JOIN totals)
+         |SELECT doc_id, source, CAST(sum(cnt) AS BIGINT) AS n_feats,
+         |  CAST(sum(cnt * llr) AS BIGINT) AS weight
+         |FROM feats JOIN llr USING (b)
+         |WHERE source <> '$DsirTarget'
+         |GROUP BY doc_id, source
+         |ORDER BY weight DESC, doc_id LIMIT $DsirTopK""".stripMargin),
 
     // ---- classifier-based quality filtering (supervised NB) -------------
-    "q165_quality_classifier" -> ((s, d) => {
+    Q("q165_quality_classifier", (s, d) => {
       // The GPT-3/LLaMA-family supervised quality filter: train a
       // multinomial Naive Bayes on exemplar-source positives vs the
       // rest, score every doc by its integer log-odds margin, keep on
@@ -1575,10 +2436,54 @@ object LlmEntry {
       // on/off-distribution recall are pinned in LlmOpsSpec.
       val (out, release) = nbClassifierPlanOn(Tables.documents(s, d))
       core.Materialize.detached(out)(release())
-    }),
+    },
+      // q165 mirror: identical feature CTEs as q107; class counts via
+      // FILTERed sums, the same bit-length log-odds, the same integer
+      // keep compare; one division per output row, identical sequence
+      s"""WITH toks AS (
+         |  SELECT doc_id, source, ${tokensDuck("text")} AS tk
+         |  FROM documents),
+         |uni AS (SELECT doc_id, source, unnest(tk) AS g FROM toks),
+         |big AS (
+         |  SELECT doc_id, source, tk[i] || ' ' || tk[i + 1] AS g
+         |  FROM (SELECT doc_id, source, tk, unnest(range(1, len(tk))) AS i
+         |        FROM toks WHERE len(tk) >= 2)),
+         |feats AS (
+         |  SELECT doc_id, source,
+         |    ${TextOps.rollingHashDuck("g")} % $DsirBuckets AS b,
+         |    count(*) AS cnt
+         |  FROM (SELECT * FROM uni UNION ALL SELECT * FROM big)
+         |  GROUP BY doc_id, source, b),
+         |cls AS (
+         |  SELECT b,
+         |    CAST(coalesce(sum(CASE WHEN source = '$DsirTarget'
+         |      THEN cnt END), 0) AS BIGINT) AS c_pos,
+         |    CAST(coalesce(sum(CASE WHEN source <> '$DsirTarget'
+         |      THEN cnt END), 0) AS BIGINT) AS c_neg
+         |  FROM feats GROUP BY b),
+         |totals AS (
+         |  SELECT CAST(sum(c_pos) AS BIGINT) AS np0,
+         |    CAST(sum(c_neg) AS BIGINT) AS nn0 FROM cls),
+         |wts AS (
+         |  SELECT b,
+         |    (${bitsDuck("c_pos + 1")} - ${bitsDuck("c_neg + 1")})
+         |    + (${bitsDuck(s"nn0 + $DsirBuckets")}
+         |       - ${bitsDuck(s"np0 + $DsirBuckets")}) AS w
+         |  FROM cls CROSS JOIN totals),
+         |scored AS (
+         |  SELECT doc_id, source, CAST(sum(cnt * w) AS BIGINT) AS score
+         |  FROM feats JOIN wts USING (b)
+         |  GROUP BY doc_id, source)
+         |SELECT source, count(*) AS n_docs,
+         |  CAST(coalesce(sum(CASE WHEN score > 0 THEN 1 END), 0) AS BIGINT)
+         |    AS n_kept,
+         |  CAST(sum(score) AS BIGINT) AS total_score,
+         |  CAST(coalesce(sum(CASE WHEN score > 0 THEN 1 END), 0) AS DOUBLE)
+         |    / CAST(count(*) AS DOUBLE) AS kept_frac
+         |FROM scored GROUP BY source""".stripMargin),
 
     // ---- hybrid retrieval: reciprocal-rank fusion -----------------------
-    "q173_rrf_fusion" -> ((s, d) => {
+    Q("q173_rrf_fusion", (s, d) => {
       // the production retrieval stack's merge step: a LEXICAL ranker
       // (q106 BM25 more-like-this) and a SEMANTIC one (q38 brute-force
       // cosine) rank the same corpus for the same probes, and RRF
@@ -1610,10 +2515,31 @@ object LlmEntry {
         .withColumn("rk", row_number().over(w).cast("long"))
         .filter(col("rk") <= FusedK)
       core.Materialize.detached(out)(release())
-    }),
+    },
+      // q173 mirror: both ranker CTEs are the SAME oracle texts as
+      // q106/q38 (shared vals — rank drift would be a bug), fused on
+      // ranks with the identical integer point formula
+      s"""WITH bm AS (
+         |  SELECT query_id, doc_id, rk FROM ($Bm25DuckSql)),
+         |cs AS (
+         |  SELECT probe_id AS query_id, vec_id AS doc_id, rk
+         |  FROM ($CosineTopkDuckSql) WHERE probe_id < $Bm25ProbeN),
+         |u AS (
+         |  SELECT query_id, doc_id, $RrfScale // ($RrfK + rk) AS pts
+         |  FROM (SELECT * FROM bm UNION ALL SELECT * FROM cs)),
+         |f AS (
+         |  SELECT query_id, doc_id, CAST(sum(pts) AS BIGINT) AS rrf,
+         |         CAST(count(*) AS BIGINT) AS n_lists
+         |  FROM u GROUP BY query_id, doc_id)
+         |SELECT query_id, doc_id, rrf, n_lists, rk FROM (
+         |  SELECT query_id, doc_id, rrf, n_lists,
+         |    CAST(row_number() OVER (PARTITION BY query_id
+         |      ORDER BY rrf DESC, doc_id) AS BIGINT) AS rk
+         |  FROM f)
+         |WHERE rk <= $FusedK""".stripMargin),
 
     // ---- inverted index build (impact-ordered, capped postings) ---------
-    "q110_inverted_index" -> ((s, d) => {
+    Q("q110_inverted_index", (s, d) => {
       // The index-build counterpart of q106's query-time BM25: per term,
       // exact df and total tf plus the top-PostingsK postings by impact
       // (tf desc, doc_id tiebreak) rendered doc:tf — the capped
@@ -1659,10 +2585,30 @@ object LlmEntry {
                   concat_ws(":", col("doc_id"), col("tf")).as("p"))))),
               x => x.getField("p")),
             ",").as("postings"))
-    }),
+    },
+      // q110 mirror: string_agg(... ORDER BY rk) ≡ the array_sort-then-
+      // join rendering (rk is unique per term so both orders are total);
+      // aggregate functions in both engines skip the NULLs the CASE
+      // leaves on rank > k
+      s"""WITH toks AS (
+         |  SELECT doc_id, unnest(${tokensDuck("text")}) AS term
+         |  FROM documents),
+         |tf AS (
+         |  SELECT term, doc_id, count(*) AS tf FROM toks
+         |  WHERE term <> '' GROUP BY 1, 2),
+         |ranked AS (
+         |  SELECT term, doc_id, tf,
+         |    CAST(row_number() OVER (PARTITION BY term
+         |      ORDER BY tf DESC, doc_id) AS BIGINT) AS rk
+         |  FROM tf)
+         |SELECT term, count(*) AS df, CAST(sum(tf) AS BIGINT) AS total_tf,
+         |  string_agg(CASE WHEN rk <= $PostingsK
+         |               THEN doc_id || ':' || tf END, ',' ORDER BY rk)
+         |    AS postings
+         |FROM ranked GROUP BY term""".stripMargin),
 
     // ---- per-source document caps (domain anti-domination) --------------
-    "q113_source_cap" -> ((s, d) => {
+    Q("q113_source_cap", (s, d) => {
       // The C4/RefinedWeb-style domain cap: no source may contribute more
       // than CapPerSource documents; keepers are chosen by a
       // DETERMINISTIC quality order (distinct-token count desc, doc_id
@@ -1679,10 +2625,20 @@ object LlmEntry {
         .orderBy(col("n_uniq").desc, col("doc_id"))
       scored.withColumn("rk", row_number().over(w).cast("long"))
         .filter(col("rk") <= CapPerSource)
-    }),
+    },
+      // q113 mirror: identical deterministic order (n_uniq desc, doc_id)
+      s"""SELECT doc_id, source, n_uniq, rk FROM (
+         |  SELECT doc_id, source, n_uniq,
+         |    CAST(row_number() OVER (PARTITION BY source
+         |      ORDER BY n_uniq DESC, doc_id) AS BIGINT) AS rk
+         |  FROM (SELECT doc_id, source,
+         |          CAST(len(list_distinct(${tokensDuck("text")})) AS BIGINT)
+         |            AS n_uniq
+         |        FROM documents))
+         |WHERE rk <= $CapPerSource""".stripMargin),
 
     // ---- bigram PMI collocation mining ----------------------------------
-    "q114_pmi_bigrams" -> ((s, d) => {
+    Q("q114_pmi_bigrams", (s, d) => {
       // Adjacent-bigram pointwise mutual information — the standard
       // collocation detector a curation pipeline runs to find glued
       // phrases ("new york") worth treating as units. Made bit-exact the
@@ -1694,10 +2650,32 @@ object LlmEntry {
       // not by re-scanning the token stream; N is one scalar broadcast.
       val (out, release) = pmiPlanOn(Tables.documents(s, d))
       core.Materialize.detached(out)(release())
-    }),
+    },
+      // q114 mirror: 1-based tk[i] ≡ element_at, range end-exclusive ≡
+      // sequence inclusive (the q107 equivalences), whole-bit pmi via
+      // format('{:b}', …) ≡ bin
+      s"""WITH tk AS (
+         |  SELECT ${tokensDuck("text")} AS tk FROM documents
+         |  WHERE len(${tokensDuck("text")}) >= 2),
+         |big AS (
+         |  SELECT tk[i] AS a, tk[i + 1] AS b
+         |  FROM (SELECT tk, unnest(range(1, len(tk))) AS i FROM tk)),
+         |cab AS (
+         |  SELECT a, b, CAST(count(*) AS BIGINT) AS c_ab FROM big
+         |  GROUP BY a, b),
+         |ca AS (SELECT a, CAST(sum(c_ab) AS BIGINT) AS c_a FROM cab GROUP BY a),
+         |cb AS (SELECT b, CAST(sum(c_ab) AS BIGINT) AS c_b FROM cab GROUP BY b),
+         |nn AS (SELECT CAST(sum(c_ab) AS BIGINT) AS n_big FROM cab)
+         |SELECT a, b, c_ab, c_a, c_b,
+         |  (${bitsDuck("c_ab")} + ${bitsDuck("n_big")})
+         |    - (${bitsDuck("c_a")} + ${bitsDuck("c_b")}) AS pmi_bits
+         |FROM cab JOIN ca USING (a) JOIN cb USING (b) CROSS JOIN nn
+         |WHERE c_ab >= $PmiMinCount
+         |ORDER BY pmi_bits DESC, c_ab DESC, a, b
+         |LIMIT $PmiTopK""".stripMargin),
 
     // ---- bigram-LM quality scoring (transition surprisal) ---------------
-    "q132_bigram_lm_score" -> ((s, d) => {
+    Q("q132_bigram_lm_score", (s, d) => {
       // The 2-gram upgrade of q101's unigram surprisal filter — the
       // published perplexity-filter family's actual shape (CCNet scores
       // with an n-gram LM, not a unigram one): a doc whose WORDS are
@@ -1722,10 +2700,43 @@ object LlmEntry {
       // the q84 no-forced-broadcast reasoning).
       val (out, release) = bigramLmPlanOn(Tables.documents(s, d))
       core.Materialize.detached(out)(release())
-    }),
+    },
+      // q132 mirror: same compressed per-doc transition table, same add-1
+      // whole-bit surprisal ((c_a + V) // (c_ab + 1) then bin length),
+      // same integer flag compare, one IEEE division per report row
+      s"""WITH docs AS (
+         |  SELECT doc_id, lang, ${tokensDuck("text")} AS tk FROM documents
+         |  WHERE len(${tokensDuck("text")}) >= 2),
+         |pair AS (
+         |  SELECT doc_id, lang, a, b, CAST(count(*) AS BIGINT) AS k FROM (
+         |    SELECT doc_id, lang, tk[i] AS a, tk[i + 1] AS b
+         |    FROM (SELECT doc_id, lang, tk, unnest(range(1, len(tk))) AS i
+         |          FROM docs))
+         |  GROUP BY 1, 2, 3, 4),
+         |cab AS (
+         |  SELECT a, b, CAST(sum(k) AS BIGINT) AS c_ab FROM pair
+         |  GROUP BY a, b),
+         |ca AS (SELECT a, CAST(sum(c_ab) AS BIGINT) AS c_a FROM cab GROUP BY a),
+         |vv AS (SELECT CAST(count(DISTINCT b) AS BIGINT) AS v FROM cab),
+         |tb AS (
+         |  SELECT a, b,
+         |    CAST(length(format('{:b}', (c_a + v) // (c_ab + 1))) - 1
+         |      AS BIGINT) AS tbits
+         |  FROM cab JOIN ca USING (a) CROSS JOIN vv),
+         |db AS (
+         |  SELECT doc_id, lang, CAST(sum(k * tbits) AS BIGINT) AS bits,
+         |         CAST(sum(k) AS BIGINT) AS n_trans
+         |  FROM pair JOIN tb USING (a, b) GROUP BY 1, 2)
+         |SELECT lang, count(*) AS n_docs,
+         |  CAST(sum(CAST(bits * $SurprisalFlagDen
+         |    > n_trans * $SurprisalFlagNum AS BIGINT)) AS BIGINT) AS n_flagged,
+         |  CAST(sum(bits) AS BIGINT) AS sum_bits,
+         |  CAST(sum(n_trans) AS BIGINT) AS sum_trans,
+         |  CAST(sum(bits) AS DOUBLE) / CAST(sum(n_trans) AS DOUBLE) AS avg_bits
+         |FROM db GROUP BY 1""".stripMargin),
 
     // ---- embedding-space decontamination --------------------------------
-    "q115_semantic_decontam" -> ((s, d) => {
+    Q("q115_semantic_decontam", (s, d) => {
       // Semantic (embedding-cosine) eval-set decontamination — the
       // companion of the n-gram decontam q61/q89 for paraphrased leaks
       // an exact-substring screen can't see. Cost model: the eval suite
@@ -1741,10 +2752,40 @@ object LlmEntry {
       // convention): cosine ≈ 1 survives quantization, so the screen
       // must flag exactly those originals.
       decontamPlanOn(Tables.embeddings(s, d))
-    }),
+    },
+      // q115 mirror: identical quantization (left-assoc x * 0.5 * Q, floor
+      // → BIGINT), identical integer hit test — no IEEE op differs
+      s"""WITH dv AS (
+         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         |corpus AS (
+         |  SELECT vec_id, q,
+         |    list_reduce(list_prepend(0::BIGINT,
+         |      list_transform(q, x -> x * x)), (acc, x) -> acc + x) AS n2
+         |  FROM (SELECT vec_id,
+         |          list_transform(v, x -> CAST(floor(x * $DecontamQuant) AS BIGINT)) AS q
+         |        FROM dv)),
+         |probes AS (
+         |  SELECT probe_id, pq,
+         |    list_reduce(list_prepend(0::BIGINT,
+         |      list_transform(pq, x -> x * x)), (acc, x) -> acc + x) AS pn2
+         |  FROM (SELECT vec_id + $DecontamEvalOffset AS probe_id,
+         |          list_transform(v, x -> CAST(floor(x * 0.5 * $DecontamQuant) AS BIGINT)) AS pq
+         |        FROM dv WHERE vec_id < $DecontamEvalN)),
+         |pairs AS (
+         |  SELECT c.vec_id,
+         |    list_reduce(list_prepend(0::BIGINT,
+         |      list_transform(range(1, len(q) + 1), i -> q[i] * pq[i])),
+         |      (acc, x) -> acc + x) AS dot,
+         |    n2, pn2
+         |  FROM corpus c CROSS JOIN probes)
+         |SELECT vec_id, CAST(count(*) AS BIGINT) AS n_hits
+         |FROM pairs
+         |WHERE dot > 0 AND ${DecontamTauDen * DecontamTauDen} * dot * dot >=
+         |  ${DecontamTauNum * DecontamTauNum} * n2 * pn2
+         |GROUP BY vec_id""".stripMargin),
 
     // ---- token-frequency spectrum (Zipf profile) ------------------------
-    "q116_freq_spectrum" -> ((s, d) =>
+    Q("q116_freq_spectrum", (s, d) =>
       // The corpus frequency spectrum (quantitative-linguistics form of
       // the Zipf profile): how many token TYPES occur at each count
       // magnitude, bucketed by whole bits of the count. Chosen over the
@@ -1758,10 +2799,20 @@ object LlmEntry {
         .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
         .groupBy(expr(bitsSpark("cnt")).as("freq_bucket"))
         .agg(count(lit(1)).as("n_types"), sum(col("cnt")).as("n_tokens"),
-          min(col("cnt")).as("min_cnt"), max(col("cnt")).as("max_cnt"))),
+          min(col("cnt")).as("min_cnt"), max(col("cnt")).as("max_cnt")),
+      // q116 mirror: same two cascaded aggregates, same whole-bit bucket
+      s"""WITH cnt AS (
+         |  SELECT tok, CAST(count(*) AS BIGINT) AS cnt FROM (
+         |    SELECT unnest(${tokensDuck("text")}) AS tok FROM documents)
+         |  GROUP BY tok)
+         |SELECT ${bitsDuck("cnt")} AS freq_bucket,
+         |  CAST(count(*) AS BIGINT) AS n_types,
+         |  CAST(sum(cnt) AS BIGINT) AS n_tokens,
+         |  min(cnt) AS min_cnt, max(cnt) AS max_cnt
+         |FROM cnt GROUP BY 1""".stripMargin),
 
     // ---- pairwise source-overlap audit ----------------------------------
-    "q118_source_overlap" -> ((s, d) => {
+    Q("q118_source_overlap", (s, d) => {
       // "Is source A a mirror of source B?" — the corpus-level audit run
       // before merging crawls (mirror sites, re-crawled dumps, and
       // wholesale scrapes show up as high shingle-Jaccard SOURCE pairs
@@ -1776,22 +2827,96 @@ object LlmEntry {
       // identical sequence in the oracle.
       val (out, release) = overlapPlanOn(Tables.documents(s, d))
       core.Materialize.detached(out)(release())
-    }),
+    },
+      // q118 mirror: same distinct (source, shingle) table (per-doc
+      // distinctness subsumed by the source-level DISTINCT), same
+      // self-join + lexicographic pair order, same single division
+      s"""WITH ss AS (
+         |  SELECT DISTINCT source, sh AS h FROM (
+         |    SELECT source, unnest(${DedupOps.shingleHashesDuck("hs")}) AS sh
+         |    FROM (SELECT source, ${DedupOps.tokenHashesDuck("text")} AS hs
+         |          FROM documents))),
+         |counts AS (
+         |  SELECT source, CAST(count(*) AS BIGINT) AS n_sh FROM ss
+         |  GROUP BY source),
+         |shared AS (
+         |  SELECT a.source AS source_a, b.source AS source_b,
+         |    CAST(count(*) AS BIGINT) AS n_shared
+         |  FROM ss a JOIN ss b USING (h)
+         |  WHERE a.source < b.source
+         |  GROUP BY 1, 2)
+         |SELECT source_a, source_b, n_shared, ca.n_sh AS n_a, cb.n_sh AS n_b,
+         |  CAST(n_shared AS DOUBLE) /
+         |    CAST(ca.n_sh + cb.n_sh - n_shared AS DOUBLE) AS jaccard
+         |FROM shared
+         |JOIN counts ca ON source_a = ca.source
+         |JOIN counts cb ON source_b = cb.source""".stripMargin),
 
     // ---- product quantization + ADC retrieval ---------------------------
-    "q119_pq_adc" -> ((s, d) => {
+    Q("q119_pq_adc", (s, d) => {
       val (out, release) = pqAdcPlan(s, d)
       core.Materialize.detached(out)(release())
-    }),
+    },
+      // q119 mirror: identical quantization, 1-based list_slice ≡ slice,
+      // identical integer subvector distances, identical one-Lloyd-step
+      // codebook training (floor-div means via the pmod-subtraction trick,
+      // so `//` and Spark's `div` agree on negatives), identical (d2, c)
+      // and (adc_dist, vec_id) tie-pinned orders
+      s"""WITH dv AS (
+         |  SELECT vec_id, list_transform(CAST(embedding AS DOUBLE[]),
+         |    x -> CAST(floor(x * $PqQuant) AS BIGINT)) AS q
+         |  FROM embeddings),
+         |sub AS (
+         |  SELECT vec_id, j, list_slice(q, j * $PqSub + 1, j * $PqSub + $PqSub) AS s
+         |  FROM (SELECT vec_id, q, unnest(range(0, $PqM)) AS j FROM dv)),
+         |cent AS (
+         |  SELECT vec_id AS c, j, s AS cs FROM sub
+         |  WHERE vec_id BETWEEN $PqCentLo AND ${PqCentLo + PqK - 1}),
+         |$pqBookCtesDuck,
+         |dist AS (
+         |  SELECT v.vec_id, v.j, c.c,
+         |    ${pqD2Duck("v.s", "c.cs")} AS d2
+         |  FROM sub v JOIN book c USING (j)),
+         |codes AS (
+         |  SELECT vec_id, j, c AS code FROM (
+         |    SELECT vec_id, j, c,
+         |      row_number() OVER (PARTITION BY vec_id, j ORDER BY d2, c) AS rk
+         |    FROM dist)
+         |  WHERE rk = 1),
+         |dtab AS (
+         |  SELECT vec_id AS probe_id, j, c, d2 FROM dist
+         |  WHERE vec_id < $ProbeN),
+         |adc AS (
+         |  SELECT d.probe_id, co.vec_id, CAST(sum(d.d2) AS BIGINT) AS adc_dist
+         |  FROM codes co JOIN dtab d ON co.j = d.j AND co.code = d.c
+         |  WHERE co.vec_id <> d.probe_id
+         |  GROUP BY d.probe_id, co.vec_id)
+         |SELECT probe_id, vec_id, adc_dist, rk FROM (
+         |  SELECT probe_id, vec_id, adc_dist,
+         |    CAST(row_number() OVER (PARTITION BY probe_id
+         |      ORDER BY adc_dist, vec_id) AS BIGINT) AS rk
+         |  FROM adc)
+         |WHERE rk <= $LshK""".stripMargin),
 
     // ---- IVFADC: coarse inverted lists × PQ residual codes --------------
-    "q120_ivfadc" -> ((s, d) => {
+    Q("q120_ivfadc", (s, d) => {
       val (out, release) = ivfadcPlan(s, d)
       core.Materialize.detached(out)(release())
-    }),
+    },
+      // q120 mirror: identical coarse assignment (full-width integer L2,
+      // (cd2, cc) tie order), identical residuals, the shared trained-book
+      // CTEs over residual subvectors, identical per-cell ADC tables and
+      // (adc_dist, vec_id) final order
+      s"""$ivfadcCtesDuck
+         |SELECT probe_id, vec_id, cid, adc_dist, rk FROM (
+         |  SELECT probe_id, vec_id, cid, adc_dist,
+         |    CAST(row_number() OVER (PARTITION BY probe_id
+         |      ORDER BY adc_dist, vec_id) AS BIGINT) AS rk
+         |  FROM adc)
+         |WHERE rk <= $LshK""".stripMargin),
 
     // ---- corpus drift audit (snapshot-over-snapshot) --------------------
-    "q128_corpus_drift" -> ((s, d) => {
+    Q("q128_corpus_drift", (s, d) => {
       // The ingest monitor a recurring crawl runs BEFORE accepting a new
       // snapshot into the training mix: which tokens changed frequency
       // most between crawl A and crawl B? A drift burst is how template
@@ -1828,10 +2953,34 @@ object LlmEntry {
             .as("drift_bits"))
         .orderBy(abs(col("drift_bits")).desc, col("tok"))
         .limit(DriftTopK)
-    }),
+    },
+      // q128 mirror: same one-pass FILTER counts, same add-1 whole-bit
+      // llr, same (|drift| desc, tok) report order
+      s"""WITH corpus AS (${DedupOps.corpusDuck}),
+         |toks AS (
+         |  SELECT CASE WHEN doc_id < $DriftSplitId THEN 'a' ELSE 'b' END
+         |           AS snap,
+         |         unnest(${tokensDuck("text")}) AS tok
+         |  FROM corpus),
+         |counts AS (
+         |  SELECT tok,
+         |    CAST(count(*) FILTER (snap = 'a') AS BIGINT) AS c_a,
+         |    CAST(count(*) FILTER (snap = 'b') AS BIGINT) AS c_b
+         |  FROM toks WHERE length(tok) > 0 GROUP BY 1),
+         |tot AS (
+         |  SELECT CAST(sum(c_a) AS BIGINT) AS n_a,
+         |         CAST(sum(c_b) AS BIGINT) AS n_b
+         |  FROM counts)
+         |SELECT tok, c_a, c_b,
+         |  ${bitsDuck("c_b + 1")} - ${bitsDuck("n_b")}
+         |    - ${bitsDuck("c_a + 1")} + ${bitsDuck("n_a")} AS drift_bits
+         |FROM counts CROSS JOIN tot
+         |ORDER BY abs(${bitsDuck("c_b + 1")} - ${bitsDuck("n_b")}
+         |    - ${bitsDuck("c_a + 1")} + ${bitsDuck("n_a")}) DESC, tok
+         |LIMIT $DriftTopK""".stripMargin),
 
     // ---- random-projection (JL) compression + retrieval -----------------
-    "q127_random_projection" -> ((s, d) => {
+    Q("q127_random_projection", (s, d) => {
       // The Johnson-Lindenstrauss tier of the embedding-compression
       // family (int8 q88 shrinks the CELLS, PQ q119 shrinks to CODES;
       // this shrinks the DIMENSIONS): a deterministic ±1 sign matrix —
@@ -1873,22 +3022,180 @@ object LlmEntry {
         .filter(col("rk") <= LshK)
         .select(col("probe_id"), col("vec_id"), col("proj_d2"), col("rk"))
       core.Materialize.detached(out) { proj.unpersist(blocking = false) }
-    }),
+    },
+      // q127 mirror: identical sign hash (same integer mix, // ≡ div on
+      // the non-negative operands), identical projected-L2 tie order
+      s"""WITH dv AS (
+         |  SELECT vec_id, list_transform(CAST(embedding AS DOUBLE[]),
+         |    x -> CAST(floor(x * $PqQuant) AS BIGINT)) AS q
+         |  FROM embeddings),
+         |proj AS (SELECT vec_id, $rpProjDuck AS p FROM dv),
+         |probes AS (
+         |  SELECT vec_id AS probe_id, p AS pp FROM proj
+         |  WHERE vec_id < $ProbeN),
+         |scored AS (
+         |  SELECT pr.probe_id, v.vec_id,
+         |    list_reduce(list_prepend(0::BIGINT,
+         |      list_transform(range(1, $RpDims + 1),
+         |        i -> (v.p[i] - pr.pp[i]) * (v.p[i] - pr.pp[i]))),
+         |      (acc, x) -> acc + x) AS proj_d2
+         |  FROM proj v, probes pr WHERE v.vec_id <> pr.probe_id)
+         |SELECT probe_id, vec_id, proj_d2, rk FROM (
+         |  SELECT probe_id, vec_id, proj_d2,
+         |    CAST(row_number() OVER (PARTITION BY probe_id
+         |      ORDER BY proj_d2, vec_id) AS BIGINT) AS rk
+         |  FROM scored)
+         |WHERE rk <= $LshK""".stripMargin),
 
     // ---- IVFADC + exact re-rank (the refine tier) -----------------------
-    "q125_ivfadc_rerank" -> ((s, d) => {
+    Q("q125_ivfadc_rerank", (s, d) => {
       val (out, release) = ivfadcRerankPlan(s, d)
       core.Materialize.detached(out)(release())
-    }),
+    },
+      // q125 mirror: q120's chain cut at RerankR, then exact full-width
+      // integer L2 over just the candidates, re-ranked (exact_d2, vec_id)
+      s"""$ivfadcCtesDuck,
+         |cand AS (
+         |  SELECT probe_id, vec_id, adc_dist FROM (
+         |    SELECT probe_id, vec_id, adc_dist,
+         |      row_number() OVER (PARTITION BY probe_id
+         |        ORDER BY adc_dist, vec_id) AS rk
+         |    FROM adc)
+         |  WHERE rk <= $RerankR),
+         |refine AS (
+         |  SELECT c.probe_id, c.vec_id, c.adc_dist,
+         |    ${fullD2Duck("cv.q", "pv.q")} AS exact_d2
+         |  FROM cand c
+         |  JOIN dv cv ON cv.vec_id = c.vec_id
+         |  JOIN dv pv ON pv.vec_id = c.probe_id)
+         |SELECT probe_id, vec_id, adc_dist, exact_d2, rk FROM (
+         |  SELECT probe_id, vec_id, adc_dist, exact_d2,
+         |    CAST(row_number() OVER (PARTITION BY probe_id
+         |      ORDER BY exact_d2, vec_id) AS BIGINT) AS rk
+         |  FROM refine)
+         |WHERE rk <= $LshK""".stripMargin),
 
     // ---- end-to-end curation pipeline -----------------------------------
-    "q121_curation_pipeline" -> ((s, d) => {
+    Q("q121_curation_pipeline", (s, d) => {
       val (out, release) = curationPlan(s, d)
       core.Materialize.detached(out)(release())
-    }),
+    },
+      // q121 mirror: the five stage mirrors chained verbatim — q113's
+      // window cap, q101's whole-bit LM (LEFT join + coalesce for
+      // token-less docs), q33's keep-first hash window, q36's
+      // LSH-candidate + Jaccard verify (drop the higher id of any
+      // qualifying pair), q89's all-exact screen (the Spark bloom is a
+      // pre-screen only), q102's pinned-order fold + floor targets
+      s"""WITH c0 AS (
+         |  SELECT doc_id, source, text,
+         |    CAST(len(list_distinct(${tokensDuck("text")})) AS BIGINT) AS n_uniq
+         |  FROM (
+         |    SELECT doc_id, source, text FROM documents
+         |    UNION ALL SELECT doc_id + ${DedupOps.ExactCopyOffset} AS doc_id,
+         |      source, text FROM documents WHERE doc_id < ${DedupOps.ExactCopyN}
+         |    UNION ALL SELECT doc_id + ${DedupOps.NearCopyOffset} AS doc_id,
+         |      source, substr(text, length(${tokensDuck("text")}[1]) + 2) AS text
+         |      FROM documents WHERE doc_id < ${DedupOps.NearCopyN})),
+         |s1 AS (
+         |  SELECT doc_id, source, text, n_uniq FROM (
+         |    SELECT *, row_number() OVER (PARTITION BY source
+         |      ORDER BY n_uniq DESC, doc_id) AS rk FROM c0)
+         |  WHERE rk <= $PipeCapPerSource),
+         |pair AS (
+         |  SELECT doc_id, tok, count(*) AS k FROM (
+         |    SELECT doc_id, unnest(${tokensDuck("text")}) AS tok FROM s1)
+         |  GROUP BY doc_id, tok),
+         |tf AS (SELECT tok, CAST(sum(k) AS BIGINT) AS cnt FROM pair GROUP BY tok),
+         |n AS (SELECT CAST(sum(cnt) AS BIGINT) AS n FROM tf),
+         |tb AS (
+         |  SELECT tok, CAST(length(format('{:b}', n // cnt)) - 1 AS BIGINT) AS bits
+         |  FROM tf CROSS JOIN n),
+         |db AS (
+         |  SELECT doc_id, CAST(sum(k * bits) AS BIGINT) AS bits,
+         |    CAST(sum(k) AS BIGINT) AS n_toks
+         |  FROM pair JOIN tb USING (tok) GROUP BY doc_id),
+         |s2 AS (
+         |  SELECT s1.doc_id, source, text, n_uniq FROM s1 LEFT JOIN db USING (doc_id)
+         |  WHERE coalesce(bits * $SurprisalFlagDen
+         |    <= n_toks * $SurprisalFlagNum, TRUE)),
+         |s3 AS (
+         |  SELECT doc_id, source, text, n_uniq FROM (
+         |    SELECT *, row_number() OVER (
+         |      PARTITION BY ${DedupOps.contentHashDuck("text")}
+         |      ORDER BY doc_id) AS rk FROM s2)
+         |  WHERE rk = 1),
+         |corpus AS (SELECT doc_id, text FROM c0),
+         |shingled AS (${DedupOps.shingledDuckBody}),
+         |sigs AS (
+         |  SELECT doc_id, ${DedupOps.signatureDuck("sh")} AS sig FROM shingled
+         |  WHERE doc_id IN (SELECT doc_id FROM s3)),
+         |buckets AS (${DedupOps.lshBucketsDuckBody}),
+         |pairs AS (${DedupOps.candidatePairsDuckBody}),
+         |neardrop AS (
+         |  SELECT DISTINCT id_b AS doc_id FROM (
+         |    ${DedupOps.jaccardVerifyDuckBody(JaccardThreshold)})),
+         |s4 AS (
+         |  SELECT * FROM s3
+         |  WHERE doc_id NOT IN (SELECT doc_id FROM neardrop)),
+         |ex AS (SELECT doc_id, unnest(sh) AS h FROM shingled),
+         |benchsh AS (
+         |  SELECT DISTINCT h FROM ex
+         |  WHERE doc_id % $BenchMod = 0 AND doc_id < ${DedupOps.NearCopyOffset}),
+         |contam AS (
+         |  SELECT ex.doc_id FROM ex JOIN benchsh USING (h)
+         |  WHERE ex.doc_id IN (SELECT doc_id FROM s4)
+         |    AND NOT (ex.doc_id % $BenchMod = 0
+         |             AND ex.doc_id < ${DedupOps.NearCopyOffset})
+         |  GROUP BY ex.doc_id HAVING count(*) >= $ScreenMinHits),
+         |s5 AS (
+         |  SELECT * FROM s4
+         |  WHERE NOT (doc_id % $BenchMod = 0
+         |             AND doc_id < ${DedupOps.NearCopyOffset})
+         |    AND doc_id NOT IN (SELECT doc_id FROM contam)),
+         |counts5 AS (
+         |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs FROM s5
+         |  GROUP BY source),
+         |z AS (
+         |  SELECT list_reduce(
+         |    list_prepend(0.0::DOUBLE,
+         |      list_sort(list(sqrt(CAST(n_docs AS DOUBLE))))),
+         |    (a, x) -> a + x) AS z
+         |  FROM counts5),
+         |targets AS (
+         |  SELECT source, sqrt(CAST(n_docs AS DOUBLE)) / z AS weight,
+         |    CAST(floor($MixTargetDocs * sqrt(CAST(n_docs AS DOUBLE)) / z)
+         |      AS BIGINT) AS target_docs
+         |  FROM counts5 CROSS JOIN z),
+         |sel AS (
+         |  SELECT source, CAST(count(*) AS BIGINT) AS n_selected FROM (
+         |    SELECT s5.source, target_docs, row_number() OVER (
+         |      PARTITION BY s5.source
+         |      ORDER BY n_uniq DESC, doc_id) AS rk
+         |    FROM s5 JOIN targets USING (source))
+         |  WHERE rk <= target_docs GROUP BY source),
+         |n0 AS (SELECT source, CAST(count(*) AS BIGINT) AS n_input FROM c0 GROUP BY source),
+         |n1 AS (SELECT source, CAST(count(*) AS BIGINT) AS n_cap FROM s1 GROUP BY source),
+         |n2 AS (SELECT source, CAST(count(*) AS BIGINT) AS n_quality FROM s2 GROUP BY source),
+         |n3 AS (SELECT source, CAST(count(*) AS BIGINT) AS n_exact FROM s3 GROUP BY source),
+         |n4 AS (SELECT source, CAST(count(*) AS BIGINT) AS n_near FROM s4 GROUP BY source),
+         |n5 AS (SELECT source, CAST(count(*) AS BIGINT) AS n_decontam FROM s5 GROUP BY source)
+         |SELECT n0.source, n_input,
+         |  coalesce(n_cap, 0) AS n_cap,
+         |  coalesce(n_quality, 0) AS n_quality,
+         |  coalesce(n_exact, 0) AS n_exact,
+         |  coalesce(n_near, 0) AS n_near,
+         |  coalesce(n_decontam, 0) AS n_decontam,
+         |  coalesce(weight, 0.0) AS weight,
+         |  coalesce(target_docs, 0) AS target_docs,
+         |  coalesce(n_selected, 0) AS n_selected
+         |FROM n0
+         |LEFT JOIN n1 USING (source) LEFT JOIN n2 USING (source)
+         |LEFT JOIN n3 USING (source) LEFT JOIN n4 USING (source)
+         |LEFT JOIN n5 USING (source)
+         |LEFT JOIN targets USING (source) LEFT JOIN sel USING (source)""".stripMargin),
 
     // ---- count-min sketch as relational state ---------------------------
-    "q117_cms_reagg" -> ((s, d) => {
+    Q("q117_cms_reagg", (s, d) => {
       // Count-min sketch built, persisted, and RE-AGGREGATED relationally
       // (the q112 pattern for counts instead of distincts): a CMS is a
       // D×W counter matrix, which in relational form is ≤ D·W
@@ -1907,7 +3214,45 @@ object LlmEntry {
       // vocabulary aggregate. Probes include tokens ABSENT from the
       // corpus — a CMS answers those with pure overcount, pinned here.
       cmsPlanOn(s, Tables.documents(s, d))
-    }),
+    },
+      // q117 mirror: same rolling hash, same row-hash family via 1-based
+      // array-literal indexing, same left joins + coalesce for absent keys
+      {
+        val aArr = CmsA.mkString("[", ", ", "]")
+        val bArr = CmsB.mkString("[", ", ", "]")
+        val probeArr = cmsProbes.map(t => s"'${t.replace("'", "''")}'")
+          .mkString("[", ", ", "]")
+        s"""WITH toks AS (
+           |  SELECT source, unnest(${tokensDuck("text")}) AS tok FROM documents),
+           |th AS (
+           |  SELECT source, ${TextOps.rollingHashDuck("tok")} AS h FROM toks),
+           |cells AS (
+           |  SELECT source, i AS depth,
+           |    ((h * $aArr[i + 1] + $bArr[i + 1]) % ${TextOps.HashMod})
+           |      % $CmsWidth AS pos,
+           |    CAST(count(*) AS BIGINT) AS cnt
+           |  FROM (SELECT source, h, unnest(range(0, 4)) AS i FROM th)
+           |  GROUP BY source, depth, pos),
+           |merged AS (
+           |  SELECT depth, pos, CAST(sum(cnt) AS BIGINT) AS cnt FROM cells
+           |  GROUP BY depth, pos),
+           |probes AS (SELECT unnest($probeArr) AS tok),
+           |ph AS (SELECT tok, ${TextOps.rollingHashDuck("tok")} AS h FROM probes),
+           |pcells AS (
+           |  SELECT tok, i AS depth,
+           |    ((h * $aArr[i + 1] + $bArr[i + 1]) % ${TextOps.HashMod})
+           |      % $CmsWidth AS pos
+           |  FROM (SELECT tok, h, unnest(range(0, 4)) AS i FROM ph)),
+           |est AS (
+           |  SELECT tok, min(coalesce(cnt, 0)) AS est_cnt
+           |  FROM pcells LEFT JOIN merged USING (depth, pos) GROUP BY tok),
+           |truth AS (
+           |  SELECT tok, CAST(count(*) AS BIGINT) AS true_cnt FROM toks
+           |  WHERE tok IN (SELECT tok FROM probes) GROUP BY tok)
+           |SELECT e.tok, coalesce(true_cnt, 0) AS true_cnt, est_cnt,
+           |  est_cnt - coalesce(true_cnt, 0) AS overcount
+           |FROM est e LEFT JOIN truth USING (tok)""".stripMargin
+      }),
   )
 
   /** q106 plan builder, un-detached so PlanAuditSpec can assert the
@@ -2862,1482 +4207,4 @@ object LlmEntry {
          |    FROM prepped p, prepped c
          |    WHERE p.vec_id < $ProbeN AND p.vec_id <> c.vec_id))
          |WHERE rk <= $TopK""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "q27_text_tokens" ->
-      s"""SELECT doc_id, CAST(len(${tokensDuck("text")}) AS BIGINT) AS n_tokens,
-         |  ${subwordCountDuck("text")} AS n_subwords, n_chars FROM documents""".stripMargin,
-
-    "q28_text_stats" ->
-      s"""SELECT lang, source, count(*) AS n_docs, avg(n_chars) AS avg_chars,
-         |  avg(n_tokens) AS avg_tokens FROM (
-         |  SELECT lang, source, n_chars,
-         |    CAST(len(${tokensDuck("text")}) AS BIGINT) AS n_tokens FROM documents)
-         |GROUP BY lang, source""".stripMargin,
-
-    "q29_top_tokens" ->
-      s"""SELECT tok, count(*) AS cnt FROM (
-         |  SELECT unnest(${tokensDuck("text")}) AS tok FROM documents)
-         |GROUP BY tok ORDER BY cnt DESC, tok LIMIT 20""".stripMargin,
-
-    "q30_text_quality" -> {
-      val cols = qualityDuck("text").map { case (n, e) => s"$e AS $n" }.mkString(",\n  ")
-      s"""SELECT doc_id, n_tokens, stop_ratio, uniq_ratio, mean_tok_len,
-         |  $qualityScoreExpr AS quality_score FROM (
-         |  SELECT doc_id, $cols FROM documents)""".stripMargin
-    },
-
-    "q31_langid" -> {
-      val cols = langScoresDuck("text").map { case (n, e) => s"$e AS $n" }.mkString(",\n  ")
-      s"""SELECT lang, predicted, count(*) AS n FROM (
-         |  SELECT lang, $langArgmaxExpr AS predicted FROM (
-         |    SELECT lang, $cols FROM documents))
-         |GROUP BY lang, predicted""".stripMargin
-    },
-
-    "q32_fingerprint" ->
-      s"""SELECT doc_id, ${rollingHashDuck("text")} AS rolling_hash,
-         |  md5(text) AS md5_hex,
-         |  list_min(${DedupOps.shingleHashesDuck("hs")}) AS min_shingle_hash
-         |FROM (SELECT doc_id, text, ${DedupOps.tokenHashesDuck("text")} AS hs
-         |      FROM documents)""".stripMargin,
-
-    "q33_dedup_exact" ->
-      s"""WITH corpus AS (${DedupOps.corpusDuck})
-         |${DedupOps.exactDupsDuckBody}""".stripMargin,
-
-    "q34_minhash_buckets" ->
-      s"""WITH corpus AS (${DedupOps.corpusDuck}),
-         |sigs AS (${DedupOps.signaturesDuckBody}),
-         |buckets AS (${DedupOps.lshBucketsDuckBody})
-         |SELECT band_id, bucket_size, count(*) AS n_buckets FROM (
-         |  SELECT band_id, band_key, count(*) AS bucket_size FROM buckets
-         |  GROUP BY band_id, band_key)
-         |GROUP BY band_id, bucket_size""".stripMargin,
-
-    "q35_minhash_pairs" ->
-      s"""WITH corpus AS (${DedupOps.corpusDuck}),
-         |sigs AS (${DedupOps.signaturesDuckBody}),
-         |buckets AS (${DedupOps.lshBucketsDuckBody}),
-         |pairs AS (${DedupOps.candidatePairsDuckBody})
-         |SELECT id_a, id_b,
-         |  CAST(len(list_filter(list_transform(range(1, ${DedupOps.NumHashes + 1}),
-         |    i -> CASE WHEN sa.sig[i] = sb.sig[i] THEN 1 ELSE 0 END),
-         |    x -> x = 1)) AS DOUBLE) / ${DedupOps.NumHashes}.0 AS est_jaccard
-         |FROM pairs JOIN sigs sa ON sa.doc_id = id_a
-         |           JOIN sigs sb ON sb.doc_id = id_b""".stripMargin,
-
-    "q36_jaccard_verify" ->
-      s"""WITH corpus AS (${DedupOps.corpusDuck}),
-         |shingled AS (${DedupOps.shingledDuckBody}),
-         |sigs AS (SELECT doc_id, ${DedupOps.signatureDuck("sh")} AS sig FROM shingled),
-         |buckets AS (${DedupOps.lshBucketsDuckBody}),
-         |pairs AS (${DedupOps.candidatePairsDuckBody})
-         |${DedupOps.jaccardVerifyDuckBody(JaccardThreshold)}""".stripMargin,
-
-    "q37_simhash" ->
-      s"""WITH corpus AS (${DedupOps.corpusDuck})
-         |${TextOps.simhashDuck("corpus", "doc_id", "text")}""".stripMargin,
-
-    // q170 mirror: the NAIVE shared-element join — every pair sharing
-    // ANY shingle, overlap counted by the element join, then the same
-    // integer threshold test. Deliberately oblivious to the prefix
-    // filter: equality proves the filter lossless (recall 1), which is
-    // the theorem q170 exists to pin.
-    "q170_setsim_join" ->
-      s"""WITH corpus AS (${DedupOps.corpusDuck}),
-         |shingled AS (${DedupOps.shingledDuckBody}),
-         |sh AS (SELECT doc_id, unnest(sh) AS sg FROM shingled),
-         |n AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         |ov AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS ov
-         |  FROM sh a JOIN sh b USING (sg) WHERE a.doc_id < b.doc_id
-         |  GROUP BY 1, 2)
-         |SELECT id_a, id_b, ov, na.n + nb.n - ov AS un,
-         |       (1000 * ov) // (na.n + nb.n - ov) AS jac_pm
-         |FROM ov JOIN n na ON na.doc_id = id_a
-         |        JOIN n nb ON nb.doc_id = id_b
-         |WHERE $SetSimTDen * ov >= $SetSimTNum * (na.n + nb.n - ov)""".stripMargin,
-
-    "q38_cosine_topk" -> CosineTopkDuckSql,
-
-
-    "q39_cosine_lsh_topk" ->
-      s"""WITH prepped AS (
-         |  SELECT vec_id, v, ${SimilarityOps.normDuck("v")} AS nrm,
-         |         ${SimilarityOps.tableBucketsDuck("v")} AS buckets FROM (
-         |    SELECT vec_id, ${SimilarityOps.toDoubleDuck("embedding")} AS v FROM embeddings)),
-         |idx AS (
-         |  SELECT vec_id, v, nrm, t.tbl, buckets[t.tbl + 1] AS bucket
-         |  FROM prepped,
-         |       (SELECT unnest(range(0, ${SimilarityOps.NumTables})) AS tbl) t),
-         |cand AS (
-         |  SELECT DISTINCT p.vec_id AS probe_id, c.vec_id,
-         |    ${SimilarityOps.dotDuck("p.v", "c.v")} / (p.nrm * c.nrm) AS cosine
-         |  FROM idx p JOIN idx c ON p.tbl = c.tbl AND p.bucket = c.bucket
-         |  WHERE p.vec_id < $ProbeN AND p.vec_id <> c.vec_id)
-         |SELECT probe_id, vec_id, cosine, rk FROM (
-         |  SELECT probe_id, vec_id, cosine,
-         |    CAST(row_number() OVER (PARTITION BY probe_id
-         |      ORDER BY cosine DESC, vec_id) AS BIGINT) AS rk FROM cand)
-         |WHERE rk <= $LshK""".stripMargin,
-
-    "q40_embed_neardup" ->
-      s"""WITH $vecCorpusDuckCtes
-         |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         |  ${SimilarityOps.dotDuck("a.v", "b.v")} / (a.nrm * b.nrm) AS cosine
-         |FROM corpus a JOIN corpus b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-         |WHERE ${SimilarityOps.dotDuck("a.v", "b.v")} / (a.nrm * b.nrm) >= $CosineDupThreshold""".stripMargin,
-
-    "q51_media_resize" ->
-      s"""SELECT doc_id, CAST(length(text) AS BIGINT) AS n_bytes,
-         |  CAST(length(${MultimodalOps.resizeDuck("text", 4)}) AS BIGINT) AS resized_bytes,
-         |  md5(${MultimodalOps.resizeDuck("text", 4)}) AS resized_md5
-         |FROM documents""".stripMargin,
-
-    "q50_salted_join" ->
-      """SELECT c.c_mktsegment, count(*) AS cnt,
-        |  CAST(sum(e.event_id) AS BIGINT) AS sum_event_id
-        |FROM events e JOIN customer c ON e.user_id = c.c_custkey
-        |GROUP BY c.c_mktsegment""".stripMargin,
-
-    "q49_json_extract" ->
-      """SELECT k % 10 AS k_mod, count(*) AS cnt, min(k) AS min_k, max(k) AS max_k
-        |FROM (SELECT CAST(json_extract(props, '$.k') AS BIGINT) AS k FROM events)
-        |GROUP BY k % 10""".stripMargin,
-
-    // q150 mirror: the same three JSON shapes, extracted with DuckDB's
-    // JSON functions; try_variant_get's NULL-on-type-mismatch becomes a
-    // json_type guard (integer-typed score cells only), absent paths
-    // are NULL in both engines
-    "q150_variant_extract" ->
-      """WITH j AS (
-        |  SELECT event_id,
-        |    CASE event_id % 3
-        |      WHEN 0 THEN '{"meta": {"src": "web", "score": ' ||
-        |        json_extract_string(props, '$.k') ||
-        |        '}, "tags": ["alpha", "beta"]}'
-        |      WHEN 1 THEN '{"meta": {"src": "api", "score": "s' ||
-        |        json_extract_string(props, '$.k') || '"}, "n": ' ||
-        |        CAST(event_id AS VARCHAR) || '}'
-        |      ELSE '{"meta": {"src": "crawl"}}'
-        |    END AS jstr
-        |  FROM events)
-        |SELECT json_extract_string(jstr, '$.meta.src') AS src,
-        |  count(*) AS n,
-        |  count(CASE WHEN json_type(jstr, '$.meta.score')
-        |               IN ('BIGINT', 'UBIGINT') THEN 1 END) AS n_int_score,
-        |  CAST(sum(CASE WHEN json_type(jstr, '$.meta.score')
-        |                  IN ('BIGINT', 'UBIGINT')
-        |                THEN CAST(json_extract(jstr, '$.meta.score') AS BIGINT)
-        |           END) AS BIGINT) AS sum_score,
-        |  count(json_extract_string(jstr, '$.tags[0]')) AS n_tag0,
-        |  CAST(min(CAST(json_extract(jstr, '$.n') AS BIGINT)) AS BIGINT)
-        |    AS min_n
-        |FROM j GROUP BY src""".stripMargin,
-
-    "q48_llm_pipeline" -> {
-      val cols = qualityDuck("text").map { case (n, e) => s"$e AS $n" }.mkString(",\n  ")
-      s"""WITH kept AS (
-         |  SELECT d.* FROM documents d
-         |  WHERE d.doc_id IN (
-         |    SELECT min(doc_id) FROM (
-         |      SELECT doc_id, md5(text) AS content_hash FROM documents)
-         |    GROUP BY content_hash)),
-         |scored AS (
-         |  SELECT lang, n_tokens, $qualityScoreExpr AS quality_score FROM (
-         |    SELECT lang, $cols FROM kept))
-         |SELECT lang, count(*) AS n_docs,
-         |  CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-         |  min(quality_score) AS min_quality,
-         |  max(quality_score) AS max_quality
-         |FROM scored WHERE quality_score >= 0.5 GROUP BY lang""".stripMargin
-    },
-
-    "q47_lsh_multiprobe" -> {
-      val flips = ("bucket" +: (0 until SimilarityOps.TableBits)
-        .map(i => s"xor(bucket, ${1L << i})")).mkString("[", ", ", "]")
-      s"""WITH prepped AS (
-         |  SELECT vec_id, v, ${SimilarityOps.normDuck("v")} AS nrm,
-         |         ${SimilarityOps.tableBucketsDuck("v")} AS buckets FROM (
-         |    SELECT vec_id, ${SimilarityOps.toDoubleDuck("embedding")} AS v FROM embeddings)),
-         |idx AS (
-         |  SELECT vec_id, v, nrm, t.tbl, buckets[t.tbl + 1] AS bucket
-         |  FROM prepped,
-         |       (SELECT unnest(range(0, ${SimilarityOps.NumTables})) AS tbl) t),
-         |probes AS (
-         |  SELECT probe_id, pv, pn, tbl, unnest($flips) AS bucket FROM (
-         |    SELECT vec_id AS probe_id, v AS pv, nrm AS pn, tbl, bucket
-         |    FROM idx WHERE vec_id < $ProbeN)),
-         |cand AS (
-         |  SELECT DISTINCT p.probe_id, c.vec_id,
-         |    ${SimilarityOps.dotDuck("p.pv", "c.v")} / (p.pn * c.nrm) AS cosine
-         |  FROM idx c JOIN probes p ON p.tbl = c.tbl AND p.bucket = c.bucket
-         |  WHERE p.probe_id <> c.vec_id)
-         |SELECT probe_id, vec_id, cosine, rk FROM (
-         |  SELECT probe_id, vec_id, cosine,
-         |    CAST(row_number() OVER (PARTITION BY probe_id
-         |      ORDER BY cosine DESC, vec_id) AS BIGINT) AS rk FROM cand)
-         |WHERE rk <= $LshK""".stripMargin
-    },
-
-    "q46_ivf_topk" ->
-      s"""WITH prepped AS (
-         |  SELECT vec_id, v, ${SimilarityOps.normDuck("v")} AS nrm FROM (
-         |    SELECT vec_id, ${SimilarityOps.toDoubleDuck("embedding")} AS v FROM embeddings)),
-         |centroids AS (
-         |  SELECT vec_id AS cid, v AS cv, nrm AS cn FROM prepped
-         |  WHERE vec_id BETWEEN $IvfCentroidLo AND $IvfCentroidHi),
-         |assign AS (
-         |  SELECT vec_id, v, nrm, cid FROM (
-         |    SELECT p.vec_id, p.v, p.nrm, c.cid,
-         |      row_number() OVER (PARTITION BY p.vec_id
-         |        ORDER BY ${SimilarityOps.dotDuck("p.v", "c.cv")} / (p.nrm * c.cn) DESC,
-         |                 c.cid) AS arn
-         |    FROM prepped p, centroids c)
-         |  WHERE arn = 1),
-         |passign AS (
-         |  SELECT vec_id, v, nrm, cid FROM (
-         |    SELECT p.vec_id, p.v, p.nrm, c.cid,
-         |      row_number() OVER (PARTITION BY p.vec_id
-         |        ORDER BY ${SimilarityOps.dotDuck("p.v", "c.cv")} / (p.nrm * c.cn) DESC,
-         |                 c.cid) AS arn
-         |    FROM prepped p, centroids c WHERE p.vec_id < $ProbeN)
-         |  WHERE arn <= $IvfNprobe)
-         |SELECT probe_id, vec_id, cid, cosine, rk FROM (
-         |  SELECT probe_id, vec_id, cid, cosine,
-         |    CAST(row_number() OVER (PARTITION BY probe_id
-         |      ORDER BY cosine DESC, vec_id) AS BIGINT) AS rk FROM (
-         |    SELECT p.vec_id AS probe_id, c.vec_id, c.cid,
-         |      ${SimilarityOps.dotDuck("p.v", "c.v")} / (p.nrm * c.nrm) AS cosine
-         |    FROM passign p JOIN assign c ON p.cid = c.cid
-         |    WHERE p.vec_id <> c.vec_id))
-         |WHERE rk <= $LshK""".stripMargin,
-
-    "q43_cosine_native" ->
-      s"""WITH prepped AS (
-         |  SELECT vec_id, v, ${SimilarityOps.normDuck("v")} AS nrm FROM (
-         |    SELECT vec_id, ${SimilarityOps.toDoubleDuck("embedding")} AS v FROM embeddings))
-         |SELECT probe_id, vec_id, cosine, rk FROM (
-         |  SELECT probe_id, vec_id, cosine,
-         |    CAST(row_number() OVER (PARTITION BY probe_id
-         |      ORDER BY cosine DESC, vec_id) AS BIGINT) AS rk FROM (
-         |    SELECT p.vec_id AS probe_id, c.vec_id,
-         |      ${SimilarityOps.dotDuck("p.v", "c.v")} / (p.nrm * c.nrm) AS cosine
-         |    FROM prepped p, prepped c
-         |    WHERE p.vec_id < $ProbeN AND p.vec_id <> c.vec_id))
-         |WHERE rk <= $TopK""".stripMargin,
-
-    "q41_media_meta" ->
-      s"""SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-         |  md5(text) AS payload_md5, source AS format,
-         |  CAST(n_chars % 640 AS BIGINT) AS width,
-         |  CAST(n_chars % 480 AS BIGINT) AS height,
-         |  n_chars * 25 AS duration_ms,
-         |  CAST(ceil(octet_length(encode(text)) / ${MultimodalOps.FrameSize}.0) AS BIGINT) AS n_frames
-         |FROM documents""".stripMargin,
-
-    "q42_media_frames" ->
-      s"""SELECT doc_id, u.f.frame_id AS frame_id, u.f.off AS off, u.f.len AS len,
-         |  md5(substr(text, CAST(u.f.off AS INT), CAST(u.f.len AS INT))) AS frame_md5
-         |FROM (SELECT doc_id, text,
-         |        unnest(${MultimodalOps.frameIndexDuck("length(text)")}) AS f
-         |      FROM documents) u""".stripMargin,
-
-    "q60_chunking" ->
-      s"""SELECT doc_id,
-         |  CAST((start - 1) // $ChunkStride AS BIGINT) AS chunk_id,
-         |  CAST(start AS BIGINT) AS start,
-         |  CAST(len(list_slice(toks, start,
-         |    least(start + ${ChunkTokens - 1}, n))) AS BIGINT) AS n_chunk_tokens,
-         |  md5(array_to_string(list_slice(toks, start,
-         |    least(start + ${ChunkTokens - 1}, n)), ' ')) AS chunk_md5
-         |FROM (
-         |  SELECT doc_id, toks, n,
-         |         unnest(generate_series(1, n, $ChunkStride)) AS start
-         |  FROM (SELECT doc_id, ${TextOps.tokensDuck("text")} AS toks,
-         |               len(${TextOps.tokensDuck("text")}) AS n
-         |        FROM documents))""".stripMargin,
-
-    "q61_decontam" ->
-      s"""WITH corpus AS (${DedupOps.corpusDuck}),
-         |shingled AS (${DedupOps.shingledDuckBody}),
-         |ex AS (SELECT doc_id, unnest(sh) AS h FROM shingled),
-         |rare AS (SELECT h FROM (SELECT h, count(*) AS df FROM ex GROUP BY 1)
-         |         WHERE df <= $MaxShingleDf),
-         |exr AS (SELECT doc_id, h FROM ex JOIN rare USING (h)),
-         |be AS (SELECT doc_id AS bench_id, h FROM exr
-         |       WHERE doc_id % $BenchMod = 0
-         |         AND doc_id < ${DedupOps.NearCopyOffset}),
-         |nb AS (SELECT bench_id, count(*) AS n_bench FROM be GROUP BY 1),
-         |te AS (SELECT doc_id AS train_id, h FROM exr
-         |       WHERE NOT (doc_id % $BenchMod = 0
-         |              AND doc_id < ${DedupOps.NearCopyOffset})),
-         |c AS (SELECT train_id, bench_id, count(*) AS n_common
-         |        FROM te JOIN be USING (h) GROUP BY 1, 2)
-         |SELECT c.train_id, c.bench_id, c.n_common,
-         |       CAST(c.n_common AS DOUBLE) / CAST(nb.n_bench AS DOUBLE)
-         |         AS containment
-         |  FROM c JOIN nb ON nb.bench_id = c.bench_id
-         | WHERE CAST(c.n_common AS DOUBLE) / CAST(nb.n_bench AS DOUBLE)
-         |       >= $ContainThreshold""".stripMargin,
-
-    "q76_pii_scrub" ->
-      s"""WITH planted AS (
-         |  SELECT doc_id,
-         |    CASE WHEN doc_id < $PiiPlantN
-         |         THEN text || ' contact bob.smith@example.com or ' ||
-         |              CAST(doc_id AS VARCHAR) || '5550123456'
-         |         ELSE text END AS text
-         |  FROM documents)
-         |SELECT doc_id,
-         |  CAST(len(regexp_extract_all(text, '$EmailRegexDuck', 0))
-         |       AS BIGINT) AS n_emails,
-         |  CAST(len(regexp_extract_all(text, '$LongDigitRegex', 0))
-         |       AS BIGINT) AS n_digit_runs,
-         |  md5(regexp_replace(regexp_replace(text, '$EmailRegexDuck',
-         |      '[EMAIL]', 'g'), '$LongDigitRegex', '[NUM]', 'g'))
-         |    AS clean_md5
-         |FROM planted""".stripMargin,
-
-    "q77_repetition" ->
-      s"""WITH tc AS (
-         |  SELECT doc_id, tok, count(*) AS c FROM (
-         |    SELECT doc_id, unnest(${tokensDuck("text")}) AS tok
-         |    FROM documents)
-         |  GROUP BY 1, 2),
-         |pd AS (SELECT doc_id, max(c) AS max_tf,
-         |              CAST(sum(c) AS BIGINT) AS n_tokens
-         |         FROM tc GROUP BY 1)
-         |SELECT doc_id, max_tf, n_tokens,
-         |       CAST(max_tf AS DOUBLE) / CAST(n_tokens AS DOUBLE)
-         |         AS rep_ratio
-         |  FROM pd
-         | WHERE CAST(max_tf AS DOUBLE) / CAST(n_tokens AS DOUBLE)
-         |       >= $RepRatioMin""".stripMargin,
-
-    "q71_dup_clusters" ->
-      s"""WITH RECURSIVE corpus AS (${DedupOps.corpusDuck}),
-         |shingled AS (${DedupOps.shingledDuckBody}),
-         |sigs AS (SELECT doc_id, ${DedupOps.signatureDuck("sh")} AS sig FROM shingled),
-         |buckets AS (${DedupOps.lshBucketsDuckBody}),
-         |pairs AS (${DedupOps.candidatePairsDuckBody}),
-         |verified AS (${DedupOps.jaccardVerifyDuckBody(JaccardThreshold)}),
-         |edges AS (SELECT id_a AS src, id_b AS dst FROM verified
-         |          UNION ALL SELECT id_b AS src, id_a AS dst FROM verified),
-         |nodes AS (SELECT DISTINCT src AS id FROM edges),
-         |reach(a, b) AS (
-         |  SELECT id, id FROM nodes
-         |  UNION
-         |  SELECT r.a, e.dst FROM reach r JOIN edges e ON e.src = r.b)
-         |SELECT a AS doc_id, min(b) AS component FROM reach GROUP BY 1""".stripMargin,
-
-    "q81_kmeans_step" ->
-      s"""WITH prepped AS (
-         |  SELECT vec_id, v, ${SimilarityOps.normDuck("v")} AS nrm FROM (
-         |    SELECT vec_id, ${SimilarityOps.toDoubleDuck("embedding")} AS v FROM embeddings)),
-         |centroids AS (
-         |  SELECT vec_id AS cid, v AS cv, nrm AS cn FROM prepped
-         |  WHERE vec_id BETWEEN $IvfCentroidLo AND $IvfCentroidHi),
-         |assign AS (
-         |  SELECT vec_id, v, cid FROM (
-         |    SELECT p.vec_id, p.v, c.cid,
-         |      row_number() OVER (PARTITION BY p.vec_id
-         |        ORDER BY ${SimilarityOps.dotDuck("p.v", "c.cv")} / (p.nrm * c.cn) DESC,
-         |                 c.cid) AS arn
-         |    FROM prepped p, centroids c)
-         |  WHERE arn = 1),
-         |exploded AS (
-         |  SELECT cid, unnest(range(1, len(v) + 1)) AS dim, v FROM assign),
-         |vals AS (
-         |  SELECT cid, CAST(dim AS BIGINT) AS dim,
-         |         CAST(round(v[dim] * $QuantScale) AS BIGINT) AS q
-         |  FROM exploded)
-         |SELECT cid, dim, count(*) AS n_members,
-         |  CAST(sum(q) AS BIGINT) AS sum_q,
-         |  CAST(CAST(sum(q) AS BIGINT) AS DOUBLE) /
-         |    (CAST(count(*) AS DOUBLE) * ${QuantScale}.0) AS mean_val
-         |FROM vals GROUP BY cid, dim""".stripMargin,
-
-    "q82_mixture_sample" -> {
-      val arms = MixRates.map { case (src, hi) =>
-        s"WHEN source = '$src' THEN '$hi'" }.mkString(" ")
-      s"""SELECT source, count(*) AS n_total,
-         |  CAST(sum(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-         |  min(CASE WHEN kept THEN doc_id END) AS min_kept_id,
-         |  max(CASE WHEN kept THEN doc_id END) AS max_kept_id
-         |FROM (
-         |  SELECT source, doc_id,
-         |    substr(md5(CAST(doc_id AS VARCHAR)), 1, 3) <
-         |      (CASE $arms ELSE '$MixDefaultHexHi' END) AS kept
-         |  FROM documents)
-         |GROUP BY source""".stripMargin
-    },
-
-    "q83_seq_packing" ->
-      s"""WITH t AS (
-         |  SELECT lang, doc_id,
-         |    CAST(len(${tokensDuck("text")}) AS BIGINT) AS n_tokens
-         |  FROM documents),
-         |c AS (
-         |  SELECT lang, doc_id, n_tokens,
-         |    CAST(sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-         |  FROM t)
-         |SELECT lang, (cum - n_tokens) // $PackCapacity AS bin_id,
-         |  count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS bin_tokens,
-         |  min(doc_id) AS first_doc
-         |FROM c GROUP BY 1, 2""".stripMargin,
-
-    "q84_tfidf" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(${tokensDuck("text")}) AS term
-         |  FROM documents),
-         |tf AS (
-         |  SELECT doc_id, term, count(*) AS tf FROM toks
-         |  WHERE term <> '' GROUP BY 1, 2),
-         |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |n AS (SELECT count(*) AS n_docs FROM documents)
-         |SELECT doc_id, term, tf, df, score, rk FROM (
-         |  SELECT tf.doc_id, tf.term, tf.tf, dfreq.df,
-         |    CAST(tf.tf AS DOUBLE) * CAST(n.n_docs AS DOUBLE)
-         |      / CAST(dfreq.df AS DOUBLE) AS score,
-         |    CAST(row_number() OVER (PARTITION BY tf.doc_id
-         |      ORDER BY CAST(tf.tf AS DOUBLE) * CAST(n.n_docs AS DOUBLE)
-         |                 / CAST(dfreq.df AS DOUBLE) DESC,
-         |               tf.term) AS BIGINT) AS rk
-         |  FROM tf JOIN dfreq USING (term), n)
-         |WHERE rk <= $TfidfK""".stripMargin,
-
-    "q88_embed_quantize" ->
-      """WITH p AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |m AS (
-        |  SELECT vec_id, v,
-        |    list_reduce(list_prepend(0.0, list_transform(v, x -> abs(x))),
-        |      (a, b) -> greatest(a, b)) AS max_abs
-        |  FROM p),
-        |q AS (
-        |  SELECT vec_id, v, max_abs,
-        |    list_transform(v, x -> CASE WHEN max_abs = 0.0 THEN CAST(0 AS BIGINT)
-        |      ELSE CAST(round(127.0 * x / max_abs) AS BIGINT) END) AS qv
-        |  FROM m)
-        |SELECT vec_id, max_abs,
-        |  CAST(list_reduce(list_prepend(0::BIGINT, qv),
-        |    (acc, x) -> (acc * 31 + x) % 2147483647) AS BIGINT) AS q_checksum,
-        |  list_reduce(list_prepend(0.0, list_transform(range(1, len(v) + 1),
-        |    i -> (v[i] - qv[i] * max_abs / 127.0)
-        |       * (v[i] - qv[i] * max_abs / 127.0))),
-        |    (acc, e) -> acc + e) / CAST(len(v) AS DOUBLE) AS mse
-        |FROM q""".stripMargin,
-
-    // q183 mirror: identical permutation arithmetic — md5 of the same
-    // seeded preimage, the same first-hex-byte shard, the same
-    // shard-local rank; hex text order is portable (q85's idiom)
-    "q183_epoch_order" ->
-      """WITH e AS (
-        |  SELECT 'ep1' AS epoch, doc_id,
-        |         md5('ep1:' || CAST(doc_id AS VARCHAR)) AS h FROM documents
-        |  UNION ALL
-        |  SELECT 'ep2' AS epoch, doc_id,
-        |         md5('ep2:' || CAST(doc_id AS VARCHAR)) AS h FROM documents)
-        |SELECT epoch, substr(h, 1, 2) AS shard, doc_id,
-        |  CAST(row_number() OVER (PARTITION BY epoch, substr(h, 1, 2)
-        |    ORDER BY h, doc_id) AS BIGINT) AS pos
-        |FROM e""".stripMargin,
-
-    "q85_group_sample" ->
-      s"""SELECT lang, doc_id, h, rk FROM (
-         |  SELECT lang, doc_id, h,
-         |    CAST(row_number() OVER (PARTITION BY lang ORDER BY h, doc_id)
-         |      AS BIGINT) AS rk
-         |  FROM (SELECT lang, doc_id, md5(CAST(doc_id AS VARCHAR)) AS h
-         |        FROM documents))
-         |WHERE rk <= $SampleK""".stripMargin,
-
-    // The oracle is ALL-EXACT (no bloom): the screen must not change the
-    // result, only the plan — any bloom false negative would show here.
-    "q89_bloom_screen" ->
-      s"""WITH corpus AS (${DedupOps.corpusDuck}),
-         |shingled AS (${DedupOps.shingledDuckBody}),
-         |ex AS (SELECT doc_id, unnest(sh) AS h FROM shingled),
-         |bench AS (SELECT DISTINCT h FROM ex
-         |          WHERE doc_id % $BenchMod = 0
-         |            AND doc_id < ${DedupOps.NearCopyOffset}),
-         |tr AS (SELECT doc_id AS train_id, h FROM ex
-         |       WHERE NOT (doc_id % $BenchMod = 0
-         |              AND doc_id < ${DedupOps.NearCopyOffset}))
-         |SELECT train_id, count(*) AS n_hits
-         |  FROM tr JOIN bench USING (h) GROUP BY 1
-         |HAVING count(*) >= $ScreenMinHits""".stripMargin,
-
-    "q90_incremental_dedup" ->
-      s"""WITH corpus AS (${DedupOps.corpusDuck}),
-         |prep AS (
-         |  SELECT s.doc_id, h.content_hash, s.sh
-         |  FROM (${DedupOps.shingledDuckBody}) s
-         |  JOIN (SELECT doc_id, ${DedupOps.contentHashDuck("text")}
-         |            AS content_hash
-         |        FROM corpus) h ON h.doc_id = s.doc_id),
-         |newdocs AS (SELECT * FROM prep
-         |            WHERE doc_id % $NewMod = $NewResidue
-         |               OR (doc_id >= ${DedupOps.NearCopyOffset}
-         |                   AND doc_id < ${DedupOps.NearCopyOffset + DedupOps.NearCopyN})
-         |               OR (doc_id >= ${DedupOps.ExactCopyOffset}
-         |                   AND doc_id < ${DedupOps.PlantCeil})),
-         |refdocs AS (SELECT * FROM prep
-         |            WHERE NOT (doc_id % $NewMod = $NewResidue
-         |                    OR (doc_id >= ${DedupOps.NearCopyOffset}
-         |                        AND doc_id < ${DedupOps.NearCopyOffset + DedupOps.NearCopyN})
-         |                    OR (doc_id >= ${DedupOps.ExactCopyOffset}
-         |                        AND doc_id < ${DedupOps.PlantCeil}))),
-         |exact AS (SELECT DISTINCT n.doc_id
-         |          FROM newdocs n JOIN refdocs r USING (content_hash)),
-         |sigs AS (SELECT doc_id, ${DedupOps.signatureDuck("sh")} AS sig
-         |         FROM prep),
-         |buckets AS (${DedupOps.lshBucketsDuckBody}),
-         |cand AS (
-         |  SELECT DISTINCT nb.doc_id AS new_id, rb.doc_id AS ref_id
-         |  FROM buckets nb JOIN buckets rb
-         |    ON nb.band_id = rb.band_id AND nb.band_key = rb.band_key
-         |  WHERE nb.doc_id IN (SELECT doc_id FROM newdocs)
-         |    AND rb.doc_id IN (SELECT doc_id FROM refdocs)),
-         |near AS (
-         |  SELECT DISTINCT c.new_id AS doc_id
-         |  FROM cand c
-         |  JOIN newdocs a ON a.doc_id = c.new_id
-         |  JOIN refdocs b ON b.doc_id = c.ref_id
-         |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-         |        CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE)
-         |        >= $JaccardThreshold)
-         |SELECT n.doc_id,
-         |  CASE WHEN e.doc_id IS NOT NULL THEN 'exact'
-         |       WHEN nr.doc_id IS NOT NULL THEN 'near'
-         |       ELSE 'unique' END AS verdict
-         |FROM newdocs n
-         |LEFT JOIN exact e ON e.doc_id = n.doc_id
-         |LEFT JOIN near nr ON nr.doc_id = n.doc_id""".stripMargin,
-
-    "q92_par_dedup" ->
-      s"""WITH corpus AS (${DedupOps.corpusDuck}),
-         |toked AS (
-         |  SELECT doc_id, ${TextOps.tokensDuck("text")} AS toks,
-         |         len(toks) AS n
-         |  FROM corpus),
-         |pars AS (
-         |  SELECT doc_id,
-         |    unnest(list_transform(
-         |      range(1, CAST(ceil(n / $ParTokens.0) AS BIGINT) + 1),
-         |      i -> md5(array_to_string(list_slice(toks,
-         |             (i - 1) * $ParTokens + 1,
-         |             least((i - 1) * $ParTokens + $ParTokens, n)), ' '))))
-         |      AS ph
-         |  FROM toked WHERE n > 0),
-         |dfq AS (SELECT ph, count(DISTINCT doc_id) AS ndocs
-         |        FROM pars GROUP BY 1)
-         |SELECT doc_id, count(*) AS n_pars,
-         |  count(*) FILTER (ndocs > 1) AS n_dup_pars,
-         |  CAST(count(*) FILTER (ndocs > 1) AS DOUBLE) /
-         |    CAST(count(*) AS DOUBLE) AS dup_frac
-         |FROM pars JOIN dfq USING (ph) GROUP BY 1""".stripMargin,
-
-    // q126 mirror: same blocks (struct keeps (i, btext) paired through
-    // the unnest), same ndocs=1 keep rule, same order-pinned rebuild
-    "q126_block_dedup_rewrite" ->
-      s"""WITH corpus AS (${DedupOps.corpusDuck}),
-         |toked AS (
-         |  SELECT doc_id, ${tokensDuck("text")} AS toks,
-         |         len(toks) AS n
-         |  FROM corpus),
-         |blocks AS (
-         |  SELECT doc_id, u.i, u.btext FROM (
-         |    SELECT doc_id, unnest(list_transform(
-         |      range(1, CAST(ceil(n / $ParTokens.0) AS BIGINT) + 1),
-         |      i -> struct_pack(i := i - 1,
-         |        btext := array_to_string(list_slice(toks,
-         |          (i - 1) * $ParTokens + 1,
-         |          least((i - 1) * $ParTokens + $ParTokens, n)), ' '))))
-         |      AS u
-         |    FROM toked WHERE n > 0)),
-         |dfq AS (
-         |  SELECT md5(btext) AS bh, count(DISTINCT doc_id) AS ndocs
-         |  FROM blocks GROUP BY 1),
-         |kept AS (
-         |  SELECT b.doc_id, b.i, b.btext
-         |  FROM blocks b JOIN dfq ON md5(b.btext) = dfq.bh
-         |  WHERE ndocs = 1),
-         |rebuilt AS (
-         |  SELECT doc_id, count(*) AS n_kept,
-         |    array_to_string(list(btext ORDER BY i), ' ') AS clean
-         |  FROM kept GROUP BY 1),
-         |tot AS (SELECT doc_id, count(*) AS n_blocks FROM blocks GROUP BY 1)
-         |SELECT t.doc_id, t.n_blocks, coalesce(r.n_kept, 0) AS n_kept,
-         |  md5(r.clean) AS clean_md5,
-         |  CAST(length(r.clean) AS BIGINT) AS clean_chars
-         |FROM tot t LEFT JOIN rebuilt r USING (doc_id)""".stripMargin,
-
-    "q93_shingle_df" ->
-      s"""WITH corpus AS (${DedupOps.corpusDuck}),
-         |shingled AS (${DedupOps.shingledDuckBody})
-         |SELECT h, count(*) AS df
-         |FROM (SELECT doc_id, unnest(sh) AS h FROM shingled)
-         |GROUP BY 1 HAVING count(*) >= 2""".stripMargin,
-
-    "q94_length_strata" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, lang,
-         |         CAST(len(${tokensDuck("text")}) AS BIGINT) AS n_tokens
-         |  FROM documents),
-         |th AS (SELECT quantile_cont(n_tokens, 0.25) AS q1,
-         |              quantile_cont(n_tokens, 0.5) AS q2,
-         |              quantile_cont(n_tokens, 0.75) AS q3
-         |       FROM toks)
-         |SELECT lang,
-         |  CASE WHEN n_tokens <= q1 THEN 0
-         |       WHEN n_tokens <= q2 THEN 1
-         |       WHEN n_tokens <= q3 THEN 2
-         |       ELSE 3 END AS stratum,
-         |  count(*) AS n_docs,
-         |  CAST(sum(n_tokens) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-         |    AS avg_tokens
-         |FROM toks, th GROUP BY 1, 2""".stripMargin,
-
-    // q95 mirror: same planted corpus (vecCorpusDuckCtes), same arn=1
-    // nearest-centroid assignment as q46, same adaptive-width sign-bucket
-    // candidate join as q40 (bits from the nb CTE — the integer-exact
-    // mirror of the Spark side's count-derived width) — cosines are the
-    // identical left-to-right fold, so the threshold cut and min/count
-    // aggregates are bit-stable. The oracle stays MEMBER-LEVEL on
-    // purpose: the Spark side's exact-duplicate collapse is an internal
-    // optimization whose output must be indistinguishable from this
-    // reference pair join.
-    "q95_semantic_dedup" ->
-      s"""WITH $vecCorpusDuckCtes,
-         |c AS (SELECT vec_id, v, nrm FROM corpus),
-         |centroids AS (
-         |  SELECT vec_id AS cid, v AS cv, nrm AS cn FROM c
-         |  WHERE vec_id BETWEEN $IvfCentroidLo AND $IvfCentroidHi),
-         |assign AS (
-         |  SELECT vec_id, v, nrm, cid FROM (
-         |    SELECT p.vec_id, p.v, p.nrm, ct.cid,
-         |      row_number() OVER (PARTITION BY p.vec_id
-         |        ORDER BY ${SimilarityOps.dotDuck("p.v", "ct.cv")} / (p.nrm * ct.cn) DESC,
-         |                 ct.cid) AS arn
-         |    FROM c p, centroids ct)
-         |  WHERE arn = 1),
-         |wb AS (
-         |  SELECT vec_id, v, nrm, cid,
-         |         ${SimilarityOps.bucketDuckExpr("v", "nb.bits")} AS bucket
-         |  FROM assign, nb)
-         |SELECT b.vec_id AS vec_id, b.cid, min(a.vec_id) AS dup_of,
-         |  count(*) AS n_dups
-         |FROM wb a JOIN wb b ON a.cid = b.cid AND a.bucket = b.bucket
-         |  AND a.vec_id < b.vec_id
-         |WHERE ${SimilarityOps.dotDuck("a.v", "b.v")} / (a.nrm * b.nrm)
-         |  >= $CosineDupThreshold
-         |GROUP BY b.vec_id, b.cid""".stripMargin,
-
-    // q96 mirror: 1-based gram positions (Spark sequence(1, n-k+1) ≡
-    // DuckDB range(1, n-k+2)), dual-modulus polynomial gram key over
-    // wide per-token char hashes (bit-identical integer folds on both
-    // sides; statistical collision bound in DedupOps.spanDedup),
-    // islands via pos − row_number — integer arithmetic end to end.
-    "q96_span_dedup" ->
-      s"""WITH corpus AS (${DedupOps.corpusDuck}),
-         |toks AS (SELECT doc_id, ${tokensDuck("text")} AS tk FROM corpus),
-         |hs AS (
-         |  SELECT doc_id,
-         |    list_transform(tk, t -> ${DedupOps.wideHashDuck("t", DedupOps.SpanP1)}) AS h1,
-         |    list_transform(tk, t -> ${DedupOps.wideHashDuck("t", DedupOps.SpanP2)}) AS h2,
-         |    len(tk) AS n
-         |  FROM toks WHERE len(tk) >= ${DedupOps.SpanN}),
-         |grams AS (
-         |  SELECT doc_id, CAST(i AS BIGINT) AS pos,
-         |    ${DedupOps.spanGramDuck("h1", "i", DedupOps.SpanP1)} AS g1,
-         |    ${DedupOps.spanGramDuck("h2", "i", DedupOps.SpanP2)} AS g2
-         |  FROM (SELECT doc_id, h1, h2,
-         |          unnest(range(1, n - ${DedupOps.SpanN - 2})) AS i
-         |        FROM hs)),
-         |dup AS (SELECT g1, g2 FROM grams GROUP BY g1, g2 HAVING count(*) > 1),
-         |marked AS (
-         |  SELECT doc_id, pos,
-         |    pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-         |  FROM grams JOIN dup USING (g1, g2)),
-         |spans AS (
-         |  SELECT doc_id, grp, count(*) AS span_len, min(pos) AS strt
-         |  FROM marked GROUP BY doc_id, grp)
-         |SELECT doc_id, CAST(sum(span_len) AS BIGINT) AS n_dup_grams,
-         |  count(*) AS n_spans, max(span_len) AS max_span_grams,
-         |  min(strt) AS first_dup_pos
-         |FROM spans GROUP BY doc_id""".stripMargin,
-
-    // q97 mirror: truth = q38's brute force at k=$LshK; the three
-    // approximate arms are q46/q39/q47's CTEs verbatim; hit counts are
-    // integers and recall is one exact IEEE division.
-    "q97_ann_recall" -> {
-      val flips = ("bucket" +: (0 until SimilarityOps.TableBits)
-        .map(i => s"xor(bucket, ${1L << i})")).mkString("[", ", ", "]")
-      s"""WITH prepped AS (
-         |  SELECT vec_id, v, ${SimilarityOps.normDuck("v")} AS nrm,
-         |         ${SimilarityOps.tableBucketsDuck("v")} AS buckets FROM (
-         |    SELECT vec_id, ${SimilarityOps.toDoubleDuck("embedding")} AS v FROM embeddings)),
-         |truth AS (
-         |  SELECT probe_id, vec_id FROM (
-         |    SELECT probe_id, vec_id,
-         |      row_number() OVER (PARTITION BY probe_id
-         |        ORDER BY cosine DESC, vec_id) AS rk FROM (
-         |      SELECT p.vec_id AS probe_id, c.vec_id,
-         |        ${SimilarityOps.dotDuck("p.v", "c.v")} / (p.nrm * c.nrm) AS cosine
-         |      FROM prepped p, prepped c
-         |      WHERE p.vec_id < $ProbeN AND p.vec_id <> c.vec_id))
-         |  WHERE rk <= $LshK),
-         |idx AS (
-         |  SELECT vec_id, v, nrm, t.tbl, buckets[t.tbl + 1] AS bucket
-         |  FROM prepped,
-         |       (SELECT unnest(range(0, ${SimilarityOps.NumTables})) AS tbl) t),
-         |sing AS (
-         |  SELECT probe_id, vec_id FROM (
-         |    SELECT probe_id, vec_id,
-         |      row_number() OVER (PARTITION BY probe_id
-         |        ORDER BY cosine DESC, vec_id) AS rk FROM (
-         |      SELECT DISTINCT p.vec_id AS probe_id, c.vec_id,
-         |        ${SimilarityOps.dotDuck("p.v", "c.v")} / (p.nrm * c.nrm) AS cosine
-         |      FROM idx p JOIN idx c ON p.tbl = c.tbl AND p.bucket = c.bucket
-         |      WHERE p.vec_id < $ProbeN AND p.vec_id <> c.vec_id))
-         |  WHERE rk <= $LshK),
-         |mprobes AS (
-         |  SELECT probe_id, pv, pn, tbl, unnest($flips) AS bucket FROM (
-         |    SELECT vec_id AS probe_id, v AS pv, nrm AS pn, tbl, bucket
-         |    FROM idx WHERE vec_id < $ProbeN)),
-         |multi AS (
-         |  SELECT probe_id, vec_id FROM (
-         |    SELECT probe_id, vec_id,
-         |      row_number() OVER (PARTITION BY probe_id
-         |        ORDER BY cosine DESC, vec_id) AS rk FROM (
-         |      SELECT DISTINCT p.probe_id, c.vec_id,
-         |        ${SimilarityOps.dotDuck("p.pv", "c.v")} / (p.pn * c.nrm) AS cosine
-         |      FROM idx c JOIN mprobes p ON p.tbl = c.tbl AND p.bucket = c.bucket
-         |      WHERE p.probe_id <> c.vec_id))
-         |  WHERE rk <= $LshK),
-         |centroids AS (
-         |  SELECT vec_id AS cid, v AS cv, nrm AS cn FROM prepped
-         |  WHERE vec_id BETWEEN $IvfCentroidLo AND $IvfCentroidHi),
-         |assign AS (
-         |  SELECT vec_id, v, nrm, cid FROM (
-         |    SELECT p.vec_id, p.v, p.nrm, ct.cid,
-         |      row_number() OVER (PARTITION BY p.vec_id
-         |        ORDER BY ${SimilarityOps.dotDuck("p.v", "ct.cv")} / (p.nrm * ct.cn) DESC,
-         |                 ct.cid) AS arn
-         |    FROM prepped p, centroids ct)
-         |  WHERE arn = 1),
-         |passign AS (
-         |  SELECT vec_id, v, nrm, cid FROM (
-         |    SELECT p.vec_id, p.v, p.nrm, ct.cid,
-         |      row_number() OVER (PARTITION BY p.vec_id
-         |        ORDER BY ${SimilarityOps.dotDuck("p.v", "ct.cv")} / (p.nrm * ct.cn) DESC,
-         |                 ct.cid) AS arn
-         |    FROM prepped p, centroids ct WHERE p.vec_id < $ProbeN)
-         |  WHERE arn <= $IvfNprobe),
-         |ivf AS (
-         |  SELECT probe_id, vec_id FROM (
-         |    SELECT probe_id, vec_id,
-         |      row_number() OVER (PARTITION BY probe_id
-         |        ORDER BY cosine DESC, vec_id) AS rk FROM (
-         |      SELECT p.vec_id AS probe_id, c.vec_id,
-         |        ${SimilarityOps.dotDuck("p.v", "c.v")} / (p.nrm * c.nrm) AS cosine
-         |      FROM passign p JOIN assign c ON p.cid = c.cid
-         |      WHERE p.vec_id <> c.vec_id))
-         |  WHERE rk <= $LshK),
-         |approx AS (
-         |  SELECT 'ivf_nprobe3' AS method, probe_id, vec_id FROM ivf
-         |  UNION ALL SELECT 'lsh_single', probe_id, vec_id FROM sing
-         |  UNION ALL SELECT 'lsh_multiprobe', probe_id, vec_id FROM multi),
-         |hits AS (
-         |  SELECT method, count(*) AS n_hits
-         |  FROM approx JOIN truth USING (probe_id, vec_id) GROUP BY method),
-         |nt AS (SELECT count(*) AS n_truth FROM truth)
-         |SELECT method, n_hits, n_truth,
-         |  CAST(n_hits AS DOUBLE) / CAST(n_truth AS DOUBLE) AS recall
-         |FROM hits, nt""".stripMargin
-    },
-
-    // q98 mirror: quality_score is the q30-parity expression; the
-    // running sum is over BIGINT token counts (integer window sums are
-    // cross-engine safe; double ones are not), one division never
-    // happens — min(quality_score) carries the double through unchanged.
-    "q98_budget_select" -> {
-      val cols = qualityDuck("text").map { case (n, e) => s"$e AS $n" }.mkString(",\n  ")
-      s"""WITH scored AS (
-         |  SELECT lang, doc_id, n_tokens, $qualityScoreExpr AS quality_score FROM (
-         |    SELECT lang, doc_id, $cols FROM documents)),
-         |c AS (
-         |  SELECT lang, n_tokens, quality_score,
-         |    CAST(sum(n_tokens) OVER (PARTITION BY lang
-         |      ORDER BY quality_score DESC, doc_id
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-         |  FROM scored)
-         |SELECT lang, count(*) AS n_docs_kept,
-         |  CAST(sum(n_tokens) AS BIGINT) AS tokens_kept,
-         |  min(quality_score) AS min_quality_kept
-         |FROM c WHERE cum - n_tokens < $TokenBudget GROUP BY lang""".stripMargin
-    },
-
-    // q100 is exact (the sketch only screens candidates; the counts are
-    // a rescan), so the oracle is the plain exact top-k
-    "q100_heavy_hitters" ->
-      s"""SELECT tok, count(*) AS cnt FROM (
-         |  SELECT unnest(${tokensDuck("text")}) AS tok FROM documents)
-         |GROUP BY tok ORDER BY cnt DESC, tok LIMIT $TopK""".stripMargin,
-
-    // q101 mirror: Spark length(bin(x)) ≡ DuckDB length(format('{:b}', x))
-    // (binary digits of a positive BIGINT, no leading zeros); everything
-    // up to the final division is BIGINT
-    "q101_surprisal" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, lang, unnest(${tokensDuck("text")}) AS tok
-         |  FROM documents),
-         |pair AS (
-         |  SELECT doc_id, lang, tok, count(*) AS k
-         |  FROM toks GROUP BY doc_id, lang, tok),
-         |tf AS (SELECT tok, CAST(sum(k) AS BIGINT) AS cnt FROM pair GROUP BY tok),
-         |n AS (SELECT CAST(sum(cnt) AS BIGINT) AS n FROM tf),
-         |tb AS (
-         |  SELECT tok, CAST(length(format('{:b}', n // cnt)) - 1 AS BIGINT) AS bits
-         |  FROM tf CROSS JOIN n),
-         |db AS (
-         |  SELECT doc_id, lang, CAST(sum(k * bits) AS BIGINT) AS bits,
-         |    CAST(sum(k) AS BIGINT) AS n_toks
-         |  FROM pair JOIN tb USING (tok) GROUP BY doc_id, lang)
-         |SELECT lang, count(*) AS n_docs,
-         |  CAST(count(*) FILTER (bits * $SurprisalFlagDen
-         |    > n_toks * $SurprisalFlagNum) AS BIGINT) AS flagged,
-         |  CAST(sum(bits) AS BIGINT) AS total_bits,
-         |  CAST(sum(n_toks) AS BIGINT) AS total_tokens,
-         |  CAST(sum(bits) AS DOUBLE) / CAST(sum(n_toks) AS DOUBLE)
-         |    AS bits_per_token
-         |FROM db GROUP BY lang""".stripMargin,
-
-    // q102 mirror: list_prepend(0.0) ≡ Spark's 0.0-initialized fold
-    // (0.0 + x0 = x0 exactly); list_sort ≡ array_sort on doubles
-    "q102_temperature_mix" ->
-      s"""WITH counts AS (
-         |  SELECT source, count(*) AS n_docs FROM documents GROUP BY source),
-         |z AS (
-         |  SELECT list_reduce(
-         |    list_prepend(0.0::DOUBLE,
-         |      list_sort(list(sqrt(CAST(n_docs AS DOUBLE))))),
-         |    (a, x) -> a + x) AS z
-         |  FROM counts)
-         |SELECT source, n_docs,
-         |  sqrt(CAST(n_docs AS DOUBLE)) / z AS weight,
-         |  CAST(floor($MixTargetDocs * sqrt(CAST(n_docs AS DOUBLE)) / z)
-         |    AS BIGINT) AS target_docs
-         |FROM counts CROSS JOIN z""".stripMargin,
-
-    // q103 mirror: the relational cosine — integer product-sums joined
-    // on the hash bucket; sqrt·sqrt then one division, same op sequence
-    "q103_hash_embed" ->
-      s"""WITH pair AS (
-         |  SELECT doc_id, tok, count(*) AS k FROM (
-         |    SELECT doc_id, unnest(${tokensDuck("text")}) AS tok FROM documents)
-         |  GROUP BY doc_id, tok),
-         |hashed AS (
-         |  SELECT doc_id, h % $HashDim AS j,
-         |    k * (CASE WHEN (h // $HashDim) % 2 = 0 THEN 1 ELSE -1 END) AS w
-         |  FROM (SELECT doc_id, k, ${TextOps.rollingHashDuck("tok")} AS h
-         |        FROM pair)),
-         |buckets AS (
-         |  SELECT doc_id, j, CAST(sum(w) AS BIGINT) AS w
-         |  FROM hashed GROUP BY doc_id, j),
-         |norms AS (
-         |  SELECT doc_id, CAST(sum(w * w) AS BIGINT) AS n2
-         |  FROM buckets GROUP BY doc_id HAVING sum(w * w) > 0),
-         |dots AS (
-         |  SELECT p.doc_id AS probe_id, c.doc_id,
-         |    CAST(sum(c.w * p.w) AS BIGINT) AS dot
-         |  FROM buckets c JOIN buckets p USING (j)
-         |  WHERE p.doc_id < $ProbeN AND c.doc_id <> p.doc_id
-         |  GROUP BY p.doc_id, c.doc_id)
-         |SELECT probe_id, doc_id, cosine FROM (
-         |  SELECT probe_id, d.doc_id,
-         |    CAST(dot AS DOUBLE) /
-         |      (sqrt(CAST(pn.n2 AS DOUBLE)) * sqrt(CAST(cn.n2 AS DOUBLE)))
-         |      AS cosine,
-         |    row_number() OVER (PARTITION BY probe_id
-         |      ORDER BY CAST(dot AS DOUBLE) /
-         |        (sqrt(CAST(pn.n2 AS DOUBLE)) * sqrt(CAST(cn.n2 AS DOUBLE)))
-         |        DESC, d.doc_id) AS rk
-         |  FROM dots d
-         |  JOIN norms cn ON d.doc_id = cn.doc_id
-         |  JOIN norms pn ON d.probe_id = pn.doc_id)
-         |WHERE rk <= $LshK""".stripMargin,
-
-    // q106 mirror: the same whole-bit idf (format('{:b}', …) ≡ bin),
-    // the same IEEE op sequence per term score, and the q102
-    // order-pinned fold (list_prepend(0.0) ≡ the 0.0-initialized
-    // aggregate; 0.0 + x0 = x0 exactly)
-    "q106_bm25" -> Bm25DuckSql,
-
-    // q173 mirror: both ranker CTEs are the SAME oracle texts as
-    // q106/q38 (shared vals — rank drift would be a bug), fused on
-    // ranks with the identical integer point formula
-    "q173_rrf_fusion" ->
-      s"""WITH bm AS (
-         |  SELECT query_id, doc_id, rk FROM ($Bm25DuckSql)),
-         |cs AS (
-         |  SELECT probe_id AS query_id, vec_id AS doc_id, rk
-         |  FROM ($CosineTopkDuckSql) WHERE probe_id < $Bm25ProbeN),
-         |u AS (
-         |  SELECT query_id, doc_id, $RrfScale // ($RrfK + rk) AS pts
-         |  FROM (SELECT * FROM bm UNION ALL SELECT * FROM cs)),
-         |f AS (
-         |  SELECT query_id, doc_id, CAST(sum(pts) AS BIGINT) AS rrf,
-         |         CAST(count(*) AS BIGINT) AS n_lists
-         |  FROM u GROUP BY query_id, doc_id)
-         |SELECT query_id, doc_id, rrf, n_lists, rk FROM (
-         |  SELECT query_id, doc_id, rrf, n_lists,
-         |    CAST(row_number() OVER (PARTITION BY query_id
-         |      ORDER BY rrf DESC, doc_id) AS BIGINT) AS rk
-         |  FROM f)
-         |WHERE rk <= $FusedK""".stripMargin,
-
-
-    // q107 mirror: identical hashed-feature construction (1-based list
-    // indexing ≡ element_at; range(1, len) is end-exclusive ≡
-    // sequence(1, len−1) inclusive), identical whole-bit llr via
-    // format('{:b}', …) ≡ bin, BIGINT arithmetic throughout
-    "q107_dsir_weights" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, source, ${tokensDuck("text")} AS tk
-         |  FROM documents),
-         |uni AS (SELECT doc_id, source, unnest(tk) AS g FROM toks),
-         |big AS (
-         |  SELECT doc_id, source, tk[i] || ' ' || tk[i + 1] AS g
-         |  FROM (SELECT doc_id, source, tk, unnest(range(1, len(tk))) AS i
-         |        FROM toks WHERE len(tk) >= 2)),
-         |feats AS (
-         |  SELECT doc_id, source,
-         |    ${TextOps.rollingHashDuck("g")} % $DsirBuckets AS b,
-         |    count(*) AS cnt
-         |  FROM (SELECT * FROM uni UNION ALL SELECT * FROM big)
-         |  GROUP BY doc_id, source, b),
-         |raw AS (
-         |  SELECT b, CAST(sum(cnt) + 1 AS BIGINT) AS c_r FROM feats
-         |  GROUP BY b),
-         |tgt AS (
-         |  SELECT b, CAST(sum(cnt) AS BIGINT) AS t0 FROM feats
-         |  WHERE source = '$DsirTarget' GROUP BY b),
-         |dist AS (
-         |  SELECT b, c_r, coalesce(t0, 0) + 1 AS c_t
-         |  FROM raw LEFT JOIN tgt USING (b)),
-         |totals AS (
-         |  SELECT CAST(sum(c_t) AS BIGINT) AS n_t,
-         |    CAST(sum(c_r) AS BIGINT) AS n_r FROM dist),
-         |llr AS (
-         |  SELECT b,
-         |    (CAST(length(format('{:b}', c_t)) AS BIGINT)
-         |      - CAST(length(format('{:b}', c_r)) AS BIGINT))
-         |    + (CAST(length(format('{:b}', n_r)) AS BIGINT)
-         |      - CAST(length(format('{:b}', n_t)) AS BIGINT)) AS llr
-         |  FROM dist CROSS JOIN totals)
-         |SELECT doc_id, source, CAST(sum(cnt) AS BIGINT) AS n_feats,
-         |  CAST(sum(cnt * llr) AS BIGINT) AS weight
-         |FROM feats JOIN llr USING (b)
-         |WHERE source <> '$DsirTarget'
-         |GROUP BY doc_id, source
-         |ORDER BY weight DESC, doc_id LIMIT $DsirTopK""".stripMargin,
-
-    // q165 mirror: identical feature CTEs as q107; class counts via
-    // FILTERed sums, the same bit-length log-odds, the same integer
-    // keep compare; one division per output row, identical sequence
-    "q165_quality_classifier" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, source, ${tokensDuck("text")} AS tk
-         |  FROM documents),
-         |uni AS (SELECT doc_id, source, unnest(tk) AS g FROM toks),
-         |big AS (
-         |  SELECT doc_id, source, tk[i] || ' ' || tk[i + 1] AS g
-         |  FROM (SELECT doc_id, source, tk, unnest(range(1, len(tk))) AS i
-         |        FROM toks WHERE len(tk) >= 2)),
-         |feats AS (
-         |  SELECT doc_id, source,
-         |    ${TextOps.rollingHashDuck("g")} % $DsirBuckets AS b,
-         |    count(*) AS cnt
-         |  FROM (SELECT * FROM uni UNION ALL SELECT * FROM big)
-         |  GROUP BY doc_id, source, b),
-         |cls AS (
-         |  SELECT b,
-         |    CAST(coalesce(sum(CASE WHEN source = '$DsirTarget'
-         |      THEN cnt END), 0) AS BIGINT) AS c_pos,
-         |    CAST(coalesce(sum(CASE WHEN source <> '$DsirTarget'
-         |      THEN cnt END), 0) AS BIGINT) AS c_neg
-         |  FROM feats GROUP BY b),
-         |totals AS (
-         |  SELECT CAST(sum(c_pos) AS BIGINT) AS np0,
-         |    CAST(sum(c_neg) AS BIGINT) AS nn0 FROM cls),
-         |wts AS (
-         |  SELECT b,
-         |    (${bitsDuck("c_pos + 1")} - ${bitsDuck("c_neg + 1")})
-         |    + (${bitsDuck(s"nn0 + $DsirBuckets")}
-         |       - ${bitsDuck(s"np0 + $DsirBuckets")}) AS w
-         |  FROM cls CROSS JOIN totals),
-         |scored AS (
-         |  SELECT doc_id, source, CAST(sum(cnt * w) AS BIGINT) AS score
-         |  FROM feats JOIN wts USING (b)
-         |  GROUP BY doc_id, source)
-         |SELECT source, count(*) AS n_docs,
-         |  CAST(coalesce(sum(CASE WHEN score > 0 THEN 1 END), 0) AS BIGINT)
-         |    AS n_kept,
-         |  CAST(sum(score) AS BIGINT) AS total_score,
-         |  CAST(coalesce(sum(CASE WHEN score > 0 THEN 1 END), 0) AS DOUBLE)
-         |    / CAST(count(*) AS DOUBLE) AS kept_frac
-         |FROM scored GROUP BY source""".stripMargin,
-
-    // q110 mirror: string_agg(... ORDER BY rk) ≡ the array_sort-then-
-    // join rendering (rk is unique per term so both orders are total);
-    // aggregate functions in both engines skip the NULLs the CASE
-    // leaves on rank > k
-    "q110_inverted_index" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(${tokensDuck("text")}) AS term
-         |  FROM documents),
-         |tf AS (
-         |  SELECT term, doc_id, count(*) AS tf FROM toks
-         |  WHERE term <> '' GROUP BY 1, 2),
-         |ranked AS (
-         |  SELECT term, doc_id, tf,
-         |    CAST(row_number() OVER (PARTITION BY term
-         |      ORDER BY tf DESC, doc_id) AS BIGINT) AS rk
-         |  FROM tf)
-         |SELECT term, count(*) AS df, CAST(sum(tf) AS BIGINT) AS total_tf,
-         |  string_agg(CASE WHEN rk <= $PostingsK
-         |               THEN doc_id || ':' || tf END, ',' ORDER BY rk)
-         |    AS postings
-         |FROM ranked GROUP BY term""".stripMargin,
-
-    // q113 mirror: identical deterministic order (n_uniq desc, doc_id)
-    "q113_source_cap" ->
-      s"""SELECT doc_id, source, n_uniq, rk FROM (
-         |  SELECT doc_id, source, n_uniq,
-         |    CAST(row_number() OVER (PARTITION BY source
-         |      ORDER BY n_uniq DESC, doc_id) AS BIGINT) AS rk
-         |  FROM (SELECT doc_id, source,
-         |          CAST(len(list_distinct(${tokensDuck("text")})) AS BIGINT)
-         |            AS n_uniq
-         |        FROM documents))
-         |WHERE rk <= $CapPerSource""".stripMargin,
-
-    // q114 mirror: 1-based tk[i] ≡ element_at, range end-exclusive ≡
-    // sequence inclusive (the q107 equivalences), whole-bit pmi via
-    // format('{:b}', …) ≡ bin
-    "q114_pmi_bigrams" ->
-      s"""WITH tk AS (
-         |  SELECT ${tokensDuck("text")} AS tk FROM documents
-         |  WHERE len(${tokensDuck("text")}) >= 2),
-         |big AS (
-         |  SELECT tk[i] AS a, tk[i + 1] AS b
-         |  FROM (SELECT tk, unnest(range(1, len(tk))) AS i FROM tk)),
-         |cab AS (
-         |  SELECT a, b, CAST(count(*) AS BIGINT) AS c_ab FROM big
-         |  GROUP BY a, b),
-         |ca AS (SELECT a, CAST(sum(c_ab) AS BIGINT) AS c_a FROM cab GROUP BY a),
-         |cb AS (SELECT b, CAST(sum(c_ab) AS BIGINT) AS c_b FROM cab GROUP BY b),
-         |nn AS (SELECT CAST(sum(c_ab) AS BIGINT) AS n_big FROM cab)
-         |SELECT a, b, c_ab, c_a, c_b,
-         |  (${bitsDuck("c_ab")} + ${bitsDuck("n_big")})
-         |    - (${bitsDuck("c_a")} + ${bitsDuck("c_b")}) AS pmi_bits
-         |FROM cab JOIN ca USING (a) JOIN cb USING (b) CROSS JOIN nn
-         |WHERE c_ab >= $PmiMinCount
-         |ORDER BY pmi_bits DESC, c_ab DESC, a, b
-         |LIMIT $PmiTopK""".stripMargin,
-
-    // q132 mirror: same compressed per-doc transition table, same add-1
-    // whole-bit surprisal ((c_a + V) // (c_ab + 1) then bin length),
-    // same integer flag compare, one IEEE division per report row
-    "q132_bigram_lm_score" ->
-      s"""WITH docs AS (
-         |  SELECT doc_id, lang, ${tokensDuck("text")} AS tk FROM documents
-         |  WHERE len(${tokensDuck("text")}) >= 2),
-         |pair AS (
-         |  SELECT doc_id, lang, a, b, CAST(count(*) AS BIGINT) AS k FROM (
-         |    SELECT doc_id, lang, tk[i] AS a, tk[i + 1] AS b
-         |    FROM (SELECT doc_id, lang, tk, unnest(range(1, len(tk))) AS i
-         |          FROM docs))
-         |  GROUP BY 1, 2, 3, 4),
-         |cab AS (
-         |  SELECT a, b, CAST(sum(k) AS BIGINT) AS c_ab FROM pair
-         |  GROUP BY a, b),
-         |ca AS (SELECT a, CAST(sum(c_ab) AS BIGINT) AS c_a FROM cab GROUP BY a),
-         |vv AS (SELECT CAST(count(DISTINCT b) AS BIGINT) AS v FROM cab),
-         |tb AS (
-         |  SELECT a, b,
-         |    CAST(length(format('{:b}', (c_a + v) // (c_ab + 1))) - 1
-         |      AS BIGINT) AS tbits
-         |  FROM cab JOIN ca USING (a) CROSS JOIN vv),
-         |db AS (
-         |  SELECT doc_id, lang, CAST(sum(k * tbits) AS BIGINT) AS bits,
-         |         CAST(sum(k) AS BIGINT) AS n_trans
-         |  FROM pair JOIN tb USING (a, b) GROUP BY 1, 2)
-         |SELECT lang, count(*) AS n_docs,
-         |  CAST(sum(CAST(bits * $SurprisalFlagDen
-         |    > n_trans * $SurprisalFlagNum AS BIGINT)) AS BIGINT) AS n_flagged,
-         |  CAST(sum(bits) AS BIGINT) AS sum_bits,
-         |  CAST(sum(n_trans) AS BIGINT) AS sum_trans,
-         |  CAST(sum(bits) AS DOUBLE) / CAST(sum(n_trans) AS DOUBLE) AS avg_bits
-         |FROM db GROUP BY 1""".stripMargin,
-
-    // q115 mirror: identical quantization (left-assoc x * 0.5 * Q, floor
-    // → BIGINT), identical integer hit test — no IEEE op differs
-    "q115_semantic_decontam" ->
-      s"""WITH dv AS (
-         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |corpus AS (
-         |  SELECT vec_id, q,
-         |    list_reduce(list_prepend(0::BIGINT,
-         |      list_transform(q, x -> x * x)), (acc, x) -> acc + x) AS n2
-         |  FROM (SELECT vec_id,
-         |          list_transform(v, x -> CAST(floor(x * $DecontamQuant) AS BIGINT)) AS q
-         |        FROM dv)),
-         |probes AS (
-         |  SELECT probe_id, pq,
-         |    list_reduce(list_prepend(0::BIGINT,
-         |      list_transform(pq, x -> x * x)), (acc, x) -> acc + x) AS pn2
-         |  FROM (SELECT vec_id + $DecontamEvalOffset AS probe_id,
-         |          list_transform(v, x -> CAST(floor(x * 0.5 * $DecontamQuant) AS BIGINT)) AS pq
-         |        FROM dv WHERE vec_id < $DecontamEvalN)),
-         |pairs AS (
-         |  SELECT c.vec_id,
-         |    list_reduce(list_prepend(0::BIGINT,
-         |      list_transform(range(1, len(q) + 1), i -> q[i] * pq[i])),
-         |      (acc, x) -> acc + x) AS dot,
-         |    n2, pn2
-         |  FROM corpus c CROSS JOIN probes)
-         |SELECT vec_id, CAST(count(*) AS BIGINT) AS n_hits
-         |FROM pairs
-         |WHERE dot > 0 AND ${DecontamTauDen * DecontamTauDen} * dot * dot >=
-         |  ${DecontamTauNum * DecontamTauNum} * n2 * pn2
-         |GROUP BY vec_id""".stripMargin,
-
-    // q116 mirror: same two cascaded aggregates, same whole-bit bucket
-    "q116_freq_spectrum" ->
-      s"""WITH cnt AS (
-         |  SELECT tok, CAST(count(*) AS BIGINT) AS cnt FROM (
-         |    SELECT unnest(${tokensDuck("text")}) AS tok FROM documents)
-         |  GROUP BY tok)
-         |SELECT ${bitsDuck("cnt")} AS freq_bucket,
-         |  CAST(count(*) AS BIGINT) AS n_types,
-         |  CAST(sum(cnt) AS BIGINT) AS n_tokens,
-         |  min(cnt) AS min_cnt, max(cnt) AS max_cnt
-         |FROM cnt GROUP BY 1""".stripMargin,
-
-    // q118 mirror: same distinct (source, shingle) table (per-doc
-    // distinctness subsumed by the source-level DISTINCT), same
-    // self-join + lexicographic pair order, same single division
-    "q118_source_overlap" ->
-      s"""WITH ss AS (
-         |  SELECT DISTINCT source, sh AS h FROM (
-         |    SELECT source, unnest(${DedupOps.shingleHashesDuck("hs")}) AS sh
-         |    FROM (SELECT source, ${DedupOps.tokenHashesDuck("text")} AS hs
-         |          FROM documents))),
-         |counts AS (
-         |  SELECT source, CAST(count(*) AS BIGINT) AS n_sh FROM ss
-         |  GROUP BY source),
-         |shared AS (
-         |  SELECT a.source AS source_a, b.source AS source_b,
-         |    CAST(count(*) AS BIGINT) AS n_shared
-         |  FROM ss a JOIN ss b USING (h)
-         |  WHERE a.source < b.source
-         |  GROUP BY 1, 2)
-         |SELECT source_a, source_b, n_shared, ca.n_sh AS n_a, cb.n_sh AS n_b,
-         |  CAST(n_shared AS DOUBLE) /
-         |    CAST(ca.n_sh + cb.n_sh - n_shared AS DOUBLE) AS jaccard
-         |FROM shared
-         |JOIN counts ca ON source_a = ca.source
-         |JOIN counts cb ON source_b = cb.source""".stripMargin,
-
-    // q119 mirror: identical quantization, 1-based list_slice ≡ slice,
-    // identical integer subvector distances, identical one-Lloyd-step
-    // codebook training (floor-div means via the pmod-subtraction trick,
-    // so `//` and Spark's `div` agree on negatives), identical (d2, c)
-    // and (adc_dist, vec_id) tie-pinned orders
-    "q119_pq_adc" ->
-      s"""WITH dv AS (
-         |  SELECT vec_id, list_transform(CAST(embedding AS DOUBLE[]),
-         |    x -> CAST(floor(x * $PqQuant) AS BIGINT)) AS q
-         |  FROM embeddings),
-         |sub AS (
-         |  SELECT vec_id, j, list_slice(q, j * $PqSub + 1, j * $PqSub + $PqSub) AS s
-         |  FROM (SELECT vec_id, q, unnest(range(0, $PqM)) AS j FROM dv)),
-         |cent AS (
-         |  SELECT vec_id AS c, j, s AS cs FROM sub
-         |  WHERE vec_id BETWEEN $PqCentLo AND ${PqCentLo + PqK - 1}),
-         |$pqBookCtesDuck,
-         |dist AS (
-         |  SELECT v.vec_id, v.j, c.c,
-         |    ${pqD2Duck("v.s", "c.cs")} AS d2
-         |  FROM sub v JOIN book c USING (j)),
-         |codes AS (
-         |  SELECT vec_id, j, c AS code FROM (
-         |    SELECT vec_id, j, c,
-         |      row_number() OVER (PARTITION BY vec_id, j ORDER BY d2, c) AS rk
-         |    FROM dist)
-         |  WHERE rk = 1),
-         |dtab AS (
-         |  SELECT vec_id AS probe_id, j, c, d2 FROM dist
-         |  WHERE vec_id < $ProbeN),
-         |adc AS (
-         |  SELECT d.probe_id, co.vec_id, CAST(sum(d.d2) AS BIGINT) AS adc_dist
-         |  FROM codes co JOIN dtab d ON co.j = d.j AND co.code = d.c
-         |  WHERE co.vec_id <> d.probe_id
-         |  GROUP BY d.probe_id, co.vec_id)
-         |SELECT probe_id, vec_id, adc_dist, rk FROM (
-         |  SELECT probe_id, vec_id, adc_dist,
-         |    CAST(row_number() OVER (PARTITION BY probe_id
-         |      ORDER BY adc_dist, vec_id) AS BIGINT) AS rk
-         |  FROM adc)
-         |WHERE rk <= $LshK""".stripMargin,
-
-    // q120 mirror: identical coarse assignment (full-width integer L2,
-    // (cd2, cc) tie order), identical residuals, the shared trained-book
-    // CTEs over residual subvectors, identical per-cell ADC tables and
-    // (adc_dist, vec_id) final order
-    "q120_ivfadc" ->
-      s"""$ivfadcCtesDuck
-         |SELECT probe_id, vec_id, cid, adc_dist, rk FROM (
-         |  SELECT probe_id, vec_id, cid, adc_dist,
-         |    CAST(row_number() OVER (PARTITION BY probe_id
-         |      ORDER BY adc_dist, vec_id) AS BIGINT) AS rk
-         |  FROM adc)
-         |WHERE rk <= $LshK""".stripMargin,
-
-    // q128 mirror: same one-pass FILTER counts, same add-1 whole-bit
-    // llr, same (|drift| desc, tok) report order
-    "q128_corpus_drift" ->
-      s"""WITH corpus AS (${DedupOps.corpusDuck}),
-         |toks AS (
-         |  SELECT CASE WHEN doc_id < $DriftSplitId THEN 'a' ELSE 'b' END
-         |           AS snap,
-         |         unnest(${tokensDuck("text")}) AS tok
-         |  FROM corpus),
-         |counts AS (
-         |  SELECT tok,
-         |    CAST(count(*) FILTER (snap = 'a') AS BIGINT) AS c_a,
-         |    CAST(count(*) FILTER (snap = 'b') AS BIGINT) AS c_b
-         |  FROM toks WHERE length(tok) > 0 GROUP BY 1),
-         |tot AS (
-         |  SELECT CAST(sum(c_a) AS BIGINT) AS n_a,
-         |         CAST(sum(c_b) AS BIGINT) AS n_b
-         |  FROM counts)
-         |SELECT tok, c_a, c_b,
-         |  ${bitsDuck("c_b + 1")} - ${bitsDuck("n_b")}
-         |    - ${bitsDuck("c_a + 1")} + ${bitsDuck("n_a")} AS drift_bits
-         |FROM counts CROSS JOIN tot
-         |ORDER BY abs(${bitsDuck("c_b + 1")} - ${bitsDuck("n_b")}
-         |    - ${bitsDuck("c_a + 1")} + ${bitsDuck("n_a")}) DESC, tok
-         |LIMIT $DriftTopK""".stripMargin,
-
-    // q127 mirror: identical sign hash (same integer mix, // ≡ div on
-    // the non-negative operands), identical projected-L2 tie order
-    "q127_random_projection" ->
-      s"""WITH dv AS (
-         |  SELECT vec_id, list_transform(CAST(embedding AS DOUBLE[]),
-         |    x -> CAST(floor(x * $PqQuant) AS BIGINT)) AS q
-         |  FROM embeddings),
-         |proj AS (SELECT vec_id, $rpProjDuck AS p FROM dv),
-         |probes AS (
-         |  SELECT vec_id AS probe_id, p AS pp FROM proj
-         |  WHERE vec_id < $ProbeN),
-         |scored AS (
-         |  SELECT pr.probe_id, v.vec_id,
-         |    list_reduce(list_prepend(0::BIGINT,
-         |      list_transform(range(1, $RpDims + 1),
-         |        i -> (v.p[i] - pr.pp[i]) * (v.p[i] - pr.pp[i]))),
-         |      (acc, x) -> acc + x) AS proj_d2
-         |  FROM proj v, probes pr WHERE v.vec_id <> pr.probe_id)
-         |SELECT probe_id, vec_id, proj_d2, rk FROM (
-         |  SELECT probe_id, vec_id, proj_d2,
-         |    CAST(row_number() OVER (PARTITION BY probe_id
-         |      ORDER BY proj_d2, vec_id) AS BIGINT) AS rk
-         |  FROM scored)
-         |WHERE rk <= $LshK""".stripMargin,
-
-    // q125 mirror: q120's chain cut at RerankR, then exact full-width
-    // integer L2 over just the candidates, re-ranked (exact_d2, vec_id)
-    "q125_ivfadc_rerank" ->
-      s"""$ivfadcCtesDuck,
-         |cand AS (
-         |  SELECT probe_id, vec_id, adc_dist FROM (
-         |    SELECT probe_id, vec_id, adc_dist,
-         |      row_number() OVER (PARTITION BY probe_id
-         |        ORDER BY adc_dist, vec_id) AS rk
-         |    FROM adc)
-         |  WHERE rk <= $RerankR),
-         |refine AS (
-         |  SELECT c.probe_id, c.vec_id, c.adc_dist,
-         |    ${fullD2Duck("cv.q", "pv.q")} AS exact_d2
-         |  FROM cand c
-         |  JOIN dv cv ON cv.vec_id = c.vec_id
-         |  JOIN dv pv ON pv.vec_id = c.probe_id)
-         |SELECT probe_id, vec_id, adc_dist, exact_d2, rk FROM (
-         |  SELECT probe_id, vec_id, adc_dist, exact_d2,
-         |    CAST(row_number() OVER (PARTITION BY probe_id
-         |      ORDER BY exact_d2, vec_id) AS BIGINT) AS rk
-         |  FROM refine)
-         |WHERE rk <= $LshK""".stripMargin,
-
-
-    // q121 mirror: the five stage mirrors chained verbatim — q113's
-    // window cap, q101's whole-bit LM (LEFT join + coalesce for
-    // token-less docs), q33's keep-first hash window, q36's
-    // LSH-candidate + Jaccard verify (drop the higher id of any
-    // qualifying pair), q89's all-exact screen (the Spark bloom is a
-    // pre-screen only), q102's pinned-order fold + floor targets
-    "q121_curation_pipeline" ->
-      s"""WITH c0 AS (
-         |  SELECT doc_id, source, text,
-         |    CAST(len(list_distinct(${tokensDuck("text")})) AS BIGINT) AS n_uniq
-         |  FROM (
-         |    SELECT doc_id, source, text FROM documents
-         |    UNION ALL SELECT doc_id + ${DedupOps.ExactCopyOffset} AS doc_id,
-         |      source, text FROM documents WHERE doc_id < ${DedupOps.ExactCopyN}
-         |    UNION ALL SELECT doc_id + ${DedupOps.NearCopyOffset} AS doc_id,
-         |      source, substr(text, length(${tokensDuck("text")}[1]) + 2) AS text
-         |      FROM documents WHERE doc_id < ${DedupOps.NearCopyN})),
-         |s1 AS (
-         |  SELECT doc_id, source, text, n_uniq FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY source
-         |      ORDER BY n_uniq DESC, doc_id) AS rk FROM c0)
-         |  WHERE rk <= $PipeCapPerSource),
-         |pair AS (
-         |  SELECT doc_id, tok, count(*) AS k FROM (
-         |    SELECT doc_id, unnest(${tokensDuck("text")}) AS tok FROM s1)
-         |  GROUP BY doc_id, tok),
-         |tf AS (SELECT tok, CAST(sum(k) AS BIGINT) AS cnt FROM pair GROUP BY tok),
-         |n AS (SELECT CAST(sum(cnt) AS BIGINT) AS n FROM tf),
-         |tb AS (
-         |  SELECT tok, CAST(length(format('{:b}', n // cnt)) - 1 AS BIGINT) AS bits
-         |  FROM tf CROSS JOIN n),
-         |db AS (
-         |  SELECT doc_id, CAST(sum(k * bits) AS BIGINT) AS bits,
-         |    CAST(sum(k) AS BIGINT) AS n_toks
-         |  FROM pair JOIN tb USING (tok) GROUP BY doc_id),
-         |s2 AS (
-         |  SELECT s1.doc_id, source, text, n_uniq FROM s1 LEFT JOIN db USING (doc_id)
-         |  WHERE coalesce(bits * $SurprisalFlagDen
-         |    <= n_toks * $SurprisalFlagNum, TRUE)),
-         |s3 AS (
-         |  SELECT doc_id, source, text, n_uniq FROM (
-         |    SELECT *, row_number() OVER (
-         |      PARTITION BY ${DedupOps.contentHashDuck("text")}
-         |      ORDER BY doc_id) AS rk FROM s2)
-         |  WHERE rk = 1),
-         |corpus AS (SELECT doc_id, text FROM c0),
-         |shingled AS (${DedupOps.shingledDuckBody}),
-         |sigs AS (
-         |  SELECT doc_id, ${DedupOps.signatureDuck("sh")} AS sig FROM shingled
-         |  WHERE doc_id IN (SELECT doc_id FROM s3)),
-         |buckets AS (${DedupOps.lshBucketsDuckBody}),
-         |pairs AS (${DedupOps.candidatePairsDuckBody}),
-         |neardrop AS (
-         |  SELECT DISTINCT id_b AS doc_id FROM (
-         |    ${DedupOps.jaccardVerifyDuckBody(JaccardThreshold)})),
-         |s4 AS (
-         |  SELECT * FROM s3
-         |  WHERE doc_id NOT IN (SELECT doc_id FROM neardrop)),
-         |ex AS (SELECT doc_id, unnest(sh) AS h FROM shingled),
-         |benchsh AS (
-         |  SELECT DISTINCT h FROM ex
-         |  WHERE doc_id % $BenchMod = 0 AND doc_id < ${DedupOps.NearCopyOffset}),
-         |contam AS (
-         |  SELECT ex.doc_id FROM ex JOIN benchsh USING (h)
-         |  WHERE ex.doc_id IN (SELECT doc_id FROM s4)
-         |    AND NOT (ex.doc_id % $BenchMod = 0
-         |             AND ex.doc_id < ${DedupOps.NearCopyOffset})
-         |  GROUP BY ex.doc_id HAVING count(*) >= $ScreenMinHits),
-         |s5 AS (
-         |  SELECT * FROM s4
-         |  WHERE NOT (doc_id % $BenchMod = 0
-         |             AND doc_id < ${DedupOps.NearCopyOffset})
-         |    AND doc_id NOT IN (SELECT doc_id FROM contam)),
-         |counts5 AS (
-         |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs FROM s5
-         |  GROUP BY source),
-         |z AS (
-         |  SELECT list_reduce(
-         |    list_prepend(0.0::DOUBLE,
-         |      list_sort(list(sqrt(CAST(n_docs AS DOUBLE))))),
-         |    (a, x) -> a + x) AS z
-         |  FROM counts5),
-         |targets AS (
-         |  SELECT source, sqrt(CAST(n_docs AS DOUBLE)) / z AS weight,
-         |    CAST(floor($MixTargetDocs * sqrt(CAST(n_docs AS DOUBLE)) / z)
-         |      AS BIGINT) AS target_docs
-         |  FROM counts5 CROSS JOIN z),
-         |sel AS (
-         |  SELECT source, CAST(count(*) AS BIGINT) AS n_selected FROM (
-         |    SELECT s5.source, target_docs, row_number() OVER (
-         |      PARTITION BY s5.source
-         |      ORDER BY n_uniq DESC, doc_id) AS rk
-         |    FROM s5 JOIN targets USING (source))
-         |  WHERE rk <= target_docs GROUP BY source),
-         |n0 AS (SELECT source, CAST(count(*) AS BIGINT) AS n_input FROM c0 GROUP BY source),
-         |n1 AS (SELECT source, CAST(count(*) AS BIGINT) AS n_cap FROM s1 GROUP BY source),
-         |n2 AS (SELECT source, CAST(count(*) AS BIGINT) AS n_quality FROM s2 GROUP BY source),
-         |n3 AS (SELECT source, CAST(count(*) AS BIGINT) AS n_exact FROM s3 GROUP BY source),
-         |n4 AS (SELECT source, CAST(count(*) AS BIGINT) AS n_near FROM s4 GROUP BY source),
-         |n5 AS (SELECT source, CAST(count(*) AS BIGINT) AS n_decontam FROM s5 GROUP BY source)
-         |SELECT n0.source, n_input,
-         |  coalesce(n_cap, 0) AS n_cap,
-         |  coalesce(n_quality, 0) AS n_quality,
-         |  coalesce(n_exact, 0) AS n_exact,
-         |  coalesce(n_near, 0) AS n_near,
-         |  coalesce(n_decontam, 0) AS n_decontam,
-         |  coalesce(weight, 0.0) AS weight,
-         |  coalesce(target_docs, 0) AS target_docs,
-         |  coalesce(n_selected, 0) AS n_selected
-         |FROM n0
-         |LEFT JOIN n1 USING (source) LEFT JOIN n2 USING (source)
-         |LEFT JOIN n3 USING (source) LEFT JOIN n4 USING (source)
-         |LEFT JOIN n5 USING (source)
-         |LEFT JOIN targets USING (source) LEFT JOIN sel USING (source)""".stripMargin,
-
-    // q117 mirror: same rolling hash, same row-hash family via 1-based
-    // array-literal indexing, same left joins + coalesce for absent keys
-    "q117_cms_reagg" -> {
-      val aArr = CmsA.mkString("[", ", ", "]")
-      val bArr = CmsB.mkString("[", ", ", "]")
-      val probeArr = cmsProbes.map(t => s"'${t.replace("'", "''")}'")
-        .mkString("[", ", ", "]")
-      s"""WITH toks AS (
-         |  SELECT source, unnest(${tokensDuck("text")}) AS tok FROM documents),
-         |th AS (
-         |  SELECT source, ${TextOps.rollingHashDuck("tok")} AS h FROM toks),
-         |cells AS (
-         |  SELECT source, i AS depth,
-         |    ((h * $aArr[i + 1] + $bArr[i + 1]) % ${TextOps.HashMod})
-         |      % $CmsWidth AS pos,
-         |    CAST(count(*) AS BIGINT) AS cnt
-         |  FROM (SELECT source, h, unnest(range(0, 4)) AS i FROM th)
-         |  GROUP BY source, depth, pos),
-         |merged AS (
-         |  SELECT depth, pos, CAST(sum(cnt) AS BIGINT) AS cnt FROM cells
-         |  GROUP BY depth, pos),
-         |probes AS (SELECT unnest($probeArr) AS tok),
-         |ph AS (SELECT tok, ${TextOps.rollingHashDuck("tok")} AS h FROM probes),
-         |pcells AS (
-         |  SELECT tok, i AS depth,
-         |    ((h * $aArr[i + 1] + $bArr[i + 1]) % ${TextOps.HashMod})
-         |      % $CmsWidth AS pos
-         |  FROM (SELECT tok, h, unnest(range(0, 4)) AS i FROM ph)),
-         |est AS (
-         |  SELECT tok, min(coalesce(cnt, 0)) AS est_cnt
-         |  FROM pcells LEFT JOIN merged USING (depth, pos) GROUP BY tok),
-         |truth AS (
-         |  SELECT tok, CAST(count(*) AS BIGINT) AS true_cnt FROM toks
-         |  WHERE tok IN (SELECT tok FROM probes) GROUP BY tok)
-         |SELECT e.tok, coalesce(true_cnt, 0) AS true_cnt, est_cnt,
-         |  est_cnt - coalesce(true_cnt, 0) AS overcount
-         |FROM est e LEFT JOIN truth USING (tok)""".stripMargin
-    },
-  )
 }

@@ -340,9 +340,16 @@ object RelEntry {
       .select(col("l_suppkey").as("src"), col("s2").as("dst"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** The lakehouse queries' base rows: orders as (o_orderkey, o_custkey,
+    * price_cents), the total price in integer cents.
+    */
+  private def ordersCents(s: SparkSession, d: String): DataFrame =
+    Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
+      expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"))
+
+  private[graft] def records: Seq[Q] = Seq(
     // ---- as-of join: purchase → latest click by the same user ----------
-    "q52_asof_join" -> ((s, d) => {
+    Q("q52_asof_join", (s, d) => {
       val e = Tables.events(s, d)
       // uniqueness contract: one click per (user_id, ts) — max(event_id)
       val clicks = e.filter(col("event_type") === "click")
@@ -353,10 +360,22 @@ object RelEntry {
       TemporalOps.asofJoin(purchases, clicks, "user_id", "ts")
         .select(col("event_id"), col("user_id"), col("ts"),
                 col("asof_ts"), col("asof_click_id"))
-    }),
+    },
+      """WITH c AS (SELECT user_id, ts, max(event_id) AS click_id
+        |             FROM events WHERE event_type='click' GROUP BY 1, 2),
+        |     p AS (SELECT user_id, ts, event_id
+        |             FROM events WHERE event_type='purchase'),
+        |     m AS (SELECT p.event_id, p.user_id, p.ts, max(c.ts) AS asof_ts
+        |             FROM p LEFT JOIN c
+        |               ON c.user_id = p.user_id AND c.ts <= p.ts
+        |            GROUP BY 1, 2, 3)
+        |SELECT m.event_id, m.user_id, m.ts, m.asof_ts,
+        |       c.click_id AS asof_click_id
+        |  FROM m LEFT JOIN c
+        |    ON c.user_id = m.user_id AND c.ts = m.asof_ts""".stripMargin),
 
     // ---- as-of join with tolerance (merge_asof tolerance semantics) -----
-    "q133_asof_tolerance" -> ((s, d) => {
+    Q("q133_asof_tolerance", (s, d) => {
       // T1 with a match-age bound — pandas merge_asof(tolerance=...):
       // a click older than AsofTolSec before the purchase no longer
       // attributes (stale-quote semantics in market data, stale-touch
@@ -373,19 +392,44 @@ object RelEntry {
           toleranceSec = Some(AsofTolSec))
         .select(col("event_id"), col("user_id"), col("ts"),
                 col("asof_ts"), col("asof_click_id"))
-    }),
+    },
+      // q133 mirror: q52's shape with the age bound inside the LEFT JOIN
+      // condition — too-old matches fall to NULL, never to a dropped row
+      s"""WITH c AS (SELECT user_id, ts, max(event_id) AS click_id
+         |             FROM events WHERE event_type='click' GROUP BY 1, 2),
+         |     p AS (SELECT user_id, ts, event_id
+         |             FROM events WHERE event_type='purchase'),
+         |     m AS (SELECT p.event_id, p.user_id, p.ts, max(c.ts) AS asof_ts
+         |             FROM p LEFT JOIN c
+         |               ON c.user_id = p.user_id AND c.ts <= p.ts
+         |              AND c.ts >= p.ts - INTERVAL $AsofTolSec SECOND
+         |            GROUP BY 1, 2, 3)
+         |SELECT m.event_id, m.user_id, m.ts, m.asof_ts,
+         |       c.click_id AS asof_click_id
+         |  FROM m LEFT JOIN c
+         |    ON c.user_id = m.user_id AND c.ts = m.asof_ts""".stripMargin),
 
     // ---- bucketed range self-join: events within ±5 min ----------------
-    "q53_range_join" -> ((s, d) =>
+    Q("q53_range_join", (s, d) =>
       TemporalOps.neighborCounts(Tables.events(s, d), "event_id", "ts",
-        NeighborWindowSec)),
+        NeighborWindowSec),
+      """SELECT a.event_id, count(*) AS n_neighbors
+        |  FROM events a JOIN events b
+        |    ON b.ts BETWEEN a.ts - INTERVAL 5 MINUTE
+        |               AND a.ts + INTERVAL 5 MINUTE
+        |   AND b.event_id <> a.event_id
+        | GROUP BY 1""".stripMargin),
 
     // ---- ROLLUP: hierarchical totals in one pass -----------------------
-    "q54_rollup" -> ((s, d) =>
+    Q("q54_rollup", (s, d) =>
       Tables.lineitem(s, d)
         .rollup(col("l_returnflag"), col("l_linestatus"))
         .agg(sum(col("l_quantity").cast("bigint")).as("sum_qty"),
-             count(lit(1)).as("n"))),
+             count(lit(1)).as("n")),
+      """SELECT l_returnflag, l_linestatus,
+        |       CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
+        |       count(*) AS n
+        |  FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)""".stripMargin),
 
     // ---- cube: full grouping lattice + grouping markers ----------------
     // Completes the ROLLUP (q54) / GROUPING SETS (q67) family. The
@@ -394,25 +438,39 @@ object RelEntry {
     // are usable at all downstream. Spark and DuckDB agree on the bit
     // order (first cube column = most significant bit); both are cast to
     // BIGINT (Spark's grouping() is a TINYINT, DuckDB's a BIGINT).
-    "q80_cube" -> ((s, d) =>
+    Q("q80_cube", (s, d) =>
       Tables.lineitem(s, d)
         .cube(col("l_returnflag"), col("l_linestatus"))
         .agg(sum(col("l_quantity").cast("bigint")).as("sum_qty"),
              count(lit(1)).as("n"),
              grouping(col("l_returnflag")).cast("bigint").as("g_flag"),
              grouping(col("l_linestatus")).cast("bigint").as("g_status"),
-             grouping_id().cast("bigint").as("gid"))),
+             grouping_id().cast("bigint").as("gid")),
+      """SELECT l_returnflag, l_linestatus,
+        |       CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
+        |       count(*) AS n,
+        |       CAST(GROUPING(l_returnflag) AS BIGINT) AS g_flag,
+        |       CAST(GROUPING(l_linestatus) AS BIGINT) AS g_status,
+        |       CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid
+        |  FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)""".stripMargin),
 
     // ---- pivot: event_type histogram as columns ------------------------
-    "q55_pivot" -> ((s, d) =>
+    Q("q55_pivot", (s, d) =>
       Tables.events(s, d)
         .groupBy(col("user_id"))
         .pivot("event_type", EventTypes)  // explicit values: no extra
         .agg(count(lit(1)))               //   distinct-scan job
-        .na.fill(0L, EventTypes)),
+        .na.fill(0L, EventTypes),
+      """SELECT user_id,
+        |       count(*) FILTER (WHERE event_type = 'click')    AS click,
+        |       count(*) FILTER (WHERE event_type = 'error')    AS error,
+        |       count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
+        |       count(*) FILTER (WHERE event_type = 'signup')   AS signup,
+        |       count(*) FILTER (WHERE event_type = 'view')     AS view
+        |  FROM events GROUP BY user_id""".stripMargin),
 
     // ---- gap sessionization (batch twin of q45) ------------------------
-    "q56_sessionize" -> ((s, d) => {
+    Q("q56_sessionize", (s, d) => {
       val sess = TemporalOps.sessionize(Tables.events(s, d),
         "user_id", "ts", "event_id", SessionGapSec)
       sess.groupBy(col("user_id"), col("session_id"))
@@ -421,11 +479,28 @@ object RelEntry {
         .agg(count(lit(1)).as("n_sessions"),
              max(col("n")).as("max_session_events"),
              sum(col("n")).as("n_events"))
-    }),
+    },
+      """WITH t AS (
+        |  SELECT user_id, ts, event_id,
+        |         CASE WHEN lag(ts) OVER w IS NULL
+        |                OR ts - lag(ts) OVER w > INTERVAL 1 DAY
+        |              THEN 1 ELSE 0 END AS new_s
+        |    FROM events
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+        |g AS (
+        |  SELECT user_id,
+        |         sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |                          ROWS UNBOUNDED PRECEDING) AS sid
+        |    FROM t),
+        |sess AS (SELECT user_id, sid, count(*) AS n FROM g GROUP BY 1, 2)
+        |SELECT user_id, count(*) AS n_sessions,
+        |       max(n) AS max_session_events,
+        |       CAST(sum(n) AS BIGINT) AS n_events
+        |  FROM sess GROUP BY 1""".stripMargin),
 
     // ---- deterministic hash split: the train/test seam every training
     //      pipeline needs — stable under appends, no RNG, no state --------
-    "q57_hash_split" -> ((s, d) =>
+    Q("q57_hash_split", (s, d) =>
       Tables.documents(s, d)
         .withColumn("split",
           when(substring(md5(col("doc_id").cast("string").cast("binary")),
@@ -433,10 +508,17 @@ object RelEntry {
         .groupBy(col("lang"), col("split"))
         .agg(count(lit(1)).as("n_docs"),
              min(col("doc_id")).as("min_id"),
-             max(col("doc_id")).as("max_id"))),
+             max(col("doc_id")).as("max_id")),
+      s"""SELECT lang,
+         |       CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2)
+         |                 < '$SplitHexHi'
+         |            THEN 'train' ELSE 'test' END AS split,
+         |       count(*) AS n_docs, min(doc_id) AS min_id,
+         |       max(doc_id) AS max_id
+         |  FROM documents GROUP BY 1, 2""".stripMargin),
 
     // ---- running-frame window: cumulative sum + lead -------------------
-    "q58_running_total" -> ((s, d) => {
+    Q("q58_running_total", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("l_orderkey")).orderBy(col("l_linenumber"))
       Tables.lineitem(s, d).filter(col("l_orderkey") < 1000)
@@ -445,22 +527,36 @@ object RelEntry {
             .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
             .as("run_qty"),
           lead(col("l_linenumber"), 1).over(w).as("next_line"))
-    }),
+    },
+      """SELECT l_orderkey, l_linenumber,
+        |       CAST(sum(CAST(l_quantity AS BIGINT))
+        |         OVER (PARTITION BY l_orderkey ORDER BY l_linenumber
+        |               ROWS UNBOUNDED PRECEDING) AS BIGINT) AS run_qty,
+        |       lead(l_linenumber, 1)
+        |         OVER (PARTITION BY l_orderkey ORDER BY l_linenumber)
+        |         AS next_line
+        |  FROM lineitem WHERE l_orderkey < 1000""".stripMargin),
 
     // ---- collection aggregation: collect_set → sort → join -------------
     // Array results are rendered to strings (array_join) so the oracle
     // compare is representation-independent; collect_set order is
     // nondeterministic, so array_sort is mandatory before joining.
-    "q63_collect_agg" -> ((s, d) =>
+    Q("q63_collect_agg", (s, d) =>
       Tables.events(s, d)
         .groupBy((col("user_id") % 20).as("user_bucket"))
         .agg(array_join(array_sort(collect_set(col("event_type"))), ",")
                .as("types_seen"),
              countDistinct(col("event_type")).as("n_types"),
-             max(col("value")).as("max_value"))),
+             max(col("value")).as("max_value")),
+      """SELECT CAST(user_id % 20 AS BIGINT) AS user_bucket,
+        |       string_agg(DISTINCT event_type, ',' ORDER BY event_type)
+        |         AS types_seen,
+        |       count(DISTINCT event_type) AS n_types,
+        |       max(value) AS max_value
+        |  FROM events GROUP BY 1""".stripMargin),
 
     // ---- date/time scalar functions over order dates -------------------
-    "q64_date_math" -> ((s, d) =>
+    Q("q64_date_math", (s, d) =>
       Tables.orders(s, d).filter(col("o_orderkey") < 500)
         .select(col("o_orderkey"),
           date_trunc("month", col("o_orderdate")).as("order_month"),
@@ -469,7 +565,16 @@ object RelEntry {
             col("o_orderdate").cast("date")).cast("long").as("days_to_98"),
           date_add(col("o_orderdate").cast("date"), 30).cast("timestamp")
             .as("due_date"),
-          quarter(col("o_orderdate")).cast("long").as("qtr"))),
+          quarter(col("o_orderdate")).cast("long").as("qtr")),
+      """SELECT o_orderkey,
+        |       date_trunc('month', o_orderdate) AS order_month,
+        |       CAST(last_day(CAST(o_orderdate AS DATE)) AS TIMESTAMP)
+        |         AS month_end,
+        |       CAST(date_diff('day', CAST(o_orderdate AS DATE),
+        |                      DATE '1998-01-01') AS BIGINT) AS days_to_98,
+        |       CAST(CAST(o_orderdate AS DATE) + 30 AS TIMESTAMP) AS due_date,
+        |       CAST(quarter(o_orderdate) AS BIGINT) AS qtr
+        |  FROM orders WHERE o_orderkey < 500""".stripMargin),
 
     // ---- keep-latest compaction (CDC/upsert apply) ---------------------
     // One surviving row per (user_id, event_type): the latest by ts
@@ -477,7 +582,7 @@ object RelEntry {
     // WindowGroupLimit, so each partition forwards only its per-key
     // leader — the merge-on-read compaction every incremental pipeline
     // runs, expressed declaratively.
-    "q65_keep_latest" -> ((s, d) => {
+    Q("q65_keep_latest", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("user_id"), col("event_type"))
         .orderBy(col("ts").desc, col("event_id").desc)
@@ -488,19 +593,30 @@ object RelEntry {
           col("event_id").as("latest_event_id"),
           col("ts").as("latest_ts"),
           col("value").as("latest_value"))
-    }),
+    },
+      """SELECT user_id, event_type, event_id AS latest_event_id,
+        |       ts AS latest_ts, value AS latest_value
+        |  FROM (SELECT *, row_number() OVER (
+        |          PARTITION BY user_id, event_type
+        |          ORDER BY ts DESC, event_id DESC) AS rn
+        |          FROM events)
+        | WHERE rn = 1""".stripMargin),
 
     // ---- explicit GROUPING SETS (beyond ROLLUP's prefix lattice) -------
     // SQL surface via the temp-view catalog (S7) — the one grouping shape
     // the DataFrame API lacks a direct method for.
-    "q67_grouping_sets" -> ((s, d) => {
+    Q("q67_grouping_sets", (s, d) => {
       Tables.events(s, d).createOrReplaceTempView("events_v")
       s.sql("""SELECT event_type, user_bucket, count(*) AS cnt
               |FROM (SELECT event_type, CAST(user_id % 10 AS BIGINT)
               |        AS user_bucket FROM events_v)
               |GROUP BY GROUPING SETS ((event_type), (user_bucket))"""
         .stripMargin)
-    }),
+    },
+      """SELECT event_type, user_bucket, count(*) AS cnt
+        |FROM (SELECT event_type, CAST(user_id % 10 AS BIGINT)
+        |        AS user_bucket FROM events)
+        |GROUP BY GROUPING SETS ((event_type), (user_bucket))""".stripMargin),
 
     // ---- statistical aggregates ----------------------------------------
     // stddev/var over the integer-valued quantity: the moment sums are
@@ -508,13 +624,19 @@ object RelEntry {
     // corr/covar over non-integral columns differ in the last ulp across
     // engines (different accumulation orders) — excluded from the oracle
     // surface on purpose; see skewness/kurtosis note in SURVEY §2.6.
-    "q68_stats_agg" -> ((s, d) =>
+    Q("q68_stats_agg", (s, d) =>
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"))
         .agg(stddev_samp(col("l_quantity")).as("sd_qty"),
              var_samp(col("l_quantity")).as("var_qty"),
              avg(col("l_quantity")).as("avg_qty"),
-             count(lit(1)).as("n"))),
+             count(lit(1)).as("n")),
+      """SELECT l_returnflag,
+        |       stddev_samp(l_quantity) AS sd_qty,
+        |       var_samp(l_quantity) AS var_qty,
+        |       avg(l_quantity) AS avg_qty,
+        |       count(*) AS n
+        |  FROM lineitem GROUP BY l_returnflag""".stripMargin),
 
     // ---- exact percentiles (interpolating) -----------------------------
     // Over the integer-valued quantity the interpolation operands are
@@ -522,15 +644,20 @@ object RelEntry {
     // approximate twin is q59; exact percentile shuffles the full value
     // multiset per group — use the sketch at 100 TB unless exactness is
     // contractual).
-    "q69_percentile" -> ((s, d) =>
+    Q("q69_percentile", (s, d) =>
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"))
         .agg(expr("percentile(l_quantity, 0.25)").as("p25"),
              expr("percentile(l_quantity, 0.5)").as("p50"),
-             expr("percentile(l_quantity, 0.9)").as("p90"))),
+             expr("percentile(l_quantity, 0.9)").as("p90")),
+      """SELECT l_returnflag,
+        |       quantile_cont(l_quantity, 0.25) AS p25,
+        |       quantile_cont(l_quantity, 0.5) AS p50,
+        |       quantile_cont(l_quantity, 0.9) AS p90
+        |  FROM lineitem GROUP BY l_returnflag""".stripMargin),
 
     // ---- rank-family window functions ----------------------------------
-    "q70_window_ranks" -> ((s, d) => {
+    Q("q70_window_ranks", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("o_orderpriority"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
@@ -541,12 +668,21 @@ object RelEntry {
           percent_rank().over(w).as("prnk"),
           cume_dist().over(w).as("cd"),
           ntile(4).over(w).cast("long").as("quartile"))
-    }),
+    },
+      """SELECT o_orderkey, o_orderpriority,
+        |       CAST(rank() OVER w AS BIGINT) AS rnk,
+        |       CAST(dense_rank() OVER w AS BIGINT) AS drnk,
+        |       percent_rank() OVER w AS prnk,
+        |       cume_dist() OVER w AS cd,
+        |       CAST(ntile(4) OVER w AS BIGINT) AS quartile
+        |  FROM orders WHERE o_orderkey < 2000
+        |WINDOW w AS (PARTITION BY o_orderpriority
+        |             ORDER BY o_totalprice DESC, o_orderkey)""".stripMargin),
 
     // ---- outer-join family: full outer with side classification --------
     // (inner/semi joins are exercised throughout; this is the NULL-side
     // surface: unmatched rows from both inputs survive and classify)
-    "q72_join_types" -> ((s, d) => {
+    Q("q72_join_types", (s, d) => {
       val c = Tables.customer(s, d).select(col("c_custkey"))
       val e = Tables.events(s, d).select(col("user_id")).distinct()
       c.join(e, col("c_custkey") === col("user_id"), "full_outer")
@@ -554,7 +690,15 @@ object RelEntry {
           .when(col("user_id").isNull, "customer_only")
           .otherwise("both").as("side"))
         .groupBy(col("side")).agg(count(lit(1)).as("n"))
-    }),
+    },
+      """SELECT CASE WHEN c.c_custkey IS NULL THEN 'event_only'
+        |            WHEN e.user_id IS NULL THEN 'customer_only'
+        |            ELSE 'both' END AS side,
+        |       count(*) AS n
+        |  FROM customer c
+        |  FULL OUTER JOIN (SELECT DISTINCT user_id FROM events) e
+        |    ON e.user_id = c.c_custkey
+        | GROUP BY 1""".stripMargin),
 
     // ---- cohort retention ----------------------------------------------
     // cohort = week of a user's first event, activity bucketed by day;
@@ -562,7 +706,7 @@ object RelEntry {
     // the standard retention triangle. Two shuffles on user_id, one on
     // the pair. (Day/week granularity because the events table spans one
     // month; swap the truncs for month-over-month retention.)
-    "q73_cohort_retention" -> ((s, d) => {
+    Q("q73_cohort_retention", (s, d) => {
       val e = Tables.events(s, d)
       val first = e.groupBy(col("user_id"))
         .agg(date_trunc("week", min(col("ts"))).as("cohort"))
@@ -571,24 +715,39 @@ object RelEntry {
       act.join(first, "user_id")
         .groupBy(col("cohort"), col("act_day"))
         .agg(countDistinct(col("user_id")).as("n_users"))
-    }),
+    },
+      """WITH f AS (SELECT user_id,
+        |             CAST(date_trunc('week', min(ts)) AS TIMESTAMP)
+        |               AS cohort
+        |             FROM events GROUP BY 1),
+        |a AS (SELECT DISTINCT user_id,
+        |        CAST(date_trunc('day', ts) AS TIMESTAMP) AS act_day
+        |        FROM events)
+        |SELECT f.cohort, a.act_day, count(DISTINCT a.user_id) AS n_users
+        |  FROM a JOIN f ON f.user_id = a.user_id
+        | GROUP BY 1, 2""".stripMargin),
 
     // ---- value histogram (fixed-width buckets) -------------------------
     // floor-division bucketing (identical arithmetic cross-engine;
     // Spark's width_bucket has no DuckDB twin), clamped into [0, 10].
-    "q74_histogram" -> ((s, d) =>
+    Q("q74_histogram", (s, d) =>
       Tables.events(s, d)
         .select(col("event_type"),
           least(greatest(floor(col("value") / 25.0), lit(0.0)), lit(10.0))
             .cast("long").as("bucket"))
         .groupBy(col("event_type"), col("bucket"))
-        .agg(count(lit(1)).as("n"))),
+        .agg(count(lit(1)).as("n")),
+      """SELECT event_type,
+        |       CAST(least(greatest(floor(value / 25.0), 0.0), 10.0)
+        |            AS BIGINT) AS bucket,
+        |       count(*) AS n
+        |  FROM events GROUP BY 1, 2""".stripMargin),
 
     // ---- conversion funnel ---------------------------------------------
     // Ordered-stage funnel (view → click ≥ view's ts → purchase ≥
     // click's ts): per-stage min-ts tables joined forward, counts
     // unioned as rows (no single-row cross join).
-    "q75_funnel" -> ((s, d) => {
+    Q("q75_funnel", (s, d) => {
       val e = Tables.events(s, d)
       val v = e.filter(col("event_type") === "view")
         .groupBy(col("user_id")).agg(min(col("ts")).as("t_view"))
@@ -603,14 +762,25 @@ object RelEntry {
           .select(lit("2_click").as("stage"), col("n_users")))
         .unionAll(p.agg(count(lit(1)).as("n_users"))
           .select(lit("3_purchase").as("stage"), col("n_users")))
-    }),
+    },
+      """WITH v AS (SELECT user_id, min(ts) AS t_view FROM events
+        |           WHERE event_type = 'view' GROUP BY 1),
+        |c AS (SELECT e.user_id, min(e.ts) AS t_click FROM events e
+        |        JOIN v ON v.user_id = e.user_id AND e.ts >= v.t_view
+        |       WHERE e.event_type = 'click' GROUP BY 1),
+        |p AS (SELECT e.user_id, min(e.ts) AS t_buy FROM events e
+        |        JOIN c ON c.user_id = e.user_id AND e.ts >= c.t_click
+        |       WHERE e.event_type = 'purchase' GROUP BY 1)
+        |SELECT '1_view' AS stage, count(*) AS n_users FROM v
+        |UNION ALL SELECT '2_click', count(*) FROM c
+        |UNION ALL SELECT '3_purchase', count(*) FROM p""".stripMargin),
 
     // ---- MapType end-to-end (SURVEY §2.8 map-function family) ----------
     // per-user event_type→count map built from grouped counts
     // (map_from_entries over collect_list — key set is unique so the
     // nondeterministic list order cannot change the map), extracted back
     // to scalars for a representation-independent compare.
-    "q78_map_funcs" -> ((s, d) =>
+    Q("q78_map_funcs", (s, d) =>
       Tables.events(s, d)
         .groupBy(col("user_id"), col("event_type"))
         .agg(count(lit(1)).as("cnt"))
@@ -620,20 +790,38 @@ object RelEntry {
         .select(col("user_id"),
           element_at(col("m"), "click").as("clicks"),
           element_at(col("m"), "purchase").as("purchases"),
-          size(col("m")).cast("long").as("n_keys"))),
+          size(col("m")).cast("long").as("n_keys")),
+      """WITH c AS (SELECT user_id, event_type, count(*) AS cnt
+        |             FROM events GROUP BY 1, 2),
+        |m AS (SELECT user_id, MAP(list(event_type), list(cnt)) AS m
+        |        FROM c GROUP BY 1)
+        |SELECT user_id,
+        |       map_extract(m, 'click')[1] AS clicks,
+        |       map_extract(m, 'purchase')[1] AS purchases,
+        |       CAST(cardinality(m) AS BIGINT) AS n_keys
+        |  FROM m""".stripMargin),
 
     // ---- native k-bounded top-k aggregate ------------------------------
     // Same semantics as q23's window top-k, but via the custom
     // TypedImperativeAggregate `top_k_ids` (functions/TopKIds): per-group
     // state is exactly k triples, partials merge k-bounded, so the
     // shuffle carries ≤ k·|groups| rows instead of every group member.
-    "q66_topk_agg" -> ((s, d) =>
+    Q("q66_topk_agg", (s, d) =>
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"))
         .agg(expr(
           "array_join(transform(top_k_ids(l_extendedprice, l_orderkey, " +
             "CAST(l_linenumber AS BIGINT), 3), x -> CAST(x AS STRING)), ',')")
-          .as("top_ids"))),
+          .as("top_ids")),
+      """SELECT l_returnflag,
+        |       string_agg(CAST(l_orderkey AS VARCHAR), ',' ORDER BY rn)
+        |         AS top_ids
+        |  FROM (SELECT l_returnflag, l_orderkey, row_number() OVER (
+        |          PARTITION BY l_returnflag
+        |          ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber)
+        |          AS rn
+        |          FROM lineitem)
+        | WHERE rn <= 3 GROUP BY 1""".stripMargin),
 
     // ---- approximate sketches: HLL++ distinct + GK-quantile ------------
     // Sketch ESTIMATES are engine-specific (HLL++ vs DuckDB's sketch
@@ -660,7 +848,7 @@ object RelEntry {
     // `percentile()` twin measured 5.5 s at sf0.1 (it buffers every
     // value per group — at 100 TB a per-group full sort) where this
     // shape runs with the plain-agg family.
-    "q59_sketches" -> ((s, d) => {
+    Q("q59_sketches", (s, d) => {
       val ev = Tables.events(s, d)
       val sk = ev.groupBy(col("event_type"))
         .agg(approx_count_distinct(col("user_id"), 0.01).as("approx_users"),
@@ -688,14 +876,25 @@ object RelEntry {
           (col("n_at_or_below") >= col("n") * 0.45 &&
             col("n_at_or_below") <= col("n") * 0.55)
             .cast("int").as("p50_ok"))
-    }),
+    },
+      // q59_sketches: the raw sketch estimates are implementation-defined
+      // (HLL++ vs DuckDB's families differ), so the oracle checks the
+      // EXACT columns plus literal-true bound verdicts; the Spark side
+      // enforces those bounds in-plan via assert_true, making "1" the only
+      // value hll_ok/p50_ok can reach the sink with.
+      """SELECT event_type,
+        |       count(DISTINCT user_id) AS exact_users,
+        |       count(*) AS n,
+        |       1 AS hll_ok,
+        |       1 AS p50_ok
+        |  FROM events GROUP BY 1""".stripMargin),
 
     // ---- window navigation family (§2.7 completeness) ------------------
     // first/nth/lag plus the IGNORE-NULLS running "most recent purchase"
     // — the navigation functions a sessionized event feed needs. The
     // ROWS frame is explicit and the (ts, event_id) order total, so
     // every value is deterministic; one Window node, one exchange.
-    "q86_window_nav" -> ((s, d) => {
+    Q("q86_window_nav", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
@@ -709,13 +908,23 @@ object RelEntry {
         nth_value(col("event_type"), 2).over(w).as("second_et"),
         last(when(col("event_type") === "purchase", col("ts")),
           ignoreNulls = true).over(w).as("last_purchase_ts"))
-    }),
+    },
+      """SELECT user_id, event_id,
+        |  lag(value, 1, -1.0) OVER wo AS prev_v,
+        |  first_value(event_type) OVER w AS first_et,
+        |  nth_value(event_type, 2) OVER w AS second_et,
+        |  last_value(CASE WHEN event_type = 'purchase' THEN ts END
+        |    IGNORE NULLS) OVER w AS last_purchase_ts
+        |FROM events
+        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
+        |             ROWS UNBOUNDED PRECEDING),
+        |       wo AS (PARTITION BY user_id ORDER BY ts, event_id)""".stripMargin),
 
     // ---- conditional / argmax aggregates (§2.6 completeness) -----------
     // count_if / bool_or / bool_and / max_by / min_by — the modern
     // conditional-aggregate surface; ties are impossible (event_id is
     // unique) so max_by/min_by are deterministic.
-    "q87_conditional_aggs" -> ((s, d) =>
+    Q("q87_conditional_aggs", (s, d) =>
       Tables.events(s, d)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -723,10 +932,17 @@ object RelEntry {
           expr("bool_or(value > 200)").as("any_huge"),
           expr("bool_and(value >= 0)").as("all_pos"),
           expr("max_by(user_id, event_id)").as("latest_user"),
-          expr("min_by(user_id, event_id)").as("first_user"))),
+          expr("min_by(user_id, event_id)").as("first_user")),
+      """SELECT event_type, count(*) AS n,
+        |  count(*) FILTER (WHERE value > 100) AS n_big,
+        |  bool_or(value > 200) AS any_huge,
+        |  bool_and(value >= 0) AS all_pos,
+        |  max_by(user_id, event_id) AS latest_user,
+        |  min_by(user_id, event_id) AS first_user
+        |FROM events GROUP BY event_type""".stripMargin),
 
     // ---- z-order layout (multi-dimensional data skipping) --------------
-    "q91_zorder" -> ((s, d) => {
+    Q("q91_zorder", (s, d) => {
       // Morton z-value per event over (user_id, value): dimension ranges
       // come from one global min/max pass that rides along as a
       // broadcast scalar row (how Delta's OPTIMIZE ZORDER derives its
@@ -744,10 +960,21 @@ object RelEntry {
           expr(LayoutOps.cellSpark("value", "vlo", "vhi", ZBits)).as("cy"))
         .select(col("event_id"), col("cx"), col("cy"),
           expr(LayoutOps.interleaveSpark("cx", "cy", ZBits)).as("z"))
-    }),
+    },
+      s"""WITH r AS (SELECT min(user_id) AS ulo, max(user_id) AS uhi,
+         |                  min(value) AS vlo, max(value) AS vhi
+         |           FROM events),
+         |cells AS (
+         |  SELECT event_id,
+         |    ${LayoutOps.cellDuck("user_id", "ulo", "uhi", ZBits)} AS cx,
+         |    ${LayoutOps.cellDuck("value", "vlo", "vhi", ZBits)} AS cy
+         |  FROM events, r)
+         |SELECT event_id, cx, cy,
+         |  ${LayoutOps.interleaveDuck("cx", "cy", ZBits)} AS z
+         |FROM cells""".stripMargin),
 
     // ---- T25: fuzzy-key join (edit-distance band + verify) -------------
-    "q108_fuzzy_join" -> ((s, d) =>
+    Q("q108_fuzzy_join", (s, d) =>
       // Entity-resolution candidate pairs over customer names: every
       // DISTINCT name pair within Levenshtein distance 1, via
       // deletion-neighborhood banding (complete for d = 1) + exact
@@ -756,10 +983,30 @@ object RelEntry {
       // DedupOps.editPairs for the completeness argument and the
       // 100-TB shuffle story.
       operators.DedupOps.editPairs(Tables.customer(s, d),
-        "c_custkey", "c_name")),
+        "c_custkey", "c_name"),
+      // q108 mirror: same deletion-neighborhood band (unnest(range) in
+      // place of transform(sequence)) and the same levenshtein verify;
+      // min(key) per name pair keeps both engines deterministic even if
+      // a name were duplicated
+      """WITH keys AS (
+        |  SELECT c_custkey AS key_id, c_name AS name FROM customer),
+        |deln AS (
+        |  SELECT key_id, name, unnest(range(0, length(name) + 1)) AS i
+        |  FROM keys),
+        |vars AS (
+        |  SELECT key_id, name,
+        |         CASE WHEN i = 0 THEN name
+        |              ELSE substr(name, 1, i - 1) || substr(name, i + 1)
+        |         END AS v
+        |  FROM deln)
+        |SELECT min(a.key_id) AS key_a, a.name AS name_a,
+        |       min(b.key_id) AS key_b, b.name AS name_b
+        |FROM vars a JOIN vars b ON a.v = b.v AND a.name < b.name
+        |WHERE levenshtein(a.name, b.name) <= 1
+        |GROUP BY a.name, b.name""".stripMargin),
 
     // ---- T28: sketch re-aggregation (partials as data) -----------------
-    "q112_sketch_reagg" -> ((s, d) => {
+    Q("q112_sketch_reagg", (s, d) => {
       // The incremental-pipeline pattern T8/q59 only hints at: sketches
       // are MERGEABLE STATE, not just estimates. Per (event_type, day)
       // this builds a Datasketches HLL of user_id — the fixed-size
@@ -794,10 +1041,26 @@ object RelEntry {
           (abs(col("est") - col("exact_users")) <=
             greatest(col("exact_users") * 0.05, lit(2.0)))
             .cast("int").as("merge_ok"))
-    }),
+    },
+      // q112 mirror: the sketch columns never cross engines — only the
+      // exact twins do; merge_ok is the in-plan-asserted verdict (q59
+      // pattern), so a failed bound raises in Spark rather than
+      // hash-mismatching here
+      """WITH daily AS (
+        |  SELECT event_type, CAST(ts AS DATE) AS day,
+        |         count(DISTINCT user_id) AS day_users
+        |  FROM events GROUP BY 1, 2),
+        |exact AS (
+        |  SELECT event_type, count(DISTINCT user_id) AS exact_users
+        |  FROM events GROUP BY 1)
+        |SELECT d.event_type, e.exact_users, count(*) AS n_days,
+        |       CAST(sum(day_users) AS BIGINT) AS sum_day_users,
+        |       1 AS merge_ok
+        |FROM daily d JOIN exact e USING (event_type)
+        |GROUP BY d.event_type, e.exact_users""".stripMargin),
 
     // ---- T27: record linkage: rarity-weighted match scoring ------------
-    "q111_record_linkage" -> ((s, d) => {
+    Q("q111_record_linkage", (s, d) => {
       // Fellegi-Sunter-flavored scoring over q108's fuzzy-name candidate
       // pairs: each side field that AGREES contributes the surprisal of
       // the shared value — w(v) = floor(log2(N / cnt(v))) whole bits
@@ -840,10 +1103,57 @@ object RelEntry {
            when(col("seg_a") === col("seg_b"), col("w_seg")).otherwise(0L) +
            when(col("band_a") === col("band_b"), col("w_band")).otherwise(0L))
             .as("score"))
-    }),
+    },
+      // q111 mirror: the q108 deletion band verbatim as the candidate CTE,
+      // then the same whole-bit rarity weights (format('{:b}', …) ≡ bin,
+      // // ≡ DIV) joined on the a-side value and scored only on agreement
+      """WITH keys AS (
+        |  SELECT c_custkey AS key_id, c_name AS name FROM customer),
+        |deln AS (
+        |  SELECT key_id, name, unnest(range(0, length(name) + 1)) AS i
+        |  FROM keys),
+        |vars AS (
+        |  SELECT key_id, name,
+        |         CASE WHEN i = 0 THEN name
+        |              ELSE substr(name, 1, i - 1) || substr(name, i + 1)
+        |         END AS v
+        |  FROM deln),
+        |cand AS (
+        |  SELECT min(a.key_id) AS key_a, a.name AS name_a,
+        |         min(b.key_id) AS key_b, b.name AS name_b
+        |  FROM vars a JOIN vars b ON a.v = b.v AND a.name < b.name
+        |  WHERE levenshtein(a.name, b.name) <= 1
+        |  GROUP BY a.name, b.name),
+        |cust AS (
+        |  SELECT c_custkey AS key, c_nationkey AS nat, c_mktsegment AS seg,
+        |         CAST(floor(c_acctbal / 1000) AS BIGINT) AS band
+        |  FROM customer),
+        |n AS (SELECT count(*) AS n_all FROM cust),
+        |wnat AS (
+        |  SELECT nat, CAST(length(format('{:b}', n_all // cnt)) - 1 AS BIGINT) AS w_nat
+        |  FROM (SELECT nat, count(*) AS cnt FROM cust GROUP BY 1), n),
+        |wseg AS (
+        |  SELECT seg, CAST(length(format('{:b}', n_all // cnt)) - 1 AS BIGINT) AS w_seg
+        |  FROM (SELECT seg, count(*) AS cnt FROM cust GROUP BY 1), n),
+        |wband AS (
+        |  SELECT band, CAST(length(format('{:b}', n_all // cnt)) - 1 AS BIGINT) AS w_band
+        |  FROM (SELECT band, count(*) AS cnt FROM cust GROUP BY 1), n)
+        |SELECT c.key_a, c.name_a, c.key_b, c.name_b,
+        |  CAST(a.nat = b.nat AS BIGINT) AS nat_agree,
+        |  CAST(a.seg = b.seg AS BIGINT) AS seg_agree,
+        |  CAST(a.band = b.band AS BIGINT) AS band_agree,
+        |  (CASE WHEN a.nat = b.nat THEN wn.w_nat ELSE 0 END
+        |   + CASE WHEN a.seg = b.seg THEN ws.w_seg ELSE 0 END
+        |   + CASE WHEN a.band = b.band THEN wb.w_band ELSE 0 END) AS score
+        |FROM cand c
+        |JOIN cust a ON a.key = c.key_a
+        |JOIN cust b ON b.key = c.key_b
+        |JOIN wnat wn ON wn.nat = a.nat
+        |JOIN wseg ws ON ws.seg = a.seg
+        |JOIN wband wb ON wb.band = a.band""".stripMargin),
 
     // ---- T26: iterative graph centrality (integer PageRank) ------------
-    "q109_pagerank" -> ((s, d) => {
+    Q("q109_pagerank", (s, d) => {
       // Centrality over the customer-supplier trade graph: one edge per
       // distinct (customer, supplier) pair that ever traded (orders ⋈
       // lineitem), symmetrized so rank flows both ways and no node
@@ -865,9 +1175,38 @@ object RelEntry {
             .otherwise(lit("supplier")).as("node_type"),
           expr("id DIV 2").as("node_key"),
           col("pr"))
-    }),
+    },
+      // q109 mirror: the fixed iteration horizon is what makes PageRank
+      // SQL-expressible — each round is one CTE pair (contribution sums,
+      // then damped update over the full node universe). Integer floor
+      // division (// here, DIV in Spark) keeps every rank a BIGINT.
+      s"""WITH pairs AS (
+         |  SELECT DISTINCT o_custkey * 2 AS a, l_suppkey * 2 + 1 AS b
+         |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
+         |edges AS (SELECT a AS src, b AS dst FROM pairs
+         |          UNION ALL SELECT b AS src, a AS dst FROM pairs),
+         |deg AS (SELECT src AS id, count(*) AS deg FROM edges GROUP BY 1),
+         |r0 AS (SELECT id, CAST($PrScale AS BIGINT) AS pr FROM deg),
+         |s1 AS (SELECT e.dst AS id, sum(r.pr // d.deg) AS s
+         |       FROM r0 r JOIN deg d ON d.id = r.id
+         |       JOIN edges e ON e.src = r.id GROUP BY e.dst),
+         |r1 AS (SELECT d.id, CAST(${15L * PrScale / 100L} + (85 * coalesce(s1.s, 0)) // 100 AS BIGINT) AS pr
+         |       FROM deg d LEFT JOIN s1 ON s1.id = d.id),
+         |s2 AS (SELECT e.dst AS id, sum(r.pr // d.deg) AS s
+         |       FROM r1 r JOIN deg d ON d.id = r.id
+         |       JOIN edges e ON e.src = r.id GROUP BY e.dst),
+         |r2 AS (SELECT d.id, CAST(${15L * PrScale / 100L} + (85 * coalesce(s2.s, 0)) // 100 AS BIGINT) AS pr
+         |       FROM deg d LEFT JOIN s2 ON s2.id = d.id),
+         |s3 AS (SELECT e.dst AS id, sum(r.pr // d.deg) AS s
+         |       FROM r2 r JOIN deg d ON d.id = r.id
+         |       JOIN edges e ON e.src = r.id GROUP BY e.dst),
+         |r3 AS (SELECT d.id, CAST(${15L * PrScale / 100L} + (85 * coalesce(s3.s, 0)) // 100 AS BIGINT) AS pr
+         |       FROM deg d LEFT JOIN s3 ON s3.id = d.id)
+         |SELECT CASE WHEN id % 2 = 0 THEN 'customer' ELSE 'supplier' END AS node_type,
+         |       id // 2 AS node_key, pr
+         |FROM r3""".stripMargin),
 
-    "q104_session_window" -> ((s, d) =>
+    Q("q104_session_window", (s, d) =>
       // The BUILT-IN gap-sessionization operator (Spark's
       // session_window), completing the tier: q56 hand-rolls the
       // islands form, q45 holds custom streaming state — this is the
@@ -886,22 +1225,134 @@ object RelEntry {
           session_window(col("ts"), s"$SessionWindowGapSec seconds").as("sw"))
         .agg(count(lit(1)).as("n_events"))
         .select(col("user_id"), col("sw.start").as("session_start"),
-          col("sw.end").as("session_end"), col("n_events"))),
+          col("sw.end").as("session_end"), col("n_events")),
+      // q104 mirror: islands form of session_window semantics — note >=
+      // (a gap of EXACTLY the window size starts a new session, unlike
+      // q56's strict >) and end = last event + gap
+      s"""WITH t AS (
+         |  SELECT user_id, ts,
+         |         CASE WHEN lag(ts) OVER w IS NULL
+         |                OR ts - lag(ts) OVER w
+         |                   >= INTERVAL $SessionWindowGapSec SECOND
+         |              THEN 1 ELSE 0 END AS new_s
+         |    FROM events
+         |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
+         |g AS (
+         |  SELECT user_id, ts,
+         |         sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
+         |                          ROWS UNBOUNDED PRECEDING) AS sid
+         |    FROM t)
+         |SELECT user_id, min(ts) AS session_start,
+         |       max(ts) + INTERVAL $SessionWindowGapSec SECOND AS session_end,
+         |       count(*) AS n_events
+         |  FROM g GROUP BY user_id, sid""".stripMargin),
 
     // ---- T37: mergeable quantile histograms (percentile re-agg) ---------
-    "q130_histogram_percentiles" -> ((s, d) =>
-      histogramPercentilesOn(Tables.events(s, d))),
+    Q("q130_histogram_percentiles", (s, d) =>
+      histogramPercentilesOn(Tables.events(s, d)),
+      // q130 mirror: same day-partial → SUM-merge → integer-compare
+      // bucket selection; exact side is quantile_cont (bit-parity with
+      // Spark's percentile, proven on q69)
+      s"""WITH ev AS (
+         |  SELECT event_type, CAST(ts AS DATE) AS day, value FROM events),
+         |partials AS (
+         |  SELECT event_type, day,
+         |    least(${HistB - 1}, CAST(floor(value / $HistW) AS BIGINT))
+         |      AS bucket,
+         |    count(*) AS cnt
+         |  FROM ev GROUP BY 1, 2, 3),
+         |merged AS (
+         |  SELECT event_type, bucket, CAST(sum(cnt) AS BIGINT) AS cnt,
+         |         count(DISTINCT day) AS n_days
+         |  FROM partials GROUP BY 1, 2),
+         |cum AS (
+         |  SELECT event_type, bucket, cnt, n_days,
+         |    CAST(sum(cnt) OVER (PARTITION BY event_type ORDER BY bucket
+         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum,
+         |    CAST(sum(cnt) OVER (PARTITION BY event_type) AS BIGINT) AS n
+         |  FROM merged),
+         |ests AS (
+         |  SELECT event_type, max(n) AS n,
+         |    CAST(sum(n_days) AS BIGINT) AS day_parts,
+         |    (min(CASE WHEN cum * 100 >= n * 50 THEN bucket END) + 1)
+         |      * $HistW AS p50_est,
+         |    (min(CASE WHEN cum * 100 >= n * 90 THEN bucket END) + 1)
+         |      * $HistW AS p90_est,
+         |    (min(CASE WHEN cum * 100 >= n * 99 THEN bucket END) + 1)
+         |      * $HistW AS p99_est
+         |  FROM cum GROUP BY 1),
+         |exact AS (
+         |  SELECT event_type,
+         |    quantile_cont(value, 0.5) AS p50_exact,
+         |    quantile_cont(value, 0.9) AS p90_exact,
+         |    quantile_cont(value, 0.99) AS p99_exact
+         |  FROM ev GROUP BY 1)
+         |SELECT e.event_type, e.n, e.day_parts, e.p50_est, e.p90_est,
+         |       e.p99_est, x.p50_exact, x.p90_exact, x.p99_exact
+         |FROM ests e JOIN exact x USING (event_type)""".stripMargin),
 
     // ---- T41: grouped linear regression (integer sufficient stats) ------
-    "q134_grouped_regression" -> ((s, d) =>
-      groupedRegressionOn(Tables.events(s, d))),
+    Q("q134_grouped_regression", (s, d) =>
+      groupedRegressionOn(Tables.events(s, d)),
+      // q134 mirror: identical integer sufficient statistics; every sum
+      // accumulates in HUGEINT (the mirror of Spark's cast-before-sum
+      // DECIMAL(38,0) — both exact 128-bit), the normal-equation products
+      // stay 128-bit, then one correctly-rounded cast to DOUBLE per
+      // reported statistic / operand, so every output column is
+      // bit-identical; the regr_slope cross-check is Spark-side only
+      // (engine double paths differ in the last ulp)
+      """WITH t AS (
+        |  SELECT event_type,
+        |    -- date_diff, NOT CAST(epoch(...)): epoch() returns
+        |    -- FRACTIONAL seconds and the cast rounds half-up where
+        |    -- Spark's unix_seconds truncates — a one-second x skew on
+        |    -- ~half the rows
+        |    CAST(date_diff('second', TIMESTAMP '2024-01-01 00:00:00', ts)
+        |      AS HUGEINT) AS x,
+        |    CAST(CAST(round(value * 100) AS BIGINT) AS HUGEINT) AS y
+        |  FROM events),
+        |s AS (
+        |  SELECT event_type, count(*) AS n,
+        |    sum(x) AS sxh, sum(y) AS syh,
+        |    sum(x * y) AS sxyh, sum(x * x) AS sxxh
+        |  FROM t GROUP BY 1),
+        |d AS (
+        |  SELECT event_type, n, sxh, syh, sxyh, sxxh,
+        |    CAST(CAST(n AS HUGEINT) * sxyh - sxh * syh AS DOUBLE)
+        |    / CAST(CAST(n AS HUGEINT) * sxxh - sxh * sxh AS DOUBLE) AS slope
+        |  FROM s)
+        |SELECT event_type, n,
+        |  CAST(sxh AS DOUBLE) AS sx, CAST(syh AS DOUBLE) AS sy,
+        |  CAST(sxyh AS DOUBLE) AS sxy, CAST(sxxh AS DOUBLE) AS sxx, slope,
+        |  (CAST(syh AS DOUBLE) - slope * CAST(sxh AS DOUBLE))
+        |    / CAST(n AS DOUBLE) AS intercept
+        |FROM d""".stripMargin),
 
     // ---- T41b: grouped Pearson correlation (same exact-stat machinery) --
-    "q135_grouped_corr" -> ((s, d) =>
-      groupedCorrOn(Tables.events(s, d))),
+    Q("q135_grouped_corr", (s, d) =>
+      groupedCorrOn(Tables.events(s, d)),
+      // q135 mirror: q134's stats + Σy²; all sums HUGEINT, numerator exact
+      // 128-bit, then sqrt·sqrt division in the identical IEEE sequence
+      """WITH t AS (
+        |  SELECT event_type,
+        |    CAST(date_diff('second', TIMESTAMP '2024-01-01 00:00:00', ts)
+        |      AS HUGEINT) AS x,
+        |    CAST(CAST(round(value * 100) AS BIGINT) AS HUGEINT) AS y
+        |  FROM events),
+        |s AS (
+        |  SELECT event_type, count(*) AS n,
+        |    sum(x) AS sxh, sum(y) AS syh,
+        |    sum(x * y) AS sxyh, sum(x * x) AS sxxh, sum(y * y) AS syyh
+        |  FROM t GROUP BY 1)
+        |SELECT event_type, n, CAST(syyh AS DOUBLE) AS syy,
+        |  CAST(CAST(n AS HUGEINT) * sxyh - sxh * syh AS DOUBLE)
+        |  / (sqrt(CAST(CAST(n AS HUGEINT) * sxxh - sxh * sxh AS DOUBLE))
+        |     * sqrt(CAST(CAST(n AS HUGEINT) * syyh - syh * syh AS DOUBLE)))
+        |    AS corr_xy
+        |FROM s""".stripMargin),
 
     // ---- T38: min-max file skipping (manifest-pruned range scan) --------
-    "q131_minmax_skipping" -> ((s, d) => {
+    Q("q131_minmax_skipping", (s, d) => {
       // The data-skipping index a lakehouse format maintains per file,
       // rebuilt from plain parquet (LayoutOps Scaladoc has the design):
       // range-clustered layout on `value`, per-file (lo, hi) stats,
@@ -930,10 +1381,16 @@ object RelEntry {
       pruned.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(expr("CAST(round(value * 100) AS BIGINT)")).as("cents"))
-    }),
+    },
+      // q131 mirror: the plain range scan — skipping is a physical
+      // device, never a semantic one (the q105 philosophy)
+      s"""SELECT event_type, count(*) AS n,
+         |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
+         |FROM events WHERE value >= $SkipLo AND value <= $SkipHi
+         |GROUP BY 1""".stripMargin),
 
     // ---- T33: SCD Type-2 dimension build (change-data → history) --------
-    "q122_scd2_build" -> ((s, d) => {
+    Q("q122_scd2_build", (s, d) => {
       // The warehousing operator that turns a change/event stream into a
       // slowly-changing-dimension type-2 history: per key, consecutive
       // runs of the same attribute value collapse into one VERSION row
@@ -951,10 +1408,33 @@ object RelEntry {
       // (≤ one row per run) inside the same partitioning. Per-key state
       // is bounded by the key's run count, never the corpus.
       scd2Build(Tables.events(s, d))
-    }),
+    },
+      // q122 mirror: same islands → versions → validity-interval chain;
+      // IS DISTINCT FROM covers the first-row NULL lag exactly like the
+      // Spark side's isNull || =!= pair
+      """WITH ordered AS (
+        |  SELECT user_id, ts, event_id, event_type,
+        |    CASE WHEN lag(event_type) OVER w IS DISTINCT FROM event_type
+        |         THEN 1 ELSE 0 END AS chg
+        |  FROM events
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+        |versioned AS (
+        |  SELECT user_id, ts, event_type,
+        |    CAST(sum(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS version
+        |  FROM ordered),
+        |runs AS (
+        |  SELECT user_id, version, min(ts) AS valid_from,
+        |         min(event_type) AS attr, count(*) AS n_events
+        |  FROM versioned GROUP BY 1, 2)
+        |SELECT user_id, version, valid_from, attr, n_events,
+        |  lead(valid_from) OVER wv AS valid_to,
+        |  CAST(lead(valid_from) OVER wv IS NULL AS BIGINT) AS is_current
+        |FROM runs WINDOW wv AS (PARTITION BY user_id ORDER BY version)"""
+        .stripMargin),
 
     // ---- T36: incremental SCD2 maintenance (delta apply ≡ recompute) ----
-    "q129_scd2_incremental" -> ((s, d) => {
+    Q("q129_scd2_incremental", (s, d) => {
       // The nightly form of q122: a delta batch of new events arrives
       // and the SCD2 table must be AMENDED, not rebuilt — the CDC-apply
       // pattern every warehouse dimension lives by (T31 owns the file-
@@ -987,10 +1467,34 @@ object RelEntry {
           .select(evCols: _*)
           .unionAll(delta.select(evCols: _*)))
       untouched.unionAll(recomputed)
-    }),
+    },
+      // q129 mirror: q122's FULL RECOMPUTE verbatim — the incremental
+      // apply must be indistinguishable from rebuilding the history, the
+      // same oracle philosophy as q105's band (a physical device, never a
+      // semantic one)
+      """WITH ordered AS (
+        |  SELECT user_id, ts, event_id, event_type,
+        |    CASE WHEN lag(event_type) OVER w IS DISTINCT FROM event_type
+        |         THEN 1 ELSE 0 END AS chg
+        |  FROM events
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+        |versioned AS (
+        |  SELECT user_id, ts, event_type,
+        |    CAST(sum(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS version
+        |  FROM ordered),
+        |runs AS (
+        |  SELECT user_id, version, min(ts) AS valid_from,
+        |         min(event_type) AS attr, count(*) AS n_events
+        |  FROM versioned GROUP BY 1, 2)
+        |SELECT user_id, version, valid_from, attr, n_events,
+        |  lead(valid_from) OVER wv AS valid_to,
+        |  CAST(lead(valid_from) OVER wv IS NULL AS BIGINT) AS is_current
+        |FROM runs WINDOW wv AS (PARTITION BY user_id ORDER BY version)"""
+        .stripMargin),
 
     // ---- T34: time-series gap fill + forward-fill resample --------------
-    "q123_gapfill_resample" -> ((s, d) => {
+    Q("q123_gapfill_resample", (s, d) => {
       // Regular-grid resampling with forward fill — the time-series
       // repair every monitoring/feature pipeline runs before joining
       // series with different clocks: one row per (series, hour slot)
@@ -1029,10 +1533,34 @@ object RelEntry {
           col("n_obs_raw").isNull.cast("bigint").as("is_gap"),
           last(col("avg_cents"), ignoreNulls = true).over(wff)
             .as("ff_avg_cents"))
-    }),
+    },
+      // q123 mirror: generate_series grid × observed hourly integer-cents
+      // aggregate, forward fill via IGNORE NULLS; DuckDB's // is the same
+      // floor division as Spark's DIV on the non-negative cents here
+      s"""WITH ev AS (
+         |  SELECT * FROM events
+         |  WHERE ts >= TIMESTAMP '$ResampleLo' AND ts <= TIMESTAMP '$ResampleHi'),
+         |obs AS (
+         |  SELECT event_type, date_trunc('hour', ts) AS slot,
+         |         count(*) AS n_obs_raw,
+         |         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
+         |  FROM ev GROUP BY 1, 2),
+         |grid AS (
+         |  SELECT event_type, unnest(generate_series(
+         |    TIMESTAMP '$ResampleLo', TIMESTAMP '$ResampleHi',
+         |    INTERVAL 1 HOUR)) AS slot
+         |  FROM (SELECT DISTINCT event_type FROM ev))
+         |SELECT g.event_type, g.slot,
+         |  coalesce(o.n_obs_raw, 0) AS n_obs,
+         |  CAST(o.n_obs_raw IS NULL AS BIGINT) AS is_gap,
+         |  last_value(o.cents // o.n_obs_raw IGNORE NULLS) OVER (
+         |    PARTITION BY g.event_type ORDER BY g.slot
+         |    ROWS UNBOUNDED PRECEDING) AS ff_avg_cents
+         |FROM grid g LEFT JOIN obs o
+         |  ON g.event_type = o.event_type AND g.slot = o.slot""".stripMargin),
 
     // ---- T35: sweep-line interval concurrency (sharded prefix sum) ------
-    "q124_sweepline_concurrency" -> ((s, d) => {
+    Q("q124_sweepline_concurrency", (s, d) => {
       // "How many intervals are open at once" — capacity planning over
       // order lifetimes ([o_orderdate, +90d), the q12 interval), solved
       // by the classic sweep line: +1 at start, −1 at end, running sum
@@ -1110,7 +1638,27 @@ object RelEntry {
       curve.groupBy(col("prio"), date_trunc("month", col("t")).as("month"))
         .agg(max(col("open")).as("max_open"),
              count(lit(1)).as("n_changes"))
-    }),
+    },
+      // q124 mirror: the single-window textbook sweep line (the sharded
+      // form must be bit-identical to it — that IS the claim); sum casts
+      // back from DuckDB's HUGEINT
+      """WITH deltas AS (
+        |  SELECT o_orderpriority AS prio, o_orderdate AS t,
+        |         CAST(1 AS BIGINT) AS delta, o_orderkey
+        |  FROM orders
+        |  UNION ALL
+        |  SELECT o_orderpriority, o_orderdate + INTERVAL 90 DAY,
+        |         CAST(-1 AS BIGINT), o_orderkey
+        |  FROM orders),
+        |curve AS (
+        |  SELECT prio, t,
+        |    CAST(sum(delta) OVER (PARTITION BY prio
+        |      ORDER BY t, delta, o_orderkey
+        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS open
+        |  FROM deltas)
+        |SELECT prio, date_trunc('month', t) AS month,
+        |       max(open) AS max_open, count(*) AS n_changes
+        |FROM curve GROUP BY 1, 2""".stripMargin),
 
     // ---- T42–T44: correlated subqueries (VERDICT r13 gap 1) -------------
     // The warehouse-SQL surface every porting user hits on day one:
@@ -1125,7 +1673,7 @@ object RelEntry {
     // decides from measured size), hash-shuffle otherwise — so the
     // operator inherits the engine's whole join scale story instead of
     // a nested-loop one.
-    "q136_subquery_exists" -> ((s, d) => {
+    Q("q136_subquery_exists", (s, d) => {
       // customers with at least one high-value order: EXISTS → LeftSemi
       Tables.customer(s, d).createOrReplaceTempView("graft_q136_customer")
       Tables.orders(s, d).createOrReplaceTempView("graft_q136_orders")
@@ -1135,9 +1683,17 @@ object RelEntry {
            |              WHERE o.o_custkey = c.c_custkey
            |                AND o.o_totalprice > $SubqPriceHi)"""
           .stripMargin)
-    }),
+    },
+      // q136–q139 mirrors: the IDENTICAL subquery SQL (DuckDB decorrelates
+      // too) — the semantic claim is engine-independent subquery meaning,
+      // the plan claim (semi/anti/outer join, no per-row re-execution) is
+      // PlanAuditSpec's
+      s"""SELECT c_custkey, c_mktsegment FROM customer c
+         |WHERE EXISTS (SELECT 1 FROM orders o
+         |              WHERE o.o_custkey = c.c_custkey
+         |                AND o.o_totalprice > $SubqPriceHi)""".stripMargin),
 
-    "q137_subquery_not_exists" -> ((s, d) => {
+    Q("q137_subquery_not_exists", (s, d) => {
       // customers with NO high-value order: NOT EXISTS → LeftAnti (the
       // null-safe complement a NOT IN over a nullable key would botch)
       Tables.customer(s, d).createOrReplaceTempView("graft_q137_customer")
@@ -1148,9 +1704,13 @@ object RelEntry {
            |                  WHERE o.o_custkey = c.c_custkey
            |                    AND o.o_totalprice > $SubqPriceHi)"""
           .stripMargin)
-    }),
+    },
+      s"""SELECT c_custkey, c_acctbal FROM customer c
+         |WHERE NOT EXISTS (SELECT 1 FROM orders o
+         |                  WHERE o.o_custkey = c.c_custkey
+         |                    AND o.o_totalprice > $SubqPriceHi)""".stripMargin),
 
-    "q138_subquery_scalar" -> ((s, d) => {
+    Q("q138_subquery_scalar", (s, d) => {
       // correlated scalar subqueries in SELECT — max (NULL on empty
       // match, both engines) and COUNT (the classic decorrelation trap:
       // an outer-join rewrite must coalesce the no-match group to 0, not
@@ -1165,9 +1725,15 @@ object RelEntry {
           |        WHERE o.o_custkey = c.c_custkey) AS BIGINT) AS n_orders
           |FROM graft_q138_customer c WHERE c_custkey < 500"""
           .stripMargin)
-    }),
+    },
+      """SELECT c_custkey,
+        |  (SELECT max(o_totalprice) FROM orders o
+        |   WHERE o.o_custkey = c.c_custkey) AS max_price,
+        |  CAST((SELECT count(*) FROM orders o
+        |        WHERE o.o_custkey = c.c_custkey) AS BIGINT) AS n_orders
+        |FROM customer c WHERE c_custkey < 500""".stripMargin),
 
-    "q139_subquery_in" -> ((s, d) => {
+    Q("q139_subquery_in", (s, d) => {
       // IN (subquery) over a non-null key: plans as LeftSemi, same as
       // EXISTS — pinned so the two spellings stay plan-equivalent
       Tables.customer(s, d).createOrReplaceTempView("graft_q139_customer")
@@ -1177,9 +1743,12 @@ object RelEntry {
           |WHERE o_custkey IN (SELECT c_custkey FROM graft_q139_customer
           |                    WHERE c_mktsegment = 'BUILDING')"""
           .stripMargin)
-    }),
+    },
+      """SELECT o_orderkey, o_totalprice FROM orders
+        |WHERE o_custkey IN (SELECT c_custkey FROM customer
+        |                    WHERE c_mktsegment = 'BUILDING')""".stripMargin),
 
-    "q141_subquery_not_in" -> ((s, d) => {
+    Q("q141_subquery_not_in", (s, d) => {
       // NOT IN three-valued logic, the most-botched subquery semantics
       // in warehouse SQL, pinned in BOTH regimes in one query: branch
       // 'clean' runs NOT IN over a null-free subquery (≡ anti join —
@@ -1208,7 +1777,16 @@ object RelEntry {
            |  SELECT CASE WHEN c_acctbal < 500 THEN NULL ELSE c_custkey END
            |  FROM graft_q141_customer WHERE c_mktsegment = 'BUILDING')"""
           .stripMargin)
-    }),
+    },
+      """SELECT 'clean' AS branch, count(*) AS n FROM orders
+        |WHERE o_custkey NOT IN (
+        |  SELECT c_custkey FROM customer
+        |  WHERE c_mktsegment = 'BUILDING')
+        |UNION ALL
+        |SELECT 'nullable' AS branch, count(*) AS n FROM orders
+        |WHERE o_custkey NOT IN (
+        |  SELECT CASE WHEN c_acctbal < 500 THEN NULL ELSE c_custkey END
+        |  FROM customer WHERE c_mktsegment = 'BUILDING')""".stripMargin),
 
     // ---- T45: LATERAL subquery joins ------------------------------------
     // The other day-one warehouse surface (alongside T42–T44): a
@@ -1218,7 +1796,7 @@ object RelEntry {
     // heaps — the q113/q23 scale shape, NOT a per-outer-row re-execution),
     // machine-asserted in PlanAuditSpec. DuckDB executes the identical
     // SQL text, so the semantics face the hash compare.
-    "q142_lateral_topk" -> ((s, d) => {
+    Q("q142_lateral_topk", (s, d) => {
       // top-2 orders per customer, the "top-k per group" idiom users
       // write as LATERAL when they come from Postgres
       Tables.customer(s, d).createOrReplaceTempView("graft_q142_customer")
@@ -1230,10 +1808,16 @@ object RelEntry {
           |  WHERE o.o_custkey = c.c_custkey
           |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
           |WHERE c.c_custkey < 300""".stripMargin)
-    }),
+    },
+      """SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
+        |FROM customer c, LATERAL (
+        |  SELECT o_orderkey, o_totalprice FROM orders o
+        |  WHERE o.o_custkey = c.c_custkey
+        |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
+        |WHERE c.c_custkey < 300""".stripMargin),
 
     // ---- T49: aggregate modifiers (FILTER + multi-DISTINCT) -------------
-    "q148_agg_modifiers" -> ((s, d) => {
+    Q("q148_agg_modifiers", (s, d) => {
       // the standard-SQL aggregate modifiers a warehouse port uses on
       // day one: per-aggregate FILTER (WHERE …) — the conditional-agg
       // form that replaces sum(CASE WHEN …) — and MULTIPLE DISTINCT
@@ -1256,10 +1840,19 @@ object RelEntry {
           |    AS BIGINT) AS n_hi_users,
           |  CAST(count(DISTINCT date_trunc('day', ts)) AS BIGINT) AS n_days
           |FROM graft_q148_events GROUP BY event_type""".stripMargin)
-    }),
+    },
+      // q148 mirror: identical text modulo the view name
+      """SELECT event_type,
+        |  CAST(count(*) AS BIGINT) AS n,
+        |  CAST(count(*) FILTER (WHERE value > 150) AS BIGINT) AS n_hi,
+        |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
+        |  CAST(count(DISTINCT user_id) FILTER (WHERE value > 150)
+        |    AS BIGINT) AS n_hi_users,
+        |  CAST(count(DISTINCT date_trunc('day', ts)) AS BIGINT) AS n_days
+        |FROM events GROUP BY event_type""".stripMargin),
 
     // ---- T51: UNPIVOT / melt (T4's inverse) -----------------------------
-    "q149_unpivot" -> ((s, d) => {
+    Q("q149_unpivot", (s, d) => {
       // the wide→long reshape every metrics/ML-feature port hits in its
       // first week — T4 (q55) ships pivot; this is its inverse. Input is
       // q55's natural output: the per-user event-type count matrix,
@@ -1283,10 +1876,26 @@ object RelEntry {
         """SELECT user_id, event_type, n FROM graft_q149_wide
           |UNPIVOT (n FOR event_type IN
           |  (click, error, purchase, signup, view))""".stripMargin)
-    }),
+    },
+      // q149 mirror: the wide matrix is rebuilt via FILTER counts with
+      // NULLIF(·, 0) — a pivot cell is NULL exactly when no rows of that
+      // type exist, which is when the FILTER count is 0 — then the SAME
+      // standard-SQL UNPIVOT text runs in DuckDB (EXCLUDE NULLS default
+      // in both engines; the dropped cells ARE the claim)
+      """WITH wide AS (
+        |  SELECT user_id,
+        |    NULLIF(count(*) FILTER (WHERE event_type = 'click'), 0)    AS click,
+        |    NULLIF(count(*) FILTER (WHERE event_type = 'error'), 0)    AS error,
+        |    NULLIF(count(*) FILTER (WHERE event_type = 'purchase'), 0) AS purchase,
+        |    NULLIF(count(*) FILTER (WHERE event_type = 'signup'), 0)   AS signup,
+        |    NULLIF(count(*) FILTER (WHERE event_type = 'view'), 0)     AS view
+        |  FROM events GROUP BY user_id)
+        |SELECT user_id, event_type, n FROM wide
+        |UNPIVOT (n FOR event_type IN
+        |  (click, error, purchase, signup, view))""".stripMargin),
 
     // ---- T52: collation-aware compare / group / join (UTF8_LCASE) -------
-    "q151_collated_group_join" -> ((s, d) => {
+    Q("q151_collated_group_join", (s, d) => {
       // Spark 4 collations — the semantics a porting user hits when
       // leaving an engine that defaults case-insensitive: a UTF8_LCASE
       // column compares, groups, and joins case-insensitively WITHOUT
@@ -1332,10 +1941,27 @@ object RelEntry {
           |    AS cents
           |FROM coll JOIN dim ON coll.seg = dim.name COLLATE UTF8_LCASE
           |GROUP BY seg""".stripMargin)
-    }),
+    },
+      // q151 mirror: the lower()-rewrite formulation — on ASCII data
+      // UTF8_LCASE equality/grouping IS lower() equality/grouping, which
+      // is exactly the equivalence the query claims
+      """WITH c AS (
+        |  SELECT c_custkey, c_acctbal,
+        |    CASE WHEN c_custkey % 2 = 0 THEN lower(c_mktsegment)
+        |         ELSE c_mktsegment END AS seg_mixed
+        |  FROM customer),
+        |dim AS (SELECT * FROM (VALUES ('building'), ('MACHINERY'),
+        |                              ('Household')) t(name))
+        |SELECT lower(seg_mixed) AS seg_l,
+        |  count(*) AS n,
+        |  count(DISTINCT seg_mixed) AS n_case_variants,
+        |  CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS BIGINT)
+        |    AS cents
+        |FROM c JOIN dim ON lower(seg_mixed) = lower(name)
+        |GROUP BY lower(seg_mixed)""".stripMargin),
 
     // ---- T53: SQL-language UDFs (CREATE FUNCTION ... RETURN expr) -------
-    "q152_sql_udf" -> ((s, d) => {
+    Q("q152_sql_udf", (s, d) => {
       // the one function-registry surface this repo's "no UDFs" policy
       // can embrace: Spark 4 SQL scalar UDFs (SPARK-46246) INLINE their
       // body into the plan at analysis — no black-box eval node, no
@@ -1368,10 +1994,19 @@ object RelEntry {
           |  CAST(max(graft_weighted_bits(event_id, 3)) AS BIGINT)
           |    AS max_wbits
           |FROM graft_q152_events GROUP BY event_type""".stripMargin)
-    }),
+    },
+      // q152 mirror: the SQL-UDF bodies written out longhand — which is
+      // exactly what "the registry inlines" means semantically
+      """SELECT event_type, count(*) AS n,
+        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents,
+        |  CAST(sum(CAST(length(format('{:b}', event_id)) AS BIGINT))
+        |    AS BIGINT) AS sum_bits,
+        |  CAST(max(CAST(length(format('{:b}', event_id)) AS BIGINT) * 3)
+        |    AS BIGINT) AS max_wbits
+        |FROM events GROUP BY event_type""".stripMargin),
 
     // ---- T54: time-grid gap fill + LOCF (IGNORE NULLS windows) ----------
-    "q153_gapfill_locf" -> ((s, d) => {
+    Q("q153_gapfill_locf", (s, d) => {
       // the time-series regularization every metrics pipeline runs
       // before resampling/joining: densify each key's observations onto
       // a fixed hourly grid (sequence + explode — generation is IN-PLAN
@@ -1413,10 +2048,37 @@ object RelEntry {
           |  CAST(sum(cents_locf) AS BIGINT) AS locf_mass,
           |  CAST(max(cents_locf) AS BIGINT) AS max_cents
           |FROM filled GROUP BY user_id""".stripMargin)
-    }),
+    },
+      // q153 mirror: generate_series + unnest for the grid, IGNORE NULLS
+      // spelled inside the call (DuckDB's placement), same LOCF frame
+      """WITH obs AS (
+        |  SELECT user_id, date_trunc('hour', ts) AS h,
+        |         max(CAST(round(value * 100) AS BIGINT)) AS cents
+        |  FROM events WHERE user_id < 50
+        |  GROUP BY user_id, date_trunc('hour', ts)),
+        |bounds AS (
+        |  SELECT user_id, min(h) AS lo, max(h) AS hi
+        |  FROM obs GROUP BY user_id),
+        |grid AS (
+        |  SELECT user_id, unnest(generate_series(lo, hi, INTERVAL 1 HOUR))
+        |    AS h
+        |  FROM bounds),
+        |filled AS (
+        |  SELECT g.user_id, g.h, o.cents,
+        |    last_value(o.cents IGNORE NULLS) OVER (
+        |      PARTITION BY g.user_id ORDER BY g.h
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |      AS cents_locf
+        |  FROM grid g LEFT JOIN obs o
+        |    ON g.user_id = o.user_id AND g.h = o.h)
+        |SELECT user_id, count(*) AS n_slots,
+        |  count(cents) AS n_obs,
+        |  CAST(sum(cents_locf) AS BIGINT) AS locf_mass,
+        |  CAST(max(cents_locf) AS BIGINT) AS max_cents
+        |FROM filled GROUP BY user_id""".stripMargin),
 
     // ---- T55: ordered string aggregation (listagg WITHIN GROUP) ---------
-    "q154_listagg" -> ((s, d) => {
+    Q("q154_listagg", (s, d) => {
       // Spark 4.0's listagg — the report-building aggregate every
       // warehouse port greps for (string_agg/group_concat elsewhere).
       // Two facets on one grain: a non-DISTINCT list ordered by a
@@ -1441,10 +2103,20 @@ object RelEntry {
           |    AS mod_classes,
           |  CAST(count(*) AS BIGINT) AS n_supp
           |FROM graft_q154_supplier GROUP BY s_nationkey""".stripMargin)
-    }),
+    },
+      // q154 mirror: string_agg with the ORDER BY inside the aggregate
+      // (DuckDB's spelling of WITHIN GROUP)
+      """SELECT CAST(s_nationkey AS BIGINT) AS nationkey,
+        |  string_agg(CAST(s_suppkey AS VARCHAR), ','
+        |             ORDER BY s_suppkey) AS suppliers,
+        |  string_agg(DISTINCT CAST(s_suppkey % 7 AS VARCHAR), ','
+        |             ORDER BY CAST(s_suppkey % 7 AS VARCHAR))
+        |    AS mod_classes,
+        |  count(*) AS n_supp
+        |FROM supplier GROUP BY s_nationkey""".stripMargin),
 
     // ---- T56: GROUPING SETS (arbitrary multi-grain aggregation) ---------
-    "q155_grouping_sets" -> ((s, d) => {
+    Q("q155_grouping_sets", (s, d) => {
       // the general form q54's CUBE and rollup only sample: an ARBITRARY
       // set list — here the two single-column grains plus the pair,
       // deliberately WITHOUT the grand total (the shape cube cannot
@@ -1463,10 +2135,20 @@ object RelEntry {
           |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
           |                        (l_returnflag), (l_linestatus))"""
           .stripMargin)
-    }),
+    },
+      // q155 mirror: identical text modulo the view name and DuckDB's
+      // two-argument GROUPING in place of grouping_id()
+      """SELECT l_returnflag, l_linestatus,
+        |  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
+        |  count(*) AS n,
+        |  CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid
+        |FROM lineitem
+        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
+        |                        (l_returnflag), (l_linestatus))"""
+        .stripMargin),
 
     // ---- T58: median + deterministic mode (order-statistic aggregates) --
-    "q156_median_mode" -> ((s, d) => {
+    Q("q156_median_mode", (s, d) => {
       // the two order-statistic aggregates the T-family still lacked.
       // median: Spark's and DuckDB's interpolate identically (mean of
       // the two middles on even counts), and over INTEGER CENTS that
@@ -1500,10 +2182,29 @@ object RelEntry {
           |  md.m.u AS mode_user, md.m.c AS mode_cnt
           |FROM cents c JOIN md ON c.event_type = md.event_type
           |GROUP BY c.event_type, md.m.u, md.m.c""".stripMargin)
-    }),
+    },
+      // q156 mirror: same counts, the arg-min spelled as row_number (the
+      // tie-order equivalence), same interpolating median
+      """WITH cents AS (
+        |  SELECT event_type, user_id,
+        |         CAST(round(value * 100) AS BIGINT) AS c
+        |  FROM events),
+        |counts AS (
+        |  SELECT event_type, user_id, count(*) AS cnt
+        |  FROM cents GROUP BY event_type, user_id),
+        |md AS (
+        |  SELECT event_type, user_id AS mode_user, cnt AS mode_cnt,
+        |    row_number() OVER (PARTITION BY event_type
+        |                       ORDER BY cnt DESC, user_id) AS rn
+        |  FROM counts)
+        |SELECT c.event_type, median(c.c) AS med_cents,
+        |  md.mode_user, CAST(md.mode_cnt AS BIGINT) AS mode_cnt
+        |FROM cents c JOIN md
+        |  ON c.event_type = md.event_type AND md.rn = 1
+        |GROUP BY c.event_type, md.mode_user, md.mode_cnt""".stripMargin),
 
     // ---- T59: bag-semantics set operations (INTERSECT/EXCEPT ALL) -------
-    "q157_bag_setops" -> ((s, d) => {
+    Q("q157_bag_setops", (s, d) => {
       // q25/q26 pin the DISTINCT set ops; these are their BAG twins,
       // and multiplicity is the entire claim: INTERSECT ALL keeps
       // min(m, n) copies of each row, EXCEPT ALL max(0, m − n) — the
@@ -1528,10 +2229,22 @@ object RelEntry {
           |      EXCEPT ALL
           |      SELECT event_type FROM graft_q157_events WHERE user_id < 500)
           |GROUP BY event_type""".stripMargin)
-    }),
+    },
+      // q157 mirror: identical text modulo the view name
+      """SELECT 'ia' AS op, event_type, CAST(count(*) AS BIGINT) AS n
+        |FROM (SELECT event_type FROM events WHERE value > 150
+        |      INTERSECT ALL
+        |      SELECT event_type FROM events WHERE user_id < 500)
+        |GROUP BY event_type
+        |UNION ALL
+        |SELECT 'ea' AS op, event_type, CAST(count(*) AS BIGINT) AS n
+        |FROM (SELECT event_type FROM events WHERE value > 150
+        |      EXCEPT ALL
+        |      SELECT event_type FROM events WHERE user_id < 500)
+        |GROUP BY event_type""".stripMargin),
 
     // ---- T60: NULL ordering + OFFSET pagination --------------------------
-    "q158_nulls_offset_page" -> ((s, d) => {
+    Q("q158_nulls_offset_page", (s, d) => {
       // two porting traps in one query. (1) NULL placement: Spark's
       // ascending default is NULLS FIRST, DuckDB's is NULLS LAST — the
       // SAME unannotated ORDER BY returns different pages, so portable
@@ -1561,10 +2274,26 @@ object RelEntry {
           |  SELECT event_id, score FROM t
           |  ORDER BY score ASC NULLS LAST, event_id LIMIT 40 OFFSET 80)"""
           .stripMargin)
-    }),
+    },
+      // q158 mirror: identical text — which is the point: only the
+      // EXPLICIT NULLS FIRST/LAST spelling is portable (the engines'
+      // unannotated ascending defaults differ)
+      """WITH t AS (
+        |  SELECT event_id,
+        |    CASE WHEN event_id % 7 = 0 THEN NULL
+        |         ELSE CAST(round(value * 100) AS BIGINT) END AS score
+        |  FROM events WHERE event_id < 2000)
+        |SELECT 'nf' AS leg, event_id, score FROM (
+        |  SELECT event_id, score FROM t
+        |  ORDER BY score ASC NULLS FIRST, event_id LIMIT 40 OFFSET 80)
+        |UNION ALL
+        |SELECT 'nl' AS leg, event_id, score FROM (
+        |  SELECT event_id, score FROM t
+        |  ORDER BY score ASC NULLS LAST, event_id LIMIT 40 OFFSET 80)"""
+        .stripMargin),
 
     // ---- T61: triangle counting (degree-oriented wedge join) ------------
-    "q159_triangle_count" -> ((s, d) => {
+    Q("q159_triangle_count", (s, d) => {
       // the third graph operator (q71 components, q109 centrality):
       // per-node triangle counts — the clustering-coefficient numerator
       // and the standard cohesion feature for link-graph curation. The
@@ -1588,10 +2317,40 @@ object RelEntry {
       // point, and each triangle is found exactly once (no /3 fixup).
       GraphOps.triangleCounts(coSupplyEdges(s, d))
         .select(col("v").as("s_suppkey"), col("deg"), col("n_tri"))
-    }),
+    },
+      // q159 mirror: the TEXTBOOK formulation — x<y<z three-way self-join
+      // finds each triangle once, each corner credited via UNION ALL;
+      // naive neighbor pairing is fine at oracle scale (the oriented
+      // form's O(m^1.5) bound is the Spark side's 100-TB claim)
+      """WITH ps AS (
+        |  SELECT DISTINCT l_partkey, date_trunc('week', l_shipdate) AS w,
+        |    l_suppkey
+        |  FROM lineitem),
+        |e AS (
+        |  SELECT DISTINCT p1.l_suppkey AS a, p2.l_suppkey AS b
+        |  FROM ps p1 JOIN ps p2
+        |    ON p1.l_partkey = p2.l_partkey AND p1.w = p2.w
+        |  WHERE p1.l_suppkey < p2.l_suppkey),
+        |deg AS (
+        |  SELECT v, count(*) AS deg FROM (
+        |    SELECT a AS v FROM e UNION ALL SELECT b AS v FROM e)
+        |  GROUP BY v),
+        |tri AS (
+        |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
+        |  FROM e e1
+        |  JOIN e e2 ON e2.a = e1.b
+        |  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
+        |corners AS (
+        |  SELECT x AS v FROM tri
+        |  UNION ALL SELECT y FROM tri
+        |  UNION ALL SELECT z FROM tri),
+        |pn AS (SELECT v, count(*) AS n_tri FROM corners GROUP BY v)
+        |SELECT d.v AS s_suppkey, d.deg,
+        |  CAST(coalesce(pn.n_tri, 0) AS BIGINT) AS n_tri
+        |FROM deg d LEFT JOIN pn ON d.v = pn.v""".stripMargin),
 
     // ---- T68: local clustering coefficient ------------------------------
-    "q167_clustering_coeff" -> ((s, d) => {
+    Q("q167_clustering_coeff", (s, d) => {
       // q159's (deg, n_tri) completed into the coefficient — the
       // density-vs-mass graph signal (a hub with many non-adjacent
       // neighbors scores 0; a clique member scores 1): c(v) =
@@ -1602,10 +2361,43 @@ object RelEntry {
       GraphOps.clusteringCoefficients(coSupplyEdges(s, d))
         .select(col("v").as("s_suppkey"), col("deg"), col("n_tri"),
           col("coeff"))
-    }),
+    },
+      // q167 mirror: q159's naive triangle join + the one IEEE division
+      // of the coefficient (exact BIGINT operands, correctly rounded the
+      // same on both engines); NULL where deg < 2
+      """WITH ps AS (
+        |  SELECT DISTINCT l_partkey, date_trunc('week', l_shipdate) AS w,
+        |    l_suppkey
+        |  FROM lineitem),
+        |e AS (
+        |  SELECT DISTINCT p1.l_suppkey AS a, p2.l_suppkey AS b
+        |  FROM ps p1 JOIN ps p2
+        |    ON p1.l_partkey = p2.l_partkey AND p1.w = p2.w
+        |  WHERE p1.l_suppkey < p2.l_suppkey),
+        |deg AS (
+        |  SELECT v, count(*) AS deg FROM (
+        |    SELECT a AS v FROM e UNION ALL SELECT b AS v FROM e)
+        |  GROUP BY v),
+        |tri AS (
+        |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
+        |  FROM e e1
+        |  JOIN e e2 ON e2.a = e1.b
+        |  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
+        |corners AS (
+        |  SELECT x AS v FROM tri
+        |  UNION ALL SELECT y FROM tri
+        |  UNION ALL SELECT z FROM tri),
+        |pn AS (SELECT v, count(*) AS n_tri FROM corners GROUP BY v)
+        |SELECT d.v AS s_suppkey, d.deg,
+        |  CAST(coalesce(pn.n_tri, 0) AS BIGINT) AS n_tri,
+        |  CASE WHEN d.deg >= 2 THEN
+        |    CAST(coalesce(pn.n_tri, 0) * 2 AS DOUBLE)
+        |      / CAST(d.deg * (d.deg - 1) AS DOUBLE)
+        |  END AS coeff
+        |FROM deg d LEFT JOIN pn ON d.v = pn.v""".stripMargin),
 
     // ---- T69: fixed-horizon k-core peeling -------------------------------
-    "q168_kcore" -> ((s, d) => {
+    Q("q168_kcore", (s, d) => {
       // k-core membership after a FIXED peel horizon over the co-supply
       // graph (GraphOps.kCorePeel: driver-orchestrated by engine
       // restriction — each round aggregates degrees over the recursive
@@ -1619,10 +2411,41 @@ object RelEntry {
       // subgraphs, identical survivor degrees.
       GraphOps.kCorePeel(coSupplyEdges(s, d), k = 36L, rounds = 2)
         .select(col("v").as("s_suppkey"), col("deg"))
-    }),
+    },
+      // q168 mirror: the SAME two peel rounds unrolled as CTE stages —
+      // degrees over e0 gate e1, degrees over e1 gate e2, survivors
+      // reported with their e2-induced degrees
+      """WITH ps AS (
+        |  SELECT DISTINCT l_partkey, date_trunc('week', l_shipdate) AS w,
+        |    l_suppkey
+        |  FROM lineitem),
+        |e0 AS (
+        |  SELECT DISTINCT p1.l_suppkey AS a, p2.l_suppkey AS b
+        |  FROM ps p1 JOIN ps p2
+        |    ON p1.l_partkey = p2.l_partkey AND p1.w = p2.w
+        |  WHERE p1.l_suppkey < p2.l_suppkey),
+        |d0 AS (
+        |  SELECT v, count(*) AS deg FROM (
+        |    SELECT a AS v FROM e0 UNION ALL SELECT b AS v FROM e0)
+        |  GROUP BY v),
+        |k0 AS (SELECT v FROM d0 WHERE deg >= 36),
+        |e1 AS (
+        |  SELECT e.a, e.b FROM e0 e
+        |  JOIN k0 x ON e.a = x.v JOIN k0 y ON e.b = y.v),
+        |d1 AS (
+        |  SELECT v, count(*) AS deg FROM (
+        |    SELECT a AS v FROM e1 UNION ALL SELECT b AS v FROM e1)
+        |  GROUP BY v),
+        |k1 AS (SELECT v FROM d1 WHERE deg >= 36),
+        |e2 AS (
+        |  SELECT e.a, e.b FROM e1 e
+        |  JOIN k1 x ON e.a = x.v JOIN k1 y ON e.b = y.v)
+        |SELECT v AS s_suppkey, count(*) AS deg FROM (
+        |  SELECT a AS v FROM e2 UNION ALL SELECT b AS v FROM e2)
+        |GROUP BY v""".stripMargin),
 
     // ---- T70: SQL TABLE functions (CREATE FUNCTION ... RETURNS TABLE) ---
-    "q169_table_function" -> ((s, d) => {
+    Q("q169_table_function", (s, d) => {
       // the table-valued half of q152's registry tier: a SQL-language
       // UDTF (Spark 4) whose body is a full query — here the house
       // chunk-grid reshape (one row per stride start, the q60 chunker's
@@ -1654,10 +2477,27 @@ object RelEntry {
            |    $TfChunkTokens), ' ')) AS chunk_md5
            |FROM graft_q169_toks t,
            |  LATERAL graft_chunk_grid(size(t.toks)) g""".stripMargin)
-    }),
+    },
+      // q169 mirror: the LONGHAND form of the table function — the grid
+      // generator written out as generate_series+unnest, which is what
+      // "the UDTF body inlines" means semantically
+      s"""SELECT doc_id,
+         |  CAST((start - 1) // $TfChunkStride AS BIGINT) AS chunk_id,
+         |  CAST(start AS BIGINT) AS start,
+         |  CAST(len(list_slice(toks, start,
+         |    least(start + ${TfChunkTokens - 1}, n))) AS BIGINT)
+         |    AS n_chunk_tokens,
+         |  md5(array_to_string(list_slice(toks, start,
+         |    least(start + ${TfChunkTokens - 1}, n)), ' ')) AS chunk_md5
+         |FROM (
+         |  SELECT doc_id, toks, n,
+         |         unnest(generate_series(1, n, $TfChunkStride)) AS start
+         |  FROM (SELECT doc_id, ${TextOps.tokensDuck("text")} AS toks,
+         |               len(${TextOps.tokensDuck("text")}) AS n
+         |        FROM documents))""".stripMargin),
 
     // ---- T72: change-data-feed between table snapshots ------------------
-    "q171_manifest_cdf" -> ((s, d) => {
+    Q("q171_manifest_cdf", (s, d) => {
       // CDF off [[graft.sources.ManifestedTable]]'s version manifests:
       // v1 = an order-book snapshot, v2 = the next one with deletes
       // (key % 7 = 0), updates (+100 cents on key % 5 = 0) and inserts
@@ -1670,9 +2510,7 @@ object RelEntry {
       // machinery returns exactly the logical row diff.
       import graft.sources.ManifestedTable
       core.Materialize.scratch(s, "graft_cdf") { case Seq(dir) =>
-        val base = Tables.orders(s, d).select(col("o_orderkey"),
-          col("o_custkey"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"))
+        val base = ordersCents(s, d)
         val v1df = base.filter(col("o_orderkey") % 4 < 3)
         val v2df = base
           .filter(col("o_orderkey") % 4 < 3 && !(col("o_orderkey") % 7 === 0))
@@ -1686,10 +2524,31 @@ object RelEntry {
         added.withColumn("change", lit("add"))
           .unionAll(removed.withColumn("change", lit("remove")))
       }()
-    }),
+    },
+      // q171 mirror: the same two snapshot images derived relationally,
+      // diffed with EXCEPT ALL — deliberately oblivious to manifests and
+      // files; equality proves changesBetween returns exactly the
+      // logical bag diff
+      """WITH base AS (
+        |  SELECT o_orderkey, o_custkey,
+        |         CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents
+        |  FROM orders),
+        |v1 AS (SELECT * FROM base WHERE o_orderkey % 4 < 3),
+        |v2 AS (
+        |  SELECT o_orderkey, o_custkey,
+        |         CASE WHEN o_orderkey % 5 = 0 THEN price_cents + 100
+        |              ELSE price_cents END AS price_cents
+        |  FROM base WHERE o_orderkey % 4 < 3 AND NOT (o_orderkey % 7 = 0)
+        |  UNION ALL
+        |  SELECT * FROM base WHERE o_orderkey % 4 = 3)
+        |SELECT o_orderkey, o_custkey, price_cents, 'add' AS change
+        |FROM (SELECT * FROM v2 EXCEPT ALL SELECT * FROM v1)
+        |UNION ALL
+        |SELECT o_orderkey, o_custkey, price_cents, 'remove' AS change
+        |FROM (SELECT * FROM v1 EXCEPT ALL SELECT * FROM v2)""".stripMargin),
 
     // ---- T62: schema-drift union (unionByName + missing columns) --------
-    "q160_union_by_name" -> ((s, d) => {
+    Q("q160_union_by_name", (s, d) => {
       // the corpus-snapshot reality q68's mergeSchema covers at the
       // FILE level, here at the FRAME level: two snapshots whose
       // schemas drifted (v1 carries n_chars, v2 replaced it with
@@ -1712,10 +2571,20 @@ object RelEntry {
         .agg(count(lit(1)).as("n"),
           count(col("n_chars")).as("n_with_chars"),
           count(col("source")).as("n_with_source"))
-    }),
+    },
+      // q160 mirror: DuckDB's native UNION ALL BY NAME — the same
+      // null-fill-by-name semantics Spark spells allowMissingColumns
+      """WITH u AS (
+        |  SELECT doc_id, lang, n_chars FROM documents WHERE doc_id % 2 = 0
+        |  UNION ALL BY NAME
+        |  SELECT doc_id, lang, source FROM documents WHERE doc_id % 2 = 1)
+        |SELECT lang, count(*) AS n,
+        |  count(n_chars) AS n_with_chars,
+        |  count(source) AS n_with_source
+        |FROM u GROUP BY lang""".stripMargin),
 
     // ---- T63: bitmap exact-distinct re-aggregation ----------------------
-    "q161_bitmap_distinct" -> ((s, d) => {
+    Q("q161_bitmap_distinct", (s, d) => {
       // the EXACT member of the mergeable-distinct family q112's HLL
       // approximates: Spark's bitmap tier (SPARK-44154) packs integer
       // keys into 4 KB/32768-bit bucket bitmaps —
@@ -1745,10 +2614,23 @@ object RelEntry {
           |  CAST(sum(bitmap_count(bm)) AS BIGINT) AS n_users,
           |  CAST(count(*) AS BIGINT) AS n_buckets
           |FROM merged GROUP BY event_type""".stripMargin)
-    }),
+    },
+      // q161 mirror: the plain DISTINCT the bitmap machinery must equal,
+      // bucket counts included. Spark's bitmap_bucket_number(x) is
+      // FLOOR((x−1)/32768)+1 — 1-indexed positions, so id 0 falls in its
+      // own bucket below ids 1..32768 (measured: the naive x//32768
+      // mirror undercounts by exactly that bucket, and DuckDB's //
+      // TRUNCATES toward zero where Spark floors — the oracle-tricks
+      // pmod-subtraction identity makes the floor exact at x−1 = −1)
+      """SELECT event_type,
+        |  count(DISTINCT user_id) AS n_users,
+        |  count(DISTINCT ((user_id - 1) -
+        |    (((user_id - 1) % 32768 + 32768) % 32768)) // 32768)
+        |    AS n_buckets
+        |FROM events GROUP BY event_type""".stripMargin),
 
     // ---- T64: calendar arithmetic edges ---------------------------------
-    "q162_calendar_edges" -> ((s, d) => {
+    Q("q162_calendar_edges", (s, d) => {
       // the date-math porting traps, pinned row-level over real order
       // dates (the span covers leap years and every month-end):
       // add_months CLAMPS at month ends (Jan 31 + 1 month = Feb 28/29 —
@@ -1771,10 +2653,21 @@ object RelEntry {
           |    AS STRING) AS quarter_start,
           |  CAST(weekday(o_orderdate) + 1 AS BIGINT) AS iso_dow
           |FROM graft_q162_orders WHERE o_orderkey < 4000""".stripMargin)
-    }),
+    },
+      // q162 mirror: + INTERVAL 1 MONTH is DuckDB's clamping add_months;
+      // isodow is the ISO day Spark reaches as weekday()+1
+      """SELECT DISTINCT
+        |  CAST(o_orderdate AS VARCHAR) AS dt,
+        |  CAST(CAST(o_orderdate + INTERVAL 1 MONTH AS DATE) AS VARCHAR)
+        |    AS next_month,
+        |  CAST(last_day(o_orderdate) AS VARCHAR) AS month_end,
+        |  CAST(date_trunc('quarter', o_orderdate) AS VARCHAR)
+        |    AS quarter_start,
+        |  CAST(isodow(o_orderdate) AS BIGINT) AS iso_dow
+        |FROM orders WHERE o_orderkey < 4000""".stripMargin),
 
     // ---- T65: spatial grid neighbor join (2-D band-then-verify) ---------
-    "q163_spatial_neighbors" -> ((s, d) => {
+    Q("q163_spatial_neighbors", (s, d) => {
       // the 2-D member of the band-then-verify family (T2 buckets 1-D
       // time, q108 bands strings): all point pairs within Euclidean
       // radius r, via 3x3 grid-cell candidate generation + exact
@@ -1801,10 +2694,25 @@ object RelEntry {
         (col("c_custkey") * lit(69621L) % lit(99991L)).as("y"))
       SpatialOps.neighborPairs(pts, radius = 4000L)
         .select(col("id_a"), col("id_b"), col("d2").cast("long").as("d2"))
-    }),
+    },
+      // q163 mirror: the NAIVE all-pairs distance filter — |points|² pair
+      // evaluations, fine at oracle scale; the Spark side's grid banding
+      // bounds candidates by cell occupancy (same answer, different
+      // volume — the q159 oracle philosophy in 2-D)
+      """WITH p AS (
+        |  SELECT c_custkey AS id,
+        |    (c_custkey * 48271) % 99991 AS x,
+        |    (c_custkey * 69621) % 99991 AS y
+        |  FROM customer)
+        |SELECT a.id AS id_a, b.id AS id_b,
+        |  CAST((a.x - b.x) * (a.x - b.x)
+        |     + (a.y - b.y) * (a.y - b.y) AS BIGINT) AS d2
+        |FROM p a JOIN p b ON a.id < b.id
+        |WHERE (a.x - b.x) * (a.x - b.x)
+        |    + (a.y - b.y) * (a.y - b.y) <= 16000000""".stripMargin),
 
     // ---- T67: kNN join (expanding grid rings + rank cut) -----------------
-    "q166_knn_join" -> ((s, d) => {
+    Q("q166_knn_join", (s, d) => {
       // k-nearest-per-probe over q163's integer point lattice — the
       // spatial join shape a fixed radius can't emulate when density
       // varies (SpatialOps.knnJoin: ring-1 dense path settles probes
@@ -1826,10 +2734,33 @@ object RelEntry {
         (col("c_custkey") * lit(48271L) % lit(99991L)).as("x"),
         (col("c_custkey") * lit(69621L) % lit(99991L)).as("y"))
       SpatialOps.knnJoin(pts, pts, k = 5, horizon = 16000L)
-    }),
+    },
+      // q166 mirror: the NAIVE form — all-pairs distances, horizon filter,
+      // rank per probe; the Spark side's two-phase ring expansion is the
+      // density-bounded path (same answer, tie order (d2, neighbor_id)
+      // pinned on both sides)
+      """WITH p AS (
+        |  SELECT c_custkey AS id,
+        |    (c_custkey * 48271) % 99991 AS x,
+        |    (c_custkey * 69621) % 99991 AS y
+        |  FROM customer),
+        |cand AS (
+        |  SELECT a.id AS probe_id, b.id AS neighbor_id,
+        |    CAST((a.x - b.x) * (a.x - b.x)
+        |       + (a.y - b.y) * (a.y - b.y) AS BIGINT) AS d2
+        |  FROM p a JOIN p b ON a.id <> b.id
+        |  WHERE (a.x - b.x) * (a.x - b.x)
+        |      + (a.y - b.y) * (a.y - b.y) <= 256000000),
+        |ranked AS (
+        |  SELECT probe_id, neighbor_id, d2,
+        |    CAST(row_number() OVER (PARTITION BY probe_id
+        |      ORDER BY d2, neighbor_id) AS BIGINT) AS rk
+        |  FROM cand)
+        |SELECT probe_id, neighbor_id, d2, rk FROM ranked
+        |WHERE rk <= 5""".stripMargin),
 
     // ---- T75: incremental aggregate maintenance off the CDF -------------
-    "q175_incremental_mv" -> ((s, d) => {
+    Q("q175_incremental_mv", (s, d) => {
       // materialized-view maintenance as delta application — the
       // composition T72 exists to enable: the MV is an additive
       // aggregate (per-customer order count + cents) over snapshot v1;
@@ -1846,9 +2777,7 @@ object RelEntry {
       // reads (its file-granular pruning).
       import graft.sources.ManifestedTable
       core.Materialize.scratch(s, "graft_mv") { case Seq(dir) =>
-        val base = Tables.orders(s, d).select(col("o_orderkey"),
-          col("o_custkey"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"))
+        val base = ordersCents(s, d)
         // deletions: key % 7, PLUS the entire custkey % 211 = 5 stratum
         // (and those customers get no inserts either) — q171's recipe
         // alone never empties a customer at sf0.01, which would leave
@@ -1877,10 +2806,29 @@ object RelEntry {
           .agg(sum(col("n_orders")).as("n_orders"), sum(col("cents")).as("cents"))
           .filter(col("n_orders") > 0)
       }()
-    }),
+    },
+      // q175 mirror: the DIRECT aggregate over the v2 image — no MV, no
+      // delta; equality is the delta-apply ≡ recompute theorem (BIGINT
+      // cast pins DuckDB's HUGEINT sum back to the shared dtype)
+      """WITH base AS (
+        |  SELECT o_orderkey, o_custkey,
+        |         CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents
+        |  FROM orders),
+        |v2 AS (
+        |  SELECT o_orderkey, o_custkey,
+        |         CASE WHEN o_orderkey % 5 = 0 THEN price_cents + 100
+        |              ELSE price_cents END AS price_cents
+        |  FROM base WHERE o_orderkey % 4 < 3 AND NOT (o_orderkey % 7 = 0)
+        |    AND NOT (o_custkey % 211 = 5)
+        |  UNION ALL
+        |  SELECT * FROM base
+        |  WHERE o_orderkey % 4 = 3 AND NOT (o_custkey % 211 = 5))
+        |SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders,
+        |       CAST(sum(price_cents) AS BIGINT) AS cents
+        |FROM v2 GROUP BY o_custkey""".stripMargin),
 
     // ---- T76: row-level MERGE (copy-on-write upsert) ---------------------
-    "q176_merge_upsert" -> ((s, d) => {
+    Q("q176_merge_upsert", (s, d) => {
       // MERGE INTO as a table OPERATION, completing the manifest
       // tier's DML surface (T72 reads row changes, T75 consumes them,
       // THIS writes them): the scratch order book becomes a manifested
@@ -1900,9 +2848,7 @@ object RelEntry {
       // the delta; publication is one manifest rename.
       import graft.sources.ManifestedTable
       core.Materialize.scratch(s, "graft_merge") { case Seq(dir) =>
-        val base = Tables.orders(s, d).select(col("o_orderkey"),
-          col("o_custkey"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"))
+        val base = ordersCents(s, d)
         ManifestedTable.write(
           base.repartitionByRange(8, col("o_orderkey")), dir)
         val source = base.filter(col("o_orderkey") % 7 === 2)
@@ -1914,10 +2860,29 @@ object RelEntry {
         ManifestedTable.merge(s, dir, source, Seq("o_orderkey"))
         ManifestedTable.read(s, dir)
       }()
-    }),
+    },
+      // q176 mirror: the relational upsert image — src wins, base keys
+      // not in src pass through; equality proves the copy-on-write MERGE
+      // (file pruning, partial rewrite, manifest swap) returns exactly
+      // the logical upsert
+      """WITH base AS (
+        |  SELECT o_orderkey, o_custkey,
+        |         CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents
+        |  FROM orders),
+        |src AS (
+        |  SELECT o_orderkey, o_custkey, price_cents + 5000 AS price_cents
+        |  FROM base WHERE o_orderkey % 7 = 2
+        |  UNION ALL
+        |  SELECT o_orderkey + 107000000 AS o_orderkey, o_custkey, price_cents
+        |  FROM base WHERE o_orderkey % 13 = 1)
+        |SELECT o_orderkey, o_custkey, price_cents FROM src
+        |UNION ALL
+        |SELECT b.o_orderkey, b.o_custkey, b.price_cents FROM base b
+        |WHERE NOT EXISTS (SELECT 1 FROM src s
+        |                  WHERE s.o_orderkey = b.o_orderkey)""".stripMargin),
 
     // ---- T77: row-level DELETE WHERE (three-valued predicate) -----------
-    "q177_delete_where" -> ((s, d) => {
+    Q("q177_delete_where", (s, d) => {
       // DELETE's SQL semantics pinned through the hash compare: rows
       // are removed where the predicate is TRUE — FALSE **and NULL**
       // rows survive, the three-valued edge a naive !cond rewrite gets
@@ -1940,10 +2905,20 @@ object RelEntry {
         ManifestedTable.deleteWhere(s, dir, col("score") > 20000000L)
         ManifestedTable.read(s, dir)
       }()
-    }),
+    },
+      // q177 mirror: DELETE's survivors spelled with the explicit
+      // null-keeping disjunction — NULL scores are UNKNOWN under the
+      // predicate and must SURVIVE
+      """WITH base AS (
+        |  SELECT o_orderkey, o_custkey,
+        |    CASE WHEN o_orderkey % 11 = 0 THEN NULL
+        |         ELSE CAST(round(o_totalprice * 100) AS BIGINT) END AS score
+        |  FROM orders)
+        |SELECT o_orderkey, o_custkey, score FROM base
+        |WHERE score IS NULL OR NOT (score > 20000000)""".stripMargin),
 
     // ---- T79: CDC replication (CDF-apply keeps a follower exact) ---------
-    "q178_cdc_replicate" -> ((s, d) => {
+    Q("q178_cdc_replicate", (s, d) => {
       // the cross-table composition the manifest tier builds to — a
       // FOLLOWER table tracks a leader through its change feed alone
       // (cross-region replicas, downstream marts, disaster copies):
@@ -1962,9 +2937,7 @@ object RelEntry {
       // unchanged mass moves ZERO bytes on either side.
       import graft.sources.ManifestedTable
       core.Materialize.scratch(s, "graft_cdcl", "graft_cdcf") { case Seq(ldir, fdir) =>
-        val base = Tables.orders(s, d).select(col("o_orderkey"),
-          col("o_custkey"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"))
+        val base = ordersCents(s, d)
         val v1df = base.filter(col("o_orderkey") % 4 < 3)
         val v2df = base
           .filter(col("o_orderkey") % 4 < 3 && !(col("o_orderkey") % 7 === 0))
@@ -1991,10 +2964,24 @@ object RelEntry {
         ManifestedTable.deleteMatching(s, fdir, removedKeys)
         ManifestedTable.read(s, fdir)
       }()
-    }),
+    },
+      // q178 mirror: the leader's v2 image DIRECTLY (q171's v2 CTE) —
+      // equality is the replication theorem: CDF-apply (merge + keyed
+      // delete) left the follower exactly at the leader's snapshot
+      """WITH base AS (
+        |  SELECT o_orderkey, o_custkey,
+        |         CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents
+        |  FROM orders)
+        |SELECT o_orderkey, o_custkey,
+        |       CASE WHEN o_orderkey % 5 = 0 THEN price_cents + 100
+        |            ELSE price_cents END AS price_cents
+        |FROM base WHERE o_orderkey % 4 < 3 AND NOT (o_orderkey % 7 = 0)
+        |UNION ALL
+        |SELECT o_orderkey, o_custkey, price_cents
+        |FROM base WHERE o_orderkey % 4 = 3""".stripMargin),
 
     // ---- T11 extension: graft-avro connector end-to-end, oracle-checked --
-    "q179_avro_pipeline" -> ((s, d) => {
+    Q("q179_avro_pipeline", (s, d) => {
       // the DSv2 connector as a QUERY surface, not just a spec: events
       // round-trip through graft-avro (real commit protocol, stats
       // sidecar published at job commit), read back through the
@@ -2017,10 +3004,22 @@ object RelEntry {
             min(expr("unix_seconds(ts)")).as("lo_s"),
             max(expr("unix_seconds(ts)")).as("hi_s"))
       }()
-    }),
+    },
+      // q179 mirror: the same aggregate straight off the parquet table —
+      // equality proves the avro round trip value-faithful (micros
+      // timestamps via unix_seconds ≡ date_diff('second', epoch, ts))
+      """SELECT event_type,
+        |  CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents,
+        |  CAST(min(date_diff('second',
+        |    TIMESTAMP '1970-01-01 00:00:00', ts)) AS BIGINT) AS lo_s,
+        |  CAST(max(date_diff('second',
+        |    TIMESTAMP '1970-01-01 00:00:00', ts)) AS BIGINT) AS hi_s
+        |FROM events WHERE user_id < 400
+        |GROUP BY event_type""".stripMargin),
 
     // ---- T80: transparent MV rewrite (optimizer rule) --------------------
-    "q180_mv_rewrite" -> ((s, d) => {
+    Q("q180_mv_rewrite", (s, d) => {
       // the query-rewrite half of the MV story (q175 maintains the
       // view; THIS makes it transparent): the query below is written
       // against the BASE order book at a COARSER grain than the
@@ -2045,10 +3044,22 @@ object RelEntry {
         require(scansDir(q, dir), "q180: the MV rewrite did not fire")
         q
       }(MvCatalog.unregister("graft_q180"))
-    }),
+    },
+      // q180 mirror: the straight recompute off the base table — the
+      // Spark side runs the MV-REWRITTEN plan (require()-proven), so
+      // equality is rewrite soundness
+      """SELECT o_orderpriority,
+        |  CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
+        |    AS BIGINT) AS cents,
+        |  CAST(min(CAST(round(o_totalprice * 100) AS BIGINT))
+        |    AS BIGINT) AS lo,
+        |  CAST(max(CAST(round(o_totalprice * 100) AS BIGINT))
+        |    AS BIGINT) AS hi
+        |FROM orders GROUP BY o_orderpriority""".stripMargin),
 
     // ---- T82: MV lifecycle — incremental refresh keeps the rewrite fresh
-    "q181_mv_refresh" -> ((s, d) => {
+    Q("q181_mv_refresh", (s, d) => {
       // the composition T72+T75+T80 build to, in one lifecycle: an MV
       // registers over a MANIFESTED table at v1; the table moves to v2
       // (deletes incl. a fully-emptied custkey stratum, updates,
@@ -2094,10 +3105,32 @@ object RelEntry {
           "q181: the rewrite did not serve the refreshed MV")
         q
       }(MvCatalog.unregister("graft_q181"))
-    }),
+    },
+      // q181 mirror: the direct recompute off the v2 image (q175's CTE
+      // plus min/max) — the Spark side runs refresh + rewrite, so
+      // equality composes refresh-soundness with rewrite-soundness,
+      // min/max facing real deletions
+      """WITH base AS (
+        |  SELECT o_orderkey, o_custkey,
+        |         CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents
+        |  FROM orders),
+        |v2 AS (
+        |  SELECT o_orderkey, o_custkey,
+        |         CASE WHEN o_orderkey % 5 = 0 THEN price_cents + 100
+        |              ELSE price_cents END AS price_cents
+        |  FROM base WHERE o_orderkey % 4 < 3 AND NOT (o_orderkey % 7 = 0)
+        |    AND NOT (o_custkey % 211 = 5)
+        |  UNION ALL
+        |  SELECT * FROM base
+        |  WHERE o_orderkey % 4 = 3 AND NOT (o_custkey % 211 = 5))
+        |SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders,
+        |       CAST(sum(price_cents) AS BIGINT) AS cents,
+        |       CAST(min(price_cents) AS BIGINT) AS lo,
+        |       CAST(max(price_cents) AS BIGINT) AS hi
+        |FROM v2 GROUP BY o_custkey""".stripMargin),
 
     // ---- T83: lakehouse lifecycle integration ----------------------------
-    "q182_lakehouse_lifecycle" -> ((s, d) => {
+    Q("q182_lakehouse_lifecycle", (s, d) => {
       // the q121 discipline (one integration query proving the pieces
       // COMPOSE) for the table tier: a manifested table lives a full
       // production life in one oracle-checked flow — three exactly-once
@@ -2112,9 +3145,7 @@ object RelEntry {
       // hash compare.
       import graft.sources.ManifestedTable
       core.Materialize.scratch(s, "graft_lake") { case Seq(dir) =>
-        val base = Tables.orders(s, d).select(col("o_orderkey"),
-          col("o_custkey"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"))
+        val base = ordersCents(s, d)
         def batch(i: Int) = base.filter(col("o_orderkey") % 3 === i)
         (0 to 2).foreach(i => ManifestedTable.appendBatch(
           batch(i).repartitionByRange(4, col("o_orderkey")), dir, i.toLong))
@@ -2141,10 +3172,31 @@ object RelEntry {
             sum(col("price_cents")).as("cents"),
             min(col("o_orderkey")).as("first_key"))
       }()
-    }),
+    },
+      // q182 mirror: the straight relational pipeline — all three
+      // batches are the whole table (% 3 partitions the keys), the merge
+      // is an upsert CASE (the stratum's keys all pre-exist), the delete
+      // a filter; compaction and exactly-once ingest have no relational
+      // image, which is the point: they must be INVISIBLE to the rows
+      """WITH base AS (
+        |  SELECT o_orderkey, o_custkey,
+        |         CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents
+        |  FROM orders),
+        |corrected AS (
+        |  SELECT o_orderkey, o_custkey,
+        |         CASE WHEN o_orderkey % 11 = 3 THEN price_cents + 700
+        |              ELSE price_cents END AS price_cents
+        |  FROM base),
+        |alive AS (
+        |  SELECT * FROM corrected WHERE NOT (o_orderkey % 13 = 6))
+        |SELECT o_custkey % 97 AS cohort,
+        |       CAST(count(*) AS BIGINT) AS n,
+        |       CAST(sum(price_cents) AS BIGINT) AS cents,
+        |       CAST(min(o_orderkey) AS BIGINT) AS first_key
+        |FROM alive GROUP BY o_custkey % 97""".stripMargin),
 
     // ---- T85: null-safe equality join (<=> vs =) -------------------------
-    "q184_nullsafe_join" -> ((s, d) => {
+    Q("q184_nullsafe_join", (s, d) => {
       // the join-key twin of q141's NOT IN trap: dimensions with a
       // genuine "unknown" bucket (NULL-keyed rows on BOTH sides) need
       // <=> / IS NOT DISTINCT FROM — under plain `=` a NULL key
@@ -2171,10 +3223,26 @@ object RelEntry {
           .select(lit(name).as("leg"), col("label"), col("n"))
       leg("eq", col("g") === col("gd"))
         .unionAll(leg("ns", col("g") <=> col("gd")))
-    }),
+    },
+      // q184 mirror: identical text modulo the operator spelling —
+      // DuckDB's IS NOT DISTINCT FROM is Spark's <=>
+      """WITH ev AS (
+        |  SELECT event_id,
+        |    CASE WHEN event_id % 9 = 0 THEN NULL
+        |         ELSE event_id % 5 END AS g
+        |  FROM events),
+        |dim AS (SELECT * FROM (VALUES
+        |  (0, 'grp_0'), (1, 'grp_1'), (2, 'grp_2'), (3, 'grp_3'),
+        |  (4, 'grp_4'), (NULL, 'grp_null')) AS t(g, label))
+        |SELECT 'eq' AS leg, label, CAST(count(*) AS BIGINT) AS n
+        |FROM ev JOIN dim ON ev.g = dim.g GROUP BY label
+        |UNION ALL
+        |SELECT 'ns' AS leg, label, CAST(count(*) AS BIGINT) AS n
+        |FROM ev JOIN dim ON ev.g IS NOT DISTINCT FROM dim.g
+        |GROUP BY label""".stripMargin),
 
     // ---- T86: GROUP BY ALL (the analyst-SQL grouping shorthand) ----------
-    "q185_group_by_all" -> ((s, d) => {
+    Q("q185_group_by_all", (s, d) => {
       // the Spark-4 surface row the q149–q158 wave missed: GROUP BY
       // ALL groups by every non-aggregate select item (SPARK-44143;
       // DuckDB pioneered the spelling, so the IDENTICAL text runs in
@@ -2190,10 +3258,18 @@ object RelEntry {
           |    AS cents
           |FROM graft_q185_events
           |GROUP BY ALL""".stripMargin)
-    }),
+    },
+      // q185 mirror: IDENTICAL text modulo the view name — GROUP BY ALL
+      // is the same spelling in both engines (DuckDB pioneered it)
+      """SELECT event_type, CAST(CAST(ts AS DATE) AS STRING) AS day,
+        |  CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+        |    AS cents
+        |FROM events
+        |GROUP BY ALL""".stripMargin),
 
     // ---- T87: fixed-width text round trip (mainframe feed ingest) -------
-    "q186_fixed_width" -> ((s, d) => {
+    Q("q186_fixed_width", (s, d) => {
       // the delimiter-free batch-feed format (COBOL copybook exports)
       // as a source: events render to 34-byte fixed records
       // (type:10 left-aligned / id:12 cents:12 right-aligned) through
@@ -2221,10 +3297,19 @@ object RelEntry {
           .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"),
             max(col("event_id")).as("hi_id"))
       }()
-    }),
+    },
+      // q186 mirror: the same aggregate straight off parquet — equality
+      // proves the fixed-width byte layout round-trips value-faithfully
+      """SELECT event_type,
+        |  CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+        |    AS cents,
+        |  CAST(max(event_id) AS BIGINT) AS hi_id
+        |FROM events WHERE event_id % 2 = 0
+        |GROUP BY event_type""".stripMargin),
 
     // ---- T88: DSv2 SQL face of the manifested table ----------------------
-    "q187_manifest_sql_face" -> ((s, d) => {
+    Q("q187_manifest_sql_face", (s, d) => {
       // the graft-manifest connector end to end, oracled: the order
       // book becomes a manifested table (key-clustered), a price
       // correction MERGEs it to v2, and then PLAIN SQL — two
@@ -2242,9 +3327,7 @@ object RelEntry {
       // resolve the identical snapshot.
       import graft.sources.ManifestedTable
       core.Materialize.scratch(s, "graft_face") { case Seq(dir) =>
-        val base = Tables.orders(s, d).select(col("o_orderkey"),
-          col("o_custkey"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"))
+        val base = ordersCents(s, d)
         val v1 = ManifestedTable.write(
           base.repartitionByRange(8, col("o_orderkey")), dir)
         val src = base.filter(col("o_orderkey") % 7 === 2)
@@ -2263,10 +3346,29 @@ object RelEntry {
             |WHERE c.o_custkey % 10 = 3
             |GROUP BY c.o_custkey""".stripMargin)
       }()
-    }),
+    },
+      // q187 mirror: both snapshot images recomputed relationally —
+      // equality proves the SQL face resolves current AND versioned
+      // snapshots exactly (cents sums stay in BIGINT on both engines)
+      """WITH base AS (
+        |  SELECT o_orderkey, o_custkey,
+        |         CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents
+        |  FROM orders),
+        |cur AS (
+        |  SELECT o_orderkey, o_custkey,
+        |         CASE WHEN o_orderkey % 7 = 2 THEN price_cents + 5000
+        |              ELSE price_cents END AS price_cents
+        |  FROM base)
+        |SELECT c.o_custkey AS custkey,
+        |  CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(c.price_cents) AS BIGINT) AS cents_now,
+        |  CAST(sum(c.price_cents - p.price_cents) AS BIGINT) AS correction
+        |FROM cur c JOIN base p ON c.o_orderkey = p.o_orderkey
+        |WHERE c.o_custkey % 10 = 3
+        |GROUP BY c.o_custkey""".stripMargin),
 
     // ---- T89: MERGE matrix (full-sync reconciliation) --------------------
-    "q188_merge_full_sync" -> ((s, d) => {
+    Q("q188_merge_full_sync", (s, d) => {
       // the complete MERGE clause matrix in one reconciliation, the
       // form CDC full-sync needs: the feed re-delivers the even-key
       // half of the book (with corrections) plus genuinely new keys —
@@ -2301,10 +3403,29 @@ object RelEntry {
           bySource = Some(BySourceDelete(Some(col("ver") === 0L))))
         ManifestedTable.read(s, dir)
       }()
-    }),
+    },
+      // q188 mirror: all four MERGE outcomes spelled relationally —
+      // newer-wins updates, untouched matched stratum, condition-guarded
+      // by-source deletes, condition-guarded inserts
+      """WITH base AS (
+        |  SELECT o_orderkey, o_custkey,
+        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
+        |         o_orderkey % 3 AS ver
+        |  FROM orders)
+        |SELECT o_orderkey, o_custkey,
+        |  CASE WHEN ver < 2 THEN cents + 7777 ELSE cents END AS cents,
+        |  CASE WHEN ver < 2 THEN 2 ELSE ver END AS ver
+        |FROM base WHERE o_orderkey % 2 = 0
+        |UNION ALL
+        |SELECT o_orderkey, o_custkey, cents, ver FROM base
+        |WHERE o_orderkey % 2 = 1 AND ver <> 0
+        |UNION ALL
+        |SELECT o_orderkey + 207000000 AS o_orderkey, o_custkey, cents,
+        |       2 AS ver
+        |FROM base WHERE o_orderkey % 5 = 1 AND o_custkey % 2 = 0""".stripMargin),
 
     // ---- T90: merge-on-read deletion vectors ------------------------------
-    "q189_deletion_vectors" -> ((s, d) => {
+    Q("q189_deletion_vectors", (s, d) => {
       // merge-on-read DML on the hash path: a keyed CDC delete feed,
       // a predicate delete, and a correction merge all run at
       // dvMaxFraction=1 — every qualifying file keeps its bytes and
@@ -2338,10 +3459,29 @@ object RelEntry {
           dvMaxFraction = 1.0)
         ManifestedTable.read(s, dir)
       }()
-    }),
+    },
+      // q189 mirror: the three MoR steps composed relationally — keyed
+      // delete, predicate delete, then the merge image src ⊎ (live ∖ keys)
+      """WITH base AS (
+        |  SELECT o_orderkey, o_custkey,
+        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+        |  FROM orders),
+        |live1 AS (
+        |  SELECT * FROM base WHERE NOT (o_orderkey % 9 = 4)),
+        |live2 AS (
+        |  SELECT * FROM live1
+        |  WHERE NOT (cents > 30000000 AND o_orderkey % 5 = 3)),
+        |src AS (
+        |  SELECT o_orderkey, o_custkey, cents + 11 AS cents
+        |  FROM base WHERE o_orderkey % 11 = 7)
+        |SELECT o_orderkey, o_custkey, cents FROM src
+        |UNION ALL
+        |SELECT l.o_orderkey, l.o_custkey, l.cents FROM live2 l
+        |WHERE NOT EXISTS (SELECT 1 FROM src s
+        |                  WHERE s.o_orderkey = l.o_orderkey)""".stripMargin),
 
     // ---- T92: session-catalog SQL lifecycle (graft-manifest catalog) -----
-    "q190_catalog_sql" -> ((s, d) => {
+    Q("q190_catalog_sql", (s, d) => {
       // the lakehouse tier driven ENTIRELY from SQL — the
       // TableCatalog face: CTAS creates the manifested order book,
       // INSERT INTO appends a late feed, DELETE FROM runs the
@@ -2390,10 +3530,34 @@ object RelEntry {
             |WHERE c.o_custkey % 10 = 3
             |GROUP BY c.o_custkey""".stripMargin)
       }()
-    }),
+    },
+      // q190 mirror: the three SQL statements replayed relationally —
+      // CTAS image, appended feed, null-kept delete semantics, and the
+      // current-vs-v2 left join (inserted keys have NULL v2 cents)
+      """WITH base AS (
+        |  SELECT o_orderkey, o_custkey,
+        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+        |  FROM orders),
+        |v2 AS (SELECT * FROM base WHERE o_orderkey % 4 < 3),
+        |v3 AS (
+        |  SELECT * FROM v2
+        |  UNION ALL
+        |  SELECT o_orderkey + 307000000, o_custkey, cents
+        |  FROM base WHERE o_orderkey % 10 = 9),
+        |cur AS (
+        |  SELECT * FROM v3
+        |  WHERE NOT (cents > 25000000 AND o_custkey % 7 = 3))
+        |SELECT c.o_custkey AS custkey,
+        |  CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(c.cents) AS BIGINT) AS cents_now,
+        |  CAST(sum(p.cents) AS BIGINT) AS cents_at_v2
+        |FROM cur c
+        |LEFT JOIN v2 p ON c.o_orderkey = p.o_orderkey
+        |WHERE c.o_custkey % 10 = 3
+        |GROUP BY c.o_custkey""".stripMargin),
 
     // ---- T93: manifest-served aggregate pushdown --------------------------
-    "q191_manifest_agg" -> ((s, d) => {
+    Q("q191_manifest_agg", (s, d) => {
       // zero-IO global aggregates through the SQL face: COUNT(*) and
       // MIN/MAX over integer, and string columns fold entirely from
       // the manifest's embedded per-file stats into ONE literal
@@ -2420,10 +3584,22 @@ object RelEntry {
             min(col("o_orderpriority")).as("p_lo"),
             max(col("o_orderpriority")).as("p_hi"))
       }()
-    }),
+    },
+      // q191 mirror: the same global aggregates from the raw table —
+      // equality proves the manifest-served fold exact per type
+      """SELECT CAST(count(*) AS BIGINT) AS n,
+        |  CAST(min(o_orderkey) AS BIGINT) AS k_lo,
+        |  CAST(max(o_orderkey) AS BIGINT) AS k_hi,
+        |  CAST(min(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+        |    AS c_lo,
+        |  CAST(max(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+        |    AS c_hi,
+        |  min(o_orderpriority) AS p_lo,
+        |  max(o_orderpriority) AS p_hi
+        |FROM orders""".stripMargin),
 
     // ---- T94: SQL UPDATE + MERGE INTO (row-level operations) -------------
-    "q192_sql_update_merge" -> ((s, d) => {
+    Q("q192_sql_update_merge", (s, d) => {
       // the engine-planned DML pair on the hash path: UPDATE re-prices
       // the low-key urgent stratum and MERGE INTO reconciles a
       // correction feed (matched keys re-priced, unmatched keys
@@ -2462,10 +3638,39 @@ object RelEntry {
             |FROM g192.book WHERE o_custkey % 10 = 3
             |GROUP BY o_custkey, o_orderpriority""".stripMargin)
       }()
-    }),
+    },
+      // q192 mirror: UPDATE then MERGE replayed relationally — note the
+      // merge's matched branch re-prices from the ORIGINAL cents (its
+      // source is the raw view), overriding the earlier UPDATE where the
+      // strata intersect
+      """WITH base AS (
+        |  SELECT o_orderkey AS k, o_custkey AS c,
+        |         o_orderpriority AS p,
+        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+        |  FROM orders),
+        |upd AS (
+        |  SELECT k, c, p,
+        |         CASE WHEN k % 6 = 1 AND p = '1-URGENT'
+        |              THEN cents + 99 ELSE cents END AS cents
+        |  FROM base),
+        |m AS (
+        |  SELECT u.k, u.c, u.p,
+        |         CASE WHEN u.k % 9 = 2 THEN b.cents - 77
+        |              ELSE u.cents END AS cents
+        |  FROM upd u JOIN base b ON u.k = b.k),
+        |fin AS (
+        |  SELECT * FROM m
+        |  UNION ALL
+        |  SELECT k + 407000000, c, '9-FEED', cents FROM base
+        |  WHERE k % 9 = 5)
+        |SELECT c AS custkey, p AS prio,
+        |  CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(cents) AS BIGINT) AS cents
+        |FROM fin WHERE c % 10 = 3
+        |GROUP BY c, p""".stripMargin),
 
     // ---- T97: field-id schema evolution (rename/drop/re-add) ------------
-    "q193_schema_evolution" -> ((s, d) => {
+    Q("q193_schema_evolution", (s, d) => {
       // the full evolution lifecycle against the order book, every
       // step through plain SQL: CTAS, RENAME COLUMN (metadata-only —
       // old files keep serving the column through its field id), an
@@ -2503,10 +3708,43 @@ object RelEntry {
             |FROM g193.t WHERE c % 10 = 3
             |GROUP BY c""".stripMargin)
       }()
-    }),
+    },
+      // q193 mirror: the evolution lifecycle replayed relationally —
+      // rename = aliasing, drop+re-add = every prior row's flag NULLed
+      // (a resurrected dead id would inflate n_flag), the update spans
+      // all three generations
+      """WITH base AS (
+        |  SELECT o_orderkey AS k, o_custkey AS c,
+        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+        |  FROM orders),
+        |v1 AS (
+        |  SELECT k, c, cents AS amount, k % 7 AS flag
+        |  FROM base WHERE k % 3 < 2),
+        |f1 AS (
+        |  SELECT k + 507000000 AS k, c, cents AS amount, k % 7 AS flag
+        |  FROM base WHERE k % 10 = 4),
+        |dropped AS (
+        |  SELECT k, c, amount, CAST(NULL AS BIGINT) AS flag FROM v1
+        |  UNION ALL
+        |  SELECT k, c, amount, CAST(NULL AS BIGINT) AS flag FROM f1),
+        |f2 AS (
+        |  SELECT k + 607000000 AS k, c, cents + 5 AS amount,
+        |         CAST(1 AS BIGINT) AS flag
+        |  FROM base WHERE k % 10 = 6),
+        |cur AS (
+        |  SELECT k, c,
+        |         CASE WHEN k % 11 = 3 THEN amount + 7 ELSE amount END
+        |           AS amount,
+        |         flag
+        |  FROM (SELECT * FROM dropped UNION ALL SELECT * FROM f2))
+        |SELECT c AS custkey, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(amount) AS BIGINT) AS amt,
+        |  CAST(count(flag) AS BIGINT) AS n_flag
+        |FROM cur WHERE c % 10 = 3
+        |GROUP BY c""".stripMargin),
 
     // ---- T98: branch refs / write-audit-publish --------------------------
-    "q194_wap_branch" -> ((s, d) => {
+    Q("q194_wap_branch", (s, d) => {
       // the WAP lifecycle against the order book: feed A stages on a
       // branch (require() pins that main never moves), the AUDIT step
       // queries the branch head and passes, a second SUSPECT feed
@@ -2550,11 +3788,26 @@ object RelEntry {
           .agg(count(lit(1)).cast("long").as("n"),
             sum(col("cents")).as("cents_sum"))
       }()
-    }),
+    },
+      // q194 mirror: main after the WAP cycle = base ∪ the PROMOTED
+      // feed; the dropped suspect feed contributes nothing
+      """WITH base AS (
+        |  SELECT o_orderkey AS k, o_custkey AS c,
+        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+        |  FROM orders),
+        |v1 AS (SELECT * FROM base WHERE k % 3 < 2),
+        |fa AS (
+        |  SELECT k + 707000000 AS k, c, cents + 3 AS cents
+        |  FROM base WHERE k % 10 = 1),
+        |cur AS (SELECT * FROM v1 UNION ALL SELECT * FROM fa)
+        |SELECT c AS custkey, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(cents) AS BIGINT) AS cents_sum
+        |FROM cur WHERE c % 10 = 3
+        |GROUP BY c""".stripMargin),
 
     // ---- T115: cherry-pick -------------------------------------------------
     // ---- T118: equality deletes / CDC upsert ------------------------------
-    "q207_eq_upsert" -> ((s, d) => {
+    Q("q207_eq_upsert", (s, d) => {
       // the Iceberg-v2/Flink CDC construction end to end: an initial
       // load, then CDC batches through the equality-delete upsert
       // faces — each batch ONE commit carrying a key sidecar (masks
@@ -2611,10 +3864,36 @@ object RelEntry {
         require(s.table("g207.t").count() == masked,
           "compact absorb changed the eq-masked row count")
       }
-    }),
+    },
+      // q207 mirror: the CDC feed replayed relationally — per batch,
+      // delete-then-insert by key (a same-batch upsert wins over a
+      // same-batch delete, matching the sidecar-never-masks-own-batch
+      // semantics)
+      """WITH base AS (
+        |  SELECT o_orderkey AS k, o_custkey AS c,
+        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+        |  FROM orders),
+        |p1 AS (SELECT k, c, cents FROM base WHERE k % 3 < 2),
+        |up AS (SELECT k, c, cents + 9 AS cents FROM base WHERE k % 10 = 4),
+        |del AS (SELECT k FROM base WHERE k % 13 = 5),
+        |s2 AS (
+        |  SELECT * FROM p1
+        |  WHERE k NOT IN (SELECT k FROM up)
+        |    AND k NOT IN (SELECT k FROM del)
+        |  UNION ALL SELECT * FROM up),
+        |re AS (
+        |  SELECT k, c, 77777 AS cents FROM base
+        |  WHERE k % 13 = 5 AND k % 2 = 0),
+        |s3 AS (
+        |  SELECT * FROM s2 WHERE k NOT IN (SELECT k FROM re)
+        |  UNION ALL SELECT * FROM re)
+        |SELECT c % 25 AS grp, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(cents) AS BIGINT) AS cents_sum
+        |FROM s3
+        |GROUP BY c % 25""".stripMargin),
 
     // ---- T117: identity + generated columns ------------------------------
-    "q206_identity" -> ((s, d) => {
+    Q("q206_identity", (s, d) => {
       // IDENTITY values mint connector-side from an OCC-guarded
       // high-water mark; GENERATED columns compute their expression
       // inline. Minted values are engine-allocated (unique, lattice-
@@ -2645,10 +3924,26 @@ object RelEntry {
             |FROM g206.t
             |GROUP BY c % 25""".stripMargin)
       }()
-    }),
+    },
+      // q206 mirror: identity values are engine-allocated, so the
+      // replay projects the deterministic facts only — n_ids == n (the
+      // uniqueness invariant) and the generated column's arithmetic
+      """WITH base AS (
+        |  SELECT o_orderkey AS k, o_custkey AS c,
+        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+        |  FROM orders),
+        |rows_all AS (
+        |  SELECT c, cents FROM base WHERE k % 3 < 2
+        |  UNION ALL
+        |  SELECT c, cents + 9 AS cents FROM base WHERE k % 10 = 4)
+        |SELECT c % 25 AS grp, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(count(*) AS BIGINT) AS n_ids,
+        |  CAST(sum(cents % 97) AS BIGINT) AS mag_sum
+        |FROM rows_all
+        |GROUP BY c % 25""".stripMargin),
 
     // ---- T116: storage-partitioned join ----------------------------------
-    "q205_spj" -> ((s, d) => {
+    Q("q205_spj", (s, d) => {
       // two manifested FACT tables co-partitioned by bucket(8, k)
       // joined on k with ZERO Exchange: the scans report
       // KeyGroupedPartitioning, the bucket transform resolves through
@@ -2697,9 +3992,23 @@ object RelEntry {
         }
         s.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
       }
-    }),
+    },
+      // q205 mirror: the two co-bucketed feeds replayed as plain
+      // relations — bucketing is layout, never semantics
+      """WITH fo AS (
+        |  SELECT o_orderkey AS k, o_custkey AS c,
+        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+        |  FROM orders),
+        |fl AS (
+        |  SELECT l_orderkey AS k, CAST(l_quantity AS BIGINT) AS qty
+        |  FROM lineitem)
+        |SELECT fo.c AS custkey, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(fo.cents + fl.qty) AS BIGINT) AS v
+        |FROM fo JOIN fl ON fo.k = fl.k
+        |WHERE fo.c % 7 = 2
+        |GROUP BY fo.c""".stripMargin),
 
-    "q204_cherrypick" -> ((s, d) => {
+    Q("q204_cherrypick", (s, d) => {
       // the single-commit companion to write-audit-publish: TWO feeds
       // stage on one branch, the branch is DROPPED (audit failed for
       // the batch), then cherry-pick lifts exactly the ONE vetted
@@ -2734,10 +4043,25 @@ object RelEntry {
             |FROM g204.t WHERE c % 10 = 3
             |GROUP BY c""".stripMargin)
       }()
-    }),
+    },
+      // q204 mirror: the CTAS image plus ONLY the cherry-picked feed —
+      // the dropped sibling commit must not leak
+      """WITH base AS (
+        |  SELECT o_orderkey AS k, o_custkey AS c,
+        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+        |  FROM orders),
+        |s1 AS (SELECT k, c, cents FROM base WHERE k % 3 < 2),
+        |fa AS (
+        |  SELECT k + 507000000 AS k, c, cents + 1 AS cents
+        |  FROM base WHERE k % 10 = 4),
+        |cur AS (SELECT * FROM s1 UNION ALL SELECT * FROM fa)
+        |SELECT c AS custkey, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(cents) AS BIGINT) AS cents_sum
+        |FROM cur WHERE c % 10 = 3
+        |GROUP BY c""".stripMargin),
 
     // ---- T114: catalog SQL views -------------------------------------------
-    "q203_catalog_views" -> ((s, d) => {
+    Q("q203_catalog_views", (s, d) => {
       // catalog views end to end: create_view stores analyzed query
       // TEXT (the engine ships ViewCatalog unwired — the DDL face is
       // the procedure namespace, reads expand via the injected
@@ -2768,10 +4092,28 @@ object RelEntry {
         s.sql("CALL g203.system.drop_view('big')")
         s.sql("CALL g203.system.drop_view('by_cust')")
       }
-    }),
+    },
+      // q203 mirror: the view text replayed against the final data —
+      // views must be pure name->text bindings
+      """WITH base AS (
+        |  SELECT o_orderkey AS k, o_custkey AS c,
+        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+        |  FROM orders),
+        |cur AS (
+        |  SELECT k, c, cents FROM base WHERE k % 3 < 2
+        |  UNION ALL
+        |  SELECT k + 507000000 AS k, c, cents + 1 AS cents
+        |  FROM base WHERE k % 10 = 4),
+        |by_cust AS (
+        |  SELECT c, count(*) AS n, sum(cents) AS cents_sum
+        |  FROM cur GROUP BY c),
+        |big AS (SELECT * FROM by_cust WHERE n >= 5)
+        |SELECT c AS custkey, CAST(n AS BIGINT) AS n,
+        |  CAST(cents_sum AS BIGINT) AS cents_sum
+        |FROM big WHERE c % 10 = 3""".stripMargin),
 
     // ---- T113: CHECK constraints -------------------------------------------
-    "q202_check_constraints" -> ((s, d) => {
+    Q("q202_check_constraints", (s, d) => {
       // enforcement as an ORACLE property: a table with a CHECK
       // rejects a violating INSERT atomically (nothing lands), then
       // DROP CONSTRAINT releases it and the same feed lands. If
@@ -2807,10 +4149,28 @@ object RelEntry {
             |FROM g202.t WHERE c % 10 = 3
             |GROUP BY c""".stripMargin)
       }()
-    }),
+    },
+      // q202 mirror: only the strata that must have landed — the CTAS
+      // image and the post-DROP negative feed; the rejected stratum is
+      // exactly what a broken enforcement would add
+      """WITH base AS (
+        |  SELECT o_orderkey AS k, o_custkey AS c,
+        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+        |  FROM orders),
+        |s1 AS (SELECT k, c, cents FROM base WHERE k % 3 < 2),
+        |s3 AS (
+        |  SELECT k + 607000000 AS k, c, -cents - 1 AS cents
+        |  FROM base WHERE k % 10 = 6),
+        |cur AS (SELECT * FROM s1 UNION ALL SELECT * FROM s3)
+        |SELECT c AS custkey, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(cents) AS BIGINT) AS cents_sum,
+        |  CAST(count(CASE WHEN cents < 0 THEN 1 END) AS BIGINT)
+        |    AS n_neg
+        |FROM cur WHERE c % 10 = 3
+        |GROUP BY c""".stripMargin),
 
     // ---- T112: column default values ---------------------------------------
-    "q201_column_defaults" -> ((s, d) => {
+    Q("q201_column_defaults", (s, d) => {
       // the initial-default lifecycle in plain SQL: a CREATE-time
       // DEFAULT feeds partial-column INSERTs; ADD COLUMN ... DEFAULT
       // makes rows written BEFORE the column read the pinned EXISTS
@@ -2843,10 +4203,38 @@ object RelEntry {
             |  CAST(sum(cents) AS BIGINT) AS cents_sum
             |FROM g201.t GROUP BY tag, v""".stripMargin)
       }()
-    }),
+    },
+      // q201 mirror: the default lifecycle with the defaults spelled
+      // explicitly — stratum 1 reads the CREATE default + the ADD-time
+      // exists default, stratum 2 its explicit values, stratum 3 the
+      // post-SET current default; the UPDATE spans all three
+      """WITH base AS (
+        |  SELECT o_orderkey AS k, o_custkey AS c,
+        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+        |  FROM orders),
+        |s1 AS (
+        |  SELECT k, c, cents, 'seed' AS v, 'legacy' AS tag
+        |  FROM base WHERE k % 3 < 2),
+        |s2 AS (
+        |  SELECT k + 507000000 AS k, c, cents + 1 AS cents,
+        |         'new' AS v, 'fresh' AS tag
+        |  FROM base WHERE k % 10 = 4),
+        |s3 AS (
+        |  SELECT k + 607000000 AS k, c, cents, 'x' AS v, 'cur' AS tag
+        |  FROM base WHERE k % 10 = 6),
+        |cur AS (
+        |  SELECT k, c,
+        |         CASE WHEN c % 11 = 3 THEN cents + 5 ELSE cents END
+        |           AS cents,
+        |         v, tag
+        |  FROM (SELECT * FROM s1 UNION ALL SELECT * FROM s2
+        |        UNION ALL SELECT * FROM s3))
+        |SELECT tag, v, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(cents) AS BIGINT) AS cents_sum
+        |FROM cur GROUP BY tag, v""".stripMargin),
 
     // ---- T109: change data feed (readChangeFeed) ---------------------------
-    "q199_change_feed" -> ((s, d) => {
+    Q("q199_change_feed", (s, d) => {
       // the Delta-shaped readChangeFeed face: a lifecycle of commits
       // (CTAS, append, two merge-on-read DELETEs — the second GROWS
       // existing deletion vectors) read back as ONE batch change feed
@@ -2877,10 +4265,36 @@ object RelEntry {
           .agg(count(lit(1)).cast("long").as("n"),
             sum(col("cents")).cast("long").as("cents_sum"))
       }()
-    }),
+    },
+      // q199 mirror: every commit's row-level delta replayed with
+      // literal change types and versions — v1 the no-file CREATE
+      // (nothing), v2 the TBLPROPERTIES commit (nothing), v3 the CTAS
+      // image, v4 the feed, v5/v6 the two MoR deletes' victims (the
+      // second applies to v5's survivors)
+      """WITH base AS (
+        |  SELECT o_orderkey AS k, o_custkey AS c,
+        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+        |  FROM orders),
+        |v2 AS (SELECT k, c, cents FROM base WHERE k % 3 < 2),
+        |v3 AS (
+        |  SELECT k + 507000000 AS k, c, cents + 1 AS cents
+        |  FROM base WHERE k % 10 = 4),
+        |all1 AS (SELECT * FROM v2 UNION ALL SELECT * FROM v3),
+        |d4 AS (SELECT * FROM all1 WHERE c % 13 = 5),
+        |live4 AS (SELECT * FROM all1 WHERE NOT c % 13 = 5),
+        |d5 AS (SELECT * FROM live4 WHERE c % 13 = 6),
+        |changes AS (
+        |  SELECT 'insert' AS ctype, 3 AS v, cents FROM v2
+        |  UNION ALL SELECT 'insert', 4, cents FROM v3
+        |  UNION ALL SELECT 'delete', 5, cents FROM d4
+        |  UNION ALL SELECT 'delete', 6, cents FROM d5)
+        |SELECT ctype, CAST(v AS BIGINT) AS v,
+        |  CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(cents) AS BIGINT) AS cents_sum
+        |FROM changes GROUP BY ctype, v""".stripMargin),
 
     // ---- T110: metadata tables --------------------------------------------
-    "q200_metadata_tables" -> ((s, d) => {
+    Q("q200_metadata_tables", (s, d) => {
       // the inspection surface as a RELATION: a hidden-partitioned
       // table (months × truncate — the latter also oracle-exercises
       // the new transform) is fed twice, then `t.partitions` rolls up
@@ -2914,10 +4328,31 @@ object RelEntry {
             |  CAST(record_count AS BIGINT) AS n_rows
             |FROM g200.t.partitions""".stripMargin)
       }()
-    }),
+    },
+      // q200 mirror: every partition tuple recomputed relationally from
+      // the raw rows — the manifest's partitions rollup must agree with
+      // the data it indexes, rendered tuple names included
+      """WITH base AS (
+        |  SELECT o_orderkey AS k, o_custkey AS c, o_orderdate AS dt,
+        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+        |  FROM orders),
+        |rows1 AS (
+        |  SELECT k, c, c % 5000 AS cm, dt, cents
+        |  FROM base WHERE k % 3 < 2
+        |  UNION ALL
+        |  SELECT k + 507000000 AS k, c, c % 5000 AS cm,
+        |         CAST(dt + INTERVAL 40 DAY AS DATE) AS dt,
+        |         cents + 9 AS cents
+        |  FROM base WHERE k % 10 = 4)
+        |SELECT 'months(dt)=' ||
+        |    CAST((year(dt) - 1970) * 12 + month(dt) - 1 AS VARCHAR) ||
+        |    '/truncate(2500, cm)=' ||
+        |    CAST(cm - ((cm % 2500 + 2500) % 2500) AS VARCHAR) AS part,
+        |  CAST(count(*) AS BIGINT) AS n_rows
+        |FROM rows1 GROUP BY 1""".stripMargin),
 
     // ---- T108: row lineage — stable row ids -------------------------------
-    "q198_row_lineage" -> ((s, d) => {
+    Q("q198_row_lineage", (s, d) => {
       // stable row identity through a DML lifecycle, all in SQL: a
       // row-lineage table (CTAS), a feed, an engine-planned UPDATE
       // (ids carried PER ROW through the rewrite), a DELETE, and a
@@ -2958,10 +4393,38 @@ object RelEntry {
              |WHERE x.c % 10 = 3
              |GROUP BY x.c""".stripMargin)
       }()
-    }),
+    },
+      // q198 mirror: the lifecycle replayed with the old/new flag
+      // derived from PROVENANCE (which stratum a row came from) — the
+      // Spark side derives it from row IDS, so hash equality proves the
+      // ids survived the UPDATE, the DELETE's rewrite, and compaction
+      """WITH base AS (
+        |  SELECT o_orderkey AS k, o_custkey AS c,
+        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+        |  FROM orders),
+        |v2set AS (
+        |  SELECT k, c, cents, TRUE AS old FROM base WHERE k % 3 < 2),
+        |feed AS (
+        |  SELECT k + 507000000 AS k, c, cents + 9 AS cents,
+        |         FALSE AS old
+        |  FROM base WHERE k % 10 = 4),
+        |allr AS (SELECT * FROM v2set UNION ALL SELECT * FROM feed),
+        |upd AS (
+        |  SELECT k, c,
+        |         CASE WHEN k % 7 = 2 THEN cents + 11 ELSE cents END
+        |           AS cents,
+        |         old
+        |  FROM allr),
+        |cur AS (SELECT * FROM upd WHERE NOT (c % 11 = 4))
+        |SELECT c AS custkey, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(CASE WHEN old THEN cents END) AS BIGINT)
+        |    AS cents_old,
+        |  CAST(count(CASE WHEN NOT old THEN 1 END) AS BIGINT) AS n_new
+        |FROM cur WHERE c % 10 = 3
+        |GROUP BY c""".stripMargin),
 
     // ---- T105: per-commit CDF with change-type columns --------------------
-    "q197_changelog_view" -> ((s, d) => {
+    Q("q197_changelog_view", (s, d) => {
       // the table_changes face: a lifecycle of commits (CTAS, append,
       // engine-planned MERGE, DELETE) replayed commit-by-commit from
       // ONE batch read — CALL create_changelog_view registers the
@@ -3003,10 +4466,52 @@ object RelEntry {
             |FROM g197_changes
             |GROUP BY _change_type, _commit_version""".stripMargin)
       }()
-    }),
+    },
+      // q197 mirror: every commit's row-level delta replayed
+      // relationally with literal change types and versions — v1 is the
+      // no-file CREATE (contributes nothing), v2 the CTAS image, v3 the
+      // feed, v4 the merge (pre/post images via the identifier column,
+      // unmatched keys as inserts), v5 the delete's victims
+      """WITH base AS (
+        |  SELECT o_orderkey AS k, o_custkey AS c,
+        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+        |  FROM orders),
+        |v1set AS (SELECT k, c, cents FROM base WHERE k % 3 < 2),
+        |f3 AS (
+        |  SELECT k + 507000000 AS k, c, cents + 1 AS cents
+        |  FROM base WHERE k % 10 = 4),
+        |msrc AS (
+        |  SELECT k, c, cents - 7 AS cents FROM base WHERE k % 9 = 1
+        |  UNION ALL
+        |  SELECT k + 607000000 AS k, c, cents FROM base WHERE k % 9 = 5),
+        |pre4 AS (SELECT * FROM v1set UNION ALL SELECT * FROM f3),
+        |mpre AS (
+        |  SELECT t.* FROM pre4 t WHERE t.k IN (SELECT k FROM msrc)),
+        |mpost AS (
+        |  SELECT t.k, t.c, s.cents FROM pre4 t JOIN msrc s ON t.k = s.k),
+        |mins AS (
+        |  SELECT s.* FROM msrc s WHERE s.k NOT IN (SELECT k FROM pre4)),
+        |merged AS (
+        |  SELECT t.k, t.c,
+        |         CASE WHEN s.k IS NOT NULL THEN s.cents ELSE t.cents END
+        |           AS cents
+        |  FROM pre4 t LEFT JOIN msrc s ON t.k = s.k
+        |  UNION ALL SELECT * FROM mins),
+        |changes AS (
+        |  SELECT 'insert' AS ctype, 2 AS v, cents FROM v1set
+        |  UNION ALL SELECT 'insert', 3, cents FROM f3
+        |  UNION ALL SELECT 'update_preimage', 4, cents FROM mpre
+        |  UNION ALL SELECT 'update_postimage', 4, cents FROM mpost
+        |  UNION ALL SELECT 'insert', 4, cents FROM mins
+        |  UNION ALL SELECT 'delete', 5, cents FROM merged
+        |    WHERE c % 13 = 5)
+        |SELECT ctype, CAST(v AS BIGINT) AS v,
+        |  CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(cents) AS BIGINT) AS cents_sum
+        |FROM changes GROUP BY ctype, v""".stripMargin),
 
     // ---- T104: nested types + nested field-id evolution -------------------
-    "q196_nested_lakehouse" -> ((s, d) => {
+    Q("q196_nested_lakehouse", (s, d) => {
       // struct columns through the whole lakehouse tier, in plain SQL:
       // CTAS with a struct column, RENAME of a NESTED field
       // (metadata-only — old files keep serving the member through its
@@ -3049,10 +4554,42 @@ object RelEntry {
             |FROM g196.t WHERE c % 10 = 3
             |GROUP BY c""".stripMargin)
       }()
-    }),
+    },
+      // q196 mirror: the nested-evolution lifecycle replayed with FLAT
+      // columns — nested rename = aliasing, nested drop+re-add = every
+      // prior row's tag NULLed (a resurrected dead id would inflate
+      // n_tag), the UPDATE spans all three generations
+      """WITH base AS (
+        |  SELECT o_orderkey AS k, o_custkey AS c,
+        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+        |  FROM orders),
+        |v1 AS (
+        |  SELECT k, c, cents AS amount FROM base WHERE k % 3 < 2),
+        |f1 AS (
+        |  SELECT k + 507000000 AS k, c, cents AS amount
+        |  FROM base WHERE k % 10 = 4),
+        |dropped AS (
+        |  SELECT k, c, amount, CAST(NULL AS VARCHAR) AS tag FROM v1
+        |  UNION ALL
+        |  SELECT k, c, amount, CAST(NULL AS VARCHAR) AS tag FROM f1),
+        |f2 AS (
+        |  SELECT k + 607000000 AS k, c, cents + 5 AS amount,
+        |         'fresh' AS tag
+        |  FROM base WHERE k % 10 = 6),
+        |cur AS (
+        |  SELECT k, c,
+        |         CASE WHEN k % 11 = 3 THEN amount + 7 ELSE amount END
+        |           AS amount,
+        |         tag
+        |  FROM (SELECT * FROM dropped UNION ALL SELECT * FROM f2))
+        |SELECT c AS custkey, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(amount) AS BIGINT) AS amt,
+        |  CAST(count(tag) AS BIGINT) AS n_tag
+        |FROM cur WHERE c % 10 = 3
+        |GROUP BY c""".stripMargin),
 
     // ---- T103: hidden partitioning + partition evolution ------------------
-    "q195_hidden_partitioning" -> ((s, d) => {
+    Q("q195_hidden_partitioning", (s, d) => {
       // the Iceberg partition-spec lifecycle in plain SQL: CREATE
       // TABLE ... PARTITIONED BY (months(dt), bucket(8, k)) — every
       // commit lands tuple-local files stamped with their partition
@@ -3092,10 +4629,32 @@ object RelEntry {
             |  AND c % 10 = 3
             |GROUP BY c""".stripMargin)
       }()
-    }),
+    },
+      // q195 mirror: the partition lifecycle replayed relationally —
+      // hidden partitioning and its evolution must be semantically
+      // invisible (layout is a pure optimization)
+      """WITH base AS (
+        |  SELECT o_orderkey AS k, o_custkey AS c, o_orderdate AS dt,
+        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+        |  FROM orders),
+        |v1 AS (SELECT k, c, dt, cents FROM base WHERE k % 3 < 2),
+        |f2 AS (
+        |  SELECT k + 507000000 AS k, c,
+        |         CAST(dt + INTERVAL 3 DAY AS DATE) AS dt,
+        |         cents + 9 AS cents
+        |  FROM base WHERE k % 10 = 4),
+        |cur AS (
+        |  SELECT * FROM (SELECT * FROM v1 UNION ALL SELECT * FROM f2)
+        |  WHERE NOT (c % 13 = 5 AND dt >= DATE '1996-01-01'))
+        |SELECT c AS custkey, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(cents) AS BIGINT) AS cents_sum
+        |FROM cur
+        |WHERE dt >= DATE '1995-01-01' AND dt < DATE '1996-07-01'
+        |  AND c % 10 = 3
+        |GROUP BY c""".stripMargin),
 
     // ---- T74: data-quality expectation suite ----------------------------
-    "q174_quality_audit" -> ((s, d) => {
+    Q("q174_quality_audit", (s, d) => {
       // the pre-publication audit as ONE declarative suite
       // (AuditOps): every row-predicate check on a table folds into a
       // single conditional aggregate over a single scan (PlanAuditSpec
@@ -3132,1205 +4691,11 @@ object RelEntry {
           Seq("o_custkey")))
         .unionAll(AuditOps.fkCheck("lineitem.orderkey_fk", li,
           "l_orderkey", o, "o_orderkey"))
-    }),
-
-    // ---- T73: point-in-polygon join (geofencing containment) ------------
-    "q172_point_in_polygon" -> ((s, d) => {
-      // the containment member of the spatial tier over q163's point
-      // lattice: 25 deterministic octagon fences derived from nation
-      // keys by pure arithmetic both engines compute identically —
-      // center (k·37199 % 90000 + 5000, k·52711 % 90000 + 5000),
-      // radius 3000 + (k % 5)·1500 (always divisible by 4, so the
-      // (dir·r) DIV 4 vertex offsets are EXACT division and the
-      // truncate-vs-floor DIV divergence on negatives never fires).
-      // Spark runs the grid operator (bbox cell cover + one codegen'd
-      // ray-parity HOF per candidate — SpatialOps.pointInPolygonJoin);
-      // the DuckDB mirror runs the NAIVE points x edges crossing sum.
-      // Same answer; |pts|·|edges| vs cell-bounded candidates is the
-      // documented asymmetry. Grid ≡ brute force incl. non-convex and
-      // self-intersecting polygons is property-tested in GraftProps.
-      val pts = Tables.customer(s, d).select(
-        col("c_custkey").as("id"),
-        (col("c_custkey") * lit(48271L) % lit(99991L)).as("x"),
-        (col("c_custkey") * lit(69621L) % lit(99991L)).as("y"))
-      val vsExpr = PipDirs.map { case (dx, dy) =>
-        s"struct(CAST(cx + ($dx * r) DIV 4 AS BIGINT) AS x, " +
-          s"CAST(cy + ($dy * r) DIV 4 AS BIGINT) AS y)" }
-        .mkString("array(", ", ", ")")
-      val polys = Tables.nation(s, d).selectExpr(
-        "CAST(n_nationkey AS BIGINT) AS poly_id",
-        "(n_nationkey * 37199) % 90000 + 5000 AS cx",
-        "(n_nationkey * 52711) % 90000 + 5000 AS cy",
-        "3000 + (n_nationkey % 5) * 1500 AS r")
-        .selectExpr("poly_id", s"$vsExpr AS vs")
-      SpatialOps.pointInPolygonJoin(pts, polys, cell = 8192L)
-    }),
-
-    // ---- T66: snapshot reconciliation (bucket-fingerprint table diff) ---
-    "q164_snapshot_diff" -> ((s, d) => {
-      // the migration-sign-off / drift-detection operator: classify
-      // every row two snapshots disagree on WITHOUT full-outer-joining
-      // the snapshots — bucket fingerprints (count + Σ 60-bit md5
-      // digest, map-side-combinable, |buckets| output rows) locate the
-      // drifted key ranges, then only those buckets rescan into the
-      // row-level classify (ReconcileOps.snapshotDiff). The drifted
-      // snapshot v2 derives deterministically in-query so the oracle
-      // can mirror it: 200 deletions ([2000,2200)), 300 amendments
-      // ([5000,5300) priority rewritten), 50 inserts (keys +107e6,
-      // far above any ScaleBench replica stride) — drift LOCALIZED in
-      // the key space, so 5 of ~59 buckets mismatch (pruning pinned in
-      // ReconcileSpec). The DuckDB mirror runs the NAIVE form — full
-      // outer join of both entire snapshots on the key — same answer:
-      // a data-sized shuffle per side vs fingerprint partials + a
-      // drift-sized drill is the documented asymmetry. Canonical
-      // content renders engine-portably: cents as BIGINT (never
-      // double→string), epoch seconds (unix_seconds ≡ date_diff), and
-      // the md5 of identical strings is identical hex both engines.
-      val o = Tables.orders(s, d)
-      val v2 = o.filter(!col("o_orderkey").between(2000L, 2199L))
-        .withColumn("o_orderpriority",
-          when(col("o_orderkey").between(5000L, 5299L), lit("AMENDED"))
-            .otherwise(col("o_orderpriority")))
-        .unionByName(o.filter(col("o_orderkey").between(100L, 149L))
-          .withColumn("o_orderkey", col("o_orderkey") + lit(107000000L)))
-      def keyed(df: DataFrame) = df.select(
-        col("o_orderkey").as("k"),
-        concat_ws("|", col("o_custkey"), col("o_orderstatus"),
-          round(col("o_totalprice") * 100).cast("long"),
-          // NTZ parquet column → session-zoned (UTC) first; identity
-          // wall-clock, and unix_seconds requires TIMESTAMP
-          expr("unix_seconds(CAST(o_orderdate AS TIMESTAMP))"),
-          col("o_orderpriority")).as("canon"))
-      ReconcileOps.snapshotDiff(keyed(o), keyed(v2), bucketWidth = 256L)
-    }),
-
-    // ---- T48: recursive CTE (iterative in-engine computation) -----------
-    "q147_recursive_chain" -> ((s, d) => {
-      // WITH RECURSIVE — new in Spark 4 (SPARK-24497) and the last
-      // big warehouse-SQL construct this surface lacked: hierarchy
-      // walks, BOM explosions, reachability. Here every supplier walks
-      // a synthetic parent chain (parent = key DIV 10 — a
-      // real-data-derived tree with depth = the key's digit count)
-      // down to the root, aggregating per-origin depth/length/ancestor
-      // sums — all-integer, so the hash compare pins the full
-      // recursion cross-engine (DuckDB runs the same recursion with //
-      // for DIV). Scale shape: the anchor and the step are ORDINARY
-      // distributed plans; the engine iterates the step until the
-      // frontier empties (UnionLoop), so total work is
-      // Σ_depth |frontier_d| — depth-bounded here (≤ digits), with
-      // per-iteration cost an equi-projection, never a driver loop
-      // (contrast q71's driver-side label propagation, which predates
-      // engine recursion and owns the convergence-test variant).
-      Tables.supplier(s, d).createOrReplaceTempView("graft_q147_supplier")
-      s.sql(
-        """WITH RECURSIVE chain(k, anc, depth) AS (
-          |  SELECT s_suppkey, s_suppkey, 0 FROM graft_q147_supplier
-          |  UNION ALL
-          |  SELECT k, anc DIV 10, depth + 1 FROM chain WHERE anc > 0)
-          |SELECT k AS s_suppkey, CAST(max(depth) AS BIGINT) AS depth_to_root,
-          |  CAST(count(*) AS BIGINT) AS chain_len,
-          |  CAST(sum(anc) AS BIGINT) AS anc_sum
-          |FROM chain GROUP BY k""".stripMargin)
-    }),
-
-    // ---- T47: the ranking-function family under ties --------------------
-    "q146_rank_family" -> ((s, d) => {
-      // rank / dense_rank / percent_rank / cume_dist / ntile in one
-      // query — the analytics surface q23's row_number only samples.
-      // The semantics worth pinning are TIE behavior: rank leaves gaps,
-      // dense_rank doesn't, percent_rank = (rank−1)/(n−1) and
-      // cume_dist = |peers ≤ x|/n are tie-deterministic BY DEFINITION
-      // (they depend only on the order key, so a non-unique ORDER BY is
-      // safe), while ntile SPLITS peers across tiles and is only
-      // deterministic over a unique order — hence the two WINDOW
-      // clauses, which is itself the teaching point. The two ratio
-      // columns are single IEEE divisions of exact integers —
-      // bit-identical cross-engine.
-      Tables.lineitem(s, d).createOrReplaceTempView("graft_q146_lineitem")
-      s.sql(
-        """SELECT l_orderkey, l_linenumber,
-          |  CAST(rank() OVER wt AS BIGINT) AS rnk,
-          |  CAST(dense_rank() OVER wt AS BIGINT) AS drnk,
-          |  percent_rank() OVER wt AS prnk,
-          |  cume_dist() OVER wt AS cdist,
-          |  CAST(ntile(4) OVER wu AS BIGINT) AS quartile
-          |FROM graft_q146_lineitem WHERE l_orderkey < 2000
-          |WINDOW
-          |  wt AS (PARTITION BY l_returnflag ORDER BY l_quantity),
-          |  wu AS (PARTITION BY l_returnflag
-          |         ORDER BY l_quantity, l_orderkey, l_linenumber)"""
-          .stripMargin)
-    }),
-
-    // ---- T46: time-interval RANGE window frame --------------------------
-    "q145_range_frame" -> ((s, d) => {
-      // The trailing-time-window idiom every monitoring/feature pipeline
-      // writes — "events and spend in the last hour, per user, at every
-      // event" — via a RANGE frame over event time (q58's running
-      // frames are ROWS frames; RANGE is the time-based member). The
-      // semantics worth pinning cross-engine: a RANGE frame includes
-      // ALL PEERS of the current ts, so ties contribute symmetrically
-      // and the result is deterministic under any tie order (a ROWS
-      // frame would depend on it — exactly why naive ports of this
-      // query go nondeterministic). Sum is integer cents. Scale: one
-      // hash exchange on user_id + per-partition sort — the frame
-      // bound evicts state at |events-in-window| per key, the same
-      // bounded-state story as the streaming watermark twin (q44).
-      Tables.events(s, d).createOrReplaceTempView("graft_q145_events")
-      s.sql(
-        """SELECT user_id, ts, event_id,
-          |  CAST(count(*) OVER w AS BIGINT) AS n_1h,
-          |  CAST(sum(CAST(round(value*100) AS BIGINT)) OVER w AS BIGINT)
-          |    AS cents_1h
-          |FROM graft_q145_events
-          |WINDOW w AS (PARTITION BY user_id ORDER BY ts
-          |             RANGE BETWEEN INTERVAL 1 HOUR PRECEDING
-          |                       AND CURRENT ROW)""".stripMargin)
-    }),
-
-    // ---- T39b: forward as-of join (merge_asof direction='forward') ------
-    "q144_asof_forward" -> ((s, d) => {
-      // purchase → the NEXT click at-or-after it by the same user: the
-      // follow-up/response attribution read, completing the as-of
-      // direction pair (q52 backward, q133 backward+tolerance). Same
-      // join-free plan — one union, one window on the key — with the
-      // frame flipped to currentRow..following and `first` instead of
-      // `last`; equal-ts clicks match (>= semantics), pinned in
-      // TemporalOpsSpec.
-      val e = Tables.events(s, d)
-      val clicks = e.filter(col("event_type") === "click")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("click_id"))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("event_id"))
-      TemporalOps.asofJoin(purchases, clicks, "user_id", "ts",
-          forward = true)
-        .select(col("event_id"), col("user_id"), col("ts"),
-                col("asof_ts"), col("asof_click_id"))
-    }),
-
-    "q143_lateral_left" -> ((s, d) => {
-      // LEFT JOIN LATERAL: customers keep a NULL-extended row when the
-      // lateral aggregate matches nothing — the outer-join face of
-      // decorrelation (count coalesces to 0 on no match, q138's trap,
-      // here through the FROM-clause spelling)
-      Tables.customer(s, d).createOrReplaceTempView("graft_q143_customer")
-      Tables.orders(s, d).createOrReplaceTempView("graft_q143_orders")
-      s.sql(
-        s"""SELECT c.c_custkey, t.n_hi, t.max_price
-           |FROM graft_q143_customer c LEFT JOIN LATERAL (
-           |  SELECT CAST(count(*) AS BIGINT) AS n_hi,
-           |         max(o_totalprice) AS max_price
-           |  FROM graft_q143_orders o
-           |  WHERE o.o_custkey = c.c_custkey
-           |    AND o.o_totalprice > $SubqPriceHi) t ON true
-           |WHERE c.c_custkey < 300""".stripMargin)
-    }),
-  )
-
-  private val ZBits = 8 // 256 cells per dimension → 16-bit z space
-
-  def oracleSql: Map[String, String] = Map(
-    "q52_asof_join" ->
-      """WITH c AS (SELECT user_id, ts, max(event_id) AS click_id
-        |             FROM events WHERE event_type='click' GROUP BY 1, 2),
-        |     p AS (SELECT user_id, ts, event_id
-        |             FROM events WHERE event_type='purchase'),
-        |     m AS (SELECT p.event_id, p.user_id, p.ts, max(c.ts) AS asof_ts
-        |             FROM p LEFT JOIN c
-        |               ON c.user_id = p.user_id AND c.ts <= p.ts
-        |            GROUP BY 1, 2, 3)
-        |SELECT m.event_id, m.user_id, m.ts, m.asof_ts,
-        |       c.click_id AS asof_click_id
-        |  FROM m LEFT JOIN c
-        |    ON c.user_id = m.user_id AND c.ts = m.asof_ts""".stripMargin,
-    // q148 mirror: identical text modulo the view name
-    "q148_agg_modifiers" ->
-      """SELECT event_type,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(count(*) FILTER (WHERE value > 150) AS BIGINT) AS n_hi,
-        |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-        |  CAST(count(DISTINCT user_id) FILTER (WHERE value > 150)
-        |    AS BIGINT) AS n_hi_users,
-        |  CAST(count(DISTINCT date_trunc('day', ts)) AS BIGINT) AS n_days
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    // q151 mirror: the lower()-rewrite formulation — on ASCII data
-    // UTF8_LCASE equality/grouping IS lower() equality/grouping, which
-    // is exactly the equivalence the query claims
-    "q151_collated_group_join" ->
-      """WITH c AS (
-        |  SELECT c_custkey, c_acctbal,
-        |    CASE WHEN c_custkey % 2 = 0 THEN lower(c_mktsegment)
-        |         ELSE c_mktsegment END AS seg_mixed
-        |  FROM customer),
-        |dim AS (SELECT * FROM (VALUES ('building'), ('MACHINERY'),
-        |                              ('Household')) t(name))
-        |SELECT lower(seg_mixed) AS seg_l,
-        |  count(*) AS n,
-        |  count(DISTINCT seg_mixed) AS n_case_variants,
-        |  CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS BIGINT)
-        |    AS cents
-        |FROM c JOIN dim ON lower(seg_mixed) = lower(name)
-        |GROUP BY lower(seg_mixed)""".stripMargin,
-
-    // q152 mirror: the SQL-UDF bodies written out longhand — which is
-    // exactly what "the registry inlines" means semantically
-    "q152_sql_udf" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents,
-        |  CAST(sum(CAST(length(format('{:b}', event_id)) AS BIGINT))
-        |    AS BIGINT) AS sum_bits,
-        |  CAST(max(CAST(length(format('{:b}', event_id)) AS BIGINT) * 3)
-        |    AS BIGINT) AS max_wbits
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    // q162 mirror: + INTERVAL 1 MONTH is DuckDB's clamping add_months;
-    // isodow is the ISO day Spark reaches as weekday()+1
-    "q162_calendar_edges" ->
-      """SELECT DISTINCT
-        |  CAST(o_orderdate AS VARCHAR) AS dt,
-        |  CAST(CAST(o_orderdate + INTERVAL 1 MONTH AS DATE) AS VARCHAR)
-        |    AS next_month,
-        |  CAST(last_day(o_orderdate) AS VARCHAR) AS month_end,
-        |  CAST(date_trunc('quarter', o_orderdate) AS VARCHAR)
-        |    AS quarter_start,
-        |  CAST(isodow(o_orderdate) AS BIGINT) AS iso_dow
-        |FROM orders WHERE o_orderkey < 4000""".stripMargin,
-
-    // q160 mirror: DuckDB's native UNION ALL BY NAME — the same
-    // null-fill-by-name semantics Spark spells allowMissingColumns
-    "q160_union_by_name" ->
-      """WITH u AS (
-        |  SELECT doc_id, lang, n_chars FROM documents WHERE doc_id % 2 = 0
-        |  UNION ALL BY NAME
-        |  SELECT doc_id, lang, source FROM documents WHERE doc_id % 2 = 1)
-        |SELECT lang, count(*) AS n,
-        |  count(n_chars) AS n_with_chars,
-        |  count(source) AS n_with_source
-        |FROM u GROUP BY lang""".stripMargin,
-
-    // q161 mirror: the plain DISTINCT the bitmap machinery must equal,
-    // bucket counts included. Spark's bitmap_bucket_number(x) is
-    // FLOOR((x−1)/32768)+1 — 1-indexed positions, so id 0 falls in its
-    // own bucket below ids 1..32768 (measured: the naive x//32768
-    // mirror undercounts by exactly that bucket, and DuckDB's //
-    // TRUNCATES toward zero where Spark floors — the oracle-tricks
-    // pmod-subtraction identity makes the floor exact at x−1 = −1)
-    "q161_bitmap_distinct" ->
-      """SELECT event_type,
-        |  count(DISTINCT user_id) AS n_users,
-        |  count(DISTINCT ((user_id - 1) -
-        |    (((user_id - 1) % 32768 + 32768) % 32768)) // 32768)
-        |    AS n_buckets
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    // q164 mirror: the NAIVE form — full outer join of both ENTIRE
-    // snapshots on the key (a data-sized shuffle per side, every run,
-    // however small the drift); the Spark side's fingerprint partials
-    // + drift-sized drill produce the same rows
-    "q164_snapshot_diff" ->
-      """WITH v2 AS (
-        |  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-        |    o_orderdate,
-        |    CASE WHEN o_orderkey BETWEEN 5000 AND 5299 THEN 'AMENDED'
-        |         ELSE o_orderpriority END AS o_orderpriority
-        |  FROM orders WHERE o_orderkey NOT BETWEEN 2000 AND 2199
-        |  UNION ALL
-        |  SELECT o_orderkey + 107000000, o_custkey, o_orderstatus,
-        |    o_totalprice, o_orderdate, o_orderpriority
-        |  FROM orders WHERE o_orderkey BETWEEN 100 AND 149),
-        |a AS (
-        |  SELECT o_orderkey AS k, md5(concat_ws('|', o_orderkey,
-        |    o_custkey, o_orderstatus,
-        |    CAST(round(o_totalprice * 100) AS BIGINT),
-        |    date_diff('second', TIMESTAMP '1970-01-01 00:00:00',
-        |      o_orderdate),
-        |    o_orderpriority)) AS m
-        |  FROM orders),
-        |b AS (
-        |  SELECT o_orderkey AS k, md5(concat_ws('|', o_orderkey,
-        |    o_custkey, o_orderstatus,
-        |    CAST(round(o_totalprice * 100) AS BIGINT),
-        |    date_diff('second', TIMESTAMP '1970-01-01 00:00:00',
-        |      o_orderdate),
-        |    o_orderpriority)) AS m
-        |  FROM v2)
-        |SELECT coalesce(a.k, b.k) AS k,
-        |  CASE WHEN a.k IS NULL THEN 'added'
-        |       WHEN b.k IS NULL THEN 'removed'
-        |       ELSE 'changed' END AS status
-        |FROM a FULL JOIN b ON a.k = b.k
-        |WHERE a.k IS NULL OR b.k IS NULL OR a.m <> b.m""".stripMargin,
-
-    // q163 mirror: the NAIVE all-pairs distance filter — |points|² pair
-    // evaluations, fine at oracle scale; the Spark side's grid banding
-    // bounds candidates by cell occupancy (same answer, different
-    // volume — the q159 oracle philosophy in 2-D)
-    "q163_spatial_neighbors" ->
-      """WITH p AS (
-        |  SELECT c_custkey AS id,
-        |    (c_custkey * 48271) % 99991 AS x,
-        |    (c_custkey * 69621) % 99991 AS y
-        |  FROM customer)
-        |SELECT a.id AS id_a, b.id AS id_b,
-        |  CAST((a.x - b.x) * (a.x - b.x)
-        |     + (a.y - b.y) * (a.y - b.y) AS BIGINT) AS d2
-        |FROM p a JOIN p b ON a.id < b.id
-        |WHERE (a.x - b.x) * (a.x - b.x)
-        |    + (a.y - b.y) * (a.y - b.y) <= 16000000""".stripMargin,
-
-    // q166 mirror: the NAIVE form — all-pairs distances, horizon filter,
-    // rank per probe; the Spark side's two-phase ring expansion is the
-    // density-bounded path (same answer, tie order (d2, neighbor_id)
-    // pinned on both sides)
-    "q166_knn_join" ->
-      """WITH p AS (
-        |  SELECT c_custkey AS id,
-        |    (c_custkey * 48271) % 99991 AS x,
-        |    (c_custkey * 69621) % 99991 AS y
-        |  FROM customer),
-        |cand AS (
-        |  SELECT a.id AS probe_id, b.id AS neighbor_id,
-        |    CAST((a.x - b.x) * (a.x - b.x)
-        |       + (a.y - b.y) * (a.y - b.y) AS BIGINT) AS d2
-        |  FROM p a JOIN p b ON a.id <> b.id
-        |  WHERE (a.x - b.x) * (a.x - b.x)
-        |      + (a.y - b.y) * (a.y - b.y) <= 256000000),
-        |ranked AS (
-        |  SELECT probe_id, neighbor_id, d2,
-        |    CAST(row_number() OVER (PARTITION BY probe_id
-        |      ORDER BY d2, neighbor_id) AS BIGINT) AS rk
-        |  FROM cand)
-        |SELECT probe_id, neighbor_id, d2, rk FROM ranked
-        |WHERE rk <= 5""".stripMargin,
-
-    // q159 mirror: the TEXTBOOK formulation — x<y<z three-way self-join
-    // finds each triangle once, each corner credited via UNION ALL;
-    // naive neighbor pairing is fine at oracle scale (the oriented
-    // form's O(m^1.5) bound is the Spark side's 100-TB claim)
-    "q159_triangle_count" ->
-      """WITH ps AS (
-        |  SELECT DISTINCT l_partkey, date_trunc('week', l_shipdate) AS w,
-        |    l_suppkey
-        |  FROM lineitem),
-        |e AS (
-        |  SELECT DISTINCT p1.l_suppkey AS a, p2.l_suppkey AS b
-        |  FROM ps p1 JOIN ps p2
-        |    ON p1.l_partkey = p2.l_partkey AND p1.w = p2.w
-        |  WHERE p1.l_suppkey < p2.l_suppkey),
-        |deg AS (
-        |  SELECT v, count(*) AS deg FROM (
-        |    SELECT a AS v FROM e UNION ALL SELECT b AS v FROM e)
-        |  GROUP BY v),
-        |tri AS (
-        |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-        |  FROM e e1
-        |  JOIN e e2 ON e2.a = e1.b
-        |  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
-        |corners AS (
-        |  SELECT x AS v FROM tri
-        |  UNION ALL SELECT y FROM tri
-        |  UNION ALL SELECT z FROM tri),
-        |pn AS (SELECT v, count(*) AS n_tri FROM corners GROUP BY v)
-        |SELECT d.v AS s_suppkey, d.deg,
-        |  CAST(coalesce(pn.n_tri, 0) AS BIGINT) AS n_tri
-        |FROM deg d LEFT JOIN pn ON d.v = pn.v""".stripMargin,
-
-    // q167 mirror: q159's naive triangle join + the one IEEE division
-    // of the coefficient (exact BIGINT operands, correctly rounded the
-    // same on both engines); NULL where deg < 2
-    "q167_clustering_coeff" ->
-      """WITH ps AS (
-        |  SELECT DISTINCT l_partkey, date_trunc('week', l_shipdate) AS w,
-        |    l_suppkey
-        |  FROM lineitem),
-        |e AS (
-        |  SELECT DISTINCT p1.l_suppkey AS a, p2.l_suppkey AS b
-        |  FROM ps p1 JOIN ps p2
-        |    ON p1.l_partkey = p2.l_partkey AND p1.w = p2.w
-        |  WHERE p1.l_suppkey < p2.l_suppkey),
-        |deg AS (
-        |  SELECT v, count(*) AS deg FROM (
-        |    SELECT a AS v FROM e UNION ALL SELECT b AS v FROM e)
-        |  GROUP BY v),
-        |tri AS (
-        |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-        |  FROM e e1
-        |  JOIN e e2 ON e2.a = e1.b
-        |  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
-        |corners AS (
-        |  SELECT x AS v FROM tri
-        |  UNION ALL SELECT y FROM tri
-        |  UNION ALL SELECT z FROM tri),
-        |pn AS (SELECT v, count(*) AS n_tri FROM corners GROUP BY v)
-        |SELECT d.v AS s_suppkey, d.deg,
-        |  CAST(coalesce(pn.n_tri, 0) AS BIGINT) AS n_tri,
-        |  CASE WHEN d.deg >= 2 THEN
-        |    CAST(coalesce(pn.n_tri, 0) * 2 AS DOUBLE)
-        |      / CAST(d.deg * (d.deg - 1) AS DOUBLE)
-        |  END AS coeff
-        |FROM deg d LEFT JOIN pn ON d.v = pn.v""".stripMargin,
-
-    // q168 mirror: the SAME two peel rounds unrolled as CTE stages —
-    // degrees over e0 gate e1, degrees over e1 gate e2, survivors
-    // reported with their e2-induced degrees
-    "q168_kcore" ->
-      """WITH ps AS (
-        |  SELECT DISTINCT l_partkey, date_trunc('week', l_shipdate) AS w,
-        |    l_suppkey
-        |  FROM lineitem),
-        |e0 AS (
-        |  SELECT DISTINCT p1.l_suppkey AS a, p2.l_suppkey AS b
-        |  FROM ps p1 JOIN ps p2
-        |    ON p1.l_partkey = p2.l_partkey AND p1.w = p2.w
-        |  WHERE p1.l_suppkey < p2.l_suppkey),
-        |d0 AS (
-        |  SELECT v, count(*) AS deg FROM (
-        |    SELECT a AS v FROM e0 UNION ALL SELECT b AS v FROM e0)
-        |  GROUP BY v),
-        |k0 AS (SELECT v FROM d0 WHERE deg >= 36),
-        |e1 AS (
-        |  SELECT e.a, e.b FROM e0 e
-        |  JOIN k0 x ON e.a = x.v JOIN k0 y ON e.b = y.v),
-        |d1 AS (
-        |  SELECT v, count(*) AS deg FROM (
-        |    SELECT a AS v FROM e1 UNION ALL SELECT b AS v FROM e1)
-        |  GROUP BY v),
-        |k1 AS (SELECT v FROM d1 WHERE deg >= 36),
-        |e2 AS (
-        |  SELECT e.a, e.b FROM e1 e
-        |  JOIN k1 x ON e.a = x.v JOIN k1 y ON e.b = y.v)
-        |SELECT v AS s_suppkey, count(*) AS deg FROM (
-        |  SELECT a AS v FROM e2 UNION ALL SELECT b AS v FROM e2)
-        |GROUP BY v""".stripMargin,
-
-    // q169 mirror: the LONGHAND form of the table function — the grid
-    // generator written out as generate_series+unnest, which is what
-    // "the UDTF body inlines" means semantically
-    "q169_table_function" ->
-      s"""SELECT doc_id,
-         |  CAST((start - 1) // $TfChunkStride AS BIGINT) AS chunk_id,
-         |  CAST(start AS BIGINT) AS start,
-         |  CAST(len(list_slice(toks, start,
-         |    least(start + ${TfChunkTokens - 1}, n))) AS BIGINT)
-         |    AS n_chunk_tokens,
-         |  md5(array_to_string(list_slice(toks, start,
-         |    least(start + ${TfChunkTokens - 1}, n)), ' ')) AS chunk_md5
-         |FROM (
-         |  SELECT doc_id, toks, n,
-         |         unnest(generate_series(1, n, $TfChunkStride)) AS start
-         |  FROM (SELECT doc_id, ${TextOps.tokensDuck("text")} AS toks,
-         |               len(${TextOps.tokensDuck("text")}) AS n
-         |        FROM documents))""".stripMargin,
-
-    // q175 mirror: the DIRECT aggregate over the v2 image — no MV, no
-    // delta; equality is the delta-apply ≡ recompute theorem (BIGINT
-    // cast pins DuckDB's HUGEINT sum back to the shared dtype)
-    "q175_incremental_mv" ->
-      """WITH base AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents
-        |  FROM orders),
-        |v2 AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 5 = 0 THEN price_cents + 100
-        |              ELSE price_cents END AS price_cents
-        |  FROM base WHERE o_orderkey % 4 < 3 AND NOT (o_orderkey % 7 = 0)
-        |    AND NOT (o_custkey % 211 = 5)
-        |  UNION ALL
-        |  SELECT * FROM base
-        |  WHERE o_orderkey % 4 = 3 AND NOT (o_custkey % 211 = 5))
-        |SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders,
-        |       CAST(sum(price_cents) AS BIGINT) AS cents
-        |FROM v2 GROUP BY o_custkey""".stripMargin,
-
-    // q176 mirror: the relational upsert image — src wins, base keys
-    // not in src pass through; equality proves the copy-on-write MERGE
-    // (file pruning, partial rewrite, manifest swap) returns exactly
-    // the logical upsert
-    "q176_merge_upsert" ->
-      """WITH base AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents
-        |  FROM orders),
-        |src AS (
-        |  SELECT o_orderkey, o_custkey, price_cents + 5000 AS price_cents
-        |  FROM base WHERE o_orderkey % 7 = 2
-        |  UNION ALL
-        |  SELECT o_orderkey + 107000000 AS o_orderkey, o_custkey, price_cents
-        |  FROM base WHERE o_orderkey % 13 = 1)
-        |SELECT o_orderkey, o_custkey, price_cents FROM src
-        |UNION ALL
-        |SELECT b.o_orderkey, b.o_custkey, b.price_cents FROM base b
-        |WHERE NOT EXISTS (SELECT 1 FROM src s
-        |                  WHERE s.o_orderkey = b.o_orderkey)""".stripMargin,
-
-    // q177 mirror: DELETE's survivors spelled with the explicit
-    // null-keeping disjunction — NULL scores are UNKNOWN under the
-    // predicate and must SURVIVE
-    "q177_delete_where" ->
-      """WITH base AS (
-        |  SELECT o_orderkey, o_custkey,
-        |    CASE WHEN o_orderkey % 11 = 0 THEN NULL
-        |         ELSE CAST(round(o_totalprice * 100) AS BIGINT) END AS score
-        |  FROM orders)
-        |SELECT o_orderkey, o_custkey, score FROM base
-        |WHERE score IS NULL OR NOT (score > 20000000)""".stripMargin,
-
-    // q178 mirror: the leader's v2 image DIRECTLY (q171's v2 CTE) —
-    // equality is the replication theorem: CDF-apply (merge + keyed
-    // delete) left the follower exactly at the leader's snapshot
-    "q178_cdc_replicate" ->
-      """WITH base AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents
-        |  FROM orders)
-        |SELECT o_orderkey, o_custkey,
-        |       CASE WHEN o_orderkey % 5 = 0 THEN price_cents + 100
-        |            ELSE price_cents END AS price_cents
-        |FROM base WHERE o_orderkey % 4 < 3 AND NOT (o_orderkey % 7 = 0)
-        |UNION ALL
-        |SELECT o_orderkey, o_custkey, price_cents
-        |FROM base WHERE o_orderkey % 4 = 3""".stripMargin,
-
-    // q179 mirror: the same aggregate straight off the parquet table —
-    // equality proves the avro round trip value-faithful (micros
-    // timestamps via unix_seconds ≡ date_diff('second', epoch, ts))
-    "q179_avro_pipeline" ->
-      """SELECT event_type,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents,
-        |  CAST(min(date_diff('second',
-        |    TIMESTAMP '1970-01-01 00:00:00', ts)) AS BIGINT) AS lo_s,
-        |  CAST(max(date_diff('second',
-        |    TIMESTAMP '1970-01-01 00:00:00', ts)) AS BIGINT) AS hi_s
-        |FROM events WHERE user_id < 400
-        |GROUP BY event_type""".stripMargin,
-
-    // q180 mirror: the straight recompute off the base table — the
-    // Spark side runs the MV-REWRITTEN plan (require()-proven), so
-    // equality is rewrite soundness
-    "q180_mv_rewrite" ->
-      """SELECT o_orderpriority,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-        |    AS BIGINT) AS cents,
-        |  CAST(min(CAST(round(o_totalprice * 100) AS BIGINT))
-        |    AS BIGINT) AS lo,
-        |  CAST(max(CAST(round(o_totalprice * 100) AS BIGINT))
-        |    AS BIGINT) AS hi
-        |FROM orders GROUP BY o_orderpriority""".stripMargin,
-
-    // q181 mirror: the direct recompute off the v2 image (q175's CTE
-    // plus min/max) — the Spark side runs refresh + rewrite, so
-    // equality composes refresh-soundness with rewrite-soundness,
-    // min/max facing real deletions
-    "q181_mv_refresh" ->
-      """WITH base AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents
-        |  FROM orders),
-        |v2 AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 5 = 0 THEN price_cents + 100
-        |              ELSE price_cents END AS price_cents
-        |  FROM base WHERE o_orderkey % 4 < 3 AND NOT (o_orderkey % 7 = 0)
-        |    AND NOT (o_custkey % 211 = 5)
-        |  UNION ALL
-        |  SELECT * FROM base
-        |  WHERE o_orderkey % 4 = 3 AND NOT (o_custkey % 211 = 5))
-        |SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders,
-        |       CAST(sum(price_cents) AS BIGINT) AS cents,
-        |       CAST(min(price_cents) AS BIGINT) AS lo,
-        |       CAST(max(price_cents) AS BIGINT) AS hi
-        |FROM v2 GROUP BY o_custkey""".stripMargin,
-
-    // q182 mirror: the straight relational pipeline — all three
-    // batches are the whole table (% 3 partitions the keys), the merge
-    // is an upsert CASE (the stratum's keys all pre-exist), the delete
-    // a filter; compaction and exactly-once ingest have no relational
-    // image, which is the point: they must be INVISIBLE to the rows
-    "q182_lakehouse_lifecycle" ->
-      """WITH base AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents
-        |  FROM orders),
-        |corrected AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 11 = 3 THEN price_cents + 700
-        |              ELSE price_cents END AS price_cents
-        |  FROM base),
-        |alive AS (
-        |  SELECT * FROM corrected WHERE NOT (o_orderkey % 13 = 6))
-        |SELECT o_custkey % 97 AS cohort,
-        |       CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(price_cents) AS BIGINT) AS cents,
-        |       CAST(min(o_orderkey) AS BIGINT) AS first_key
-        |FROM alive GROUP BY o_custkey % 97""".stripMargin,
-
-    // q184 mirror: identical text modulo the operator spelling —
-    // DuckDB's IS NOT DISTINCT FROM is Spark's <=>
-    "q184_nullsafe_join" ->
-      """WITH ev AS (
-        |  SELECT event_id,
-        |    CASE WHEN event_id % 9 = 0 THEN NULL
-        |         ELSE event_id % 5 END AS g
-        |  FROM events),
-        |dim AS (SELECT * FROM (VALUES
-        |  (0, 'grp_0'), (1, 'grp_1'), (2, 'grp_2'), (3, 'grp_3'),
-        |  (4, 'grp_4'), (NULL, 'grp_null')) AS t(g, label))
-        |SELECT 'eq' AS leg, label, CAST(count(*) AS BIGINT) AS n
-        |FROM ev JOIN dim ON ev.g = dim.g GROUP BY label
-        |UNION ALL
-        |SELECT 'ns' AS leg, label, CAST(count(*) AS BIGINT) AS n
-        |FROM ev JOIN dim ON ev.g IS NOT DISTINCT FROM dim.g
-        |GROUP BY label""".stripMargin,
-
-    // q185 mirror: IDENTICAL text modulo the view name — GROUP BY ALL
-    // is the same spelling in both engines (DuckDB pioneered it)
-    "q185_group_by_all" ->
-      """SELECT event_type, CAST(CAST(ts AS DATE) AS STRING) AS day,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-        |    AS cents
-        |FROM events
-        |GROUP BY ALL""".stripMargin,
-
-    // q186 mirror: the same aggregate straight off parquet — equality
-    // proves the fixed-width byte layout round-trips value-faithfully
-    "q186_fixed_width" ->
-      """SELECT event_type,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-        |    AS cents,
-        |  CAST(max(event_id) AS BIGINT) AS hi_id
-        |FROM events WHERE event_id % 2 = 0
-        |GROUP BY event_type""".stripMargin,
-
-    // q187 mirror: both snapshot images recomputed relationally —
-    // equality proves the SQL face resolves current AND versioned
-    // snapshots exactly (cents sums stay in BIGINT on both engines)
-    "q187_manifest_sql_face" ->
-      """WITH base AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents
-        |  FROM orders),
-        |cur AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 7 = 2 THEN price_cents + 5000
-        |              ELSE price_cents END AS price_cents
-        |  FROM base)
-        |SELECT c.o_custkey AS custkey,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(c.price_cents) AS BIGINT) AS cents_now,
-        |  CAST(sum(c.price_cents - p.price_cents) AS BIGINT) AS correction
-        |FROM cur c JOIN base p ON c.o_orderkey = p.o_orderkey
-        |WHERE c.o_custkey % 10 = 3
-        |GROUP BY c.o_custkey""".stripMargin,
-
-    // q188 mirror: all four MERGE outcomes spelled relationally —
-    // newer-wins updates, untouched matched stratum, condition-guarded
-    // by-source deletes, condition-guarded inserts
-    "q188_merge_full_sync" ->
-      """WITH base AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
-        |         o_orderkey % 3 AS ver
-        |  FROM orders)
-        |SELECT o_orderkey, o_custkey,
-        |  CASE WHEN ver < 2 THEN cents + 7777 ELSE cents END AS cents,
-        |  CASE WHEN ver < 2 THEN 2 ELSE ver END AS ver
-        |FROM base WHERE o_orderkey % 2 = 0
-        |UNION ALL
-        |SELECT o_orderkey, o_custkey, cents, ver FROM base
-        |WHERE o_orderkey % 2 = 1 AND ver <> 0
-        |UNION ALL
-        |SELECT o_orderkey + 207000000 AS o_orderkey, o_custkey, cents,
-        |       2 AS ver
-        |FROM base WHERE o_orderkey % 5 = 1 AND o_custkey % 2 = 0""".stripMargin,
-
-    // q189 mirror: the three MoR steps composed relationally — keyed
-    // delete, predicate delete, then the merge image src ⊎ (live ∖ keys)
-    "q189_deletion_vectors" ->
-      """WITH base AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders),
-        |live1 AS (
-        |  SELECT * FROM base WHERE NOT (o_orderkey % 9 = 4)),
-        |live2 AS (
-        |  SELECT * FROM live1
-        |  WHERE NOT (cents > 30000000 AND o_orderkey % 5 = 3)),
-        |src AS (
-        |  SELECT o_orderkey, o_custkey, cents + 11 AS cents
-        |  FROM base WHERE o_orderkey % 11 = 7)
-        |SELECT o_orderkey, o_custkey, cents FROM src
-        |UNION ALL
-        |SELECT l.o_orderkey, l.o_custkey, l.cents FROM live2 l
-        |WHERE NOT EXISTS (SELECT 1 FROM src s
-        |                  WHERE s.o_orderkey = l.o_orderkey)""".stripMargin,
-
-    // q190 mirror: the three SQL statements replayed relationally —
-    // CTAS image, appended feed, null-kept delete semantics, and the
-    // current-vs-v2 left join (inserted keys have NULL v2 cents)
-    "q190_catalog_sql" ->
-      """WITH base AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders),
-        |v2 AS (SELECT * FROM base WHERE o_orderkey % 4 < 3),
-        |v3 AS (
-        |  SELECT * FROM v2
-        |  UNION ALL
-        |  SELECT o_orderkey + 307000000, o_custkey, cents
-        |  FROM base WHERE o_orderkey % 10 = 9),
-        |cur AS (
-        |  SELECT * FROM v3
-        |  WHERE NOT (cents > 25000000 AND o_custkey % 7 = 3))
-        |SELECT c.o_custkey AS custkey,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(c.cents) AS BIGINT) AS cents_now,
-        |  CAST(sum(p.cents) AS BIGINT) AS cents_at_v2
-        |FROM cur c
-        |LEFT JOIN v2 p ON c.o_orderkey = p.o_orderkey
-        |WHERE c.o_custkey % 10 = 3
-        |GROUP BY c.o_custkey""".stripMargin,
-
-    // q191 mirror: the same global aggregates from the raw table —
-    // equality proves the manifest-served fold exact per type
-    "q191_manifest_agg" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n,
-        |  CAST(min(o_orderkey) AS BIGINT) AS k_lo,
-        |  CAST(max(o_orderkey) AS BIGINT) AS k_hi,
-        |  CAST(min(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |    AS c_lo,
-        |  CAST(max(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |    AS c_hi,
-        |  min(o_orderpriority) AS p_lo,
-        |  max(o_orderpriority) AS p_hi
-        |FROM orders""".stripMargin,
-
-    // q192 mirror: UPDATE then MERGE replayed relationally — note the
-    // merge's matched branch re-prices from the ORIGINAL cents (its
-    // source is the raw view), overriding the earlier UPDATE where the
-    // strata intersect
-    "q192_sql_update_merge" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS k, o_custkey AS c,
-        |         o_orderpriority AS p,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders),
-        |upd AS (
-        |  SELECT k, c, p,
-        |         CASE WHEN k % 6 = 1 AND p = '1-URGENT'
-        |              THEN cents + 99 ELSE cents END AS cents
-        |  FROM base),
-        |m AS (
-        |  SELECT u.k, u.c, u.p,
-        |         CASE WHEN u.k % 9 = 2 THEN b.cents - 77
-        |              ELSE u.cents END AS cents
-        |  FROM upd u JOIN base b ON u.k = b.k),
-        |fin AS (
-        |  SELECT * FROM m
-        |  UNION ALL
-        |  SELECT k + 407000000, c, '9-FEED', cents FROM base
-        |  WHERE k % 9 = 5)
-        |SELECT c AS custkey, p AS prio,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(cents) AS BIGINT) AS cents
-        |FROM fin WHERE c % 10 = 3
-        |GROUP BY c, p""".stripMargin,
-
-    // q193 mirror: the evolution lifecycle replayed relationally —
-    // rename = aliasing, drop+re-add = every prior row's flag NULLed
-    // (a resurrected dead id would inflate n_flag), the update spans
-    // all three generations
-    "q193_schema_evolution" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS k, o_custkey AS c,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders),
-        |v1 AS (
-        |  SELECT k, c, cents AS amount, k % 7 AS flag
-        |  FROM base WHERE k % 3 < 2),
-        |f1 AS (
-        |  SELECT k + 507000000 AS k, c, cents AS amount, k % 7 AS flag
-        |  FROM base WHERE k % 10 = 4),
-        |dropped AS (
-        |  SELECT k, c, amount, CAST(NULL AS BIGINT) AS flag FROM v1
-        |  UNION ALL
-        |  SELECT k, c, amount, CAST(NULL AS BIGINT) AS flag FROM f1),
-        |f2 AS (
-        |  SELECT k + 607000000 AS k, c, cents + 5 AS amount,
-        |         CAST(1 AS BIGINT) AS flag
-        |  FROM base WHERE k % 10 = 6),
-        |cur AS (
-        |  SELECT k, c,
-        |         CASE WHEN k % 11 = 3 THEN amount + 7 ELSE amount END
-        |           AS amount,
-        |         flag
-        |  FROM (SELECT * FROM dropped UNION ALL SELECT * FROM f2))
-        |SELECT c AS custkey, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(amount) AS BIGINT) AS amt,
-        |  CAST(count(flag) AS BIGINT) AS n_flag
-        |FROM cur WHERE c % 10 = 3
-        |GROUP BY c""".stripMargin,
-
-    // q194 mirror: main after the WAP cycle = base ∪ the PROMOTED
-    // feed; the dropped suspect feed contributes nothing
-    "q194_wap_branch" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS k, o_custkey AS c,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders),
-        |v1 AS (SELECT * FROM base WHERE k % 3 < 2),
-        |fa AS (
-        |  SELECT k + 707000000 AS k, c, cents + 3 AS cents
-        |  FROM base WHERE k % 10 = 1),
-        |cur AS (SELECT * FROM v1 UNION ALL SELECT * FROM fa)
-        |SELECT c AS custkey, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(cents) AS BIGINT) AS cents_sum
-        |FROM cur WHERE c % 10 = 3
-        |GROUP BY c""".stripMargin,
-
-    // q204 mirror: the CTAS image plus ONLY the cherry-picked feed —
-    // the dropped sibling commit must not leak
-    "q204_cherrypick" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS k, o_custkey AS c,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders),
-        |s1 AS (SELECT k, c, cents FROM base WHERE k % 3 < 2),
-        |fa AS (
-        |  SELECT k + 507000000 AS k, c, cents + 1 AS cents
-        |  FROM base WHERE k % 10 = 4),
-        |cur AS (SELECT * FROM s1 UNION ALL SELECT * FROM fa)
-        |SELECT c AS custkey, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(cents) AS BIGINT) AS cents_sum
-        |FROM cur WHERE c % 10 = 3
-        |GROUP BY c""".stripMargin,
-
-    // q203 mirror: the view text replayed against the final data —
-    // views must be pure name->text bindings
-    "q203_catalog_views" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS k, o_custkey AS c,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders),
-        |cur AS (
-        |  SELECT k, c, cents FROM base WHERE k % 3 < 2
-        |  UNION ALL
-        |  SELECT k + 507000000 AS k, c, cents + 1 AS cents
-        |  FROM base WHERE k % 10 = 4),
-        |by_cust AS (
-        |  SELECT c, count(*) AS n, sum(cents) AS cents_sum
-        |  FROM cur GROUP BY c),
-        |big AS (SELECT * FROM by_cust WHERE n >= 5)
-        |SELECT c AS custkey, CAST(n AS BIGINT) AS n,
-        |  CAST(cents_sum AS BIGINT) AS cents_sum
-        |FROM big WHERE c % 10 = 3""".stripMargin,
-
-    // q202 mirror: only the strata that must have landed — the CTAS
-    // image and the post-DROP negative feed; the rejected stratum is
-    // exactly what a broken enforcement would add
-    "q202_check_constraints" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS k, o_custkey AS c,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders),
-        |s1 AS (SELECT k, c, cents FROM base WHERE k % 3 < 2),
-        |s3 AS (
-        |  SELECT k + 607000000 AS k, c, -cents - 1 AS cents
-        |  FROM base WHERE k % 10 = 6),
-        |cur AS (SELECT * FROM s1 UNION ALL SELECT * FROM s3)
-        |SELECT c AS custkey, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(cents) AS BIGINT) AS cents_sum,
-        |  CAST(count(CASE WHEN cents < 0 THEN 1 END) AS BIGINT)
-        |    AS n_neg
-        |FROM cur WHERE c % 10 = 3
-        |GROUP BY c""".stripMargin,
-
-    // q201 mirror: the default lifecycle with the defaults spelled
-    // explicitly — stratum 1 reads the CREATE default + the ADD-time
-    // exists default, stratum 2 its explicit values, stratum 3 the
-    // post-SET current default; the UPDATE spans all three
-    "q201_column_defaults" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS k, o_custkey AS c,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders),
-        |s1 AS (
-        |  SELECT k, c, cents, 'seed' AS v, 'legacy' AS tag
-        |  FROM base WHERE k % 3 < 2),
-        |s2 AS (
-        |  SELECT k + 507000000 AS k, c, cents + 1 AS cents,
-        |         'new' AS v, 'fresh' AS tag
-        |  FROM base WHERE k % 10 = 4),
-        |s3 AS (
-        |  SELECT k + 607000000 AS k, c, cents, 'x' AS v, 'cur' AS tag
-        |  FROM base WHERE k % 10 = 6),
-        |cur AS (
-        |  SELECT k, c,
-        |         CASE WHEN c % 11 = 3 THEN cents + 5 ELSE cents END
-        |           AS cents,
-        |         v, tag
-        |  FROM (SELECT * FROM s1 UNION ALL SELECT * FROM s2
-        |        UNION ALL SELECT * FROM s3))
-        |SELECT tag, v, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(cents) AS BIGINT) AS cents_sum
-        |FROM cur GROUP BY tag, v""".stripMargin,
-
-    // q199 mirror: every commit's row-level delta replayed with
-    // literal change types and versions — v1 the no-file CREATE
-    // (nothing), v2 the TBLPROPERTIES commit (nothing), v3 the CTAS
-    // image, v4 the feed, v5/v6 the two MoR deletes' victims (the
-    // second applies to v5's survivors)
-    "q199_change_feed" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS k, o_custkey AS c,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders),
-        |v2 AS (SELECT k, c, cents FROM base WHERE k % 3 < 2),
-        |v3 AS (
-        |  SELECT k + 507000000 AS k, c, cents + 1 AS cents
-        |  FROM base WHERE k % 10 = 4),
-        |all1 AS (SELECT * FROM v2 UNION ALL SELECT * FROM v3),
-        |d4 AS (SELECT * FROM all1 WHERE c % 13 = 5),
-        |live4 AS (SELECT * FROM all1 WHERE NOT c % 13 = 5),
-        |d5 AS (SELECT * FROM live4 WHERE c % 13 = 6),
-        |changes AS (
-        |  SELECT 'insert' AS ctype, 3 AS v, cents FROM v2
-        |  UNION ALL SELECT 'insert', 4, cents FROM v3
-        |  UNION ALL SELECT 'delete', 5, cents FROM d4
-        |  UNION ALL SELECT 'delete', 6, cents FROM d5)
-        |SELECT ctype, CAST(v AS BIGINT) AS v,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(cents) AS BIGINT) AS cents_sum
-        |FROM changes GROUP BY ctype, v""".stripMargin,
-
-    // q200 mirror: every partition tuple recomputed relationally from
-    // the raw rows — the manifest's partitions rollup must agree with
-    // the data it indexes, rendered tuple names included
-    "q200_metadata_tables" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS k, o_custkey AS c, o_orderdate AS dt,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders),
-        |rows1 AS (
-        |  SELECT k, c, c % 5000 AS cm, dt, cents
-        |  FROM base WHERE k % 3 < 2
-        |  UNION ALL
-        |  SELECT k + 507000000 AS k, c, c % 5000 AS cm,
-        |         CAST(dt + INTERVAL 40 DAY AS DATE) AS dt,
-        |         cents + 9 AS cents
-        |  FROM base WHERE k % 10 = 4)
-        |SELECT 'months(dt)=' ||
-        |    CAST((year(dt) - 1970) * 12 + month(dt) - 1 AS VARCHAR) ||
-        |    '/truncate(2500, cm)=' ||
-        |    CAST(cm - ((cm % 2500 + 2500) % 2500) AS VARCHAR) AS part,
-        |  CAST(count(*) AS BIGINT) AS n_rows
-        |FROM rows1 GROUP BY 1""".stripMargin,
-
-    // q198 mirror: the lifecycle replayed with the old/new flag
-    // derived from PROVENANCE (which stratum a row came from) — the
-    // Spark side derives it from row IDS, so hash equality proves the
-    // ids survived the UPDATE, the DELETE's rewrite, and compaction
-    "q198_row_lineage" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS k, o_custkey AS c,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders),
-        |v2set AS (
-        |  SELECT k, c, cents, TRUE AS old FROM base WHERE k % 3 < 2),
-        |feed AS (
-        |  SELECT k + 507000000 AS k, c, cents + 9 AS cents,
-        |         FALSE AS old
-        |  FROM base WHERE k % 10 = 4),
-        |allr AS (SELECT * FROM v2set UNION ALL SELECT * FROM feed),
-        |upd AS (
-        |  SELECT k, c,
-        |         CASE WHEN k % 7 = 2 THEN cents + 11 ELSE cents END
-        |           AS cents,
-        |         old
-        |  FROM allr),
-        |cur AS (SELECT * FROM upd WHERE NOT (c % 11 = 4))
-        |SELECT c AS custkey, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CASE WHEN old THEN cents END) AS BIGINT)
-        |    AS cents_old,
-        |  CAST(count(CASE WHEN NOT old THEN 1 END) AS BIGINT) AS n_new
-        |FROM cur WHERE c % 10 = 3
-        |GROUP BY c""".stripMargin,
-
-    // q197 mirror: every commit's row-level delta replayed
-    // relationally with literal change types and versions — v1 is the
-    // no-file CREATE (contributes nothing), v2 the CTAS image, v3 the
-    // feed, v4 the merge (pre/post images via the identifier column,
-    // unmatched keys as inserts), v5 the delete's victims
-    "q197_changelog_view" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS k, o_custkey AS c,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders),
-        |v1set AS (SELECT k, c, cents FROM base WHERE k % 3 < 2),
-        |f3 AS (
-        |  SELECT k + 507000000 AS k, c, cents + 1 AS cents
-        |  FROM base WHERE k % 10 = 4),
-        |msrc AS (
-        |  SELECT k, c, cents - 7 AS cents FROM base WHERE k % 9 = 1
-        |  UNION ALL
-        |  SELECT k + 607000000 AS k, c, cents FROM base WHERE k % 9 = 5),
-        |pre4 AS (SELECT * FROM v1set UNION ALL SELECT * FROM f3),
-        |mpre AS (
-        |  SELECT t.* FROM pre4 t WHERE t.k IN (SELECT k FROM msrc)),
-        |mpost AS (
-        |  SELECT t.k, t.c, s.cents FROM pre4 t JOIN msrc s ON t.k = s.k),
-        |mins AS (
-        |  SELECT s.* FROM msrc s WHERE s.k NOT IN (SELECT k FROM pre4)),
-        |merged AS (
-        |  SELECT t.k, t.c,
-        |         CASE WHEN s.k IS NOT NULL THEN s.cents ELSE t.cents END
-        |           AS cents
-        |  FROM pre4 t LEFT JOIN msrc s ON t.k = s.k
-        |  UNION ALL SELECT * FROM mins),
-        |changes AS (
-        |  SELECT 'insert' AS ctype, 2 AS v, cents FROM v1set
-        |  UNION ALL SELECT 'insert', 3, cents FROM f3
-        |  UNION ALL SELECT 'update_preimage', 4, cents FROM mpre
-        |  UNION ALL SELECT 'update_postimage', 4, cents FROM mpost
-        |  UNION ALL SELECT 'insert', 4, cents FROM mins
-        |  UNION ALL SELECT 'delete', 5, cents FROM merged
-        |    WHERE c % 13 = 5)
-        |SELECT ctype, CAST(v AS BIGINT) AS v,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(cents) AS BIGINT) AS cents_sum
-        |FROM changes GROUP BY ctype, v""".stripMargin,
-
-    // q196 mirror: the nested-evolution lifecycle replayed with FLAT
-    // columns — nested rename = aliasing, nested drop+re-add = every
-    // prior row's tag NULLed (a resurrected dead id would inflate
-    // n_tag), the UPDATE spans all three generations
-    "q196_nested_lakehouse" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS k, o_custkey AS c,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders),
-        |v1 AS (
-        |  SELECT k, c, cents AS amount FROM base WHERE k % 3 < 2),
-        |f1 AS (
-        |  SELECT k + 507000000 AS k, c, cents AS amount
-        |  FROM base WHERE k % 10 = 4),
-        |dropped AS (
-        |  SELECT k, c, amount, CAST(NULL AS VARCHAR) AS tag FROM v1
-        |  UNION ALL
-        |  SELECT k, c, amount, CAST(NULL AS VARCHAR) AS tag FROM f1),
-        |f2 AS (
-        |  SELECT k + 607000000 AS k, c, cents + 5 AS amount,
-        |         'fresh' AS tag
-        |  FROM base WHERE k % 10 = 6),
-        |cur AS (
-        |  SELECT k, c,
-        |         CASE WHEN k % 11 = 3 THEN amount + 7 ELSE amount END
-        |           AS amount,
-        |         tag
-        |  FROM (SELECT * FROM dropped UNION ALL SELECT * FROM f2))
-        |SELECT c AS custkey, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(amount) AS BIGINT) AS amt,
-        |  CAST(count(tag) AS BIGINT) AS n_tag
-        |FROM cur WHERE c % 10 = 3
-        |GROUP BY c""".stripMargin,
-
-    // q195 mirror: the partition lifecycle replayed relationally —
-    // hidden partitioning and its evolution must be semantically
-    // invisible (layout is a pure optimization)
-    // q207 mirror: the CDC feed replayed relationally — per batch,
-    // delete-then-insert by key (a same-batch upsert wins over a
-    // same-batch delete, matching the sidecar-never-masks-own-batch
-    // semantics)
-    "q207_eq_upsert" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS k, o_custkey AS c,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders),
-        |p1 AS (SELECT k, c, cents FROM base WHERE k % 3 < 2),
-        |up AS (SELECT k, c, cents + 9 AS cents FROM base WHERE k % 10 = 4),
-        |del AS (SELECT k FROM base WHERE k % 13 = 5),
-        |s2 AS (
-        |  SELECT * FROM p1
-        |  WHERE k NOT IN (SELECT k FROM up)
-        |    AND k NOT IN (SELECT k FROM del)
-        |  UNION ALL SELECT * FROM up),
-        |re AS (
-        |  SELECT k, c, 77777 AS cents FROM base
-        |  WHERE k % 13 = 5 AND k % 2 = 0),
-        |s3 AS (
-        |  SELECT * FROM s2 WHERE k NOT IN (SELECT k FROM re)
-        |  UNION ALL SELECT * FROM re)
-        |SELECT c % 25 AS grp, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(cents) AS BIGINT) AS cents_sum
-        |FROM s3
-        |GROUP BY c % 25""".stripMargin,
-
-    // q206 mirror: identity values are engine-allocated, so the
-    // replay projects the deterministic facts only — n_ids == n (the
-    // uniqueness invariant) and the generated column's arithmetic
-    "q206_identity" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS k, o_custkey AS c,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders),
-        |rows_all AS (
-        |  SELECT c, cents FROM base WHERE k % 3 < 2
-        |  UNION ALL
-        |  SELECT c, cents + 9 AS cents FROM base WHERE k % 10 = 4)
-        |SELECT c % 25 AS grp, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(count(*) AS BIGINT) AS n_ids,
-        |  CAST(sum(cents % 97) AS BIGINT) AS mag_sum
-        |FROM rows_all
-        |GROUP BY c % 25""".stripMargin,
-
-    // q205 mirror: the two co-bucketed feeds replayed as plain
-    // relations — bucketing is layout, never semantics
-    "q205_spj" ->
-      """WITH fo AS (
-        |  SELECT o_orderkey AS k, o_custkey AS c,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders),
-        |fl AS (
-        |  SELECT l_orderkey AS k, CAST(l_quantity AS BIGINT) AS qty
-        |  FROM lineitem)
-        |SELECT fo.c AS custkey, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(fo.cents + fl.qty) AS BIGINT) AS v
-        |FROM fo JOIN fl ON fo.k = fl.k
-        |WHERE fo.c % 7 = 2
-        |GROUP BY fo.c""".stripMargin,
-
-    "q195_hidden_partitioning" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS k, o_custkey AS c, o_orderdate AS dt,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders),
-        |v1 AS (SELECT k, c, dt, cents FROM base WHERE k % 3 < 2),
-        |f2 AS (
-        |  SELECT k + 507000000 AS k, c,
-        |         CAST(dt + INTERVAL 3 DAY AS DATE) AS dt,
-        |         cents + 9 AS cents
-        |  FROM base WHERE k % 10 = 4),
-        |cur AS (
-        |  SELECT * FROM (SELECT * FROM v1 UNION ALL SELECT * FROM f2)
-        |  WHERE NOT (c % 13 = 5 AND dt >= DATE '1996-01-01'))
-        |SELECT c AS custkey, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(cents) AS BIGINT) AS cents_sum
-        |FROM cur
-        |WHERE dt >= DATE '1995-01-01' AND dt < DATE '1996-07-01'
-        |  AND c % 10 = 3
-        |GROUP BY c""".stripMargin,
-
-    // q174 mirror: one aggregate per check family, longhand — the
-    // Spark side's single-scan folding is a PLAN property
-    // (PlanAuditSpec), not a result property, so the oracle spells
-    // each count independently
-    "q174_quality_audit" ->
+    },
+      // q174 mirror: one aggregate per check family, longhand — the
+      // Spark side's single-scan folding is a PLAN property
+      // (PlanAuditSpec), not a result property, so the oracle spells
+      // each count independently
       """SELECT 'events.value_in_range' AS chk,
         |  CAST(sum(CASE WHEN NOT (value BETWEEN 0 AND 400)
         |    THEN 1 ELSE 0 END) AS BIGINT) AS n_bad,
@@ -4383,193 +4748,178 @@ object RelEntry {
         |  CAST((SELECT count(*) FROM lineitem
         |        WHERE l_orderkey NOT IN (SELECT o_orderkey FROM orders))
         |    AS BIGINT),
-        |  CAST(count(*) AS BIGINT) FROM lineitem""".stripMargin,
+        |  CAST(count(*) AS BIGINT) FROM lineitem""".stripMargin),
 
-    // q172 mirror: the NAIVE points × edges crossing sum — no grid, no
-    // bbox; the same integer ray-parity rule (exact DIV 4 keeps the
-    // truncate-vs-floor divergence dormant), so equality proves the
-    // grid candidate generation lossless
-    "q172_point_in_polygon" -> {
-      val edgeVals = PipDirs.zipWithIndex.map { case ((dx, dy), i) =>
-        val (ex, ey) = PipDirs((i + 1) % PipDirs.size)
-        s"($dx, $dy, $ex, $ey)"
-      }.mkString(", ")
-      s"""WITH pts AS (
-         |  SELECT c_custkey AS pid, (c_custkey * 48271) % 99991 AS px,
-         |         (c_custkey * 69621) % 99991 AS py FROM customer),
-         |polys AS (
-         |  SELECT CAST(n_nationkey AS BIGINT) AS poly_id,
-         |         (n_nationkey * 37199) % 90000 + 5000 AS cx,
-         |         (n_nationkey * 52711) % 90000 + 5000 AS cy,
-         |         3000 + (n_nationkey % 5) * 1500 AS r FROM nation),
-         |dirs(dx, dy, ex, ey) AS (VALUES $edgeVals),
-         |edges AS (
-         |  SELECT poly_id,
-         |         cx + (dx * r) // 4 AS x1, cy + (dy * r) // 4 AS y1,
-         |         cx + (ex * r) // 4 AS x2, cy + (ey * r) // 4 AS y2
-         |  FROM polys, dirs),
-         |par AS (
-         |  SELECT pid, poly_id,
-         |    sum(CASE WHEN (y1 > py) <> (y2 > py)
-         |          AND ((y2 > y1
-         |                AND (px - x1) * (y2 - y1) < (py - y1) * (x2 - x1))
-         |            OR (y2 < y1
-         |                AND (px - x1) * (y2 - y1) > (py - y1) * (x2 - x1)))
-         |        THEN 1 ELSE 0 END) AS k
-         |  FROM pts, edges GROUP BY pid, poly_id)
-         |SELECT pid, poly_id FROM par WHERE k % 2 = 1""".stripMargin
+    // ---- T73: point-in-polygon join (geofencing containment) ------------
+    Q("q172_point_in_polygon", (s, d) => {
+      // the containment member of the spatial tier over q163's point
+      // lattice: 25 deterministic octagon fences derived from nation
+      // keys by pure arithmetic both engines compute identically —
+      // center (k·37199 % 90000 + 5000, k·52711 % 90000 + 5000),
+      // radius 3000 + (k % 5)·1500 (always divisible by 4, so the
+      // (dir·r) DIV 4 vertex offsets are EXACT division and the
+      // truncate-vs-floor DIV divergence on negatives never fires).
+      // Spark runs the grid operator (bbox cell cover + one codegen'd
+      // ray-parity HOF per candidate — SpatialOps.pointInPolygonJoin);
+      // the DuckDB mirror runs the NAIVE points x edges crossing sum.
+      // Same answer; |pts|·|edges| vs cell-bounded candidates is the
+      // documented asymmetry. Grid ≡ brute force incl. non-convex and
+      // self-intersecting polygons is property-tested in GraftProps.
+      val pts = Tables.customer(s, d).select(
+        col("c_custkey").as("id"),
+        (col("c_custkey") * lit(48271L) % lit(99991L)).as("x"),
+        (col("c_custkey") * lit(69621L) % lit(99991L)).as("y"))
+      val vsExpr = PipDirs.map { case (dx, dy) =>
+        s"struct(CAST(cx + ($dx * r) DIV 4 AS BIGINT) AS x, " +
+          s"CAST(cy + ($dy * r) DIV 4 AS BIGINT) AS y)" }
+        .mkString("array(", ", ", ")")
+      val polys = Tables.nation(s, d).selectExpr(
+        "CAST(n_nationkey AS BIGINT) AS poly_id",
+        "(n_nationkey * 37199) % 90000 + 5000 AS cx",
+        "(n_nationkey * 52711) % 90000 + 5000 AS cy",
+        "3000 + (n_nationkey % 5) * 1500 AS r")
+        .selectExpr("poly_id", s"$vsExpr AS vs")
+      SpatialOps.pointInPolygonJoin(pts, polys, cell = 8192L)
     },
+      // q172 mirror: the NAIVE points × edges crossing sum — no grid, no
+      // bbox; the same integer ray-parity rule (exact DIV 4 keeps the
+      // truncate-vs-floor divergence dormant), so equality proves the
+      // grid candidate generation lossless
+      {
+        val edgeVals = PipDirs.zipWithIndex.map { case ((dx, dy), i) =>
+          val (ex, ey) = PipDirs((i + 1) % PipDirs.size)
+          s"($dx, $dy, $ex, $ey)"
+        }.mkString(", ")
+        s"""WITH pts AS (
+           |  SELECT c_custkey AS pid, (c_custkey * 48271) % 99991 AS px,
+           |         (c_custkey * 69621) % 99991 AS py FROM customer),
+           |polys AS (
+           |  SELECT CAST(n_nationkey AS BIGINT) AS poly_id,
+           |         (n_nationkey * 37199) % 90000 + 5000 AS cx,
+           |         (n_nationkey * 52711) % 90000 + 5000 AS cy,
+           |         3000 + (n_nationkey % 5) * 1500 AS r FROM nation),
+           |dirs(dx, dy, ex, ey) AS (VALUES $edgeVals),
+           |edges AS (
+           |  SELECT poly_id,
+           |         cx + (dx * r) // 4 AS x1, cy + (dy * r) // 4 AS y1,
+           |         cx + (ex * r) // 4 AS x2, cy + (ey * r) // 4 AS y2
+           |  FROM polys, dirs),
+           |par AS (
+           |  SELECT pid, poly_id,
+           |    sum(CASE WHEN (y1 > py) <> (y2 > py)
+           |          AND ((y2 > y1
+           |                AND (px - x1) * (y2 - y1) < (py - y1) * (x2 - x1))
+           |            OR (y2 < y1
+           |                AND (px - x1) * (y2 - y1) > (py - y1) * (x2 - x1)))
+           |        THEN 1 ELSE 0 END) AS k
+           |  FROM pts, edges GROUP BY pid, poly_id)
+           |SELECT pid, poly_id FROM par WHERE k % 2 = 1""".stripMargin
+      }),
 
-    // q171 mirror: the same two snapshot images derived relationally,
-    // diffed with EXCEPT ALL — deliberately oblivious to manifests and
-    // files; equality proves changesBetween returns exactly the
-    // logical bag diff
-    "q171_manifest_cdf" ->
-      """WITH base AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents
-        |  FROM orders),
-        |v1 AS (SELECT * FROM base WHERE o_orderkey % 4 < 3),
-        |v2 AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 5 = 0 THEN price_cents + 100
-        |              ELSE price_cents END AS price_cents
-        |  FROM base WHERE o_orderkey % 4 < 3 AND NOT (o_orderkey % 7 = 0)
+    // ---- T66: snapshot reconciliation (bucket-fingerprint table diff) ---
+    Q("q164_snapshot_diff", (s, d) => {
+      // the migration-sign-off / drift-detection operator: classify
+      // every row two snapshots disagree on WITHOUT full-outer-joining
+      // the snapshots — bucket fingerprints (count + Σ 60-bit md5
+      // digest, map-side-combinable, |buckets| output rows) locate the
+      // drifted key ranges, then only those buckets rescan into the
+      // row-level classify (ReconcileOps.snapshotDiff). The drifted
+      // snapshot v2 derives deterministically in-query so the oracle
+      // can mirror it: 200 deletions ([2000,2200)), 300 amendments
+      // ([5000,5300) priority rewritten), 50 inserts (keys +107e6,
+      // far above any ScaleBench replica stride) — drift LOCALIZED in
+      // the key space, so 5 of ~59 buckets mismatch (pruning pinned in
+      // ReconcileSpec). The DuckDB mirror runs the NAIVE form — full
+      // outer join of both entire snapshots on the key — same answer:
+      // a data-sized shuffle per side vs fingerprint partials + a
+      // drift-sized drill is the documented asymmetry. Canonical
+      // content renders engine-portably: cents as BIGINT (never
+      // double→string), epoch seconds (unix_seconds ≡ date_diff), and
+      // the md5 of identical strings is identical hex both engines.
+      val o = Tables.orders(s, d)
+      val v2 = o.filter(!col("o_orderkey").between(2000L, 2199L))
+        .withColumn("o_orderpriority",
+          when(col("o_orderkey").between(5000L, 5299L), lit("AMENDED"))
+            .otherwise(col("o_orderpriority")))
+        .unionByName(o.filter(col("o_orderkey").between(100L, 149L))
+          .withColumn("o_orderkey", col("o_orderkey") + lit(107000000L)))
+      def keyed(df: DataFrame) = df.select(
+        col("o_orderkey").as("k"),
+        concat_ws("|", col("o_custkey"), col("o_orderstatus"),
+          round(col("o_totalprice") * 100).cast("long"),
+          // NTZ parquet column → session-zoned (UTC) first; identity
+          // wall-clock, and unix_seconds requires TIMESTAMP
+          expr("unix_seconds(CAST(o_orderdate AS TIMESTAMP))"),
+          col("o_orderpriority")).as("canon"))
+      ReconcileOps.snapshotDiff(keyed(o), keyed(v2), bucketWidth = 256L)
+    },
+      // q164 mirror: the NAIVE form — full outer join of both ENTIRE
+      // snapshots on the key (a data-sized shuffle per side, every run,
+      // however small the drift); the Spark side's fingerprint partials
+      // + drift-sized drill produce the same rows
+      """WITH v2 AS (
+        |  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
+        |    o_orderdate,
+        |    CASE WHEN o_orderkey BETWEEN 5000 AND 5299 THEN 'AMENDED'
+        |         ELSE o_orderpriority END AS o_orderpriority
+        |  FROM orders WHERE o_orderkey NOT BETWEEN 2000 AND 2199
         |  UNION ALL
-        |  SELECT * FROM base WHERE o_orderkey % 4 = 3)
-        |SELECT o_orderkey, o_custkey, price_cents, 'add' AS change
-        |FROM (SELECT * FROM v2 EXCEPT ALL SELECT * FROM v1)
-        |UNION ALL
-        |SELECT o_orderkey, o_custkey, price_cents, 'remove' AS change
-        |FROM (SELECT * FROM v1 EXCEPT ALL SELECT * FROM v2)""".stripMargin,
+        |  SELECT o_orderkey + 107000000, o_custkey, o_orderstatus,
+        |    o_totalprice, o_orderdate, o_orderpriority
+        |  FROM orders WHERE o_orderkey BETWEEN 100 AND 149),
+        |a AS (
+        |  SELECT o_orderkey AS k, md5(concat_ws('|', o_orderkey,
+        |    o_custkey, o_orderstatus,
+        |    CAST(round(o_totalprice * 100) AS BIGINT),
+        |    date_diff('second', TIMESTAMP '1970-01-01 00:00:00',
+        |      o_orderdate),
+        |    o_orderpriority)) AS m
+        |  FROM orders),
+        |b AS (
+        |  SELECT o_orderkey AS k, md5(concat_ws('|', o_orderkey,
+        |    o_custkey, o_orderstatus,
+        |    CAST(round(o_totalprice * 100) AS BIGINT),
+        |    date_diff('second', TIMESTAMP '1970-01-01 00:00:00',
+        |      o_orderdate),
+        |    o_orderpriority)) AS m
+        |  FROM v2)
+        |SELECT coalesce(a.k, b.k) AS k,
+        |  CASE WHEN a.k IS NULL THEN 'added'
+        |       WHEN b.k IS NULL THEN 'removed'
+        |       ELSE 'changed' END AS status
+        |FROM a FULL JOIN b ON a.k = b.k
+        |WHERE a.k IS NULL OR b.k IS NULL OR a.m <> b.m""".stripMargin),
 
-    // q157 mirror: identical text modulo the view name
-    "q157_bag_setops" ->
-      """SELECT 'ia' AS op, event_type, CAST(count(*) AS BIGINT) AS n
-        |FROM (SELECT event_type FROM events WHERE value > 150
-        |      INTERSECT ALL
-        |      SELECT event_type FROM events WHERE user_id < 500)
-        |GROUP BY event_type
-        |UNION ALL
-        |SELECT 'ea' AS op, event_type, CAST(count(*) AS BIGINT) AS n
-        |FROM (SELECT event_type FROM events WHERE value > 150
-        |      EXCEPT ALL
-        |      SELECT event_type FROM events WHERE user_id < 500)
-        |GROUP BY event_type""".stripMargin,
-
-    // q158 mirror: identical text — which is the point: only the
-    // EXPLICIT NULLS FIRST/LAST spelling is portable (the engines'
-    // unannotated ascending defaults differ)
-    "q158_nulls_offset_page" ->
-      """WITH t AS (
-        |  SELECT event_id,
-        |    CASE WHEN event_id % 7 = 0 THEN NULL
-        |         ELSE CAST(round(value * 100) AS BIGINT) END AS score
-        |  FROM events WHERE event_id < 2000)
-        |SELECT 'nf' AS leg, event_id, score FROM (
-        |  SELECT event_id, score FROM t
-        |  ORDER BY score ASC NULLS FIRST, event_id LIMIT 40 OFFSET 80)
-        |UNION ALL
-        |SELECT 'nl' AS leg, event_id, score FROM (
-        |  SELECT event_id, score FROM t
-        |  ORDER BY score ASC NULLS LAST, event_id LIMIT 40 OFFSET 80)"""
-        .stripMargin,
-
-    // q156 mirror: same counts, the arg-min spelled as row_number (the
-    // tie-order equivalence), same interpolating median
-    "q156_median_mode" ->
-      """WITH cents AS (
-        |  SELECT event_type, user_id,
-        |         CAST(round(value * 100) AS BIGINT) AS c
-        |  FROM events),
-        |counts AS (
-        |  SELECT event_type, user_id, count(*) AS cnt
-        |  FROM cents GROUP BY event_type, user_id),
-        |md AS (
-        |  SELECT event_type, user_id AS mode_user, cnt AS mode_cnt,
-        |    row_number() OVER (PARTITION BY event_type
-        |                       ORDER BY cnt DESC, user_id) AS rn
-        |  FROM counts)
-        |SELECT c.event_type, median(c.c) AS med_cents,
-        |  md.mode_user, CAST(md.mode_cnt AS BIGINT) AS mode_cnt
-        |FROM cents c JOIN md
-        |  ON c.event_type = md.event_type AND md.rn = 1
-        |GROUP BY c.event_type, md.mode_user, md.mode_cnt""".stripMargin,
-
-    // q153 mirror: generate_series + unnest for the grid, IGNORE NULLS
-    // spelled inside the call (DuckDB's placement), same LOCF frame
-    "q153_gapfill_locf" ->
-      """WITH obs AS (
-        |  SELECT user_id, date_trunc('hour', ts) AS h,
-        |         max(CAST(round(value * 100) AS BIGINT)) AS cents
-        |  FROM events WHERE user_id < 50
-        |  GROUP BY user_id, date_trunc('hour', ts)),
-        |bounds AS (
-        |  SELECT user_id, min(h) AS lo, max(h) AS hi
-        |  FROM obs GROUP BY user_id),
-        |grid AS (
-        |  SELECT user_id, unnest(generate_series(lo, hi, INTERVAL 1 HOUR))
-        |    AS h
-        |  FROM bounds),
-        |filled AS (
-        |  SELECT g.user_id, g.h, o.cents,
-        |    last_value(o.cents IGNORE NULLS) OVER (
-        |      PARTITION BY g.user_id ORDER BY g.h
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS cents_locf
-        |  FROM grid g LEFT JOIN obs o
-        |    ON g.user_id = o.user_id AND g.h = o.h)
-        |SELECT user_id, count(*) AS n_slots,
-        |  count(cents) AS n_obs,
-        |  CAST(sum(cents_locf) AS BIGINT) AS locf_mass,
-        |  CAST(max(cents_locf) AS BIGINT) AS max_cents
-        |FROM filled GROUP BY user_id""".stripMargin,
-
-    // q154 mirror: string_agg with the ORDER BY inside the aggregate
-    // (DuckDB's spelling of WITHIN GROUP)
-    "q154_listagg" ->
-      """SELECT CAST(s_nationkey AS BIGINT) AS nationkey,
-        |  string_agg(CAST(s_suppkey AS VARCHAR), ','
-        |             ORDER BY s_suppkey) AS suppliers,
-        |  string_agg(DISTINCT CAST(s_suppkey % 7 AS VARCHAR), ','
-        |             ORDER BY CAST(s_suppkey % 7 AS VARCHAR))
-        |    AS mod_classes,
-        |  count(*) AS n_supp
-        |FROM supplier GROUP BY s_nationkey""".stripMargin,
-
-    // q155 mirror: identical text modulo the view name and DuckDB's
-    // two-argument GROUPING in place of grouping_id()
-    "q155_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-        |  count(*) AS n,
-        |  CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-        |                        (l_returnflag), (l_linestatus))"""
-        .stripMargin,
-
-    // q149 mirror: the wide matrix is rebuilt via FILTER counts with
-    // NULLIF(·, 0) — a pivot cell is NULL exactly when no rows of that
-    // type exist, which is when the FILTER count is 0 — then the SAME
-    // standard-SQL UNPIVOT text runs in DuckDB (EXCLUDE NULLS default
-    // in both engines; the dropped cells ARE the claim)
-    "q149_unpivot" ->
-      """WITH wide AS (
-        |  SELECT user_id,
-        |    NULLIF(count(*) FILTER (WHERE event_type = 'click'), 0)    AS click,
-        |    NULLIF(count(*) FILTER (WHERE event_type = 'error'), 0)    AS error,
-        |    NULLIF(count(*) FILTER (WHERE event_type = 'purchase'), 0) AS purchase,
-        |    NULLIF(count(*) FILTER (WHERE event_type = 'signup'), 0)   AS signup,
-        |    NULLIF(count(*) FILTER (WHERE event_type = 'view'), 0)     AS view
-        |  FROM events GROUP BY user_id)
-        |SELECT user_id, event_type, n FROM wide
-        |UNPIVOT (n FOR event_type IN
-        |  (click, error, purchase, signup, view))""".stripMargin,
-
-    // q147 mirror: the same recursion with DuckDB's // for DIV (both
-    // truncate identically on the non-negative keys here)
-    "q147_recursive_chain" ->
+    // ---- T48: recursive CTE (iterative in-engine computation) -----------
+    Q("q147_recursive_chain", (s, d) => {
+      // WITH RECURSIVE — new in Spark 4 (SPARK-24497) and the last
+      // big warehouse-SQL construct this surface lacked: hierarchy
+      // walks, BOM explosions, reachability. Here every supplier walks
+      // a synthetic parent chain (parent = key DIV 10 — a
+      // real-data-derived tree with depth = the key's digit count)
+      // down to the root, aggregating per-origin depth/length/ancestor
+      // sums — all-integer, so the hash compare pins the full
+      // recursion cross-engine (DuckDB runs the same recursion with //
+      // for DIV). Scale shape: the anchor and the step are ORDINARY
+      // distributed plans; the engine iterates the step until the
+      // frontier empties (UnionLoop), so total work is
+      // Σ_depth |frontier_d| — depth-bounded here (≤ digits), with
+      // per-iteration cost an equi-projection, never a driver loop
+      // (contrast q71's driver-side label propagation, which predates
+      // engine recursion and owns the convergence-test variant).
+      Tables.supplier(s, d).createOrReplaceTempView("graft_q147_supplier")
+      s.sql(
+        """WITH RECURSIVE chain(k, anc, depth) AS (
+          |  SELECT s_suppkey, s_suppkey, 0 FROM graft_q147_supplier
+          |  UNION ALL
+          |  SELECT k, anc DIV 10, depth + 1 FROM chain WHERE anc > 0)
+          |SELECT k AS s_suppkey, CAST(max(depth) AS BIGINT) AS depth_to_root,
+          |  CAST(count(*) AS BIGINT) AS chain_len,
+          |  CAST(sum(anc) AS BIGINT) AS anc_sum
+          |FROM chain GROUP BY k""".stripMargin)
+    },
+      // q147 mirror: the same recursion with DuckDB's // for DIV (both
+      // truncate identically on the non-negative keys here)
       """WITH RECURSIVE chain(k, anc, depth) AS (
         |  SELECT s_suppkey, s_suppkey, 0 FROM supplier
         |  UNION ALL
@@ -4577,11 +4927,38 @@ object RelEntry {
         |SELECT k AS s_suppkey, CAST(max(depth) AS BIGINT) AS depth_to_root,
         |  CAST(count(*) AS BIGINT) AS chain_len,
         |  CAST(sum(anc) AS BIGINT) AS anc_sum
-        |FROM chain GROUP BY k""".stripMargin,
+        |FROM chain GROUP BY k""".stripMargin),
 
-    // q146 mirror: identical text modulo the view name; the CASTs align
-    // Spark's INT rank outputs with DuckDB's BIGINT
-    "q146_rank_family" ->
+    // ---- T47: the ranking-function family under ties --------------------
+    Q("q146_rank_family", (s, d) => {
+      // rank / dense_rank / percent_rank / cume_dist / ntile in one
+      // query — the analytics surface q23's row_number only samples.
+      // The semantics worth pinning are TIE behavior: rank leaves gaps,
+      // dense_rank doesn't, percent_rank = (rank−1)/(n−1) and
+      // cume_dist = |peers ≤ x|/n are tie-deterministic BY DEFINITION
+      // (they depend only on the order key, so a non-unique ORDER BY is
+      // safe), while ntile SPLITS peers across tiles and is only
+      // deterministic over a unique order — hence the two WINDOW
+      // clauses, which is itself the teaching point. The two ratio
+      // columns are single IEEE divisions of exact integers —
+      // bit-identical cross-engine.
+      Tables.lineitem(s, d).createOrReplaceTempView("graft_q146_lineitem")
+      s.sql(
+        """SELECT l_orderkey, l_linenumber,
+          |  CAST(rank() OVER wt AS BIGINT) AS rnk,
+          |  CAST(dense_rank() OVER wt AS BIGINT) AS drnk,
+          |  percent_rank() OVER wt AS prnk,
+          |  cume_dist() OVER wt AS cdist,
+          |  CAST(ntile(4) OVER wu AS BIGINT) AS quartile
+          |FROM graft_q146_lineitem WHERE l_orderkey < 2000
+          |WINDOW
+          |  wt AS (PARTITION BY l_returnflag ORDER BY l_quantity),
+          |  wu AS (PARTITION BY l_returnflag
+          |         ORDER BY l_quantity, l_orderkey, l_linenumber)"""
+          .stripMargin)
+    },
+      // q146 mirror: identical text modulo the view name; the CASTs align
+      // Spark's INT rank outputs with DuckDB's BIGINT
       """SELECT l_orderkey, l_linenumber,
         |  CAST(rank() OVER wt AS BIGINT) AS rnk,
         |  CAST(dense_rank() OVER wt AS BIGINT) AS drnk,
@@ -4592,11 +4969,35 @@ object RelEntry {
         |WINDOW
         |  wt AS (PARTITION BY l_returnflag ORDER BY l_quantity),
         |  wu AS (PARTITION BY l_returnflag
-        |         ORDER BY l_quantity, l_orderkey, l_linenumber)""".stripMargin,
+        |         ORDER BY l_quantity, l_orderkey, l_linenumber)""".stripMargin),
 
-    // q145 mirror: identical WINDOW clause text — RANGE peers semantics
-    // is the cross-engine claim
-    "q145_range_frame" ->
+    // ---- T46: time-interval RANGE window frame --------------------------
+    Q("q145_range_frame", (s, d) => {
+      // The trailing-time-window idiom every monitoring/feature pipeline
+      // writes — "events and spend in the last hour, per user, at every
+      // event" — via a RANGE frame over event time (q58's running
+      // frames are ROWS frames; RANGE is the time-based member). The
+      // semantics worth pinning cross-engine: a RANGE frame includes
+      // ALL PEERS of the current ts, so ties contribute symmetrically
+      // and the result is deterministic under any tie order (a ROWS
+      // frame would depend on it — exactly why naive ports of this
+      // query go nondeterministic). Sum is integer cents. Scale: one
+      // hash exchange on user_id + per-partition sort — the frame
+      // bound evicts state at |events-in-window| per key, the same
+      // bounded-state story as the streaming watermark twin (q44).
+      Tables.events(s, d).createOrReplaceTempView("graft_q145_events")
+      s.sql(
+        """SELECT user_id, ts, event_id,
+          |  CAST(count(*) OVER w AS BIGINT) AS n_1h,
+          |  CAST(sum(CAST(round(value*100) AS BIGINT)) OVER w AS BIGINT)
+          |    AS cents_1h
+          |FROM graft_q145_events
+          |WINDOW w AS (PARTITION BY user_id ORDER BY ts
+          |             RANGE BETWEEN INTERVAL 1 HOUR PRECEDING
+          |                       AND CURRENT ROW)""".stripMargin)
+    },
+      // q145 mirror: identical WINDOW clause text — RANGE peers semantics
+      // is the cross-engine claim
       """SELECT user_id, ts, event_id,
         |  CAST(count(*) OVER w AS BIGINT) AS n_1h,
         |  CAST(sum(CAST(round(value*100) AS BIGINT)) OVER w AS BIGINT)
@@ -4604,11 +5005,30 @@ object RelEntry {
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts
         |             RANGE BETWEEN INTERVAL 1 HOUR PRECEDING
-        |                       AND CURRENT ROW)""".stripMargin,
+        |                       AND CURRENT ROW)""".stripMargin),
 
-    // q144 mirror: q52's shape with the direction flipped — min(c.ts)
-    // over c.ts >= p.ts is the earliest at-or-after match
-    "q144_asof_forward" ->
+    // ---- T39b: forward as-of join (merge_asof direction='forward') ------
+    Q("q144_asof_forward", (s, d) => {
+      // purchase → the NEXT click at-or-after it by the same user: the
+      // follow-up/response attribution read, completing the as-of
+      // direction pair (q52 backward, q133 backward+tolerance). Same
+      // join-free plan — one union, one window on the key — with the
+      // frame flipped to currentRow..following and `first` instead of
+      // `last`; equal-ts clicks match (>= semantics), pinned in
+      // TemporalOpsSpec.
+      val e = Tables.events(s, d)
+      val clicks = e.filter(col("event_type") === "click")
+        .groupBy(col("user_id"), col("ts"))
+        .agg(max(col("event_id")).as("click_id"))
+      val purchases = e.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("ts"), col("event_id"))
+      TemporalOps.asofJoin(purchases, clicks, "user_id", "ts",
+          forward = true)
+        .select(col("event_id"), col("user_id"), col("ts"),
+                col("asof_ts"), col("asof_click_id"))
+    },
+      // q144 mirror: q52's shape with the direction flipped — min(c.ts)
+      // over c.ts >= p.ts is the earliest at-or-after match
       """WITH c AS (SELECT user_id, ts, max(event_id) AS click_id
         |             FROM events WHERE event_type='click' GROUP BY 1, 2),
         |     p AS (SELECT user_id, ts, event_id
@@ -4620,620 +5040,25 @@ object RelEntry {
         |SELECT m.event_id, m.user_id, m.ts, m.asof_ts,
         |       c.click_id AS asof_click_id
         |  FROM m LEFT JOIN c
-        |    ON c.user_id = m.user_id AND c.ts = m.asof_ts""".stripMargin,
+        |    ON c.user_id = m.user_id AND c.ts = m.asof_ts""".stripMargin),
 
-    // q133 mirror: q52's shape with the age bound inside the LEFT JOIN
-    // condition — too-old matches fall to NULL, never to a dropped row
-    "q133_asof_tolerance" ->
-      s"""WITH c AS (SELECT user_id, ts, max(event_id) AS click_id
-         |             FROM events WHERE event_type='click' GROUP BY 1, 2),
-         |     p AS (SELECT user_id, ts, event_id
-         |             FROM events WHERE event_type='purchase'),
-         |     m AS (SELECT p.event_id, p.user_id, p.ts, max(c.ts) AS asof_ts
-         |             FROM p LEFT JOIN c
-         |               ON c.user_id = p.user_id AND c.ts <= p.ts
-         |              AND c.ts >= p.ts - INTERVAL $AsofTolSec SECOND
-         |            GROUP BY 1, 2, 3)
-         |SELECT m.event_id, m.user_id, m.ts, m.asof_ts,
-         |       c.click_id AS asof_click_id
-         |  FROM m LEFT JOIN c
-         |    ON c.user_id = m.user_id AND c.ts = m.asof_ts""".stripMargin,
-
-    "q53_range_join" ->
-      """SELECT a.event_id, count(*) AS n_neighbors
-        |  FROM events a JOIN events b
-        |    ON b.ts BETWEEN a.ts - INTERVAL 5 MINUTE
-        |               AND a.ts + INTERVAL 5 MINUTE
-        |   AND b.event_id <> a.event_id
-        | GROUP BY 1""".stripMargin,
-    "q54_rollup" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-        |       count(*) AS n
-        |  FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)""".stripMargin,
-    "q80_cube" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-        |       count(*) AS n,
-        |       CAST(GROUPING(l_returnflag) AS BIGINT) AS g_flag,
-        |       CAST(GROUPING(l_linestatus) AS BIGINT) AS g_status,
-        |       CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid
-        |  FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)""".stripMargin,
-    "q55_pivot" ->
-      """SELECT user_id,
-        |       count(*) FILTER (WHERE event_type = 'click')    AS click,
-        |       count(*) FILTER (WHERE event_type = 'error')    AS error,
-        |       count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
-        |       count(*) FILTER (WHERE event_type = 'signup')   AS signup,
-        |       count(*) FILTER (WHERE event_type = 'view')     AS view
-        |  FROM events GROUP BY user_id""".stripMargin,
-    "q56_sessionize" ->
-      """WITH t AS (
-        |  SELECT user_id, ts, event_id,
-        |         CASE WHEN lag(ts) OVER w IS NULL
-        |                OR ts - lag(ts) OVER w > INTERVAL 1 DAY
-        |              THEN 1 ELSE 0 END AS new_s
-        |    FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |g AS (
-        |  SELECT user_id,
-        |         sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                          ROWS UNBOUNDED PRECEDING) AS sid
-        |    FROM t),
-        |sess AS (SELECT user_id, sid, count(*) AS n FROM g GROUP BY 1, 2)
-        |SELECT user_id, count(*) AS n_sessions,
-        |       max(n) AS max_session_events,
-        |       CAST(sum(n) AS BIGINT) AS n_events
-        |  FROM sess GROUP BY 1""".stripMargin,
-    "q57_hash_split" ->
-      s"""SELECT lang,
-         |       CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2)
-         |                 < '$SplitHexHi'
-         |            THEN 'train' ELSE 'test' END AS split,
-         |       count(*) AS n_docs, min(doc_id) AS min_id,
-         |       max(doc_id) AS max_id
-         |  FROM documents GROUP BY 1, 2""".stripMargin,
-    "q58_running_total" ->
-      """SELECT l_orderkey, l_linenumber,
-        |       CAST(sum(CAST(l_quantity AS BIGINT))
-        |         OVER (PARTITION BY l_orderkey ORDER BY l_linenumber
-        |               ROWS UNBOUNDED PRECEDING) AS BIGINT) AS run_qty,
-        |       lead(l_linenumber, 1)
-        |         OVER (PARTITION BY l_orderkey ORDER BY l_linenumber)
-        |         AS next_line
-        |  FROM lineitem WHERE l_orderkey < 1000""".stripMargin,
-    "q63_collect_agg" ->
-      """SELECT CAST(user_id % 20 AS BIGINT) AS user_bucket,
-        |       string_agg(DISTINCT event_type, ',' ORDER BY event_type)
-        |         AS types_seen,
-        |       count(DISTINCT event_type) AS n_types,
-        |       max(value) AS max_value
-        |  FROM events GROUP BY 1""".stripMargin,
-    "q64_date_math" ->
-      """SELECT o_orderkey,
-        |       date_trunc('month', o_orderdate) AS order_month,
-        |       CAST(last_day(CAST(o_orderdate AS DATE)) AS TIMESTAMP)
-        |         AS month_end,
-        |       CAST(date_diff('day', CAST(o_orderdate AS DATE),
-        |                      DATE '1998-01-01') AS BIGINT) AS days_to_98,
-        |       CAST(CAST(o_orderdate AS DATE) + 30 AS TIMESTAMP) AS due_date,
-        |       CAST(quarter(o_orderdate) AS BIGINT) AS qtr
-        |  FROM orders WHERE o_orderkey < 500""".stripMargin,
-    "q65_keep_latest" ->
-      """SELECT user_id, event_type, event_id AS latest_event_id,
-        |       ts AS latest_ts, value AS latest_value
-        |  FROM (SELECT *, row_number() OVER (
-        |          PARTITION BY user_id, event_type
-        |          ORDER BY ts DESC, event_id DESC) AS rn
-        |          FROM events)
-        | WHERE rn = 1""".stripMargin,
-    "q73_cohort_retention" ->
-      """WITH f AS (SELECT user_id,
-        |             CAST(date_trunc('week', min(ts)) AS TIMESTAMP)
-        |               AS cohort
-        |             FROM events GROUP BY 1),
-        |a AS (SELECT DISTINCT user_id,
-        |        CAST(date_trunc('day', ts) AS TIMESTAMP) AS act_day
-        |        FROM events)
-        |SELECT f.cohort, a.act_day, count(DISTINCT a.user_id) AS n_users
-        |  FROM a JOIN f ON f.user_id = a.user_id
-        | GROUP BY 1, 2""".stripMargin,
-    "q74_histogram" ->
-      """SELECT event_type,
-        |       CAST(least(greatest(floor(value / 25.0), 0.0), 10.0)
-        |            AS BIGINT) AS bucket,
-        |       count(*) AS n
-        |  FROM events GROUP BY 1, 2""".stripMargin,
-    "q75_funnel" ->
-      """WITH v AS (SELECT user_id, min(ts) AS t_view FROM events
-        |           WHERE event_type = 'view' GROUP BY 1),
-        |c AS (SELECT e.user_id, min(e.ts) AS t_click FROM events e
-        |        JOIN v ON v.user_id = e.user_id AND e.ts >= v.t_view
-        |       WHERE e.event_type = 'click' GROUP BY 1),
-        |p AS (SELECT e.user_id, min(e.ts) AS t_buy FROM events e
-        |        JOIN c ON c.user_id = e.user_id AND e.ts >= c.t_click
-        |       WHERE e.event_type = 'purchase' GROUP BY 1)
-        |SELECT '1_view' AS stage, count(*) AS n_users FROM v
-        |UNION ALL SELECT '2_click', count(*) FROM c
-        |UNION ALL SELECT '3_purchase', count(*) FROM p""".stripMargin,
-    "q72_join_types" ->
-      """SELECT CASE WHEN c.c_custkey IS NULL THEN 'event_only'
-        |            WHEN e.user_id IS NULL THEN 'customer_only'
-        |            ELSE 'both' END AS side,
-        |       count(*) AS n
-        |  FROM customer c
-        |  FULL OUTER JOIN (SELECT DISTINCT user_id FROM events) e
-        |    ON e.user_id = c.c_custkey
-        | GROUP BY 1""".stripMargin,
-    "q78_map_funcs" ->
-      """WITH c AS (SELECT user_id, event_type, count(*) AS cnt
-        |             FROM events GROUP BY 1, 2),
-        |m AS (SELECT user_id, MAP(list(event_type), list(cnt)) AS m
-        |        FROM c GROUP BY 1)
-        |SELECT user_id,
-        |       map_extract(m, 'click')[1] AS clicks,
-        |       map_extract(m, 'purchase')[1] AS purchases,
-        |       CAST(cardinality(m) AS BIGINT) AS n_keys
-        |  FROM m""".stripMargin,
-    "q69_percentile" ->
-      """SELECT l_returnflag,
-        |       quantile_cont(l_quantity, 0.25) AS p25,
-        |       quantile_cont(l_quantity, 0.5) AS p50,
-        |       quantile_cont(l_quantity, 0.9) AS p90
-        |  FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "q70_window_ranks" ->
-      """SELECT o_orderkey, o_orderpriority,
-        |       CAST(rank() OVER w AS BIGINT) AS rnk,
-        |       CAST(dense_rank() OVER w AS BIGINT) AS drnk,
-        |       percent_rank() OVER w AS prnk,
-        |       cume_dist() OVER w AS cd,
-        |       CAST(ntile(4) OVER w AS BIGINT) AS quartile
-        |  FROM orders WHERE o_orderkey < 2000
-        |WINDOW w AS (PARTITION BY o_orderpriority
-        |             ORDER BY o_totalprice DESC, o_orderkey)""".stripMargin,
-    "q67_grouping_sets" ->
-      """SELECT event_type, user_bucket, count(*) AS cnt
-        |FROM (SELECT event_type, CAST(user_id % 10 AS BIGINT)
-        |        AS user_bucket FROM events)
-        |GROUP BY GROUPING SETS ((event_type), (user_bucket))""".stripMargin,
-    "q68_stats_agg" ->
-      """SELECT l_returnflag,
-        |       stddev_samp(l_quantity) AS sd_qty,
-        |       var_samp(l_quantity) AS var_qty,
-        |       avg(l_quantity) AS avg_qty,
-        |       count(*) AS n
-        |  FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "q66_topk_agg" ->
-      """SELECT l_returnflag,
-        |       string_agg(CAST(l_orderkey AS VARCHAR), ',' ORDER BY rn)
-        |         AS top_ids
-        |  FROM (SELECT l_returnflag, l_orderkey, row_number() OVER (
-        |          PARTITION BY l_returnflag
-        |          ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber)
-        |          AS rn
-        |          FROM lineitem)
-        | WHERE rn <= 3 GROUP BY 1""".stripMargin,
-    // q59_sketches: the raw sketch estimates are implementation-defined
-    // (HLL++ vs DuckDB's families differ), so the oracle checks the
-    // EXACT columns plus literal-true bound verdicts; the Spark side
-    // enforces those bounds in-plan via assert_true, making "1" the only
-    // value hll_ok/p50_ok can reach the sink with.
-    "q59_sketches" ->
-      """SELECT event_type,
-        |       count(DISTINCT user_id) AS exact_users,
-        |       count(*) AS n,
-        |       1 AS hll_ok,
-        |       1 AS p50_ok
-        |  FROM events GROUP BY 1""".stripMargin,
-
-    "q86_window_nav" ->
-      """SELECT user_id, event_id,
-        |  lag(value, 1, -1.0) OVER wo AS prev_v,
-        |  first_value(event_type) OVER w AS first_et,
-        |  nth_value(event_type, 2) OVER w AS second_et,
-        |  last_value(CASE WHEN event_type = 'purchase' THEN ts END
-        |    IGNORE NULLS) OVER w AS last_purchase_ts
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-        |             ROWS UNBOUNDED PRECEDING),
-        |       wo AS (PARTITION BY user_id ORDER BY ts, event_id)""".stripMargin,
-
-    "q87_conditional_aggs" ->
-      """SELECT event_type, count(*) AS n,
-        |  count(*) FILTER (WHERE value > 100) AS n_big,
-        |  bool_or(value > 200) AS any_huge,
-        |  bool_and(value >= 0) AS all_pos,
-        |  max_by(user_id, event_id) AS latest_user,
-        |  min_by(user_id, event_id) AS first_user
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    "q91_zorder" ->
-      s"""WITH r AS (SELECT min(user_id) AS ulo, max(user_id) AS uhi,
-         |                  min(value) AS vlo, max(value) AS vhi
-         |           FROM events),
-         |cells AS (
-         |  SELECT event_id,
-         |    ${LayoutOps.cellDuck("user_id", "ulo", "uhi", ZBits)} AS cx,
-         |    ${LayoutOps.cellDuck("value", "vlo", "vhi", ZBits)} AS cy
-         |  FROM events, r)
-         |SELECT event_id, cx, cy,
-         |  ${LayoutOps.interleaveDuck("cx", "cy", ZBits)} AS z
-         |FROM cells""".stripMargin,
-
-    // q108 mirror: same deletion-neighborhood band (unnest(range) in
-    // place of transform(sequence)) and the same levenshtein verify;
-    // min(key) per name pair keeps both engines deterministic even if
-    // a name were duplicated
-    "q108_fuzzy_join" ->
-      """WITH keys AS (
-        |  SELECT c_custkey AS key_id, c_name AS name FROM customer),
-        |deln AS (
-        |  SELECT key_id, name, unnest(range(0, length(name) + 1)) AS i
-        |  FROM keys),
-        |vars AS (
-        |  SELECT key_id, name,
-        |         CASE WHEN i = 0 THEN name
-        |              ELSE substr(name, 1, i - 1) || substr(name, i + 1)
-        |         END AS v
-        |  FROM deln)
-        |SELECT min(a.key_id) AS key_a, a.name AS name_a,
-        |       min(b.key_id) AS key_b, b.name AS name_b
-        |FROM vars a JOIN vars b ON a.v = b.v AND a.name < b.name
-        |WHERE levenshtein(a.name, b.name) <= 1
-        |GROUP BY a.name, b.name""".stripMargin,
-
-    // q112 mirror: the sketch columns never cross engines — only the
-    // exact twins do; merge_ok is the in-plan-asserted verdict (q59
-    // pattern), so a failed bound raises in Spark rather than
-    // hash-mismatching here
-    "q112_sketch_reagg" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |         count(DISTINCT user_id) AS day_users
-        |  FROM events GROUP BY 1, 2),
-        |exact AS (
-        |  SELECT event_type, count(DISTINCT user_id) AS exact_users
-        |  FROM events GROUP BY 1)
-        |SELECT d.event_type, e.exact_users, count(*) AS n_days,
-        |       CAST(sum(day_users) AS BIGINT) AS sum_day_users,
-        |       1 AS merge_ok
-        |FROM daily d JOIN exact e USING (event_type)
-        |GROUP BY d.event_type, e.exact_users""".stripMargin,
-
-    // q111 mirror: the q108 deletion band verbatim as the candidate CTE,
-    // then the same whole-bit rarity weights (format('{:b}', …) ≡ bin,
-    // // ≡ DIV) joined on the a-side value and scored only on agreement
-    "q111_record_linkage" ->
-      """WITH keys AS (
-        |  SELECT c_custkey AS key_id, c_name AS name FROM customer),
-        |deln AS (
-        |  SELECT key_id, name, unnest(range(0, length(name) + 1)) AS i
-        |  FROM keys),
-        |vars AS (
-        |  SELECT key_id, name,
-        |         CASE WHEN i = 0 THEN name
-        |              ELSE substr(name, 1, i - 1) || substr(name, i + 1)
-        |         END AS v
-        |  FROM deln),
-        |cand AS (
-        |  SELECT min(a.key_id) AS key_a, a.name AS name_a,
-        |         min(b.key_id) AS key_b, b.name AS name_b
-        |  FROM vars a JOIN vars b ON a.v = b.v AND a.name < b.name
-        |  WHERE levenshtein(a.name, b.name) <= 1
-        |  GROUP BY a.name, b.name),
-        |cust AS (
-        |  SELECT c_custkey AS key, c_nationkey AS nat, c_mktsegment AS seg,
-        |         CAST(floor(c_acctbal / 1000) AS BIGINT) AS band
-        |  FROM customer),
-        |n AS (SELECT count(*) AS n_all FROM cust),
-        |wnat AS (
-        |  SELECT nat, CAST(length(format('{:b}', n_all // cnt)) - 1 AS BIGINT) AS w_nat
-        |  FROM (SELECT nat, count(*) AS cnt FROM cust GROUP BY 1), n),
-        |wseg AS (
-        |  SELECT seg, CAST(length(format('{:b}', n_all // cnt)) - 1 AS BIGINT) AS w_seg
-        |  FROM (SELECT seg, count(*) AS cnt FROM cust GROUP BY 1), n),
-        |wband AS (
-        |  SELECT band, CAST(length(format('{:b}', n_all // cnt)) - 1 AS BIGINT) AS w_band
-        |  FROM (SELECT band, count(*) AS cnt FROM cust GROUP BY 1), n)
-        |SELECT c.key_a, c.name_a, c.key_b, c.name_b,
-        |  CAST(a.nat = b.nat AS BIGINT) AS nat_agree,
-        |  CAST(a.seg = b.seg AS BIGINT) AS seg_agree,
-        |  CAST(a.band = b.band AS BIGINT) AS band_agree,
-        |  (CASE WHEN a.nat = b.nat THEN wn.w_nat ELSE 0 END
-        |   + CASE WHEN a.seg = b.seg THEN ws.w_seg ELSE 0 END
-        |   + CASE WHEN a.band = b.band THEN wb.w_band ELSE 0 END) AS score
-        |FROM cand c
-        |JOIN cust a ON a.key = c.key_a
-        |JOIN cust b ON b.key = c.key_b
-        |JOIN wnat wn ON wn.nat = a.nat
-        |JOIN wseg ws ON ws.seg = a.seg
-        |JOIN wband wb ON wb.band = a.band""".stripMargin,
-
-    // q109 mirror: the fixed iteration horizon is what makes PageRank
-    // SQL-expressible — each round is one CTE pair (contribution sums,
-    // then damped update over the full node universe). Integer floor
-    // division (// here, DIV in Spark) keeps every rank a BIGINT.
-    "q109_pagerank" ->
-      s"""WITH pairs AS (
-         |  SELECT DISTINCT o_custkey * 2 AS a, l_suppkey * 2 + 1 AS b
-         |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-         |edges AS (SELECT a AS src, b AS dst FROM pairs
-         |          UNION ALL SELECT b AS src, a AS dst FROM pairs),
-         |deg AS (SELECT src AS id, count(*) AS deg FROM edges GROUP BY 1),
-         |r0 AS (SELECT id, CAST($PrScale AS BIGINT) AS pr FROM deg),
-         |s1 AS (SELECT e.dst AS id, sum(r.pr // d.deg) AS s
-         |       FROM r0 r JOIN deg d ON d.id = r.id
-         |       JOIN edges e ON e.src = r.id GROUP BY e.dst),
-         |r1 AS (SELECT d.id, CAST(${15L * PrScale / 100L} + (85 * coalesce(s1.s, 0)) // 100 AS BIGINT) AS pr
-         |       FROM deg d LEFT JOIN s1 ON s1.id = d.id),
-         |s2 AS (SELECT e.dst AS id, sum(r.pr // d.deg) AS s
-         |       FROM r1 r JOIN deg d ON d.id = r.id
-         |       JOIN edges e ON e.src = r.id GROUP BY e.dst),
-         |r2 AS (SELECT d.id, CAST(${15L * PrScale / 100L} + (85 * coalesce(s2.s, 0)) // 100 AS BIGINT) AS pr
-         |       FROM deg d LEFT JOIN s2 ON s2.id = d.id),
-         |s3 AS (SELECT e.dst AS id, sum(r.pr // d.deg) AS s
-         |       FROM r2 r JOIN deg d ON d.id = r.id
-         |       JOIN edges e ON e.src = r.id GROUP BY e.dst),
-         |r3 AS (SELECT d.id, CAST(${15L * PrScale / 100L} + (85 * coalesce(s3.s, 0)) // 100 AS BIGINT) AS pr
-         |       FROM deg d LEFT JOIN s3 ON s3.id = d.id)
-         |SELECT CASE WHEN id % 2 = 0 THEN 'customer' ELSE 'supplier' END AS node_type,
-         |       id // 2 AS node_key, pr
-         |FROM r3""".stripMargin,
-
-    // q104 mirror: islands form of session_window semantics — note >=
-    // (a gap of EXACTLY the window size starts a new session, unlike
-    // q56's strict >) and end = last event + gap
-    "q104_session_window" ->
-      s"""WITH t AS (
-         |  SELECT user_id, ts,
-         |         CASE WHEN lag(ts) OVER w IS NULL
-         |                OR ts - lag(ts) OVER w
-         |                   >= INTERVAL $SessionWindowGapSec SECOND
-         |              THEN 1 ELSE 0 END AS new_s
-         |    FROM events
-         |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-         |g AS (
-         |  SELECT user_id, ts,
-         |         sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-         |                          ROWS UNBOUNDED PRECEDING) AS sid
-         |    FROM t)
-         |SELECT user_id, min(ts) AS session_start,
-         |       max(ts) + INTERVAL $SessionWindowGapSec SECOND AS session_end,
-         |       count(*) AS n_events
-         |  FROM g GROUP BY user_id, sid""".stripMargin,
-
-    // q122 mirror: same islands → versions → validity-interval chain;
-    // IS DISTINCT FROM covers the first-row NULL lag exactly like the
-    // Spark side's isNull || =!= pair
-    "q122_scd2_build" ->
-      """WITH ordered AS (
-        |  SELECT user_id, ts, event_id, event_type,
-        |    CASE WHEN lag(event_type) OVER w IS DISTINCT FROM event_type
-        |         THEN 1 ELSE 0 END AS chg
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |versioned AS (
-        |  SELECT user_id, ts, event_type,
-        |    CAST(sum(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS version
-        |  FROM ordered),
-        |runs AS (
-        |  SELECT user_id, version, min(ts) AS valid_from,
-        |         min(event_type) AS attr, count(*) AS n_events
-        |  FROM versioned GROUP BY 1, 2)
-        |SELECT user_id, version, valid_from, attr, n_events,
-        |  lead(valid_from) OVER wv AS valid_to,
-        |  CAST(lead(valid_from) OVER wv IS NULL AS BIGINT) AS is_current
-        |FROM runs WINDOW wv AS (PARTITION BY user_id ORDER BY version)"""
-        .stripMargin,
-
-    // q134 mirror: identical integer sufficient statistics; every sum
-    // accumulates in HUGEINT (the mirror of Spark's cast-before-sum
-    // DECIMAL(38,0) — both exact 128-bit), the normal-equation products
-    // stay 128-bit, then one correctly-rounded cast to DOUBLE per
-    // reported statistic / operand, so every output column is
-    // bit-identical; the regr_slope cross-check is Spark-side only
-    // (engine double paths differ in the last ulp)
-    "q134_grouped_regression" ->
-      """WITH t AS (
-        |  SELECT event_type,
-        |    -- date_diff, NOT CAST(epoch(...)): epoch() returns
-        |    -- FRACTIONAL seconds and the cast rounds half-up where
-        |    -- Spark's unix_seconds truncates — a one-second x skew on
-        |    -- ~half the rows
-        |    CAST(date_diff('second', TIMESTAMP '2024-01-01 00:00:00', ts)
-        |      AS HUGEINT) AS x,
-        |    CAST(CAST(round(value * 100) AS BIGINT) AS HUGEINT) AS y
-        |  FROM events),
-        |s AS (
-        |  SELECT event_type, count(*) AS n,
-        |    sum(x) AS sxh, sum(y) AS syh,
-        |    sum(x * y) AS sxyh, sum(x * x) AS sxxh
-        |  FROM t GROUP BY 1),
-        |d AS (
-        |  SELECT event_type, n, sxh, syh, sxyh, sxxh,
-        |    CAST(CAST(n AS HUGEINT) * sxyh - sxh * syh AS DOUBLE)
-        |    / CAST(CAST(n AS HUGEINT) * sxxh - sxh * sxh AS DOUBLE) AS slope
-        |  FROM s)
-        |SELECT event_type, n,
-        |  CAST(sxh AS DOUBLE) AS sx, CAST(syh AS DOUBLE) AS sy,
-        |  CAST(sxyh AS DOUBLE) AS sxy, CAST(sxxh AS DOUBLE) AS sxx, slope,
-        |  (CAST(syh AS DOUBLE) - slope * CAST(sxh AS DOUBLE))
-        |    / CAST(n AS DOUBLE) AS intercept
-        |FROM d""".stripMargin,
-
-    // q135 mirror: q134's stats + Σy²; all sums HUGEINT, numerator exact
-    // 128-bit, then sqrt·sqrt division in the identical IEEE sequence
-    "q135_grouped_corr" ->
-      """WITH t AS (
-        |  SELECT event_type,
-        |    CAST(date_diff('second', TIMESTAMP '2024-01-01 00:00:00', ts)
-        |      AS HUGEINT) AS x,
-        |    CAST(CAST(round(value * 100) AS BIGINT) AS HUGEINT) AS y
-        |  FROM events),
-        |s AS (
-        |  SELECT event_type, count(*) AS n,
-        |    sum(x) AS sxh, sum(y) AS syh,
-        |    sum(x * y) AS sxyh, sum(x * x) AS sxxh, sum(y * y) AS syyh
-        |  FROM t GROUP BY 1)
-        |SELECT event_type, n, CAST(syyh AS DOUBLE) AS syy,
-        |  CAST(CAST(n AS HUGEINT) * sxyh - sxh * syh AS DOUBLE)
-        |  / (sqrt(CAST(CAST(n AS HUGEINT) * sxxh - sxh * sxh AS DOUBLE))
-        |     * sqrt(CAST(CAST(n AS HUGEINT) * syyh - syh * syh AS DOUBLE)))
-        |    AS corr_xy
-        |FROM s""".stripMargin,
-
-    // q131 mirror: the plain range scan — skipping is a physical
-    // device, never a semantic one (the q105 philosophy)
-    "q131_minmax_skipping" ->
-      s"""SELECT event_type, count(*) AS n,
-         |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
-         |FROM events WHERE value >= $SkipLo AND value <= $SkipHi
-         |GROUP BY 1""".stripMargin,
-
-    // q130 mirror: same day-partial → SUM-merge → integer-compare
-    // bucket selection; exact side is quantile_cont (bit-parity with
-    // Spark's percentile, proven on q69)
-    "q130_histogram_percentiles" ->
-      s"""WITH ev AS (
-         |  SELECT event_type, CAST(ts AS DATE) AS day, value FROM events),
-         |partials AS (
-         |  SELECT event_type, day,
-         |    least(${HistB - 1}, CAST(floor(value / $HistW) AS BIGINT))
-         |      AS bucket,
-         |    count(*) AS cnt
-         |  FROM ev GROUP BY 1, 2, 3),
-         |merged AS (
-         |  SELECT event_type, bucket, CAST(sum(cnt) AS BIGINT) AS cnt,
-         |         count(DISTINCT day) AS n_days
-         |  FROM partials GROUP BY 1, 2),
-         |cum AS (
-         |  SELECT event_type, bucket, cnt, n_days,
-         |    CAST(sum(cnt) OVER (PARTITION BY event_type ORDER BY bucket
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum,
-         |    CAST(sum(cnt) OVER (PARTITION BY event_type) AS BIGINT) AS n
-         |  FROM merged),
-         |ests AS (
-         |  SELECT event_type, max(n) AS n,
-         |    CAST(sum(n_days) AS BIGINT) AS day_parts,
-         |    (min(CASE WHEN cum * 100 >= n * 50 THEN bucket END) + 1)
-         |      * $HistW AS p50_est,
-         |    (min(CASE WHEN cum * 100 >= n * 90 THEN bucket END) + 1)
-         |      * $HistW AS p90_est,
-         |    (min(CASE WHEN cum * 100 >= n * 99 THEN bucket END) + 1)
-         |      * $HistW AS p99_est
-         |  FROM cum GROUP BY 1),
-         |exact AS (
-         |  SELECT event_type,
-         |    quantile_cont(value, 0.5) AS p50_exact,
-         |    quantile_cont(value, 0.9) AS p90_exact,
-         |    quantile_cont(value, 0.99) AS p99_exact
-         |  FROM ev GROUP BY 1)
-         |SELECT e.event_type, e.n, e.day_parts, e.p50_est, e.p90_est,
-         |       e.p99_est, x.p50_exact, x.p90_exact, x.p99_exact
-         |FROM ests e JOIN exact x USING (event_type)""".stripMargin,
-
-    // q129 mirror: q122's FULL RECOMPUTE verbatim — the incremental
-    // apply must be indistinguishable from rebuilding the history, the
-    // same oracle philosophy as q105's band (a physical device, never a
-    // semantic one)
-    "q129_scd2_incremental" ->
-      """WITH ordered AS (
-        |  SELECT user_id, ts, event_id, event_type,
-        |    CASE WHEN lag(event_type) OVER w IS DISTINCT FROM event_type
-        |         THEN 1 ELSE 0 END AS chg
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |versioned AS (
-        |  SELECT user_id, ts, event_type,
-        |    CAST(sum(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS version
-        |  FROM ordered),
-        |runs AS (
-        |  SELECT user_id, version, min(ts) AS valid_from,
-        |         min(event_type) AS attr, count(*) AS n_events
-        |  FROM versioned GROUP BY 1, 2)
-        |SELECT user_id, version, valid_from, attr, n_events,
-        |  lead(valid_from) OVER wv AS valid_to,
-        |  CAST(lead(valid_from) OVER wv IS NULL AS BIGINT) AS is_current
-        |FROM runs WINDOW wv AS (PARTITION BY user_id ORDER BY version)"""
-        .stripMargin,
-
-    // q123 mirror: generate_series grid × observed hourly integer-cents
-    // aggregate, forward fill via IGNORE NULLS; DuckDB's // is the same
-    // floor division as Spark's DIV on the non-negative cents here
-    "q123_gapfill_resample" ->
-      s"""WITH ev AS (
-         |  SELECT * FROM events
-         |  WHERE ts >= TIMESTAMP '$ResampleLo' AND ts <= TIMESTAMP '$ResampleHi'),
-         |obs AS (
-         |  SELECT event_type, date_trunc('hour', ts) AS slot,
-         |         count(*) AS n_obs_raw,
-         |         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
-         |  FROM ev GROUP BY 1, 2),
-         |grid AS (
-         |  SELECT event_type, unnest(generate_series(
-         |    TIMESTAMP '$ResampleLo', TIMESTAMP '$ResampleHi',
-         |    INTERVAL 1 HOUR)) AS slot
-         |  FROM (SELECT DISTINCT event_type FROM ev))
-         |SELECT g.event_type, g.slot,
-         |  coalesce(o.n_obs_raw, 0) AS n_obs,
-         |  CAST(o.n_obs_raw IS NULL AS BIGINT) AS is_gap,
-         |  last_value(o.cents // o.n_obs_raw IGNORE NULLS) OVER (
-         |    PARTITION BY g.event_type ORDER BY g.slot
-         |    ROWS UNBOUNDED PRECEDING) AS ff_avg_cents
-         |FROM grid g LEFT JOIN obs o
-         |  ON g.event_type = o.event_type AND g.slot = o.slot""".stripMargin,
-
-    // q136–q139 mirrors: the IDENTICAL subquery SQL (DuckDB decorrelates
-    // too) — the semantic claim is engine-independent subquery meaning,
-    // the plan claim (semi/anti/outer join, no per-row re-execution) is
-    // PlanAuditSpec's
-    "q136_subquery_exists" ->
-      s"""SELECT c_custkey, c_mktsegment FROM customer c
-         |WHERE EXISTS (SELECT 1 FROM orders o
-         |              WHERE o.o_custkey = c.c_custkey
-         |                AND o.o_totalprice > $SubqPriceHi)""".stripMargin,
-
-    "q137_subquery_not_exists" ->
-      s"""SELECT c_custkey, c_acctbal FROM customer c
-         |WHERE NOT EXISTS (SELECT 1 FROM orders o
-         |                  WHERE o.o_custkey = c.c_custkey
-         |                    AND o.o_totalprice > $SubqPriceHi)""".stripMargin,
-
-    "q138_subquery_scalar" ->
-      """SELECT c_custkey,
-        |  (SELECT max(o_totalprice) FROM orders o
-        |   WHERE o.o_custkey = c.c_custkey) AS max_price,
-        |  CAST((SELECT count(*) FROM orders o
-        |        WHERE o.o_custkey = c.c_custkey) AS BIGINT) AS n_orders
-        |FROM customer c WHERE c_custkey < 500""".stripMargin,
-
-    "q139_subquery_in" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |WHERE o_custkey IN (SELECT c_custkey FROM customer
-        |                    WHERE c_mktsegment = 'BUILDING')""".stripMargin,
-
-    "q141_subquery_not_in" ->
-      """SELECT 'clean' AS branch, count(*) AS n FROM orders
-        |WHERE o_custkey NOT IN (
-        |  SELECT c_custkey FROM customer
-        |  WHERE c_mktsegment = 'BUILDING')
-        |UNION ALL
-        |SELECT 'nullable' AS branch, count(*) AS n FROM orders
-        |WHERE o_custkey NOT IN (
-        |  SELECT CASE WHEN c_acctbal < 500 THEN NULL ELSE c_custkey END
-        |  FROM customer WHERE c_mktsegment = 'BUILDING')""".stripMargin,
-
-    "q142_lateral_topk" ->
-      """SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
-        |FROM customer c, LATERAL (
-        |  SELECT o_orderkey, o_totalprice FROM orders o
-        |  WHERE o.o_custkey = c.c_custkey
-        |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
-        |WHERE c.c_custkey < 300""".stripMargin,
-
-    "q143_lateral_left" ->
+    Q("q143_lateral_left", (s, d) => {
+      // LEFT JOIN LATERAL: customers keep a NULL-extended row when the
+      // lateral aggregate matches nothing — the outer-join face of
+      // decorrelation (count coalesces to 0 on no match, q138's trap,
+      // here through the FROM-clause spelling)
+      Tables.customer(s, d).createOrReplaceTempView("graft_q143_customer")
+      Tables.orders(s, d).createOrReplaceTempView("graft_q143_orders")
+      s.sql(
+        s"""SELECT c.c_custkey, t.n_hi, t.max_price
+           |FROM graft_q143_customer c LEFT JOIN LATERAL (
+           |  SELECT CAST(count(*) AS BIGINT) AS n_hi,
+           |         max(o_totalprice) AS max_price
+           |  FROM graft_q143_orders o
+           |  WHERE o.o_custkey = c.c_custkey
+           |    AND o.o_totalprice > $SubqPriceHi) t ON true
+           |WHERE c.c_custkey < 300""".stripMargin)
+    },
       s"""SELECT c.c_custkey, t.n_hi, t.max_price
          |FROM customer c LEFT JOIN LATERAL (
          |  SELECT CAST(count(*) AS BIGINT) AS n_hi,
@@ -5241,28 +5066,8 @@ object RelEntry {
          |  FROM orders o
          |  WHERE o.o_custkey = c.c_custkey
          |    AND o.o_totalprice > $SubqPriceHi) t ON true
-         |WHERE c.c_custkey < 300""".stripMargin,
-
-    // q124 mirror: the single-window textbook sweep line (the sharded
-    // form must be bit-identical to it — that IS the claim); sum casts
-    // back from DuckDB's HUGEINT
-    "q124_sweepline_concurrency" ->
-      """WITH deltas AS (
-        |  SELECT o_orderpriority AS prio, o_orderdate AS t,
-        |         CAST(1 AS BIGINT) AS delta, o_orderkey
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT o_orderpriority, o_orderdate + INTERVAL 90 DAY,
-        |         CAST(-1 AS BIGINT), o_orderkey
-        |  FROM orders),
-        |curve AS (
-        |  SELECT prio, t,
-        |    CAST(sum(delta) OVER (PARTITION BY prio
-        |      ORDER BY t, delta, o_orderkey
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS open
-        |  FROM deltas)
-        |SELECT prio, date_trunc('month', t) AS month,
-        |       max(open) AS max_open, count(*) AS n_changes
-        |FROM curve GROUP BY 1, 2""".stripMargin,
+         |WHERE c.c_custkey < 300""".stripMargin),
   )
+
+  private val ZBits = 8 // 256 cells per dimension → 16-bit z space
 }

@@ -26,25 +26,35 @@ object StreamEntry {
                       updateKeys: Seq[String] = Nil): DataFrame =
     EventStreams.runBounded(s, build, "stream", mode, updateKeys)
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q44_stream_hourly" -> ((s, d) =>
+  private[graft] def records: Seq[Q] = Seq(
+    Q("q44_stream_hourly", (s, d) =>
       // Event-time tumbling-window counts over the stream; Complete mode
       // because the bounded run ends before the watermark finalizes the
       // tail windows.
       bounded(s,
         ss => EventStreams.hourlyCounts(EventStreams.eventStream(ss, d)),
-        OutputMode.Complete())),
+        OutputMode.Complete()),
+      """SELECT CAST(hour(date_trunc('hour', ts)) AS BIGINT) AS hour,
+        |  date_trunc('hour', ts) AS window_start, count(*) AS cnt
+        |FROM events GROUP BY date_trunc('hour', ts)""".stripMargin),
 
-    "q45_stream_sessions" -> ((s, d) =>
+    Q("q45_stream_sessions", (s, d) =>
       // Custom per-user session state via flatMapGroupsWithState.
       // Update mode: the drain keeps each user's row from the latest
       // batch, so a multi-batch source split can't alias stale rows.
       bounded(s,
         ss => EventStreams.sessionize(ss, EventStreams.eventStream(ss, d),
           SessionGapNanos).toDF(),
-        OutputMode.Update(), updateKeys = Seq("user_id"))),
+        OutputMode.Update(), updateKeys = Seq("user_id")),
+      s"""SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
+         |  CAST(sum(CASE WHEN prev IS NULL OR ns - prev > $SessionGapNanos
+         |           THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions
+         |FROM (SELECT user_id, epoch_ns(ts) AS ns,
+         |        lag(epoch_ns(ts)) OVER (PARTITION BY user_id ORDER BY epoch_ns(ts)) AS prev
+         |      FROM events)
+         |GROUP BY user_id""".stripMargin),
 
-    "q79_stream_stream_join" -> ((s, d) =>
+    Q("q79_stream_stream_join", (s, d) =>
       // Stream-stream inner join with watermarks on BOTH sides and an
       // event-time band condition — the watermark + band bound the join
       // state retention (without them stream-stream state grows forever).
@@ -65,9 +75,15 @@ object StreamEntry {
             col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
             col("c_ts") <= col("p_ts"))
           .select(col("purchase_id"), col("click_id"), col("p_user"))
-      }, OutputMode.Append())),
+      }, OutputMode.Append()),
+      """SELECT p.event_id AS purchase_id, c.event_id AS click_id,
+        |       p.user_id AS p_user
+        |  FROM events p JOIN events c
+        |    ON c.user_id = p.user_id
+        |   AND c.ts BETWEEN p.ts - INTERVAL 1 HOUR AND p.ts
+        | WHERE p.event_type = 'purchase' AND c.event_type = 'click'""".stripMargin),
 
-    "q62_stream_enrich" -> ((s, d) =>
+    Q("q62_stream_enrich", (s, d) =>
       // Stream-static join: the unbounded stream enriched against a
       // broadcast batch dimension (the dim is re-snapshotted per
       // micro-batch — the streaming form of JN1's small×big join), then a
@@ -79,9 +95,12 @@ object StreamEntry {
           .join(broadcast(dim), col("user_id") === col("c_custkey"))
           .groupBy(col("c_nationkey").cast("long").as("nationkey"))
           .agg(count(lit(1)).as("cnt"))
-      }, OutputMode.Complete())),
+      }, OutputMode.Complete()),
+      """SELECT CAST(c.c_nationkey AS BIGINT) AS nationkey, count(*) AS cnt
+        |FROM events e JOIN customer c ON e.user_id = c.c_custkey
+        |GROUP BY 1""".stripMargin),
 
-    "q99_stream_dedup" -> ((s, d) =>
+    Q("q99_stream_dedup", (s, d) =>
       // Streaming deduplication (`dropDuplicatesWithinWatermark`) — the
       // streaming twin of incremental dedup (q90) and the retry-collapse
       // pass an event pipeline runs at ingest: one surviving row per
@@ -100,9 +119,11 @@ object StreamEntry {
               .withColumn("day", date_trunc("day", col("ts"))),
             Seq("user_id", "event_type", "day"), "60 days")
           .select(col("user_id"), col("event_type"), col("day"))
-      }, OutputMode.Append())),
+      }, OutputMode.Append()),
+      """SELECT DISTINCT user_id, event_type,
+        |  date_trunc('day', ts) AS day FROM events""".stripMargin),
 
-    "q140_stream_histogram_merge" -> ((s, d) => {
+    Q("q140_stream_histogram_merge", (s, d) => {
       // T40 → T37 end to end (VERDICT r13 task 7): the streaming
       // windowed value histogram EMITS per-(event_type, hour window,
       // bucket) integer partials; this query drains them bounded and
@@ -119,46 +140,11 @@ object StreamEntry {
           extraKeys = Seq("event_type")),
         OutputMode.Complete())
       RelEntry.histogramEsts(partials, "window_start", "win_parts")
-    }),
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q44_stream_hourly" ->
-      """SELECT CAST(hour(date_trunc('hour', ts)) AS BIGINT) AS hour,
-        |  date_trunc('hour', ts) AS window_start, count(*) AS cnt
-        |FROM events GROUP BY date_trunc('hour', ts)""".stripMargin,
-
-    "q45_stream_sessions" ->
-      s"""SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-         |  CAST(sum(CASE WHEN prev IS NULL OR ns - prev > $SessionGapNanos
-         |           THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions
-         |FROM (SELECT user_id, epoch_ns(ts) AS ns,
-         |        lag(epoch_ns(ts)) OVER (PARTITION BY user_id ORDER BY epoch_ns(ts)) AS prev
-         |      FROM events)
-         |GROUP BY user_id""".stripMargin,
-
-    "q62_stream_enrich" ->
-      """SELECT CAST(c.c_nationkey AS BIGINT) AS nationkey, count(*) AS cnt
-        |FROM events e JOIN customer c ON e.user_id = c.c_custkey
-        |GROUP BY 1""".stripMargin,
-
-    "q79_stream_stream_join" ->
-      """SELECT p.event_id AS purchase_id, c.event_id AS click_id,
-        |       p.user_id AS p_user
-        |  FROM events p JOIN events c
-        |    ON c.user_id = p.user_id
-        |   AND c.ts BETWEEN p.ts - INTERVAL 1 HOUR AND p.ts
-        | WHERE p.event_type = 'purchase' AND c.event_type = 'click'""".stripMargin,
-
-    "q99_stream_dedup" ->
-      """SELECT DISTINCT user_id, event_type,
-        |  date_trunc('day', ts) AS day FROM events""".stripMargin,
-
-    // q140 mirror: the same partial → SUM-merge → integer-compare
-    // estimate chain as q130's oracle, with hour windows as the partial
-    // key (stream window.start ≡ date_trunc('hour', ts) for tumbling
-    // 1-hour windows — pinned by StreamingSpec's T40 contract)
-    "q140_stream_histogram_merge" ->
+    },
+      // q140 mirror: the same partial → SUM-merge → integer-compare
+      // estimate chain as q130's oracle, with hour windows as the partial
+      // key (stream window.start ≡ date_trunc('hour', ts) for tumbling
+      // 1-hour windows — pinned by StreamingSpec's T40 contract)
       """WITH ev AS (
         |  SELECT event_type, date_trunc('hour', ts) AS ws, value FROM events),
         |partials AS (
@@ -184,6 +170,6 @@ object StreamEntry {
         |    * 4.0 AS p90_est,
         |  (min(CASE WHEN cum * 100 >= n * 99 THEN bucket END) + 1)
         |    * 4.0 AS p99_est
-        |FROM cum GROUP BY 1""".stripMargin,
+        |FROM cum GROUP BY 1""".stripMargin),
   )
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.{BBox, TimeRange}
+import graft.core.BBox
 
 /** Relational operators covering the reference's inventory (SURVEY.md §2),
   * re-expressed as pure, composable DataFrame transforms.
@@ -27,18 +27,6 @@ object TrafficOps {
   def bboxFilter(df: DataFrame, x: String, y: String, box: BBox): DataFrame =
     df.filter(col(x).between(box.xLo, box.xHi) &&
               col(y).between(box.yLo, box.yHi))
-
-  /** F1: closed [lo, hi] time range (ref BETWEEN,
-    * `src/AccidentStatistics.scala:102`).
-    */
-  def timeRangeClosed(df: DataFrame, ts: String, r: TimeRange): DataFrame =
-    df.filter(col(ts).between(lit(r.lo).cast("timestamp"),
-                              lit(r.hi).cast("timestamp")))
-
-  /** F2: half-open [lo, hi) time range (ref `src/AverageSpeed.scala:202`). */
-  def timeRangeHalfOpen(df: DataFrame, ts: String, r: TimeRange): DataFrame =
-    df.filter(col(ts) >= lit(r.lo).cast("timestamp") &&
-              col(ts) <  lit(r.hi).cast("timestamp"))
 
   // ---- Joins (SURVEY §2.5) ---------------------------------------------
 
@@ -182,14 +170,5 @@ object TrafficOps {
   def hourlyCount(df: DataFrame, bucket: Column, extra: Column*): DataFrame = {
     val keys = bucket.as("time_period") +: extra
     df.groupBy(keys: _*).agg(count(lit(1)).as("cnt"))
-  }
-
-  /** A2: AVG(speed) grouped by an hour-like bucket
-    * (ref `src/AverageSpeed.scala:112-115`).
-    */
-  def hourlyAvg(df: DataFrame, bucket: Column, value: Column,
-                extra: Column*): DataFrame = {
-    val keys = bucket.as("time_period") +: extra
-    df.groupBy(keys: _*).agg(avg(value).as("avg_value"))
   }
 }

@@ -690,15 +690,6 @@ object ManifestedTable {
   private def epochTokenOf(meta: Map[String, String]): Option[String] =
     meta.get(FieldEpochsKey).map(e => s"se:${decodeEpochs(e).size - 1}")
 
-  /** The `se:` token staged lines carry under the target LINEAGE's
-    * current epoch (a branch forks its schema history at fork time;
-    * ALTERs land on main) — None when the table has no field-id
-    * history.
-    */
-  private def epochToken(fs: FileSystem, root: Path,
-      branch: Option[String] = None): Option[String] =
-    epochTokenOf(headMetaOf(fs, root, branch))
-
   private def stampEpoch(lines: Seq[String],
       tok: Option[String]): Seq[String] =
     tok.fold(lines)(t => lines.map(l => s"$l\t$t"))
@@ -1489,8 +1480,6 @@ object ManifestedTable {
     resolveDataLines(fs, root, vs.toMap, v).map(parseEntry)
   }
 
-
-  private[sources] def pathOfLine(line: String): String = pathOf(line)
   private[sources] def parseLine(line: String): (String, FileStats) =
     parseEntry(line)
 
@@ -2045,15 +2034,6 @@ object ManifestedTable {
         OpKey -> "set-partition-spec"),
       metaGuard = guard)
   }
-
-  /** The spec history (conf-parameterized, pinned version optional) —
-    * the scan faces' pruning input.
-    */
-  private[sources] def partitionSpecsAt(
-      conf: org.apache.hadoop.conf.Configuration, dir: String,
-      version: Option[Long]): Seq[Seq[ManifestPartitions.PartTransform]] =
-    ManifestPartitions.decodeSpecs(
-      snapshotMeta(conf, dir, version).get(ManifestPartitions.SpecsKey))
 
   /** Publish `df` as the table's next snapshot. `overwrite = false`
     * appends: the new snapshot = previous files ++ staged files. The

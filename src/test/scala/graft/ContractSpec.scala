@@ -1,12 +1,12 @@
 package graft
 
-/** Guards the driver-facing contract: EVERY query has an oracle (since
-  * r11 even q59 — its sketch estimates are engine-specific, but its
-  * exact columns and in-plan-enforced bound verdicts are oracle-checked,
-  * so no null row remains in the round artifact), no oracle SQL is
-  * orphaned, and the four query maps never shadow each other's keys
-  * (Map ++ overwrites silently — a duplicate key would make a query
-  * vanish from the driver's loop without any error).
+/** Guards the driver-facing contract: every query is one registry record
+  * that carries its own oracle SQL (since r11 even q59 — its sketch
+  * estimates are engine-specific, but its exact columns and
+  * in-plan-enforced bound verdicts are oracle-checked, so no null row
+  * remains in the round artifact), and no name appears twice in the
+  * merged registry (a duplicate would make a query vanish from the
+  * driver's loop without any error).
   */
 class ContractSpec extends SparkTestBase {
 
@@ -35,30 +35,26 @@ class ContractSpec extends SparkTestBase {
       ev.filter(col("props").isNull).count(), m.toString)
   }
 
-  test("query and oracle maps line up (every query is oracle-checked)") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert((o -- q).isEmpty, s"oracle SQL without a query: ${o -- q}")
-    assert((q -- o).isEmpty, s"queries without oracle: ${q -- o}")
-  }
-
-  test("no key shadowing across the four query maps") {
-    val maps = Seq(
-      "SparkEntry.base" -> SparkEntry.baseQueries.keySet,
-      "LlmEntry" -> LlmEntry.queries.keySet,
-      "StreamEntry" -> StreamEntry.queries.keySet,
-      "RelEntry" -> RelEntry.queries.keySet)
-    for {
-      (na, a) <- maps; (nb, b) <- maps if na < nb
-    } assert((a & b).isEmpty, s"$na and $nb share keys: ${a & b}")
-    // sizes must add up — Map ++ would silently drop a shadowed key
-    assert(SparkEntry.queries.size === maps.map(_._2.size).sum)
+  test("the merged registry names each query once, densely numbered") {
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.distinct.size === names.size,
+      s"duplicate names: ${names.diff(names.distinct)}")
+    // the derived maps hold one entry per record
+    assert(SparkEntry.queries.size === names.size)
+    assert(SparkEntry.oracleSql.size === names.size)
     // and the merged numbering is dense 1..N (catches duplicate numbers
     // under different suffixes too)
     val ids = SparkEntry.queries.keySet.map(_.drop(1).takeWhile(_.isDigit).toInt)
     assert(ids === (1 to SparkEntry.queries.size).toSet,
       s"query numbering not dense 1..${SparkEntry.queries.size}: " +
         ((1 to SparkEntry.queries.size).toSet -- ids).mkString(","))
+  }
+
+  test("a registry that names a query twice is rejected when it is built") {
+    val q = SparkEntry.registry.head
+    val err = intercept[IllegalArgumentException](
+      SparkEntry.checked(Seq(q, q.copy(oracle = "SELECT 1"))))
+    assert(err.getMessage.contains(q.name), err.getMessage)
   }
 
   test("query names follow the driver's qNN_ naming and are well-formed") {
