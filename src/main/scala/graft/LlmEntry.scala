@@ -3255,35 +3255,6 @@ object LlmEntry {
       }),
   )
 
-  /** q106 plan builder, un-detached so PlanAuditSpec can assert the
-    * physical shape (Materialize.detached hides the plan behind an
-    * ExistingRDD scan). Returns (plan, release-upstream-caches).
-    *
-    * BM25 lexical "more-like-this" retrieval — the standard lexical
-    * ranking baseline a curation pipeline runs beside the embedding
-    * retrievers (q38/q103): each probe doc's top-TfidfK terms (q84's
-    * rank-stable tf·N/df selection) become a query; every doc sharing
-    * a query term is BM25-scored against it. Made bit-exact the way
-    * q101/q102 are:
-    *  - idf in WHOLE BITS: floor(log2((N−df+0.5)/(df+0.5))) =
-    *    length(bin((2N−2df+1) DIV (2df+1))) − 1 — the BM25 idf ratio
-    *    scaled by 2 into pure BIGINT arithmetic; quotient 0 (df>N/2)
-    *    gives 0 bits, i.e. stop-terms contribute nothing (the Lucene
-    *    negative-idf floor, integer-exact).
-    *  - tf normalization k1=1.2, b=0.75: 0.25 and 0.75 are
-    *    binary-exact, 1.2/2.2 parse to the same nearest-double in
-    *    both engines, and *,+,/ are correctly-rounded IEEE ops in an
-    *    identical sequence → per-term scores are bit-identical.
-    *  - the cross-term sum is an order-pinned fold (q102):
-    *    array_sort then left-fold, mirrored by list_sort+list_reduce.
-    * Scale shape: ONE corpus-wide shuffle builds tf (reused thrice —
-    * persist, the q84 discipline); df is counted only for probe-term
-    * candidates (map-side broadcast prune BEFORE the agg shuffle);
-    * the corpus joins the ≤ ProbeN·TfidfK query terms by broadcast;
-    * the dl join is unhinted (AQE decides); N/avgdl ride a broadcast
-    * scalar; top-k is a rank-filtered window (WindowGroupLimit trims
-    * map-side).
-    */
   /** q118's plan over an explicit corpus (EdgeCaseSpec: disjoint
     * sources, identical sources, sub-shingle docs).
     */
@@ -3312,9 +3283,6 @@ object LlmEntry {
     (out, () => ss.unpersist(blocking = false))
   }
 
-  /** q114's plan over an explicit corpus (EdgeCaseSpec feeds degenerate
-    * docs through the same plan). Returns (plan, release-caches).
-    */
   /** q132's plan over an explicit documents table (LlmOpsSpec feeds a
     * corpus with a planted token-scrambled doc through it — same words,
     * broken transitions: the case q101 passes and this flags). Returns
@@ -3361,6 +3329,9 @@ object LlmEntry {
     (out, () => pair.unpersist(blocking = false))
   }
 
+  /** q114's plan over an explicit corpus (EdgeCaseSpec feeds degenerate
+    * docs through the same plan). Returns (plan, release-caches).
+    */
   private[graft] def pmiPlanOn(docs: DataFrame): (DataFrame, () => Unit) = {
     val tk = docs
       .select(expr(tokensSpark("text")).as("tk"))
@@ -3448,6 +3419,35 @@ object LlmEntry {
         (col("est_cnt") - col("true_cnt")).as("overcount"))
   }
 
+  /** q106 plan builder, un-detached so PlanAuditSpec can assert the
+    * physical shape (Materialize.detached hides the plan behind an
+    * ExistingRDD scan). Returns (plan, release-upstream-caches).
+    *
+    * BM25 lexical "more-like-this" retrieval — the standard lexical
+    * ranking baseline a curation pipeline runs beside the embedding
+    * retrievers (q38/q103): each probe doc's top-TfidfK terms (q84's
+    * rank-stable tf·N/df selection) become a query; every doc sharing
+    * a query term is BM25-scored against it. Made bit-exact the way
+    * q101/q102 are:
+    *  - idf in WHOLE BITS: floor(log2((N−df+0.5)/(df+0.5))) =
+    *    length(bin((2N−2df+1) DIV (2df+1))) − 1 — the BM25 idf ratio
+    *    scaled by 2 into pure BIGINT arithmetic; quotient 0 (df>N/2)
+    *    gives 0 bits, i.e. stop-terms contribute nothing (the Lucene
+    *    negative-idf floor, integer-exact).
+    *  - tf normalization k1=1.2, b=0.75: 0.25 and 0.75 are
+    *    binary-exact, 1.2/2.2 parse to the same nearest-double in
+    *    both engines, and *,+,/ are correctly-rounded IEEE ops in an
+    *    identical sequence → per-term scores are bit-identical.
+    *  - the cross-term sum is an order-pinned fold (q102):
+    *    array_sort then left-fold, mirrored by list_sort+list_reduce.
+    * Scale shape: ONE corpus-wide shuffle builds tf (reused thrice —
+    * persist, the q84 discipline); df is counted only for probe-term
+    * candidates (map-side broadcast prune BEFORE the agg shuffle);
+    * the corpus joins the ≤ ProbeN·TfidfK query terms by broadcast;
+    * the dl join is unhinted (AQE decides); N/avgdl ride a broadcast
+    * scalar; top-k is a rank-filtered window (WindowGroupLimit trims
+    * map-side).
+    */
   private[graft] def bm25Plan(s: SparkSession, d: String)
       : (DataFrame, () => Unit) = bm25PlanOn(Tables.documents(s, d))
 
@@ -3723,6 +3723,12 @@ object LlmEntry {
     })
   }
 
+  /** The corpus on q119's integer grid: (vec_id, q BIGINT[64]). */
+  private def quantVecs(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d).select(col("vec_id"),
+      expr(s"transform(${SimilarityOps.toDoubleSpark("embedding")}, " +
+        s"x -> CAST(floor(x * $PqQuant) AS BIGINT))").as("q"))
+
   /** q120 plan builder (un-detached for PlanAuditSpec/ScaleBench).
     *
     * The composed production ANN (faiss's IndexIVFPQ): q46's coarse
@@ -3754,12 +3760,6 @@ object LlmEntry {
     * (q46's note), holding both the assignment broadcast and the
     * per-cell lists balanced at 10⁹ vectors.
     */
-  /** The corpus on q119's integer grid: (vec_id, q BIGINT[64]). */
-  private def quantVecs(s: SparkSession, d: String): DataFrame =
-    Tables.embeddings(s, d).select(col("vec_id"),
-      expr(s"transform(${SimilarityOps.toDoubleSpark("embedding")}, " +
-        s"x -> CAST(floor(x * $PqQuant) AS BIGINT))").as("q"))
-
   private[graft] def ivfadcPlan(s: SparkSession, d: String,
                                 nprobe: Int = IvfNprobe,
                                 topK: Int = LshK)

@@ -77,17 +77,8 @@ private[sources] class AvroMicroBatchStream(path: String,
     }
   }
 
-  private def readLog(p: Path): Seq[String] = {
-    val in = fs.open(p)
-    try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](64 * 1024)
-      var r = in.read(buf)
-      while (r >= 0) { bytes.write(buf, 0, r); r = in.read(buf) }
-      new String(bytes.toByteArray, StandardCharsets.UTF_8)
-        .split('\n').toSeq.filter(_.nonEmpty)
-    } finally in.close()
-  }
+  private def readLog(p: Path): Seq[String] =
+    Bytes.readUtf8(fs, p).split('\n').toSeq.filter(_.nonEmpty)
 
   private def writeLog(batch: Long, files: Seq[String]): Unit = {
     val f = fs

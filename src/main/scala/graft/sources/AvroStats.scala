@@ -310,16 +310,8 @@ private[sources] object AvroStats {
   private def loadLines(dir: String, conf: Configuration): Seq[String] =
     scala.util.Try {
       val p = manifest(dir)
-      val fs = p.getFileSystem(conf)
-      val in = fs.open(p)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](64 * 1024)
-        var r = in.read(buf)
-        while (r >= 0) { bytes.write(buf, 0, r); r = in.read(buf) }
-        new String(bytes.toByteArray, StandardCharsets.UTF_8)
-          .split('\n').toSeq.filter(_.nonEmpty)
-      } finally in.close()
+      Bytes.readUtf8(p.getFileSystem(conf), p)
+        .split('\n').toSeq.filter(_.nonEmpty)
     }.getOrElse(Nil)
 
   /** Replace the manifest with (surviving old lines for `keepNames`) ++

@@ -417,16 +417,6 @@ object ManifestDataSource {
       case u: UTF8String => Some(u.getBytes)
       case _ => None
     }
-    def cmp(a: Array[Byte], b: Array[Byte]): Int = {
-      var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) {
-        val d = (a(i) & 0xff) - (b(i) & 0xff)
-        if (d != 0) return d
-        i += 1
-      }
-      a.length - b.length
-    }
     // one interval test per (column, value): inside ⇒ may match
     def inside(a: String, v: Any, loOk: Boolean, hiOk: Boolean): Boolean = {
       val refuted =
@@ -435,7 +425,8 @@ object ManifestDataSource {
         asDbl(v).flatMap(x => dblB(a).map { case (lo, hi) =>
           (loOk && x < lo) || (hiOk && x > hi) }).getOrElse(
         asBytes(v).flatMap(x => strB(a).map { case (lo, hi) =>
-          (loOk && cmp(x, lo) < 0) || (hiOk && cmp(x, hi) > 0) })
+          (loOk && Bytes.compare(x, lo) < 0) ||
+            (hiOk && Bytes.compare(x, hi) > 0) })
           .getOrElse(false)))
       !refuted
     }
@@ -874,19 +865,11 @@ private[sources] class ManifestScanBuilder(full: StructType, path: String,
         val bs = nonEmpty.flatMap(_._2.strs.get(name))
         if (bs.size != nonEmpty.size || bs.isEmpty) None
         else {
-          def cmp(a: Array[Byte], b: Array[Byte]): Int = {
-            var i = 0
-            val n = math.min(a.length, b.length)
-            while (i < n) {
-              val d = (a(i) & 0xff) - (b(i) & 0xff)
-              if (d != 0) return d
-              i += 1
-            }
-            a.length - b.length
-          }
           val v =
-            if (lo) bs.map(_._1).reduce((a, b) => if (cmp(a, b) <= 0) a else b)
-            else bs.map(_._2).reduce((a, b) => if (cmp(a, b) >= 0) a else b)
+            if (lo) bs.map(_._1).reduce((a, b) =>
+              if (Bytes.compare(a, b) <= 0) a else b)
+            else bs.map(_._2).reduce((a, b) =>
+              if (Bytes.compare(a, b) >= 0) a else b)
           Some(UTF8String.fromBytes(v))
         }
       case _ => None

@@ -543,17 +543,6 @@ private[graft] object ManifestPartitions {
     case _ => utf8Bytes(v)
   }
 
-  private def cmpBytes(a: Array[Byte], b: Array[Byte]): Int = {
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) {
-      val d = (a(i) & 0xff) - (b(i) & 0xff)
-      if (d != 0) return d
-      i += 1
-    }
-    a.length - b.length
-  }
-
   /** Can a file whose tuple (under ITS OWN spec `ts`) is `tuple`
     * possibly hold a row matching `f`? False only on a PROVEN
     * refutation; anything the tuple can't decide matches. Every row in
@@ -577,7 +566,7 @@ private[graft] object ManifestPartitions {
         case (PNull, _) => false // an all-NULL tuple never equals a value
         case (PLong(x), _) => transformValue(t, v).forall(_ == x)
         case (PBytes(b), _) =>
-          transformBytes(t, v).forall(cmpBytes(b, _) == 0)
+          transformBytes(t, v).forall(Bytes.compare(b, _) == 0)
       }
     def rangeMatch(t: PartTransform, pv: PartVal, v: Any,
         keepLo: Boolean): Boolean =
@@ -587,7 +576,7 @@ private[graft] object ManifestPartitions {
         case (PLong(x), _) => transformValue(t, v).forall(b =>
           if (keepLo) x >= b else x <= b)
         case (PBytes(b), _) => transformBytes(t, v).forall(vb =>
-          if (keepLo) cmpBytes(b, vb) >= 0 else cmpBytes(b, vb) <= 0)
+          if (keepLo) Bytes.compare(b, vb) >= 0 else Bytes.compare(b, vb) <= 0)
       }
     f match {
       case EqualTo(a, v) =>
@@ -659,7 +648,7 @@ private[graft] object ManifestPartitions {
         case _ if v == null => false
         case (PIdentity(_), PLong(x)) => transformValue(t, v).contains(x)
         case (PIdentity(_), PBytes(b)) =>
-          transformBytes(t, v).exists(cmpBytes(b, _) == 0)
+          transformBytes(t, v).exists(Bytes.compare(b, _) == 0)
         case _ => false
       }
     def strictProven(t: PartTransform, pv: PartVal, v: Any,
@@ -670,7 +659,7 @@ private[graft] object ManifestPartitions {
         case (PLong(x), _) => v != null && transformValue(t, v).exists(b =>
           if (above) x > b else x < b)
         case (PBytes(b), _) => v != null && transformBytes(t, v).exists(vb =>
-          if (above) cmpBytes(b, vb) > 0 else cmpBytes(b, vb) < 0)
+          if (above) Bytes.compare(b, vb) > 0 else Bytes.compare(b, vb) < 0)
       }
     // tuple == T(v) exactly (monotone transforms only — bucket proves
     // nothing); the boundary leg of the inclusive-range proofs
@@ -679,7 +668,7 @@ private[graft] object ManifestPartitions {
         case (PLong(x), true) =>
           v != null && transformValue(t, v).contains(x)
         case (PBytes(b), true) =>
-          v != null && transformBytes(t, v).exists(cmpBytes(b, _) == 0)
+          v != null && transformBytes(t, v).exists(Bytes.compare(b, _) == 0)
         case _ => false
       }
     // x <= v proven: tuple strictly below T(v); or tuple == T(v) AND v

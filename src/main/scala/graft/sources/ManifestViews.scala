@@ -73,16 +73,7 @@ private[sources] object ManifestViews {
   }
 
   def read(fs: FileSystem, path: Path, viewName: String): View = {
-    val in = fs.open(path)
-    val text = try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](64 * 1024)
-      var r = in.read(buf)
-      while (r >= 0) { bytes.write(buf, 0, r); r = in.read(buf) }
-      new String(bytes.toByteArray,
-        java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
-    val j = JsonMethods.parse(text)
+    val j = JsonMethods.parse(Bytes.readUtf8(fs, path))
     def str(k: String): String = (j \ k) match {
       case JString(s) => s
       case _ => throw new IllegalStateException(

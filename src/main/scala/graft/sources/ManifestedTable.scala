@@ -119,17 +119,8 @@ object ManifestedTable {
       }.sortBy(_._1)
   }
 
-  private def readManifestRaw(fs: FileSystem, p: Path): Seq[String] = {
-    val in = fs.open(p)
-    try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](64 * 1024)
-      var r = in.read(buf)
-      while (r >= 0) { bytes.write(buf, 0, r); r = in.read(buf) }
-      new String(bytes.toByteArray, StandardCharsets.UTF_8)
-        .split('\n').toSeq.filter(_.nonEmpty)
-    } finally in.close()
-  }
+  private def readManifestRaw(fs: FileSystem, p: Path): Seq[String] =
+    Bytes.readUtf8(fs, p).split('\n').toSeq.filter(_.nonEmpty)
 
   // `#`-prefixed manifest lines are snapshot METADATA (the streaming
   // txn marker below), never file entries — every file-list consumer
@@ -785,9 +776,9 @@ object ManifestedTable {
                     lo.length <= 64 && hi.length <= 64 =>
                   val (lb, hb) = (lo.getBytes, hi.getBytes)
                   strLo.updateWith(name)(v =>
-                    Some(v.fold(lb)(p => if (cmpBytes(lb, p) < 0) lb else p)))
+                    Some(v.fold(lb)(p => if (Bytes.compare(lb, p) < 0) lb else p)))
                   strHi.updateWith(name)(v =>
-                    Some(v.fold(hb)(p => if (cmpBytes(hb, p) > 0) hb else p)))
+                    Some(v.fold(hb)(p => if (Bytes.compare(hb, p) > 0) hb else p)))
                 case _ =>
                   dead += name
                   longLo -= name; dblLo -= name; strLo -= name
@@ -1096,6 +1087,14 @@ object ManifestedTable {
     */
   private[graft] var beforePublish: () => Unit = () => ()
 
+  // On HDFS/object stores, rename-without-overwrite IS the CAS. POSIX
+  // rename OVERWRITES, so the exists+rename pair is a TOCTOU window on
+  // local FS — per-table JVM locks close it for same-process writers
+  // (the test/dev reality; cross-process local FS remains documented
+  // single-writer, and real deployments are on HDFS semantics anyway).
+  private val localCasLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
   /** Validate-and-CAS-commit the next snapshot under `mode`; returns
     * its version. Snapshot metadata (`#key=value` lines ahead of the
     * file list) rides the SAME atomic rename as the data it describes,
@@ -1106,29 +1105,21 @@ object ManifestedTable {
     * batch. Every attempt re-reads the current snapshot and re-runs
     * the mode's conflict validation — losing the CAS means the world
     * changed, so the proof must be redone against the new world.
-    */
-  // On HDFS/object stores, rename-without-overwrite IS the CAS. POSIX
-  // rename OVERWRITES, so the exists+rename pair is a TOCTOU window on
-  // local FS — per-table JVM locks close it for same-process writers
-  // (the test/dev reality; cross-process local FS remains documented
-  // single-writer, and real deployments are on HDFS semantics anyway).
-  private val localCasLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** `metaGuard` runs per CAS attempt against the lineage head's
+    *
+    * `metaGuard` runs per CAS attempt against the lineage head's
     * CURRENT meta (inside the lock, before anything is written) — the
     * conflict validation for commits whose INTENT reads the meta it
     * rewrites (an ALTER computed against one epoch history must not
     * silently drop a concurrent ALTER's epoch append: the lost update
     * on the versioned schema). Throw [[ConcurrentWriteException]] to
     * abort; AppendFiles otherwise rebases freely.
-    */
-  /** `metaFn` computes PER-ATTEMPT meta from (parent version, parent
+    *
+    * `metaFn` computes PER-ATTEMPT meta from (parent version, parent
     * meta) inside the commit lock — what an eq-delete needs: its
     * applies-to base IS the parent this commit lands on, and its
     * sequence number comes from the parent's own eqdel keys.
-    */
-  /** `metaDrop` removes keys from the carry-forward outright (each
+    *
+    * `metaDrop` removes keys from the carry-forward outright (each
     * version's meta is self-contained, so absorbed eq-delete keys can
     * vanish instead of riding every later commit as empty tombstones —
     * unbounded per-commit meta growth on a long-lived CDC table).
@@ -1375,84 +1366,48 @@ object ManifestedTable {
     (hv, resolveDataLines(fs, root, vs.toMap, hv))
   }
 
-  private def cmpBytes(a: Array[Byte], b: Array[Byte]): Int = {
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) {
-      val d = (a(i) & 0xff) - (b(i) & 0xff)
-      if (d != 0) return d
-      i += 1
-    }
-    a.length - b.length
-  }
-
   /** File paths among `entries` that COULD hold a row whose `keys`
     * match some row of `probe` — refuted per column by intersecting
     * the file's manifest (lo,hi) interval with the probe's own bounds
-    * (one tiny aggregate over the probe, zero table IO). A file
-    * without a token for a column is never refuted on it; refutation
-    * on ANY key column removes the file (an equality on all keys needs
-    * every column inside its interval). This is what makes
-    * find-touched CHEAP on a clustered layout: a key-local DML opens
-    * the files whose range it hits, not the table.
-    */
-  /** `boundsRow`, when given, carries precomputed per-key (min, max)
+    * (one tiny aggregate over the probe, zero table IO), through the
+    * manifest's one stats matcher ([[ManifestDataSource.mayMatch]] on
+    * `k >= lo` and `k <= hi`). A file without a token for a column, a
+    * key with no non-null probe value, and a key type the stats do not
+    * track (date, decimal, boolean) never refute; refutation on ANY key
+    * column removes the file (an equality on all keys needs every
+    * column inside its interval). This is what makes find-touched
+    * CHEAP on a clustered layout: a key-local DML opens the files whose
+    * range it hits, not the table.
+    *
+    * `boundsRow`, when given, carries precomputed per-key (min, max)
     * pairs at positions (2i, 2i+1) — what lets [[merge]] fold this
     * aggregate into the action it already runs for the cardinality
     * check instead of paying a separate job for the bounds.
     */
-  private def pruneByKeyBounds(entries0: Seq[(String, FileStats)],
+  private def pruneByKeyBounds(entries: Seq[(String, FileStats)],
       probe: DataFrame, keys: Seq[String],
       epochs: Seq[Map[Int, String]] = Nil,
       boundsRow: Option[org.apache.spark.sql.Row] = None): Seq[String] = {
-    import org.apache.spark.sql.types._
-    // translate per-file stats to CURRENT names first: a renamed key
-    // column still prunes through its old token, and a file that
-    // cannot translate simply stays a candidate
-    val entries = entries0.map(e => (e._1, rekeyStats(epochs, e._2)))
+    import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
     val aggCols = keys.flatMap(k => Seq(
       org.apache.spark.sql.functions.min(col(k)),
       org.apache.spark.sql.functions.max(col(k))))
     val row = boundsRow.getOrElse(
       probe.agg(aggCols.head, aggCols.tail: _*).head())
-    val schema = probe.schema
-    val refuters: Seq[FileStats => Boolean] =
-      keys.zipWithIndex.flatMap { case (k, i) =>
-        val (loI, hiI) = (2 * i, 2 * i + 1)
-        if (row.isNullAt(loI)) None // no non-null probe key: no pruning
-        else schema(k).dataType match {
-          case LongType | IntegerType | ShortType | ByteType =>
-            def asLong(a: Any): Long = a match {
-              case x: Long => x
-              case x: Int => x.toLong
-              case x: Short => x.toLong
-              case x: Byte => x.toLong
-            }
-            val (lo, hi) = (asLong(row.get(loI)), asLong(row.get(hiI)))
-            Some((st: FileStats) => st.longs.get(k)
-              .exists { case (flo, fhi) => fhi < lo || flo > hi })
-          case DoubleType | FloatType =>
-            def asDbl(a: Any): Double = a match {
-              case x: Double => x
-              case x: Float => x.toDouble
-            }
-            val (lo, hi) = (asDbl(row.get(loI)), asDbl(row.get(hiI)))
-            Some((st: FileStats) => st.dbls.get(k)
-              .exists { case (flo, fhi) => fhi < lo || flo > hi })
-          case StringType =>
-            val lo = row.getString(loI).getBytes(StandardCharsets.UTF_8)
-            val hi = row.getString(hiI).getBytes(StandardCharsets.UTF_8)
-            Some((st: FileStats) => st.strs.get(k)
-              .exists { case (flo, fhi) =>
-                cmpBytes(fhi, lo) < 0 || cmpBytes(flo, hi) > 0 })
-          case _ => None // exotic key type: stats don't track it
-        }
-      }
-    entries.filterNot { case (_, st) =>
-      // a known-empty file (0 rows, so no column chunks and no
-      // intervals) can never hold a match; otherwise refutation on any
-      // key column drops the file
-      st.rows.contains(0L) || refuters.exists(_(st))
+    val bounds = keys.zipWithIndex.flatMap { case (k, i) =>
+      if (row.isNullAt(2 * i)) Nil // no non-null probe key: no pruning
+      else Seq(GreaterThanOrEqual(k, row.get(2 * i)),
+        LessThanOrEqual(k, row.get(2 * i + 1)))
+    }
+    entries.filter { case (_, raw) =>
+      // translate per-file stats to CURRENT names first: a renamed key
+      // column still prunes through its old token, and a file that
+      // cannot translate simply stays a candidate. A known-empty file
+      // (0 rows, so no column chunks and no intervals) can never hold
+      // a match.
+      val st = rekeyStats(epochs, raw)
+      !st.rows.contains(0L) &&
+        bounds.forall(ManifestDataSource.mayMatch(st, _))
     }.map(_._1)
   }
 
@@ -1483,10 +1438,6 @@ object ManifestedTable {
   private[sources] def parseLine(line: String): (String, FileStats) =
     parseEntry(line)
 
-  /** Encode manifest lines (path + footer stats) for files already on
-    * disk — the DSv2 replace-write's commit step (same pooled footer
-    * reads as [[stageFiles]]).
-    */
   /** Columns the `graft.bloom-columns` table property asks bloom
     * tokens for (deployment dial: each costs ~172 b64 bytes per file
     * line — spent only where equality probes on a non-clustered
@@ -1497,9 +1448,12 @@ object ManifestedTable {
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty)
 
-  /** `tuples`/`specIdx`: the DSv2 task writers' tuple tokens — staged
-    * lines gain `ps:`/`pt:` exactly like the V1 partitionBy stage, so
-    * pruning and key-grouping survive every write face.
+  /** Encode manifest lines (path + footer stats) for files already on
+    * disk — the DSv2 replace-write's commit step (same pooled footer
+    * reads as [[stageFiles]]). `tuples`/`specIdx`: the DSv2 task
+    * writers' tuple tokens — staged lines gain `ps:`/`pt:` exactly like
+    * the V1 partitionBy stage, so pruning and key-grouping survive
+    * every write face.
     */
   private[sources] def statLines(
       conf: org.apache.hadoop.conf.Configuration, dir: String,
@@ -2337,14 +2291,6 @@ object ManifestedTable {
     else readLive(spark, root, keep, schemaCtx = ctx).filter(cond)
   }
 
-  /** ATOMIC compaction: rewrite the current snapshot into
-    * ceil(bytes/targetFileBytes) files staged in a fresh dir, then one
-    * manifest rename swaps the whole table — the upgrade over
-    * [[PartitionedSink.compactPartitions]]'s documented mid-swap
-    * window. A no-op (already compact) commits nothing. Old files stay
-    * until [[vacuum]] so readers mid-scan on the previous snapshot
-    * finish cleanly.
-    */
   /** The eq-absorbing rewrite read: entries grouped by WHICH pending
     * eq-deletes apply to them (scope membership), each group
     * anti-joined against exactly its deletes — the masked rows vanish
@@ -2377,6 +2323,14 @@ object ManifestedTable {
     (df, eqs.map(e => s"$EqDelPrefix${e.seq}" -> "").toMap)
   }
 
+  /** ATOMIC compaction: rewrite the current snapshot into
+    * ceil(bytes/targetFileBytes) files staged in a fresh dir, then one
+    * manifest rename swaps the whole table — the upgrade over
+    * [[PartitionedSink.compactPartitions]]'s documented mid-swap
+    * window. A no-op (already compact) commits nothing. Old files stay
+    * until [[vacuum]] so readers mid-scan on the previous snapshot
+    * finish cleanly.
+    */
   def compact(spark: SparkSession, dir: String,
       targetFileBytes: Long): Long = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
@@ -2384,61 +2338,74 @@ object ManifestedTable {
     val fs = fsOf(spark, dir)
     val (baseV, baseLines) = currentSnapshot(fs, root)
     val entries = baseLines.map(parseEntry)
-    val files = baseLines.map(pathOf)
-    val bytes = files.map(f => fs.getFileStatus(new Path(root, f)).getLen).sum
-    val needed =
-      math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val conf = spark.sessionState.newHadoopConf()
-    val hasEq = eqDeletesAt(conf, dir).nonEmpty
+    val needed = filesNeeded(fs, root, baseLines, targetFileBytes)
+    val pending = eqDeletesAt(spark.sessionState.newHadoopConf(), dir)
     // a DV'd file always warrants the rewrite: compaction reads
     // THROUGH the deletion vectors and so materializes them away —
     // and PENDING EQ-DELETES likewise force it (compaction is where
     // they get absorbed; the masks turn physical here)
-    if (files.size <= needed && entries.forall(_._2.dv.isEmpty) &&
-        !hasEq)
+    if (baseLines.size <= needed && entries.forall(_._2.dv.isEmpty) &&
+        pending.isEmpty)
       return baseV
     // deletes-only CDC bootstrap: pending eq-deletes over a snapshot
     // with ZERO entries have nothing to mask — absorb them as a
     // metadata-only commit (the rewrite read would have nothing to
     // union) so the tombstones release instead of wedging forever
-    if (entries.isEmpty && hasEq) {
-      val absorbed = eqDeletesAt(conf, dir)
-        .map(e => s"$EqDelPrefix${e.seq}").toSet
+    if (entries.isEmpty) {
+      val absorbed = pending.map(e => s"$EqDelPrefix${e.seq}").toSet
       return publish(fs, root,
         RewriteFiles(baseV, baseLines, Set.empty, "compact", _ => false),
         Nil, metaDrop = absorbed,
-        metaGuard = prevMeta => {
-          val now = eqDeletesOf(prevMeta)
-            .map(e => s"$EqDelPrefix${e.seq}").toSet
-          if (now != absorbed) throw new ConcurrentWriteException(
-            s"compact of $dir absorbed eq-deletes $absorbed, but the " +
-              s"head now carries $now — a concurrent eq commit " +
-              "landed; re-run")
-        })
+        metaGuard = eqAbsorbGuard("compact", dir, absorbed))
     }
-    val (compacted0, eqTombstones) = eqAbsorbedRewriteRead(spark, dir,
-      root, entries, schemaCtxAt(fs, root, Some(baseV)),
+    compactRewrite(spark, dir, "compact", root, fs, baseV, baseLines)(
+      _.repartition(needed))
+  }
+
+  /** ceil(bytes / targetFileBytes) output files (at least one) for
+    * `lines`' data files.
+    */
+  private def filesNeeded(fs: FileSystem, root: Path, lines: Seq[String],
+      targetFileBytes: Long): Int = {
+    val bytes = lines.map(l =>
+      fs.getFileStatus(new Path(root, pathOf(l))).getLen).sum
+    math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+  }
+
+  /** Per-CAS-attempt guard of an eq-absorbing compaction: an eq-delete
+    * landing AFTER the rewrite's read scoped itself to files the
+    * rewrite removes — its masks would silently die with them, so the
+    * absorb aborts and re-runs instead. `absorbed` are the meta keys
+    * the commit drops.
+    */
+  private def eqAbsorbGuard(op: String, dir: String, absorbed: Set[String])
+      : Map[String, String] => Unit = prevMeta => {
+    val now = eqDeletesOf(prevMeta).map(e => s"$EqDelPrefix${e.seq}").toSet
+    if (now != absorbed) throw new ConcurrentWriteException(
+      s"$op of $dir absorbed eq-deletes $absorbed, but the head now " +
+        s"carries $now — a concurrent eq commit landed; re-run")
+  }
+
+  /** The rewrite [[compact]] and [[compactClustered]] share: the WHOLE
+    * base snapshot, read through its deletion vectors and pending
+    * eq-deletes, laid out by `layout` and published as one
+    * row-preserving rewrite. An interleaved append rebases (its files
+    * ride uncompacted), an interleaved DML conflicts (it removed files
+    * this rewrite claims), an interleaved eq-delete aborts
+    * ([[eqAbsorbGuard]]).
+    */
+  private def compactRewrite(spark: SparkSession, dir: String, op: String,
+      root: Path, fs: FileSystem, baseV: Long, baseLines: Seq[String])(
+      layout: DataFrame => DataFrame): Long = {
+    val (rows, eqTombstones) = eqAbsorbedRewriteRead(spark, dir, root,
+      baseLines.map(parseEntry), schemaCtxAt(fs, root, Some(baseV)),
       lineageOn(headMetaOf(fs, root, None)))
-    val compacted = compacted0.repartition(needed)
-    val staged = stageFiles(compacted, root, fs)
-    // row-preserving rewrite of the WHOLE base: an interleaved append
-    // rebases (its files ride uncompacted), an interleaved DML
-    // conflicts (it removed files this rewrite claims). The eq guard:
-    // an eq-delete landing AFTER this compact's read scoped itself to
-    // files the compact removes — its masks would silently die with
-    // them, so the absorb aborts and re-runs instead.
+    val staged = stageFiles(layout(rows), root, fs)
     publish(fs, root,
-      RewriteFiles(baseV, baseLines, files.toSet, "compact", _ => false),
+      RewriteFiles(baseV, baseLines, baseLines.map(pathOf).toSet, op,
+        _ => false),
       staged, metaDrop = eqTombstones.keySet,
-      metaGuard = prevMeta => {
-        val now = eqDeletesOf(prevMeta).map(_.seq).toSet
-        val absorbed = eqTombstones.keySet
-          .map(_.stripPrefix(EqDelPrefix).toInt)
-        if (now != absorbed) throw new ConcurrentWriteException(
-          s"compact of $dir absorbed eq-deletes $absorbed, but the " +
-            s"head now carries $now — a concurrent eq commit landed; " +
-            "re-run")
-      })
+      metaGuard = eqAbsorbGuard(op, dir, eqTombstones.keySet))
   }
 
   // ---- row lineage constants ----------------------------------------------
@@ -3311,7 +3278,7 @@ object ManifestedTable {
       .reduce(_ || _)).isEmpty,
       "eqUpsert: NULL key tuples are not supported (an anti-join " +
         "never matches NULL — the delete would silently no-op)")
-    val sidecar = stageEq(allKeys, root, fs)
+    val sidecar = stageSidecar(allKeys, root, fs)
     val staged =
       if (source.isEmpty) Nil else stageFiles(source, root, fs, None)
     val colsHex = keys.map(hexEncName).mkString(",")
@@ -3336,23 +3303,14 @@ object ManifestedTable {
     eqUpsert(spark, dir, keys.limit(0), keys.columns.toSeq,
       deletes = Some(keys))
 
-  /** Stage an eq-delete sidecar (one parquet of key tuples). */
-  private def stageEq(keyRows: DataFrame, root: Path,
-      fs: FileSystem): String = {
-    val stage = s"dv-${java.util.UUID.randomUUID()}"
-    keyRows.coalesce(1).write.parquet(new Path(root, stage).toString)
-    fs.listStatus(new Path(root, stage)).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(s => s"$stage/${s.getPath.getName}").head
-  }
-
-  /** Stage a deletion-vector sidecar (one parquet file of (file, pos)
-    * pairs) and return its relative path.
+  /** Stage a sidecar — an eq-delete's key tuples or a deletion
+    * vector's (file, pos) pairs — as one parquet file and return its
+    * relative path.
     */
-  private def stageDv(pairs: DataFrame, root: Path,
+  private def stageSidecar(rows: DataFrame, root: Path,
       fs: FileSystem): String = {
     val stage = s"dv-${java.util.UUID.randomUUID()}"
-    pairs.coalesce(1).write.parquet(new Path(root, stage).toString)
+    rows.coalesce(1).write.parquet(new Path(root, stage).toString)
     fs.listStatus(new Path(root, stage)).toSeq
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .map(s => s"$stage/${s.getPath.getName}").head
@@ -3371,6 +3329,121 @@ object ManifestedTable {
       spark.read.parquet(absPaths(root, oldDvPaths): _*)
         .filter(col("file").isin(files: _*))
         .select(col("file"), col("pos")))
+  }
+
+  /** The snapshot a row-level DML (`op`: merge, deleteWhere,
+    * deleteMatching) plans and commits against, resolved once: ONE
+    * head-meta read feeds the eq-delete refusal, the delete split's
+    * spec history and the lineage flag — per-commit fixed costs add up
+    * on commit-dense lifecycles.
+    */
+  private final case class DmlBase(dir: String, op: String,
+      branch: Option[String], root: Path, fs: FileSystem,
+      headMeta: Map[String, String], baseV: Long, baseLines: Seq[String],
+      ctx: Option[(StructType, Seq[Map[Int, String]])]) {
+    val cur: Seq[String] = baseLines.map(pathOf)
+    val entries: Seq[(String, FileStats)] = baseLines.map(parseEntry)
+    val entryMap: Map[String, FileStats] = entries.toMap
+    val lineMap: Map[String, String] =
+      baseLines.map(l => pathOf(l) -> l).toMap
+    val lineage: Boolean = lineageOn(headMeta)
+    def epochs: Seq[Map[Int, String]] = ctx.map(_._2).getOrElse(Nil)
+    /** `files`' entries, in snapshot order. */
+    def entriesOf(files: Seq[String]): Seq[(String, FileStats)] = {
+      val s = files.toSet
+      entries.filter(e => s(e._1))
+    }
+  }
+
+  private def dmlBase(spark: SparkSession, dir: String, op: String,
+      dvMaxFraction: Double, branch: Option[String]): DmlBase = {
+    require(dvMaxFraction >= 0.0 && dvMaxFraction <= 1.0,
+      s"dvMaxFraction must be in [0,1], got $dvMaxFraction")
+    val root = new Path(dir)
+    val fs = fsOf(spark, dir)
+    val headMeta = headMetaOf(fs, root, branch)
+    require(eqDeletesOf(headMeta).isEmpty,
+      s"$op on $dir: equality deletes pending — CALL compact to " +
+        "absorb them first")
+    val (baseV, baseLines) = snapshotFor(fs, root, branch)
+    require(baseLines.nonEmpty, s"manifested table $dir is empty — " +
+      "schemaless empty reads are not supported")
+    DmlBase(dir, op, branch, root, fs, headMeta, baseV, baseLines,
+      schemaCtxAt(fs, root, Some(baseV)))
+  }
+
+  /** Per-file hit counts of `matched` over the LIVE rows of `files`
+    * (already-deleted positions never re-match) in one pass — a
+    * manifest-sized collect, and exactly the number the merge-on-read
+    * split needs. No files, no job.
+    */
+  private def hitCounts(spark: SparkSession, b: DmlBase,
+      files: Seq[String], matched: DataFrame => DataFrame)
+      : Map[String, Long] =
+    if (files.isEmpty) Map.empty
+    else matched(readLive(spark, b.root, b.entriesOf(files),
+        withMeta = true, schemaCtx = b.ctx))
+      .groupBy(col("__file")).agg(count(lit(1)).as("__n")).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  /** The merge-on-read split of `files`: a file with hits whose hit
+    * fraction of its physical rows is ≤ `dvFrac` keeps its bytes — the
+    * positions `matched` selects in its live rows go to ONE fresh
+    * deletion-vector sidecar (with the files' existing pairs, see
+    * [[mergedDvPairs]]) and its manifest line gains the token.
+    * Returns (the DV'd files' new lines, the files left to rewrite).
+    */
+  private def stageMorDeletes(spark: SparkSession, b: DmlBase,
+      files: Seq[String], hits: Map[String, Long], dvFrac: Double,
+      matched: DataFrame => DataFrame): (Seq[String], Seq[String]) = {
+    val (dvT, rwT) = files.partition(f => hits.get(f).exists(h =>
+      b.entryMap(f).rows.exists(n => n > 0 && h.toDouble / n <= dvFrac)))
+    if (dvT.isEmpty) (Nil, rwT)
+    else {
+      val fresh = matched(readLive(spark, b.root, b.entriesOf(dvT),
+          withMeta = true, schemaCtx = b.ctx))
+        .select(col("__file").as("file"), col("__pos").as("pos"))
+      val dvRel = stageSidecar(
+        mergedDvPairs(spark, b.root, fresh, dvT, b.entryMap), b.root, b.fs)
+      (dvT.map(f => withDvToken(b.lineMap(f), dvRel)), rwT)
+    }
+  }
+
+  /** Commit a row-level rewrite: `touched` leave the base snapshot,
+    * `staged` lines join it, and an interleaved commit conflicts when
+    * `overlaps` finds a row of its added files inside the op's scope.
+    */
+  private def commitRewrite(b: DmlBase, touched: Seq[String],
+      staged: Seq[String], overlaps: Seq[String] => Boolean): Long =
+    publish(b.fs, b.root,
+      RewriteFiles(b.baseV, b.baseLines, touched.toSet, b.op, overlaps),
+      staged, ref = b.branch, metaGuard = noEqMetaGuard(b.op, b.dir))
+
+  /** The delete body [[deleteWhere]] and [[deleteMatching]] share:
+    * `covered` files drop by reference, `candidates` are scanned for
+    * `matched` rows, and each file with hits either takes a deletion
+    * vector or rewrites to its `survivors`. No hits and nothing covered
+    * commits nothing (version unchanged).
+    */
+  private def deleteRows(spark: SparkSession, b: DmlBase,
+      dvMaxFraction: Double, covered: Seq[String], candidates: Seq[String],
+      matched: DataFrame => DataFrame, survivors: DataFrame => DataFrame,
+      overlaps: Seq[String] => Boolean): Long = {
+    val hits = hitCounts(spark, b, candidates, matched)
+    if (hits.isEmpty && covered.isEmpty) return b.baseV
+    val coveredSet = covered.toSet
+    val touched = b.cur.filter(f => hits.contains(f) || coveredSet(f))
+    // the MoR threshold applies to genuinely-partial files only; a
+    // covered file has NO survivors — by reference, no DV, no rewrite
+    val (dvLines, rwT) = stageMorDeletes(spark, b,
+      b.cur.filter(hits.contains), hits, dvMaxFraction, matched)
+    // with row lineage ON, survivors re-emit with their ids
+    // materialized (the rewrite output becomes a `rim:` file)
+    val rwStaged =
+      if (rwT.isEmpty) Nil
+      else stageFiles(survivors(readForRewrite(spark, b.root,
+        b.entriesOf(rwT), b.ctx, b.lineage)), b.root, b.fs, b.branch)
+    commitRewrite(b, touched, rwStaged ++ dvLines, overlaps)
   }
 
   /** `WHEN NOT MATCHED BY SOURCE ...` action for [[merge]] — the
@@ -3440,26 +3513,9 @@ object ManifestedTable {
       dvMaxFraction: Double = 0.0,
       branch: Option[String] = None): Long = {
     require(keys.nonEmpty, "merge needs at least one key column")
-
-    require(dvMaxFraction >= 0.0 && dvMaxFraction <= 1.0,
-      s"dvMaxFraction must be in [0,1], got $dvMaxFraction")
-    val root = new Path(dir)
-    val fs = fsOf(spark, dir)
-    val (baseV, baseLines) = snapshotFor(fs, root, branch)
-    val cur = baseLines.map(pathOf)
-    require(cur.nonEmpty, s"manifested table $dir is empty — " +
-      "schemaless empty reads are not supported")
-    val entries = baseLines.map(parseEntry)
-    val entryMap = entries.toMap
-    val lineMap = baseLines.map(l => pathOf(l) -> l).toMap
-    val ctx = schemaCtxAt(fs, root, Some(baseV))
-    val epochs = ctx.map(_._2).getOrElse(Nil)
-    val mergeHeadMeta = headMetaOf(fs, root, branch)
-    require(eqDeletesOf(mergeHeadMeta).isEmpty,
-      s"merge on $dir: equality deletes pending — CALL compact to " +
-        "absorb them first")
-    val lineage = lineageOn(mergeHeadMeta)
-    val base = readLive(spark, root, entries, schemaCtx = ctx)
+    val b = dmlBase(spark, dir, "merge", dvMaxFraction, branch)
+    val (root, ctx, lineage) = (b.root, b.ctx, b.lineage)
+    val base = readLive(spark, root, b.entries, schemaCtx = ctx)
     // merge-on-read applies only to the plain upsert shape: matched
     // rows' old images DV out, source images stage fresh. Conditional
     // updates keep base images and by-source clauses rewrite unmatched
@@ -3497,26 +3553,20 @@ object ManifestedTable {
     // manifest key interval intersects the source's key bounds are
     // scanned for the exact semi join — on a key-clustered layout a
     // key-local delta opens a handful of files, not the table
-    val candidates = pruneByKeyBounds(entries, srcKeys, keys, epochs,
+    val candidates = pruneByKeyBounds(b.entries, srcKeys, keys, b.epochs,
       boundsRow = Some(kRow))
     // matched-hit counts per file in one LIVE pass: find-touched and
     // the MoR split from the same manifest-sized collect
-    val matchHits =
-      if (candidates.isEmpty) Map.empty[String, Long]
-      else readLive(spark, root,
-        entries.filter(e => candidates.contains(e._1)), withMeta = true,
-        schemaCtx = ctx)
-        .join(srcKeys, keys, "left_semi")
-        .groupBy(col("__file")).agg(count(lit(1)).as("__n")).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val matchTouched = cur.filter(matchHits.contains)
+    val matched = (d: DataFrame) => d.join(srcKeys, keys, "left_semi")
+    val matchHits = hitCounts(spark, b, candidates, matched)
+    val matchTouched = b.cur.filter(matchHits.contains)
     // a by-source clause also touches every file holding an APPLICABLE
     // unmatched row — unprunable in general (the condition is over
     // arbitrary base columns), inherent to full-sync semantics
     val bySourceTouched = bySource match {
       case None => Seq.empty[String]
       case Some(a) =>
-        val unmatched = readLive(spark, root, entries, withMeta = true,
+        val unmatched = readLive(spark, root, b.entries, withMeta = true,
           schemaCtx = ctx)
           .join(srcKeys, keys, "left_anti")
         val applicable = (a match {
@@ -3529,24 +3579,10 @@ object ManifestedTable {
     }
     val touched = (matchTouched ++ bySourceTouched).distinct
     // MoR split: matched files whose hit fraction is small keep their
-    // bytes — old images DV out, new images ride the staged delta
-    val (dvT, rwT) = touched.partition { f =>
-      bySourceTouched.isEmpty && matchHits.contains(f) &&
-        entryMap(f).rows.exists(n =>
-          n > 0 && matchHits(f).toDouble / n <= dvFrac)
-    }
-    val dvLines =
-      if (dvT.isEmpty) Nil
-      else {
-        val fresh = readLive(spark, root,
-          entries.filter(e => dvT.contains(e._1)), withMeta = true,
-          schemaCtx = ctx)
-          .join(srcKeys, keys, "left_semi")
-          .select(col("__file").as("file"), col("__pos").as("pos"))
-        val dvRel = stageDv(
-          mergedDvPairs(spark, root, fresh, dvT, entryMap), root, fs)
-        dvT.map(f => withDvToken(lineMap(f), dvRel))
-      }
+    // bytes — old images DV out, new images ride the staged delta (a
+    // by-source clause forces dvFrac 0, so it rewrites every file)
+    val (dvLines, rwT) =
+      stageMorDeletes(spark, b, touched, matchHits, dvFrac, matched)
     val delC = deleteWhen.map(c => coalesce(c, lit(false)))
       .getOrElse(lit(false))
     val rewrite: DataFrame =
@@ -3555,7 +3591,7 @@ object ManifestedTable {
         insertWhen.map(c => source.filter(coalesce(c, lit(false))))
           .getOrElse(source).filter(!delC)
       } else if (updateWhen.isEmpty && insertWhen.isEmpty &&
-          bySource.isEmpty && dvT.isEmpty) {
+          bySource.isEmpty && dvLines.isEmpty) {
         // plain-upsert fast path (the overwhelmingly common shape):
         // ONE anti join over the touched files + the blind source
         // union — no matched/unmatched source split, so the touched
@@ -3563,22 +3599,19 @@ object ManifestedTable {
         // survivors carry their ids (the source's upserted images
         // mint fresh ones — the object API's documented v1 contract;
         // the engine-planned SQL MERGE preserves per-row)
-        readForRewrite(spark, root,
-          entries.filter(e => touched.contains(e._1)), ctx, lineage)
+        readForRewrite(spark, root, b.entriesOf(touched), ctx, lineage)
           .join(srcKeys, keys, "left_anti")
           .unionByName(source.filter(!delC).select(cols.map(col): _*),
             allowMissingColumns = lineage)
       } else {
-        val t = readLive(spark, root,
-          entries.filter(e => touched.contains(e._1)), schemaCtx = ctx)
+        val t = readLive(spark, root, b.entriesOf(touched), schemaCtx = ctx)
         val tKeys = t.select(keys.map(col): _*)
         // NOT MATCHED BY SOURCE: unmatched base rows in touched files
         // — only REWRITTEN files re-emit them; a DV'd file's unmatched
         // rows stay physically in place
         val um =
           if (rwT.isEmpty) t.join(srcKeys, keys, "left_anti").limit(0)
-          else readLive(spark, root,
-            entries.filter(e => rwT.contains(e._1)), schemaCtx = ctx)
+          else readLive(spark, root, b.entriesOf(rwT), schemaCtx = ctx)
             .join(srcKeys, keys, "left_anti")
         val umOut = bySource match {
           case None => um
@@ -3627,7 +3660,7 @@ object ManifestedTable {
       (if (lineage && rewrite.columns.contains(RowIdCol)) Seq(RowIdCol)
        else Nil)
     val staged = stageFiles(
-      rewrite.select(keepCols.map(col): _*), root, fs, branch) ++ dvLines
+      rewrite.select(keepCols.map(col): _*), root, b.fs, branch) ++ dvLines
     // conflict scope: ANY source key — an interleaved commit that
     // added a row this merge would have matched (updated, or collided
     // with an insert) cannot serialize either side of it. A by-source
@@ -3639,9 +3672,7 @@ object ManifestedTable {
       else
         !spark.read.option("mergeSchema", "true").parquet(paths: _*)
           .select(keys.map(col): _*).join(srcKeys, keys, "left_semi").isEmpty
-    publish(fs, root,
-      RewriteFiles(baseV, baseLines, touched.toSet, "merge", overlaps),
-      staged, ref = branch, metaGuard = noEqMetaGuard("merge", dir))
+    commitRewrite(b, touched, staged, overlaps)
   }
 
   /** Catalyst predicate → V1 Filter for the shapes the manifest
@@ -3794,79 +3825,19 @@ object ManifestedTable {
   def deleteWhere(spark: SparkSession, dir: String, cond: Column,
       dvMaxFraction: Double = 0.0,
       branch: Option[String] = None): Long = {
-    require(dvMaxFraction >= 0.0 && dvMaxFraction <= 1.0,
-      s"dvMaxFraction must be in [0,1], got $dvMaxFraction")
-    val root = new Path(dir)
-    val fs = fsOf(spark, dir)
-    // ONE head-meta resolution feeds the eq guard, the split's spec
-    // history, AND the lineage flag — per-commit fixed costs add up
-    // on commit-dense lifecycles
-    val headMeta = headMetaOf(fs, root, branch)
-    require(eqDeletesOf(headMeta).isEmpty,
-      s"deleteWhere on $dir: equality deletes pending — CALL compact " +
-        "to absorb them first")
-    val (baseV, baseLines) = snapshotFor(fs, root, branch)
-    val cur = baseLines.map(pathOf)
-    require(cur.nonEmpty, s"manifested table $dir is empty — " +
-      "schemaless empty reads are not supported")
-    val entries = baseLines.map(parseEntry)
-    val entryMap = entries.toMap
-    val lineMap = baseLines.map(l => pathOf(l) -> l).toMap
-    val ctx = schemaCtxAt(fs, root, Some(baseV))
+    val b = dmlBase(spark, dir, "deleteWhere", dvMaxFraction, branch)
     // manifest-level split BEFORE anything opens: refuted files are
     // never read, covered files drop by reference (metadata delete),
     // only the ambiguous middle is scanned
-    val (covered, cands, _) = deleteSplitOf(cond, entries, ctx, headMeta)
-    val candSet = cands.toSet
-    val candEntries = entries.filter(e => candSet(e._1))
-    // per-file hit counts in one pass — manifest-sized collect, and
-    // exactly the number the MoR split needs
-    val hits =
-      if (candEntries.isEmpty) Map.empty[String, Long]
-      else readLive(spark, root, candEntries, withMeta = true,
-        schemaCtx = ctx)
-        .filter(cond).groupBy(col("__file"))
-        .agg(count(lit(1)).as("__n")).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (hits.isEmpty && covered.isEmpty) return baseV
-    val coveredSet = covered.toSet
-    val touched = cur.filter(f => hits.contains(f) || coveredSet(f))
-    // the MoR threshold applies to genuinely-partial files only; a
-    // covered file has NO survivors — by reference, no DV, no rewrite
-    val (dvT, rwT) = cur.filter(hits.contains).partition { f =>
-      entryMap(f).rows.exists(n =>
-        n > 0 && hits(f).toDouble / n <= dvMaxFraction)
-    }
-    val dvLines =
-      if (dvT.isEmpty) Nil
-      else {
-        val fresh = readLive(spark, root,
-          entries.filter(e => dvT.contains(e._1)), withMeta = true,
-          schemaCtx = ctx)
-          .filter(cond)
-          .select(col("__file").as("file"), col("__pos").as("pos"))
-        val dvRel = stageDv(
-          mergedDvPairs(spark, root, fresh, dvT, entryMap), root, fs)
-        dvT.map(f => withDvToken(lineMap(f), dvRel))
-      }
-    // with row lineage ON, survivors re-emit with their ids
-    // materialized (the rewrite output becomes a `rim:` file)
-    val lineage = lineageOn(headMeta)
-    val rwStaged =
-      if (rwT.isEmpty) Nil
-      else stageFiles(
-        readForRewrite(spark, root, entries.filter(e => rwT.contains(e._1)),
-          ctx, lineage)
-          .filter(!coalesce(cond, lit(false))), root, fs, branch)
-    // conflict scope: the delete predicate — interleaved rows it would
-    // have deleted make the serial orders disagree
-    val overlaps = (paths: Seq[String]) =>
-      !spark.read.option("mergeSchema", "true").parquet(paths: _*)
-        .filter(cond).isEmpty
-    publish(fs, root,
-      RewriteFiles(baseV, baseLines, touched.toSet, "deleteWhere", overlaps),
-      rwStaged ++ dvLines, ref = branch,
-      metaGuard = noEqMetaGuard("deleteWhere", dir))
+    val (covered, cands, _) = deleteSplitOf(cond, b.entries, b.ctx, b.headMeta)
+    deleteRows(spark, b, dvMaxFraction, covered, cands,
+      matched = _.filter(cond),
+      survivors = _.filter(!coalesce(cond, lit(false))),
+      // conflict scope: the delete predicate — interleaved rows it would
+      // have deleted make the serial orders disagree
+      overlaps = paths =>
+        !spark.read.option("mergeSchema", "true").parquet(paths: _*)
+          .filter(cond).isEmpty)
   }
 
   /** Row-level DELETE by key set — `DELETE WHERE key IN (subquery)`,
@@ -3883,73 +3854,18 @@ object ManifestedTable {
       branch: Option[String] = None): Long = {
     val keyCols = keys.columns.toSeq
     require(keyCols.nonEmpty, "deleteMatching needs at least one key column")
-    val dmHeadMeta = headMetaOf(new Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf()),
-      new Path(dir), branch)
-    require(eqDeletesOf(dmHeadMeta).isEmpty,
-      s"deleteMatching on $dir: equality deletes pending — CALL " +
-        "compact to absorb them first")
-
-    require(dvMaxFraction >= 0.0 && dvMaxFraction <= 1.0,
-      s"dvMaxFraction must be in [0,1], got $dvMaxFraction")
-    val root = new Path(dir)
-    val fs = fsOf(spark, dir)
-    val (baseV, baseLines) = snapshotFor(fs, root, branch)
-    val cur = baseLines.map(pathOf)
-    require(cur.nonEmpty, s"manifested table $dir is empty — " +
-      "schemaless empty reads are not supported")
-    val entries = baseLines.map(parseEntry)
-    val entryMap = entries.toMap
-    val lineMap = baseLines.map(l => pathOf(l) -> l).toMap
+    val b = dmlBase(spark, dir, "deleteMatching", dvMaxFraction, branch)
     val k = keys.distinct()
-    val ctx = schemaCtxAt(fs, root, Some(baseV))
-    val epochs = ctx.map(_._2).getOrElse(Nil)
     // same stats-pruned find-touched as merge: the key feed's bounds
-    // refute non-intersecting files from the manifest alone; the scan
-    // reads LIVE rows (already-deleted positions never re-match) and
-    // yields the per-file hit counts the MoR split needs
-    val candidates = pruneByKeyBounds(entries, k, keyCols, epochs)
-    if (candidates.isEmpty) return baseV
-    val candEntries = entries.filter(e => candidates.contains(e._1))
-    val hits = readLive(spark, root, candEntries, withMeta = true,
-      schemaCtx = ctx)
-      .join(k, keyCols, "left_semi")
-      .groupBy(col("__file")).agg(count(lit(1)).as("__n")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (hits.isEmpty) return baseV
-    val touched = cur.filter(hits.contains)
-    val (dvT, rwT) = touched.partition { f =>
-      entryMap(f).rows.exists(n =>
-        n > 0 && hits(f).toDouble / n <= dvMaxFraction)
-    }
-    val dvLines =
-      if (dvT.isEmpty) Nil
-      else {
-        val dvEntries = entries.filter(e => dvT.contains(e._1))
-        val fresh = readLive(spark, root, dvEntries, withMeta = true,
-          schemaCtx = ctx)
-          .join(k, keyCols, "left_semi")
-          .select(col("__file").as("file"), col("__pos").as("pos"))
-        val dvRel = stageDv(
-          mergedDvPairs(spark, root, fresh, dvT, entryMap), root, fs)
-        dvT.map(f => withDvToken(lineMap(f), dvRel))
-      }
-    val rwStaged =
-      if (rwT.isEmpty) Nil
-      else {
-        val survivors = readForRewrite(spark, root,
-          entries.filter(e => rwT.contains(e._1)), ctx,
-          lineageOn(dmHeadMeta))
-          .join(k, keyCols, "left_anti")
-        stageFiles(survivors, root, fs, branch)
-      }
-    val overlaps = (paths: Seq[String]) =>
-      !spark.read.option("mergeSchema", "true").parquet(paths: _*)
-        .select(keyCols.map(col): _*).join(k, keyCols, "left_semi").isEmpty
-    publish(fs, root,
-      RewriteFiles(baseV, baseLines, touched.toSet, "deleteMatching",
-        overlaps), rwStaged ++ dvLines, ref = branch,
-      metaGuard = noEqMetaGuard("deleteMatching", dir))
+    // refute non-intersecting files from the manifest alone
+    deleteRows(spark, b, dvMaxFraction, covered = Nil,
+      candidates = pruneByKeyBounds(b.entries, k, keyCols, b.epochs),
+      matched = _.join(k, keyCols, "left_semi"),
+      survivors = _.join(k, keyCols, "left_anti"),
+      overlaps = paths =>
+        !spark.read.option("mergeSchema", "true").parquet(paths: _*)
+          .select(keyCols.map(col): _*).join(k, keyCols, "left_semi")
+          .isEmpty)
   }
 
   /** ATOMIC CLUSTERED compaction — the `OPTIMIZE ... ZORDER BY` /
@@ -3970,32 +3886,12 @@ object ManifestedTable {
     val root = new Path(dir)
     val fs = fsOf(spark, dir)
     val (baseV, baseLines) = currentSnapshot(fs, root)
-    val files = baseLines.map(pathOf)
-    require(files.nonEmpty, s"manifested table $dir is empty — " +
+    require(baseLines.nonEmpty, s"manifested table $dir is empty — " +
       "schemaless empty reads are not supported")
-    val bytes = files.map(f => fs.getFileStatus(new Path(root, f)).getLen).sum
-    val needed =
-      math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    // pending eq-deletes absorb here exactly as in [[compact]]
-    val (clustered0, eqTombstones) = eqAbsorbedRewriteRead(spark, dir,
-      root, baseLines.map(parseEntry),
-      schemaCtxAt(fs, root, Some(baseV)),
-      lineageOn(headMetaOf(fs, root, None)))
-    val clustered = clustered0
-      .repartitionByRange(needed, clusterBy)
-      .sortWithinPartitions(clusterBy)
-    val staged = stageFiles(clustered, root, fs)
-    publish(fs, root,
-      RewriteFiles(baseV, baseLines, files.toSet, "compactClustered",
-        _ => false), staged, metaDrop = eqTombstones.keySet,
-      metaGuard = prevMeta => {
-        val now = eqDeletesOf(prevMeta).map(_.seq).toSet
-        val absorbed = eqTombstones.keySet
-          .map(_.stripPrefix(EqDelPrefix).toInt)
-        if (now != absorbed) throw new ConcurrentWriteException(
-          s"compactClustered of $dir absorbed eq-deletes $absorbed, " +
-            s"but the head now carries $now — re-run")
-      })
+    val needed = filesNeeded(fs, root, baseLines, targetFileBytes)
+    compactRewrite(spark, dir, "compactClustered", root, fs, baseV,
+      baseLines)(_.repartitionByRange(needed, clusterBy)
+      .sortWithinPartitions(clusterBy))
   }
 
   /** Table-health report — the numbers the OPTIMIZE decision is made

@@ -741,6 +741,68 @@ class CompactionSpec extends SparkTestBase {
     assert(vSame == v2, "a stats-refuted keyed DELETE advanced the version")
   }
 
+  test("manifested table: deleteMatching(keys) ≡ deleteWhere(k IN keys) — same rows, same files") {
+    // the two keyed deletes differ only in how they find candidates
+    // (the key feed's bounds vs the predicate's manifest split) and in
+    // their matched/survivor sides (semi/anti join vs filter/negated
+    // filter); on one key set over two copies of one key-clustered
+    // table they must leave equal rows and touch the same files —
+    // rewritten (dvMaxFraction 0) or deletion-vectored (1)
+    import graft.sources.ManifestedTable
+    import spark.implicits._
+    val ev = graft.core.Tables.events(spark, sf)
+      .select("event_id", "user_id", "event_type", "value")
+      .filter(col("event_id") < 800)
+    val ids = ev.select("event_id").orderBy("event_id").collect()
+      .map(_.getLong(0))
+    // two keys in the lowest range, two in the middle, one matching
+    // nothing
+    val keys = Seq(ids(0), ids(1), ids(ids.length / 2),
+      ids(ids.length / 2 + 1), 10L * 1000 * 1000)
+    val expect = ev.filter(!col("event_id").isin(keys: _*))
+      .orderBy("event_id", "value").collect().toSeq
+    def copyDir(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
+      val all = java.nio.file.Files.walk(from)
+      try all.forEach { p =>
+        val q = to.resolve(from.relativize(p).toString)
+        if (java.nio.file.Files.isDirectory(p))
+          java.nio.file.Files.createDirectories(q)
+        else java.nio.file.Files.copy(p, q)
+      } finally all.close()
+    }
+    for (dvMax <- Seq(0.0, 1.0)) {
+      val a = tempDir("graft_delmatch")
+      val v1 = ManifestedTable.write(
+        ev.repartitionByRange(8, col("event_id")), a.toString)
+      val b = tempDir("graft_delwhere")
+      copyDir(a, b)
+      val vA = ManifestedTable.deleteMatching(spark, a.toString,
+        keys.toDF("event_id"), dvMaxFraction = dvMax)
+      val vB = ManifestedTable.deleteWhere(spark, b.toString,
+        col("event_id").isin(keys: _*), dvMaxFraction = dvMax)
+      assert(vA > v1 && vB > v1, s"dvMaxFraction $dvMax: nothing committed")
+      def rows(dir: java.nio.file.Path) = ManifestedTable.read(spark,
+        dir.toString).orderBy("event_id", "value").collect().toSeq
+      assert(rows(a) == expect, s"dvMaxFraction $dvMax: deleteMatching rows")
+      assert(rows(b) == expect, s"dvMaxFraction $dvMax: deleteWhere rows")
+      val (_, removedA) = ManifestedTable.changedFiles(spark, a.toString, v1, vA)
+      val (_, removedB) = ManifestedTable.changedFiles(spark, b.toString, v1, vB)
+      assert(removedA.toSet == removedB.toSet,
+        s"dvMaxFraction $dvMax: removed $removedA vs $removedB")
+      if (dvMax == 0.0)
+        assert(removedA.nonEmpty && removedA.size < 8,
+          s"the keys should touch some files, not all: $removedA")
+      else assert(removedA.isEmpty, s"a DV delete removed files: $removedA")
+      // the change feed names the same deleted rows on both sides
+      def cdfRemoved(dir: java.nio.file.Path, v: Long) =
+        ManifestedTable.changesBetween(spark, dir.toString, v1, v)._2
+          .select("event_id", "user_id", "event_type", "value")
+          .orderBy("event_id", "value").collect().toSeq
+      assert(cdfRemoved(a, vA) == cdfRemoved(b, vB),
+        s"dvMaxFraction $dvMax: the change feeds disagree")
+    }
+  }
+
   test("manifested table: TRUE concurrent writers — appends never lose, merges serialize or retry") {
     // no interleave hook here: four real threads hammer one table.
     // Appends are blind — every one must land (the rebase path) with

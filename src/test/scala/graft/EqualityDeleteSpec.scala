@@ -98,6 +98,7 @@ class EqualityDeleteSpec extends SparkTestBase {
           s"refusal without the compact pointer: ${e.getMessage}")
       }
       refuses(ManifestedTable.deleteWhere(spark, dir, col("k") === 1L))
+      refuses(ManifestedTable.deleteMatching(spark, dir, Seq(1L).toDF("k")))
       refuses(ManifestedTable.merge(spark, dir,
         Seq((1L, 1L)).toDF("k", "v"), Seq("k")))
       refuses(spark.sql("UPDATE gm_eq.t SET v = 0 WHERE k = 1"))
