@@ -467,19 +467,17 @@ object LlmEntry {
       s"""WITH corpus AS (${DedupOps.corpusDuck})
          |${DedupOps.exactDupsDuckBody}""".stripMargin),
 
-    Q("q34_minhash_buckets", (s, d) => {
+    Q("q34_minhash_buckets", (s, d) => core.Materialize.caching { c =>
       // LSH bucket-size histogram: the shape check that candidate
       // generation is per-bucket, never all-pairs. Signatures persist
       // before the posexplode (same generate-re-evaluation pitfall as
       // q61: an unpersisted computed array re-evals per emitted band).
-      val sig = DedupOps.signatures(DedupOps.corpus(Tables.documents(s, d)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val out = DedupOps.lshBucketsFromSig(sig)
+      val sig = c(DedupOps.signatures(DedupOps.corpus(Tables.documents(s, d))))
+      DedupOps.lshBucketsFromSig(sig)
         .groupBy(col("band_id"), col("band_key"))
         .agg(count(lit(1)).as("bucket_size"))
         .groupBy(col("band_id"), col("bucket_size"))
         .agg(count(lit(1)).as("n_buckets"))
-      core.Materialize.detached(out) { sig.unpersist(blocking = false) }
     },
       s"""WITH corpus AS (${DedupOps.corpusDuck}),
          |sigs AS (${DedupOps.signaturesDuckBody}),
@@ -489,7 +487,7 @@ object LlmEntry {
          |  GROUP BY band_id, band_key)
          |GROUP BY band_id, bucket_size""".stripMargin),
 
-    Q("q35_minhash_pairs", (s, d) => {
+    Q("q35_minhash_pairs", (s, d) => core.Materialize.caching { c =>
       // The signature table feeds the bucket self-join AND both sides of
       // the pair-estimate join — persist it once (MEMORY_AND_DISK, the
       // 100 TB-safe level for a slim doc_id+sig[12] table) instead of
@@ -497,16 +495,14 @@ object LlmEntry {
       // data-dependent in size (a dup-heavy crawl makes it comparable to
       // the corpus), so it is detached via executor-local checkpoint —
       // never pinned on the driver — before the cache is released.
-      val sig = DedupOps.signatures(DedupOps.corpus(Tables.documents(s, d)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val out = DedupOps.candidatePairs(DedupOps.lshBucketsFromSig(sig))
+      val sig = c(DedupOps.signatures(DedupOps.corpus(Tables.documents(s, d))))
+      DedupOps.candidatePairs(DedupOps.lshBucketsFromSig(sig))
         .join(sig.select(col("doc_id").as("id_a"), col("sig").as("sig_a")), "id_a")
         .join(sig.select(col("doc_id").as("id_b"), col("sig").as("sig_b")), "id_b")
         .select(col("id_a"), col("id_b"),
           expr(s"CAST(size(filter(transform(sequence(1, ${DedupOps.NumHashes}), " +
             "i -> CASE WHEN element_at(sig_a, i) = element_at(sig_b, i) THEN 1 ELSE 0 END), " +
             s"x -> x = 1)) AS DOUBLE) / ${DedupOps.NumHashes}.0").as("est_jaccard"))
-      core.Materialize.detached(out) { sig.unpersist(blocking = false) }
     },
       s"""WITH corpus AS (${DedupOps.corpusDuck}),
          |sigs AS (${DedupOps.signaturesDuckBody}),
@@ -519,16 +515,14 @@ object LlmEntry {
          |FROM pairs JOIN sigs sa ON sa.doc_id = id_a
          |           JOIN sigs sb ON sb.doc_id = id_b""".stripMargin),
 
-    Q("q36_jaccard_verify", (s, d) => {
+    Q("q36_jaccard_verify", (s, d) => core.Materialize.caching { c =>
       // Same persistence discipline: shingle sets are reused by the bucket
       // join and both sides of the verify join.
-      val c = DedupOps.corpus(Tables.documents(s, d))
-      val shingled = DedupOps.shingled(c)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val shingled =
+        c(DedupOps.shingled(DedupOps.corpus(Tables.documents(s, d))))
       val sig = DedupOps.signaturesFromShingles(shingled)
       val pairs = DedupOps.candidatePairs(DedupOps.lshBucketsFromSig(sig))
-      val out = DedupOps.jaccardVerifyShingled(shingled, pairs, JaccardThreshold)
-      core.Materialize.detached(out) { shingled.unpersist(blocking = false) }
+      DedupOps.jaccardVerifyShingled(shingled, pairs, JaccardThreshold)
     },
       s"""WITH corpus AS (${DedupOps.corpusDuck}),
          |shingled AS (${DedupOps.shingledDuckBody}),
@@ -958,7 +952,7 @@ object LlmEntry {
          |        FROM documents))""".stripMargin),
 
     // ---- benchmark decontamination --------------------------------------
-    Q("q61_decontam", (s, d) => {
+    Q("q61_decontam", (s, d) => core.Materialize.caching { c =>
       // Cross-corpus n-gram containment: train docs sharing ≥
       // ContainThreshold of a benchmark doc's RARE shingles are
       // contaminated. Two scale decisions:
@@ -972,8 +966,7 @@ object LlmEntry {
       //    the slim (doc_id, sh) table once, then explode is a cursor.
       // The planted near/exact copies of benchmark docs (DedupOps.corpus)
       // are the true positives the oracle must find.
-      val sh = DedupOps.shingled(DedupOps.corpus(Tables.documents(s, d)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sh = c(DedupOps.shingled(DedupOps.corpus(Tables.documents(s, d))))
       val ex = sh.select(col("doc_id"), explode(col("sh")).as("h"))
       // the rare set is corpus-proportional (Zipf: the tail dominates
       // the distinct-shingle universe), so it joins as a plain shuffled
@@ -991,7 +984,7 @@ object LlmEntry {
       val nb = be.groupBy(col("bench_id")).agg(count(lit(1)).as("n_bench"))
       val te = exR.filter(!isBench)
         .select(col("doc_id").as("train_id"), col("h"))
-      val out = te.join(broadcast(be), "h")
+      te.join(broadcast(be), "h")
         .groupBy(col("train_id"), col("bench_id"))
         .agg(count(lit(1)).as("n_common"))
         .join(broadcast(nb), "bench_id")
@@ -1000,7 +993,6 @@ object LlmEntry {
         .filter(col("containment") >= ContainThreshold)
         .select(col("train_id"), col("bench_id"), col("n_common"),
           col("containment"))
-      core.Materialize.detached(out) { sh.unpersist(blocking = false) }
     },
       s"""WITH corpus AS (${DedupOps.corpusDuck}),
          |shingled AS (${DedupOps.shingledDuckBody}),
@@ -1102,17 +1094,18 @@ object LlmEntry {
       // canonical survivor. Pregel-style min-label propagation over the
       // verified pair graph (DedupOps.dupComponents) — per round one
       // equi-join + one min-agg, converges in diameter rounds.
-      val c = DedupOps.corpus(Tables.documents(s, d))
-      val shingled = DedupOps.shingled(c)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val sig = DedupOps.signaturesFromShingles(shingled)
-      val pairs = DedupOps.candidatePairs(DedupOps.lshBucketsFromSig(sig))
-      val verified = DedupOps
-        .jaccardVerifyShingled(shingled, pairs, JaccardThreshold)
-        .select(col("id_a"), col("id_b"))
-      val out = DedupOps.dupComponents(verified)
-      shingled.unpersist(blocking = false)
-      out
+      // dupComponents fences its own result, so the shingle cache is
+      // released here rather than through a second fence.
+      val c = new core.Materialize.Caches
+      try {
+        val shingled =
+          c(DedupOps.shingled(DedupOps.corpus(Tables.documents(s, d))))
+        val sig = DedupOps.signaturesFromShingles(shingled)
+        val pairs = DedupOps.candidatePairs(DedupOps.lshBucketsFromSig(sig))
+        DedupOps.dupComponents(DedupOps
+          .jaccardVerifyShingled(shingled, pairs, JaccardThreshold)
+          .select(col("id_a"), col("id_b")))
+      } finally c.release()
     },
       s"""WITH RECURSIVE corpus AS (${DedupOps.corpusDuck}),
          |shingled AS (${DedupOps.shingledDuckBody}),
@@ -1213,7 +1206,7 @@ object LlmEntry {
       }),
 
     // ---- sequence packing (sample packing) ------------------------------
-    Q("q83_seq_packing", (s, d) => {
+    Q("q83_seq_packing", (s, d) => core.Materialize.caching { c =>
       // Greedy contiguous packing of docs into capacity-C token bins per
       // language: docs are laid out in deterministic doc_id order, the
       // running token total is cut at capacity boundaries, and a doc
@@ -1243,18 +1236,16 @@ object LlmEntry {
       // optimizer prunes the window out of the totals branch, so
       // exchange reuse can't share them) and tokenization dominates the
       // cost; 3 narrow columns cache cheaply at any scale.
-      val toks = docs
+      val toks = c(docs
         .select(col("lang"), col("doc_id"),
           expr(s"CAST(size(${tokensSpark("text")}) AS BIGINT)").as("n_tokens"))
-        .withColumn("shard", expr(s"doc_id DIV $span"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val out = ShardedWindows.runningSum(toks, "lang", "shard",
+        .withColumn("shard", expr(s"doc_id DIV $span")))
+      ShardedWindows.runningSum(toks, "lang", "shard",
           Seq(col("doc_id")), "n_tokens", "cum")
         .withColumn("bin_id", expr(s"(cum - n_tokens) DIV $PackCapacity"))
         .groupBy(col("lang"), col("bin_id"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("bin_tokens"),
           min(col("doc_id")).as("first_doc"))
-      core.Materialize.detached(out) { toks.unpersist(blocking = false) }
     },
       s"""WITH t AS (
          |  SELECT lang, doc_id,
@@ -1271,7 +1262,7 @@ object LlmEntry {
          |FROM c GROUP BY 1, 2""".stripMargin),
 
     // ---- TF-IDF top terms ----------------------------------------------
-    Q("q84_tfidf", (s, d) => {
+    Q("q84_tfidf", (s, d) => core.Materialize.caching { c =>
       // Per-doc top-TfidfK terms by df-normalized relevance. idf = N/df
       // instead of ln(N/df): ln's last ulp differs across libm
       // implementations, N/df is rank-equivalent (ln is monotone) and
@@ -1291,14 +1282,13 @@ object LlmEntry {
       // tf feeds BOTH the join and the df derivation — persist once
       // (same discipline as q35's signature table) so the explode +
       // aggregate over raw tokens runs a single time
-      val tf = toks.groupBy(col("doc_id"), col("term"))
-        .agg(count(lit(1)).as("tf"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val tf = c(toks.groupBy(col("doc_id"), col("term"))
+        .agg(count(lit(1)).as("tf")))
       val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       val nDocs = docs.agg(count(lit(1)).as("n_docs"))
       val w = Window.partitionBy(col("doc_id"))
         .orderBy(col("score").desc, col("term"))
-      val out = tf.join(dfreq, Seq("term"))
+      tf.join(dfreq, Seq("term"))
         .crossJoin(broadcast(nDocs))
         .withColumn("score", col("tf").cast("double") *
           col("n_docs").cast("double") / col("df").cast("double"))
@@ -1306,7 +1296,6 @@ object LlmEntry {
         .filter(col("rk") <= TfidfK)
         .select(col("doc_id"), col("term"), col("tf"), col("df"),
           col("score"), col("rk"))
-      core.Materialize.detached(out) { tf.unpersist(blocking = false) }
     },
       s"""WITH toks AS (
          |  SELECT doc_id, unnest(${tokensDuck("text")}) AS term
@@ -1446,7 +1435,7 @@ object LlmEntry {
          |WHERE rk <= $SampleK""".stripMargin),
 
     // ---- bloom-screened contamination check -----------------------------
-    Q("q89_bloom_screen", (s, d) => {
+    Q("q89_bloom_screen", (s, d) => core.Materialize.caching { c =>
       // Contamination SCREEN: train docs sharing ≥ ScreenMinHits
       // shingles with the benchmark set. q61 computes rare-shingle
       // containment (inherently needs corpus-wide df counts); this is
@@ -1469,16 +1458,14 @@ object LlmEntry {
       //      ≥ true counts, so the threshold re-applies exactly), and
       //      the no-false-negative guarantee makes the composed result
       //      bit-exact vs the all-exact oracle.
-      val sh = DedupOps.shingled(DedupOps.corpus(Tables.documents(s, d)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sh = c(DedupOps.shingled(DedupOps.corpus(Tables.documents(s, d))))
       val isBench = col("doc_id") % BenchMod === 0 &&
         col("doc_id") < DedupOps.NearCopyOffset
       // persisted: the explode+distinct shuffle feeds BOTH the eager
       // bloom build below and the broadcast verify join — without the
       // persist the benchmark-shingle aggregation would run twice
-      val bench = sh.filter(isBench).select(explode(col("sh")).as("h"))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val bench = c(sh.filter(isBench).select(explode(col("sh")).as("h"))
+        .distinct())
       // one bounded-size row (~300 KB at 2^17 items / 1e-4 fpp): a
       // sketch constant, not data — the scalar-aggregate driver
       // pattern, same as Spark's scalar-subquery runtime join filters
@@ -1489,16 +1476,12 @@ object LlmEntry {
         .filter(size(filter(col("sh"),
           x => call_function("bloom_might_contain", lit(bloom), x)))
           >= ScreenMinHits)
-      val out = suspects
+      suspects
         .select(col("doc_id").as("train_id"), explode(col("sh")).as("h"))
         .join(broadcast(bench), "h")
         .groupBy(col("train_id"))
         .agg(count(lit(1)).as("n_hits"))
         .filter(col("n_hits") >= ScreenMinHits)
-      core.Materialize.detached(out) {
-        sh.unpersist(blocking = false)
-        bench.unpersist(blocking = false)
-      }
     },
       // The oracle is ALL-EXACT (no bloom): the screen must not change the
       // result, only the plan — any bloom false negative would show here.
@@ -1516,7 +1499,7 @@ object LlmEntry {
          |HAVING count(*) >= $ScreenMinHits""".stripMargin),
 
     // ---- incremental dedup vs a reference corpus ------------------------
-    Q("q90_incremental_dedup", (s, d) => {
+    Q("q90_incremental_dedup", (s, d) => core.Materialize.caching { c =>
       // The nightly-crawl shape: dedup ONLY the new snapshot against the
       // accumulated reference corpus, and classify each new doc as
       // exact-dup / near-dup / unique (exact ≻ near). Scale contract:
@@ -1531,7 +1514,7 @@ object LlmEntry {
       //           and so bit-parity, as q36);
       //   intra-snapshot duplicates are deliberately out of scope — the
       //   full-corpus passes (q33–q36) own those; this op is the delta.
-      val c = DedupOps.corpus(Tables.documents(s, d))
+      val corpus = DedupOps.corpus(Tables.documents(s, d))
       // the planted zones are two DISJOINT ranges — a single
       // [NearCopyOffset, PlantCeil) interval would also swallow every
       // base doc in the gap [NearCopyOffset+NearCopyN, ExactCopyOffset),
@@ -1543,10 +1526,9 @@ object LlmEntry {
           col("doc_id") < DedupOps.NearCopyOffset + DedupOps.NearCopyN) ||
         (col("doc_id") >= DedupOps.ExactCopyOffset &&
           col("doc_id") < DedupOps.PlantCeil)
-      val prep = c.select(col("doc_id"),
+      val prep = c(corpus.select(col("doc_id"),
           DedupOps.contentHashSpark().as("content_hash"),
-          expr(s"shingle_hashes(text, ${DedupOps.ShingleK})").as("sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          expr(s"shingle_hashes(text, ${DedupOps.ShingleK})").as("sh")))
       val newIds = prep.filter(isNew).select(col("doc_id"))
       val exactIds = prep.filter(!isNew).select(col("content_hash"))
         .join(broadcast(prep.filter(isNew)
@@ -1570,7 +1552,7 @@ object LlmEntry {
           "CAST(size(array_union(sh_new, sh_ref)) AS DOUBLE)")
           >= JaccardThreshold)
         .select(col("new_id")).distinct()
-      val out = newIds
+      newIds
         .join(broadcast(exactIds.select(col("new_id").as("doc_id"),
           lit(true).as("is_exact"))), Seq("doc_id"), "left")
         .join(broadcast(nearIds.select(col("new_id").as("doc_id"),
@@ -1578,7 +1560,6 @@ object LlmEntry {
         .select(col("doc_id"),
           when(col("is_exact"), "exact").when(col("is_near"), "near")
             .otherwise("unique").as("verdict"))
-      core.Materialize.detached(out) { prep.unpersist(blocking = false) }
     },
       s"""WITH corpus AS (${DedupOps.corpusDuck}),
          |prep AS (
@@ -1627,7 +1608,7 @@ object LlmEntry {
          |LEFT JOIN near nr ON nr.doc_id = n.doc_id""".stripMargin),
 
     // ---- cross-document repeated-paragraph fraction ---------------------
-    Q("q92_par_dedup", (s, d) => {
+    Q("q92_par_dedup", (s, d) => core.Materialize.caching { c =>
       // The Gopher/MassiveText paragraph-level quality signal: what
       // fraction of a doc's paragraphs also appear verbatim in OTHER
       // docs. Boilerplate-heavy pages score high and get dropped; q77
@@ -1644,23 +1625,21 @@ object LlmEntry {
       // join — broadcasting it would be a driver OOM at 100 TB,
       // exactly the q61 rare-set reasoning.
       val W = ParTokens
-      val pars = DedupOps.corpus(Tables.documents(s, d))
+      val pars = c(DedupOps.corpus(Tables.documents(s, d))
         .select(col("doc_id"), expr(tokensSpark("text")).as("toks"))
         .filter(size(col("toks")) > 0)
         .select(col("doc_id"), explode(expr(
           s"""transform(sequence(1, CAST(ceil(size(toks) / $W.0) AS INT)),
              |  i -> md5(array_join(slice(toks, (i - 1) * $W + 1, $W), ' ')))"""
-            .stripMargin)).as("ph"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            .stripMargin)).as("ph")))
       val dfq = pars.groupBy(col("ph"))
         .agg(countDistinct(col("doc_id")).as("ndocs"))
-      val out = pars.join(dfq, "ph")
+      pars.join(dfq, "ph")
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_pars"),
           expr("count_if(ndocs > 1)").as("n_dup_pars"))
         .withColumn("dup_frac",
           col("n_dup_pars").cast("double") / col("n_pars").cast("double"))
-      core.Materialize.detached(out) { pars.unpersist(blocking = false) }
     },
       s"""WITH corpus AS (${DedupOps.corpusDuck}),
          |toked AS (
@@ -1685,7 +1664,7 @@ object LlmEntry {
          |FROM pars JOIN dfq USING (ph) GROUP BY 1""".stripMargin),
 
     // ---- cross-doc block dedup with document REWRITE --------------------
-    Q("q126_block_dedup_rewrite", (s, d) => {
+    Q("q126_block_dedup_rewrite", (s, d) => core.Materialize.caching { c =>
       // q92 reports the repeated-paragraph fraction; this PERFORMS the
       // RefinedWeb/C4-style repair: every block that appears verbatim
       // in more than one document is removed from ALL of them and the
@@ -1708,14 +1687,13 @@ object LlmEntry {
       // side is corpus-proportional and stays a shuffled hash join
       // (q61/q92 reasoning: broadcasting a corpus-sized table OOMs).
       val W = ParTokens
-      val blocks = DedupOps.corpus(Tables.documents(s, d))
+      val blocks = c(DedupOps.corpus(Tables.documents(s, d))
         .select(col("doc_id"), expr(tokensSpark("text")).as("toks"))
         .filter(size(col("toks")) > 0)
         .select(col("doc_id"), posexplode(expr(
           s"""transform(sequence(1, CAST(ceil(size(toks) / $W.0) AS INT)),
              |  i -> array_join(slice(toks, (i - 1) * $W + 1, $W), ' '))"""
-            .stripMargin)).as(Seq("i", "btext")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            .stripMargin)).as(Seq("i", "btext"))))
       val dfq = blocks.select(md5(col("btext").cast("binary")).as("bh"),
           col("doc_id"))
         .groupBy(col("bh")).agg(countDistinct(col("doc_id")).as("ndocs"))
@@ -1726,14 +1704,13 @@ object LlmEntry {
         .agg(count(lit(1)).as("n_kept"),
           expr("array_join(transform(array_sort(collect_list(" +
             "struct(i, btext))), x -> x.btext), ' ')").as("clean"))
-      val out = blocks.groupBy(col("doc_id"))
+      blocks.groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_blocks"))
         .join(rebuilt, Seq("doc_id"), "left")
         .select(col("doc_id"), col("n_blocks"),
           coalesce(col("n_kept"), lit(0L)).as("n_kept"),
           md5(col("clean").cast("binary")).as("clean_md5"),
           length(col("clean")).cast("long").as("clean_chars"))
-      core.Materialize.detached(out) { blocks.unpersist(blocking = false) }
     },
       // q126 mirror: same blocks (struct keeps (i, btext) paired through
       // the unnest), same ndocs=1 keep rule, same order-pinned rebuild
@@ -1835,7 +1812,7 @@ object LlmEntry {
          |FROM toks, th GROUP BY 1, 2""".stripMargin),
 
     // ---- semantic dedup (SemDeDup: cluster, then prune near-copies) ------
-    Q("q95_semantic_dedup", (s, d) => {
+    Q("q95_semantic_dedup", (s, d) => core.Materialize.caching { c =>
       // The SemDeDup curation pass: assign every embedding to its
       // nearest coarse centroid, then drop any vector with a lower-id
       // cosine-near-copy in the same cluster — keep-one verdicts, which
@@ -1853,14 +1830,13 @@ object LlmEntry {
       // expansion, and its window would otherwise run twice.
       val e = Tables.embeddings(s, d)
       val bits = nearDupBits(e)
-      val c = vecCorpus(e, bits)
+      val vecs = vecCorpus(e, bits)
         .select(col("vec_id"), col("v"), col("nrm"))
-      val cents = c.filter(col("vec_id").between(IvfCentroidLo, IvfCentroidHi))
-      val assigned = SimilarityOps.assignToCentroids(c, cents, 1)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val out = SimilarityOps.semanticDedup(assigned, bits,
+      val cents =
+        vecs.filter(col("vec_id").between(IvfCentroidLo, IvfCentroidHi))
+      val assigned = c(SimilarityOps.assignToCentroids(vecs, cents, 1))
+      SimilarityOps.semanticDedup(assigned, bits,
         CosineDupThreshold)
-      core.Materialize.detached(out) { assigned.unpersist(blocking = false) }
     },
       // q95 mirror: same planted corpus (vecCorpusDuckCtes), same arn=1
       // nearest-centroid assignment as q46, same adaptive-width sign-bucket
@@ -1944,7 +1920,7 @@ object LlmEntry {
          |FROM spans GROUP BY doc_id""".stripMargin),
 
     // ---- ANN recall report -------------------------------------------------
-    Q("q97_ann_recall", (s, d) => {
+    Q("q97_ann_recall", (s, d) => core.Materialize.caching { c =>
       // The number an ANN user actually needs (VERDICT r2 §missing-2,
       // measured in AnnRecallSpec, now a first-class query): recall@k of
       // each approximate index against the exact brute-force top-k, per
@@ -1952,12 +1928,10 @@ object LlmEntry {
       // indexes — persist once; the truth set is tiny (k·|probes|) but
       // joins three times, so it persists too. Hit counts are integers
       // and recall is one exact IEEE division — bit-stable cross-engine.
-      val p = SimilarityOps.prepped(Tables.embeddings(s, d))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val p = c(SimilarityOps.prepped(Tables.embeddings(s, d)))
       val probes = p.filter(col("vec_id") < ProbeN)
-      val truth = SimilarityOps.bruteForceTopK(p, probes, LshK)
-        .select(col("probe_id"), col("vec_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val truth = c(SimilarityOps.bruteForceTopK(p, probes, LshK)
+        .select(col("probe_id"), col("vec_id")))
       val cents = p.filter(col("vec_id").between(IvfCentroidLo, IvfCentroidHi))
       val methods = Seq(
         "ivf_nprobe3" -> SimilarityOps.ivfTopK(p, probes, cents, LshK, IvfNprobe),
@@ -1972,16 +1946,13 @@ object LlmEntry {
       // probe has fewer than k neighbors the constant ProbeN·k would
       // understate recall. One scalar row, broadcast onto the 3-row agg.
       val nTruth = truth.agg(count(lit(1)).as("n_truth"))
-      val out = approx.join(truth, Seq("probe_id", "vec_id"))
+      approx.join(truth, Seq("probe_id", "vec_id"))
         .groupBy(col("method"))
         .agg(count(lit(1)).as("n_hits"))
         .crossJoin(broadcast(nTruth))
         .select(col("method"), col("n_hits"), col("n_truth"),
           (col("n_hits").cast("double") / col("n_truth").cast("double"))
             .as("recall"))
-      core.Materialize.detached(out) {
-        truth.unpersist(blocking = false); p.unpersist(blocking = false)
-      }
     },
       // q97 mirror: truth = q38's brute force at k=$LshK; the three
       // approximate arms are q46/q39/q47's CTEs verbatim; hit counts are
@@ -2074,7 +2045,7 @@ object LlmEntry {
       }),
 
     // ---- token-budget corpus selection ------------------------------------
-    Q("q98_budget_select", (s, d) => {
+    Q("q98_budget_select", (s, d) => core.Materialize.caching { c =>
       // Quality-ordered token-budget curation: per language, admit
       // documents best-quality-first until the token budget; a doc is
       // admitted if its span STARTS under budget (the q83 rule).
@@ -2089,7 +2060,7 @@ object LlmEntry {
       // two branches can't share a plan (window pruned from the totals
       // side), and the quality regexes are the dominant cost — 4 narrow
       // columns cache cheaply.
-      val scored = qualitySpark("text").foldLeft(Tables.documents(s, d)) {
+      val scored = c(qualitySpark("text").foldLeft(Tables.documents(s, d)) {
         case (df, (n, e)) => df.withColumn(n, expr(e))
       }.withColumn("quality_score", expr(qualityScoreExpr))
         .select(col("lang"), col("doc_id"), col("n_tokens"),
@@ -2097,16 +2068,14 @@ object LlmEntry {
         // quality ∈ [0,1] (GraftProps law) → shard ∈ 0..QualityShards,
         // descending in score: shard order ≡ quality-desc order
         .withColumn("shard",
-          expr(s"CAST(floor((1.0 - quality_score) * $QualityShards) AS INT)"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val out = ShardedWindows.runningSum(scored, "lang", "shard",
+          expr(s"CAST(floor((1.0 - quality_score) * $QualityShards) AS INT)")))
+      ShardedWindows.runningSum(scored, "lang", "shard",
           Seq(col("quality_score").desc, col("doc_id")), "n_tokens", "cum")
         .filter(col("cum") - col("n_tokens") < TokenBudget)
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs_kept"),
           sum(col("n_tokens")).as("tokens_kept"),
           min(col("quality_score")).as("min_quality_kept"))
-      core.Materialize.detached(out) { scored.unpersist(blocking = false) }
     },
       // q98 mirror: quality_score is the q30-parity expression; the
       // running sum is over BIGINT token counts (integer window sums are
@@ -2173,7 +2142,7 @@ object LlmEntry {
          |  SELECT unnest(${tokensDuck("text")}) AS tok FROM documents)
          |GROUP BY tok ORDER BY cnt DESC, tok LIMIT $TopK""".stripMargin),
 
-    Q("q101_surprisal", (s, d) => {
+    Q("q101_surprisal", (s, d) => core.Materialize.caching { c =>
       // Unigram-LM quality filter (the CCNet/RedPajama "perplexity
       // filter" family member), made bit-exact: token surprisal is
       // computed in WHOLE BITS as floor(log2(N/cnt)) =
@@ -2189,12 +2158,11 @@ object LlmEntry {
       // bits·16 > 65·n_toks ⟺ mean > 4.0625 bits/token — no float
       // boundary can disagree between engines. Per-lang report:
       // integer sums + ONE IEEE division per output row.
-      val pair = Tables.documents(s, d)
+      val pair = c(Tables.documents(s, d)
         .select(col("doc_id"), col("lang"),
           explode(expr(tokensSpark("text"))).as("tok"))
         .groupBy(col("doc_id"), col("lang"), col("tok"))
-        .agg(count(lit(1)).as("k"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .agg(count(lit(1)).as("k")))
       val tf = pair.groupBy(col("tok")).agg(sum(col("k")).as("cnt"))
       val n = tf.agg(sum(col("cnt")).as("n"))
       val tokBits = tf.crossJoin(broadcast(n))
@@ -2204,7 +2172,7 @@ object LlmEntry {
         .groupBy(col("doc_id"), col("lang"))
         .agg(sum(col("k") * col("bits")).as("bits"),
           sum(col("k")).as("n_toks"))
-      val out = perDoc.groupBy(col("lang"))
+      perDoc.groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"),
           sum(when(col("bits") * SurprisalFlagDen >
             col("n_toks") * SurprisalFlagNum, 1L).otherwise(0L))
@@ -2214,7 +2182,6 @@ object LlmEntry {
         .withColumn("bits_per_token",
           col("total_bits").cast("double") /
             col("total_tokens").cast("double"))
-      core.Materialize.detached(out) { pair.unpersist(blocking = false) }
     },
       // q101 mirror: Spark length(bin(x)) ≡ DuckDB length(format('{:b}', x))
       // (binary digits of a positive BIGINT, no leading zeros); everything
@@ -2283,7 +2250,7 @@ object LlmEntry {
          |    AS BIGINT) AS target_docs
          |FROM counts CROSS JOIN z""".stripMargin),
 
-    Q("q103_hash_embed", (s, d) => {
+    Q("q103_hash_embed", (s, d) => core.Materialize.caching { c =>
       // Feature-hash text embeddings (the hashing trick) + exact
       // retrieval — text becomes a vector with NO model: bucket
       // j = h(tok) mod D, sign from the next hash bit, weight = token
@@ -2305,9 +2272,8 @@ object LlmEntry {
         .withColumn("j", col("h") % HashDim)
         .withColumn("w",
           expr(s"k * (CASE WHEN (h DIV $HashDim) % 2 = 0 THEN 1L ELSE -1L END)"))
-      val buckets = pair.groupBy(col("doc_id"), col("j"))
-        .agg(sum(col("w")).as("w"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val buckets = c(pair.groupBy(col("doc_id"), col("j"))
+        .agg(sum(col("w")).as("w")))
       val norms = buckets.groupBy(col("doc_id"))
         .agg(sum(col("w") * col("w")).as("n2")).filter(col("n2") > 0)
       val probeB = buckets.filter(col("doc_id") < ProbeN)
@@ -2325,10 +2291,9 @@ object LlmEntry {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("probe_id"))
         .orderBy(col("cosine").desc, col("doc_id"))
-      val out = scored
+      scored
         .withColumn("rk", row_number().over(w)).filter(col("rk") <= LshK)
         .select(col("probe_id"), col("doc_id"), col("cosine"))
-      core.Materialize.detached(out) { buckets.unpersist(blocking = false) }
     },
       // q103 mirror: the relational cosine — integer product-sums joined
       // on the hash bucket; sqrt·sqrt then one division, same op sequence
@@ -2367,20 +2332,16 @@ object LlmEntry {
          |  JOIN norms pn ON d.probe_id = pn.doc_id)
          |WHERE rk <= $LshK""".stripMargin),
 
-    Q("q106_bm25", (s, d) => {
-      val (out, release) = bm25Plan(s, d)
-      core.Materialize.detached(out)(release())
-    },
+    Q("q106_bm25", (s, d) =>
+      core.Materialize.caching(bm25Plan(s, d)),
       // q106 mirror: the same whole-bit idf (format('{:b}', …) ≡ bin),
       // the same IEEE op sequence per term score, and the q102
       // order-pinned fold (list_prepend(0.0) ≡ the 0.0-initialized
       // aggregate; 0.0 + x0 = x0 exactly)
       Bm25DuckSql),
 
-    Q("q107_dsir_weights", (s, d) => {
-      val (out, release) = dsirPlan(s, d)
-      core.Materialize.detached(out)(release())
-    },
+    Q("q107_dsir_weights", (s, d) =>
+      core.Materialize.caching(dsirPlan(s, d)),
       // q107 mirror: identical hashed-feature construction (1-based list
       // indexing ≡ element_at; range(1, len) is end-exclusive ≡
       // sequence(1, len−1) inclusive), identical whole-bit llr via
@@ -2434,8 +2395,7 @@ object LlmEntry {
       // identity and the one-shuffle scale shape. Reported per source
       // (the corpus-level audit view); per-doc decisions + planted
       // on/off-distribution recall are pinned in LlmOpsSpec.
-      val (out, release) = nbClassifierPlanOn(Tables.documents(s, d))
-      core.Materialize.detached(out)(release())
+      core.Materialize.caching(nbClassifierPlanOn(Tables.documents(s, d)))
     },
       // q165 mirror: identical feature CTEs as q107; class counts via
       // FILTERed sums, the same bit-length log-odds, the same integer
@@ -2483,7 +2443,7 @@ object LlmEntry {
          |FROM scored GROUP BY source""".stripMargin),
 
     // ---- hybrid retrieval: reciprocal-rank fusion -----------------------
-    Q("q173_rrf_fusion", (s, d) => {
+    Q("q173_rrf_fusion", (s, d) => core.Materialize.caching { c =>
       // the production retrieval stack's merge step: a LEXICAL ranker
       // (q106 BM25 more-like-this) and a SEMANTIC one (q38 brute-force
       // cosine) rank the same corpus for the same probes, and RRF
@@ -2498,7 +2458,7 @@ object LlmEntry {
       // stays inside the rankers, which is the point of fusing ranks
       // instead of re-scoring.
       import org.apache.spark.sql.expressions.Window
-      val (bm, release) = bm25Plan(s, d)
+      val bm = bm25Plan(s, d)(c)
       val lex = bm.select(col("query_id"), col("doc_id"),
         col("rk").cast("long").as("rk"))
       val p = SimilarityOps.prepped(Tables.embeddings(s, d))
@@ -2508,13 +2468,12 @@ object LlmEntry {
           col("rk").cast("long").as("rk"))
       val w = Window.partitionBy(col("query_id"))
         .orderBy(col("rrf").desc, col("doc_id"))
-      val out = lex.unionAll(sem)
+      lex.unionAll(sem)
         .withColumn("pts", expr(s"$RrfScale DIV ($RrfK + rk)"))
         .groupBy(col("query_id"), col("doc_id"))
         .agg(sum(col("pts")).as("rrf"), count(lit(1)).as("n_lists"))
         .withColumn("rk", row_number().over(w).cast("long"))
         .filter(col("rk") <= FusedK)
-      core.Materialize.detached(out)(release())
     },
       // q173 mirror: both ranker CTEs are the SAME oracle texts as
       // q106/q38 (shared vals — rank drift would be a bug), fused on
@@ -2648,8 +2607,7 @@ object LlmEntry {
       // the per-term bit lengths never do. Marginals are aggregated from
       // the COMPRESSED bigram table (≤ |vocab|² rows, web-real ~1e9),
       // not by re-scanning the token stream; N is one scalar broadcast.
-      val (out, release) = pmiPlanOn(Tables.documents(s, d))
-      core.Materialize.detached(out)(release())
+      core.Materialize.caching(pmiPlanOn(Tables.documents(s, d)))
     },
       // q114 mirror: 1-based tk[i] ≡ element_at, range end-exclusive ≡
       // sequence inclusive (the q107 equivalences), whole-bit pmi via
@@ -2698,8 +2656,7 @@ object LlmEntry {
       // nothing else broadcasts as a scalar; the transition-bits table
       // joins back unhinted (bigram vocabulary is corpus-proportional —
       // the q84 no-forced-broadcast reasoning).
-      val (out, release) = bigramLmPlanOn(Tables.documents(s, d))
-      core.Materialize.detached(out)(release())
+      core.Materialize.caching(bigramLmPlanOn(Tables.documents(s, d)))
     },
       // q132 mirror: same compressed per-doc transition table, same add-1
       // whole-bit surprisal ((c_a + V) // (c_ab + 1) then bin length),
@@ -2825,8 +2782,7 @@ object LlmEntry {
       // corpus-wide shuffle is the distinct (source, shingle) pair
       // table — q93's cost class. One IEEE division per output row,
       // identical sequence in the oracle.
-      val (out, release) = overlapPlanOn(Tables.documents(s, d))
-      core.Materialize.detached(out)(release())
+      core.Materialize.caching(overlapPlanOn(Tables.documents(s, d)))
     },
       // q118 mirror: same distinct (source, shingle) table (per-doc
       // distinctness subsumed by the source-level DISTINCT), same
@@ -2853,10 +2809,8 @@ object LlmEntry {
          |JOIN counts cb ON source_b = cb.source""".stripMargin),
 
     // ---- product quantization + ADC retrieval ---------------------------
-    Q("q119_pq_adc", (s, d) => {
-      val (out, release) = pqAdcPlan(s, d)
-      core.Materialize.detached(out)(release())
-    },
+    Q("q119_pq_adc", (s, d) =>
+      core.Materialize.caching(pqAdcPlan(s, d)),
       // q119 mirror: identical quantization, 1-based list_slice ≡ slice,
       // identical integer subvector distances, identical one-Lloyd-step
       // codebook training (floor-div means via the pmod-subtraction trick,
@@ -2899,10 +2853,8 @@ object LlmEntry {
          |WHERE rk <= $LshK""".stripMargin),
 
     // ---- IVFADC: coarse inverted lists × PQ residual codes --------------
-    Q("q120_ivfadc", (s, d) => {
-      val (out, release) = ivfadcPlan(s, d)
-      core.Materialize.detached(out)(release())
-    },
+    Q("q120_ivfadc", (s, d) =>
+      core.Materialize.caching(ivfadcPlan(s, d)),
       // q120 mirror: identical coarse assignment (full-width integer L2,
       // (cd2, cc) tie order), identical residuals, the shared trained-book
       // CTEs over residual subvectors, identical per-cell ADC tables and
@@ -2980,7 +2932,7 @@ object LlmEntry {
          |LIMIT $DriftTopK""".stripMargin),
 
     // ---- random-projection (JL) compression + retrieval -----------------
-    Q("q127_random_projection", (s, d) => {
+    Q("q127_random_projection", (s, d) => core.Materialize.caching { c =>
       // The Johnson-Lindenstrauss tier of the embedding-compression
       // family (int8 q88 shrinks the CELLS, PQ q119 shrinks to CODES;
       // this shrinks the DIMENSIONS): a deterministic ±1 sign matrix —
@@ -3008,9 +2960,8 @@ object LlmEntry {
       // (The projection itself is the UNROLLED codegen form — see
       // rpProjSpark: the HOF-lambda form evaluated interpreted and
       // measured 8× slower for the whole query at sf0.1.)
-      val proj = quantVecs(s, d).select(col("vec_id"),
-        rpProjSpark.as("p"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val proj = c(quantVecs(s, d).select(col("vec_id"),
+        rpProjSpark.as("p")))
       val probes = proj.filter(col("vec_id") < ProbeN)
         .select(col("vec_id").as("probe_id"), col("p").as("pp"))
       val scored = proj.crossJoin(broadcast(probes))
@@ -3018,10 +2969,9 @@ object LlmEntry {
         .withColumn("proj_d2", expr("int_l2sq(p, pp)"))
       val w = Window.partitionBy(col("probe_id"))
         .orderBy(col("proj_d2"), col("vec_id"))
-      val out = scored.withColumn("rk", row_number().over(w).cast("long"))
+      scored.withColumn("rk", row_number().over(w).cast("long"))
         .filter(col("rk") <= LshK)
         .select(col("probe_id"), col("vec_id"), col("proj_d2"), col("rk"))
-      core.Materialize.detached(out) { proj.unpersist(blocking = false) }
     },
       // q127 mirror: identical sign hash (same integer mix, // ≡ div on
       // the non-negative operands), identical projected-L2 tie order
@@ -3048,10 +2998,8 @@ object LlmEntry {
          |WHERE rk <= $LshK""".stripMargin),
 
     // ---- IVFADC + exact re-rank (the refine tier) -----------------------
-    Q("q125_ivfadc_rerank", (s, d) => {
-      val (out, release) = ivfadcRerankPlan(s, d)
-      core.Materialize.detached(out)(release())
-    },
+    Q("q125_ivfadc_rerank", (s, d) =>
+      core.Materialize.caching(ivfadcRerankPlan(s, d)),
       // q125 mirror: q120's chain cut at RerankR, then exact full-width
       // integer L2 over just the candidates, re-ranked (exact_d2, vec_id)
       s"""$ivfadcCtesDuck,
@@ -3076,10 +3024,8 @@ object LlmEntry {
          |WHERE rk <= $LshK""".stripMargin),
 
     // ---- end-to-end curation pipeline -----------------------------------
-    Q("q121_curation_pipeline", (s, d) => {
-      val (out, release) = curationPlan(s, d)
-      core.Materialize.detached(out)(release())
-    },
+    Q("q121_curation_pipeline", (s, d) =>
+      core.Materialize.caching(curationPlan(s, d)),
       // q121 mirror: the five stage mirrors chained verbatim — q113's
       // window cap, q101's whole-bit LM (LEFT join + coalesce for
       // token-less docs), q33's keep-first hash window, q36's
@@ -3259,18 +3205,17 @@ object LlmEntry {
     * sources, identical sources, sub-shingle docs).
     */
   private[graft] def overlapPlanOn(docs: DataFrame)
-      : (DataFrame, () => Unit) = {
-    val ss = docs
+      (c: core.Materialize.Caches): DataFrame = {
+    val ss = c(docs
       .selectExpr("source", s"shingle_rows(text, ${DedupOps.ShingleK})")
-      .select(col("source"), col("h")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("source"), col("h")).distinct())
     val counts = ss.groupBy(col("source")).agg(count(lit(1)).as("n_sh"))
     val shared = ss
       .join(ss.select(col("source").as("source_b"), col("h")), "h")
       .filter(col("source") < col("source_b"))
       .groupBy(col("source").as("source_a"), col("source_b"))
       .agg(count(lit(1)).as("n_shared"))
-    val out = shared
+    shared
       .join(broadcast(counts.select(col("source").as("source_a"),
         col("n_sh").as("n_a"))), "source_a")
       .join(broadcast(counts.select(col("source").as("source_b"),
@@ -3280,7 +3225,6 @@ object LlmEntry {
         (col("n_shared").cast("double") /
           (col("n_a") + col("n_b") - col("n_shared")).cast("double"))
           .as("jaccard"))
-    (out, () => ss.unpersist(blocking = false))
   }
 
   /** q132's plan over an explicit documents table (LlmOpsSpec feeds a
@@ -3290,18 +3234,17 @@ object LlmEntry {
     */
   private[graft] def bigramLmPlanOn(docsIn: DataFrame,
                                     perDoc: Boolean = false)
-      : (DataFrame, () => Unit) = {
+      (c: core.Materialize.Caches): DataFrame = {
     val docs = docsIn
       .select(col("doc_id"), col("lang"), expr(tokensSpark("text")).as("tk"))
       .filter(size(col("tk")) >= 2)
-    val pair = docs
+    val pair = c(docs
       .select(col("doc_id"), col("lang"), explode(expr(
         "transform(sequence(1, size(tk) - 1), i -> named_struct(" +
           "'a', element_at(tk, i), 'b', element_at(tk, i + 1)))")).as("p"))
       .groupBy(col("doc_id"), col("lang"),
         col("p.a").as("a"), col("p.b").as("b"))
-      .agg(count(lit(1)).as("k"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("k")))
     val cab = pair.groupBy(col("a"), col("b"))
       .agg(sum(col("k")).as("c_ab"))
     val ca = cab.groupBy(col("a")).agg(sum(col("c_ab")).as("c_a"))
@@ -3318,21 +3261,21 @@ object LlmEntry {
       .withColumn("flagged",
         (col("bits") * SurprisalFlagDen >
           col("n_trans") * SurprisalFlagNum).cast("long"))
-    val out =
-      if (perDoc) db
-      else db
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("flagged")).as("n_flagged"),
-          sum(col("bits")).as("sum_bits"), sum(col("n_trans")).as("sum_trans"))
-        .withColumn("avg_bits",
-          col("sum_bits").cast("double") / col("sum_trans").cast("double"))
-    (out, () => pair.unpersist(blocking = false))
+    if (perDoc) db
+    else db
+      .groupBy(col("lang"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("flagged")).as("n_flagged"),
+        sum(col("bits")).as("sum_bits"), sum(col("n_trans")).as("sum_trans"))
+      .withColumn("avg_bits",
+        col("sum_bits").cast("double") / col("sum_trans").cast("double"))
   }
 
   /** q114's plan over an explicit corpus (EdgeCaseSpec feeds degenerate
-    * docs through the same plan). Returns (plan, release-caches).
+    * docs through the same plan). Returns the unfenced plan; its
+    * intermediates persist in `c`.
     */
-  private[graft] def pmiPlanOn(docs: DataFrame): (DataFrame, () => Unit) = {
+  private[graft] def pmiPlanOn(docs: DataFrame)
+      (c: core.Materialize.Caches): DataFrame = {
     val tk = docs
       .select(expr(tokensSpark("text")).as("tk"))
       .filter(size(col("tk")) >= 2)
@@ -3340,13 +3283,12 @@ object LlmEntry {
       "transform(sequence(1, size(tk) - 1), i -> named_struct(" +
         "'a', element_at(tk, i), 'b', element_at(tk, i + 1)))")).as("p"))
       .select(col("p.a").as("a"), col("p.b").as("b"))
-    val cab = big.groupBy(col("a"), col("b"))
-      .agg(count(lit(1)).as("c_ab"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cab = c(big.groupBy(col("a"), col("b"))
+      .agg(count(lit(1)).as("c_ab")))
     val ca = cab.groupBy(col("a")).agg(sum(col("c_ab")).as("c_a"))
     val cb = cab.groupBy(col("b")).agg(sum(col("c_ab")).as("c_b"))
     val n = cab.agg(sum(col("c_ab")).as("n_big"))
-    val out = cab.filter(col("c_ab") >= PmiMinCount)
+    cab.filter(col("c_ab") >= PmiMinCount)
       .join(ca, "a").join(cb, "b").crossJoin(broadcast(n))
       .withColumn("pmi_bits", expr(
         s"(${bitsSpark("c_ab")} + ${bitsSpark("n_big")})" +
@@ -3355,7 +3297,6 @@ object LlmEntry {
       .limit(PmiTopK)
       .select(col("a"), col("b"), col("c_ab"), col("c_a"), col("c_b"),
         col("pmi_bits"))
-    (out, () => cab.unpersist(blocking = false))
   }
 
   /** q115's plan over an explicit embeddings table (EdgeCaseSpec feeds
@@ -3421,7 +3362,8 @@ object LlmEntry {
 
   /** q106 plan builder, un-detached so PlanAuditSpec can assert the
     * physical shape (Materialize.detached hides the plan behind an
-    * ExistingRDD scan). Returns (plan, release-upstream-caches).
+    * ExistingRDD scan). Its intermediates persist in `c`, so the
+    * caller fences the plan with [[core.Materialize.caching]].
     *
     * BM25 lexical "more-like-this" retrieval — the standard lexical
     * ranking baseline a curation pipeline runs beside the embedding
@@ -3449,19 +3391,19 @@ object LlmEntry {
     * map-side).
     */
   private[graft] def bm25Plan(s: SparkSession, d: String)
-      : (DataFrame, () => Unit) = bm25PlanOn(Tables.documents(s, d))
+      (c: core.Materialize.Caches): DataFrame =
+    bm25PlanOn(Tables.documents(s, d))(c)
 
   /** [[bm25Plan]] over an explicit corpus — EdgeCaseSpec feeds
     * degenerate in-memory docs through the same plan.
     */
   private[graft] def bm25PlanOn(docs: DataFrame)
-      : (DataFrame, () => Unit) = {
+      (c: core.Materialize.Caches): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val tf = docs
+    val tf = c(docs
       .select(col("doc_id"), explode(expr(tokensSpark("text"))).as("term"))
       .filter(col("term") =!= "")
-      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf")))
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
     val stats = dl.agg(count(lit(1)).as("n_docs"),
       sum(col("dl")).as("tot_toks"))
@@ -3498,16 +3440,15 @@ object LlmEntry {
           .as("score"))
     val wk = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("doc_id"))
-    val out = scored
+    scored
       .withColumn("rk", row_number().over(wk).cast("long"))
       .filter(col("rk") <= Bm25TopK)
       .select(col("query_id"), col("doc_id"), col("n_terms"),
         col("score"), col("rk"))
-    (out, () => tf.unpersist(blocking = false))
   }
 
   /** q107 plan builder, un-detached for the same PlanAuditSpec reason
-    * as [[bm25Plan]]. Returns (plan, release-upstream-caches).
+    * as [[bm25Plan]]; its intermediates persist in `c`.
     *
     * DSIR-style data selection (Xie et al. 2023, "Data Selection for
     * Language Models via Importance Resampling"): hashed n-gram
@@ -3530,7 +3471,8 @@ object LlmEntry {
     * report is a distributed top-k (TakeOrderedAndProject).
     */
   private[graft] def dsirPlan(s: SparkSession, d: String)
-    : (DataFrame, () => Unit) = dsirPlanOn(Tables.documents(s, d))
+      (c: core.Materialize.Caches): DataFrame =
+    dsirPlanOn(Tables.documents(s, d))(c)
 
   /** Hashed uni+bigram feature table (doc_id, source, b, cnt) — the
     * L48/L50 hashing-trick machinery shared by q107 (DSIR importance
@@ -3560,9 +3502,8 @@ object LlmEntry {
     * degenerate in-memory docs through the same plan.
     */
   private[graft] def dsirPlanOn(docs: DataFrame)
-    : (DataFrame, () => Unit) = {
-    val feats = hashedFeatsOn(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      (c: core.Materialize.Caches): DataFrame = {
+    val feats = c(hashedFeatsOn(docs))
     val raw = feats.groupBy(col("b"))
       .agg((sum(col("cnt")) + 1L).as("c_r"))
     val tgt = feats.filter(col("source") === DsirTarget)
@@ -3587,11 +3528,10 @@ object LlmEntry {
     // (per-partition heaps, k rows to the driver-side merge) — a
     // global row_number window would funnel every doc through ONE
     // partition
-    val out = weights
+    weights
       .orderBy(col("weight").desc, col("doc_id"))
       .limit(DsirTopK)
       .select(col("doc_id"), col("source"), col("n_feats"), col("weight"))
-    (out, () => feats.unpersist(blocking = false))
   }
 
   /** Per-doc scores of the q165 multinomial Naive-Bayes quality
@@ -3614,11 +3554,11 @@ object LlmEntry {
     * table); class counts collapse to ≤ B rows; the weight table is B
     * rows broadcast back into the per-doc aggregate — the corpus never
     * shuffles a second time. Returns (doc_id, source, n_feats, score);
-    * release() drops the shared feature cache.
+    * the shared feature table persists in `c`.
     */
-  private[graft] def nbScoresOn(docs: DataFrame): (DataFrame, () => Unit) = {
-    val feats = hashedFeatsOn(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  private[graft] def nbScoresOn(docs: DataFrame)
+      (c: core.Materialize.Caches): DataFrame = {
+    val feats = c(hashedFeatsOn(docs))
     val cls = feats.groupBy(col("b")).agg(
       coalesce(sum(when(col("source") === DsirTarget, col("cnt"))), lit(0L))
         .as("c_pos"),
@@ -3633,11 +3573,10 @@ object LlmEntry {
            |   - CAST(length(bin(np0 + $DsirBuckets)) AS BIGINT))"""
           .stripMargin))
       .select(col("b"), col("w"))
-    val scored = feats.join(broadcast(wts), "b")
+    feats.join(broadcast(wts), "b")
       .groupBy(col("doc_id"), col("source"))
       .agg(sum(col("cnt")).as("n_feats"),
         sum(col("cnt") * col("w")).as("score"))
-    (scored, () => feats.unpersist(blocking = false))
   }
 
   /** q165 report: per-source keep counts under the trained classifier —
@@ -3646,16 +3585,13 @@ object LlmEntry {
     * IEEE division per output row for the kept fraction.
     */
   private[graft] def nbClassifierPlanOn(docs: DataFrame)
-      : (DataFrame, () => Unit) = {
-    val (scored, release) = nbScoresOn(docs)
-    val out = scored.groupBy(col("source"))
+      (c: core.Materialize.Caches): DataFrame =
+    nbScoresOn(docs)(c).groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("score") > 0, 1L).otherwise(0L)).as("n_kept"),
         sum(col("score")).as("total_score"))
       .withColumn("kept_frac",
         col("n_kept").cast("double") / col("n_docs").cast("double"))
-    (out, release)
-  }
 
   /** q119 plan builder (un-detached for PlanAuditSpec/ScaleBench).
     *
@@ -3686,19 +3622,17 @@ object LlmEntry {
     * with IVF partitioning into the scanned-fraction retrieval tier.
     */
   private[graft] def pqAdcPlan(s: SparkSession, d: String)
-      : (DataFrame, () => Unit) = {
+      (c: core.Materialize.Caches): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val dv = Tables.embeddings(s, d).select(col("vec_id"),
       expr(s"transform(${SimilarityOps.toDoubleSpark("embedding")}, " +
         s"x -> CAST(floor(x * $PqQuant) AS BIGINT))").as("q"))
-    val sub = dv.select(col("vec_id"), explode(pqSubvectors("q")).as("p"))
-      .select(col("vec_id"), col("p.j").as("j"), col("p.s").as("s"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sub = c(dv.select(col("vec_id"), explode(pqSubvectors("q")).as("p"))
+      .select(col("vec_id"), col("p.j").as("j"), col("p.s").as("s")))
     val book = pqTrainedBook(sub)
-    val dist = sub.join(broadcast(book), col("j") === col("cj"))
+    val dist = c(sub.join(broadcast(book), col("j") === col("cj"))
       .withColumn("d2", pqD2Spark("s", "cs"))
-      .select(col("vec_id"), col("j"), col("c"), col("d2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("vec_id"), col("j"), col("c"), col("d2")))
     val w1 = Window.partitionBy(col("vec_id"), col("j"))
       .orderBy(col("d2"), col("c"))
     val codes = dist.withColumn("rk", row_number().over(w1))
@@ -3715,12 +3649,8 @@ object LlmEntry {
       .agg(sum(col("d2")).as("adc_dist"))
     val w2 = Window.partitionBy(col("probe_id"))
       .orderBy(col("adc_dist"), col("vec_id"))
-    val out = adc.withColumn("rk", row_number().over(w2).cast("long"))
+    adc.withColumn("rk", row_number().over(w2).cast("long"))
       .filter(col("rk") <= LshK)
-    (out, () => {
-      dist.unpersist(blocking = false)
-      sub.unpersist(blocking = false)
-    })
   }
 
   /** The corpus on q119's integer grid: (vec_id, q BIGINT[64]). */
@@ -3763,7 +3693,7 @@ object LlmEntry {
   private[graft] def ivfadcPlan(s: SparkSession, d: String,
                                 nprobe: Int = IvfNprobe,
                                 topK: Int = LshK)
-      : (DataFrame, () => Unit) = {
+      (c: core.Materialize.Caches): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val dv = quantVecs(s, d)
     val cd2 = pqD2Spark("q", "cq") // same form; 64-dim arrays here
@@ -3813,11 +3743,10 @@ object LlmEntry {
         struct(col("cd2"), col("cc"))).as("a"), first(col("q")).as("q"))
       .select(col("vec_id"), col("a.cc").as("cid"),
         expr("zip_with(q, a.cq, (x, y) -> x - y)").as("r"))
-    val rsub = assigned
+    val rsub = c(assigned
       .select(col("vec_id"), col("cid"), explode(pqSubvectors("r")).as("p"))
       .select(col("vec_id"), col("cid"), col("p.j").as("j"),
-        col("p.s").as("s"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        col("p.s").as("s")))
     val book = pqTrainedBook(rsub.select("vec_id", "j", "s"))
     val codes = rsub.join(broadcast(book), col("j") === col("cj"))
       .withColumn("d2", pqD2Spark("s", "cs"))
@@ -3850,11 +3779,10 @@ object LlmEntry {
       .agg(sum(col("pd2")).as("adc_dist"))
     val w2 = Window.partitionBy(col("probe_id"))
       .orderBy(col("adc_dist"), col("vec_id"))
-    val out = adc.withColumn("rk", row_number().over(w2).cast("long"))
+    adc.withColumn("rk", row_number().over(w2).cast("long"))
       .filter(col("rk") <= topK)
       .select(col("probe_id"), col("vec_id"), col("cid"),
         col("adc_dist"), col("rk"))
-    (out, () => rsub.unpersist(blocking = false))
   }
 
   /** q125 plan builder: IVFADC + exact re-rank (faiss's refine tier,
@@ -3881,10 +3809,10 @@ object LlmEntry {
     * independent of corpus size.
     */
   private[graft] def ivfadcRerankPlan(s: SparkSession, d: String)
-      : (DataFrame, () => Unit) = {
+      (c: core.Materialize.Caches): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val (adcTop, release) = ivfadcPlan(s, d, IvfNprobe, RerankR)
-    val cand = adcTop.select(col("probe_id"), col("vec_id"), col("adc_dist"))
+    val cand = ivfadcPlan(s, d, IvfNprobe, RerankR)(c)
+      .select(col("probe_id"), col("vec_id"), col("adc_dist"))
     val dv = quantVecs(s, d)
     val probes = dv.filter(col("vec_id") < ProbeN)
       .select(col("vec_id").as("probe_id"), col("q").as("pq"))
@@ -3893,11 +3821,10 @@ object LlmEntry {
       .withColumn("exact_d2", pqD2Spark("q", "pq")) // full-width 64-dim L2
     val w = Window.partitionBy(col("probe_id"))
       .orderBy(col("exact_d2"), col("vec_id"))
-    val out = exact.withColumn("rk", row_number().over(w).cast("long"))
+    exact.withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= LshK)
       .select(col("probe_id"), col("vec_id"), col("adc_dist"),
         col("exact_d2"), col("rk"))
-    (out, release)
   }
 
   /** q121 plan builder (un-detached for PlanAuditSpec).
@@ -3956,9 +3883,8 @@ object LlmEntry {
     * 35→7 s fix).
     */
   private[graft] def curationPlan(s: SparkSession, d: String)
-      : (DataFrame, () => Unit) = {
+      (c: core.Materialize.Caches): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val docs = Tables.documents(s, d).select(col("doc_id"), col("source"),
       col("text"))
     // the q33/q36 planted-duplicate corpus, with source carried through
@@ -3971,21 +3897,18 @@ object LlmEntry {
         col("source"),
         expr(s"substr(text, length(element_at(${tokensSpark("text")}, 1)) + 2)")
           .as("text"))
-    val c0 = docs.unionAll(exact).unionAll(near)
+    val c0 = c(docs.unionAll(exact).unionAll(near)
       .withColumn("n_uniq",
-        expr(s"CAST(size(array_distinct(${tokensSpark("text")})) AS BIGINT)"))
-      .persist(lvl)
+        expr(s"CAST(size(array_distinct(${tokensSpark("text")})) AS BIGINT)")))
     // stage 1: per-source cap
     val w1 = Window.partitionBy(col("source"))
       .orderBy(col("n_uniq").desc, col("doc_id"))
-    val s1 = c0.withColumn("rk", row_number().over(w1))
-      .filter(col("rk") <= PipeCapPerSource).drop("rk")
-      .persist(lvl)
+    val s1 = c(c0.withColumn("rk", row_number().over(w1))
+      .filter(col("rk") <= PipeCapPerSource).drop("rk"))
     // stage 2: unigram-surprisal quality filter, LM fit on s1
-    val pair = s1
+    val pair = c(s1
       .select(col("doc_id"), explode(expr(tokensSpark("text"))).as("tok"))
-      .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("k"))
-      .persist(lvl)
+      .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("k")))
     val tf = pair.groupBy(col("tok")).agg(sum(col("k")).as("cnt"))
     val nTot = tf.agg(sum(col("cnt")).as("n"))
     val tokBits = tf.crossJoin(broadcast(nTot))
@@ -4034,9 +3957,8 @@ object LlmEntry {
     // lineage over an already-materialized parent.
     val isBench = col("doc_id") % BenchMod === 0 &&
       col("doc_id") < DedupOps.NearCopyOffset
-    val benchSh = DedupOps
-      .shingled(c0.select(col("doc_id"), col("text")).filter(isBench))
-      .persist(lvl)
+    val benchSh = c(DedupOps
+      .shingled(c0.select(col("doc_id"), col("text")).filter(isBench)))
     val survSh = DedupOps.shingled(s3.select(col("doc_id"), col("text")))
       .transform(core.Materialize.detached(_)(()))
     // stage 4: near dedup over survivors (banded candidates only)
@@ -4049,9 +3971,8 @@ object LlmEntry {
       .transform(core.Materialize.detached(_)(()))
     // stage 5: decontamination against the benchmark shingle universe
     // (fixed eval suite: bench docs of the BASE corpus, q89's set)
-    val bench = benchSh.select(explode(col("sh")).as("h"))
-      .distinct()
-      .persist(lvl)
+    val bench = c(benchSh.select(explode(col("sh")).as("h"))
+      .distinct())
     val bloom = bench
       .agg(expr(s"bloom_build(h, ${BloomExpected}L, ${BloomFpp}d)"))
       .head().getAs[Array[Byte]](0)
@@ -4090,12 +4011,11 @@ object LlmEntry {
     val z = counts5.agg(expr(
       """aggregate(array_sort(collect_list(sqrt(CAST(n_docs AS DOUBLE)))),
         |  CAST(0.0 AS DOUBLE), (a, x) -> a + x)""".stripMargin).as("z"))
-    val targets = counts5.crossJoin(broadcast(z))
+    val targets = c(counts5.crossJoin(broadcast(z))
       .select(col("source"),
         (sqrt(col("n_docs").cast("double")) / col("z")).as("weight"),
         expr(s"CAST(floor($MixTargetDocs * sqrt(CAST(n_docs AS DOUBLE)) / z) AS BIGINT)")
-          .as("target_docs"))
-      .persist(lvl)
+          .as("target_docs")))
     targets.count() // same discipline for the last multi-consumer frame
     val w6 = Window.partitionBy(col("source"))
       .orderBy(col("n_uniq").desc, col("doc_id"))
@@ -4106,7 +4026,7 @@ object LlmEntry {
     // per-source attrition accounting (|sources|-row joins)
     def stageCount(df: DataFrame, name: String) =
       df.groupBy(col("source")).agg(count(lit(1)).as(name))
-    val out = stageCount(c0, "n_input")
+    stageCount(c0, "n_input")
       .join(stageCount(s1, "n_cap"), Seq("source"), "left")
       .join(stageCount(s2, "n_quality"), Seq("source"), "left")
       .join(stageCount(s3, "n_exact"), Seq("source"), "left")
@@ -4123,19 +4043,6 @@ object LlmEntry {
         coalesce(col("weight"), lit(0.0)).as("weight"),
         coalesce(col("target_docs"), lit(0L)).as("target_docs"),
         coalesce(col("n_selected"), lit(0L)).as("n_selected"))
-    (out, () => {
-      // s2/s3/survSh/s4/s5 are localCheckpoint-backed: their
-      // executor-local blocks are reclaimed by the ContextCleaner once
-      // the references drop (the q35/q36 pattern) — there is no cache
-      // entry to unpersist, and unpersisting a checkpointed frame
-      // would orphan its truncated lineage.
-      targets.unpersist(blocking = false)
-      bench.unpersist(blocking = false)
-      benchSh.unpersist(blocking = false)
-      pair.unpersist(blocking = false)
-      s1.unpersist(blocking = false)
-      c0.unpersist(blocking = false)
-    })
   }
 
   /** q106 oracle body — a val so q173's fusion oracle composes the

@@ -12,9 +12,10 @@ object NprobeProbe {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     def shot(np: Int): Double = {
       val t0 = System.nanoTime()
-      val (out, rel) = LlmEntry.ivfadcPlan(spark, d, np)
-      out.write.format("noop").mode("overwrite").save()
-      rel()
+      val c = new graft.core.Materialize.Caches
+      try LlmEntry.ivfadcPlan(spark, d, np)(c)
+        .write.format("noop").mode("overwrite").save()
+      finally c.release()
       (System.nanoTime() - t0) / 1e9
     }
     shot(3) // warmup (JIT + codegen)

@@ -2,10 +2,16 @@ package graft.core
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Materializes a result off its lineage so upstream caches can be
   * released before the result is returned — the one fence primitive of
-  * the engine, and the one owner of per-query scratch tables.
+  * the engine, and the one owner of per-query caches and scratch tables.
+  *
+  * A builder that reuses an intermediate persists it through
+  * [[caching]]: the level is fixed at MEMORY_AND_DISK (spills instead of
+  * failing at corpus size), and every cached frame is released after the
+  * result is fenced — also when the builder or the fence throws.
   *
   * `localCheckpoint(eager = true)` computes the plan once and stores the
   * partitions as executor-local blocks — the result never passes through
@@ -58,6 +64,32 @@ object Materialize {
       release
       out
     }
+
+  /** The intermediates one query persisted, released together. */
+  final class Caches {
+    private var frames = List.empty[DataFrame]
+
+    /** Persists `df` at MEMORY_AND_DISK and returns it. */
+    def apply(df: DataFrame): DataFrame = {
+      frames ::= df
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+    }
+
+    /** Unpersists every frame cached so far (non-blocking). */
+    def release(): Unit = frames.foreach(_.unpersist(blocking = false))
+  }
+
+  /** Builds a result over a fresh [[Caches]], fences it ([[detached]]),
+    * then releases the caches — after the checkpoint, so the fence reads
+    * them, and also when `build` or the fence throws. Under
+    * [[PassthroughKey]] the result comes back unfenced with its caches
+    * already released, as [[detached]] does for its release.
+    */
+  def caching(build: Caches => DataFrame): DataFrame = {
+    val c = new Caches
+    try detached(build(c))(())
+    finally c.release()
+  }
 
   /** [[owning]] over fresh local temp dirs, one per tag, handed to
     * `build` in tag order.

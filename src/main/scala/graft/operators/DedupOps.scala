@@ -185,32 +185,29 @@ object DedupOps {
     * first_dup_pos); span lengths are in grams (a run of g grams covers
     * g + SpanN − 1 tokens).
     */
-  def spanDedup(c: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val grams = c
-      .select(col("doc_id"), expr(s"span_gram_rows(text, $SpanN)"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // gram vocabulary is corpus-proportional → shuffled hash join, not
-    // broadcast (the q61/q92 reasoning)
-    val dupHashes = grams.groupBy(col("g1"), col("g2"))
-      .agg(count(lit(1)).as("gcnt"))
-      .filter(col("gcnt") > 1)
-      .select(col("g1"), col("g2"))
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val spans = grams.join(dupHashes, Seq("g1", "g2"))
-      .select(col("doc_id"), col("pos"))
-      .withColumn("grp", col("pos") - row_number().over(w))
-      .groupBy(col("doc_id"), col("grp"))
-      .agg(count(lit(1)).as("span_len"), min(col("pos")).as("start"))
-    val out = spans.groupBy(col("doc_id"))
-      .agg(sum(col("span_len")).as("n_dup_grams"),
-        count(lit(1)).as("n_spans"),
-        max(col("span_len")).as("max_span_grams"),
-        min(col("start")).as("first_dup_pos"))
-    graft.core.Materialize.detached(out) {
-      grams.unpersist(blocking = false)
+  def spanDedup(docs: DataFrame): DataFrame =
+    graft.core.Materialize.caching { c =>
+      import org.apache.spark.sql.expressions.Window
+      val grams = c(docs
+        .select(col("doc_id"), expr(s"span_gram_rows(text, $SpanN)")))
+      // gram vocabulary is corpus-proportional → shuffled hash join, not
+      // broadcast (the q61/q92 reasoning)
+      val dupHashes = grams.groupBy(col("g1"), col("g2"))
+        .agg(count(lit(1)).as("gcnt"))
+        .filter(col("gcnt") > 1)
+        .select(col("g1"), col("g2"))
+      val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
+      val spans = grams.join(dupHashes, Seq("g1", "g2"))
+        .select(col("doc_id"), col("pos"))
+        .withColumn("grp", col("pos") - row_number().over(w))
+        .groupBy(col("doc_id"), col("grp"))
+        .agg(count(lit(1)).as("span_len"), min(col("pos")).as("start"))
+      spans.groupBy(col("doc_id"))
+        .agg(sum(col("span_len")).as("n_dup_grams"),
+          count(lit(1)).as("n_spans"),
+          max(col("span_len")).as("max_span_grams"),
+          min(col("start")).as("first_dup_pos"))
     }
-  }
 
   // ---- hashed shingles --------------------------------------------------
   /** Per-token rolling hashes (each token hashed once). */

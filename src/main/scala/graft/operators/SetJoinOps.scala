@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Exact set-similarity self-join via global-order prefix filtering —
   * the EXACT counterpart of the MinHash-LSH band join (L8–L10): LSH
@@ -67,37 +66,37 @@ object SetJoinOps {
     */
   def similarPairs(elems: DataFrame, tNum: Long, tDen: Long): DataFrame = {
     require(tNum > 0 && tDen >= tNum, s"threshold $tNum/$tDen not in (0,1]")
-    val freq = elems.groupBy(col("elem")).agg(count(lit(1)).as("df"))
-    // one ordered array per set: ascending (df, elem) = rare-first; the
-    // single set-keyed shuffle of the whole operator
-    val sets = elems.join(freq, "elem")
-      .groupBy(col("set_id"))
-      .agg(sort_array(collect_list(struct(col("df"), col("elem")))).as("ord"))
-      .select(col("set_id"),
-        expr("transform(ord, x -> x.elem)").as("es"),
-        size(col("ord")).cast("long").as("n"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // prefix length |x| − ⌈t·|x|⌉ + 1 (⌈·⌉ via integer ceil-div)
-    val pref = sets.select(col("set_id"), col("n"),
-      explode(expr(
-        s"slice(es, 1, CAST(n - ((n * $tNum + ${tDen - 1}) DIV $tDen) + 1 AS INT))"
-      )).as("p_elem"))
-    val cand = pref.as("a").join(pref.as("b"),
-        col("a.p_elem") === col("b.p_elem") &&
-          col("a.set_id") < col("b.set_id") &&
-          greatest(col("a.n"), col("b.n")) * tNum <=
-            least(col("a.n"), col("b.n")) * tDen)
-      .select(col("a.set_id").as("id_a"), col("b.set_id").as("id_b"))
-      .distinct()
-    val verified = cand
-      .join(sets.select(col("set_id").as("id_a"),
-        col("es").as("ea"), col("n").as("na")), "id_a")
-      .join(sets.select(col("set_id").as("id_b"),
-        col("es").as("eb"), col("n").as("nb")), "id_b")
-      .withColumn("ov", size(array_intersect(col("ea"), col("eb"))).cast("long"))
-      .filter(col("ov") * tDen >= (col("na") + col("nb") - col("ov")) * tNum)
-      .select(col("id_a"), col("id_b"), col("ov"),
-        (col("na") + col("nb") - col("ov")).as("un"))
-    graft.core.Materialize.detached(verified)(sets.unpersist(blocking = false))
+    graft.core.Materialize.caching { c =>
+      val freq = elems.groupBy(col("elem")).agg(count(lit(1)).as("df"))
+      // one ordered array per set: ascending (df, elem) = rare-first; the
+      // single set-keyed shuffle of the whole operator
+      val sets = c(elems.join(freq, "elem")
+        .groupBy(col("set_id"))
+        .agg(sort_array(collect_list(struct(col("df"), col("elem")))).as("ord"))
+        .select(col("set_id"),
+          expr("transform(ord, x -> x.elem)").as("es"),
+          size(col("ord")).cast("long").as("n")))
+      // prefix length |x| − ⌈t·|x|⌉ + 1 (⌈·⌉ via integer ceil-div)
+      val pref = sets.select(col("set_id"), col("n"),
+        explode(expr(
+          s"slice(es, 1, CAST(n - ((n * $tNum + ${tDen - 1}) DIV $tDen) + 1 AS INT))"
+        )).as("p_elem"))
+      val cand = pref.as("a").join(pref.as("b"),
+          col("a.p_elem") === col("b.p_elem") &&
+            col("a.set_id") < col("b.set_id") &&
+            greatest(col("a.n"), col("b.n")) * tNum <=
+              least(col("a.n"), col("b.n")) * tDen)
+        .select(col("a.set_id").as("id_a"), col("b.set_id").as("id_b"))
+        .distinct()
+      cand
+        .join(sets.select(col("set_id").as("id_a"),
+          col("es").as("ea"), col("n").as("na")), "id_a")
+        .join(sets.select(col("set_id").as("id_b"),
+          col("es").as("eb"), col("n").as("nb")), "id_b")
+        .withColumn("ov", size(array_intersect(col("ea"), col("eb"))).cast("long"))
+        .filter(col("ov") * tDen >= (col("na") + col("nb") - col("ov")) * tNum)
+        .select(col("id_a"), col("id_b"), col("ov"),
+          (col("na") + col("nb") - col("ov")).as("un"))
+    }
   }
 }

@@ -658,14 +658,18 @@ object ManifestedTable {
       case Some(v) => vs.find(_._1 == v).map(_._2)
       case None => vs.lastOption.map(_._2)
     }
-    val meta = p.map(readMeta(fs, _)).getOrElse(Map.empty)
+    schemaCtxOf(p.map(readMeta(fs, _)).getOrElse(Map.empty))
+  }
+
+  /** [[schemaCtxAt]] from an already-read snapshot meta. */
+  private def schemaCtxOf(meta: Map[String, String])
+      : Option[(StructType, Seq[Map[Int, String]])] =
     for {
       ej <- meta.get(FieldEpochsKey)
       sj <- meta.get(SchemaKey)
     } yield (org.apache.spark.sql.types.DataType.fromJson(sj)
       .asInstanceOf[org.apache.spark.sql.types.StructType],
       decodeEpochs(ej))
-  }
 
   /** Meta of the target LINEAGE's head (branch falls back to main for
     * the first branch commit) — what staging stamps epochs and
@@ -1359,11 +1363,20 @@ object ManifestedTable {
     * to the file list.
     */
   private def currentSnapshot(fs: FileSystem, root: Path): (Long, Seq[String]) = {
+    val (hv, _, lines) = currentHead(fs, root)
+    (hv, lines)
+  }
+
+  /** [[currentSnapshot]] plus the head manifest's path, for a caller
+    * that reads the head's meta too.
+    */
+  private def currentHead(fs: FileSystem, root: Path)
+      : (Long, Path, Seq[String]) = {
     val vs = manifestVersions(fs, root)
     require(vs.nonEmpty, s"no committed manifest under $root")
-    val (hv, _) = headVersion(fs, root, None).getOrElse(throw
+    val (hv, hp) = headVersion(fs, root, None).getOrElse(throw
       new IllegalStateException(s"no main commit under $root"))
-    (hv, resolveDataLines(fs, root, vs.toMap, hv))
+    (hv, hp, resolveDataLines(fs, root, vs.toMap, hv))
   }
 
   /** File paths among `entries` that COULD hold a row whose `keys`
@@ -2298,29 +2311,45 @@ object ManifestedTable {
     * meta keys. Returns (rows to rewrite, tombstones).
     */
   private def eqAbsorbedRewriteRead(spark: SparkSession, dir: String,
-      root: Path, entries: Seq[(String, FileStats)],
-      ctx: Option[(StructType, Seq[Map[Int, String]])],
-      lineage: Boolean)
-      : (DataFrame, Map[String, String]) = {
-    val conf = spark.sessionState.newHadoopConf()
-    val eqs = eqDeletesAt(conf, dir)
-    if (eqs.isEmpty)
-      return (readForRewrite(spark, root, entries, ctx, lineage),
+      b: CompactBase): (DataFrame, Map[String, String]) = {
+    val ctx = schemaCtxOf(b.meta)
+    val lineage = lineageOn(b.meta)
+    if (b.pending.isEmpty)
+      return (readForRewrite(spark, b.root, b.entries, ctx, lineage),
         Map.empty)
-    val scopes = eqs.map(e => e -> eqAppliesTo(conf, dir, e.baseV))
-    val df = entries
+    val conf = spark.sessionState.newHadoopConf()
+    val scopes = b.pending.map(e => e -> eqAppliesTo(conf, dir, e.baseV))
+    val df = b.entries
       .groupBy(e => scopes.filter(_._2(e._1)).map(_._1.seq).toSet)
       .toSeq.sortBy(_._1.toSeq.sorted.mkString(","))
       .map { case (sig, es) =>
-        val d = readForRewrite(spark, root, es, ctx, lineage)
+        val d = readForRewrite(spark, b.root, es, ctx, lineage)
         scopes.filter(s => sig(s._1.seq)).foldLeft(d) { (acc, s) =>
           val keys = spark.read
-            .parquet(new Path(root, s._1.sidecar).toString)
+            .parquet(new Path(b.root, s._1.sidecar).toString)
             .select(s._1.keyCols.map(col): _*).distinct()
           acc.join(keys, s._1.keyCols, "left_anti")
         }
       }.reduce(_.unionByName(_))
-    (df, eqs.map(e => s"$EqDelPrefix${e.seq}" -> "").toMap)
+    (df, b.pending.map(e => s"$EqDelPrefix${e.seq}" -> "").toMap)
+  }
+
+  /** A compaction's base snapshot, resolved once: version, entry lines
+    * and parsed entries, and the ONE meta read of that version that the
+    * pending eq-deletes, the schema context and the lineage flag all
+    * derive from.
+    */
+  private final case class CompactBase(root: Path, fs: FileSystem,
+      baseV: Long, baseLines: Seq[String], meta: Map[String, String]) {
+    val entries: Seq[(String, FileStats)] = baseLines.map(parseEntry)
+    val pending: Seq[EqDelete] = eqDeletesOf(meta)
+  }
+
+  private def compactBase(spark: SparkSession, dir: String): CompactBase = {
+    val root = new Path(dir)
+    val fs = fsOf(spark, dir)
+    val (baseV, hp, baseLines) = currentHead(fs, root)
+    CompactBase(root, fs, baseV, baseLines, readMeta(fs, hp))
   }
 
   /** ATOMIC compaction: rewrite the current snapshot into
@@ -2334,32 +2363,27 @@ object ManifestedTable {
   def compact(spark: SparkSession, dir: String,
       targetFileBytes: Long): Long = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val root = new Path(dir)
-    val fs = fsOf(spark, dir)
-    val (baseV, baseLines) = currentSnapshot(fs, root)
-    val entries = baseLines.map(parseEntry)
-    val needed = filesNeeded(fs, root, baseLines, targetFileBytes)
-    val pending = eqDeletesAt(spark.sessionState.newHadoopConf(), dir)
+    val b = compactBase(spark, dir)
+    val needed = filesNeeded(b.fs, b.root, b.baseLines, targetFileBytes)
     // a DV'd file always warrants the rewrite: compaction reads
     // THROUGH the deletion vectors and so materializes them away —
     // and PENDING EQ-DELETES likewise force it (compaction is where
     // they get absorbed; the masks turn physical here)
-    if (baseLines.size <= needed && entries.forall(_._2.dv.isEmpty) &&
-        pending.isEmpty)
-      return baseV
+    if (b.baseLines.size <= needed && b.entries.forall(_._2.dv.isEmpty) &&
+        b.pending.isEmpty)
+      return b.baseV
     // deletes-only CDC bootstrap: pending eq-deletes over a snapshot
     // with ZERO entries have nothing to mask — absorb them as a
     // metadata-only commit (the rewrite read would have nothing to
     // union) so the tombstones release instead of wedging forever
-    if (entries.isEmpty) {
-      val absorbed = pending.map(e => s"$EqDelPrefix${e.seq}").toSet
-      return publish(fs, root,
-        RewriteFiles(baseV, baseLines, Set.empty, "compact", _ => false),
+    if (b.entries.isEmpty) {
+      val absorbed = b.pending.map(e => s"$EqDelPrefix${e.seq}").toSet
+      return publish(b.fs, b.root,
+        RewriteFiles(b.baseV, b.baseLines, Set.empty, "compact", _ => false),
         Nil, metaDrop = absorbed,
         metaGuard = eqAbsorbGuard("compact", dir, absorbed))
     }
-    compactRewrite(spark, dir, "compact", root, fs, baseV, baseLines)(
-      _.repartition(needed))
+    compactRewrite(spark, dir, "compact", b)(_.repartition(needed))
   }
 
   /** ceil(bytes / targetFileBytes) output files (at least one) for
@@ -2395,14 +2419,11 @@ object ManifestedTable {
     * ([[eqAbsorbGuard]]).
     */
   private def compactRewrite(spark: SparkSession, dir: String, op: String,
-      root: Path, fs: FileSystem, baseV: Long, baseLines: Seq[String])(
-      layout: DataFrame => DataFrame): Long = {
-    val (rows, eqTombstones) = eqAbsorbedRewriteRead(spark, dir, root,
-      baseLines.map(parseEntry), schemaCtxAt(fs, root, Some(baseV)),
-      lineageOn(headMetaOf(fs, root, None)))
-    val staged = stageFiles(layout(rows), root, fs)
-    publish(fs, root,
-      RewriteFiles(baseV, baseLines, baseLines.map(pathOf).toSet, op,
+      b: CompactBase)(layout: DataFrame => DataFrame): Long = {
+    val (rows, eqTombstones) = eqAbsorbedRewriteRead(spark, dir, b)
+    val staged = stageFiles(layout(rows), b.root, b.fs)
+    publish(b.fs, b.root,
+      RewriteFiles(b.baseV, b.baseLines, b.baseLines.map(pathOf).toSet, op,
         _ => false),
       staged, metaDrop = eqTombstones.keySet,
       metaGuard = eqAbsorbGuard(op, dir, eqTombstones.keySet))
@@ -3883,15 +3904,12 @@ object ManifestedTable {
   def compactClustered(spark: SparkSession, dir: String,
       targetFileBytes: Long, clusterBy: Column): Long = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val root = new Path(dir)
-    val fs = fsOf(spark, dir)
-    val (baseV, baseLines) = currentSnapshot(fs, root)
-    require(baseLines.nonEmpty, s"manifested table $dir is empty — " +
+    val b = compactBase(spark, dir)
+    require(b.baseLines.nonEmpty, s"manifested table $dir is empty — " +
       "schemaless empty reads are not supported")
-    val needed = filesNeeded(fs, root, baseLines, targetFileBytes)
-    compactRewrite(spark, dir, "compactClustered", root, fs, baseV,
-      baseLines)(_.repartitionByRange(needed, clusterBy)
-      .sortWithinPartitions(clusterBy))
+    val needed = filesNeeded(b.fs, b.root, b.baseLines, targetFileBytes)
+    compactRewrite(spark, dir, "compactClustered", b)(
+      _.repartitionByRange(needed, clusterBy).sortWithinPartitions(clusterBy))
   }
 
   /** Table-health report — the numbers the OPTIMIZE decision is made

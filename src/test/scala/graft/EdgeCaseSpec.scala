@@ -188,9 +188,10 @@ class EdgeCaseSpec extends SparkTestBase {
     .toDF("doc_id", "source", "text")
 
   test("bm25 on degenerate docs: empty probes vanish, self excluded, scores finite") {
-    val (df, release) = LlmEntry.bm25PlanOn(tinyCorpus)
+    val c = new core.Materialize.Caches
+    val df = LlmEntry.bm25PlanOn(tinyCorpus)(c)
     val rows = df.collect()
-    release()
+    c.release()
     // doc 0 ("" → split gives [""], filtered) has no terms → no query;
     // doc 13 likewise never appears as a result
     val qids = rows.map(_.getAs[Long]("query_id")).toSet
@@ -242,17 +243,19 @@ class EdgeCaseSpec extends SparkTestBase {
     // scalar N (sum over zero rows = NULL riding through bits())
     val docs = Seq((0L, ""), (1L, "solo"), (2L, "x y"), (3L, "x y"))
       .toDF("doc_id", "text")
-    val (df, release) = LlmEntry.pmiPlanOn(docs)
+    val c = new core.Materialize.Caches
+    val df = LlmEntry.pmiPlanOn(docs)(c)
     val rows = df.collect().map(r =>
       (r.getString(0), r.getString(1), r.getLong(2), r.getLong(5)))
-    release()
+    c.release()
     // the only bigram with support ≥ 2 is (x, y): c_ab=2, N=2,
     // c_a=c_b=2 → pmi = bits(2)+bits(2)−bits(2)−bits(2) = 0
     assert(rows.toList === List(("x", "y", 2L, 0L)), rows.mkString(","))
-    val (empty, release2) = LlmEntry.pmiPlanOn(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"))
+    val c2 = new core.Materialize.Caches
+    val empty = LlmEntry.pmiPlanOn(
+      Seq.empty[(Long, String)].toDF("doc_id", "text"))(c2)
     val n = empty.collect().length
-    release2()
+    c2.release()
     assert(n === 0)
   }
 
@@ -268,15 +271,17 @@ class EdgeCaseSpec extends SparkTestBase {
     val docs = Seq((0L, "en", ""), (1L, "en", "solo"),
       (2L, "en", "x y"), (3L, "en", "x y"))
       .toDF("doc_id", "lang", "text")
-    val (df, release) = LlmEntry.bigramLmPlanOn(docs)
+    val c = new core.Materialize.Caches
+    val df = LlmEntry.bigramLmPlanOn(docs)(c)
     val rows = df.collect().map(r => (r.getString(0), r.getLong(1),
       r.getLong(2), r.getLong(3), r.getLong(4)))
-    release()
+    c.release()
     assert(rows.toList === List(("en", 2L, 0L, 0L, 2L)), rows.mkString(","))
-    val (empty, release2) = LlmEntry.bigramLmPlanOn(
-      Seq.empty[(Long, String, String)].toDF("doc_id", "lang", "text"))
+    val c2 = new core.Materialize.Caches
+    val empty = LlmEntry.bigramLmPlanOn(
+      Seq.empty[(Long, String, String)].toDF("doc_id", "lang", "text"))(c2)
     val n = empty.collect().length
-    release2()
+    c2.release()
     assert(n === 0)
   }
 
@@ -334,10 +339,11 @@ class EdgeCaseSpec extends SparkTestBase {
       (3L, "sc", "q"),         // sub-shingle: contributes nothing
       (4L, "sd", ""))          // empty text, source has NO shingles at all
       .toDF("doc_id", "source", "text")
-    val (df, release) = LlmEntry.overlapPlanOn(docs)
+    val c = new core.Materialize.Caches
+    val df = LlmEntry.overlapPlanOn(docs)(c)
     val rows = df.collect().map(r => ((r.getString(0), r.getString(1)),
       (r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5)))).toMap
-    release()
+    c.release()
     assert(rows.keySet === Set(("sa", "sb")), rows.keySet.toString)
     assert(rows(("sa", "sb")) === ((2L, 2L, 2L, 1.0)), rows.toString)
   }
@@ -358,9 +364,10 @@ class EdgeCaseSpec extends SparkTestBase {
   }
 
   test("dsir on degenerate docs: weights defined; empty target degrades, not crashes") {
-    val (df, release) = LlmEntry.dsirPlanOn(tinyCorpus)
+    val c = new core.Materialize.Caches
+    val df = LlmEntry.dsirPlanOn(tinyCorpus)(c)
     val rows = df.collect()
-    release()
+    c.release()
     // only non-target docs with ≥1 feature are ranked (13 is termless:
     // "" still hashes as the [""] unigram, so it DOES carry one feature)
     val ids = rows.map(_.getAs[Long]("doc_id")).toSet
@@ -374,9 +381,10 @@ class EdgeCaseSpec extends SparkTestBase {
     // a target source with NO documents must not NPE: every c_t
     // smooths to 1 and every doc ranks
     val noTarget = tinyCorpus.filter(col("source") =!= "src0")
-    val (df2, release2) = LlmEntry.dsirPlanOn(noTarget)
+    val c2 = new core.Materialize.Caches
+    val df2 = LlmEntry.dsirPlanOn(noTarget)(c2)
     val n2 = df2.collect().length
-    release2()
+    c2.release()
     assert(n2 == 4, s"expected all 4 non-target docs ranked, got $n2")
   }
 

@@ -174,11 +174,12 @@ class LlmOpsSpec extends SparkTestBase {
     val scrambled = Seq.fill(5)(sentence).flatten.sorted.mkString(" ")
     val docs = ((0L until 50L).map(i => (i, "en", normal)) :+
       (999L, "en", scrambled)).toDF("doc_id", "lang", "text")
-    val (perDoc, release) = LlmEntry.bigramLmPlanOn(docs, perDoc = true)
+    val c = new core.Materialize.Caches
+    val perDoc = LlmEntry.bigramLmPlanOn(docs, perDoc = true)(c)
     val rows = perDoc.collect()
       .map(r => r.getLong(0) -> (r.getLong(2), r.getLong(3), r.getLong(4)))
       .toMap // doc_id -> (bits, n_trans, flagged)
-    release()
+    c.release()
     val (sBits, sN, sFlag) = rows(999L)
     assert(sFlag == 1L, s"scrambled doc not flagged: $sBits bits / $sN")
     rows.filter(_._1 != 999L).foreach { case (id, (b, n, f)) =>
@@ -665,11 +666,12 @@ class LlmOpsSpec extends SparkTestBase {
       (0 until 10).map(i => ((200 + i).toLong, "eval_on", doc(vocabA, i + 3))) ++
       (0 until 10).map(i => ((300 + i).toLong, "eval_off", doc(vocabB, i + 3)))
     ).toDF("doc_id", "source", "text")
-    val (scored, release) = LlmEntry.nbScoresOn(corpus)
+    val c = new core.Materialize.Caches
+    val scored = LlmEntry.nbScoresOn(corpus)(c)
     val rows = scored.collect().map(r =>
       (r.getAs[Long]("doc_id"), r.getAs[String]("source"),
         r.getAs[Long]("score")))
-    release()
+    c.release()
     def kept(src: String) = rows.filter(_._2 == src).count(_._3 > 0)
     def total(src: String) = rows.count(_._2 == src)
     assert(total("eval_on") == 10 && kept("eval_on") == 10,
@@ -680,10 +682,11 @@ class LlmOpsSpec extends SparkTestBase {
     // the pure-background source all negative
     assert(kept("src0") == 30 && kept("src1") == 0)
     // the per-source report aggregates the same decisions
-    val (report, release2) = LlmEntry.nbClassifierPlanOn(corpus)
+    val c2 = new core.Materialize.Caches
+    val report = LlmEntry.nbClassifierPlanOn(corpus)(c2)
     val bySrc = report.collect().map(r => r.getAs[String]("source") ->
       (r.getAs[Long]("n_docs"), r.getAs[Long]("n_kept"))).toMap
-    release2()
+    c2.release()
     assert(bySrc("eval_on") == ((10L, 10L)) && bySrc("eval_off")._2 == 0L)
     assert(bySrc("src0") == ((30L, 30L)) && bySrc("src1")._2 == 0L)
   }

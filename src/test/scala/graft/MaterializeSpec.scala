@@ -3,11 +3,13 @@ package graft
 import java.io.File
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 import graft.core.Materialize
 
 /** The fence primitive: where passthrough is read from, how a fence
-  * stores its blocks, and that a scratch scope always removes its dirs.
+  * stores its blocks, and that a cache or scratch scope always releases
+  * what it holds.
   */
 class MaterializeSpec extends SparkTestBase {
 
@@ -64,5 +66,47 @@ class MaterializeSpec extends SparkTestBase {
     }
     assert(dirs.size === 1 && dirs.forall(!new File(_).exists))
     assert(!released)
+  }
+
+  test("caching fences the result, then releases every frame it cached") {
+    var cached = Seq.empty[DataFrame]
+    val out = Materialize.caching { c =>
+      val ids = c(spark.range(100).toDF("id"))
+      val even = c(ids.filter(col("id") % 2 === 0))
+      cached = Seq(ids, even)
+      ids.join(even, "id")
+    }
+    assert(isCheckpointLeaf(out))
+    assert(cached.size === 2)
+    assert(cached.forall(_.storageLevel == StorageLevel.NONE))
+    assert(out.count() === 50) // served by the fence, not the caches
+  }
+
+  test("a caching builder that throws still releases its caches") {
+    var cached: DataFrame = null
+    var levelInside = StorageLevel.NONE
+    intercept[IllegalStateException] {
+      Materialize.caching { c =>
+        cached = c(spark.range(10).toDF("id"))
+        levelInside = cached.storageLevel
+        throw new IllegalStateException("builder failed")
+      }
+    }
+    assert(levelInside === StorageLevel.MEMORY_AND_DISK)
+    assert(cached.storageLevel === StorageLevel.NONE)
+  }
+
+  test("under passthrough, caching returns the unfenced frame, caches released") {
+    val audit = spark.newSession()
+    audit.conf.set(Materialize.PassthroughKey, "true")
+    var cached: DataFrame = null
+    var built: DataFrame = null
+    val out = Materialize.caching { c =>
+      cached = c(audit.range(10).toDF("id"))
+      built = cached.filter(col("id") > 4)
+      built
+    }
+    assert(out eq built)
+    assert(cached.storageLevel === StorageLevel.NONE)
   }
 }

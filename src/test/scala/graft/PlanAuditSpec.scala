@@ -65,8 +65,11 @@ class PlanAuditSpec extends SparkTestBase {
     // fetch — the corpus scan drops non-candidates map-side and never
     // shuffles — and the exact re-rank's rank<=k compiles to
     // WindowGroupLimit over the candidate-sized frame
-    val plan = LlmEntry.ivfadcRerankPlan(spark, sf)._1
-      .queryExecution.executedPlan.toString
+    val c = new core.Materialize.Caches
+    val plan =
+      try LlmEntry.ivfadcRerankPlan(spark, sf)(c)
+        .queryExecution.executedPlan.toString
+      finally c.release()
     assert(plan.contains("WindowGroupLimit"),
       s"q125 lost the top-k group limit:\n${plan.take(900)}")
     val bhjOnVec = "BroadcastHashJoin \\[vec_id".r.findFirstIn(plan)
@@ -432,9 +435,10 @@ class PlanAuditSpec extends SparkTestBase {
     // the final sort (k rows per partition travel, not every candidate).
     // Audited on the un-detached builder: Materialize.detached hides
     // the executed plan behind an ExistingRDD scan.
-    val (df, release) = LlmEntry.bm25Plan(spark, sf)
+    val c = new core.Materialize.Caches
+    val df = LlmEntry.bm25Plan(spark, sf)(c)
     val plan = df.queryExecution.executedPlan.toString
-    release()
+    c.release()
     assert(plan.contains("BroadcastHashJoin"),
       s"q106 lost its broadcast query-term join:\n${plan.take(800)}")
     assert(plan.contains("WindowGroupLimit"),
@@ -451,10 +455,11 @@ class PlanAuditSpec extends SparkTestBase {
     // printouts — one per InMemoryRelation, none in the live tree —
     // and all four consumers (filtered c_ab, c_a, c_b, N) read the
     // cache. The single-row N joins as a broadcast nested loop.
-    val (df, release) = LlmEntry.pmiPlanOn(
-      graft.core.Tables.documents(spark, sf))
+    val c = new core.Materialize.Caches
+    val df = LlmEntry.pmiPlanOn(
+      graft.core.Tables.documents(spark, sf))(c)
     val plan = df.queryExecution.executedPlan.toString
-    release()
+    c.release()
     val explodes = "Generate explode".r.findAllIn(plan).size
     val cachedPlans = "InMemoryRelation".r.findAllIn(plan).size
     assert(explodes == cachedPlans,
@@ -471,10 +476,11 @@ class PlanAuditSpec extends SparkTestBase {
     // the bounded-fanout claim of L57: |A∩B| must come from a HASH/MERGE
     // equi join keyed on the shingle hash (per-shingle fanout ≤
     // |sources|²), never a nested loop or cartesian over shingle sets
-    val (df, release) = LlmEntry.overlapPlanOn(
-      graft.core.Tables.documents(spark, sf))
+    val c = new core.Materialize.Caches
+    val df = LlmEntry.overlapPlanOn(
+      graft.core.Tables.documents(spark, sf))(c)
     val plan = df.queryExecution.executedPlan.toString
-    release()
+    c.release()
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
       s"q118 fell out of the equi-join family:\n${plan.take(800)}")
@@ -490,9 +496,10 @@ class PlanAuditSpec extends SparkTestBase {
     // per-probe top-k must both trim map-side (WindowGroupLimit), and
     // the only joins the corpus side sees are BROADCAST hash joins
     // (trained codebook; per-probe distance table)
-    val (df, release) = LlmEntry.pqAdcPlan(spark, sf)
+    val c = new core.Materialize.Caches
+    val df = LlmEntry.pqAdcPlan(spark, sf)(c)
     val plan = df.queryExecution.executedPlan.toString
-    release()
+    c.release()
     val wgl = "WindowGroupLimit".r.findAllIn(plan).size
     assert(wgl >= 2,
       s"q119 expected 2 WindowGroupLimits (codes, top-k), found $wgl:\n${plan.take(800)}")
@@ -507,9 +514,10 @@ class PlanAuditSpec extends SparkTestBase {
     // probed cells drop before any shuffle), coarse/code assignment is
     // a min_by hash aggregate with a map-side partial (no sort, no
     // window over the corpus), and the final cut is a WindowGroupLimit
-    val (df, release) = LlmEntry.ivfadcPlan(spark, sf)
+    val c = new core.Materialize.Caches
+    val df = LlmEntry.ivfadcPlan(spark, sf)(c)
     val plan = df.queryExecution.executedPlan.toString
-    release()
+    c.release()
     val bhjCell = plan.linesIterator.find(l =>
       l.contains("BroadcastHashJoin") && l.contains("pcid"))
     assert(bhjCell.isDefined,
@@ -531,9 +539,10 @@ class PlanAuditSpec extends SparkTestBase {
     val audit = spark.newSession()
     audit.conf.set(graft.core.Materialize.PassthroughKey, "true")
     audit.conf.set("spark.sql.maxPlanStringLength", Int.MaxValue - 15)
-    val (df, release) = LlmEntry.curationPlan(audit, sf)
+    val c = new core.Materialize.Caches
+    val df = LlmEntry.curationPlan(audit, sf)(c)
     val plan = df.queryExecution.executedPlan.toString
-    release()
+    c.release()
     assert(plan.contains("WindowGroupLimit"),
       s"q121 lost the cap's group-limit pushdown:\n${plan.take(800)}")
     assert(!plan.contains("CartesianProduct"),
@@ -552,9 +561,10 @@ class PlanAuditSpec extends SparkTestBase {
     // the corpus by BROADCAST, and the global top-k must plan as
     // TakeOrderedAndProject (per-partition heaps) — NOT a single-
     // partition global window
-    val (df, release) = LlmEntry.dsirPlan(spark, sf)
+    val c = new core.Materialize.Caches
+    val df = LlmEntry.dsirPlan(spark, sf)(c)
     val plan = df.queryExecution.executedPlan.toString
-    release()
+    c.release()
     assert(plan.contains("BroadcastHashJoin"),
       s"q107 lost its broadcast llr join:\n${plan.take(800)}")
     assert(plan.contains("TakeOrderedAndProject"),
