@@ -3440,7 +3440,6 @@ object RelEntry {
       // survivors intact, re-inserted keys (a delete then a merge of
       // the same key) present exactly once.
       import graft.sources.ManifestedTable
-      import s.implicits._
       core.Materialize.scratch(s, "graft_dvq") { case Seq(dir) =>
         val base = Tables.orders(s, d).select(col("o_orderkey"),
           col("o_custkey"),
@@ -3513,7 +3512,7 @@ object RelEntry {
         // the VERSION AS OF below will read.
         val postCtasV = s.sql("CALL g190.system.history('book')")
           .agg(org.apache.spark.sql.functions.max("version"))
-          .head.getLong(0)
+          .head().getLong(0)
         s.sql("""INSERT INTO g190.book
                 |SELECT o_orderkey + 307000000, o_custkey, cents
                 |FROM g190_src WHERE o_orderkey % 10 = 9""".stripMargin)

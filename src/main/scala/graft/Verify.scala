@@ -1,8 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (`tools/check.py`).
+  * `runMain graft.Verify <sfDir> <outDir> [name...]` dumps the named
+  * queries, or all of them when no name is given. */
 object Verify {
 
   /** Dump one query's result as a single parquet under `outDir/name`. */
@@ -53,14 +55,17 @@ object Verify {
     } catch { case _: Throwable => () }
 
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [name...]")
+    val (sfDir, outDir) = (args(0), args(1))
+    val names = if (args.length > 2) args.drop(2).toSeq
+      else SparkEntry.queries.keys.toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.core.Sessions.builder(s"local[$cpus]", cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     var failed = List.empty[String]
-    SparkEntry.queries.keys.foreach { name =>
+    names.foreach { name =>
       try dumpQuery(spark, sfDir, outDir, name)
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -71,7 +76,7 @@ object Verify {
     if (failed.nonEmpty)
       System.err.println(s"[verify] ${failed.size} queries FAILED: " +
         failed.sorted.mkString(", "))
-    Verify.writeOracleJson(outDir, SparkEntry.queries.keys)
+    writeOracleJson(outDir, names)
     spark.stop()
   }
 }

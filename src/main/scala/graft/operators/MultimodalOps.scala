@@ -1,40 +1,19 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column handling: media payloads ride as opaque `BINARY`
-  * columns with a typed metadata struct, and decode/feature-extraction is
-  * a batched per-partition operation so a heavier codec (JPEG/audio lib)
-  * could be dropped in without touching the plan shape.
+  * columns with a typed metadata struct. Every SQL-expressible
+  * derivation (sizes, hashes, frame offsets) is oracle-checked from
+  * `LlmEntry`.
   *
-  * The decode tier is a REAL codec for a real format: binary PGM (P5 —
-  * "P5" magic, ASCII width/height/maxval with `#` comments, one
-  * whitespace, then width·height raw bytes), parsed byte-level with no
-  * library dependency. [[pgmTable]] synthesizes a deterministic PGM per
-  * document (pixels from the text bytes) so the full
-  * encode → binary column → batched decode → feature path runs end to
-  * end; an undecodable payload is quarantined as `nBytes = -1`, never an
-  * executor throw. The Spark-side plumbing is unchanged: binary schema,
-  * struct metadata, typed Encoders, partition-batched decode
-  * (Iterator → Iterator, no per-row setup), frame sampling, and every
-  * SQL-expressible derivation (sizes, hashes, frame offsets) is
-  * oracle-checked from `LlmEntry`.
-  *
-  * Scale notes: payload bytes never shuffle — metadata extraction and
-  * decode are narrow maps; frame sampling explodes only (offset, length)
-  * index structs, not the bytes themselves, until the final slice.
+  * Scale notes: payload bytes never shuffle — metadata extraction is a
+  * narrow map; frame sampling explodes only (offset, length) index
+  * structs, not the bytes themselves, until the final slice.
   */
 object MultimodalOps {
   val FrameSize = 64 // bytes per sampled "frame" of a payload
-
-  final case class MediaMeta(format: String, width: Int, height: Int,
-                             durationMs: Long)
-  final case class MediaItem(docId: Long, payload: Array[Byte], meta: MediaMeta)
-  final case class MediaFeatures(docId: Long, nBytes: Long,
-                                 features: Array[Float])
-  final case class PgmImage(width: Int, height: Int, maxVal: Int,
-                            pixels: Array[Byte])
 
   /** Synthesize the media table from `documents`: payload = UTF-8 bytes of
     * the text, metadata derived deterministically from doc fields. This is
@@ -51,135 +30,9 @@ object MultimodalOps {
         (col("n_chars") % 480).cast("int").as("height"),
         (col("n_chars") * 25L).as("duration_ms")).as("meta"))
 
-  /** Encode a binary PGM (P5): ASCII header, one `\n` separator, then
-    * `width·height` raw pixel bytes. `pixels` shorter than the raster is
-    * zero-padded; longer is truncated — encode is total so the synthetic
-    * table below can never produce a malformed image by accident.
-    */
-  def encodePgm(width: Int, height: Int, maxVal: Int,
-                pixels: Array[Byte]): Array[Byte] = {
-    require(width > 0 && height > 0 && maxVal > 0 && maxVal < 256,
-      s"invalid PGM dims: ${width}x$height max $maxVal")
-    val header = s"P5\n$width $height\n$maxVal\n"
-      .getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-    val out = java.util.Arrays.copyOf(header, header.length + width * height)
-    System.arraycopy(pixels, 0, out, header.length,
-      math.min(pixels.length, width * height))
-    out
-  }
-
-  /** Parse a binary PGM (P5). Accepts the full header grammar: tokens
-    * separated by any whitespace run, `#` comments to end-of-line
-    * anywhere between tokens, EXACTLY ONE whitespace byte after maxval,
-    * then the raw raster. Returns None (never throws) for anything
-    * malformed — wrong magic, non-numeric dims, maxval ≥ 256 (2-byte
-    * samples out of scope), or a short raster — so a corrupt payload in
-    * a 100 TB scan quarantines instead of failing the task.
-    */
-  def decodePgm(bytes: Array[Byte]): Option[PgmImage] = {
-    var i = 0
-    def isWs(b: Byte): Boolean =
-      b == ' ' || b == '\n' || b == '\r' || b == '\t' || b == '\f'
-    def skipWsAndComments(): Unit = {
-      var go = true
-      while (go && i < bytes.length) {
-        if (isWs(bytes(i))) i += 1
-        else if (bytes(i) == '#') {
-          while (i < bytes.length && bytes(i) != '\n') i += 1
-        } else go = false
-      }
-    }
-    def token(): String = {
-      skipWsAndComments()
-      val s = i
-      while (i < bytes.length && !isWs(bytes(i)) && bytes(i) != '#') i += 1
-      new String(bytes, s, i - s, java.nio.charset.StandardCharsets.US_ASCII)
-    }
-    def intToken(): Option[Int] = {
-      val t = token()
-      if (t.nonEmpty && t.forall(c => c >= '0' && c <= '9') && t.length <= 9)
-        Some(t.toInt)
-      else None
-    }
-    if (token() != "P5") return None
-    (intToken(), intToken(), intToken()) match {
-      case (Some(w), Some(h), Some(mv))
-          if w > 0 && h > 0 && mv > 0 && mv < 256 =>
-        // exactly one whitespace byte separates maxval from the raster
-        // (the spec's rule — a raster may begin with whitespace-valued
-        // pixels, so skipping a RUN here would corrupt them)
-        if (i >= bytes.length || !isWs(bytes(i))) return None
-        i += 1
-        if (bytes.length - i < w.toLong * h) return None
-        Some(PgmImage(w, h, mv,
-          java.util.Arrays.copyOfRange(bytes, i, i + w * h)))
-      case _ => None
-    }
-  }
-
-  /** Batched decode — the real-codec successor of the r1–r8 byte
-    * histogram stub, same signature and batch shape (Iterator[MediaItem]
-    * → Iterator[MediaFeatures], one batch per partition, no per-row
-    * setup — a JNI/process-backed codec would reuse exactly this seam).
-    * Features = normalized 16-bin histogram over the DECODED raster (the
-    * high nibble of each pixel), nBytes = the encoded payload size.
-    * Undecodable payloads yield nBytes = -1 with zero features.
-    */
-  def decodePgmBatch(items: Iterator[MediaItem]): Iterator[MediaFeatures] =
-    items.map { m =>
-      decodePgm(m.payload) match {
-        case Some(img) =>
-          val hist = new Array[Float](16)
-          var i = 0
-          while (i < img.pixels.length) {
-            hist((img.pixels(i) & 0xff) >> 4) += 1f; i += 1
-          }
-          val n = math.max(1, img.pixels.length).toFloat
-          var b = 0
-          while (b < 16) { hist(b) /= n; b += 1 }
-          MediaFeatures(m.docId, m.payload.length.toLong, hist)
-        case None => MediaFeatures(m.docId, -1L, new Array[Float](16))
-      }
-    }
-
-  /** Synthesize a PGM-carrying media table from `documents`: each doc
-    * becomes a real P5 image whose raster is its text's UTF-8 bytes
-    * (zero-padded/truncated to the raster size) and whose dimensions
-    * derive deterministically from doc fields — the ingest shape a real
-    * image corpus would have (binary column + typed metadata), with
-    * payloads an actual decoder can decode.
-    */
-  def pgmTable(spark: SparkSession, docs: DataFrame): Dataset[MediaItem] = {
-    import spark.implicits._
-    docs.select(col("doc_id"), col("text"), col("n_chars"))
-      .as[(Long, String, Long)]
-      .mapPartitions(_.map { case (id, text, nChars) =>
-        val w = 1 + (nChars % 31).toInt
-        val h = 1 + (nChars % 17).toInt
-        val px = Option(text).getOrElse("")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        MediaItem(id, encodePgm(w, h, 255, px), MediaMeta("pgm", w, h, 0L))
-      })
-  }
-
-  /** Batched decode over a typed media table: mapPartitions, preserving
-    * partitioning (no shuffle).
-    */
-  def decodeFeatures(media: Dataset[MediaItem]): Dataset[MediaFeatures] =
-    media.mapPartitions(decodePgmBatch)(
-      org.apache.spark.sql.Encoders.product[MediaFeatures])
-
-  // (The former DataFrame overload of decodeFeatures is gone: its
-  // documented input — mediaTable's raw UTF-8 payloads — is wholesale
-  // quarantined by the PGM decoder, so every call following its doc
-  // comment silently produced zero features. Decode paths go through
-  // pgmTable + the typed overload above.)
-
   /** Resize STUB — deterministic byte downsample (every factor-th byte),
-    * standing in for an image resize the way the byte histogram once
-    * stood in for a decoder. HOF-only, so it runs inside the scan
-    * projection; a real resize would swap into the [[decodePgmBatch]]
-    * batch path instead.
+    * standing in for an image resize. HOF-only, so it runs inside the
+    * scan projection.
     */
   def resizeSpark(text: String, factor: Int): String =
     s"array_join(transform(sequence(0, CAST(floor((length($text) - 1) / $factor) AS INT)), " +
@@ -209,99 +62,4 @@ object MultimodalOps {
       s"f -> {frame_id: CAST(f AS BIGINT), " +
       s"off: CAST(f * $FrameSize + 1 AS BIGINT), " +
       s"len: CAST(least($FrameSize, $payloadLen - f * $FrameSize) AS BIGINT)})"
-
-  // ---- perceptual near-dup: difference hash over the decoded raster ----
-
-  val DHashGridW = 9 // 9×8 gray cells → 8 comparisons × 8 rows = 64 bits
-  val DHashGridH = 8
-  val DHashBands = 8 // 8 bands × 8 bits: pigeonhole-complete to hamming 7
-  val DHashHamMax = 6
-
-  final case class MediaHash(docId: Long, dhash: Long)
-
-  /** 64-bit difference hash (dHash) of a decoded raster: integer
-    * box-average downsample to a 9×8 gray grid, bit (r, c) set iff
-    * cell(r, c) < cell(r, c+1). The hash keys on GRADIENTS, so any
-    * clamp-free uniform brightness shift — the classic re-encode
-    * artifact — preserves every comparison and collides exactly; a
-    * different image flips roughly half the bits. Pure integer
-    * (box sums / counts, truncating division), so the hash is
-    * deterministic across platforms.
-    */
-  def dHash(img: PgmImage): Long = {
-    val (gw, gh) = (DHashGridW, DHashGridH)
-    val cells = Array.ofDim[Long](gh, gw)
-    var r = 0
-    while (r < gh) {
-      var c = 0
-      while (c < gw) {
-        val y0 = r * img.height / gh
-        val y1 = math.min(img.height, math.max(y0 + 1, (r + 1) * img.height / gh))
-        val x0 = c * img.width / gw
-        val x1 = math.min(img.width, math.max(x0 + 1, (c + 1) * img.width / gw))
-        var s = 0L; var n = 0L
-        var y = y0
-        while (y < y1) {
-          var x = x0
-          while (x < x1) {
-            s += img.pixels(y * img.width + x) & 0xff; n += 1; x += 1
-          }
-          y += 1
-        }
-        cells(r)(c) = if (n == 0) 0L else s / n
-        c += 1
-      }
-      r += 1
-    }
-    var h = 0L; var bit = 0
-    r = 0
-    while (r < gh) {
-      var c = 0
-      while (c < gw - 1) {
-        if (cells(r)(c) < cells(r)(c + 1)) h |= 1L << bit
-        bit += 1; c += 1
-      }
-      r += 1
-    }
-    h
-  }
-
-  /** (doc_id, dhash) per decodable payload — batched mapPartitions like
-    * [[decodeFeatures]], quarantined payloads dropped (they have no
-    * raster to hash).
-    */
-  def dHashTable(media: Dataset[MediaItem]): Dataset[MediaHash] =
-    media.mapPartitions(_.flatMap(m =>
-      decodePgm(m.payload).map(img => MediaHash(m.docId, dHash(img)))))(
-      org.apache.spark.sql.Encoders.product[MediaHash])
-
-  /** Image near-dup pairs by banded hamming join: the 64-bit hash splits
-    * into DHashBands 8-bit bands; a pair at hamming ≤ 7 shares at least
-    * one clean band (pigeonhole over 8 bands), so the (band, key)
-    * self-equi-join is a COMPLETE candidate generator for
-    * hamMax ≤ DHashHamMax — the q34–q36 band-then-verify family applied
-    * to pixels. Verify = bit_count(xor) ≤ hamMax on candidates only;
-    * never all-pairs. DISTINCT dedupes multi-band hits before the
-    * (cheap) verify, the q39 pattern.
-    */
-  def imageNearDup(hashes: DataFrame, hamMax: Int = DHashHamMax): DataFrame = {
-    require(hamMax < DHashBands,
-      s"banding is only complete to hamming ${DHashBands - 1}")
-    val bands = hashes.select(col("docId").as("doc_id"), col("dhash"),
-      explode(expr(s"transform(sequence(0, ${DHashBands - 1}), " +
-        "b -> named_struct('band', b, " +
-        "'key', shiftright(dhash, b * 8) & 255))")).as("p"))
-      .select(col("doc_id"), col("dhash"),
-        col("p.band").as("band"), col("p.key").as("key"))
-    bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"),
-        col("x.dhash").as("ha"), col("y.dhash").as("hb"))
-      .distinct()
-      .withColumn("hamming",
-        expr("CAST(bit_count(ha ^ hb) AS BIGINT)"))
-      .filter(col("hamming") <= hamMax)
-      .select(col("id_a"), col("id_b"), col("hamming"))
-  }
 }

@@ -25,7 +25,7 @@ import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter,
   Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.read.SupportsPushDownFilters
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter,
-  GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan,
+  GreaterThan, GreaterThanOrEqual, IsNotNull, IsNull, LessThan,
   LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap

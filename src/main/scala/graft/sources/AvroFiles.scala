@@ -26,8 +26,7 @@ import org.apache.spark.sql.types._
   * Scale shape: write is one container file per partition through the
   * Hadoop FileSystem API (cluster-correct: HDFS/S3A resolve by
   * scheme); read is `binaryFiles` + a streaming decoder per file —
-  * `mapPartitions`-at-the-codec-boundary, the MultimodalOps rule; no
-  * shuffle either way. Files are deflate-compressed (JDK codec — no
+  * `mapPartitions` at the codec boundary; no shuffle either way. Files are deflate-compressed (JDK codec — no
   * native lib dependency). Values map by FIELD NAME, not position, so
   * a reader schema may project/reorder a writer schema's fields.
   */

@@ -22,10 +22,9 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition,
   SupportsPushDownFilters, SupportsPushDownRequiredColumns,
   SupportsRuntimeFiltering}
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.sources.{And, DataSourceRegister,
-  EqualNullSafe, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In,
-  IsNotNull, IsNull, LessThan, LessThanOrEqual, Not, Or,
-  StringStartsWith}
+import org.apache.spark.sql.sources.{And, DataSourceRegister, EqualTo,
+  Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull,
+  LessThan, LessThanOrEqual, Or}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String

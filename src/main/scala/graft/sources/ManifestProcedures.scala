@@ -32,8 +32,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 private[sources] object ManifestProcedures {
 
-  private def conf = SparkSession.active.sessionState.newHadoopConf()
-
   private def oneRow(schema: StructType, values: Any*): Scan = {
     val row = new GenericInternalRow(values.toArray)
     new LocalScan {

@@ -17,9 +17,8 @@ import org.apache.spark.sql.types.StructType
 final class ConcurrentWriteException(msg: String)
   extends RuntimeException(msg)
 
-/** Manifest-swap publication over plain parquet — the atomic
-  * MULTI-partition commit [[PartitionedSink]] documents as its missing
-  * production upgrade: `upsertPartitions` / `compactPartitions` are
+/** Manifest-swap publication over plain parquet — an atomic
+  * MULTI-partition commit. A per-partition directory overwrite is
   * idempotent per partition, but a reader racing a half-done job can
   * see mixed old/new partitions. Here readers never resolve the file
   * list from the directory at all — they resolve it through ONE
@@ -138,15 +137,8 @@ object ManifestedTable {
   /** Current snapshot's relative file paths (empty table ⇒ empty list;
     * NO manifest at all ⇒ error — an unpublished dir is not a table).
     */
-  def currentFiles(spark: SparkSession, dir: String): Seq[String] = {
-    val fs = fsOf(spark, dir)
-    val root = new Path(dir)
-    val vs = manifestVersions(fs, root)
-    require(vs.nonEmpty, s"no committed manifest under $dir")
-    val (hv, _) = headVersion(fs, root, None).getOrElse(throw
-      new IllegalStateException(s"no main commit under $dir"))
-    resolveDataLines(fs, root, vs.toMap, hv).map(pathOf)
-  }
+  def currentFiles(spark: SparkSession, dir: String): Seq[String] =
+    currentSnapshot(fsOf(spark, dir), new Path(dir))._2.map(pathOf)
 
   /** Version of the current MAIN snapshot — unpromoted branch commits
     * are invisible here, exactly as to [[read]].
@@ -695,7 +687,7 @@ object ManifestedTable {
     * contributes no token — it is just never pruned on.
     */
   private def statLine(fs: FileSystem, root: Path, rel: String,
-      bloomCols: Set[String] = Set.empty): String = {
+      bloomCols: Set[String]): String = {
     import scala.jdk.CollectionConverters._
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -1008,18 +1000,19 @@ object ManifestedTable {
     linesOf
   }
 
-  /** Live branch heads (name, head version, manifest path), newest
-    * commit per name, honoring both retirement forms: a DROP tombstone
-    * is the branch's own newest commit; a PROMOTE retires the name
-    * from the main commit that published it (commits newer than the
-    * promote under the same name are a FRESH branch).
+  /** Live branch heads (name, head version, manifest path) in the
+    * `_manifests` listing `vs`, newest commit per name, honoring both
+    * retirement forms: a DROP tombstone is the branch's own newest
+    * commit; a PROMOTE retires the name from the main commit that
+    * published it (commits newer than the promote under the same name
+    * are a FRESH branch).
     */
   private def liveBranchHeads(fs: FileSystem,
-      root: Path): Seq[(String, Long, Path)] = {
+      vs: Seq[(Long, Path)]): Seq[(String, Long, Path)] = {
     val dead = scala.collection.mutable.Set.empty[String]
     val heads =
       scala.collection.mutable.LinkedHashMap.empty[String, (Long, Path)]
-    manifestVersions(fs, root).reverseIterator.foreach { case (v, p) =>
+    vs.reverseIterator.foreach { case (v, p) =>
       val m = readMeta(fs, p)
       m.get(BranchKey) match {
         case Some(b) =>
@@ -1040,13 +1033,20 @@ object ManifestedTable {
     * commit).
     */
   private def headVersion(fs: FileSystem, root: Path,
+      ref: Option[String]): Option[(Long, Path)] =
+    headIn(fs, manifestVersions(fs, root), ref)
+
+  /** [[headVersion]] over a `_manifests` listing already in hand, so a
+    * caller that needs both the listing and the head lists once.
+    */
+  private def headIn(fs: FileSystem, vs: Seq[(Long, Path)],
       ref: Option[String]): Option[(Long, Path)] = ref match {
     case Some(b) =>
-      liveBranchHeads(fs, root).collectFirst {
+      liveBranchHeads(fs, vs).collectFirst {
         case (`b`, v, p) => (v, p)
       }
     case None =>
-      manifestVersions(fs, root).reverseIterator
+      vs.reverseIterator
         .map { case (v, p) => (v, p, readMeta(fs, p)) }
         .collectFirst {
           case (v, p, m) if !m.contains(BranchKey) => (v, p)
@@ -1349,8 +1349,8 @@ object ManifestedTable {
       checkRefName(b)
       val vs = manifestVersions(fs, root)
       require(vs.nonEmpty, s"no committed manifest under $root")
-      val hv = headVersion(fs, root, Some(b)).map(_._1)
-        .orElse(headVersion(fs, root, None).map(_._1))
+      val hv = headIn(fs, vs, Some(b)).map(_._1)
+        .orElse(headIn(fs, vs, None).map(_._1))
         .getOrElse(throw new IllegalStateException(
           s"no main commit under $root"))
       (hv, resolveDataLines(fs, root, vs.toMap, hv))
@@ -1374,7 +1374,7 @@ object ManifestedTable {
       : (Long, Path, Seq[String]) = {
     val vs = manifestVersions(fs, root)
     require(vs.nonEmpty, s"no committed manifest under $root")
-    val (hv, hp) = headVersion(fs, root, None).getOrElse(throw
+    val (hv, hp) = headIn(fs, vs, None).getOrElse(throw
       new IllegalStateException(s"no main commit under $root"))
     (hv, hp, resolveDataLines(fs, root, vs.toMap, hv))
   }
@@ -1399,7 +1399,7 @@ object ManifestedTable {
     */
   private def pruneByKeyBounds(entries: Seq[(String, FileStats)],
       probe: DataFrame, keys: Seq[String],
-      epochs: Seq[Map[Int, String]] = Nil,
+      epochs: Seq[Map[Int, String]],
       boundsRow: Option[org.apache.spark.sql.Row] = None): Seq[String] = {
     import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
     val aggCols = keys.flatMap(k => Seq(
@@ -1565,7 +1565,7 @@ object ManifestedTable {
   }
 
   private def statLinesRaw(fs: FileSystem, root: Path,
-      rels: Seq[String], bloomCols: Set[String] = Set.empty): Seq[String] = {
+      rels: Seq[String], bloomCols: Set[String]): Seq[String] = {
     if (rels.size <= 1) rels.map(rel => statLine(fs, root, rel, bloomCols))
     else {
       val pool = java.util.concurrent.Executors
@@ -2354,11 +2354,10 @@ object ManifestedTable {
 
   /** ATOMIC compaction: rewrite the current snapshot into
     * ceil(bytes/targetFileBytes) files staged in a fresh dir, then one
-    * manifest rename swaps the whole table — the upgrade over
-    * [[PartitionedSink.compactPartitions]]'s documented mid-swap
-    * window. A no-op (already compact) commits nothing. Old files stay
-    * until [[vacuum]] so readers mid-scan on the previous snapshot
-    * finish cleanly.
+    * manifest rename swaps the whole table, so no reader sees a
+    * half-swapped partition directory. A no-op (already compact)
+    * commits nothing. Old files stay until [[vacuum]] so readers
+    * mid-scan on the previous snapshot finish cleanly.
     */
   def compact(spark: SparkSession, dir: String,
       targetFileBytes: Long): Long = {
@@ -2564,7 +2563,8 @@ object ManifestedTable {
       : Seq[(String, String, Long)] = {
     val root = new Path(dir)
     val fs = root.getFileSystem(conf)
-    liveBranchHeads(fs, root).map { case (b, v, _) => (b, "branch", v) } ++
+    liveBranchHeads(fs, manifestVersions(fs, root))
+      .map { case (b, v, _) => (b, "branch", v) } ++
       tagsConf(fs, root).map { case (t, v, _) => (t, "tag", v) }
   }
 
@@ -2761,9 +2761,11 @@ object ManifestedTable {
   /** Live branches (name, head version) — dropped and promoted
     * branches excluded.
     */
-  def branches(spark: SparkSession, dir: String): Seq[(String, Long)] =
-    liveBranchHeads(fsOf(spark, dir), new Path(dir))
+  def branches(spark: SparkSession, dir: String): Seq[(String, Long)] = {
+    val fs = fsOf(spark, dir)
+    liveBranchHeads(fs, manifestVersions(fs, new Path(dir)))
       .map { case (b, v, _) => (b, v) }
+  }
 
   /** PUBLISH: promote `branch` onto main as one atomic commit —
     * fast-forward ONLY. Main must not have advanced past the branch's
@@ -3983,7 +3985,7 @@ object ManifestedTable {
     // regardless of age: an unpromoted write-audit-publish staging
     // snapshot must survive maintenance until promoted or dropped.
     val branchHeadVs: Set[Long] =
-      liveBranchHeads(fs, root).map(_._2).toSet
+      liveBranchHeads(fs, manifestVersions(fs, root)).map(_._2).toSet
     // the MAIN head is retained unconditionally too: with a branch
     // commit as the newest global version, keepLast alone could drop
     // the snapshot every main reader resolves

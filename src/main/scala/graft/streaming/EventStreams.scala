@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 /** Structured Streaming surface (SURVEY §2.9 — beyond-reference): the
   * engine's aggregation and dedup paths re-expressed over an unbounded
@@ -50,36 +50,13 @@ object EventStreams {
         .withColumn("ts_nanos", unix_micros(col("ts")) * 1000L)
   }
 
-  /** Per-window heavy hitters via the native `mg_sketch` aggregate —
-    * sketches as STREAMING STATE: the TypedImperativeAggregate's
-    * serialize/merge path (the same one batch shuffles exercise) is
-    * what the state store round-trips between micro-batches, so a
-    * window's candidate set accumulates across batches in ≤ 2·cap
-    * terms of state — the q100 vocabulary-independence argument
-    * applied to an unbounded stream, where it matters MORE: a
-    * per-window exact token count would grow state with the window's
-    * vocabulary, unevictable until the watermark closes the window.
-    * The Misra-Gries containment guarantee (any term with count >
-    * n/(cap+1) is present) holds per window regardless of how the
-    * stream was batched; `err` rides along so the consumer can apply
-    * the q100 exactness test downstream.
-    */
-  def windowedHeavyHitters(ev: DataFrame, cap: Int, termCol: String,
-                           watermark: String = "2 hours"): DataFrame =
-    ev.withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour"))
-      .agg(expr(s"mg_sketch($termCol, $cap)").as("sk"))
-      .select(col("window.start").as("window_start"),
-        col("sk.terms").as("terms"), col("sk.err").as("err"))
-
   /** Event-time windowed VALUE histogram (T40): the streaming producer
     * of q130's mergeable quantile partials — per (hour window, fixed
     * bucket) integer counts, watermark-evicted. State per window is
-    * ≤ histB rows regardless of event volume or value distribution (the
-    * same capacity-bound story as [[windowedHeavyHitters]], for
-    * quantiles), and the emitted partials merge downstream by plain
-    * SUM-by-bucket — percentile estimates over any window span without
-    * rescanning the stream, with q130's ≤ 2-bucket error bound.
+    * ≤ histB rows regardless of event volume or value distribution, and
+    * the emitted partials merge downstream by plain SUM-by-bucket —
+    * percentile estimates over any window span without rescanning the
+    * stream, with q130's ≤ 2-bucket error bound.
     */
   def windowedValueHistogram(ev: DataFrame, histB: Long, histW: Double,
                              watermark: String = "2 hours",
@@ -104,18 +81,10 @@ object EventStreams {
       .select(hour(col("window.start")).cast("long").as("hour"),
         col("window.start").as("window_start"), col("cnt"))
 
-  /** Streaming exact dedup on content key with watermarked state eviction
-    * — the streaming form of `DedupOps.exactDups`' keep-first semantics.
-    */
-  def dedupStream(ev: DataFrame, keyCols: Seq[String],
-                  watermark: String = "2 hours"): DataFrame =
-    ev.withWatermark("ts", watermark)
-      .dropDuplicates(keyCols :+ "ts")
-
-  /** Key-only streaming dedup (`dropDuplicatesWithinWatermark`): unlike
-    * [[dedupStream]], the event-time column is NOT part of the key — a
-    * key is emitted once and suppressed until the watermark passes its
-    * last-seen event time, the retry-collapse/at-least-once-ingest pass.
+  /** Key-only streaming dedup (`dropDuplicatesWithinWatermark`): the
+    * event-time column is NOT part of the key — a key is emitted once
+    * and suppressed until the watermark passes its last-seen event
+    * time, the retry-collapse/at-least-once-ingest pass.
     * State per key is bounded by the watermark delay, not stream
     * history.
     */
@@ -179,208 +148,6 @@ object EventStreams {
             Iterator.single(UserSessions(user, nEvents, sessions))
           }
       }
-  }
-
-  /** [[sessionize]] re-expressed on Spark 4's `transformWithState`
-    * StatefulProcessor API — the successor of flatMapGroupsWithState
-    * (SPARK-40434): typed composable state handles (Value/List/Map) with
-    * per-state TTL instead of one opaque blob with one timeout, timers
-    * decoupled from state, and RocksDB-only by design (the scale-grade
-    * backend is the contract, not an option). Kept BESIDE the fMGWS form
-    * deliberately: same semantics, two state APIs — StreamingSpec proves
-    * them batch-for-batch identical, which is the migration-safety
-    * property a production stream needs before switching.
-    *
-    * State here is one fixed-size triple per ACTIVE user (same bound as
-    * the fMGWS version); `TTLConfig` is where an idle-user eviction
-    * policy would go — NONE keeps parity with the fMGWS NoTimeout form.
-    */
-  final class SessionizeProcessor(gapNanos: Long)
-      extends StatefulProcessor[Long, SessionEvent, UserSessions] {
-    @transient private var st: ValueState[SessionState] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[SessionState]("sess",
-        org.apache.spark.sql.Encoders.product[SessionState], TTLConfig.NONE)
-    override def handleInputRows(user: Long, rows: Iterator[SessionEvent],
-                                 tv: TimerValues): Iterator[UserSessions] = {
-      val sorted = rows.map(_.ts_nanos).toArray.sorted
-      if (sorted.isEmpty) Iterator.empty
-      else {
-        var (lastTs, sessions, nEvents) =
-          if (st.exists()) { val s = st.get(); (s.lastTs, s.sessions, s.events) }
-          else (Long.MinValue, 0L, 0L)
-        sorted.foreach { t =>
-          if (lastTs == Long.MinValue || t - lastTs > gapNanos) sessions += 1
-          lastTs = t; nEvents += 1
-        }
-        st.update(SessionState(lastTs, sessions, nEvents))
-        Iterator.single(UserSessions(user, nEvents, sessions))
-      }
-    }
-  }
-
-  /** [[sessionize]] via [[SessionizeProcessor]]. Requires the RocksDB
-    * state-store provider (transformWithState refuses the default
-    * HDFS-backed one — set it on the session before starting the query).
-    */
-  def sessionizeTws(spark: SparkSession, ev: DataFrame,
-                    gapNanos: Long): Dataset[UserSessions] = {
-    import spark.implicits._
-    ev.select(col("user_id"), col("ts_nanos"))
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionizeProcessor(gapNanos),
-        TimeMode.None(), OutputMode.Update())
-  }
-
-  final case class OpenSession(startTs: Long, lastTs: Long, events: Long)
-  final case class ClosedSession(user_id: Long, start_nanos: Long,
-                                 end_nanos: Long, n_events: Long)
-
-  /** Timer-closed sessionization — the part of the StatefulProcessor API
-    * [[SessionizeProcessor]] doesn't exercise: EVENT-TIME TIMERS
-    * decoupled from state. A session is emitted exactly once, as a
-    * FINAL row (Append mode), when the watermark passes lastTs + gap —
-    * the fMGWS equivalent needs GroupStateTimeout plumbed through the
-    * same state blob; here the timer is a separate registration the
-    * runtime fires via [[handleExpiredTimer]]. Within a batch, earlier
-    * sessions of the same key close inline (the gap rule); only the
-    * trailing open session waits on its timer. State per key: one open
-    * session + one timer — eviction is the API's job, not a watermark
-    * side effect.
-    */
-  final class SessionCloseProcessor(gapNanos: Long)
-      extends StatefulProcessor[Long, SessionEvent, ClosedSession] {
-    @transient private var st: ValueState[OpenSession] = _
-    override def init(om: OutputMode, tm: TimeMode): Unit =
-      st = getHandle.getValueState[OpenSession]("open",
-        org.apache.spark.sql.Encoders.product[OpenSession], TTLConfig.NONE)
-    // round UP to the next whole ms: flooring lastTs and gap separately
-    // could fire the timer up to ~2 ms before the nanos-precise horizon,
-    // losing the race against a boundary event the strict-> inline rule
-    // would have merged
-    private def expiryMs(lastTsNanos: Long): Long =
-      (lastTsNanos + gapNanos + 999999L) / 1000000L
-    override def handleInputRows(user: Long, rows: Iterator[SessionEvent],
-                                 tv: TimerValues): Iterator[ClosedSession] = {
-      val sorted = rows.map(_.ts_nanos).toArray.sorted
-      if (sorted.isEmpty) Iterator.empty
-      else {
-        val closed =
-          scala.collection.mutable.ArrayBuffer.empty[ClosedSession]
-        var open: OpenSession = if (st.exists()) st.get() else null
-        sorted.foreach { t =>
-          open =
-            if (open == null) OpenSession(t, t, 1L)
-            else if (t - open.lastTs > gapNanos) {
-              closed += ClosedSession(user, open.startTs, open.lastTs,
-                open.events)
-              OpenSession(t, t, 1L)
-            } else OpenSession(open.startTs, math.max(open.lastTs, t),
-              open.events + 1L)
-        }
-        // re-arm: ONE timer per key tracks the open session's horizon
-        // (materialize before deleting — mutating while iterating the
-        // runtime's timer iterator is undefined)
-        getHandle.listTimers().toList.foreach(getHandle.deleteTimer)
-        getHandle.registerTimer(expiryMs(open.lastTs))
-        st.update(open)
-        closed.iterator
-      }
-    }
-    override def handleExpiredTimer(user: Long, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[ClosedSession] =
-      if (!st.exists()) Iterator.empty
-      else {
-        val o = st.get()
-        st.clear()
-        Iterator.single(ClosedSession(user, o.startTs, o.lastTs, o.events))
-      }
-  }
-
-  final case class UserEvent(user_id: Long, ts_nanos: Long,
-                             event_id: Long, event_type: String)
-  final case class RecentEv(ts_nanos: Long, event_id: Long)
-  final case class UserTypeStats(user_id: Long, n_types: Long,
-                                 n_events: Long, last_ids: Seq[Long])
-
-  /** Composite-state processor — the two transformWithState state KINDS
-    * the sessionizers don't exercise: a MapState (per-user counts keyed
-    * by event type — state the size of the user's TYPE set, not their
-    * history) and a bounded ListState (the K most recent (ts, id)
-    * pairs, trimmed every batch — a ring buffer the fMGWS API could
-    * only fake inside one opaque blob). Emits the running per-user
-    * summary each batch (Update mode). The composition is the point:
-    * one key owns three independently-typed state handles (the
-    * SessionizeProcessor's ValueState tier showed one), each with its
-    * own TTL policy slot, which is exactly the API migration target
-    * SPARK-40434 sells over flatMapGroupsWithState.
-    */
-  final class TypeStatsProcessor(k: Int)
-      extends StatefulProcessor[Long, UserEvent, UserTypeStats] {
-    @transient private var counts: MapState[String, Long] = _
-    @transient private var recent: ListState[RecentEv] = _
-    override def init(om: OutputMode, tm: TimeMode): Unit = {
-      counts = getHandle.getMapState[String, Long]("counts",
-        org.apache.spark.sql.Encoders.STRING,
-        org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-      recent = getHandle.getListState[RecentEv]("recent",
-        org.apache.spark.sql.Encoders.product[RecentEv], TTLConfig.NONE)
-    }
-    override def handleInputRows(user: Long, rows: Iterator[UserEvent],
-                                 tv: TimerValues): Iterator[UserTypeStats] = {
-      val batch = rows.toArray
-      if (batch.isEmpty) Iterator.empty
-      else {
-        batch.groupBy(_.event_type).foreach { case (t, es) =>
-          val prev = if (counts.containsKey(t)) counts.getValue(t) else 0L
-          counts.updateValue(t, prev + es.length)
-        }
-        // merge the batch into the bounded ring: keep the K largest
-        // (ts, id) pairs across state + batch — clear-and-rewrite is
-        // the ListState trim idiom (appendList alone only grows)
-        val merged = (recent.get().toSeq ++
-            batch.map(e => RecentEv(e.ts_nanos, e.event_id)))
-          .sortBy(r => (-r.ts_nanos, -r.event_id)).take(k)
-        recent.clear()
-        recent.appendList(merged.toArray)
-        var nTypes = 0L
-        var nEvents = 0L
-        val it = counts.iterator()
-        while (it.hasNext) { nTypes += 1; nEvents += it.next()._2 }
-        Iterator.single(UserTypeStats(user, nTypes, nEvents,
-          merged.map(_.event_id)))
-      }
-    }
-  }
-
-  /** [[TypeStatsProcessor]] as a query (RocksDB provider required, as
-    * [[sessionizeTws]]).
-    */
-  def typeStatsTws(spark: SparkSession, ev: DataFrame,
-                   k: Int): Dataset[UserTypeStats] = {
-    import spark.implicits._
-    ev.select(col("user_id"), col("ts_nanos"), col("event_id"),
-        col("event_type"))
-      .as[UserEvent]
-      .groupByKey(_.user_id)
-      .transformWithState(new TypeStatsProcessor(k),
-        TimeMode.None(), OutputMode.Update())
-  }
-
-  /** [[SessionCloseProcessor]] as a query: watermarked event time drives
-    * the timers; output is append-mode final sessions.
-    */
-  def sessionCloseTws(spark: SparkSession, ev: DataFrame, gapNanos: Long,
-                      watermark: String = "0 seconds"): Dataset[ClosedSession] = {
-    import spark.implicits._
-    ev.withColumn("ts", timestamp_micros(expr("ts_nanos div 1000")))
-      .withWatermark("ts", watermark)
-      .select(col("user_id"), col("ts_nanos"))
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionCloseProcessor(gapNanos),
-        TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** Scratch root shared by every bounded run in this JVM: ONE shutdown
@@ -500,30 +267,4 @@ object EventStreams {
     } else spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), out.schema)
   }
-
-  /** Exactly-once `foreachBatch` sink for APPEND-shaped streams into
-    * parquet: the production pattern, split into its two halves.
-    * Structured Streaming's checkpoint gives REPLAY — after a failure
-    * the engine re-runs every batch not yet marked committed, possibly
-    * re-delivering one the sink already wrote. Exactly-once therefore
-    * needs the sink to be IDEMPOTENT per batchId, and this is the
-    * standard construction: stamp rows with the batch id, write
-    * `mode(overwrite)` + DYNAMIC partition-overwrite + partitionBy
-    * (batch_id) — a re-delivered batch replaces exactly its own
-    * `batch_id=<n>/` directory and touches no other batch's output, so
-    * replay converges instead of duplicating. (Contrast the plain
-    * append sink `runBounded` uses: correct for its single
-    * AvailableNow drain, duplicating under redelivery — which is why a
-    * production append sink uses THIS shape. StreamingSpec pins the
-    * idempotence by re-delivering a batch and diffing the sink.)
-    * At scale the overwrite granularity is one batch's files —
-    * manifest-sized driver work, no table-wide commit.
-    */
-  def idempotentBatchWrite(batch: DataFrame, batchId: Long,
-                           dir: String): Unit =
-    batch.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(dir)
 }

@@ -107,4 +107,27 @@ class CboStatsSpec extends SparkTestBase {
         spark.sql(s"DROP TABLE IF EXISTS gm_cbo.$t"))
     }
   }
+
+  test("ANALYZE TABLE feeds row-count stats into the optimizer (CBO)") {
+    // the in-memory catalog forgets tables across sessions but the
+    // managed location survives — clear it or the CTAS refuses
+    val loc = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"), "ord_stats")
+    loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(loc, true)
+    core.Tables.orders(spark, sf).write.mode("overwrite")
+      .saveAsTable("ord_stats")
+    spark.sql("ANALYZE TABLE ord_stats COMPUTE STATISTICS")
+    // catalog row counts reach plan Statistics only under CBO
+    spark.conf.set("spark.sql.cbo.enabled", "true")
+    try {
+      val stats = spark.table("ord_stats").queryExecution.optimizedPlan.stats
+      val expected = core.Tables.orders(spark, sf).count()
+      assert(stats.rowCount.exists(_.toLong == expected),
+        s"catalog stats missing/wrong: ${stats.rowCount}")
+    } finally {
+      spark.conf.unset("spark.sql.cbo.enabled")
+      spark.sql("DROP TABLE IF EXISTS ord_stats")
+    }
+  }
 }

@@ -1,202 +1,20 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sources.PartitionedSink
 
-/** Small-file compaction (the layout tier's repair operator beside T9
-  * bucketing and T23 z-order): a fragmented partitioned table must
-  * collapse to its target file counts WITHOUT changing a row, a dirname,
-  * or the pruned-readback plan — and an already-compact table must cost
-  * nothing to re-compact (the 100-TB loop length is the fragmented
+/** Small-file compaction and atomic commits on the manifested table
+  * (the layout tier's repair operator beside T23 z-order): a fragmented
+  * table must collapse to its target file counts WITHOUT changing a
+  * row or the pruned-readback plan — and an already-compact table must
+  * cost nothing to re-compact (the 100-TB loop length is the fragmented
   * tail, not the table).
   */
 class CompactionSpec extends SparkTestBase {
 
-  private def fileCount(dir: String): Int = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles.toSeq.flatMap(walk)
-      else Seq(f)
-    walk(new java.io.File(dir))
-      .count(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-  }
-
-  test("compaction bin-packs to target counts, preserves rows and pruning") {
-    val dir = tempDir("graft_compact").toString
-    // fragment deliberately: 8 hash partitions × partitionBy(day) means
-    // every task writes into every day directory — the exact
-    // small-files explosion writePartitioned's repartition exists to
-    // avoid, and the mess a streaming ingest leaves behind
-    val ev = graft.core.Tables.events(spark, sf)
-      .withColumn("day", date_format(col("ts"), "yyyyMMdd"))
-    ev.repartition(8)
-      .write.mode("overwrite").partitionBy("day").parquet(dir)
-
-    val before = fileCount(dir)
-    val rowsBefore = spark.read.parquet(dir)
-      .agg(count(lit(1)), sum(col("event_id")), countDistinct(col("event_id")))
-      .head
-    // generous target → every partition packs to exactly one file
-    val report = PartitionedSink.compactPartitions(spark, dir, 1L << 30)
-
-    assert(report.filesBefore === before)
-    assert(report.parts.nonEmpty)
-    assert(report.parts.forall(_.filesAfter === 1),
-      report.parts.filter(_.filesAfter != 1).mkString(", "))
-    assert(report.filesAfter === report.parts.size)
-    assert(report.filesAfter < before,
-      s"no compaction happened: $before -> ${report.filesAfter}")
-    assert(fileCount(dir) === report.filesAfter)
-
-    // not a row changed
-    val rowsAfter = spark.read.parquet(dir)
-      .agg(count(lit(1)), sum(col("event_id")), countDistinct(col("event_id")))
-      .head
-    assert(rowsAfter === rowsBefore)
-
-    // partition pruning survives: dirnames were never touched, so a
-    // day-equality readback still prunes at the directory level
-    val readback = spark.read.parquet(dir)
-    val aDay = readback.select(col("day")).head.get(0)
-    val pruned = readback.filter(col("day") === lit(aDay))
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("day"),
-      s"day predicate is not a partition filter:\n${plan.take(600)}")
-    val direct = graft.core.Tables.events(spark, sf)
-      .filter(date_format(col("ts"), "yyyyMMdd") === aDay.toString).count()
-    assert(pruned.count() === direct)
-
-    // idempotence: a compact table is pure listing work — nothing rewrites
-    val again = PartitionedSink.compactPartitions(spark, dir, 1L << 30)
-    assert(again.rewrittenCount === 0, again.parts.filter(_.rewritten))
-    assert(again.filesAfter === report.filesAfter)
-  }
-
-  test("upsert rewrites only touched partitions; untouched files stay byte-identical") {
-    import spark.implicits._
-    val dir = tempDir("graft_upsert").toString
-    Seq(
-      (1L, "d1", 10.0), (2L, "d1", 20.0),
-      (3L, "d2", 30.0), (4L, "d2", 40.0),
-      (5L, "d3", 50.0), (6L, "d3", 60.0))
-      .toDF("id", "day", "v")
-      .repartition(col("day"))
-      .write.mode("overwrite").partitionBy("day").parquet(dir)
-
-    def files(sub: String): Map[String, Long] = {
-      val d = new java.io.File(s"$dir/day=$sub")
-      d.listFiles.filter(f => !f.getName.startsWith("_") &&
-        !f.getName.startsWith(".")).map(f => f.getName -> f.lastModified).toMap
-    }
-    val d3Before = files("d3")
-    assert(d3Before.nonEmpty)
-
-    // update id=1 (d1), move nothing, insert id=9 into d2; d3 untouched
-    val updates = Seq((1L, "d1", 11.0), (9L, "d2", 90.0)).toDF("id", "day", "v")
-    PartitionedSink.upsertPartitions(spark, dir, updates,
-      keyCols = Seq("id"), partitionCols = Seq("day"))
-
-    // partitionBy moves the partition column to the tail on readback —
-    // address fields by name
-    val got = spark.read.parquet(dir)
-      .collect().map(r => r.getAs[Long]("id") ->
-        ((r.getAs[String]("day"), r.getAs[Double]("v"))))
-      .toMap
-    assert(got === Map(
-      1L -> ("d1", 11.0), 2L -> ("d1", 20.0),
-      3L -> ("d2", 30.0), 4L -> ("d2", 40.0), 9L -> ("d2", 90.0),
-      5L -> ("d3", 50.0), 6L -> ("d3", 60.0)), got.toString)
-
-    // the untouched partition kept its exact files — same names, same
-    // mtimes: dynamic overwrite never visited the directory
-    assert(files("d3") === d3Before, "untouched partition was rewritten")
-
-    // pruning survives the rewrite
-    val plan = spark.read.parquet(dir).filter(col("day") === "d1")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("day"),
-      s"day predicate lost partition pruning:\n${plan.take(600)}")
-
-    // an upsert into a NEW partition creates it without touching others
-    val d1After = files("d1")
-    PartitionedSink.upsertPartitions(spark, dir,
-      Seq((100L, "d9", 1.0)).toDF("id", "day", "v"),
-      keyCols = Seq("id"), partitionCols = Seq("day"))
-    assert(files("d9").nonEmpty)
-    assert(files("d1") === d1After && files("d3") === d3Before)
-    assert(spark.read.parquet(dir).count() === 8)
-  }
-
-  test("upsert handles moved keys: old partition rewritten or deleted, no stale dup") {
-    import spark.implicits._
-    val dir = tempDir("graft_upsert_mv").toString
-    Seq(
-      (1L, "d1", 10.0), (2L, "d1", 20.0),
-      (3L, "d2", 30.0),
-      (7L, "d7", 70.0))                       // d7 holds ONLY the moved key
-      .toDF("id", "day", "v")
-      .repartition(col("day"))
-      .write.mode("overwrite").partitionBy("day").parquet(dir)
-
-    // id=1 moves d1→d2; id=7 moves d7→d2, emptying d7 entirely
-    val updates = Seq((1L, "d2", 11.0), (7L, "d2", 77.0)).toDF("id", "day", "v")
-    PartitionedSink.upsertPartitions(spark, dir, updates,
-      keyCols = Seq("id"), partitionCols = Seq("day"))
-
-    val got = spark.read.parquet(dir)
-      .collect().map(r => r.getAs[Long]("id") ->
-        ((r.getAs[String]("day"), r.getAs[Double]("v"))))
-      .toMap
-    // the contract: a key exists in exactly one partition after upsert —
-    // no stale copy of 1 in d1, and d7's all-stale directory is gone
-    assert(spark.read.parquet(dir).count() === 4,
-      "a moved key left a stale duplicate behind")
-    assert(got === Map(
-      1L -> ("d2", 11.0), 2L -> ("d1", 20.0),
-      3L -> ("d2", 30.0), 7L -> ("d2", 77.0)), got.toString)
-    assert(!new java.io.File(s"$dir/day=d7").exists(),
-      "emptied partition directory survived")
-
-    // the fast path keeps the old (documented) behavior: with
-    // partitionStableKeys the locating scan is skipped, so a violated
-    // invariant shows up as the stale duplicate the default now prevents
-    PartitionedSink.upsertPartitions(spark, dir,
-      Seq((2L, "d2", 22.0)).toDF("id", "day", "v"),
-      keyCols = Seq("id"), partitionCols = Seq("day"),
-      partitionStableKeys = true)
-    assert(spark.read.parquet(dir).filter(col("id") === 2L).count() === 2,
-      "partitionStableKeys=true should not locate prior partitions")
-  }
-
-  test("target size is honored: small targets produce multiple files") {
-    val dir = tempDir("graft_compact2").toString
-    graft.core.Tables.events(spark, sf)
-      .withColumn("m", date_format(col("ts"), "yyyyMM"))
-      .repartition(16)
-      .write.mode("overwrite").partitionBy("m").parquet(dir)
-    val bytesPerPart = {
-      val r = PartitionedSink.compactPartitions(spark, dir, Long.MaxValue)
-      // Long.MaxValue target: everything packs to 1 file per partition
-      assert(r.parts.forall(_.filesAfter === 1))
-      r.parts.map(p => p.partition -> p.bytes).toMap
-    }
-    // re-fragment, then compact with a target of ~half a partition's
-    // bytes → ceil(bytes/target) = 2 files for that partition
-    graft.core.Tables.events(spark, sf)
-      .withColumn("m", date_format(col("ts"), "yyyyMM"))
-      .repartition(16)
-      .write.mode("overwrite").partitionBy("m").parquet(dir)
-    val (part, bytes) = bytesPerPart.maxBy(_._2)
-    val report = PartitionedSink.compactPartitions(spark, dir, bytes / 2 + 1)
-    val got = report.parts.find(_.partition == part).get
-    assert(got.filesAfter === 2,
-      s"expected ceil bin-packing to 2 files for $part, got $got")
-  }
-
   test("manifested table: multi-file commits flip all-or-nothing; abort leaves the old snapshot live") {
-    // the atomic upgrade over compactPartitions' documented mid-swap
-    // window: readers resolve the file list through ONE rename-swapped
-    // manifest, never by listing — so a multi-file overwrite,
-    // compaction, or aborted job can never show a mixed table
+    // no mid-swap window: readers resolve the file list through ONE
+    // rename-swapped manifest, never by listing — so a multi-file
+    // overwrite, compaction, or aborted job can never show a mixed table
     import graft.sources.ManifestedTable
     val dir = tempDir("graft_mani").toString
     val ev = graft.core.Tables.events(spark, sf)

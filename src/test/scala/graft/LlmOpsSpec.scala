@@ -6,7 +6,7 @@ import graft.operators.{DedupOps, MultimodalOps, SimilarityOps, TextOps}
 
 /** LLM-pipeline operator tests at sf0.001: recall on planted duplicates,
   * LSH candidate ⊆ all-pairs soundness, SimHash locality, and the
-  * multimodal decode plumbing (the stub's batch shape and determinism).
+  * multimodal frame index.
   */
 class LlmOpsSpec extends SparkTestBase {
 
@@ -141,23 +141,6 @@ class LlmOpsSpec extends SparkTestBase {
     assert(r.isNullAt(0) && r.isNullAt(1), r.toString)
   }
 
-  test("multimodal: PGM decode preserves rows, batch shape, determinism") {
-    val media = MultimodalOps.pgmTable(spark, docs)
-    val feats = MultimodalOps.decodeFeatures(media)
-    val rows = feats.collect()
-    assert(rows.length == docs.count())
-    rows.foreach { f =>
-      assert(f.nBytes > 0, s"doc ${f.docId} failed to decode") // every synthetic PGM decodes
-      assert(f.features.length == 16)
-      // histogram is normalized: sums to ~1 for non-empty rasters
-      assert(math.abs(f.features.sum - 1f) < 1e-3)
-    }
-    // deterministic across runs
-    val again = MultimodalOps.decodeFeatures(media).collect()
-    assert(rows.sortBy(_.docId).zip(again.sortBy(_.docId))
-      .forall { case (a, b) => a.features.sameElements(b.features) })
-  }
-
   test("bigram LM flags a scrambled doc the unigram filter cannot see") {
     import spark.implicits._
     // A corpus with strong transition structure: 50 docs cycling the
@@ -189,99 +172,12 @@ class LlmOpsSpec extends SparkTestBase {
     }
   }
 
-  test("image dHash: brightness-invariant, discriminative, deterministic") {
-    // dHash keys on gradients: a clamp-free uniform brightness shift
-    // (the classic re-encode artifact) preserves every cell comparison
-    // — the invariance image near-dup rests on. The synthetic rasters
-    // are ASCII bytes (< 248), so +8 never clamps.
-    val imgs = MultimodalOps.pgmTable(spark, docs).collect()
-      .flatMap(m => MultimodalOps.decodePgm(m.payload).map(m.docId -> _))
-      .toMap
-    assert(imgs.size == docs.count())
-    imgs.foreach { case (id, img) =>
-      val bright = img.pixels.map(b => ((b & 0xff) + 8).toByte)
-      assert(MultimodalOps.dHash(img) ==
-        MultimodalOps.dHash(graft.operators.MultimodalOps.PgmImage(
-          img.width, img.height, img.maxVal, bright)),
-        s"doc $id: dHash not brightness-invariant")
-    }
-    // discriminative on this corpus: distinct-text images do not all
-    // collapse (collisions allowed, mass collapse is a bug)
-    val distinctHashes = imgs.values.map(MultimodalOps.dHash).toSet
-    assert(distinctHashes.size > imgs.size / 2,
-      s"only ${distinctHashes.size} distinct hashes for ${imgs.size} images")
-  }
-
-  test("image near-dup: banded hamming join ≡ brute force; planted pairs found") {
-    import spark.implicits._
-    // planted: every doc < 40 gets a brightened re-encode at id+90000 —
-    // same gradients, hamming 0. The band join must find EXACTLY the
-    // brute-force hamming<=max pairs (pigeonhole completeness: <=6
-    // differing bits over 8 bands leave a clean shared band).
-    val media = MultimodalOps.pgmTable(spark, docs)
-    val planted = media.filter(_.docId < 40).map(m =>
-      MultimodalOps.MediaItem(m.docId + 90000L,
-        MultimodalOps.decodePgm(m.payload).map { img =>
-          MultimodalOps.encodePgm(img.width, img.height, img.maxVal,
-            img.pixels.map(b => ((b & 0xff) + 8).toByte))
-        }.getOrElse(m.payload), m.meta))
-    val hashes = MultimodalOps.dHashTable(media.union(planted))
-    val got = MultimodalOps.imageNearDup(hashes.toDF())
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val gotPairs = got.map(t => (t._1, t._2)).toSet
-    // every planted pair present at hamming 0
-    (0L until 40L).foreach { i =>
-      assert(gotPairs((i, i + 90000L)), s"planted pair $i missing")
-    }
-    assert(got.filter(t => t._2 - t._1 == 90000L && t._1 < 40)
-      .forall(_._3 == 0L), "planted brightened pair with nonzero hamming")
-    // completeness + soundness vs in-memory brute force
-    val hs = hashes.collect().map(h => h.docId -> h.dhash)
-    val brute = (for {
-      (ia, ha) <- hs; (ib, hb) <- hs if ia < ib
-      d = java.lang.Long.bitCount(ha ^ hb)
-      if d <= MultimodalOps.DHashHamMax
-    } yield (ia, ib, d.toLong)).toSet
-    assert(got.toSet == brute,
-      s"band join ≠ brute force: missing ${brute.diff(got.toSet).take(3)}, " +
-        s"extra ${got.toSet.diff(brute).take(3)}")
-  }
-
-  test("PGM codec: hand-written image round-trips; malformed inputs quarantine") {
-    // hand-written 4x3, maxval 255, with a header comment; raster bytes
-    // 0..11 — written out longhand, not via encodePgm, so the parser is
-    // tested against the FORMAT, not against the encoder
-    val hand = ("P5\n# a comment\n4 3\n255\n"
-      .getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-      ++ (0 until 12).map(_.toByte))
-    val img = MultimodalOps.decodePgm(hand).get
-    assert(img.width == 4 && img.height == 3 && img.maxVal == 255)
-    assert(img.pixels.length == 12)
-    assert(img.pixels.sameElements((0 until 12).map(_.toByte)))
-    // encode → decode round-trip preserves dims and raster
-    val rt = MultimodalOps.decodePgm(
-      MultimodalOps.encodePgm(4, 3, 255, img.pixels)).get
-    assert(rt.width == 4 && rt.height == 3 &&
-      rt.pixels.sameElements(img.pixels))
-    // malformed inputs → None, never a throw: wrong magic, short
-    // raster, junk dims, 2-byte samples
-    assert(MultimodalOps.decodePgm("P2\n4 3\n255\n".getBytes).isEmpty)
-    assert(MultimodalOps.decodePgm(hand.dropRight(1)).isEmpty)
-    assert(MultimodalOps.decodePgm("P5\n4 x\n255\n".getBytes).isEmpty)
-    assert(MultimodalOps.decodePgm("P5\n4 3\n65535\n".getBytes).isEmpty)
-    // quarantine path: a non-PGM payload maps to nBytes = -1
-    val bad = MultimodalOps.decodePgmBatch(Iterator(
-      MultimodalOps.MediaItem(7L, "not an image".getBytes,
-        MultimodalOps.MediaMeta("txt", 0, 0, 0L)))).toSeq
-    assert(bad.head.nBytes == -1L && bad.head.features.forall(_ == 0f))
-  }
-
   test("partitioned sink: layout round-trips and reads prune partitions") {
-    import graft.sources.PartitionedSink
     val dir = tempDir("graft-part").toString
-    val docs2 = docs.withColumn("lang_part", col("lang"))
-    PartitionedSink.writePartitioned(docs2, dir, Seq("lang_part"))
-    val back = PartitionedSink.readPartitioned(spark, dir)
+    docs.withColumn("lang_part", col("lang"))
+      .repartition(col("lang_part")).write.mode("overwrite")
+      .partitionBy("lang_part").parquet(dir)
+    val back = spark.read.parquet(dir)
     assert(back.count() == docs.count())
     // partition-column filter prunes directories, not just rows
     val pruned = back.filter(col("lang_part") === "en")
@@ -301,11 +197,11 @@ class LlmOpsSpec extends SparkTestBase {
     // the (broadcast) dim side eliminated AT RUN time — at 100 TB this
     // is what keeps a fact×dim join from scanning every date/lang
     // partition when the dim filter is not a literal on the fact.
-    import graft.sources.PartitionedSink
     val dir = tempDir("graft-dpp").toString
-    PartitionedSink.writePartitioned(
-      docs.withColumn("lang_part", col("lang")), dir, Seq("lang_part"))
-    val fact = PartitionedSink.readPartitioned(spark, dir)
+    docs.withColumn("lang_part", col("lang"))
+      .repartition(col("lang_part")).write.mode("overwrite")
+      .partitionBy("lang_part").parquet(dir)
+    val fact = spark.read.parquet(dir)
     val dim = docs.select(col("lang").as("lang_part")).distinct()
       .filter(col("lang_part").isin("en", "de"))
     val joined = fact.join(dim, Seq("lang_part"))
@@ -394,20 +290,6 @@ class LlmOpsSpec extends SparkTestBase {
       prev = cur
     }
     p.unpersist(blocking = false)
-  }
-
-  test("end-to-end multimodal: decoded features feed the ANN path") {
-    // media → batched PGM decode → feature vectors → cosine top-k:
-    // the full multimodal-to-similarity pipeline over real plumbing.
-    val media = MultimodalOps.pgmTable(spark, docs)
-    val feats = MultimodalOps.decodeFeatures(media).toDF()
-      .select(col("docId").as("vec_id"), col("features").as("embedding"))
-    val p = SimilarityOps.prepped(feats)
-    val topk = SimilarityOps.bruteForceTopK(p, p.filter(col("vec_id") < 3), 5)
-      .collect()
-    assert(topk.length == 15) // 3 probes × 5 neighbors
-    assert(topk.forall(r => r.getAs[Double]("cosine") >= -1.0 - 1e-12 &&
-      r.getAs[Double]("cosine") <= 1.0 + 1e-12))
   }
 
   test("frame index covers every payload byte exactly once") {

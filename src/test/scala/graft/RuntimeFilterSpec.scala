@@ -153,8 +153,9 @@ class RuntimeFilterSpec extends SparkTestBase {
     val dir = tempDir("graft_dpp").toString
     val ev = core.Tables.events(spark, sf)
       .select(col("event_id"), col("event_type"), col("user_id"))
-    graft.sources.PartitionedSink.writePartitioned(ev, dir, Seq("event_type"))
-    val fact = graft.sources.PartitionedSink.readPartitioned(spark, dir)
+    ev.repartition(col("event_type")).write.mode("overwrite")
+      .partitionBy("event_type").parquet(dir)
+    val fact = spark.read.parquet(dir)
     // dim with a likely-selective (IN) predicate — what
     // PartitionPruning's hasSelectivePredicate looks for. The dim must
     // be a REAL source: over a LocalRelation the filter constant-folds

@@ -217,78 +217,6 @@ class StreamingSpec extends SparkTestBase {
     spark.catalog.dropTempView("sess_test")
   }
 
-  test("transformWithState sessionize matches flatMapGroupsWithState across batches") {
-    // migration-safety for the state-API successor (SPARK-40434): the
-    // StatefulProcessor form must carry identical per-user session state
-    // across micro-batch boundaries as the fMGWS form it replaces —
-    // including the cross-batch session merge (user 1's 41H event starts
-    // a NEW session because state remembered lastTs = 11H). RocksDB
-    // provider is mandatory for transformWithState — part of the API's
-    // contract, set per-session here.
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val input = MemoryStream[SessionEvent]
-      val sessions = EventStreams.sessionizeTws(spark,
-        input.toDF().withColumn("ts_nanos", col("ts_nanos")),
-        gapNanos = 2 * H)
-      val q = sessions.writeStream.format("memory").queryName("tws_test")
-        .outputMode(OutputMode.Update()).start()
-      // the q45 fixture verbatim: two events 1h apart, then a 30h gap +
-      // a new user in a LATER batch
-      input.addData(SessionEvent(1L, 10 * H), SessionEvent(1L, 11 * H))
-      q.processAllAvailable()
-      input.addData(SessionEvent(1L, 41 * H), SessionEvent(2L, 5 * H))
-      q.processAllAvailable()
-      q.stop()
-      val out = spark.table("tws_test").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val last = out.groupBy(_._1).view.mapValues(_.last).toMap
-      // identical to the fMGWS expectations in the test above
-      assert(last(1L) == ((1L, 3L, 2L)), s"got ${last(1L)}")
-      assert(last(2L) == ((2L, 1L, 1L)), s"got ${last(2L)}")
-      spark.catalog.dropTempView("tws_test")
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
-  test("event-time timers close idle sessions exactly once (transformWithState)") {
-    // the timer leg of the StatefulProcessor API: a session is emitted
-    // as ONE final Append-mode row when the watermark passes
-    // lastTs + gap — driven by a registered timer, not by the next
-    // event of the same key (user 1 never speaks again, yet closes)
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val input = MemoryStream[SessionEvent]
-      val sessions = EventStreams.sessionCloseTws(spark,
-        input.toDF(), gapNanos = 2 * H)
-      val q = sessions.writeStream.format("memory").queryName("twst_test")
-        .outputMode(OutputMode.Append()).start()
-      input.addData(SessionEvent(1L, 10 * H), SessionEvent(1L, 11 * H))
-      q.processAllAvailable() // user 1 open, timer armed at 13H
-      input.addData(SessionEvent(2L, 50 * H)) // watermark will pass 13H
-      q.processAllAvailable()
-      input.addData(SessionEvent(3L, 90 * H)) // advance once more: fires
-      q.processAllAvailable() // user 1's timer with watermark 50H
-      q.stop()
-      val rows = spark.table("twst_test").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toSet
-      // user 1 closed by TIMER with both events; user 2 closed when the
-      // 90H watermark passed 52H; user 3 still open (no emission)
-      assert(rows.contains((1L, 10 * H, 11 * H, 2L)), rows.toString)
-      assert(rows.contains((2L, 50 * H, 50 * H, 1L)), rows.toString)
-      assert(!rows.exists(_._1 == 3L), rows.toString)
-      spark.catalog.dropTempView("twst_test")
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
   test("stream-stream LEFT OUTER join: null-extension waits for the watermark") {
     // the outer leg q79's inner join doesn't exercise — THE semantics
     // that makes outer stream-stream joins hard: an unmatched left row
@@ -455,8 +383,8 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("restart from checkpoint: offsets and state survive a stop/start cycle") {
-    // the lifecycle half of the exactly-once story (idempotentBatchWrite
-    // owns the sink half): a stateful query stopped and RESTARTED on the
+    // the lifecycle half of the exactly-once story (the sink half is
+    // appendBatch's, below): a stateful query stopped and RESTARTED on the
     // same checkpoint must (a) not reprocess already-committed input —
     // the file source's offset log records consumed files — and (b)
     // resume its aggregation STATE, not recompute from scratch. One
@@ -502,45 +430,6 @@ class StreamingSpec extends SparkTestBase {
       s"state not resumed or input replayed: $post")
     assert(!post.contains(2L),
       s"untouched key leaked into the post-restart Update emission: $post")
-  }
-
-  test("idempotentBatchWrite: a re-delivered batch replaces its own output, never duplicates") {
-    // the exactly-once sink contract: checkpoint replay (the engine's
-    // half) re-delivers batches the sink may have already written, so
-    // the sink's half is per-batchId idempotence — dynamic partition
-    // overwrite keyed on batch_id. Pinned by doing exactly what a
-    // post-failure replay does: write the same batchId twice.
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val dir = tempDir("graft_eo").toString
-    val in = MemoryStream[SessionEvent]
-    val q = in.toDF().writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        EventStreams.idempotentBatchWrite(b, id, dir)
-      }
-      .start()
-    in.addData(SessionEvent(1L, 100L), SessionEvent(2L, 200L))
-    q.processAllAvailable()
-    in.addData(SessionEvent(3L, 300L))
-    q.processAllAvailable()
-    q.stop()
-    def sink() = spark.read.parquet(dir)
-      .select(col("user_id"), col("batch_id").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val afterRun = sink()
-    assert(afterRun.map(_._1).sorted == Seq(1L, 2L, 3L), afterRun.toString)
-    val lastBatch = afterRun.map(_._2).max
-    // simulate the replay: re-deliver the LAST batch verbatim
-    val replayRows = spark.read.parquet(dir)
-      .filter(col("batch_id") === lastBatch).drop("batch_id")
-    EventStreams.idempotentBatchWrite(replayRows, lastBatch, dir)
-    assert(sink() == afterRun,
-      s"replayed batch changed the sink: ${sink()} vs $afterRun")
-    // and the granularity claim: replay touched ONLY its own partition
-    // (other batches' rows survive byte-identical through the rewrite)
-    val otherBatches = afterRun.filter(_._2 != lastBatch)
-    assert(sink().filter(_._2 != lastBatch) == otherBatches)
   }
 
   test("appendBatch: exactly-once streaming ingestion into the manifested table") {
@@ -785,53 +674,6 @@ class StreamingSpec extends SparkTestBase {
       "restarted replication skipped or duplicated rows")
   }
 
-  test("MapState + ListState compose per key across batches (transformWithState)") {
-    // the two state KINDS the sessionizers don't exercise: per-user
-    // type counts in a MapState (state = |type set|, not history) and a
-    // bounded last-K ring in a ListState (clear-and-rewrite trim). The
-    // cross-batch claims: counts ACCUMULATE (batch 2 must see batch 1's
-    // map), the ring keeps the K newest across batch boundaries even
-    // when batch 2 delivers OLDER events, and the emitted Update row
-    // reflects the merged state — three handles on one key, each
-    // independently typed.
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import EventStreams.UserEvent
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val input = MemoryStream[UserEvent]
-      val out = EventStreams.typeStatsTws(spark, input.toDF(), k = 3)
-      val q = out.writeStream.format("memory").queryName("tstats_test")
-        .outputMode(OutputMode.Update()).start()
-      input.addData(
-        UserEvent(1L, 100L, 10L, "click"),
-        UserEvent(1L, 200L, 11L, "view"),
-        UserEvent(1L, 300L, 12L, "click"),
-        UserEvent(2L, 100L, 20L, "view"))
-      q.processAllAvailable()
-      val mid = spark.table("tstats_test").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getSeq[Long](3)))
-      assert(mid.contains((1L, 2L, 3L, Seq(12L, 11L, 10L))), mid.toSeq)
-      assert(mid.contains((2L, 1L, 1L, Seq(20L))), mid.toSeq)
-      // batch 2: an OLDER event (ts 150) and a newer one — the ring
-      // must keep the 3 newest ACROSS batches (300, 200, 150 after 400
-      // arrives -> 400, 300, 200); counts accumulate to 5 over 3 types
-      input.addData(
-        UserEvent(1L, 150L, 13L, "purchase"),
-        UserEvent(1L, 400L, 14L, "view"))
-      q.processAllAvailable()
-      q.stop()
-      val fin = spark.table("tstats_test").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getSeq[Long](3)))
-      assert(fin.contains((1L, 3L, 5L, Seq(14L, 12L, 11L))), fin.toSeq)
-      spark.catalog.dropTempView("tstats_test")
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
   test("mg_sketch as streaming window state keeps its guarantee across batches") {
     // the sketch-as-state path: a window's Misra-Gries buffer is
     // serialized into the state store between micro-batches and merged
@@ -845,8 +687,10 @@ class StreamingSpec extends SparkTestBase {
     val input = MemoryStream[TypedEvent]
     def ev(h: Int, m: Int, t: String) = TypedEvent(
       java.sql.Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00"), t)
-    val q = EventStreams.windowedHeavyHitters(input.toDF(), cap = 4,
-        termCol = "event_type")
+    val q = input.toDF().withWatermark("ts", "2 hours")
+      .groupBy(window(col("ts"), "1 hour"))
+      .agg(expr("mg_sketch(event_type, 4)").as("sk"))
+      .select(col("window.start"), col("sk.terms"), col("sk.err"))
       .writeStream.format("memory").queryName("hh_test")
       .outputMode(OutputMode.Append()).start()
     // window [10:00, 11:00): "hot" 6×, four distractors 2× each
@@ -935,33 +779,14 @@ class StreamingSpec extends SparkTestBase {
     assert(got === want, s"sizes ${got.size} vs ${want.size}")
   }
 
-  test("streaming dedup drops in-batch and cross-batch duplicates") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[(Long, Long)]
-    val ev = input.toDF().toDF("user_id", "ts_nanos")
-      .withColumn("ts", timestamp_micros((col("ts_nanos") / 1000L).cast("long")))
-    val dedup = EventStreams.dedupStream(ev, Seq("user_id"), "10 hours")
-    val q = dedup.writeStream.format("memory").queryName("dedup_test")
-      .outputMode(OutputMode.Append()).start()
-    input.addData((1L, 10 * H), (1L, 10 * H), (2L, 10 * H))
-    q.processAllAvailable()
-    input.addData((1L, 10 * H), (3L, 11 * H)) // cross-batch dup of user 1
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("dedup_test").collect()
-    assert(rows.length == 3, rows.mkString(","))
-    spark.catalog.dropTempView("dedup_test")
-  }
-
   test("key-only dedup suppresses within the watermark, re-admits after expiry") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[(Long, Long)]
     val ev = input.toDF().toDF("user_id", "ts_nanos")
       .withColumn("ts", timestamp_micros((col("ts_nanos") / 1000L).cast("long")))
-    // unlike dedupStream, ts is NOT in the key: same user at different
-    // times is still one row while its state lives
+    // ts is NOT in the key: same user at different times is still one
+    // row while its state lives
     val dedup = EventStreams.dedupWithinWatermark(ev, Seq("user_id"), "1 hour")
       .select(col("user_id"))
     val q = dedup.writeStream.format("memory").queryName("wm_dedup_test")
