@@ -281,21 +281,11 @@ object Bench {
     val canary = Seq(canS0, canP0, ScaleBench.canary(1),
       ScaleBench.canary(cpus.toInt))
     val retries = retryInfo.result()
-    val json = fullJson(results, errors, total, sfDir, runs, setupSec, canary,
-      retries)
-    // Line ORDER (r22, per the r21 verdict's differ finding): compact
-    // line FIRST, full-format line LAST. The r21 per-query diff came up
-    // empty because the rounds' artifacts mixed formats; a last-line
-    // parser must see the full-name record, so it now closes stdout.
-    // Both lines carry the same {"metric":...,"queries":...} contract;
-    // the compact one still fits whole inside a bounded tail window
-    // (short qNN keys + integer-ms values, guarded by BenchEncodeSpec),
-    // and bench_result.json keeps the full-fidelity record either way.
-    println(compactJson(results, errors.size, total, sfDir, runs, setupSec,
-      canary, retries))
-    Files.writeString(Paths.get("bench_result.json"), json + "\n")
-    println(json)
-    System.out.flush()
+    report(System.out, Paths.get("bench_result.json"),
+      fullJson(results, errors, total, sfDir, runs, setupSec, canary,
+        retries),
+      compactJson(results, errors.size, total, sfDir, runs, setupSec,
+        canary, retries))
     // A session with ANY erroring query must not exit 0 — round 11
     // published rc:0 beside errors:7, so anything gating on exit status
     // (CI, a bench loop) read a broken run as green (ADVICE r11). Exit
@@ -303,6 +293,23 @@ object Bench {
     // runner's extra "[error] Nonzero exit code" noise lands after the
     // compact line and is budgeted for in compactJson's maxLen.
     if (errors.nonEmpty) sys.exit(1)
+  }
+
+  /** Writes the full record to `resultFile`, then prints it and the
+    * compact line, in that order. The compact line goes LAST because a
+    * reader of the run's output keeps only its last 2000 characters:
+    * printed last, the ~30 KB full record left that window holding a
+    * fragment of itself, and no per-query figure could be parsed from
+    * it. The compact line fits the window whole (see [[compactJson]]'s
+    * rungs, guarded by BenchEncodeSpec); per-query diffs read the full
+    * record from `resultFile`.
+    */
+  private[graft] def report(out: java.io.PrintStream,
+      resultFile: java.nio.file.Path, full: String, compact: String): Unit = {
+    Files.writeString(resultFile, full + "\n")
+    out.println(full)
+    out.println(compact)
+    out.flush()
   }
 
   /** Near-empty bounded stream through the full streaming machinery —

@@ -1,8 +1,9 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.BBox
+import graft.functions.Param
 import graft.operators.TrafficOps
 import graft.sources.CsvIngest
 import java.time.LocalDate
@@ -33,7 +34,22 @@ import scala.jdk.CollectionConverters._
   *    observations meet only the trips of their own day, not every trip
   *    of the plate. A trip is replicated once per day it touches (trips
   *    last hours), and one crossing midnight still matches on both days.
-  *  - typed parameters, no string-concatenated SQL.
+  *  - Parameters: typed, no string-concatenated SQL, and bound as
+  *    [[Param]]s, not literals. Every value that changes from call to
+  *    call (the box, the window's bounds, `averageSpeed`'s query date)
+  *    is one. Whole-stage codegen writes a literal into the generated
+  *    Java source, so each new box or date compiled the call's stages
+  *    again (on the FIXTURES.md §1 files, 2, 6 and 7 Janino compiles per
+  *    `accidentCount`, `overSpeedCount` and `averageSpeed`); a parameter
+  *    is read from the generated class's references, so a call with new
+  *    values reuses the classes compiled for the last one. What it gives
+  *    up: a predicate on a parameter is not pushed into a scan and does
+  *    not prune cached batches. No CSV filter was pushed before either:
+  *    the predicates sit on derived columns (`CASE_TS`, LON/LAT after
+  *    `try_cast`). On the cached copies of sites and speed rows, batch
+  *    pruning on LON/LAT and `WZSJ_TS` skips nothing while a file's rows
+  *    are not ordered by them (as in the benchmark's inputs); a file
+  *    sorted on one of them loses that pruning.
   *
   * Parse cache: each instance parses `speed_base.csv` and each month's
   * `CSYDATA`/`SFZDATA` file once, into a persisted copy
@@ -42,8 +58,10 @@ import scala.jdk.CollectionConverters._
   * whose length or mtime changed is re-parsed. The accident file is read
   * afresh by every `accidentCount`: it grows between calls and is read
   * once per call, so a copy would never be reused. The copies are this
-  * instance's own: each carries an id in its plan, so the session's
-  * cache never serves one to another reader of the same file. Limits:
+  * instance's own: each is filtered on its own id, a filter the
+  * optimizer removes but that makes its plan unlike any other reader's
+  * of the same file, so the session's cache never serves one to another
+  * reader. Limits:
   *  - the copies of every file touched are retained until [[destroy]];
   *  - their memory is bounded by Spark's storage memory, and blocks that
   *    do not fit spill to local disk;
@@ -69,7 +87,6 @@ class TrafficAnalytics(spark: SparkSession, dataPath: String) {
     .getFileSystem(spark.sessionState.newHadoopConf())
 
   private val parsed = mutable.HashMap.empty[String, TrafficAnalytics.Parsed]
-  private val CopyId = "_copy_id"
 
   /** The parsed copy of the file at `path`, or None if there is no such
     * file: the cached copy while the file's length and mtime are those
@@ -83,16 +100,18 @@ class TrafficAnalytics(spark: SparkSession, dataPath: String) {
       s.getLen == c.length && s.getModificationTime == c.mtime))
     if (current.isEmpty) {
       parsed.remove(path).foreach(_.df.unpersist(blocking = false))
-      // the session's cache matches copies by plan: a column holding the
-      // copy's own id keeps any other read of the file from being served
-      // this copy, and unpersisting it from dropping another reader's
+      // the session's cache matches copies by analyzed plan: a filter on
+      // the copy's own id keeps any other read of the file from being
+      // served this copy, and unpersisting it from dropping another
+      // reader's. The optimizer removes the always-true filter, so the
+      // cached rows carry no id
       status.foreach { s =>
         parsed(path) = TrafficAnalytics.Parsed(s.getLen, s.getModificationTime,
-          parse(path).withColumn(CopyId, lit(UUID.randomUUID().toString))
+          parse(path).filter(lit(UUID.randomUUID().toString).isNotNull)
             .persist(StorageLevel.MEMORY_AND_DISK))
       }
     }
-    parsed.get(path).map(_.df.drop(CopyId))
+    parsed.get(path).map(_.df)
   }
 
   /** The parsed copies of the months' files that exist, as one frame; a
@@ -115,10 +134,10 @@ class TrafficAnalytics(spark: SparkSession, dataPath: String) {
     val basePath = s"$dataPath/speed_base.csv"
     val base = parsedFile(basePath)(CsvIngest.readSpeedBase(spark, _))
       .getOrElse(throw new FileNotFoundException(basePath))
-    val sites = TrafficOps.bboxFilter(base, "LON", "LAT", box)
+    val sites = base.filter(inBox(col("LON"), col("LAT"), box))
       .select(col("GDCSYBM"))
-    val lo = lit(startIncl.format(fmt)).cast("timestamp")
-    val hi = lit(endExcl.format(fmt)).cast("timestamp")
+    val lo = tsParam(startIncl.format(fmt))
+    val hi = tsParam(endExcl.format(fmt))
     val speed = monthFrames(ms, "CSYDATA.csv")(CsvIngest.readSpeedData(spark, _))
       .filter(col("WZSJ_TS") >= lo && col("WZSJ_TS") < hi)
     val fee = monthFrames(ms, "SFZDATA.csv")(CsvIngest.readFeeData(spark, _))
@@ -128,6 +147,16 @@ class TrafficAnalytics(spark: SparkSession, dataPath: String) {
       .select(hour(col("WZSJ_TS")).cast("long").as("hour"),
               to_date(col("WZSJ_TS")).as("obs_date"),
               col("CLSD"), col("EXVEHCLASS"), col("EXTRUCKFLAG"))
+  }
+
+  /** A date string as a timestamp parameter (midnight, session zone). */
+  private def tsParam(date: String): Column =
+    Param.column(lit(date).cast("timestamp"))
+
+  /** `(x, y)` inside `box`, bounds as parameters. */
+  private def inBox(x: Column, y: Column, box: BBox): Column = {
+    def p(v: Double) = Param.column(lit(v))
+    x.between(p(box.xLo), p(box.xHi)) && y.between(p(box.yLo), p(box.yHi))
   }
 
   private def withCarType(df: DataFrame): DataFrame =
@@ -141,13 +170,11 @@ class TrafficAnalytics(spark: SparkSession, dataPath: String) {
     * `src/AccidentStatistics.scala:57`).
     */
   def accidentCount(box: BBox, startDate: String, endDate: String): DataFrame = {
-    val lo = lit(startDate).cast("timestamp")
-    val hi = lit(LocalDate.parse(endDate, fmt).plusDays(1).format(fmt))
-      .cast("timestamp")
+    val lo = tsParam(startDate)
+    val hi = tsParam(LocalDate.parse(endDate, fmt).plusDays(1).format(fmt))
     val acc = CsvIngest.readAccidents(spark, s"$dataPath/TF_ZFZD_CASESPECIFICATION.csv")
       .filter(col("CASE_TS").between(lo, hi))
-      .filter(col("CASELONGITUDE").between(box.xLo, box.xHi) &&
-              col("CASELATITUDE").between(box.yLo, box.yHi))
+      .filter(inBox(col("CASELONGITUDE"), col("CASELATITUDE"), box))
     acc.groupBy(hour(col("CASE_TS")).cast("long").as("time_period"))
       .agg(count(lit(1)).as("accident_num"))
   }
@@ -188,7 +215,8 @@ class TrafficAnalytics(spark: SparkSession, dataPath: String) {
       // today, matching the reference's [start, end+1d) scan, SURVEY
       // §3.3) — both in one grouped pass, one row per time_point
       .groupBy(col("hour").as("time_period"), col("car_type"))
-      .agg(avg(when(col("obs_date") === lit(date).cast("date"), col("CLSD")))
+      .agg(avg(when(col("obs_date") === Param.column(lit(date).cast("date")),
+                    col("CLSD")))
              .as("today"),
            avg(col("CLSD")).as("history"))
       .select(col("time_period"), col("car_type"),

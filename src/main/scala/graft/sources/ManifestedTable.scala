@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, when}
 import org.apache.spark.sql.types.StructType
@@ -106,17 +106,24 @@ object ManifestedTable {
     new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
 
   /** (version, path) of every committed manifest, ascending. */
-  private def manifestVersions(fs: FileSystem, root: Path): Seq[(Long, Path)] = {
+  private def manifestVersions(fs: FileSystem, root: Path): Seq[(Long, Path)] =
+    versionsIn(manifestListing(fs, root))
+
+  /** Every file status under `_manifests` (manifests and checkpoints). */
+  private def manifestListing(fs: FileSystem, root: Path): Seq[FileStatus] = {
     val mdir = new Path(root, ManifestDir)
-    if (!fs.exists(mdir)) Nil
-    else fs.listStatus(mdir).toSeq
+    if (!fs.exists(mdir)) Nil else fs.listStatus(mdir).toSeq
+  }
+
+  /** [[manifestVersions]] of a listing already in hand. */
+  private def versionsIn(listing: Seq[FileStatus]): Seq[(Long, Path)] =
+    listing
       .filter(s => s.isFile && s.getPath.getName.startsWith(ManifestPrefix))
       .flatMap { s =>
         scala.util.Try(
           s.getPath.getName.stripPrefix(ManifestPrefix).toLong).toOption
           .map(_ -> s.getPath)
       }.sortBy(_._1)
-  }
 
   private def readManifestRaw(fs: FileSystem, p: Path): Seq[String] =
     Bytes.readUtf8(fs, p).split('\n').toSeq.filter(_.nonEmpty)
@@ -668,11 +675,15 @@ object ManifestedTable {
     * partition tuples from.
     */
   private def headMetaOf(fs: FileSystem, root: Path,
-      branch: Option[String]): Map[String, String] = {
-    val head = headVersion(fs, root, branch)
+      branch: Option[String]): Map[String, String] =
+    lineageHead(fs, root, branch).map(h => readMeta(fs, h._2))
+      .getOrElse(Map.empty)
+
+  /** (version, manifest path) of the lineage head [[headMetaOf]] reads. */
+  private def lineageHead(fs: FileSystem, root: Path,
+      branch: Option[String]): Option[(Long, Path)] =
+    headVersion(fs, root, branch)
       .orElse(if (branch.isDefined) headVersion(fs, root, None) else None)
-    head.map(h => readMeta(fs, h._2)).getOrElse(Map.empty)
-  }
 
   private def epochTokenOf(meta: Map[String, String]): Option[String] =
     meta.get(FieldEpochsKey).map(e => s"se:${decodeEpochs(e).size - 1}")
@@ -1308,21 +1319,23 @@ object ManifestedTable {
     val interval = commitMeta.get(s"$PropPrefix$CheckpointIntervalProp")
       .flatMap(x => scala.util.Try(x.toLong).toOption).filter(_ > 0L)
       .getOrElse(DefaultCheckpointInterval)
-    if (v % interval == 0L) writeCheckpointAt(fs, root, v)
+    if (v % interval == 0L)
+      writeCheckpointAt(fs, root, v, manifestVersions(fs, root).toMap)
   }
 
   /** Materialize version `v`'s resolved entry lines as
     * `checkpoint-<v>` — idempotent and best-effort (derived state:
     * the caller decides whether absence matters; [[vacuum]] re-checks
     * existence before deleting the chain the checkpoint replaces).
+    * `byV` is the caller's (version → manifest) map of `_manifests`,
+    * taken only when the checkpoint is missing.
     */
   private def writeCheckpointAt(fs: FileSystem, root: Path,
-      v: Long): Unit = {
+      v: Long, byV: => Map[Long, Path]): Unit = {
     val cp = checkpointPathOf(root, v)
     if (fs.exists(cp)) return
     try {
-      val lines = resolveDataLines(fs, root,
-        manifestVersions(fs, root).toMap, v)
+      val lines = resolveDataLines(fs, root, byV, v)
       val body = lines.mkString("", "\n", if (lines.isEmpty) "" else "\n")
         .getBytes(StandardCharsets.UTF_8)
       val tmp = new Path(new Path(root, ManifestDir),
@@ -2887,10 +2900,13 @@ object ManifestedTable {
   def tags(spark: SparkSession, dir: String): Seq[(String, Long, Long)] =
     tagsConf(fsOf(spark, dir), new Path(dir))
 
-  private def tagsConf(fs: FileSystem, root: Path): Seq[(String, Long, Long)] = {
-    val mdir = new Path(root, ManifestDir)
-    if (!fs.exists(mdir)) return Nil
-    fs.listStatus(mdir).toSeq
+  private def tagsConf(fs: FileSystem, root: Path): Seq[(String, Long, Long)] =
+    tagsIn(fs, manifestListing(fs, root))
+
+  /** [[tagsConf]] of a `_manifests` listing already in hand. */
+  private def tagsIn(fs: FileSystem,
+      listing: Seq[FileStatus]): Seq[(String, Long, Long)] =
+    listing
       .filter(s => s.isFile && s.getPath.getName.startsWith(TagPrefix))
       .flatMap { s =>
         scala.util.Try {
@@ -2902,7 +2918,6 @@ object ManifestedTable {
           (s.getPath.getName.stripPrefix(TagPrefix), v, ts)
         }.toOption
       }.sortBy(_._1)
-  }
 
   /** The version `name` pins, if tagged (conf-parameterized for the
     * catalog's `VERSION AS OF '<tag>'` resolution).
@@ -3384,15 +3399,20 @@ object ManifestedTable {
       s"dvMaxFraction must be in [0,1], got $dvMaxFraction")
     val root = new Path(dir)
     val fs = fsOf(spark, dir)
-    val headMeta = headMetaOf(fs, root, branch)
+    val head = lineageHead(fs, root, branch)
+    val headMeta = head.map(h => readMeta(fs, h._2)).getOrElse(Map.empty)
     require(eqDeletesOf(headMeta).isEmpty,
       s"$op on $dir: equality deletes pending — CALL compact to " +
         "absorb them first")
     val (baseV, baseLines) = snapshotFor(fs, root, branch)
     require(baseLines.nonEmpty, s"manifested table $dir is empty — " +
       "schemaless empty reads are not supported")
-    DmlBase(dir, op, branch, root, fs, headMeta, baseV, baseLines,
-      schemaCtxAt(fs, root, Some(baseV)))
+    // the meta already read is the base's unless a commit landed between
+    // the two lookups; only then is the base's meta read on its own
+    val ctx =
+      if (head.exists(_._1 == baseV)) schemaCtxOf(headMeta)
+      else schemaCtxAt(fs, root, Some(baseV))
+    DmlBase(dir, op, branch, root, fs, headMeta, baseV, baseLines, ctx)
   }
 
   /** Per-file hit counts of `matched` over the LIVE rows of `files`
@@ -3964,6 +3984,12 @@ object ManifestedTable {
     * whose mtime is within the threshold are therefore skipped (the
     * Delta VACUUM retention construction); pass 0 ONLY when no writer
     * can be in flight.
+    *
+    * `_manifests` is listed ONCE, and everything vacuum reasons about
+    * there — retained versions, branch and main heads, tags, the
+    * checkpoints it writes and sweeps — comes from that listing: a
+    * commit that lands after it is never a deletion candidate. A tag
+    * created while vacuum runs is not seen; tag before vacuuming.
     */
   def vacuum(spark: SparkSession, dir: String, keepLast: Int = 1,
       minAgeMillis: Long = DefaultVacuumRetentionMs): Int = {
@@ -3971,7 +3997,8 @@ object ManifestedTable {
     require(minAgeMillis >= 0, s"minAgeMillis must be >= 0, got $minAgeMillis")
     val root = new Path(dir)
     val fs = fsOf(spark, dir)
-    val vs = manifestVersions(fs, root)
+    val listing = manifestListing(fs, root)
+    val vs = versionsIn(listing)
     require(vs.nonEmpty, s"no committed manifest under $dir")
     val cutoff = System.currentTimeMillis() - minAgeMillis
     val byV = vs.toMap
@@ -3984,17 +4011,16 @@ object ManifestedTable {
     // just listable). LIVE BRANCH HEADS are additionally retained
     // regardless of age: an unpromoted write-audit-publish staging
     // snapshot must survive maintenance until promoted or dropped.
-    val branchHeadVs: Set[Long] =
-      liveBranchHeads(fs, manifestVersions(fs, root)).map(_._2).toSet
+    val branchHeadVs: Set[Long] = liveBranchHeads(fs, vs).map(_._2).toSet
     // the MAIN head is retained unconditionally too: with a branch
     // commit as the newest global version, keepLast alone could drop
     // the snapshot every main reader resolves
-    val mainHeadV = headVersion(fs, root, None).map(_._1).getOrElse(0L)
+    val mainHeadV = headIn(fs, vs, None).map(_._1).getOrElse(0L)
     // TAGGED versions are retained unconditionally, whatever keepLast
     // says — ref-scoped retention: a tag is a promise that `VERSION AS
     // OF '<tag>'` outlives maintenance; drop_tag releases the version
     // back to normal retention
-    val taggedVs: Set[Long] = tagsConf(fs, root).map(_._2).toSet
+    val taggedVs: Set[Long] = tagsIn(fs, listing).map(_._2).toSet
     // EQ-DELETE bases: a pending eq-delete's applies-to scope resolves
     // through its BASE snapshot's manifest — any retained version with
     // pending deletes pins their bases (to fixpoint: a pinned base's
@@ -4060,7 +4086,7 @@ object ManifestedTable {
         }
       }
     }
-    planned.foreach(v => writeCheckpointAt(fs, root, v))
+    planned.foreach(v => writeCheckpointAt(fs, root, v, byV))
     val fenced =
       planned.forall(v => fs.exists(checkpointPathOf(root, v)))
     // memoized tree fold for the live set (each lineage resolves its
@@ -4102,7 +4128,7 @@ object ManifestedTable {
       }
       // checkpoints of versions already gone from the listing whose
       // anchor role has ended (age-guarded like everything else)
-      fs.listStatus(new Path(root, ManifestDir)).toSeq
+      listing
         .filter(st => st.isFile &&
           st.getPath.getName.startsWith(CheckpointPrefix))
         .foreach { st =>

@@ -2,11 +2,13 @@ package org.apache.spark.sql.graftshim
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.{internal => cn}
 
 /** The one `private[sql]` doorway this engine needs (the standard
   * connector-shim pattern — Delta and Iceberg carry the same kind of
-  * bridge): the Column DSL's API-level NODE tree, converted to the
+  * bridge): catalyst expressions to and from Columns, and the Column
+  * DSL's API-level NODE tree, converted to the
   * catalyst comparison shapes the DELETE-pruning translator matches,
   * WITHOUT an analyzer roundtrip — spinning up an empty DataFrame and
   * a full analysis pass per DELETE was measurable per-commit overhead
@@ -21,6 +23,13 @@ object GraftSqlInternals {
     */
   def predicateConjuncts(cond: Column): Seq[Option[Expression]] =
     conjunctsOf(cond.node).map(conv)
+
+  /** A catalyst expression as a Column, and back: how an engine-defined
+    * expression ([[graft.functions.Param]]) enters the Column DSL
+    * without being registered as a function in the session.
+    */
+  def column(e: Expression): Column = ExpressionUtils.column(e)
+  def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   private def conjunctsOf(n: cn.ColumnNode): Seq[cn.ColumnNode] =
     n match {

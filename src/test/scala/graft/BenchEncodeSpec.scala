@@ -102,6 +102,31 @@ class BenchEncodeSpec extends SparkTestBase {
     assert(full.contains(""""min":"""), "per-run fidelity must stay in bench_result.json")
   }
 
+  test("the line printed last is the compact one, whole in the tail at 207 cells") {
+    // medians spread log-uniformly over 0.08-5.3 s, the range of the
+    // sf0.1 bench cells, three shots each within ±15% of the median
+    val rnd = new scala.util.Random(22)
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    assert(names.size === 207)
+    val results = names.map { n =>
+      val m = 0.08 * math.pow(5.3 / 0.08, rnd.nextDouble())
+      n -> Seq.fill(3)(m * (0.85 + 0.3 * rnd.nextDouble()))
+    }
+    val full = Bench.fullJson(results, Nil, results.map(r =>
+      Bench.median(r._2)).sum, "/data/sf0.1", 3, 0.85)
+    val compact = Bench.compactJson(results, 0, 1.0, "/data/sf0.1",
+      3, 0.85, canary = Seq(0.219, 0.442, 0.167, 0.325))
+    val file = tempDir("graft-bench-report").resolve("bench_result.json")
+    val buf = new java.io.ByteArrayOutputStream()
+    Bench.report(new java.io.PrintStream(buf, true, "UTF-8"), file, full, compact)
+    val lines = buf.toString("UTF-8").split('\n').toSeq
+    assert(lines.last === compact)
+    assert(lines.last.length <= 1800, s"last line too long: ${lines.last.length}")
+    assert(lines.last.contains(""""queries":"""))
+    assert(full.length > 2000 && lines.contains(full))
+    assert(java.nio.file.Files.readString(file) === full + "\n")
+  }
+
   test("compact line is valid JSON shape with the contract keys") {
     val line = Bench.compactJson(
       Seq(("q01_agg", Seq(0.5, 0.6, 0.4)), ("q02_x", Nil)),

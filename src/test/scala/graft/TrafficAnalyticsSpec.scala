@@ -105,6 +105,33 @@ class TrafficAnalyticsSpec extends SparkTestBase {
       (14L, "04", 0L) -> 110.0))
   }
 
+  test("a call with a new box and window compiles no new code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiles() = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // the same sites, accidents and month files as `box` and June
+    val box2 = BBox(115.9, 117.1, 38.9, 40.1)
+    def round(b: BBox, from: String, to: String, day: String): Unit = {
+      ta.accidentCount(b, from, to).collect()
+      ta.overSpeedCount(b, from, to).collect()
+      ta.averageSpeed(b, day).collect()
+    }
+    round(box, "2016-06-01", "2016-06-30", "2016-07-02")
+    val before = compiles()
+    // with the values written into the generated code this compiled
+    // 2 + 6 + 7 classes
+    round(box2, "2016-06-02", "2016-06-29", "2016-07-03")
+    assert(compiles() === before)
+  }
+
+  test("parameters keep the sites broadcast and JN2 banded on (plate, day)") {
+    val df = ta.overSpeedCount(box, "2016-06-01", "2016-06-30")
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastHashJoin") && plan.contains("param("), plan)
+    assert("Join \\[HPHM#\\d+, _band#\\d+L\\], \\[ENVEHPLATE#\\d+, _band#\\d+L\\]"
+      .r.findFirstIn(plan).isDefined, plan)
+  }
+
   test("toJsonList: host-app JSON sink shape (S4)") {
     val l = ta.toJsonList(ta.accidentCount(box, "2016-06-01", "2016-06-30"))
     assert(l.size() === 2)
@@ -278,6 +305,21 @@ class TrafficAnalyticsSpec extends SparkTestBase {
         (8L, "01", 1L) -> 140.0, (14L, "04", 1L) -> 110.0,
         (8L, "01", 0L) -> 140.0, (14L, "04", 0L) -> 110.0))))
     } finally pool.shutdown()
+  }
+
+  test("parse cache: a cached copy holds only the parsed columns") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val t = new TrafficAnalytics(spark, freshCopy("graft-columns").toString)
+    val df = t.overSpeedCount(box, "2016-06-01", "2016-06-30")
+    assert(overMap(df) === juneOver)
+    val cached = df.queryExecution.optimizedPlan.collect {
+      case r: InMemoryRelation => r.output.map(_.name)
+    }
+    assert(cached.toSet === Set(
+      Seq("GDCSYBM", "LON", "LAT"),
+      Seq("SITE_GUID", "HPHM", "WZSJ_TS", "CLSD", "ISOVERSPEED"),
+      Seq("ENVEHPLATE", "ENTIME_TS", "EXTIME_TS", "EXVEHCLASS", "EXTRUCKFLAG")))
+    t.destroy()
   }
 
   test("destroy releases this instance's copies and nothing else") {
