@@ -124,6 +124,25 @@ object Bench {
     gated(window) || (window.nonEmpty && discarded.nonEmpty &&
       overGate(window.min - discarded.min, median(window)))
 
+  /** Counts the Spark jobs a session starts. [[take]] drains the
+    * listener bus first, so its count is complete once an action has
+    * returned.
+    */
+  private[graft] final class JobCounter(sc: org.apache.spark.SparkContext)
+      extends org.apache.spark.scheduler.SparkListener {
+    private val n = new java.util.concurrent.atomic.AtomicInteger()
+    sc.addSparkListener(this)
+    override def onJobStart(
+        e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      n.incrementAndGet()
+    /** Jobs started since the last take. */
+    def take(): Int = {
+      org.apache.spark.sql.graftshim.GraftSqlInternals.drainListeners(sc)
+      n.getAndSet(0)
+    }
+    def close(): Unit = sc.removeSparkListener(this)
+  }
+
   /** Unpersist every registered RDD block — the shared pre-shot hygiene
     * of both benches (see the call site in main() for the measured
     * rationale; ScaleBench reuses this so the two sweeps cannot drift).
@@ -211,19 +230,28 @@ object Bench {
           "like q71_dup_clusters)")
     }
     val retryInfo = Map.newBuilder[String, Retry]
+    // Spark jobs per shot, counted outside the timed span
+    val jobCounter = new JobCounter(spark.sparkContext)
+    val jobsInfo = Map.newBuilder[String, Long]
     val results: Seq[(String, Seq[Double])] =
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (n, _) => subset.forall(_.contains(n)) }
         .map { case (name, fn) =>
         val times = scala.collection.mutable.ArrayBuffer.empty[Double]
+        val shotJobs = scala.collection.mutable.ArrayBuffer.empty[Int]
         var failed = false
         def shot(): Unit = {
           // sweep before EVERY timed run, not just the first: a heavy
           // query's own detached blocks from run i otherwise pressure
           // run i+1 (q97 measured 1.6 s first run, 3.3-3.9 s later runs)
           sweepBlocks()
+          jobCounter.take()
           val t0 = System.nanoTime()
-          try { materialize(fn(spark, sfDir)); times += (System.nanoTime() - t0) / 1e9 }
+          try {
+            materialize(fn(spark, sfDir))
+            times += (System.nanoTime() - t0) / 1e9
+            shotJobs += jobCounter.take()
+          }
           catch { case e: Throwable =>
             errors ::= (name,
               Option(e.getMessage).getOrElse(e.getClass.getName).take(120))
@@ -253,6 +281,8 @@ object Bench {
           val soft = contended(window, discarded)
           if (extra > 0 || soft)
             retryInfo += name -> Retry(extra, discarded, soft)
+          jobsInfo += name -> Math.round(median(
+            window.map(t => shotJobs(times.indexOf(t)).toDouble)))
           name -> window
         }
       }
@@ -271,6 +301,7 @@ object Bench {
     }
     val setupSec = if (setupTimes.isEmpty) -1.0 else median(setupTimes)
 
+    jobCounter.close()
     val total = results.collect { case (_, ts) if ts.nonEmpty => median(ts) }.sum
     // a teardown failure must not discard a full session's measurements —
     // the artifacts are written right after; the end-canary wants the
@@ -283,7 +314,7 @@ object Bench {
     val retries = retryInfo.result()
     report(System.out, Paths.get("bench_result.json"),
       fullJson(results, errors, total, sfDir, runs, setupSec, canary,
-        retries),
+        retries, jobsInfo.result()),
       compactJson(results, errors.size, total, sfDir, runs, setupSec,
         canary, retries))
     // A session with ANY erroring query must not exit 0 — round 11
@@ -347,14 +378,17 @@ object Bench {
   /** Full-name, full-precision record — written to `bench_result.json`
     * and printed once for human log readers. Per query: median/min/max
     * seconds plus every raw run (so any future "X× regression" claim can
-    * be checked against the raw distribution, not a point estimate).
+    * be checked against the raw distribution, not a point estimate),
+    * and `jobs`, the median count of Spark jobs over the kept shots.
+    * The compact line carries no job counts.
     */
   private[graft] def fullJson(results: Seq[(String, Seq[Double])],
                               errors: List[(String, String)],
                               total: Double, sfDir: String,
                               runs: Int, setupSec: Double,
                               canary: Seq[Double] = Nil,
-                              retries: Map[String, Retry] = Map.empty)
+                              retries: Map[String, Retry] = Map.empty,
+                              jobs: Map[String, Long] = Map.empty)
       : String = {
     val qs = results.map { case (k, ts) =>
       if (ts.isEmpty) s""""${esc(k)}":{"median":-1,"min":-1,"max":-1,"runs":[]}"""
@@ -368,7 +402,8 @@ object Bench {
           val d = r.discarded.map(_.toString).mkString("[", ",", "]")
           s""","retries":${r.extra},"discarded":$d,"contended":${r.contended}"""
         }.getOrElse("")
-        s""""${esc(k)}":{"median":${median(ts)},"min":${ts.min},"max":${ts.max},"runs":$rs$rt}"""
+        val js = jobs.get(k).map(j => s""","jobs":$j""").getOrElse("")
+        s""""${esc(k)}":{"median":${median(ts)},"min":${ts.min},"max":${ts.max},"runs":$rs$js$rt}"""
       }
     }.mkString("{", ",", "}")
     val errJson = errors.map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }

@@ -1,6 +1,8 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Typed query parameters.
   *
@@ -24,12 +26,82 @@ final case class TimeRange(lo: String, hi: String)
   * At 100 TB these would be catalog tables (Hive-partitioned / Iceberg) —
   * the loader is the single seam where that swap happens; all operators
   * downstream take plain DataFrames and never touch paths.
+  *
+  * Schema memo: a plain `spark.read.parquet(path)` infers the schema with
+  * a Spark job (footer merge, the Hadoop conf shipped in the task) on
+  * every call, even for one file. [[parquet]] infers it once and passes
+  * it explicitly on every later read, which starts no job. What is
+  * memoized is the schema only, never a DataFrame: each read is a fresh
+  * relation with fresh attribute ids, so self-joins keep working. The
+  * key is
+  *  - the path;
+  *  - (path, length, mtime) of every file a recursive listing of it
+  *    returns;
+  *  - the session's set values of the settings that feed parquet schema
+  *    inference: `spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`
+  *    and `spark.sql.caseSensitive` (`events.ts` reads as Long or as a
+  *    timestamp depending on `nanosAsLong`). Other session confs, such
+  *    as per-catalog ones, are left out so they do not turn reads into
+  *    misses.
+  * A rewrite that keeps a file's path, length and mtime goes undetected,
+  * the same limit as `TrafficAnalytics`' parse cache. The memo is
+  * JVM-wide and outlives `spark.stop()`; it is cleared once it holds
+  * `MaxSchemas` entries.
   */
 object Tables {
   import org.apache.spark.sql.functions.col
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` with the schema from the memo; a miss
+    * infers it exactly as the plain read does and remembers it.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    schemaKey(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some(k) => Option(schemas.get(k)) match {
+        case Some(s) => spark.read.schema(s).parquet(path)
+        case None =>
+          val df = spark.read.parquet(path)
+          if (schemas.size >= MaxSchemas) schemas.clear()
+          schemas.put(k, df.schema)
+          df
+      }
+    }
+
+  private val MaxSchemas = 1024
+
+  private type SchemaKey =
+    (String, Seq[(String, Long, Long)], Map[String, String])
+
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[SchemaKey, StructType]()
+
+  /** The memo key of `path`, or None when it cannot be listed (a glob,
+    * a missing path): the plain read then reports what it always did.
+    */
+  private def schemaKey(spark: SparkSession, path: String)
+      : Option[SchemaKey] = {
+    val p = new Path(path)
+    scala.util.Try {
+      val it = p.getFileSystem(spark.sessionState.newHadoopConf())
+        .listFiles(p, true)
+      val files = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      files.result()
+    }.toOption.map { files =>
+      val settings = spark.conf.getAll.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") ||
+          k.startsWith("spark.sql.legacy.parquet.") ||
+          k == "spark.sql.caseSensitive"
+      }
+      (path, files, settings)
+    }
+  }
 
   /** The testdata has shipped `events.ts` in two physical shapes across
     * rounds: TIMESTAMP(NANOS) parquet — which Spark only reads as a

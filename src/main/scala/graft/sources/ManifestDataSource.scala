@@ -229,9 +229,12 @@ object ManifestDataSource {
 
   /** Schema from ONE file's footer (via the engine's own parquet
     * reader — a footer read, never a data scan), taken from the first
-    * non-empty snapshot entry. Heterogeneous snapshots (mid-history
-    * schema widening) read at the resolved file's schema; the unified
-    * superset view stays with `ManifestedTable.read(mergeSchema)`.
+    * non-empty snapshot entry and memoized by `Tables.parquet`:
+    * data file names are unique and never rewritten, so a repeat
+    * resolution of an unchanged table starts no job. Heterogeneous
+    * snapshots (mid-history schema widening) read at the resolved
+    * file's schema; the unified superset view stays with
+    * `ManifestedTable.read(mergeSchema)`.
     * An EMPTY table (the catalog's CREATE TABLE before the first
     * insert) serves the declared schema recorded in the manifest meta.
     */
@@ -260,7 +263,7 @@ object ManifestDataSource {
     }
     val pick = entries.find(!_._2.rows.contains(0L)).getOrElse(entries.head)
     // the hidden row-lineage column is id provenance, never data
-    StructType(spark.read.parquet(
+    StructType(graft.core.Tables.parquet(spark,
       new Path(new Path(dir), pick._1).toString).schema.fields
       .filterNot(_.name == ManifestedTable.RowIdCol))
   }

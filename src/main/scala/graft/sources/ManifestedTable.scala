@@ -675,15 +675,11 @@ object ManifestedTable {
     * partition tuples from.
     */
   private def headMetaOf(fs: FileSystem, root: Path,
-      branch: Option[String]): Map[String, String] =
-    lineageHead(fs, root, branch).map(h => readMeta(fs, h._2))
-      .getOrElse(Map.empty)
-
-  /** (version, manifest path) of the lineage head [[headMetaOf]] reads. */
-  private def lineageHead(fs: FileSystem, root: Path,
-      branch: Option[String]): Option[(Long, Path)] =
-    headVersion(fs, root, branch)
-      .orElse(if (branch.isDefined) headVersion(fs, root, None) else None)
+      branch: Option[String]): Map[String, String] = {
+    val vs = manifestVersions(fs, root)
+    branch.flatMap(b => headIn(fs, vs, Some(b))).orElse(headIn(fs, vs, None))
+      .map(h => readMeta(fs, h._2)).getOrElse(Map.empty)
+  }
 
   private def epochTokenOf(meta: Map[String, String]): Option[String] =
     meta.get(FieldEpochsKey).map(e => s"se:${decodeEpochs(e).size - 1}")
@@ -1356,17 +1352,25 @@ object ManifestedTable {
     * else the main head.
     */
   private def snapshotFor(fs: FileSystem, root: Path,
-      branch: Option[String]): (Long, Seq[String]) = branch match {
-    case None => currentSnapshot(fs, root)
-    case Some(b) =>
-      checkRefName(b)
-      val vs = manifestVersions(fs, root)
-      require(vs.nonEmpty, s"no committed manifest under $root")
-      val hv = headIn(fs, vs, Some(b)).map(_._1)
-        .orElse(headIn(fs, vs, None).map(_._1))
-        .getOrElse(throw new IllegalStateException(
-          s"no main commit under $root"))
-      (hv, resolveDataLines(fs, root, vs.toMap, hv))
+      branch: Option[String]): (Long, Seq[String]) = {
+    val (hv, _, lines) = lineageSnapshot(fs, root, branch)
+    (hv, lines)
+  }
+
+  /** [[snapshotFor]] plus the head manifest's path, from ONE listing of
+    * `_manifests` — a caller that reads the head's meta too gets the
+    * meta of the very snapshot whose lines it holds.
+    */
+  private def lineageSnapshot(fs: FileSystem, root: Path,
+      branch: Option[String]): (Long, Path, Seq[String]) = {
+    branch.foreach(checkRefName)
+    val vs = manifestVersions(fs, root)
+    require(vs.nonEmpty, s"no committed manifest under $root")
+    val (hv, hp) = branch.flatMap(b => headIn(fs, vs, Some(b)))
+      .orElse(headIn(fs, vs, None))
+      .getOrElse(throw new IllegalStateException(
+        s"no main commit under $root"))
+    (hv, hp, resolveDataLines(fs, root, vs.toMap, hv))
   }
 
   /** (version, entry LINES) of the current snapshot in ONE manifest
@@ -1375,22 +1379,8 @@ object ManifestedTable {
     * commit). Lines carry the embedded per-file stats; `pathOf` maps
     * to the file list.
     */
-  private def currentSnapshot(fs: FileSystem, root: Path): (Long, Seq[String]) = {
-    val (hv, _, lines) = currentHead(fs, root)
-    (hv, lines)
-  }
-
-  /** [[currentSnapshot]] plus the head manifest's path, for a caller
-    * that reads the head's meta too.
-    */
-  private def currentHead(fs: FileSystem, root: Path)
-      : (Long, Path, Seq[String]) = {
-    val vs = manifestVersions(fs, root)
-    require(vs.nonEmpty, s"no committed manifest under $root")
-    val (hv, hp) = headIn(fs, vs, None).getOrElse(throw
-      new IllegalStateException(s"no main commit under $root"))
-    (hv, hp, resolveDataLines(fs, root, vs.toMap, hv))
-  }
+  private def currentSnapshot(fs: FileSystem, root: Path): (Long, Seq[String]) =
+    snapshotFor(fs, root, None)
 
   /** File paths among `entries` that COULD hold a row whose `keys`
     * match some row of `probe` — refuted per column by intersecting
@@ -2361,7 +2351,7 @@ object ManifestedTable {
   private def compactBase(spark: SparkSession, dir: String): CompactBase = {
     val root = new Path(dir)
     val fs = fsOf(spark, dir)
-    val (baseV, hp, baseLines) = currentHead(fs, root)
+    val (baseV, hp, baseLines) = lineageSnapshot(fs, root, None)
     CompactBase(root, fs, baseV, baseLines, readMeta(fs, hp))
   }
 
@@ -3399,20 +3389,16 @@ object ManifestedTable {
       s"dvMaxFraction must be in [0,1], got $dvMaxFraction")
     val root = new Path(dir)
     val fs = fsOf(spark, dir)
-    val head = lineageHead(fs, root, branch)
-    val headMeta = head.map(h => readMeta(fs, h._2)).getOrElse(Map.empty)
+    // head meta and base lines come from one listing: the same snapshot
+    val (baseV, headPath, baseLines) = lineageSnapshot(fs, root, branch)
+    val headMeta = readMeta(fs, headPath)
     require(eqDeletesOf(headMeta).isEmpty,
       s"$op on $dir: equality deletes pending — CALL compact to " +
         "absorb them first")
-    val (baseV, baseLines) = snapshotFor(fs, root, branch)
     require(baseLines.nonEmpty, s"manifested table $dir is empty — " +
       "schemaless empty reads are not supported")
-    // the meta already read is the base's unless a commit landed between
-    // the two lookups; only then is the base's meta read on its own
-    val ctx =
-      if (head.exists(_._1 == baseV)) schemaCtxOf(headMeta)
-      else schemaCtxAt(fs, root, Some(baseV))
-    DmlBase(dir, op, branch, root, fs, headMeta, baseV, baseLines, ctx)
+    DmlBase(dir, op, branch, root, fs, headMeta, baseV, baseLines,
+      schemaCtxOf(headMeta))
   }
 
   /** Per-file hit counts of `matched` over the LIVE rows of `files`
@@ -3804,9 +3790,10 @@ object ManifestedTable {
       : (Seq[String], Seq[String], Seq[String]) = {
     val root = new Path(dir)
     val fs = fsOf(spark, dir)
-    val (baseV, baseLines) = snapshotFor(fs, root, branch)
-    deleteSplitOf(cond, baseLines.map(parseEntry),
-      schemaCtxAt(fs, root, Some(baseV)), headMetaOf(fs, root, branch))
+    val (_, headPath, baseLines) = lineageSnapshot(fs, root, branch)
+    val headMeta = readMeta(fs, headPath)
+    deleteSplitOf(cond, baseLines.map(parseEntry), schemaCtxOf(headMeta),
+      headMeta)
   }
 
   private def deleteSplitOf(cond: Column,

@@ -31,6 +31,13 @@ object GraftSqlInternals {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Blocks until the listener bus has delivered every event posted so
+    * far (`listenerBus` is `private[spark]`), so a listener's job count
+    * is complete once an action has returned.
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   private def conjunctsOf(n: cn.ColumnNode): Seq[cn.ColumnNode] =
     n match {
       case f: cn.UnresolvedFunction if !f.isDistinct &&

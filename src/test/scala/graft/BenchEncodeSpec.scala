@@ -113,9 +113,13 @@ class BenchEncodeSpec extends SparkTestBase {
       n -> Seq.fill(3)(m * (0.85 + 0.3 * rnd.nextDouble()))
     }
     val full = Bench.fullJson(results, Nil, results.map(r =>
-      Bench.median(r._2)).sum, "/data/sf0.1", 3, 0.85)
+      Bench.median(r._2)).sum, "/data/sf0.1", 3, 0.85,
+      jobs = names.map(_ -> 12L).toMap)
     val compact = Bench.compactJson(results, 0, 1.0, "/data/sf0.1",
       3, 0.85, canary = Seq(0.219, 0.442, 0.167, 0.325))
+    // job counts ride the full record only
+    assert(""""jobs":12[,}]""".r.findAllIn(full).size === 207)
+    assert(!compact.contains("jobs"))
     val file = tempDir("graft-bench-report").resolve("bench_result.json")
     val buf = new java.io.ByteArrayOutputStream()
     Bench.report(new java.io.PrintStream(buf, true, "UTF-8"), file, full, compact)
@@ -254,6 +258,19 @@ class BenchEncodeSpec extends SparkTestBase {
       Nil, 0.5, "/data/sf0.1", runs = 3, setupSec = 0.2)
     assert(line.contains(""""q01_agg":{"median":0.5,"min":0.4,"max":0.6,"runs":[0.5,0.6,0.4]}"""), line)
     assert(line.contains(""""stream_setup_s":0.2"""), line)
+  }
+
+  test("full json carries the job count per query beside its runs") {
+    val rs = Seq(("q01_agg", Seq(0.5, 0.6, 0.4)), ("q02_err", Nil))
+    val line = Bench.fullJson(rs, List("q02_err" -> "boom"), 0.5,
+      "/data/sf0.1", runs = 3, setupSec = 0.2,
+      retries = Map("q01_agg" -> Bench.Retry(1, Seq(2.0), contended = false)),
+      jobs = Map("q01_agg" -> 4L))
+    assert(line.contains(""""runs":[0.5,0.6,0.4],"jobs":4,"retries":1,"""), line)
+    assert(line.contains(""""q02_err":{"median":-1,"min":-1,"max":-1,"runs":[]}"""), line)
+    // the compact line has no jobs parameter: its format cannot move
+    assert(Bench.compactJson(rs, 1, 0.5, "/data/sf0.1", 3, 0.2) ===
+      """{"metric":"total","value":0.500,"unit":"sec","runs":3,"setup":0.200,"enc":"q:median ms;dmin:med-min;spread:max-min ms, q-order","queries":{"q01":500,"q02":-1},"errors":1,"sf":0.1,"dmin":[100,0],"spread":[200,0]}""")
   }
 
   test("ExplainAudit.nodeCounts: node names only, codegen stars and headers stripped") {
